@@ -2,8 +2,6 @@ package graft
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs the headline queries (Queries.Q.bench = true) on
  * `SPARK_GRAFT_SF_DIR` and prints a `[bench-details]`-prefixed
@@ -39,56 +37,30 @@ import org.apache.spark.sql.SparkSession
  *   - `rep_loads`: the 1-minute load average sampled right after each
  *     rep — the context each number was taken under;
  *   - AUTO-EXTENSION: a query whose relative spread ((max-min)/min)
- *     exceeds `SPARK_GRAFT_BENCH_SPREAD` (default 0.25) WHILE the host
- *     is loaded (latest rep's load > `SPARK_GRAFT_BENCH_HIGH_LOAD`,
- *     default 2.0) gets extra reps, up to `SPARK_GRAFT_BENCH_MAX_REPS`
- *     (default 9) — buying more chances to catch a quiet window. High
- *     spread at LOW load is left alone: that is code-real variance the
- *     artifact should show, not average away. Queries whose best rep is
- *     already under `SPARK_GRAFT_BENCH_EXTEND_FLOOR` seconds (default
- *     0.5) never extend — sub-second spread is first-rep JIT noise
- *     (the recorded c1/j3 pattern), and spending the run's wall-clock
- *     there would starve the heavy queries the bands actually track.
+ *     exceeds [[SpreadBound]] WHILE the host is loaded (latest rep's
+ *     load > [[HighLoad]]) gets extra reps, up to [[MaxReps]] — buying
+ *     more chances to catch a quiet window. High spread at LOW load is
+ *     left alone: that is code-real variance the artifact should show,
+ *     not average away. Queries whose best rep is already under
+ *     [[ExtendFloor]] seconds never extend — sub-second spread is
+ *     first-rep JIT noise (the recorded c1/j3 pattern), and spending the
+ *     run's wall-clock there would starve the heavy queries the bands
+ *     actually track.
  *
  * The min stays the headline (work-bounded-below); `reps_run` records
  * how many reps each query actually took, so an extended query is
  * visibly flagged as "measured under contention, best-of-N".
  */
 object Bench {
+  val SpreadBound = 0.25
+  val HighLoad = 2.0
+  val MaxReps = 9
+  val ExtendFloor = 0.5
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // split small multi-row-group files across tasks: the default
-      // 128 MB per partition makes every sub-128MB scan a SINGLE task,
-      // silently serializing map-dominated measurements (the official
-      // driver corpus is one row group per file, so this only affects
-      // multi-group inputs like the scale-audit corpora). Env-tunable
-      // for A/B-ing split-size effects on small scan-bound queries
-      // (the round-11→12 c1 "regression" was exactly this knob).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"))
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // AQE coalescing floor (r21): with the 1 MB default, EVERY
-      // post-shuffle stage of a CPU-dense small-shuffle query collapses
-      // to one task — the funnel folds' whole per-user NFA ran on one
-      // core of 32 (ProfileQuery: w33's two fold stages 0.7 s each, 1
-      // task, 1.8 MB shuffle). 64 KB keeps parallelismFirst's
-      // cores-wide coalescing for sub-MB-but-expensive shuffles while
-      // still collapsing KB-sized type tables; at production shuffle
-      // sizes partitions dwarf either floor, so this is local-scale
-      // CPU-parallelism recovery, not a cluster tuning. Env-tunable
-      // for A/B (set 1m to reproduce the Spark default).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def loadAvg: Double = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg
@@ -119,10 +91,7 @@ object Bench {
         Queries.all.toSeq.sortBy(_._1).filter { case (n, _) => names.contains(n) }
       case None => allHeadline
     }
-    val spreadBound = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPREAD", "0.25").toDouble
-    val highLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_HIGH_LOAD", "2.0").toDouble
-    val maxReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPS", "9").toInt.max(reps)
-    val extendFloor = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTEND_FLOOR", "0.5").toDouble
+    val maxReps = MaxReps.max(reps)
     var failed = List.empty[String]
     val results = headline.map { case (name, q) =>
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -130,16 +99,15 @@ object Bench {
       var broken = false
       def runOnce(): Unit = {
         val t0 = System.nanoTime()
-        // scoped frame per run: barrier release is CHARGED to the query
-        // (unpersist is part of its real cost; non-blocking bookkeeping)
-        // and isolated from every other query's barriers
-        graft.operators.Staging.scoped {
-          try q.runForBench(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            failed ::= name
-            broken = true
-          }
+        // the runner's scoped frame: barrier release is CHARGED to the
+        // query (unpersist is part of its real cost; non-blocking
+        // bookkeeping) and isolated from every other query's barriers
+        try q.execute(spark, sfDir, forBench = true)(
+          _.write.format("noop").mode("overwrite").save())
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed ::= name
+          broken = true
         }
         if (!broken) {
           times += (System.nanoTime() - t0) / 1e9
@@ -171,8 +139,8 @@ object Bench {
       //      host extending to 9 reps (deep JIT warm, 0.56) while
       //      r11's quiet host stopped at 3 (0.75), rep-for-rep equal.
       // A sub-floor minimum never extends (JIT noise, wall-clock guard).
-      while (!broken && times.size < maxReps && times.min > extendFloor &&
-        ((spread > spreadBound && repLoads.last > highLoad) || improving))
+      while (!broken && times.size < maxReps && times.min > ExtendFloor &&
+        ((spread > SpreadBound && repLoads.last > HighLoad) || improving))
         runOnce()
       name -> ((times.toSeq, repLoads.toSeq))
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries — the
   * plan-review loop (pushdown, codegen spans, join strategies).
   * Usage: runMain graft.ExplainDump [sfDir] [query ...] */
@@ -33,16 +31,10 @@ object ExplainDump {
         "p12_kmv_distinct", "p12a_kmv_distinct_agg", "p13_kmv_overlap",
         "t64_weighted_sample", "t65_perplexity_buckets",
         "t66_bpe_merges")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     names.foreach { n =>
       println(s"\n================ $n ================")
-      Queries.all(n).run(spark, dir).explain("formatted")
+      Queries.all(n).execute(spark, dir)(_.explain("formatted"))
     }
     spark.stop()
   }

@@ -9,8 +9,8 @@ import graft.functions.DotProduct
 /**
  * Session extensions: registers the engine's native expressions AND its
  * text-operator macros for SQL use. Activate with
- * `SparkSession.builder().withExtensions(new GraftExtensions)` or
- * `spark.sql.extensions=graft.GraftExtensions`; then
+ * `spark.sql.extensions=graft.GraftExtensions` (or `withExtensions(new
+ * GraftExtensions)` on a session builder); then
  * `SELECT graft_dot(a, b)`, `SELECT graft_redact(text)` etc. work in
  * plain SQL.
  *

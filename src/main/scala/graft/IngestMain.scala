@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Enrich
 
 /**
@@ -53,17 +51,7 @@ object IngestMain {
     val naming = getArg(args, "naming", "mis")
     val failOnErr = getArg(args, "fail-on-consistency-error", "true").toBoolean
     val orderBy = parseOverrides(getArg(args, "order-by", ""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val jdbcUrl = getArg(args, "jdbc-url", null)
     val offsets = parseOverrides(getArg(args, "offset", ""))

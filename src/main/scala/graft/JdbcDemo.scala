@@ -2,8 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.CanonicalHash
 import graft.operators.Enrich
 import graft.sources.JdbcSource
@@ -22,13 +20,7 @@ object JdbcDemo {
     st.execute("INSERT INTO TEST VALUES (2, 'row2')")
     st.close(); conn.close()
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val access = JdbcSource.checkTableAccess(url, "TEST")
     val metas = JdbcSource.readTableMetadata(url, "TEST")

@@ -3,14 +3,13 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Per-JOB decomposition of a query's bench wall-clock (guide §1: find
  * where the time goes before touching anything). Runs each named query
- * exactly as Bench does (same confs, same noop sink, same scoped
- * barrier frame), with a listener recording every Spark job's duration,
- * stage count, task count and shuffle bytes. The gap between the sum of
+ * exactly as Bench does (same session, same runner, same noop sink),
+ * with a listener recording every Spark job's duration, stage count,
+ * task count and shuffle bytes. The gap between the sum of
  * job times and the wall-clock is driver-side work (planning, literal
  * collection, barrier bookkeeping).
  *
@@ -21,23 +20,7 @@ object ProfileQuery {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"))
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.scan.fanout.maxBytes",
-        sys.env.getOrElse("SPARK_GRAFT_FANOUT_MAX_BYTES",
-          graft.operators.ScanFanout.DefaultMaxBytes.toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     final case class JobRec(id: Int, var desc: String, var start: Long = 0L,
       var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
@@ -81,9 +64,8 @@ object ProfileQuery {
       (1 to reps).foreach { rep =>
         jobs.synchronized { jobs.clear(); stageJob.clear(); seenStages.clear() }
         val t0 = System.nanoTime()
-        graft.operators.Staging.scoped {
-          q.runForBench(spark, dir).write.format("noop").mode("overwrite").save()
-        }
+        q.execute(spark, dir, forBench = true)(
+          _.write.format("noop").mode("overwrite").save())
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(200) // let the listener bus drain
         val snap = jobs.synchronized(jobs.values.toSeq)

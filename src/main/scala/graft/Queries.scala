@@ -27,36 +27,59 @@ object Queries {
       // bench-time variant WITHOUT comparison-only plumbing (e.g. the
       // final ORDER BY added purely for oracle row-stability); defaults
       // to `run`. Operator semantics must be identical.
-      benchRun: Option[(SparkSession, String) => DataFrame] = None) {
+      benchRun: Option[(SparkSession, String) => DataFrame] = None,
+      // session conf this query's action runs under; see [[withConf]]
+      conf: Map[String, String] = Map.empty) {
     def runForBench: (SparkSession, String) => DataFrame = benchRun.getOrElse(run)
+
+    /** Run `body` under this query's conf — the default AQE floor
+      * unless [[conf]] declares another, plus the rest of [[conf]] —
+      * then restore the values those keys had before. AQE reads its
+      * conf when the action executes, so a frame built earlier, or
+      * while another query's build rewrote the session, still runs
+      * under its own declared values. */
+    def withConf[T](spark: SparkSession)(body: => T): T = {
+      val effective =
+        Map(GraftSession.AqeFloorKey -> GraftSession.AqeFloor) ++ conf
+      val prev = effective.keys.map(k => k -> spark.conf.getOption(k))
+      effective.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+    /** The one query runner every main uses: build the frame (the bench
+      * variant if `forBench`), then run `action` on it under
+      * [[withConf]], all inside one [[Staging.scoped]] frame, so the
+      * query's barriers are released after its action and touch no
+      * other query's. */
+    def execute[T](spark: SparkSession, dir: String, forBench: Boolean = false)(
+        action: DataFrame => T): T =
+      Staging.scoped {
+        val df = (if (forBench) runForBench else run)(spark, dir)
+        withConf(spark)(action(df))
+      }
   }
+
+  /** Per-query retreat of the AQE floor to 64 KB: a few pipelines are
+    * CPU-dense at sub-256 KB shuffle sizes (span/gram kernels,
+    * composite prep chains), where byte-sized coalescing
+    * under-parallelizes stages whose per-row cost AQE cannot see.
+    * Sweep-grade evidence: p1 0.99 s at 64 KB vs 1.44 s at 256 KB; t51
+    * 1.94 vs 2.29 (full idle-start sweeps, identical code). */
+  private val SmallShuffleFloor: Map[String, String] =
+    Map(GraftSession.AqeFloorKey -> "64k")
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // older driver corpora carry events.ts as TIMESTAMP(NANOS), which
     // Spark rejects by default; read those as raw nanos (LongType) and
     // convert explicitly where event time is needed (see eventsWithTs).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // AQE coalescing floor 256 KB (r22, guide §2.2 fewer-larger-
-    // partitions): with `parallelismFirst` (Spark default true) the
-    // post-shuffle task count is ~bytes/max(bytes/cores, FLOOR), so the
-    // floor is what keeps KB-scale-but-CPU-cheap shuffles from
-    // splintering into one near-empty task per core — r21 shipped 64 KB
-    // (vs Spark's 1 MB) to un-serialize the CPU-DENSE funnel folds, and
-    // the r21 verdict measured the tail of cheap small shuffles paying
-    // for it at 32 cores (~70/79 queries faster at 8 cores than 32).
-    // 256 KB is the measured middle: funnel folds keep multi-task
-    // parallelism (an MB-scale fold = 4-8 tasks — the r21 pathology was
-    // ONE task under the 1 MB floor), while type-table aggregates
-    // collapse to data-sized task counts that no longer scale with the
-    // session's core count (paired 12-query A/B at 32 cores: −1.5 s vs
-    // the 64 KB floor — t92/t93 −0.5 each, t67/t69 −0.35, funnels
-    // equal). Set per-query from the shared read helper so every query
-    // runs under the same value wherever it executes; the bench env
-    // knob still wins when set (A/B path). Scale note: production
-    // shuffle sizes dwarf any of these floors — this is small-shuffle
-    // parallelism policy, not cluster tuning.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
+    // the default floor, for callers that run a frame without
+    // [[Q.withConf]] (it sets the declared floor itself)
+    spark.conf.set(GraftSession.AqeFloorKey, GraftSession.AqeFloor)
     spark.read.parquet(s"$dir/$name.parquet")
   }
 
@@ -83,24 +106,6 @@ object Queries {
       case "part" => Some("p_partkey")
       case _ => None
     })
-
-  /** Per-QUERY retreat of the small-shuffle AQE floor [[t]] sets: a
-    * few pipelines are CPU-DENSE at sub-256KB shuffle sizes (span/gram
-    * kernels, composite prep chains), where byte-sized coalescing
-    * under-parallelizes stages whose per-row cost AQE cannot see —
-    * the same reason the 64 KB floor existed in r21. Applied AFTER the
-    * frame is built (every [[t]] call during construction re-sets the
-    * 256 KB default; AQE reads the conf at action time, so the value
-    * in force when the query EXECUTES is this one, and the next
-    * query's first read restores the default). The env knob still
-    * wins everywhere (A/B path). Sweep-grade evidence: p1 0.99 s at
-    * 64 KB vs 1.44 s at 256 KB; t51 1.94 vs 2.29 (full idle-start
-    * sweeps, identical code). */
-  private def smallShuffleFloor[T](spark: SparkSession, v: String)(df: T): T = {
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", v))
-    df
-  }
 
   /** events with `ts` normalized to a naive microsecond timestamp,
     * whatever flavor the corpus file carries: raw nanos-as-long (legacy
@@ -3615,10 +3620,11 @@ object Queries {
     * keep-first window and the positional removal, and the gate is
     * hash-exact on the rebuilt strings. */
   val t51_span_removal: Q = Q(
-    run = (spark, dir) => smallShuffleFloor(spark, "64k")(
+    run = (spark, dir) =>
       TextDedup.spanDedup(tf(spark, dir, "documents"), "doc_id", "text",
           gram = SpanGram)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+    conf = SmallShuffleFloor,
     oracle = Some(
       s"""WITH toks AS (
          |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS t
@@ -4969,10 +4975,9 @@ object Queries {
   }
 
   val p1_corpus_prep: Q = Q(
-    run = (spark, dir) =>
-      smallShuffleFloor(spark, "64k")(p1Frame(spark, dir).orderBy("doc_id")),
-    benchRun = Some((spark, dir) =>
-      smallShuffleFloor(spark, "64k")(p1Frame(spark, dir))),
+    run = (spark, dir) => p1Frame(spark, dir).orderBy("doc_id"),
+    benchRun = Some((spark, dir) => p1Frame(spark, dir)),
+    conf = SmallShuffleFloor,
     bench = true,
     oracle = {
       val langs = TextAnalysis.LangMarkers
@@ -7870,8 +7875,9 @@ object Queries {
     * `maxKeyEvents = 1` forces the above-threshold route, so this row
     * proves a reluctant call lands on the reluctant BUCKETED twin —
     * not a silently-greedy one (the round-16 verdict's router/mode
-    * coverage gap). Gated on w56's oracle VERBATIM; the router audit
-    * (AuditR17) additionally pins the picked route structurally. */
+    * coverage gap). Gated on w56's oracle VERBATIM; FunnelSpec's
+    * consume-mode router test additionally pins the picked route
+    * structurally. */
   val w58_funnel_loop_consecutive_auto_reluctant: Q = Q(
     run = (spark, dir) =>
       Funnel.funnelLoopConsecutiveAuto(t(spark, dir, "events"),

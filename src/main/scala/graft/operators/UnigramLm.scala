@@ -87,7 +87,16 @@ object UnigramLm {
   private[graft] def viterbi(w: String,
       score: scala.collection.Map[String, Long], maxPieceLen: Int,
       unk: Option[Long]): List[String] = {
-    val L = w.length
+    // positions and piece lengths count CODE POINTS, as Spark's
+    // length/substr do on the seed side: at(i) is the UTF-16 index
+    // where code point i starts, so a non-BMP character is one piece
+    val L = w.codePointCount(0, w.length)
+    val at = new Array[Int](L + 1)
+    var k = 0
+    while (k < L) {
+      at(k + 1) = at(k) + Character.charCount(w.codePointAt(at(k)))
+      k += 1
+    }
     val best = new Array[Long](L + 1)
     val choice = new Array[Int](L + 1)
     var i = 1
@@ -97,7 +106,7 @@ object UnigramLm {
       var l = 1
       val maxL = math.min(i, maxPieceLen)
       while (l <= maxL) {
-        val piece = w.substring(i - l, i)
+        val piece = w.substring(at(i - l), at(i))
         val s = score.get(piece) match {
           case Some(v) => Some(v)
           case None if l == 1 => unk
@@ -123,7 +132,7 @@ object UnigramLm {
     var path = List.empty[String]
     while (pos > 0) {
       val l = choice(pos)
-      path = w.substring(pos - l, pos) :: path
+      path = w.substring(at(pos - l), at(pos)) :: path
       pos -= l
     }
     path
@@ -175,6 +184,11 @@ object UnigramLm {
     merged
   }
 
+  /** A single character: one code point, which is what Spark's
+    * `length` counts (a non-BMP character is two UTF-16 units). */
+  private def isChar(piece: String): Boolean =
+    piece.codePointCount(0, piece.length) == 1
+
   /** The M-step re-estimation: keep every character (usage floored at
     * 1 — coverage survives) plus multi-char pieces with positive
     * usage; scores re-normalize over the kept total. Returns
@@ -183,7 +197,7 @@ object UnigramLm {
       chars: Seq[String]): Map[String, (Long, Long)] = {
     val kept: Seq[(String, Long)] =
       chars.map(c => c -> math.max(usage.getOrElse(c, 0L), 1L)) ++
-        usage.toSeq.filter { case (p, u) => p.length > 1 && u > 0 }
+        usage.toSeq.filter { case (p, u) => !isChar(p) && u > 0 }
     val total = kept.map(_._2).sum
     kept.map { case (p, u) => p -> ((u, microLog10(u, total))) }.toMap
   }
@@ -209,14 +223,14 @@ object UnigramLm {
     }
     // usage-ranked prune: all chars + top `vocabMulti` multi pieces
     val keptMulti = lastUsage.toSeq
-      .filter(_._1.length > 1)
+      .filter(pu => !isChar(pu._1))
       .map { case (pc, (u, _)) => (pc, u) }
       .sortWith { case ((p1, u1), (p2, u2)) =>
         u1 > u2 || (u1 == u2 && BpeTrain.utf8Less(p1, p2)) }
       .take(p.vocabMulti)
       .map(_._1).toSet
     val pruned = scores.filter { case (pc, _) =>
-      pc.length == 1 || keptMulti(pc) }
+      isChar(pc) || keptMulti(pc) }
     // final EM round over the pruned vocabulary → emitted scores
     val finalTable = mStep(usageOf(pruned), chars)
     finalTable.toSeq
@@ -281,7 +295,7 @@ object UnigramLm {
         .unionByName(sub.filter(length(col("piece")) > 1)
           .orderBy(desc("cnt"), asc("piece")).limit(p.seedSize))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val (seedChars, seedMulti) = seedRows.partition(_._1.length == 1)
+      val (seedChars, seedMulti) = seedRows.partition(r => isChar(r._1))
       val vocab = if (nWords <= p.maxLocalWords) {
         val local = words.collect().map(r =>
           (r.getString(0), r.getLong(1)))

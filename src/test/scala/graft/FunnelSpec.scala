@@ -12,6 +12,52 @@ class FunnelSpec extends SparkSpec {
   private val us0 = ts(0).getTime * 1000L
   private def tsUs(s: Int): Long = us0 + s * 1000000L
 
+  /**
+   * True iff the plan behind `df` contains an Aggregate whose GROUPING
+   * expressions include an attribute named exactly `bkt` — the
+   * structural signature of the bucketed CEP twins (they all
+   * `groupBy(user_id, bkt)` in their segment stage), used to pin which
+   * side an auto-router picked.
+   *
+   * Structural on purpose: a `toString.contains("bkt#")` sniff could be
+   * flipped by any attribute whose name merely ends in "bkt" or by a
+   * plan-printing change; and a bare name match without the
+   * Aggregate/grouping context false-positives on struct FIELDS named
+   * bkt (the skip fold's state carries one). Attributes only — a
+   * grouping expression that merely ALIASES something to `bkt` is not
+   * the twins' shape.
+   */
+  private def groupsByAttr(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+          if a.groupingExpressions.exists {
+            case att: org.apache.spark.sql.catalyst.expressions.Attribute =>
+              att.name == "bkt"
+            case _ => false
+          } => a
+    }.nonEmpty
+
+  test("groupsByAttr keys on a grouping ATTRIBUTE, not struct fields or plan text") {
+    val df = Seq((1L, 10L), (2L, 20L)).toDF("user_id", "bkt")
+    // the bucketed-twin shape: groupBy over a real bkt attribute
+    assert(groupsByAttr(df.groupBy("user_id", "bkt").count()))
+    // the round-16 advisor's false-positive risks: a struct FIELD named
+    // bkt inside an aggregate (the skip fold's state shape) ...
+    assert(!groupsByAttr(
+      Seq((1L, 10L)).toDF("user_id", "b")
+        .withColumn("st", org.apache.spark.sql.functions.struct(
+          org.apache.spark.sql.functions.col("b").as("bkt")))
+        .groupBy("user_id").agg(
+          org.apache.spark.sql.functions.collect_list("st"))))
+    // ... an attribute merely NAMED like bkt elsewhere in the plan ...
+    assert(!groupsByAttr(
+      df.withColumnRenamed("bkt", "xbkt").groupBy("user_id").count()))
+    // ... and an ALIAS to bkt in the grouping (not the twins' shape)
+    assert(!groupsByAttr(
+      df.groupBy(org.apache.spark.sql.functions.col("user_id").as("bkt"))
+        .count()))
+  }
+
   test("funnel: ordered progression, out-of-order rejection, ties break on event id") {
     val ev = Seq(
       // user 1: full funnel
@@ -2195,12 +2241,12 @@ class FunnelSpec extends SparkSpec {
     val above = Funnel.funnelGroupTimesRangeGuardedAuto(ev, "user_id",
       "event_type", "ts", "event_id", guarded, 2, 3,
       bucketSeconds = 1L, maxKeyEvents = 2L)
-    assert(AuditUtil.groupsByAttr(above))
+    assert(groupsByAttr(above))
     assert(rows(above) === single)
     val below = Funnel.funnelGroupTimesRangeGuardedAuto(ev, "user_id",
       "event_type", "ts", "event_id", guarded, 2, 3,
       maxKeyEvents = 1000000L)
-    assert(!AuditUtil.groupsByAttr(below))
+    assert(!groupsByAttr(below))
     assert(rows(below) === single)
     // cap placement law UNDER the guard, random corpora: the capped
     // fold (in-fold saturation) == output-capped guarded greedy loop,
@@ -2248,13 +2294,13 @@ class FunnelSpec extends SparkSpec {
     val above = Funnel.funnelLoopConsecutiveAuto(df, "user_id",
       "event_type", "ts", "event_id", stages, bucketSeconds = 1L,
       maxKeyEvents = 10L, mode = Funnel.Reluctant)
-    assert(AuditUtil.groupsByAttr(above))
+    assert(groupsByAttr(above))
     assert(rows(above) === relRef)
     // below threshold: single route, same reluctant values
     val below = Funnel.funnelLoopConsecutiveAuto(df, "user_id",
       "event_type", "ts", "event_id", stages,
       maxKeyEvents = 1000000L, mode = Funnel.Reluctant)
-    assert(!AuditUtil.groupsByAttr(below))
+    assert(!groupsByAttr(below))
     assert(rows(below) === relRef)
     // the mode really bit on this corpus (greedy differs)
     assert(rows(Funnel.funnelLoopConsecutive(df, "user_id",
@@ -2264,6 +2310,12 @@ class FunnelSpec extends SparkSpec {
       "event_type", "ts", "event_id", stages, maxKeyEvents = 1000000L))
       === rows(Funnel.funnelLoopConsecutive(df, "user_id", "event_type",
         "ts", "event_id", stages)))
+    // w58's own call (maxKeyEvents = 1 over the corpus events) lands on
+    // the bucketed route with w56's single-route reluctant values
+    val w58 = Queries.w58_funnel_loop_consecutive_auto_reluctant.run(spark, sf())
+    assert(groupsByAttr(w58))
+    assert(rows(w58) ===
+      rows(Queries.w56_funnel_loop_consecutive_reluctant.run(spark, sf())))
   }
 
   test("auto-router probe cost: precomputedPeak skips the count-by-key job entirely; without it the probe is eager at call time") {

@@ -12,6 +12,55 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("the runner executes each query under its declared AQE floor, whatever the build order") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val key = GraftSession.AqeFloorKey
+    val t51 = Queries.t51_span_removal
+    val plain = Queries.s1_resumable_scan
+    assert(t51.conf.get(key).contains("64k") && plain.conf.isEmpty)
+    // tag = which query's action started the job; the marker job drains
+    // the FIFO listener bus (every earlier job start is delivered first)
+    val tagKey = "graft.spec.query"
+    val marker = "graft-runner-spec-drain-marker"
+    val floors = new ConcurrentLinkedQueue[(String, String)]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { props =>
+          if (props.getProperty("spark.job.description") == marker)
+            markerSeen.countDown()
+          else Option(props.getProperty(tagKey)).foreach(tag =>
+            floors.add(tag -> props.getProperty(key)))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try graft.operators.Staging.scoped {
+      // t51 first, then a default-floor query: the later build resets
+      // the session floor, which t51's action must not inherit
+      val df51 = t51.run(spark, sf())
+      val dfPlain = plain.run(spark, sf())
+      val before = spark.conf.get(key)
+      for ((tag, q, df) <- Seq(("t51", t51, df51), ("plain", plain, dfPlain))) {
+        sc.setLocalProperty(tagKey, tag)
+        try q.withConf(spark)(df.write.format("noop").mode("overwrite").save())
+        finally sc.setLocalProperty(tagKey, null)
+      }
+      assert(spark.conf.get(key) === before, "the runner restores the session conf")
+      sc.setJobDescription(marker)
+      try spark.range(1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS),
+        "marker job event not delivered within 60s")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val byQuery = floors.asScala.toSeq.groupMap(_._1)(_._2)
+    assert(byQuery.keySet === Set("t51", "plain"))
+    assert(byQuery("t51").toSet === Set("64k"))
+    assert(byQuery("plain").toSet === Set(GraftSession.AqeFloor))
+  }
+
   test("oracleSql declared for every query") {
     val missing = Queries.all.collect {
       case (n, q) if q.oracle.isEmpty => n

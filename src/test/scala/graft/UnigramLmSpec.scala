@@ -37,6 +37,24 @@ class UnigramLmSpec extends SparkSpec {
     assert(local.forall(v => v.scoreMicro < 0 && v.usage >= 1))
   }
 
+  test("a non-BMP character is ONE character: it keeps the coverage floor and stays in the vocab on both EM paths") {
+    val emoji = "\uD83D\uDE00" // U+1F600: one code point, two UTF-16 units
+    val withEmoji = Seq((1L, s"the cat ${emoji}cat"), (2L, s"a $emoji mat"),
+      (3L, "the mat sat")).toDF("doc_id", "text")
+    // vocabMulti = 0 prunes every multi-character piece, so only the
+    // character set (each usage floored at 1) survives
+    val p = UnigramLm.Params(seedSize = 40, vocabMulti = 0)
+    for (params <- Seq(p, p.copy(maxLocalWords = 0L))) {
+      val vocab = UnigramLm.train(withEmoji, "text", params)
+      assert(vocab.exists(v => v.piece == emoji && v.usage >= 1),
+        s"$emoji missing from ${vocab.map(_.piece)}")
+      assert(vocab.forall(v => v.piece.codePointCount(0, v.piece.length) == 1))
+      val scores = vocab.map(v => v.piece -> v.scoreMicro).toMap
+      assert(UnigramLm.viterbi(s"${emoji}cat", scores, params.maxPieceLen,
+        None) === List(emoji, "c", "a", "t"))
+    }
+  }
+
   test("parallel local E-step equals a serial fold whatever the chunking (exact Long merge is order-independent)") {
     // the r22 parallelization argument: per-chunk usage maps merged by
     // exact Long addition give the same (piece -> Σ cnt) table as one

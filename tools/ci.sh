@@ -2,6 +2,13 @@
 # Full local gate: tests → Verify@sf0.01 → DuckDB differential → Bench@sf0.1
 set -euo pipefail
 cd "$(dirname "$0")/.."
+echo "=== one session factory: no SparkSession.builder in src/main outside GraftSession.scala"
+# every main must get its session from graft.GraftSession, so the queries
+# run under one conf whichever main drives them
+if grep -rn "SparkSession\.builder" src/main | grep -v "^src/main/scala/graft/GraftSession\.scala:"; then
+  echo "FATAL: SparkSession.builder outside GraftSession.scala (use graft.GraftSession)"
+  exit 1
+fi
 echo "=== sbt test"
 sbt -batch test 2>&1 | tail -3
 echo "=== t5 recall guard (mandatory): banded near-dup vs quadratic baseline"
