@@ -64,7 +64,10 @@ object ConsistencyCheck {
    * reference's stated motivation) and the aggregation coalesced to a
    * fixed low parallelism so the check has a bounded footprint next to
    * the main job. The session conf is scoped to this call and restored —
-   * safe because [[sinkMetrics]] executes its action eagerly.
+   * safe because [[sinkMetrics]] executes its action eagerly. The sink is
+   * read with an explicit schema of the two hash columns, so the read
+   * runs no schema-inference job; a sink that lacks one of them reads it
+   * as NULL, and every row counts as a mismatch.
    */
   def isolatedSinkMetrics(spark: org.apache.spark.sql.SparkSession, path: String,
       h1: String = "row_hash", h2: String = "row_hash_iceberg",
@@ -72,7 +75,8 @@ object ConsistencyCheck {
     val key = "spark.sql.parquet.enableVectorizedReader"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try sinkMetrics(spark.read.parquet(path).coalesce(parallelism), h1, h2)
+    try sinkMetrics(spark.read.schema(s"`$h1` STRING, `$h2` STRING").parquet(path)
+      .coalesce(parallelism), h1, h2)
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)

@@ -1,8 +1,17 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.TypeMapping
 
@@ -60,55 +69,80 @@ object Ddl {
 
   private[graft] def clearProbeCache(): Unit = { probeCache.clear(); probesRun = 0 }
 
-  /** Measure compressed bytes/row on a bounded sample (written as real
-    * zstd parquet, so the measurement includes encoding + compression) and
-    * derive the `maxRecordsPerFile` cap that yields ~`target`-sized files.
-    * Returns None when the sample is empty. The probe costs one bounded
-    * job (`limit(sampleRows)`) — O(1) relative to the table — and is
-    * cached per (schema, target).
+  /** Measure compressed bytes/row on a bounded sample and derive the
+    * `maxRecordsPerFile` cap that yields ~`target`-sized files
+    * (`target * rows / bytes`). Returns None when the sample is empty.
+    * The measurement is [[encodedSize]] of `df.limit(sampleRows)`: the
+    * bytes the sink's own zstd parquet writer produces for the sample,
+    * counted in memory by the tasks that encode it. Nothing is written,
+    * listed, read back or deleted, and the count cannot disagree with a
+    * listing, on any cluster. The probe costs one bounded action — O(1)
+    * relative to the table — and is cached per (schema, target).
     *
-    * The sample is written UNDER THE DESTINATION (`dest/_width_probe`)
-    * through its Hadoop FileSystem, NOT to a driver-local temp dir: on a
-    * real cluster executors write to the shared destination FS, so the
-    * driver's listing sees the files it must measure. (A `java.nio` temp
-    * dir — the round-1..3 implementation — silently self-disabled off
-    * `local[*]`: executors wrote their own local disks, the driver listed
-    * an empty dir, file targeting turned off, and sample files leaked on
-    * executors.) The `_`-prefix keeps the probe dir invisible to Spark/
-    * Hive readers of `dest` even if cleanup is interrupted; cleanup runs
-    * through the same FileSystem API. A listing that contradicts the
-    * written sample (rows > 0 but zero parquet bytes visible) fails
-    * loudly instead of silently disabling the advertised 512 MB
-    * targeting. */
+    * `dest` is unused; it stays in the signature for positional callers. */
   def estimateRecordsPerFile(df: DataFrame, dest: String,
       target: Long = TargetFileSizeBytes, sampleRows: Int = 10000): Option[Long] = {
     val key = (df.schema, target)
     probeCache.get(key).orElse {
       probesRun += 1
-      val probePath = new org.apache.hadoop.fs.Path(dest, "_width_probe")
-      val fs = probePath.getFileSystem(
-        df.sparkSession.sessionState.newHadoopConf())
-      val measured =
-        try {
-          df.limit(sampleRows).write.mode(SaveMode.Overwrite)
-            .option("compression", ParquetCompression).parquet(probePath.toString)
-          val bytes = fs.listStatus(probePath)
-            .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-          val rows = df.sparkSession.read.parquet(probePath.toString).count()
-          if (rows == 0) None
-          else if (bytes == 0)
-            throw new IllegalStateException(
-              s"width probe wrote $rows rows under $probePath but the " +
-                "destination FileSystem lists zero parquet bytes — file-size " +
-                "targeting would silently disable; refusing")
-          else Some(math.max(1L, target * rows / bytes))
-        } finally fs.delete(probePath, true)
+      val (rows, bytes) = encodedSize(df.limit(sampleRows))
+      val measured = if (rows == 0) None else Some(math.max(1L, target * rows / bytes))
       // an empty sample is NOT cached: the width of a schema whose first
       // write happened to be empty should be measured on the next
       // non-empty write, not disabled forever
       measured.foreach(v => probeCache.put(key, v))
       measured
     }
+  }
+
+  /** Rows of `df` and the bytes of the zstd parquet files Spark's writer
+    * would produce for them, one file per non-empty partition, in one
+    * action. Each task encodes its rows with Spark's `ParquetWriteSupport`
+    * under the conf `ParquetUtils.prepareWrite` gives a
+    * [[writePartitioned]] write, into a [[ByteCountingOutputFile]] that
+    * keeps only the count. */
+  private[graft] def encodedSize(df: DataFrame): (Long, Long) = {
+    val spark = df.sparkSession
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    ParquetUtils.prepareWrite(sqlConf, job, df.schema,
+      new ParquetOptions(Map("compression" -> ParquetCompression), sqlConf))
+    val codec = CompressionCodecName.fromConf(
+      job.getConfiguration.get(ParquetOutputFormat.COMPRESSION))
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    df.queryExecution.toRdd.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val out = new ByteCountingOutputFile
+        val writer = new SampleWriterBuilder(out).withConf(conf.value)
+          .withCompressionCodec(codec).build()
+        var rows = 0L
+        try it.foreach { r => writer.write(r); rows += 1 } finally writer.close()
+        Iterator((rows, out.bytes))
+      }
+    }.collect().foldLeft((0L, 0L)) { case ((r, b), (r1, b1)) => (r + r1, b + b1) }
+  }
+
+  private final class SampleWriterBuilder(out: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, SampleWriterBuilder](out) {
+    override protected def self(): SampleWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  /** A parquet [[OutputFile]] that discards what is written to it and
+    * counts the bytes. */
+  private final class ByteCountingOutputFile extends OutputFile {
+    var bytes = 0L
+    private def stream: PositionOutputStream = new PositionOutputStream {
+      override def getPos: Long = bytes
+      override def write(b: Int): Unit = bytes += 1
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = bytes += len
+    }
+    override def create(blockSizeHint: Long): PositionOutputStream = stream
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = stream
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = 0L
   }
 
   /** S6 + O4: write the enriched frame as month-partitioned zstd parquet.

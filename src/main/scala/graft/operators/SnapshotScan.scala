@@ -75,7 +75,8 @@ object SnapshotScan {
 
   /** S3: access probe (`SELECT FIRST 1 1 FROM t`, FB:494–525) — returns
     * false instead of failing when the source is unreadable/absent, so the
-    * orchestration loop can skip the table gracefully. */
+    * orchestration loop can skip the table gracefully. Reads the first row
+    * in one job (`head(1)`; `limit(1).count()` took two). */
   def probeAccess(read: => DataFrame): Boolean =
-    scala.util.Try(read.limit(1).count()).isSuccess
+    scala.util.Try(read.head(1)).isSuccess
 }

@@ -80,27 +80,41 @@ class DdlSpec extends SparkSpec {
     assert(Ddl.estimateRecordsPerFile(enriched, emptyDest).isDefined)
   }
 
-  test("width probe goes through the destination FS, once per schema, and leaves no residue") {
+  test("width probe writes nothing under dest and runs once per schema") {
     Ddl.clearProbeCache()
     val li = spark.read.parquet(sf() + "/lineitem.parquet").limit(200)
     val enriched = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
     val path = Files.createTempDirectory("ddl-cache").toString
 
-    Ddl.writePartitioned(enriched, path)
-    assert(Ddl.probesRun === 1, "first write must run exactly one probe job")
-    // second write, same schema: the cached width is reused — the
-    // upstream plan is NOT re-executed by a second probe
+    // the probe measures in memory: nothing appears under `dest`
+    assert(Ddl.estimateRecordsPerFile(enriched, path).isDefined)
+    assert(Ddl.probesRun === 1, "first call must run exactly one probe")
+    assert(new java.io.File(path).list().isEmpty, "the probe wrote under the destination")
+    // a write of the same schema reuses the cached width — the upstream
+    // plan is NOT re-executed by a second probe
     Ddl.writePartitioned(enriched, path)
     assert(Ddl.probesRun === 1, "same-schema write re-ran the width probe")
     // a different target is a different measurement
     Ddl.writePartitioned(enriched, path, targetFileSizeBytes = Some(64 * 1024))
     assert(Ddl.probesRun === 2)
+    assert(spark.read.parquet(path).count() === 400)
 
-    // the probe dir is removed via the destination FileSystem, and its
-    // `_`-prefix keeps it invisible to readers even mid-probe
-    assert(!new java.io.File(path, "_width_probe").exists,
-      "probe residue left under the destination")
-    assert(spark.read.parquet(path).count() === 600)
+    // an empty sample measures nothing and is not cached
+    assert(Ddl.estimateRecordsPerFile(enriched.limit(0), path, target = 1L << 20).isEmpty)
+    assert(Ddl.estimateRecordsPerFile(enriched, path, target = 1L << 20).isDefined)
+    assert(Ddl.probesRun === 4, "an empty sample was cached")
+  }
+
+  test("in-memory width measurement equals the bytes of Spark's own zstd write of the sample") {
+    val li = spark.read.parquet(sf("sf0.01") + "/lineitem.parquet")
+    val sample = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema)).limit(10000)
+    val (rows, bytes) = Ddl.encodedSize(sample)
+    val path = Files.createTempDirectory("ddl-width").toString + "/sample"
+    sample.write.option("compression", Ddl.ParquetCompression).parquet(path)
+    val written = new java.io.File(path).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    assert(rows === 10000L)
+    assert(bytes === written, "measured bytes differ from the written sample's")
   }
 
   test("bucketed tables join exchange-free (co-located sort-merge join)") {

@@ -96,6 +96,52 @@ class IngestJobSpec extends SparkSpec {
     assert(spark.conf.getOption(key) === before)
   }
 
+  test("a sink without row_hash_iceberg fails the isolated verify: its nulls count as mismatches") {
+    import org.apache.spark.sql.SaveMode
+    val c = cfg("region")
+    IngestJob.run(spark, c)
+    val path = s"${c.warehouseDir}/region"
+    val stripped = s"${c.warehouseDir}/region_stripped"
+    spark.read.parquet(path).drop("row_hash_iceberg")
+      .write.mode(SaveMode.Overwrite).partitionBy(Ddl.PartitionColumn).parquet(stripped)
+    val iso = ConsistencyCheck.isolatedSinkMetrics(spark, stripped)
+    assert(iso === ConsistencyCheck.SnapshotMetrics(rowCount = 5L, hashMismatchCount = 5L))
+    assert(!ConsistencyCheck.check("region", 5L, iso, failOnError = false).ok)
+  }
+
+  test("a replace ingestTable of sf0.01 lineitem runs at most 10 Spark jobs") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    // jobs tagged by a local property; the marker job drains the FIFO
+    // listener bus, so every job start of the load is delivered first
+    val tagKey = "graft.spec.ingest"
+    val marker = "graft-ingest-spec-drain-marker"
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { props =>
+          if (props.getProperty("spark.job.description") == marker) markerSeen.countDown()
+          else if (props.getProperty(tagKey) != null) { jobs.incrementAndGet(); () }
+        }
+    }
+    val c = cfg("lineitem").copy(sourceDir = sf("sf0.01"))
+    val sc = spark.sparkContext
+    Ddl.clearProbeCache()
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "lineitem")
+      val r = try IngestJob.ingestTable(spark, c, c.tables.head)
+        finally sc.setLocalProperty(tagKey, null)
+      assert(r.report.exists(_.ok), r)
+      sc.setJobDescription(marker)
+      try spark.range(1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job event not delivered within 60s")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 10, s"${jobs.get()} jobs: a new job on the load path")
+  }
+
   test("FB naming mode: uppercase source, lowercase $-sanitized sink (FB:427–466)") {
     assert(TableMapping.parseFb("MIS$DOC, ref$pat:Patients ,Orders") === Seq(
       TableMapping("MIS$DOC", "mis_doc"),   // auto sink: lower + $→_

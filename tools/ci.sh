@@ -67,6 +67,15 @@ echo "$PQLOG" | grep -q "candidate cut recovers most brute-force neighbors" \
   || { echo "FATAL: t43 PQ recall test did not run (renamed or filtered out)"; exit 1; }
 echo "$PQLOG" | grep -q "All tests passed" \
   || { echo "FATAL: t43 PQ recall test failed"; echo "$PQLOG" | tail -20; exit 1; }
+echo "=== width-probe guard (mandatory): in-memory width equals Spark's own zstd write"
+# file-size targeting sizes files from bytes counted in memory instead of
+# a written sample; the cap is honest only while that count equals what
+# Spark's own writer produces for the same rows — this test is that guard
+WLOG=$(sbt -batch 'testOnly graft.DdlSpec -- -z "in-memory width measurement"' 2>&1)
+echo "$WLOG" | grep -q "in-memory width measurement equals the bytes of Spark's own zstd write of the sample" \
+  || { echo "FATAL: width-probe equality test did not run (renamed or filtered out)"; exit 1; }
+echo "$WLOG" | grep -q "All tests passed" \
+  || { echo "FATAL: width-probe equality test failed"; echo "$WLOG" | tail -20; exit 1; }
 OUT=$(mktemp -d)
 echo "=== Verify sf0.01 -> $OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" 2>&1 \
