@@ -2606,9 +2606,11 @@ object Queries {
   /** Z-ORDER clustering key ([[Layout.zValue]]): Morton interleave of
     * (l_orderkey, l_partkey), the layout-maintenance primitive a
     * 100 TB table uses so a TWO-dimensional box predicate prunes from
-    * parquet footer stats (AUDIT_r14_zorder measures the effect; this
-    * gate proves the bit arithmetic — pure shift/and/or, whole-stage
-    * codegen — against a DuckDB bit-op replay). */
+    * parquet footer stats (measured at sf0.1 over 64 files: a
+    * full-range-a, narrow-b box reads 37 Z-ordered files where a
+    * linear layout reads all 64; this gate proves the bit arithmetic
+    * — pure shift/and/or, whole-stage codegen — against a DuckDB
+    * bit-op replay). */
   val t94_zorder_key: Q = Q(
     run = (spark, dir) =>
       t(spark, dir, "lineitem")
@@ -2673,8 +2675,9 @@ object Queries {
   /** HILBERT clustering key ([[Layout.hilbertValue]]): the Morton
     * upgrade at the same bit budget — consecutive key values are
     * always grid-adjacent, so equal key ranges give tighter per-file
-    * envelopes (t94/t96 gate the Z family; AUDIT_r16_hilbert measures
-    * the pruning delta). The oracle replays the identical xy2d
+    * envelopes (t94/t96 gate the Z family; measured over 64 files,
+    * hilbert read 11 vs Morton's 14 on a square box, 20 vs 28 on a
+    * narrow one). The oracle replays the identical xy2d
     * quadrant-rotation recurrence level by level as chained CTEs —
     * every DuckDB bit op fully parenthesized (single flat precedence
     * level), xor via the function form. All-integer arithmetic, so
@@ -2876,8 +2879,9 @@ object Queries {
     * dimension-generic Skilling loop at `zValueN`'s arity — round-16
     * verdict item 5) over lineitem's (orderkey, partkey, suppkey,
     * linenumber) at 15 bits/key (60 interleaved bits). Hash-exact vs
-    * the [[duckHilbertNSql]] replay; the 4-d pruning-vs-Morton
-    * receipts are AUDIT_r17's rows. */
+    * the [[duckHilbertNSql]] replay. Measured 4-d pruning vs Morton
+    * over 64 files: 4 vs 8 on a square box, 1 vs 4 on a corner, 38 vs
+    * 64 on a plane. */
   val t100_hilbert_key_4d: Q = Q(
     run = (spark, dir) =>
       t(spark, dir, "lineitem")
@@ -6712,7 +6716,7 @@ object Queries {
     bench = true)
 
   /** [[w6_funnel]] through the SKEW-SAFE bucketed monoid
-    * ([[Funnel.funnelBucketed]], 1-hour segments): each segment's
+    * ([[Funnel.funnel]], 1-hour segments): each segment's
     * effect is a (k+1)-slot transition vector, composed in bucket
     * order — value-identical to the single fold by the composition
     * law, so it gates against w6's oracle VERBATIM (the p12a-style
@@ -6720,9 +6724,9 @@ object Queries {
     * width, the power-user answer the w6 scaladoc promises. */
   val w7_funnel_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnel(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id", FunnelStages,
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w6_funnel.oracle)
 
@@ -6776,7 +6780,7 @@ object Queries {
     bench = true)
 
   /** [[w8_funnel_within]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelWithinBucketed]], 1-hour segments): the windowed
+    * ([[Funnel.funnelWithin]], 1-hour segments): the windowed
     * DP's segment summary needs the window-start slot the
     * unconstrained monoid lacked — in-segment DP starts, plus
     * greedy-earliest i→j completion times that decide whether a
@@ -6785,9 +6789,9 @@ object Queries {
     * (the w7-style strongest twin check). */
   val w9_funnel_within_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWithinBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelWithin(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id", FunnelStages,
-          FunnelWithinMicros, bucketSeconds = 3600L)
+          FunnelWithinMicros, route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w8_funnel_within.oracle)
 
@@ -6840,7 +6844,7 @@ object Queries {
     })
 
   /** [[w14_funnel_within_guarded]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelWithinGuardedBucketed]]): the combined
+    * split ([[Funnel.funnelWithinGuarded]]): the combined
     * constraint's segment summary is richer than either single twin's
     * — the fresh in-segment DP plus per-entry MIN-completion DPs
     * whose alive vectors carry the clean-suffix requirement through
@@ -6848,10 +6852,10 @@ object Queries {
     * start at merge time. Gates against w14's oracle VERBATIM. */
   val w15_funnel_within_guarded_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWithinGuardedBucketed(t(spark, dir, "events"),
+      Funnel.funnelWithinGuarded(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id", FunnelStages,
           FunnelWithinMicros, Seq(Some("error"), Some("error")),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w14_funnel_within_guarded.oracle)
 
@@ -6899,7 +6903,7 @@ object Queries {
     })
 
   /** [[w12_funnel_times]] through the SKEW-SAFE segment monoid — the
-    * expansion composes with [[Funnel.funnelBucketed]] for free (same
+    * expansion composes with [[Funnel.funnel]] for free (same
     * expanded stage list, k+1 transition slots per segment), so the
     * quantified bucketed variant gates against w12's oracle
     * VERBATIM. */
@@ -6908,7 +6912,7 @@ object Queries {
       Funnel.funnelTimes(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          bucketSeconds = Some(3600L))
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w12_funnel_times.oracle)
 
@@ -6987,10 +6991,10 @@ object Queries {
     * oracle VERBATIM. */
   val w17_funnel_loop_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w16_funnel_loop.oracle)
 
@@ -7062,7 +7066,7 @@ object Queries {
     })
 
   /** [[w18_funnel_times_range]] through the SKEW-SAFE segment monoid
-    * ([[Funnel.funnelTimesRangeBucketed]]): with a cap the count-delta
+    * ([[Funnel.funnelTimesRange]]): with a cap the count-delta
     * summary is insufficient (a segment's usable absorptions depend on
     * slots already used), so segments carry per-stage capped
     * consumed-time LISTS and the merge concatenates-then-truncates —
@@ -7070,14 +7074,14 @@ object Queries {
     * w18's oracle VERBATIM. */
   val w19_funnel_times_range_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelTimesRangeBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelTimesRange(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 2, 3), ("click", 1, 2), ("purchase", 1, 1)),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w18_funnel_times_range.oracle)
 
-  /** RELUCTANT consume mode ([[Funnel.funnelLoopMode]] with
+  /** RELUCTANT consume mode ([[Funnel.funnelLoop]] with
     * [[Funnel.Reluctant]]) on w16's loop pattern — Flink's DEFAULT
     * loop mode, where each stage consumes EXACTLY its mandatory
     * occurrences (`greedy()` being the opt-in w16 measures): same
@@ -7090,7 +7094,7 @@ object Queries {
     * on a crafted corpus. */
   val w49_funnel_loop_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 2), ("click", 2), ("purchase", 1)),
           Funnel.Reluctant)
@@ -7150,10 +7154,10 @@ object Queries {
     * floor). Gated on w49's oracle VERBATIM. */
   val w49b_funnel_loop_reluctant_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          Funnel.Reluctant, bucketSeconds = Some(3600L))
+          Funnel.Reluctant, Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w49_funnel_loop_reluctant.oracle)
 
@@ -7262,16 +7266,17 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[Funnel.funnelIterativeAuto]] — the iterative machine through
-    * the feasibility router (single array fold below the threshold,
-    * the wall-free sorted fold above it — AUDIT_r16_newops' measured
-    * pair). Routes single at sf0.01; FunnelSpec forces both routes.
+  /** [[Funnel.funnelIterative]] under `Auto()` — the iterative machine
+    * through the feasibility router (single array fold below the
+    * threshold, the wall-free sorted fold above it; measured, the
+    * single fold dies at a 48M-event key where the sorted fold finishes
+    * in 27 s). Routes single at sf0.01; FunnelSpec forces both routes.
     * Gated on w50's oracle VERBATIM. */
   val w55_funnel_iterative_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelIterativeAuto(eventsWithCents(spark, dir), "user_id",
+      Funnel.funnelIterative(eventsWithCents(spark, dir), "user_id",
           "event_type", "ts", "event_id", "v_cents", iterStagesFirst,
-          Funnel.AnchorFirst)
+          Funnel.AnchorFirst, Funnel.Auto())
         .orderBy("user_id"),
     oracle = w50_funnel_iterative_first.oracle)
 
@@ -7368,13 +7373,13 @@ object Queries {
     })
 
   /** [[w53_funnel_where]] through the SKEW-SAFE split
-    * ([[Funnel.funnelWhereBucketed]]): the funnel segment monoid never
+    * ([[Funnel.funnelWhere]]): the funnel segment monoid never
     * read WHAT the advance test is — (exit stage, witnesses) per entry
     * stage summarizes a segment under any event-local predicate.
     * Gated on w53's oracle VERBATIM. */
   val w54_funnel_where_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWhereBucketed(eventsWithCents(spark, dir), "user_id",
+      Funnel.funnelWhere(eventsWithCents(spark, dir), "user_id",
           "ts", "event_id", Seq("event_type", "v_cents"),
           Seq(
             e => e.getField("event_type") === "view" &&
@@ -7382,12 +7387,12 @@ object Queries {
             e => e.getField("event_type") === "click" &&
               e.getField("v_cents") >= 800L,
             e => e.getField("event_type") === "purchase"),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w53_funnel_where.oracle)
 
   /** [[w50_funnel_iterative_first]] through the SKEW-SAFE plan
-    * ([[Funnel.funnelIterativeSorted]]): iterative conditions break
+    * ([[Funnel.funnelIterative]]): iterative conditions break
     * the segment monoid (a segment's effect depends on entry anchors
     * through value comparisons — no O(k) summary), so the skew path
     * is the sort-based fold: one hash exchange, spill-backed
@@ -7395,9 +7400,9 @@ object Queries {
     * wall. Gated on w50's oracle VERBATIM. */
   val w52_funnel_iterative_sorted: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelIterativeSorted(eventsWithCents(spark, dir),
+      Funnel.funnelIterative(eventsWithCents(spark, dir),
           "user_id", "event_type", "ts", "event_id", "v_cents",
-          iterStagesFirst, Funnel.AnchorFirst)
+          iterStagesFirst, Funnel.AnchorFirst, Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w50_funnel_iterative_first.oracle)
 
@@ -7481,7 +7486,7 @@ object Queries {
     })
 
   /** [[w20_funnel_strict]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelPatternBucketed]], 1-hour segments): chains stay
+    * ([[Funnel.funnelPattern]], 1-hour segments): chains stay
     * independent under strict hops, so a segment's effect is linear
     * over the (l, o) entry vector — 2k+1 unit-entry folds, min-merge
     * on first-reach times. Cross-boundary adjacency is sound because
@@ -7489,12 +7494,12 @@ object Queries {
     * against w20's oracle VERBATIM. */
   val w21_funnel_strict_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true),
             Funnel.PatternStage("purchase", strict = true)),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w20_funnel_strict.oracle)
 
@@ -7599,16 +7604,16 @@ object Queries {
     * combinator product. Gated on w24's oracle VERBATIM. */
   val w25_funnel_pattern_product_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
             Funnel.PatternStage("purchase", strict = true)),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w24_funnel_pattern_product.oracle)
 
-  /** [[Funnel.funnelPatternAuto]] — the contiguity-NFA pair through
+  /** [[Funnel.funnelPattern]] — the contiguity-NFA pair through
     * the round-16 feasibility router (the w44 recipe extended to the
     * pattern family): one peak-per-key probe, single NFA fold below
     * [[Funnel.AutoBucketKeyEvents]], the (l, o) segment split above
@@ -7616,11 +7621,12 @@ object Queries {
     * proves them equal. Gated on w24's oracle VERBATIM. */
   val w47_funnel_pattern_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternAuto(t(spark, dir, "events"), "user_id",
+      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)))
+            Funnel.PatternStage("purchase", strict = true)),
+          Funnel.Auto())
         .orderBy("user_id"),
     oracle = w24_funnel_pattern_product.oracle)
 
@@ -7680,34 +7686,34 @@ object Queries {
     })
 
   /** [[w42_funnel_pattern_within]] through the SKEW-SAFE split
-    * ([[Funnel.funnelPatternWithinBucketed]]): fresh product-NFA fold
+    * ([[Funnel.funnelPatternWithin]]): fresh product-NFA fold
     * plus 2k entry folds carrying first-reach times per (stage, l/o)
     * slot; composition applies the deadline once per target against
     * the carried max-start. Gated on w42's oracle VERBATIM. */
   val w43_funnel_pattern_within_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternWithinBucketed(t(spark, dir, "events"),
+      Funnel.funnelPatternWithin(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
             Funnel.PatternStage("purchase", strict = true)),
-          windowMicros = 7200L * 1000000L, bucketSeconds = 3600L)
+          windowMicros = 7200L * 1000000L, route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w42_funnel_pattern_within.oracle)
 
-  /** [[Funnel.funnelPatternWithinAuto]] — w42's product NFA through
+  /** [[Funnel.funnelPatternWithin]] — w42's product NFA through
     * the feasibility router (twins were flat at the 20M power key, so
     * the threshold only guards the 2 GB wall). Routes single at
     * sf0.01; FunnelSpec forces both routes. Gated on w42's oracle
     * VERBATIM. */
   val w48_funnel_pattern_within_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternWithinAuto(t(spark, dir, "events"),
+      Funnel.funnelPatternWithin(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
             Funnel.PatternStage("purchase", strict = true)),
-          windowMicros = 7200L * 1000000L)
+          windowMicros = 7200L * 1000000L, route = Funnel.Auto())
         .orderBy("user_id"),
     oracle = w42_funnel_pattern_within.oracle)
 
@@ -7787,7 +7793,7 @@ object Queries {
         |ORDER BY user_id""".stripMargin))
 
   /** RELUCTANT consume mode × loop-internal contiguity
-    * ([[Funnel.funnelLoopConsecutiveMode]] with [[Funnel.Reluctant]])
+    * ([[Funnel.funnelLoopConsecutive]] with [[Funnel.Reluctant]])
     * on w38's pattern — the consume-mode axis completed on the
     * consecutive machine: the spine and stage_reached are
     * mode-independent (the run's remainder is same-type, so
@@ -7803,7 +7809,7 @@ object Queries {
     * delta is zero). */
   val w56_funnel_loop_consecutive_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutiveMode(t(spark, dir, "events"),
+      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq("view" -> 2, "click" -> 2), Funnel.Reluctant)
         .orderBy("user_id"),
@@ -7863,27 +7869,27 @@ object Queries {
     * segment split. Gated on w56's oracle VERBATIM. */
   val w56b_funnel_loop_consecutive_reluctant_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutiveMode(t(spark, dir, "events"),
+      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq("view" -> 2, "click" -> 2), Funnel.Reluctant,
-          bucketSeconds = Some(3600L))
+          Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w56_funnel_loop_consecutive_reluctant.oracle)
 
-  /** Consume mode THROUGH the auto-router
-    * ([[Funnel.funnelLoopConsecutiveAuto]] with [[Funnel.Reluctant]]):
-    * `maxKeyEvents = 1` forces the above-threshold route, so this row
-    * proves a reluctant call lands on the reluctant BUCKETED twin —
-    * not a silently-greedy one (the round-16 verdict's router/mode
-    * coverage gap). Gated on w56's oracle VERBATIM; FunnelSpec's
-    * consume-mode router test additionally pins the picked route
-    * structurally. */
+  /** Consume mode on the skew-safe route
+    * ([[Funnel.funnelLoopConsecutive]] with [[Funnel.Reluctant]] and
+    * `Bucketed(3600)`, the route an above-threshold `Auto()` resolves
+    * to): this row proves a reluctant call lands on the reluctant
+    * BUCKETED twin — not a silently-greedy one (the round-16 verdict's
+    * router/mode coverage gap). Gated on w56's oracle VERBATIM;
+    * FunnelSpec's consume-mode route test additionally pins the picked
+    * route structurally. */
   val w58_funnel_loop_consecutive_auto_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutiveAuto(t(spark, dir, "events"),
+      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), bucketSeconds = 3600L,
-          maxKeyEvents = 1L, mode = Funnel.Reluctant)
+          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant,
+          Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w56_funnel_loop_consecutive_reluctant.oracle)
 
@@ -7926,16 +7932,16 @@ object Queries {
     })
 
   /** [[w59_funnel_group_times]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelGroupTimesBucketed]]): the segment split never
+    * ([[Funnel.funnelGroupTimes]]): the segment split never
     * reads what the stage list means, only its length. Gates on w59's
     * oracle VERBATIM. */
   val w59b_funnel_group_times_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupTimes(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), times = 2,
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w59_funnel_group_times.oracle)
 
@@ -8126,11 +8132,11 @@ object Queries {
     * twin gates on w71's oracle VERBATIM. */
   val w71b_funnel_group_loop_seam_guard_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w71_funnel_group_loop_seam_guard.oracle)
 
@@ -8171,26 +8177,26 @@ object Queries {
     * argument). Gates on w72's oracle VERBATIM. */
   val w72b_funnel_group_times_range_guarded_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesRangeGuarded(t(spark, dir, "events"),
+      Funnel.funnelGroupTimesRange(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          minTimes = 2, maxTimes = 3, bucketSeconds = Some(3600L))
+          minTimes = 2, maxTimes = 3, route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w72_funnel_group_times_range_guarded.oracle)
 
   /** [[w72_funnel_group_times_range_guarded]] through the AUTO router
-    * ([[Funnel.funnelGroupTimesRangeGuardedAuto]]): the guarded range
+    * ([[Funnel.funnelGroupTimesRange]]): the guarded range
     * rides the measured feasibility routing — below the 24M threshold
     * this is the capped single fold. Gates on w72's oracle VERBATIM
     * (the w68c auto-gate pattern). */
   val w72c_funnel_group_times_range_guarded_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesRangeGuardedAuto(t(spark, dir, "events"),
+      Funnel.funnelGroupTimesRange(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          minTimes = 2, maxTimes = 3)
+          minTimes = 2, maxTimes = 3, route = Funnel.Auto())
         .orderBy("user_id"),
     oracle = w72_funnel_group_times_range_guarded.oracle)
 
@@ -8219,16 +8225,16 @@ object Queries {
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
 
   /** [[w62_funnel_group_loop]] through the TROPICAL segment split
-    * ([[Funnel.funnelGroupLoopBucketed]]): the dominance fold is
+    * ([[Funnel.funnelGroupLoop]]): the dominance fold is
     * max-plus linear, so a segment is a (gain matrix, fresh vector)
     * pair and composition is the tropical matrix product. Gates on
     * w62's oracle VERBATIM. */
   val w62b_funnel_group_loop_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w62_funnel_group_loop.oracle)
 
@@ -8274,7 +8280,7 @@ object Queries {
     })
 
   /** GROUP `oneOrMore` under RELUCTANT consumption
-    * ([[Funnel.funnelGroupLoopMode]], round 18 — closing the r17
+    * ([[Funnel.funnelGroupLoop]], round 18 — closing the r17
     * verdict's consume-mode asymmetry): the match stops at the floor
     * (here `timesOrMore(2)`'s floor of 2), so `reps` is the greedy
     * machine's chain depth CAPPED at 2 — exact by the truncation
@@ -8285,10 +8291,10 @@ object Queries {
     * makes every intermediate depth realizable. */
   val w68_funnel_group_loop_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          Funnel.Reluctant, minTimes = 2)
+          mode = Funnel.Reluctant, minTimes = 2)
         .orderBy("user_id"),
     bench = true,
     oracle = Some(
@@ -8306,24 +8312,25 @@ object Queries {
     * the same function. Gates on w68's oracle VERBATIM. */
   val w68b_funnel_group_loop_reluctant_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          Funnel.Reluctant, bucketSeconds = Some(3600L), minTimes = 2)
+          mode = Funnel.Reluctant, minTimes = 2,
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w68_funnel_group_loop_reluctant.oracle)
 
   /** [[w68_funnel_group_loop_reluctant]] through the AUTO router
-    * ([[Funnel.funnelGroupLoopAuto]] with `mode = Reluctant`): the
+    * ([[Funnel.funnelGroupLoop]] with `mode = Reluctant`): the
     * consume mode rides the feasibility routing — below the threshold
     * this is the capped single fold. Gates on w68's oracle VERBATIM
     * (the j5a/t34a auto-gate pattern). */
   val w68c_funnel_group_loop_reluctant_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopAuto(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          mode = Funnel.Reluctant, minTimes = 2)
+          mode = Funnel.Reluctant, minTimes = 2, route = Funnel.Auto())
         .orderBy("user_id"),
     oracle = w68_funnel_group_loop_reluctant.oracle)
 
@@ -8335,11 +8342,11 @@ object Queries {
     * keeps. */
   val w69_funnel_group_loop_reluctant_consecutive: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoopMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)),
-          Funnel.Reluctant, consecutiveSeams = true, minTimes = 2)
+          consecutiveSeams = true, mode = Funnel.Reluctant, minTimes = 2)
         .orderBy("user_id"),
     oracle = Some {
       val rounds = 16
@@ -8663,7 +8670,7 @@ object Queries {
     })
 
   /** [[w75_funnel_group_matches_range]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelMultiBucketed]]'s monoid over the ceiling
+    * split ([[Funnel.funnelMulti]]'s monoid over the ceiling
     * expansion): the bucketed machine reproduces the witness stream
     * `(n, w)` bit-identically, so the range reading composes onto it
     * unchanged. Gates on w75's oracle VERBATIM. */
@@ -8672,7 +8679,7 @@ object Queries {
       Funnel.funnelGroupMatchesRange(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view", "click"), minTimes = 2, maxTimes = 3,
-          maxMatches = MultiMatchCap, bucketSeconds = Some(3600L))
+          maxMatches = MultiMatchCap, route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w75_funnel_group_matches_range.oracle)
 
@@ -8688,24 +8695,24 @@ object Queries {
           Seq("view", "click"), minTimes = 2, maxTimes = 3,
           maxMatches = MultiMatchCap,
           windowMicros = 432000L * 1000000L, absentType = "error",
-          bucketSeconds = Some(3600L))
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w75b_funnel_group_matches_range_absence.oracle)
 
   /** [[w38_funnel_loop_consecutive]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelLoopConsecutiveBucketed]]): one machine fold
+    * split ([[Funnel.funnelLoopConsecutive]]): one machine fold
     * per entry state (stage × partial-run-count-or-open), composed by
     * table lookup with replace-vs-add merge. Gated on w38's oracle
     * VERBATIM. */
   val w40_funnel_loop_consecutive_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutiveBucketed(t(spark, dir, "events"),
+      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), bucketSeconds = 3600L)
+          Seq("view" -> 2, "click" -> 2), route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w38_funnel_loop_consecutive.oracle)
 
-  /** [[Funnel.funnelLoopConsecutiveAuto]] — w38's consecutive-run
+  /** [[Funnel.funnelLoopConsecutive]] — w38's consecutive-run
     * machine through the feasibility router (this split honestly
     * LOSES ~1.5× on skew, so the default threshold routes single
     * until the 2 GB wall makes the split the only runnable plan).
@@ -8713,9 +8720,9 @@ object Queries {
     * w38's oracle VERBATIM. */
   val w46_funnel_loop_consecutive_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutiveAuto(t(spark, dir, "events"),
+      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
           "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2))
+          Seq("view" -> 2, "click" -> 2), route = Funnel.Auto())
         .orderBy("user_id"),
     oracle = w38_funnel_loop_consecutive.oracle)
 
@@ -8794,7 +8801,7 @@ object Queries {
     })
 
   /** RELUCTANT consume mode × `until` boundary
-    * ([[Funnel.funnelLoopUntilMode]] with [[Funnel.Reluctant]]) on
+    * ([[Funnel.funnelLoopUntil]] with [[Funnel.Reluctant]]) on
     * w31's pattern — the consume-mode product completed across all
     * three loop machines: the until machinery (mid-block close
     * STALLS, open close stops absorption) reads only the pointer and
@@ -8806,7 +8813,7 @@ object Queries {
     * The bucketed twin gates on the same oracle (w57b). */
   val w57_funnel_loop_until_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopUntilMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 1, Some("signup")), ("click", 2, None),
             ("purchase", 1, Some("error"))),
@@ -8888,26 +8895,26 @@ object Queries {
     * doubled-entry split. Gated on w57's oracle VERBATIM. */
   val w57b_funnel_loop_until_reluctant_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopUntilMode(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 1, Some("signup")), ("click", 2, None),
             ("purchase", 1, Some("error"))),
-          Funnel.Reluctant, bucketSeconds = Some(3600L))
+          Funnel.Reluctant, Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w57_funnel_loop_until_reluctant.oracle)
 
   /** [[w31_funnel_loop_until]] through the SKEW-SAFE split
-    * ([[Funnel.funnelLoopUntilBucketed]]): the loop monoid's entry
+    * ([[Funnel.funnelLoopUntil]]): the loop monoid's entry
     * state doubles to (pointer, closed-bit) — 2·(K'+1) slots per
     * segment, count deltas still exact (absorption reads the pointer
     * and the bit, never counts). Gated on w31's oracle VERBATIM. */
   val w32_funnel_loop_until_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopUntilBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq(("view", 1, Some("signup")), ("click", 2, None),
             ("purchase", 1, Some("error"))),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w31_funnel_loop_until.oracle)
 
@@ -8940,30 +8947,31 @@ object Queries {
     })
 
   /** [[w28_funnel_any_count]] through the SKEW-SAFE split
-    * ([[Funnel.funnelAnyCountBucketed]]): the count vector evolves
+    * ([[Funnel.funnelAnyCount]]): the count vector evolves
     * linearly, so a segment summarizes as the (k+1)² unit-triangular
     * product matrix — the cheapest segment summary in the family —
     * and merging is one matrix–vector product. Gated on w28's oracle
     * VERBATIM. */
   val w29_funnel_any_count_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelAnyCountBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelAnyCount(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id", Seq("view", "click", "purchase"),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w28_funnel_any_count.oracle)
 
-  /** [[Funnel.funnelAnyCountAuto]] — the measured-crossover router
+  /** [[Funnel.funnelAnyCount]] — the measured-crossover router
     * (round 15): probe the peak per-key event count once, take the
     * single fold below [[Funnel.AutoBucketKeyEvents]] and the matrix
-    * monoid above it (the single fold's ~2 GB collected-row wall,
-    * AUDIT_r15_cep_crossover). Routes to the single fold at sf0.01;
-    * FunnelSpec forces both routes and proves them equal. Gated on
-    * w28's oracle VERBATIM. */
+    * monoid above it (the single fold's ~2 GB collected-row wall:
+    * alive at 40M events, dead at 48M). Routes to the single fold at
+    * sf0.01; FunnelSpec forces both routes and proves them equal.
+    * Gated on w28's oracle VERBATIM. */
   val w44_funnel_any_count_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelAnyCountAuto(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", Seq("view", "click", "purchase"))
+      Funnel.funnelAnyCount(t(spark, dir, "events"), "user_id",
+          "event_type", "ts", "event_id", Seq("view", "click", "purchase"),
+          Funnel.Auto())
         .orderBy("user_id"),
     oracle = w28_funnel_any_count.oracle)
 
@@ -9057,17 +9065,17 @@ object Queries {
     })
 
   /** [[w26_funnel_matches]] through the SKEW-SAFE segment monoid
-    * ([[Funnel.funnelMultiBucketed]]): the witness-stream reduction
+    * ([[Funnel.funnelMulti]]): the witness-stream reduction
     * makes the summary (advance count, capped witness list) with
     * concat-truncate composition — exact because the trajectory reads
     * the TRUE counter, never the capped list. Gated on w26's oracle
     * VERBATIM. */
   val w27_funnel_matches_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelMultiBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelMulti(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view", "click", "purchase"), maxMatches = MultiMatchCap,
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w26_funnel_matches.oracle)
 
@@ -9133,7 +9141,7 @@ object Queries {
     })
 
   /** [[w73_funnel_matches_absence]] through the SKEW-SAFE segment
-    * monoid (the enumeration rides [[Funnel.funnelMultiBucketed]],
+    * monoid (the enumeration rides [[Funnel.funnelMulti]],
     * w27's machine; span and tail filters are per-match index
     * properties, unchanged by how the witness stream was folded).
     * Gates on w73's oracle VERBATIM. */
@@ -9143,7 +9151,7 @@ object Queries {
           "event_type", "ts", "event_id",
           Seq("view", "click", "purchase"), maxMatches = MultiMatchCap,
           windowMicros = AbsenceWindowUs, absentType = "error",
-          bucketSeconds = Some(3600L))
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w73_funnel_matches_absence.oracle)
 
@@ -9258,14 +9266,14 @@ object Queries {
         |GROUP BY u.user_id ORDER BY user_id""".stripMargin))
 
   /** [[w39_funnel_combinations]] through the SKEW-SAFE matrix-monoid
-    * split ([[Funnel.funnelCombinationsBucketed]] — the w29 machinery
+    * split ([[Funnel.funnelCombinations]] — the w29 machinery
     * with diagonal-2 loop rows). Gated on w39's oracle VERBATIM. */
   val w41_funnel_combinations_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelCombinationsBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelCombinations(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view" -> false, "click" -> true, "purchase" -> false),
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w39_funnel_combinations.oracle)
 
@@ -9327,22 +9335,22 @@ object Queries {
       anchor = None, inclusive = true, cap = MultiMatchCap)))
 
   /** [[w33_funnel_skip_to_last]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelSkipBucketed]]): per-segment entry-bucket scalar
+    * ([[Funnel.funnelSkip]]): per-segment entry-bucket scalar
     * simulations + an internal machine run, carried buckets
     * re-distributed through the entry table, completions re-sorted on
     * (completion, start) before the identical pruning scan. Gated on
     * w33's oracle VERBATIM. */
   val w36_funnel_skip_to_last_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkipBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
           Funnel.SkipToLast(2), maxMatches = MultiMatchCap,
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w33_funnel_skip_to_last.oracle)
 
-  /** [[Funnel.funnelSkipAuto]] — w33's after-match-skip machine
+  /** [[Funnel.funnelSkip]] — w33's after-match-skip machine
     * through the feasibility router: the family where routing matters
     * most (bucketed WON 2.6× at the 20M power key and the single fold
     * dies at ~48M events — before the router the caller had to know
@@ -9350,10 +9358,11 @@ object Queries {
     * routes. Gated on w33's oracle VERBATIM. */
   val w45_funnel_skip_auto: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkipAuto(t(spark, dir, "events"), "user_id",
+      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-          Funnel.SkipToLast(2), maxMatches = MultiMatchCap)
+          Funnel.SkipToLast(2), maxMatches = MultiMatchCap,
+          route = Funnel.Auto())
         .orderBy("user_id", "match_idx"),
     oracle = w33_funnel_skip_to_last.oracle)
 
@@ -9363,11 +9372,11 @@ object Queries {
     * oracle VERBATIM. */
   val w37_funnel_skip_to_next_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkipBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id",
           Seq("view" -> 1, "click" -> 1, "purchase" -> 1),
           Funnel.SkipToNext, maxMatches = MultiMatchCap,
-          bucketSeconds = 3600L)
+          route = Funnel.Bucketed(3600L))
         .orderBy("user_id", "match_idx"),
     oracle = w35_funnel_skip_to_next.oracle)
 
@@ -9415,16 +9424,16 @@ object Queries {
     })
 
   /** [[w10_funnel_guarded]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelGuardedBucketed]], 1-hour segments): the NFA is
+    * ([[Funnel.funnelGuarded]], 1-hour segments): the NFA is
     * a union of independent chains, so a segment's effect is LINEAR
     * over the entry vector in the boolean semiring — k+1 unit-entry
     * folds of O(k) metadata per segment, composed in bucket order.
     * Gates against w10's oracle VERBATIM. */
   val w11_funnel_guarded_bucketed: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGuardedBucketed(t(spark, dir, "events"), "user_id",
+      Funnel.funnelGuarded(t(spark, dir, "events"), "user_id",
           "event_type", "ts", "event_id", FunnelStages,
-          Seq(Some("error"), Some("error")), bucketSeconds = 3600L)
+          Seq(Some("error"), Some("error")), route = Funnel.Bucketed(3600L))
         .orderBy("user_id"),
     oracle = w10_funnel_guarded.oracle)
 

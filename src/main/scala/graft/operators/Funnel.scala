@@ -26,23 +26,147 @@ import org.apache.spark.sql.functions._
  * `sort_array` + `aggregate` over the user's event array, no window
  * function, no self-join per stage (the k-stage SQL formulation costs
  * k user-keyed joins; this costs one agg at any k). Per-user event
- * counts bound the array (sessionized streams are small; a pathological
- * power-user key would need the t23-style bucketed split).
+ * counts bound the array; a pathological power-user key takes the
+ * skew-safe machine through the shape's [[Funnel.Route]].
+ *
+ * Every shape has ONE public entry point, and how it runs is a value:
+ * `route` picks the single fold or the skew-safe machine ([[Funnel.Route]]),
+ * and the loop shapes' `mode` picks greedy or reluctant consumption
+ * ([[Funnel.ConsumeMode]]). The machines behind each entry point are
+ * private; the entry point validates, resolves the route and dispatches.
  */
 object Funnel {
 
+  // -------------------------------------------------------------------
+  // Routing — how a shape runs, kept separate from what it matches
+  // -------------------------------------------------------------------
+
+  /**
+   * How a CEP shape runs. The single fold collects each user's whole
+   * event log into ONE array, and that array is ONE UnsafeRow, which
+   * Spark caps at ~2 GB. The cap is a wall, not a slowdown: measured
+   * with one growing power key, every shape's single fold was alive at
+   * 40M and dead at 48M events of (us, oid, tp) structs, while every
+   * skew-safe twin completed; an earlier run saw single folds fail
+   * (BufferHolder overflow) from ~30M events per key, and at a 50M-event
+   * key they died after 69–159 s while the skew-safe twins finished in
+   * 31–56 s. The wall is in BYTES, so longer type strings move it down.
+   *
+   * The skew-safe machine splits each user's log into `seconds`-wide
+   * time buckets, folds every bucket from every entry state into a
+   * bounded summary (a segment monoid) and merges the summaries in
+   * bucket order: two user-keyed shuffles instead of one, per-group
+   * memory bounded by the bucket width, output bit-identical to the
+   * single fold (FunnelSpec's route-equivalence property; every
+   * `*_bucketed` and `*_auto` query gates on its single-route oracle
+   * verbatim). The
+   * iterative-condition shape has no segment monoid; its skew-safe
+   * machine is a sort-based fold ([[funnelIterative]]).
+   */
+  sealed trait Route
+  /** The single fold: one user-keyed shuffle, the cheapest plan below
+    * the row wall. The default. */
+  case object Single extends Route
+  /** Always the skew-safe machine, with `seconds`-wide segments. */
+  final case class Bucketed(seconds: Long = 3600L) extends Route
+  /** Probe the peak per-key event count and take the skew-safe machine
+    * (with `seconds`-wide segments) above the machine's threshold:
+    * [[AutoBucketKeyEvents]], or [[GroupLoopAutoKeyEvents]] for the
+    * group loops. The probe is EAGER: a count-by-key Spark job runs at
+    * CALL time, before the returned DataFrame is ever executed, and the
+    * probe plus the chosen plan scan `events` twice — stage or persist
+    * `events` first when it is expensive to recompute. Shapes validate
+    * their arguments before the probe runs. */
+  final case class Auto(seconds: Long = 3600L) extends Route
+
+  /** [[Auto]]'s threshold for every machine except the group loops.
+    * The single fold dies at the 40–48M-event row wall ([[Route]]);
+    * below the wall the faster side depends on the shape (the multi
+    * monoid wins from ~20M events and costs ~1.2× below that, the
+    * consecutive-loop split loses ~1.5× at a 20M-event key, the
+    * contiguity NFA's single fold keeps winning, the within-product
+    * pair is flat at 20M), so Auto routes on FEASIBILITY, with ~2.5×
+    * headroom below the wall. */
+  val AutoBucketKeyEvents: Long = 16000000L
+
+  /** [[Auto]]'s threshold for the group loops ([[funnelGroupLoop]] and
+    * the shapes built on it), measured separately: growing one power
+    * key, the group-loop single fold survived 32M events (172 s) and
+    * hit the row wall at 48M, the tropical segment split completed every
+    * size with equal values, and the single fold was the FASTER side at
+    * every surviving size (67.9 vs 84.0 s at 16M, 172 vs 200 s at 32M).
+    * So Auto stays on the single fold to 24M: 1.5× the flat family's
+    * 16M, with 2× margin under the 48M cliff for wider rows. */
+  val GroupLoopAutoKeyEvents: Long = 24000000L
+
+  /** The one routing decision: the bucket width to split by, or None
+    * for the single fold. [[Auto]] runs the only probe in this file —
+    * ONE count-by-key aggregation, metadata-sized result — and routes
+    * bucketed only when the peak per-key event count EXCEEDS
+    * `threshold`. */
+  private[graft] def resolve(route: Route, events: DataFrame,
+      userCol: String, threshold: Long): Option[Long] = route match {
+    case Single => None
+    case Bucketed(s) =>
+      require(s > 0, "need bucket seconds > 0")
+      Some(s)
+    case Auto(s) =>
+      require(s > 0, "need bucket seconds > 0")
+      val row = events.groupBy(col(userCol)).count()
+        .agg(max("count")).head()
+      val peak = if (row.isNullAt(0)) 0L else row.getLong(0)
+      if (peak > threshold) Some(s) else None
+  }
+
+  /** The event columns the typed machines carry: the event type as `tp`. */
+  private def typed(typeCol: String): Seq[(String, Column)] =
+    Seq("tp" -> col(typeCol))
+
+  /** The single fold's input: one row per user, `evs` = the user's
+    * events as `(us, oid, carry…)` structs sorted into the
+    * `(event-time, event_id)` total order. */
+  private def userEvents(events: DataFrame, userCol: String, tsCol: String,
+      orderCol: String, carry: Seq[(String, Column)]): DataFrame =
+    events.groupBy(col(userCol).as("user_id"))
+      .agg(sort_array(collect_list(struct(
+        unix_micros(col(tsCol).cast("timestamp")).as("us") +:
+          col(orderCol).as("oid") +:
+          carry.map { case (n, c) => c.as(n) }: _*))).as("evs"))
+
+  /** The segment split every skew-safe machine shares: each event gets
+    * its time bucket `bkt`, each (user, bkt) group becomes a sorted
+    * `evs` array of `(us, oid, carry…)` structs, and each named summary
+    * is computed from that array. The result has one row per user, with
+    * `segs` = the user's `(bkt, summaries…)` structs in bucket order,
+    * ready for the machine's merge fold. */
+  private def segments(events: DataFrame, userCol: String, tsCol: String,
+      orderCol: String, carry: Seq[(String, Column)], bucketSeconds: Long)(
+      summaries: (String, Column)*): DataFrame =
+    events.select(col(userCol).as("user_id") +:
+        unix_micros(col(tsCol).cast("timestamp")).as("us") +:
+        col(orderCol).as("oid") +: carry.map { case (n, c) => c.as(n) }: _*)
+      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
+      .groupBy("user_id", "bkt")
+      .agg(sort_array(collect_list(struct(col("us") +: col("oid") +:
+        carry.map(c => col(c._1)): _*))).as("evs"))
+      .select(col("user_id") +: col("bkt") +:
+        summaries.map { case (n, c) => c.as(n) }: _*)
+      .groupBy("user_id")
+      .agg(sort_array(collect_list(struct(col("bkt") +:
+        summaries.map(s => col(s._1)): _*))).as("segs"))
+
   /** Per-user funnel progress: `stage_reached` (0..k) and the witness
     * timestamp of each completed stage in unix micros (`ts1_us`…,
-    * NULL when unreached). `stages` is the ordered event-type pattern. */
+    * NULL when unreached). `stages` is the ordered event-type pattern.
+    * The skew-safe route is the greedy fold's segment monoid
+    * ([[whereBucketed]]). */
   def funnel(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, orderCol: String, stages: Seq[String]): DataFrame = {
+      tsCol: String, orderCol: String, stages: Seq[String],
+      route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1, "need at least one stage")
     val init = struct(lit(0).as("s"),
       array_repeat(lit(null).cast("long"), k).as("ts"))
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val folded = aggregate(col("evs"), init, (st, e) =>
       when(st.getField("s") < k &&
           e.getField("tp") === element_at(typedLit(stages), st.getField("s") + 1),
@@ -50,15 +174,18 @@ object Funnel {
           transform(st.getField("ts"), (x, i) =>
             when(i === st.getField("s"), e.getField("us")).otherwise(x)).as("ts")))
         .otherwise(st))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id") +: ExprUtil.bound(folded) { f =>
-        struct(f.getField("s").as("stage_reached") +:
-          (1 to k).map(i =>
-            element_at(f.getField("ts"), i).as(s"ts${i}_us")): _*)
-      }.as("f") +: Nil: _*)
-      .select(col("user_id") +: (col("f.stage_reached") +:
-        (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => greedyBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id") +: ExprUtil.bound(folded) { f =>
+          struct(f.getField("s").as("stage_reached") +:
+            (1 to k).map(i =>
+              element_at(f.getField("ts"), i).as(s"ts${i}_us")): _*)
+        }.as("f") +: Nil: _*)
+        .select(col("user_id") +: (col("f.stage_reached") +:
+          (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -73,25 +200,20 @@ object Funnel {
    * stages of that type, so the quantified pattern is EXACTLY the
    * plain funnel over the EXPANDED stage list — greedy-earliest stays
    * existence-optimal, the fold/monoid machinery is reused wholesale
-   * (pass `bucketSeconds` for the skew-safe segment-monoid variant —
-   * same expansion, [[funnelBucketed]] underneath), and this adapter
-   * only projects the sub-stage results back to full stages:
+   * (every route is [[funnel]]'s over the same expansion), and this
+   * adapter only projects the sub-stage results back to full stages:
    * `stage_reached` counts COMPLETED quantified stages and `ts<j>_us`
    * is the time of stage j's LAST (n_j-th) occurrence.
    */
   def funnelTimes(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String, stages: Seq[(String, Int)],
-      bucketSeconds: Option[Long] = None): DataFrame = {
+      route: Route = Single): DataFrame = {
     require(stages.nonEmpty && stages.forall(_._2 >= 1),
       "need stages with counts >= 1")
     val expanded = stages.flatMap { case (t, n) => Seq.fill(n)(t) }
     val bounds = stages.map(_._2).scanLeft(0)(_ + _).tail
-    val raw = bucketSeconds match {
-      case Some(b) => funnelBucketed(events, userCol, typeCol, tsCol,
-        orderCol, expanded, b)
-      case None => funnel(events, userCol, typeCol, tsCol, orderCol,
-        expanded)
-    }
+    val raw = funnel(events, userCol, typeCol, tsCol, orderCol, expanded,
+      route)
     val full = bounds.map(b => when(col("stage_reached") >= b, 1)
       .otherwise(0)).reduce(_ + _)
     raw.select(col("user_id") +: full.as("stage_reached") +:
@@ -212,19 +334,41 @@ object Funnel {
    *
    * Same scale shape as [[funnel]]: ONE user-keyed shuffle, one
    * expression fold, state = a pointer + 2K slots. Oracle: the w12
-   * chained-pick spine plus one interval COUNT/MAX per stage (w16).
+   * chained-pick spine plus one interval COUNT/MAX per stage (w16);
+   * the skew-safe route is [[loopBucketed]] (w17).
+   *
+   * `mode` picks the consume mode ([[ConsumeMode]]). Under
+   * [[loopRequire]]'s adjacent-stages-differ contract the mode can
+   * never change EXISTENCE — the mandatory pick spine is
+   * mode-independent because a loop absorption can never consume an
+   * event the next stage could pick (types differ), so
+   * `stage_reached` is identical under both modes; what changes is
+   * the MATCH CONTENT, observable as `reps<j>` (greedy: the full
+   * absorbed run; reluctant: exactly `minReps_j` once complete) and
+   * `ts<j>_us` (greedy: the last absorbed occurrence; reluctant: the
+   * `minReps_j`-th pick). This mirrors Flink, where greedy vs
+   * reluctant on non-overlapping adjacent conditions likewise moves
+   * only which events the emitted match CONTAINS. The reluctant
+   * machine is exactly the bounded quantifier at its floor —
+   * `times(m, m)` ([[funnelTimesRange]] with maxReps = minReps):
+   * "stop absorbing at the cap" with cap = m IS "consume as few as
+   * allowed", so the reluctant mode reuses that fold (and its
+   * list-carrying segment monoid on the skew-safe route) rather than
+   * growing a third machine. Gate: greedy ≡ w16, reluctant w49/w49b.
    */
   def funnelLoop(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)]): DataFrame = {
+      tsCol: String, orderCol: String, stages: Seq[(String, Int)],
+      mode: ConsumeMode = Greedy, route: Route = Single): DataFrame = {
     loopRequire(stages)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
-    val folded = aggregate(col("evs"), loopInit(stages, lit(0)),
-      (st, e) => loopStep(st, e, stages))
-    loopOut(stages, folded)(
-      events.groupBy(col(userCol).as("user_id")).agg(evs.as("evs")))
+    if (mode == Reluctant) funnelTimesRange(events, userCol, typeCol,
+      tsCol, orderCol, stages.map { case (tp, m) => (tp, m, m) }, route)
+    else resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => loopBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => loopOut(stages, aggregate(col("evs"),
+          loopInit(stages, lit(0)), (st, e) => loopStep(st, e, stages)))(
+        userEvents(events, userCol, tsCol, orderCol, typed(typeCol)))
+    }
   }
 
   /** Shared validation for the RANGE quantifier (times(m, n)). */
@@ -245,21 +389,23 @@ object Funnel {
    * `times(m, n).greedy()` reading). Same state and shuffle shape as
    * [[funnelLoop]]: the cap is one extra conjunct in the absorb branch
    * (counts never feed the pointer, so every downstream stage is
-   * bit-identical to the unbounded loop's).
+   * bit-identical to the unbounded loop's). Skew-safe route:
+   * [[rangeBucketed]] (w19).
    */
   def funnelTimesRange(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int, Int)]): DataFrame = {
+      stages: Seq[(String, Int, Int)], route: Route = Single): DataFrame = {
     rangeRequire(stages)
     val mstages = stages.map { case (t, m, _) => (t, m) }
     val caps = stages.map(_._3)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
-    val folded = aggregate(col("evs"), loopInit(mstages, lit(0)),
-      (st, e) => loopStep(st, e, mstages, Some(caps)))
-    loopOut(mstages, folded)(
-      events.groupBy(col(userCol).as("user_id")).agg(evs.as("evs")))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => rangeBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => loopOut(mstages, aggregate(col("evs"),
+          loopInit(mstages, lit(0)),
+          (st, e) => loopStep(st, e, mstages, Some(caps))))(
+        userEvents(events, userCol, tsCol, orderCol, typed(typeCol)))
+    }
   }
 
   // -------------------------------------------------------------------
@@ -282,46 +428,7 @@ object Funnel {
   case object Reluctant extends ConsumeMode
 
   /**
-   * [[funnelLoop]] with a SELECTABLE consume mode. Under
-   * [[loopRequire]]'s adjacent-stages-differ contract the mode can
-   * never change EXISTENCE — the mandatory pick spine is
-   * mode-independent because a loop absorption can never consume an
-   * event the next stage could pick (types differ), so
-   * `stage_reached` is identical under both modes; what changes is
-   * the MATCH CONTENT, observable as `reps<j>` (greedy: the full
-   * absorbed run; reluctant: exactly `minReps_j` once complete) and
-   * `ts<j>_us` (greedy: the last absorbed occurrence; reluctant: the
-   * `minReps_j`-th pick). This mirrors Flink, where greedy vs
-   * reluctant on non-overlapping adjacent conditions likewise moves
-   * only which events the emitted match CONTAINS. The reluctant
-   * machine is exactly the bounded quantifier at its floor —
-   * `times(m, m)` ([[funnelTimesRange]] with maxReps = minReps):
-   * "stop absorbing at the cap" with cap = m IS "consume as few as
-   * allowed", so the mode flag reuses that fold (and its
-   * list-carrying segment monoid for the bucketed variant) rather
-   * than growing a third machine. Pass `bucketSeconds` for the
-   * skew-safe twins; gate: greedy ≡ w16 by construction, reluctant
-   * gated by w49.
-   */
-  def funnelLoopMode(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, orderCol: String, stages: Seq[(String, Int)],
-      mode: ConsumeMode, bucketSeconds: Option[Long] = None): DataFrame =
-    (mode, bucketSeconds) match {
-      case (Greedy, None) =>
-        funnelLoop(events, userCol, typeCol, tsCol, orderCol, stages)
-      case (Greedy, Some(b)) =>
-        funnelLoopBucketed(events, userCol, typeCol, tsCol, orderCol,
-          stages, b)
-      case (Reluctant, None) =>
-        funnelTimesRange(events, userCol, typeCol, tsCol, orderCol,
-          stages.map { case (tp, m) => (tp, m, m) })
-      case (Reluctant, Some(b)) =>
-        funnelTimesRangeBucketed(events, userCol, typeCol, tsCol,
-          orderCol, stages.map { case (tp, m) => (tp, m, m) }, b)
-    }
-
-  /**
-   * [[funnelLoop]] for SKEWED keys — the [[funnelBucketed]] segment
+   * [[funnelLoop]] for SKEWED keys — the [[greedyBucketed]] segment
    * monoid extended with the loop counters: a segment's effect from
    * entry pointer `s0` is `(exit pointer, per-stage count DELTAS,
    * per-stage last-consumed times)` — increments depend only on the
@@ -331,23 +438,14 @@ object Funnel {
    * segment, two user-keyed shuffles, per-group memory bounded by the
    * bucket width. Gates on w16's oracle VERBATIM (w17).
    */
-  def funnelLoopBucketed(events: DataFrame, userCol: String,
+  private def loopBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[(String, Int)], bucketSeconds: Long): DataFrame = {
-    loopRequire(stages)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
     val kx = stages.map(_._2).sum
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(kx)), s0 =>
-          aggregate(col("evs"), loopInit(stages, s0),
-            (st, e) => loopStep(st, e, stages))).as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> transform(sequence(lit(0), lit(kx)), s0 =>
+        aggregate(col("evs"), loopInit(stages, s0),
+          (st, e) => loopStep(st, e, stages))))
     val merged = aggregate(col("segs"), loopInit(stages, lit(0)),
       (st, seg) => ExprUtil.bound(
           element_at(seg.getField("f"), st.getField("s") + 1)) { f =>
@@ -356,10 +454,7 @@ object Funnel {
           zip_with(st.getField("l"), f.getField("l"),
             (a, b) => coalesce(b, a)).as("l"))
       })
-    loopOut(stages, merged)(
-      segs.groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("bkt"), col("f"))))
-          .as("segs")))
+    loopOut(stages, merged)(segs)
   }
 
   // -------------------------------------------------------------------
@@ -469,46 +564,35 @@ object Funnel {
    * previous completion index, and the island containing the last
    * event for the trailing partial. Same scale shape as
    * [[funnelLoop]]: ONE user-keyed shuffle, O(K) state.
-   */
-  def funnelLoopConsecutive(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)],
-      reluctant: Boolean = false): DataFrame = {
-    loopRequire(stages)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
-    val folded = aggregate(col("evs"), consecInit(stages),
-      (st, e) => consecStep(st, e, stages, reluctant))
-    consecOut(stages, folded)(
-      events.groupBy(col(userCol).as("user_id")).agg(evs.as("evs")))
-  }
-
-  /**
-   * [[funnelLoopConsecutive]] with a SELECTABLE consume mode — the
-   * [[funnelLoopMode]] axis applied to the consecutive machine: the
-   * run phase (and hence the spine and `stage_reached`) is
+   *
+   * `mode` is the [[funnelLoop]] consume-mode axis on the consecutive
+   * machine: the run phase (and hence the spine and `stage_reached`) is
    * mode-independent because loop absorption can never consume the
    * next stage's pick (adjacent types differ, the run's remainder is
    * same-type); [[Reluctant]] stops consuming at the mandatory block,
    * so `reps<j>` reports `minReps_j` once complete and `ts<j>_us` the
    * block's m-th (last mandatory) occurrence instead of the run's
-   * last absorbed one. Pass `bucketSeconds` for the segment-split
-   * twins (the entry-state machinery is mode-independent: a reluctant
-   * open-phase segment's count delta is simply zero). Gate: greedy ≡
-   * w38 by construction, reluctant gated by w56.
+   * last absorbed one. The mode rides either route: the segment
+   * split's entry-state machinery is mode-independent (a reluctant
+   * open-phase segment's count delta is simply zero), so a reluctant
+   * call on the skew-safe route is the reluctant segment split, never a
+   * silently greedy one. Gates: w38 (greedy), w40 (bucketed), w56/w56b
+   * (reluctant), w58 (reluctant, bucketed route).
    */
-  def funnelLoopConsecutiveMode(events: DataFrame, userCol: String,
+  def funnelLoopConsecutive(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)], mode: ConsumeMode,
-      bucketSeconds: Option[Long] = None): DataFrame =
-    bucketSeconds match {
-      case None => funnelLoopConsecutive(events, userCol, typeCol,
-        tsCol, orderCol, stages, reluctant = mode == Reluctant)
-      case Some(b) => funnelLoopConsecutiveBucketed(events, userCol,
-        typeCol, tsCol, orderCol, stages, b,
-        reluctant = mode == Reluctant)
+      stages: Seq[(String, Int)], mode: ConsumeMode = Greedy,
+      route: Route = Single): DataFrame = {
+    loopRequire(stages)
+    val reluctant = mode == Reluctant
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => consecBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b, reluctant)
+      case None => consecOut(stages, aggregate(col("evs"),
+          consecInit(stages), (st, e) => consecStep(st, e, stages, reluctant)))(
+        userEvents(events, userCol, tsCol, orderCol, typed(typeCol)))
     }
+  }
 
   /** Entry-state table for the consecutive-loop segment split: per
     * stage j, run states with partial count r = 0..m_j-1, then the
@@ -540,12 +624,10 @@ object Funnel {
    * zeros at entry, a machine invariant). Bit-identical to the single
    * fold; gates on w38's oracle VERBATIM (w40).
    */
-  def funnelLoopConsecutiveBucketed(events: DataFrame, userCol: String,
+  private def consecBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[(String, Int)], bucketSeconds: Long,
-      reluctant: Boolean = false): DataFrame = {
-    loopRequire(stages)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
+      reluctant: Boolean): DataFrame = {
     val K = stages.length
     val m = stages.map(_._2)
     val states = consecStates(stages)
@@ -558,10 +640,6 @@ object Funnel {
             .otherwise(element_at(f.getField("c"), jj).cast("int")))
           .otherwise(els)
       }
-    val base_ = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     val summaries = array(states.map { case (j0, r0, open0) =>
       val init = struct(lit(j0).as("j"), lit(open0).as("open"),
         array(stages.indices.map(i =>
@@ -574,10 +652,8 @@ object Funnel {
           f.getField("l").as("l"))
       }
     }: _*)
-    val segs = base_.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"), summaries.as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> summaries)
     val zero = struct(lit(0).as("sid"),
       array_repeat(lit(0L), K).as("c"),
       array_repeat(lit(null).cast("long"), K).as("l"))
@@ -617,10 +693,7 @@ object Funnel {
       struct(j.as("j"), open.as("open"), mg.getField("c").as("c"),
         mg.getField("l").as("l"))
     }
-    consecOut(stages, decoded)(
-      segs.groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("bkt"), col("f"))))
-          .as("segs")))
+    consecOut(stages, decoded)(segs)
   }
 
   // -------------------------------------------------------------------
@@ -716,50 +789,37 @@ object Funnel {
    * accepting, and a partial block is unfinishable); a close while
    * the loop is open only stops absorption — the spine still advances.
    * Output schema identical to [[funnelLoop]]; same ONE user-keyed
-   * shuffle, state = pointer + 2K slots + one boolean.
+   * shuffle, state = pointer + 2K slots + one boolean. Skew-safe
+   * route: [[untilBucketed]] (w32).
+   *
+   * `mode` is the [[funnelLoop]] consume-mode axis on the until-bounded
+   * loop. Reluctant keeps the ENTIRE until machinery — mid-block closes
+   * still stall the pattern (they gate mandatory advances, which both
+   * modes make identically) — and only stops loop absorption, so
+   * `reps<j>` caps at `minReps_j` and `ts<j>_us` is the block's last
+   * mandatory pick. Count deltas stay exact on the skew-safe route (a
+   * reluctant open segment's delta is zero). Gates: w57/w57b.
    */
   def funnelLoopUntil(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String,
       stages: Seq[(String, Int, Option[String])],
-      reluctant: Boolean = false): DataFrame = {
+      mode: ConsumeMode = Greedy, route: Route = Single): DataFrame = {
     untilRequire(stages)
     val mstages = stages.map { case (t, m, _) => (t, m) }
     val untils = stages.map(_._3)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
-    val folded = aggregate(col("evs"),
-      loopUntilInit(mstages, lit(0), lit(false)),
-      (st, e) => loopUntilStep(st, e, mstages, untils, reluctant))
-    loopOut(mstages, folded)(
-      events.groupBy(col(userCol).as("user_id")).agg(evs.as("evs")))
+    val reluctant = mode == Reluctant
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => untilBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b, reluctant)
+      case None => loopOut(mstages, aggregate(col("evs"),
+          loopUntilInit(mstages, lit(0), lit(false)),
+          (st, e) => loopUntilStep(st, e, mstages, untils, reluctant)))(
+        userEvents(events, userCol, tsCol, orderCol, typed(typeCol)))
+    }
   }
 
   /**
-   * [[funnelLoopUntil]] with a SELECTABLE consume mode — the
-   * [[funnelLoopMode]] axis on the until-bounded loop, completing the
-   * consume-mode product across all three loop machines (relaxed w49,
-   * consecutive w56, until w57). Reluctant keeps the ENTIRE until
-   * machinery — mid-block closes still stall the pattern (they gate
-   * mandatory advances, which both modes make identically) — and only
-   * stops loop absorption, so `reps<j>` caps at `minReps_j` and
-   * `ts<j>_us` is the block's last mandatory pick. Pass
-   * `bucketSeconds` for the doubled-entry segment twins (count deltas
-   * stay exact: a reluctant open segment's delta is zero).
-   */
-  def funnelLoopUntilMode(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int, Option[String])], mode: ConsumeMode,
-      bucketSeconds: Option[Long] = None): DataFrame =
-    bucketSeconds match {
-      case None => funnelLoopUntil(events, userCol, typeCol, tsCol,
-        orderCol, stages, reluctant = mode == Reluctant)
-      case Some(b) => funnelLoopUntilBucketed(events, userCol, typeCol,
-        tsCol, orderCol, stages, b, reluctant = mode == Reluctant)
-    }
-
-  /**
-   * [[funnelLoopUntil]] for SKEWED keys — the [[funnelLoopBucketed]]
+   * [[funnelLoopUntil]] for SKEWED keys — the [[loopBucketed]]
    * count-delta segment monoid with the entry state DOUBLED: a
    * segment's effect is a function of (entry pointer, entry
    * closed-bit), so each bucket folds 2·(K'+1) slots and the merge
@@ -767,31 +827,23 @@ object Funnel {
    * read the pointer and the bit, never accumulated counts). Gates on
    * w31's oracle VERBATIM (w32).
    */
-  def funnelLoopUntilBucketed(events: DataFrame, userCol: String,
+  private def untilBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[(String, Int, Option[String])],
-      bucketSeconds: Long, reluctant: Boolean = false): DataFrame = {
-    untilRequire(stages)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
+      bucketSeconds: Long, reluctant: Boolean): DataFrame = {
     val mstages = stages.map { case (t, m, _) => (t, m) }
     val untils = stages.map(_._3)
     val kx = mstages.map(_._2).sum
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     // slot layout: entry = 2*s0 + xBit, for s0 in 0..kx
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" ->
         transform(sequence(lit(0), lit(2 * kx + 1)), entry =>
           aggregate(col("evs"),
             loopUntilInit(mstages,
               ((entry - pmod(entry, lit(2))) / lit(2)).cast("int"),
               pmod(entry, lit(2)) === 1),
             (st, e) => loopUntilStep(st, e, mstages, untils,
-              reluctant))).as("f"))
+              reluctant))))
     val merged = aggregate(col("segs"),
       loopUntilInit(mstages, lit(0), lit(false)),
       (st, seg) => ExprUtil.bound(
@@ -803,14 +855,11 @@ object Funnel {
             (a, b) => coalesce(b, a)).as("l"),
           f.getField("x").as("x"))
       })
-    loopOut(mstages, merged)(
-      segs.groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("bkt"), col("f"))))
-          .as("segs")))
+    loopOut(mstages, merged)(segs)
   }
 
   /** One event's transition of the CAPPED segment fold
-    * ([[funnelTimesRangeBucketed]]). State: the pointer `s` plus, per
+    * ([[rangeBucketed]]). State: the pointer `s` plus, per
     * stage, the ordered LIST of consumed-event times `ll[j]` truncated
     * at the stage's cap — lists, not count deltas, because with a cap
     * a segment's usable absorptions depend on how many slots earlier
@@ -846,7 +895,7 @@ object Funnel {
       array_repeat(typedLit(Seq.empty[Long]), stages.length).as("ll"))
 
   /**
-   * [[funnelTimesRange]] for SKEWED keys — the [[funnelLoopBucketed]]
+   * [[funnelTimesRange]] for SKEWED keys — the [[loopBucketed]]
    * segment monoid with the cap: per-bucket folds precompute the
    * capped consumed-time lists for every entry pointer, and merging
    * concatenates-then-truncates each stage's list at its cap (exact —
@@ -854,26 +903,17 @@ object Funnel {
    * extra state vs the count-delta loop summary is ≤ Σ caps longs per
    * (segment, entry pointer), still bucket-width-bounded.
    */
-  def funnelTimesRangeBucketed(events: DataFrame, userCol: String,
+  private def rangeBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[(String, Int, Int)], bucketSeconds: Long): DataFrame = {
-    rangeRequire(stages)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
     val mstages = stages.map { case (t, m, _) => (t, m) }
     val caps = stages.map(_._3)
     val k = stages.length
     val kx = mstages.map(_._2).sum
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(kx)), s0 =>
-          aggregate(col("evs"), rangeSegInit(mstages, s0),
-            (st, e) => rangeSegStep(st, e, mstages, caps))).as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> transform(sequence(lit(0), lit(kx)), s0 =>
+        aggregate(col("evs"), rangeSegInit(mstages, s0),
+          (st, e) => rangeSegStep(st, e, mstages, caps))))
     val merged = aggregate(col("segs"), rangeSegInit(mstages, lit(0)),
       (st, seg) => ExprUtil.bound(
           element_at(seg.getField("f"), st.getField("s") + 1)) { f =>
@@ -887,10 +927,7 @@ object Funnel {
       transform(merged.getField("ll"), x => size(x).cast("long")).as("c"),
       transform(merged.getField("ll"), x =>
         when(size(x) > 0, element_at(x, -1))).as("l"))
-    loopOut(mstages, asLoop)(
-      segs.groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("bkt"), col("f"))))
-          .as("segs")))
+    loopOut(mstages, asLoop)(segs)
   }
 
   // -------------------------------------------------------------------
@@ -947,27 +984,28 @@ object Funnel {
    * per-user expression fold — state is k nullable longs whatever the
    * event count (the window adds restarts, not state). The oracle
    * replays it as k-1 chained total-order joins with the window
-   * predicate on every hop (w8).
+   * predicate on every hop (w8); skew-safe route: [[withinBucketed]]
+   * (w9).
    */
   def funnelWithin(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String, stages: Seq[String],
-      windowMicros: Long): DataFrame = {
+      windowMicros: Long, route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1 && windowMicros > 0, "need stages and windowMicros > 0")
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val init = array_repeat(lit(null).cast("long"), k)
     val folded = aggregate(col("evs"), init,
       (b, e) => withinStep(b, e, k, stages, windowMicros))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"), withinOut(folded, k).as("f"))
-      .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => withinBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, windowMicros, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"), withinOut(folded, k).as("f"))
+        .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    }
   }
 
   /**
-   * [[funnelWithin]] for SKEWED keys — the [[funnelBucketed]] segment
+   * [[funnelWithin]] for SKEWED keys — the [[greedyBucketed]] segment
    * split carried over to the windowed DP. A segment's effect on the
    * state vector is captured by THREE bounded summaries (the
    * "window-start slot" the unconstrained monoid lacked):
@@ -988,31 +1026,23 @@ object Funnel {
    * width; the merge state is k nullable longs and each segment
    * summary is O(k²) metadata.
    */
-  def funnelWithinBucketed(events: DataFrame, userCol: String,
+  private def withinBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], windowMicros: Long,
       bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    require(k >= 1 && windowMicros > 0 && bucketSeconds > 0,
-      "need stages, windowMicros > 0 and bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     val init = array_repeat(lit(null).cast("long"), k)
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        aggregate(col("evs"), init,
-          (b, e) => withinStep(b, e, k, stages, windowMicros)).as("sdp"),
-        // k == 1 has no crossing chains to summarize — and Spark's
-        // sequence(1, 0) counts DOWN to [1, 0], so the transform must
-        // not run at all (the same descending-sequence trap as
-        // BpeTrain.charsOf)
-        (if (k == 1) array().cast("array<struct<s:int,w:array<bigint>>>")
-         else transform(sequence(lit(1), lit(k - 1).cast("int")),
-           i => foldFrom(col("evs"), i, k, stages))).as("ff"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)(
+      "sdp" -> aggregate(col("evs"), init,
+        (b, e) => withinStep(b, e, k, stages, windowMicros)),
+      // k == 1 has no crossing chains to summarize — and Spark's
+      // sequence(1, 0) counts DOWN to [1, 0], so the transform must
+      // not run at all (the same descending-sequence trap as
+      // BpeTrain.charsOf)
+      "ff" -> (if (k == 1) array().cast("array<struct<s:int,w:array<bigint>>>")
+        else transform(sequence(lit(1), lit(k - 1).cast("int")),
+          i => foldFrom(col("evs"), i, k, stages))))
     val merged = aggregate(col("segs"), init, (b, seg) =>
       array((1 to k).map { j =>
         val fresh = element_at(seg.getField("sdp"), j)
@@ -1026,10 +1056,7 @@ object Funnel {
         }
         greatest((Seq(fresh, carried) ++ extended): _*)
       }: _*))
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(
-        struct(col("bkt"), col("sdp"), col("ff")))).as("segs"))
-      .select(col("user_id"), withinOut(merged, k).as("f"))
+    segs.select(col("user_id"), withinOut(merged, k).as("f"))
       .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
   }
 
@@ -1089,23 +1116,22 @@ object Funnel {
    * count, one user-keyed shuffle. `stage_reached` = the longest
    * stage prefix some clean chain ever reached. The oracle replays it
    * as chained total-order joins with a NOT EXISTS blocker probe on
-   * every hop (w10).
+   * every hop (w10); skew-safe route: [[guardedBucketed]] (w11).
    */
   def funnelGuarded(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String, stages: Seq[String],
-      notBetween: Seq[Option[String]]): DataFrame = {
+      notBetween: Seq[Option[String]], route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1 && notBetween.length == k - 1,
       "need stages and one (optional) blocker per gap")
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val folded = aggregate(col("evs"), guardedInit(k, lit(0)),
       (st, e) => guardedStep(st, e, k, stages, notBetween))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"),
-        guardedOut(folded, k).as("stage_reached"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => guardedBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, notBetween, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"), guardedOut(folded, k).as("stage_reached"))
+    }
   }
 
   /**
@@ -1119,25 +1145,15 @@ object Funnel {
    * segment, composed in bucket order. Gates verbatim on w10's
    * oracle (w11).
    */
-  def funnelGuardedBucketed(events: DataFrame, userCol: String,
+  private def guardedBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], notBetween: Seq[Option[String]],
       bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    require(k >= 1 && notBetween.length == k - 1 && bucketSeconds > 0,
-      "need stages, one (optional) blocker per gap, bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(k)), entry =>
-          aggregate(col("evs"), guardedInit(k, entry),
-            (st, e) => guardedStep(st, e, k, stages, notBetween)))
-          .as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> transform(sequence(lit(0), lit(k)), entry =>
+        aggregate(col("evs"), guardedInit(k, entry),
+          (st, e) => guardedStep(st, e, k, stages, notBetween))))
     // merge state = the same (o, e) pair; F at index entry+1 (entry 0
     // = fresh starts, entry i = unit vector at stage i)
     val zero = struct(array_repeat(lit(false), k).as("o"),
@@ -1158,9 +1174,7 @@ object Funnel {
       }: _*)
       struct(o.as("o"), e.as("e"))
     })
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("f")))).as("segs"))
-      .select(col("user_id"), guardedOut(merged, k).as("stage_reached"))
+    segs.select(col("user_id"), guardedOut(merged, k).as("stage_reached"))
   }
 
   // -------------------------------------------------------------------
@@ -1217,29 +1231,28 @@ object Funnel {
    * (see [[withinGuardedStep]]). `stage_reached` counts stages EVER
    * reached by a clean in-window chain (sticky); `win_start_us` is
    * the latest start among chains reaching it. One user-keyed
-   * shuffle, 2k longs of state. Skew-safe twin:
-   * [[funnelWithinGuardedBucketed]].
+   * shuffle, 2k longs of state. Skew-safe route:
+   * [[withinGuardedBucketed]] (w15).
    */
   def funnelWithinGuarded(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], windowMicros: Long,
-      notBetween: Seq[Option[String]]): DataFrame = {
+      notBetween: Seq[Option[String]], route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1 && windowMicros > 0 && notBetween.length == k - 1,
       "need stages, windowMicros > 0, one (optional) blocker per gap")
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val nulls = array_repeat(lit(null).cast("long"), k)
     val folded = aggregate(col("evs"),
       struct(nulls.as("b"), nulls.as("m")),
       (st, e) => withinGuardedStep(st, e, k, stages, notBetween,
         windowMicros))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"),
-        withinOut(folded.getField("m"), k).as("f"))
-      .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => withinGuardedBucketed(events, userCol, typeCol,
+        tsCol, orderCol, stages, windowMicros, notBetween, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"), withinOut(folded.getField("m"), k).as("f"))
+        .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    }
   }
 
   /** Sentinel "this alive chain's last pick PRECEDES the segment" for
@@ -1249,7 +1262,7 @@ object Funnel {
   private val EnteredBefore = Long.MinValue / 2
 
   /** One event's transition of the ENTRY-SEEDED min-completion DP — the
-    * segment summary [[funnelWithinGuardedBucketed]] needs. For a
+    * segment summary [[withinGuardedBucketed]] needs. For a
     * partial entering the segment at stage `i`, track per stage j:
     * `r[j]` = the MIN last-pick time among chains from the entry
     * currently ALIVE at j (clean tail gap — guard kills null it;
@@ -1309,34 +1322,24 @@ object Funnel {
    * Gates verbatim on w14's oracle (w15); spec proves bucketed ≡
    * plain on random logs at 1-second segments.
    */
-  def funnelWithinGuardedBucketed(events: DataFrame, userCol: String,
+  private def withinGuardedBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], windowMicros: Long,
       notBetween: Seq[Option[String]], bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    require(k >= 1 && windowMicros > 0 && notBetween.length == k - 1 &&
-      bucketSeconds > 0,
-      "need stages, windowMicros > 0, blockers per gap, bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     val nulls = array_repeat(lit(null).cast("long"), k)
     def entryInit(i: Int): Column =
       struct(array((1 to k).map(j =>
         if (j == i) lit(EnteredBefore) else lit(null).cast("long")): _*)
         .as("r"), nulls.as("ev"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        aggregate(col("evs"), struct(nulls.as("b"), nulls.as("m")),
-          (st, e) => withinGuardedStep(st, e, k, stages, notBetween,
-            windowMicros)).as("fresh"),
-        array((1 until k).map(i =>
-          aggregate(col("evs"), entryInit(i),
-            (st, e) => entryMinStep(st, e, k, stages, notBetween))): _*)
-          .as("ent"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)(
+      "fresh" -> aggregate(col("evs"), struct(nulls.as("b"), nulls.as("m")),
+        (st, e) => withinGuardedStep(st, e, k, stages, notBetween,
+          windowMicros)),
+      "ent" -> array((1 until k).map(i =>
+        aggregate(col("evs"), entryInit(i),
+          (st, e) => entryMinStep(st, e, k, stages, notBetween))): _*))
     val merged = aggregate(col("segs"),
       struct(nulls.as("b"), nulls.as("m")), (st, seg) => {
       val b = st.getField("b")
@@ -1369,11 +1372,7 @@ object Funnel {
       }: _*)
       struct(nb.as("b"), nm.as("m"))
     })
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(
-        struct(col("bkt"), col("fresh"), col("ent")))).as("segs"))
-      .select(col("user_id"),
-        withinOut(merged.getField("m"), k).as("f"))
+    segs.select(col("user_id"), withinOut(merged.getField("m"), k).as("f"))
       .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
   }
 
@@ -1507,24 +1506,25 @@ object Funnel {
    * stage j was ACTUALLY matched (NULL when only ever skipped). The
    * oracle replays it as chained total-order joins whose hop
    * predicates are immediate-successor probes (NOT EXISTS an event
-   * strictly between) and immediate-successor blocker probes (w20).
+   * strictly between) and immediate-successor blocker probes (w20);
+   * skew-safe route: [[patternBucketed]] (w21).
    */
   def funnelPattern(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String,
-      stages: Seq[PatternStage]): DataFrame = {
+      stages: Seq[PatternStage], route: Route = Single): DataFrame = {
     patternRequire(stages)
     val k = stages.length
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val folded = aggregate(col("evs"), patternInit(k, lit(0)),
       (st, e) => patternStep(st, e, stages))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id") +:
-        ExprUtil.bound(folded)(patternOut(_, stages)).as("f") +: Nil: _*)
-      .select(col("user_id") +: (col("f.stage_reached") +:
-        (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => patternBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id") +:
+          ExprUtil.bound(folded)(patternOut(_, stages)).as("f") +: Nil: _*)
+        .select(col("user_id") +: (col("f.stage_reached") +:
+          (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    }
   }
 
   /** null-tolerant max (Spark `greatest` skips NULLs); single-arg safe. */
@@ -1618,7 +1618,7 @@ object Funnel {
     }
   }
 
-  /** Entry fold for [[funnelPatternWithinBucketed]]: the l/o NFA with
+  /** Entry fold for [[patternWithinBucketed]]: the l/o NFA with
     * FIRST-REACH times per slot and NO fresh seeding (fresh chains are
     * the fresh fold's job — mixing them in would understate an entry
     * chain's reach times and mis-validate its deadline). `l[j]` = the
@@ -1680,18 +1680,11 @@ object Funnel {
    * dominance survives (the check is monotone in b). Bit-identical to
    * the single fold; gates on w42's oracle VERBATIM (w43).
    */
-  def funnelPatternWithinBucketed(events: DataFrame, userCol: String,
+  private def patternWithinBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[PatternStage], windowMicros: Long,
       bucketSeconds: Long): DataFrame = {
-    patternRequire(stages)
-    require(windowMicros > 0 && bucketSeconds > 0,
-      "need windowMicros > 0 and bucketSeconds > 0")
     val k = stages.length
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     val nulls = array_repeat(lit(null).cast("long"), k)
     def entryInit(slot: Int): Column = { // 1..k = l[slot], k+1..2k = o[slot-k]
       def unit(at: Int) = array((1 to k).map(j =>
@@ -1699,16 +1692,13 @@ object Funnel {
       if (slot <= k) struct(unit(slot).as("l"), nulls.as("o"), nulls.as("m"))
       else struct(nulls.as("l"), unit(slot - k).as("o"), nulls.as("m"))
     }
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        aggregate(col("evs"), patternWithinInit(k),
-          (st, e) => patternWithinStep(st, e, stages, windowMicros))
-          .as("fresh"),
-        array((1 to 2 * k).map(slot =>
-          aggregate(col("evs"), entryInit(slot),
-            (st, e) => patternEntryStep(st, e, stages))): _*).as("ent"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)(
+      "fresh" -> aggregate(col("evs"), patternWithinInit(k),
+        (st, e) => patternWithinStep(st, e, stages, windowMicros)),
+      "ent" -> array((1 to 2 * k).map(slot =>
+        aggregate(col("evs"), entryInit(slot),
+          (st, e) => patternEntryStep(st, e, stages))): _*))
     val merged = aggregate(col("segs"), patternWithinInit(k), (st, seg) => {
       val fresh = seg.getField("fresh")
       def ent(slot: Int) = element_at(seg.getField("ent"), slot)
@@ -1731,10 +1721,7 @@ object Funnel {
             (1 to 2 * k).map(slot => contrib(slot, "m", j)))
         }: _*).as("m"))
     })
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(
-        struct(col("bkt"), col("fresh"), col("ent")))).as("segs"))
-      .select(col("user_id"),
+    segs.select(col("user_id"),
         ExprUtil.bound(merged)(patternWithinOut(_, stages)).as("f"))
       .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
   }
@@ -1752,23 +1739,25 @@ object Funnel {
    * total-order hop joins CARRYING the chain's start, each hop
    * additionally bounded by `start + windowMicros` (the strict /
    * blocker probes unchanged), max-start aggregation per stage.
+   * Skew-safe route: [[patternWithinBucketed]] (w43).
    */
   def funnelPatternWithin(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[PatternStage], windowMicros: Long): DataFrame = {
+      stages: Seq[PatternStage], windowMicros: Long,
+      route: Route = Single): DataFrame = {
     patternRequire(stages)
     require(windowMicros > 0, "need windowMicros > 0")
     val k = stages.length
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val folded = aggregate(col("evs"), patternWithinInit(k),
       (st, e) => patternWithinStep(st, e, stages, windowMicros))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"),
-        ExprUtil.bound(folded)(patternWithinOut(_, stages)).as("f"))
-      .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => patternWithinBucketed(events, userCol, typeCol,
+        tsCol, orderCol, stages, windowMicros, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"),
+          ExprUtil.bound(folded)(patternWithinOut(_, stages)).as("f"))
+        .select(col("user_id"), col("f.stage_reached"), col("f.win_start_us"))
+    }
   }
 
   /**
@@ -1783,23 +1772,14 @@ object Funnel {
    * l bits refer to exactly the previous segment's last event. Gates
    * against w20's oracle VERBATIM (w21).
    */
-  def funnelPatternBucketed(events: DataFrame, userCol: String,
+  private def patternBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[PatternStage], bucketSeconds: Long): DataFrame = {
-    patternRequire(stages)
-    require(bucketSeconds > 0, "bucketSeconds > 0")
     val k = stages.length
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(2 * k)), entry =>
-          aggregate(col("evs"), patternInit(k, entry),
-            (st, e) => patternStep(st, e, stages))).as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> transform(sequence(lit(0), lit(2 * k)), entry =>
+        aggregate(col("evs"), patternInit(k, entry),
+          (st, e) => patternStep(st, e, stages))))
     val zero = struct(array_repeat(lit(false), k).as("l"),
       array_repeat(lit(false), k).as("o"),
       array_repeat(lit(null).cast("long"), k).as("ts"))
@@ -1824,9 +1804,7 @@ object Funnel {
       }: _*)
       struct(nl.as("l"), no.as("o"), nts.as("ts"))
     })
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("f")))).as("segs"))
-      .select(col("user_id") +:
+    segs.select(col("user_id") +:
         ExprUtil.bound(merged)(patternOut(_, stages)).as("f") +: Nil: _*)
       .select(col("user_id") +: (col("f.stage_reached") +:
         (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
@@ -1878,7 +1856,7 @@ object Funnel {
         "machines' kill semantics); use funnelGroupTimesRange (which " +
         "routes the guarded form through the capped dominance machine " +
         "and reports counts without per-copy timestamps — times(n) is " +
-        "the m = n = times range) or funnelGroupLoopMode / " +
+        "the m = n = times range) or funnelGroupLoop / " +
         "funnelGroupTimesOrMore")
     patternRequire(group)
   }
@@ -1913,29 +1891,18 @@ object Funnel {
    * shuffle. Output: `(user_id, reps_completed, ts_r<r>_s<i>_us…)`.
    * Oracle: the w20 chained-join replay over the expanded hop list —
    * strict guards inside copies, none (or all, consecutive) at seams.
+   * Every route is [[funnelPattern]]'s over the expansion (the segment
+   * split never reads what the stage list MEANS, only its length);
+   * w59b gates the bucketed route on w59's oracle verbatim.
    */
   def funnelGroupTimes(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       group: Seq[PatternStage], times: Int,
-      consecutiveSeams: Boolean = false): DataFrame = {
+      consecutiveSeams: Boolean = false, route: Route = Single): DataFrame = {
     groupRequire(group, times)
     groupProject(group, times)(
       funnelPattern(events, userCol, typeCol, tsCol, orderCol,
-        groupExpand(group, times, consecutiveSeams)))
-  }
-
-  /** [[funnelGroupTimes]] for SKEWED keys — [[funnelPatternBucketed]]
-    * over the same expansion (the segment split never reads what the
-    * stage list MEANS, only its length), same projection. Gates on
-    * the single fold's oracle VERBATIM. */
-  def funnelGroupTimesBucketed(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage], times: Int, bucketSeconds: Long,
-      consecutiveSeams: Boolean = false): DataFrame = {
-    groupRequire(group, times)
-    groupProject(group, times)(
-      funnelPatternBucketed(events, userCol, typeCol, tsCol, orderCol,
-        groupExpand(group, times, consecutiveSeams), bucketSeconds))
+        groupExpand(group, times, consecutiveSeams), route))
   }
 
   /** [[funnelGroupTimes]] under Flink's `within(T)` — the time bound
@@ -2137,99 +2104,70 @@ object Funnel {
    * (which events, not just how many) under a span bound,
    * [[funnelGroupMatchesWithin]] filters the canonical enumeration —
    * answer-size-bounded, gated w70.
+   *
+   * `mode` is the consume mode, as on the flat loops. `minTimes` is the
+   * loop's floor (1 = Flink's `oneOrMore`, n = `timesOrMore(n)` — see
+   * [[funnelGroupTimesOrMore]] for the thresholded report) and is read
+   * ONLY under `Reluctant`, where it is the cap the match stops at:
+   * under `Greedy` the fold is uncapped by definition. Under RELUCTANT
+   * consumption the emitted match contains exactly `minTimes`
+   * repetitions once the floor is reachable, so `reps` is
+   * `min(greedy reps, minTimes)` — below the floor the partial progress
+   * shows uncapped (the flat family's "loop progress is observable
+   * before completion" convention). The mode can never change
+   * EXISTENCE (`reps >= m` iff the greedy machine reaches m): the
+   * TRUNCATION LEMMA — a chain's first r' complete repetitions form a
+   * valid chain for every r' ≤ r, under either seam mode, because
+   * dropping a suffix of repetitions never disturbs the seams it keeps
+   * — makes every intermediate count realizable, so capping is exact.
+   *
+   * Per machine: the SINGLE fold threads the cap into the dominance
+   * machine's completion step (the policy point — a completing chain
+   * saturates at the floor); the skew-safe route runs the greedy
+   * tropical split ([[groupLoopBucketed]]) UNCHANGED and caps the
+   * OUTPUT — the cap is min with a constant, which is not max-plus
+   * linear, so capping inside the segments would break the gain-matrix
+   * algebra; by the truncation lemma the two placements compute the
+   * same function (spec-pinned). Auto's threshold here is
+   * [[GroupLoopAutoKeyEvents]]. Gates: w62/w62b (greedy), w68/w68b/w68c
+   * (relaxed, reluctant), w69 (consecutive seams), each against the
+   * enumeration oracle with `LEAST(·, m)`.
    */
   def funnelGroupLoop(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage],
-      consecutiveSeams: Boolean = false): DataFrame = {
+      group: Seq[PatternStage], consecutiveSeams: Boolean = false,
+      mode: ConsumeMode = Greedy, minTimes: Int = 1,
+      route: Route = Single): DataFrame = {
     groupLoopRequire(group)
-    groupLoopFold(events, userCol, typeCol, tsCol, orderCol, group,
-      consecutiveSeams, cap = None)
+    require(minTimes >= 1, "need minTimes >= 1")
+    val cap = if (mode == Reluctant) Some(minTimes.toLong) else None
+    resolve(route, events, userCol, GroupLoopAutoKeyEvents) match {
+      case None => groupLoopFold(events, userCol, typeCol, tsCol, orderCol,
+        group, consecutiveSeams, cap)
+      case Some(b) =>
+        val reps = groupLoopBucketed(events, userCol, typeCol, tsCol,
+          orderCol, group, b, consecutiveSeams)
+        cap.fold(reps)(m => reps.select(col("user_id"),
+          least(col("reps"), lit(m)).as("reps")))
+    }
   }
 
   /** The single-shuffle group-loop fold with an optional completion
     * CAP — greedy at `cap = None`, reluctant at `cap = Some(m)`
-    * ([[funnelGroupLoopMode]]'s policy point). */
+    * ([[funnelGroupLoop]]'s policy point). */
   private def groupLoopFold(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       group: Seq[PatternStage], consecutiveSeams: Boolean,
       cap: Option[Long]): DataFrame = {
     val k = group.length
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val folded = aggregate(col("evs"), groupLoopInit(k, lit(0)),
       (st, e) => groupLoopStep(st, e, group, consecutiveSeams,
         fresh = true, cap = cap))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
+    userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
       .select(col("user_id"),
         ExprUtil.bound(folded)(f => coalesce(
           gmax(Seq(f.getField("bo"), f.getField("bl"))), lit(0L)))
           .as("reps"))
-  }
-
-  /**
-   * [[funnelGroupLoop]] with a SELECTABLE consume mode — closing the
-   * one asymmetry round 17 left: the flat loops ([[funnelLoopMode]]),
-   * their streaming twins, and now the group loops all take
-   * [[ConsumeMode]]. `minTimes` is the loop's floor (1 = Flink's
-   * `oneOrMore`, n = `timesOrMore(n)` — see
-   * [[funnelGroupTimesOrMore]]'s `mode` parameter for the thresholded
-   * report). The floor is read ONLY under `Reluctant` (where it is
-   * the cap the match stops at): under `Greedy` the fold is uncapped
-   * by definition and `minTimes` does not change the output — a
-   * greedy caller who wants the `reps >= minTimes` threshold REPORT
-   * is [[funnelGroupTimesOrMore]], which applies it to this
-   * machine's result.
-   *
-   * Under RELUCTANT consumption the match stops at the floor: the
-   * emitted match contains exactly `minTimes` repetitions once the
-   * floor is reachable, so the `reps` observable is
-   * `min(greedy reps, minTimes)` — below the floor the partial
-   * progress shows uncapped (the flat family's "loop progress is
-   * observable before completion" convention). As with the flat
-   * loops, the mode can never change EXISTENCE (`reps >= m` iff the
-   * greedy machine reaches m): the TRUNCATION LEMMA — a chain's first
-   * r' complete repetitions form a valid chain for every r' ≤ r,
-   * under either seam mode, because dropping a suffix of repetitions
-   * never disturbs the seams it keeps — makes every intermediate
-   * count realizable, so capping is exact, not an approximation.
-   *
-   * Implementation per machine: the SINGLE fold threads the cap into
-   * the dominance machine's completion step (the policy point — a
-   * completing chain saturates at the floor); the BUCKETED twin runs
-   * the greedy tropical split UNCHANGED and caps the OUTPUT — the cap
-   * is min with a constant, which is not max-plus linear, so capping
-   * inside the segments would break the gain-matrix algebra; by the
-   * truncation lemma the two placements compute the same function
-   * (spec-pinned). Gates: w68/w68b/w68c (relaxed), w69 (consecutive
-   * seams), each against the enumeration oracle with `LEAST(·, m)`.
-   */
-  def funnelGroupLoopMode(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage], mode: ConsumeMode,
-      consecutiveSeams: Boolean = false,
-      bucketSeconds: Option[Long] = None,
-      minTimes: Int = 1): DataFrame = {
-    groupLoopRequire(group)
-    require(minTimes >= 1, "need minTimes >= 1")
-    (mode, bucketSeconds) match {
-      case (Greedy, None) =>
-        funnelGroupLoop(events, userCol, typeCol, tsCol, orderCol,
-          group, consecutiveSeams)
-      case (Greedy, Some(b)) =>
-        funnelGroupLoopBucketed(events, userCol, typeCol, tsCol,
-          orderCol, group, b, consecutiveSeams)
-      case (Reluctant, None) =>
-        groupLoopFold(events, userCol, typeCol, tsCol, orderCol, group,
-          consecutiveSeams, cap = Some(minTimes.toLong))
-      case (Reluctant, Some(b)) =>
-        funnelGroupLoopBucketed(events, userCol, typeCol, tsCol,
-            orderCol, group, b, consecutiveSeams)
-          .select(col("user_id"),
-            least(col("reps"), lit(minTimes.toLong)).as("reps"))
-    }
   }
 
   /**
@@ -2251,29 +2189,21 @@ object Funnel {
    * segment's last event IS the global previous event (the w21
    * adjacency argument). Gates on w62's oracle VERBATIM.
    */
-  def funnelGroupLoopBucketed(events: DataFrame, userCol: String,
+  private def groupLoopBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       group: Seq[PatternStage], bucketSeconds: Long,
-      consecutiveSeams: Boolean = false): DataFrame = {
-    groupLoopRequire(group)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
+      consecutiveSeams: Boolean): DataFrame = {
     val k = group.length
     val n = 2 * k + 2
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"),
-        col("tp")))).as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(1), lit(n)), s0 =>
-          groupLoopVec(aggregate(col("evs"), groupLoopInit(k, s0),
-            (st, e) => groupLoopStep(st, e, group, consecutiveSeams,
-              fresh = false)))).as("g"),
-        groupLoopVec(aggregate(col("evs"), groupLoopInit(k, lit(0)),
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)(
+      "g" -> transform(sequence(lit(1), lit(n)), s0 =>
+        groupLoopVec(aggregate(col("evs"), groupLoopInit(k, s0),
           (st, e) => groupLoopStep(st, e, group, consecutiveSeams,
-            fresh = true))).as("f"))
+            fresh = false)))),
+      "f" -> groupLoopVec(aggregate(col("evs"), groupLoopInit(k, lit(0)),
+        (st, e) => groupLoopStep(st, e, group, consecutiveSeams,
+          fresh = true))))
     // init vector: all -inf (null) except bo = 0 (the never-started chain)
     val initVec = transform(sequence(lit(1), lit(n)),
       s => when(s === lit(n), lit(0L)))
@@ -2286,10 +2216,7 @@ object Funnel {
               (vs, grow) => vs + element_at(grow, sp))),
             element_at(sg.getField("f"), sp))))
       })
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("g"),
-        col("f")))).as("segs"))
-      .select(col("user_id"),
+    segs.select(col("user_id"),
         ExprUtil.bound(merged)(v => coalesce(
           gmax(Seq(element_at(v, n - 1), element_at(v, n))), lit(0L)))
           .as("reps"))
@@ -2307,27 +2234,44 @@ object Funnel {
    * Output: `(user_id, reps_completed, matched, ts_r<r>_s<i>_us…)`.
    *
    * A TRAILING seam guard (`notNextAfter` on the group's LAST stage —
-   * the one shape [[groupRequire]] rejects for the expansion) ROUTES
-   * through [[funnelGroupTimesRangeGuarded]] instead (round 19): same
-   * `reps_completed`/`matched` semantics under the loop machines'
-   * kill reading of the guard, but WITHOUT the per-copy timestamp
-   * columns (the dominance machine observes counts, not witnesses) —
-   * the output is exactly `(user_id, reps_completed, matched)`. The
-   * schema difference is deliberate and loud in both scaladocs; no
-   * previously-working call changes shape (the guarded form threw
-   * before this round).
+   * the one shape [[groupRequire]] rejects for the expansion, whose
+   * sticky first-reach reps would count a blocked completion) ROUTES
+   * through the CAPPED DOMINANCE MACHINE instead: [[funnelGroupLoop]]
+   * under `Reluctant` at floor = `maxTimes`, which already implements
+   * the kill semantics (w71), plus the threshold report. The cap
+   * saturates the completion step, exact by the TRUNCATION LEMMA,
+   * whose argument survives the guard — a repetition's guard outcome
+   * is a property of the EVENT STREAM at its completing index (is the
+   * next event the blocker?), not of the chain's suffix, so dropping a
+   * suffix of repetitions never changes the kept prefix's validity.
+   * On the skew-safe route the guarded tropical split runs UNCHANGED —
+   * the kill is a −inf gain coefficient the segment matrices carry
+   * (w71b) — and the cap applies to its output. The guarded REPORT
+   * SHAPE is `(user_id, reps_completed, matched)` — counts, not
+   * witnesses (the dominance machine has no per-copy first-match
+   * times; callers needing witnesses under a guard want the
+   * enumeration family); `reps_completed` = min(max guarded chain
+   * depth, maxTimes), INT like the expansion form's. Auto's threshold
+   * is the machine's: [[GroupLoopAutoKeyEvents]] for the guarded form,
+   * [[AutoBucketKeyEvents]] for the expansion. Gates: w64 (expansion),
+   * w72 / w72b / w72c (guarded: single, bucketed, auto), against the
+   * guarded greedy-earliest enumeration oracle with
+   * `LEAST(·, maxTimes)`.
    */
   def funnelGroupTimesRange(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       group: Seq[PatternStage], minTimes: Int, maxTimes: Int,
-      consecutiveSeams: Boolean = false): DataFrame = {
+      consecutiveSeams: Boolean = false, route: Route = Single): DataFrame = {
     require(minTimes >= 1 && maxTimes >= minTimes,
       "need 1 <= minTimes <= maxTimes")
     if (group.nonEmpty && group.last.notNextAfter.nonEmpty)
-      funnelGroupTimesRangeGuarded(events, userCol, typeCol, tsCol,
-        orderCol, group, minTimes, maxTimes, consecutiveSeams)
+      funnelGroupLoop(events, userCol, typeCol, tsCol, orderCol, group,
+          consecutiveSeams, Reluctant, minTimes = maxTimes, route = route)
+        .select(col("user_id"),
+          col("reps").cast("int").as("reps_completed"),
+          (col("reps") >= lit(minTimes.toLong)).as("matched"))
     else funnelGroupTimes(events, userCol, typeCol, tsCol, orderCol, group,
-        maxTimes, consecutiveSeams)
+        maxTimes, consecutiveSeams, route)
       .withColumn("matched", col("reps_completed") >= minTimes)
       .select(Seq(col("user_id"), col("reps_completed"),
         col("matched")) ++
@@ -2335,97 +2279,21 @@ object Funnel {
           yield col(s"ts_r${r}_s${i}_us")): _*)
   }
 
-  /**
-   * `times(m, n)` on a GROUP whose LAST stage carries a `notNextAfter`
-   * seam guard — the bounded quantifier + trailing guard combination
-   * the stage-list expansion cannot express (its sticky first-reach
-   * reps would count a blocked completion; [[groupRequire]]'s
-   * rejection documents the divergence). The CAPPED DOMINANCE MACHINE
-   * already implements the kill semantics (w71), so the bounded
-   * quantifier is that machine at cap = `maxTimes` plus the threshold
-   * report `matched = reps_completed >= minTimes`: the cap saturates
-   * the completion step, exact by the TRUNCATION LEMMA, whose
-   * argument survives the guard — a repetition's guard outcome is a
-   * property of the EVENT STREAM at its completing index (is the next
-   * event the blocker?), not of the chain's suffix, so dropping a
-   * suffix of repetitions never changes the kept prefix's validity.
-   *
-   * REPORT SHAPE: `(user_id, reps_completed, matched)` — counts, not
-   * witnesses (the dominance machine has no per-copy first-match
-   * times; callers needing witnesses under a guard want the
-   * enumeration family). `reps_completed` = min(max guarded chain
-   * depth, maxTimes), INT like the expansion form's.
-   *
-   * The BUCKETED twin (`bucketSeconds = Some(b)`) runs the guarded
-   * greedy tropical split UNCHANGED — the kill is a −inf gain
-   * coefficient the segment matrices carry (w71b) — and caps the
-   * OUTPUT (min-with-constant is not max-plus linear; the w68b
-   * placement argument makes the two cappings the same function).
-   * Gates: w72 (single) / w72b (bucketed) / w72c (auto router), all
-   * against the guarded greedy-earliest enumeration oracle with
-   * `LEAST(·, maxTimes)`.
-   */
-  def funnelGroupTimesRangeGuarded(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage], minTimes: Int, maxTimes: Int,
-      consecutiveSeams: Boolean = false,
-      bucketSeconds: Option[Long] = None): DataFrame = {
-    require(minTimes >= 1 && maxTimes >= minTimes,
-      "need 1 <= minTimes <= maxTimes")
-    groupLoopRequire(group)
-    val reps = bucketSeconds match {
-      case None =>
-        groupLoopFold(events, userCol, typeCol, tsCol, orderCol, group,
-          consecutiveSeams, cap = Some(maxTimes.toLong))
-      case Some(b) =>
-        funnelGroupLoopBucketed(events, userCol, typeCol, tsCol,
-            orderCol, group, b, consecutiveSeams)
-          .select(col("user_id"),
-            least(col("reps"), lit(maxTimes.toLong)).as("reps"))
-    }
-    reps.select(col("user_id"),
-      col("reps").cast("int").as("reps_completed"),
-      (col("reps") >= lit(minTimes.toLong)).as("matched"))
-  }
-
-  /** [[funnelGroupTimesRangeGuarded]] behind the family's feasibility
-    * router ([[funnelGroupLoopAuto]]'s contract: eager per-key peak
-    * probe or `precomputedPeak`, threshold from the MEASURED
-    * [[GroupLoopAutoKeyEvents]] wall) — below the threshold the
-    * capped single fold, above it the output-capped tropical split. */
-  def funnelGroupTimesRangeGuardedAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage], minTimes: Int, maxTimes: Int,
-      consecutiveSeams: Boolean = false,
-      bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = GroupLoopAutoKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    groupLoopRequire(group) // before the eager probe
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    val b = if (routeBucketed(events, userCol, maxKeyEvents,
-      precomputedPeak)) Some(bucketSeconds) else None
-    funnelGroupTimesRangeGuarded(events, userCol, typeCol, tsCol,
-      orderCol, group, minTimes, maxTimes, consecutiveSeams, b)
-  }
-
   /** Flink CEP's `timesOrMore(n)` on a GROUP — n or more complete
     * traversals: the unbounded dominance machine ([[funnelGroupLoop]])
     * plus the threshold report `matched = reps >= n`. Output:
     * `(user_id, reps, matched)`. Under `mode = Reluctant` the match
-    * stops at the floor ([[funnelGroupLoopMode]]'s contract): `reps`
-    * caps at `minTimes`, so `matched` iff `reps == minTimes` — the
-    * mode moves match CONTENT, never existence. */
+    * stops at the floor: `reps` caps at `minTimes`, so `matched` iff
+    * `reps == minTimes` — the mode moves match CONTENT, never
+    * existence. */
   def funnelGroupTimesOrMore(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       group: Seq[PatternStage], minTimes: Int,
       consecutiveSeams: Boolean = false,
-      mode: ConsumeMode = Greedy): DataFrame = {
-    require(minTimes >= 1, "need minTimes >= 1")
-    funnelGroupLoopMode(events, userCol, typeCol, tsCol, orderCol,
-        group, mode, consecutiveSeams, bucketSeconds = None,
-        minTimes = minTimes)
+      mode: ConsumeMode = Greedy): DataFrame =
+    funnelGroupLoop(events, userCol, typeCol, tsCol, orderCol, group,
+        consecutiveSeams, mode, minTimes)
       .withColumn("matched", col("reps") >= minTimes)
-  }
 
   /** Match ENUMERATION on a GROUP pattern — Flink's
     * `begin(group).times(n)` under AFTER MATCH SKIP PAST LAST EVENT
@@ -2533,7 +2401,7 @@ object Funnel {
    * reading: each match takes as many complete repetitions as the
    * stream allows, up to `maxTimes`), the last enumeration shape the
    * group family lacked — [[funnelGroupMatches]] covers fixed
-   * `times(n)`, [[funnelGroupTimesRangeGuarded]] covers the range as
+   * `times(n)`, [[funnelGroupTimesRange]] covers the range as
    * a counts report; THIS is the range as WITNESSES, which the
    * trailing-absence tail needs (the tail predicate reads each
    * match's own completion time, so a per-match rep count must be
@@ -2571,30 +2439,14 @@ object Funnel {
   def funnelGroupMatchesRange(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       groupTypes: Seq[String], minTimes: Int, maxTimes: Int,
-      maxMatches: Int,
-      bucketSeconds: Option[Long] = None): DataFrame = {
+      maxMatches: Int, route: Route = Single): DataFrame = {
     require(groupTypes.nonEmpty && minTimes >= 1 && maxTimes >= minTimes &&
       maxMatches >= 1,
       "need groupTypes, 1 <= minTimes <= maxTimes and maxMatches >= 1")
     val k = groupTypes.length
     val expanded = Seq.fill(maxTimes)(groupTypes).flatten
-    val capW = maxMatches * expanded.length
-    // the SKEW-SAFE twin: the bucketed segment monoid reproduces the
-    // witness stream (n, w) BIT-IDENTICALLY (the w18 capped-monoid
-    // rule), so the range reading — a pure output projection over the
-    // stream — composes unchanged onto either fold (gated w75c on
-    // w75's oracle VERBATIM)
-    val (g, stream) = bucketSeconds match {
-      case None =>
-        val (evs, folded) = witnessFold(typeCol, tsCol, orderCol,
-          expanded, capW)
-        (events.groupBy(col(userCol).as("user_id")).agg(evs.as("evs")),
-          folded)
-      case Some(b) =>
-        require(b > 0, "need bucketSeconds > 0")
-        witnessFoldBucketed(events, userCol, typeCol, tsCol, orderCol,
-          expanded, capW, b)
-    }
+    val (g, stream) = witnessStream(events, userCol, typeCol, tsCol,
+      orderCol, expanded, maxMatches * expanded.length, route)
     g.select(col("user_id"),
         explode(ExprUtil.bound(stream)(
           multiRangeOut(_, k, minTimes, maxTimes, maxMatches))).as("m"))
@@ -2677,15 +2529,13 @@ object Funnel {
       typeCol: String, tsCol: String, orderCol: String,
       groupTypes: Seq[String], minTimes: Int, maxTimes: Int,
       maxMatches: Int, windowMicros: Long, absentType: String,
-      bucketSeconds: Option[Long] = None)
-      : DataFrame = {
+      route: Route = Single): DataFrame = {
     require(windowMicros > 0, "need windowMicros > 0")
     val k = groupTypes.length
     val endUs = coalesce((maxTimes to 1 by -1).map(r =>
       col(s"ts_r${r}_s${k}_us")): _*)
     val fits = funnelGroupMatchesRange(events, userCol, typeCol, tsCol,
-        orderCol, groupTypes, minTimes, maxTimes, maxMatches,
-        bucketSeconds)
+        orderCol, groupTypes, minTimes, maxTimes, maxMatches, route)
       .withColumn("end_us", endUs)
       .filter(col("end_us") - col("ts_r1_s1_us") <= windowMicros)
     val blockers = events.filter(col(typeCol) === lit(absentType))
@@ -2700,45 +2550,6 @@ object Funnel {
       .withColumn("n_matches",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("user_id")))
-  }
-
-  /** [[funnelGroupLoopAuto]]'s default threshold — MEASURED, not
-    * inherited (round 18, closing the r17 verdict's What's wrong #3):
-    * the r16 wall recipe (grow one power key until the single fold
-    * dies by the BufferHolder row limit) put the group-loop single
-    * fold's death between 32M and 48M events
-    * (`AUDIT_r18_grouploop_wall.json`: 32M survived at 172 s, 48M
-    * raised `single-exceeded-2GB-row-limit`; the tropical segment
-    * split completed every size, values equal where both lived), and
-    * the single fold was the FASTER side at every surviving size
-    * (67.9 vs 84.0 s at 16M, 172 vs 200 s at 32M) — so the router
-    * stays on the single fold to 24M: 1.5× the flat family's
-    * inherited 16M (which was taxing keys the single fold handles
-    * comfortably), with 2× width-variance margin under the measured
-    * 48M cliff (the wall is in BYTES — longer type strings move it
-    * down). */
-  val GroupLoopAutoKeyEvents: Long = 24000000L
-
-  /** [[funnelGroupLoop]]'s auto-router — feasibility routing like the
-    * rest of the family (the single dominance fold dies at the ~2 GB
-    * collected-array wall; the tropical segment split survives it).
-    * Same eager probe / `precomputedPeak` contract as
-    * [[funnelAnyCountAuto]]; threshold pinned by measurement
-    * ([[GroupLoopAutoKeyEvents]]). */
-  def funnelGroupLoopAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      group: Seq[PatternStage], consecutiveSeams: Boolean = false,
-      bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = GroupLoopAutoKeyEvents,
-      precomputedPeak: Option[Long] = None,
-      mode: ConsumeMode = Greedy,
-      minTimes: Int = 1): DataFrame = {
-    groupLoopRequire(group) // before the eager probe
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    val b = if (routeBucketed(events, userCol, maxKeyEvents,
-      precomputedPeak)) Some(bucketSeconds) else None
-    funnelGroupLoopMode(events, userCol, typeCol, tsCol, orderCol,
-      group, mode, consecutiveSeams, b, minTimes)
   }
 
   // -------------------------------------------------------------------
@@ -2782,39 +2593,47 @@ object Funnel {
    * the w18 rule). Emits the FIRST `maxMatches` matches as rows
    * `(user_id, match_idx, n_matches, ts1_us..tsk_us)` with `n_matches`
    * the TRUE (uncapped) total; zero-match users emit nothing. The
-   * oracle replays it as maxMatches×k chained greedy picks (w26).
+   * oracle replays it as maxMatches×k chained greedy picks (w26); the
+   * skew-safe route is [[witnessFoldBucketed]] (w27).
    */
   def funnelMulti(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String, stages: Seq[String],
-      maxMatches: Int): DataFrame = {
+      maxMatches: Int, route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1 && maxMatches >= 1, "need stages and maxMatches >= 1")
-    val (evs, folded) = witnessFold(typeCol, tsCol, orderCol, stages,
-      maxMatches * k)
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"),
-        explode(ExprUtil.bound(folded)(multiOut(_, k, maxMatches))).as("m"))
+    val (g, stream) = witnessStream(events, userCol, typeCol, tsCol,
+      orderCol, stages, maxMatches * k, route)
+    g.select(col("user_id"),
+        explode(ExprUtil.bound(stream)(multiOut(_, k, maxMatches))).as("m"))
       .select(col("user_id") +: col("m.match_idx") +: col("m.n_matches") +:
         (1 to k).map(j => col(s"m.ts${j}_us")): _*)
   }
 
-  /** The witness-stream fold both enumeration entry points share
-    * ([[funnelMulti]]'s machine): the per-user event collection in
-    * (us, oid) order and the single-pass fold into `(n, w)` — `n` the
-    * EXACT total advance count (never capped: it drives the advance
-    * condition and every downstream match count), `w` the witness
-    * list capped at `capW` (it never feeds the advance condition, so
-    * capping cannot change the trajectory — the w18 rule). */
-  private def witnessFold(typeCol: String, tsCol: String,
-      orderCol: String, stages: Seq[String], capW: Int)
-      : (Column, Column) = {
+  /** The witness stream both enumeration entry points read, on the
+    * resolved route: one row per user plus the `(n, w)` column over
+    * it. The skew-safe fold reproduces `(n, w)` BIT-IDENTICALLY (the
+    * w18 capped-monoid rule), so ANY output projection over the stream
+    * composes unchanged onto either fold. */
+  private def witnessStream(events: DataFrame, userCol: String,
+      typeCol: String, tsCol: String, orderCol: String,
+      stages: Seq[String], capW: Int, route: Route): (DataFrame, Column) =
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => witnessFoldBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, capW, b)
+      case None => (userEvents(events, userCol, tsCol, orderCol,
+        typed(typeCol)), witnessFold(stages, capW))
+    }
+
+  /** [[funnelMulti]]'s single-pass fold of the sorted `evs` into
+    * `(n, w)` — `n` the EXACT total advance count (never capped: it
+    * drives the advance condition and every downstream match count),
+    * `w` the witness list capped at `capW` (it never feeds the advance
+    * condition, so capping cannot change the trajectory — the w18
+    * rule). */
+  private def witnessFold(stages: Seq[String], capW: Int): Column = {
     val k = stages.length
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val init = struct(lit(0L).as("n"), array().cast("array<long>").as("w"))
-    val folded = aggregate(col("evs"), init, (st, e) => {
+    aggregate(col("evs"), init, (st, e) => {
       val n = st.getField("n")
       val w = st.getField("w")
       val advT = e.getField("tp") ===
@@ -2824,66 +2643,36 @@ object Funnel {
           .otherwise(w).as("w")))
         .otherwise(st)
     })
-    (evs, folded)
   }
 
-  /**
-   * [[funnelMulti]] for SKEWED keys. The witness-stream reduction
-   * makes the segment monoid trivial: a segment's effect from entry
-   * offset r ∈ 0..k-1 is `(advance count, capped witness list)` under
-   * the advance condition `tp = stages[(r + len) mod k]`, and
-   * composition is counter addition plus concat-truncate of the
-   * witness lists (exact: the trajectory reads the TRUE counter, never
-   * the capped list — the w18 capped-monoid rule). Bit-identical to
-   * the single fold; gates against w26's oracle VERBATIM (w27).
-   */
-  def funnelMultiBucketed(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[String], maxMatches: Int,
-      bucketSeconds: Long): DataFrame = {
-    val k = stages.length
-    require(k >= 1 && maxMatches >= 1 && bucketSeconds > 0,
-      "need stages, maxMatches >= 1 and bucketSeconds > 0")
-    val (g, merged) = witnessFoldBucketed(events, userCol, typeCol,
-      tsCol, orderCol, stages, maxMatches * k, bucketSeconds)
-    g.select(col("user_id"),
-        explode(ExprUtil.bound(merged)(multiOut(_, k, maxMatches))).as("m"))
-      .select(col("user_id") +: col("m.match_idx") +: col("m.n_matches") +:
-        (1 to k).map(j => col(s"m.ts${j}_us")): _*)
-  }
-
-  /** The BUCKETED witness-stream fold ([[funnelMultiBucketed]]'s
-    * segment monoid, shared with the range enumeration's bucketed
-    * twin): per-(user, bucket) folds from every entry offset, composed
-    * by counter addition + concat-truncate — bit-identical `(n, w)` to
-    * the single fold (the w18 capped-monoid rule), so ANY output
-    * projection over the witness stream composes unchanged. */
+  /** [[funnelMulti]] for SKEWED keys. The witness-stream reduction
+    * makes the segment monoid trivial: a segment's effect from entry
+    * offset r ∈ 0..k-1 is `(advance count, capped witness list)` under
+    * the advance condition `tp = stages[(r + len) mod k]`, and
+    * composition is counter addition plus concat-truncate of the
+    * witness lists (exact: the trajectory reads the TRUE counter, never
+    * the capped list — the w18 capped-monoid rule). Bit-identical to
+    * the single fold; gates against w26's oracle VERBATIM (w27), and
+    * the range enumeration's twin against w75's (w75c). */
   private def witnessFoldBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], capW: Int,
       bucketSeconds: Long): (DataFrame, Column) = {
     val k = stages.length
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(k - 1)), r =>
-          aggregate(col("evs"),
-            struct(lit(0L).as("n"), array().cast("array<long>").as("w")),
-            (st, e) => {
-              val n = st.getField("n")
-              val w = st.getField("w")
-              val advT = e.getField("tp") === element_at(typedLit(stages),
-                pmod(r + n, lit(k.toLong)).cast("int") + 1)
-              when(advT, struct((n + 1).as("n"),
-                when(size(w) < capW, concat(w, array(e.getField("us"))))
-                  .otherwise(w).as("w")))
-                .otherwise(st)
-            })).as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> transform(sequence(lit(0), lit(k - 1)), r =>
+        aggregate(col("evs"),
+          struct(lit(0L).as("n"), array().cast("array<long>").as("w")),
+          (st, e) => {
+            val n = st.getField("n")
+            val w = st.getField("w")
+            val advT = e.getField("tp") === element_at(typedLit(stages),
+              pmod(r + n, lit(k.toLong)).cast("int") + 1)
+            when(advT, struct((n + 1).as("n"),
+              when(size(w) < capW, concat(w, array(e.getField("us"))))
+                .otherwise(w).as("w")))
+              .otherwise(st)
+          })))
     val zero = struct(lit(0L).as("n"), array().cast("array<long>").as("w"))
     val merged = aggregate(col("segs"), zero, (st, seg) =>
       ExprUtil.bound(element_at(seg.getField("f"),
@@ -2894,9 +2683,7 @@ object Funnel {
               greatest(lit(capW) - size(st.getField("w")), lit(0))))
             .as("w"))
       })
-    (segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("f")))).as("segs")),
-      merged)
+    (segs, merged)
   }
 
   /**
@@ -2937,7 +2724,7 @@ object Funnel {
    * window or killed by its tail blocker (w70's convention).
    *
    * Scale shape: [[funnelMulti]]'s one user-keyed shuffle (the
-   * tropical segment twin under `bucketSeconds`, w27's), then ONE
+   * segment twin on the skew-safe route, w27's), then ONE
    * LEFT ANTI equi-join of the (maxMatches-bounded) match stream
    * against the blocker events on the user key — the time range rides
    * the equi-join as its post-condition, never a theta-join — and the
@@ -2947,17 +2734,11 @@ object Funnel {
   def funnelMatchesAbsence(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], maxMatches: Int, windowMicros: Long,
-      absentType: String,
-      bucketSeconds: Option[Long] = None): DataFrame = {
+      absentType: String, route: Route = Single): DataFrame = {
     require(windowMicros > 0, "need windowMicros > 0")
     val k = stages.length
-    val matches = bucketSeconds match {
-      case None => funnelMulti(events, userCol, typeCol, tsCol,
-        orderCol, stages, maxMatches)
-      case Some(b) => funnelMultiBucketed(events, userCol, typeCol,
-        tsCol, orderCol, stages, maxMatches, b)
-    }
-    val fits = matches
+    val fits = funnelMulti(events, userCol, typeCol, tsCol, orderCol,
+        stages, maxMatches, route)
       .filter(col(s"ts${k}_us") - col("ts1_us") <= windowMicros)
     val blockers = events.filter(col(typeCol) === lit(absentType))
       .select(col(userCol).as("user_id"),
@@ -3191,13 +2972,15 @@ object Funnel {
    * buckets whose total chain count is bounded by the user's
    * stage-1-type event count (the same O(events-per-user) class as the
    * event array the family already collects; skewed keys take the
-   * bucketed twin; and per-event cost scales with the PENDING branch
-   * count — AUDIT_r15_skew_newops records 885 s single / 343 s
-   * bucketed at a 20M-event power key with ~160 branches pending,
-   * so deep-pending keys want the bucketed twin well before the
-   * 2 GB wall). The strategy is then EXACTLY the [[pruneStep]]
-   * completion-order scan — Flink emits matches as they complete and
-   * prunes live partials against each emission's anchor — FUSED into
+   * skew-safe route, [[skipBucketed]]). Per-event cost scales with the
+   * PENDING branch count, so this is the family where the skew-safe
+   * route pays BEYOND feasibility: measured at a 20M-event power key
+   * with ~160 branches pending, the single fold took 885 s and the
+   * bucketed split 343 s (2.6×), while the single fold still dies at
+   * the 48M row wall ([[Route]]). The strategy is then EXACTLY the
+   * [[pruneStep]] completion-order scan — Flink emits matches as they
+   * complete and prunes live partials against each emission's anchor —
+   * FUSED into
    * the event fold ([[skipStep]]): completions emerge in scan order,
    * so no per-user completion list is ever materialized and the only
    * unbounded state is the pending-branch buckets. ONE user-keyed
@@ -3206,25 +2989,27 @@ object Funnel {
    */
   def funnelSkip(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, orderCol: String, stages: Seq[(String, Int)],
-      skip: SkipStrategy, maxMatches: Int): DataFrame = {
+      skip: SkipStrategy, maxMatches: Int,
+      route: Route = Single): DataFrame = {
     skipRequire(stages, skip, maxMatches)
     val types = expandStages(stages)
     val k = types.length
     val (anchor, inclusive) = skipAnchor(stages, skip)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val init = struct(array(Seq.fill(k - 1)(emptyChains): _*).as("bkt"),
       lit(Long.MinValue).as("mu"), lit(Long.MinValue).as("mo"),
       lit(0L).as("n"), emptyChains.as("out"))
     val folded = aggregate(col("evs"), init,
       skipStep(_, _, types, anchor, inclusive, maxMatches))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"),
-        explode(ExprUtil.bound(folded)(skipOut(_, k))).as("m"))
-      .select(col("user_id") +: col("m.match_idx") +: col("m.n_matches") +:
-        (1 to k).map(j => col(s"m.ts${j}_us")): _*)
+    val out = resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => skipBucketed(events, userCol, typeCol, tsCol,
+        orderCol, types, anchor, inclusive, maxMatches, b)
+      case None => userEvents(events, userCol, tsCol, orderCol,
+          typed(typeCol))
+        .select(col("user_id"),
+          explode(ExprUtil.bound(folded)(skipOut(_, k))).as("m"))
+    }
+    out.select(col("user_id") +: col("m.match_idx") +: col("m.n_matches") +:
+      (1 to k).map(j => col(s"m.ts${j}_us")): _*)
   }
 
   /**
@@ -3245,19 +3030,11 @@ object Funnel {
    * nothing is capped before the sort (chain counts are bounded by
    * per-segment start counts, the same class as the event arrays).
    */
-  def funnelSkipBucketed(events: DataFrame, userCol: String,
+  private def skipBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)], skip: SkipStrategy, maxMatches: Int,
-      bucketSeconds: Long): DataFrame = {
-    skipRequire(stages, skip, maxMatches)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    val types = expandStages(stages)
+      types: Seq[String], anchor: Option[Int], inclusive: Boolean,
+      maxMatches: Int, bucketSeconds: Long): DataFrame = {
     val k = types.length
-    val (anchor, inclusive) = skipAnchor(stages, skip)
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     val initEmpty = struct(
       array(Seq.fill(k - 1)(emptyChains): _*).as("bkt"),
       emptyChains.as("done"))
@@ -3281,10 +3058,8 @@ object Funnel {
         full.getField("bkt").as("part"),
         full.getField("done").as("done"))
     }
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"), segSummary.as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("f" -> segSummary)
     val merged = aggregate(col("segs"), initEmpty, (st, s) => {
       val seg = s.getField("f")
       def entIdx(r: Int) = element_at(seg.getField("ent"), r).getField("idx")
@@ -3307,13 +3082,9 @@ object Funnel {
         element_at(c, -1).getField("oid").as("co"),
         c.as("ch")))),
       x => x.getField("ch"))
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("f")))).as("segs"))
-      .select(col("user_id"), explode(ExprUtil.bound(
-        pruneChains(doneSorted, anchor, inclusive, maxMatches))(
-        skipOut(_, k))).as("m"))
-      .select(col("user_id") +: col("m.match_idx") +: col("m.n_matches") +:
-        (1 to k).map(j => col(s"m.ts${j}_us")): _*)
+    segs.select(col("user_id"), explode(ExprUtil.bound(
+      pruneChains(doneSorted, anchor, inclusive, maxMatches))(
+      skipOut(_, k))).as("m"))
   }
 
   // -------------------------------------------------------------------
@@ -3336,14 +3107,13 @@ object Funnel {
    * be combinatorially LARGE (it is the answer); it overflows Long
    * beyond ~9e18 combinations, long past any enumerable regime.
    * Output: (user_id, n_any) with n_any = cnt[k], 0 included.
+   * Skew-safe route: [[anyCountBucketed]] (w29).
    */
   def funnelAnyCount(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, orderCol: String, stages: Seq[String]): DataFrame = {
+      tsCol: String, orderCol: String, stages: Seq[String],
+      route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1, "need at least one stage")
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val init = array_repeat(lit(0L), k)
     val folded = aggregate(col("evs"), init, (c, e) =>
       array((1 to k).map { j =>
@@ -3353,9 +3123,12 @@ object Funnel {
             element_at(c, j - 1)).otherwise(lit(0L))
         element_at(c, j) + add
       }: _*))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"), element_at(folded, k).as("n_any"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => anyCountBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"), element_at(folded, k).as("n_any"))
+    }
   }
 
   /**
@@ -3367,15 +3140,10 @@ object Funnel {
    * segment. Bit-identical to the single fold; gates on w28's oracle
    * VERBATIM.
    */
-  def funnelAnyCountBucketed(events: DataFrame, userCol: String,
+  private def anyCountBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[String], bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    require(k >= 1 && bucketSeconds > 0, "need stages and bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     // segment summary: fold the homogenized matrix rows — row i of the
     // product matrix = the fold started from unit vector e_i (i = 0 is
     // the constant-1 slot, i.e. fresh combinations)
@@ -3389,11 +3157,8 @@ object Funnel {
           element_at(c, j + 1) + add
         }: _*))
     }
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        array((0 to k).map(foldRow): _*).as("m"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("m" -> array((0 to k).map(foldRow): _*))
     // merged state = homogenized vector [1, cnt1..cntk]
     val zero = array(lit(1L) +: Seq.fill(k)(lit(0L)): _*)
     val merged = aggregate(col("segs"), zero, (v, seg) =>
@@ -3402,9 +3167,7 @@ object Funnel {
             element_at(element_at(seg.getField("m"), i + 1), j + 1))
           .reduce(_ + _)
       }: _*))
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("m")))).as("segs"))
-      .select(col("user_id"), element_at(merged, k + 1).as("n_any"))
+    segs.select(col("user_id"), element_at(merged, k + 1).as("n_any"))
   }
 
   /** Shared step of the combinations path-count: homogenized vector
@@ -3437,21 +3200,21 @@ object Funnel {
    * the path counter: ONE user-keyed shuffle, k+1 longs of state, the
    * count is the answer (enumeration would be the blow-up). `stages`
    * = (type, isCombinationsLoop). Output: (user_id, n_combi), 0
-   * included.
+   * included. Skew-safe route: [[combinationsBucketed]] (w41).
    */
   def funnelCombinations(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Boolean)]): DataFrame = {
+      stages: Seq[(String, Boolean)], route: Route = Single): DataFrame = {
     val k = stages.length
     require(k >= 1, "need at least one stage")
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"))))
     val init = array(lit(1L) +: Seq.fill(k)(lit(0L)): _*)
     val folded = aggregate(col("evs"), init, combiStep(_, _, stages))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id"), element_at(folded, k + 1).as("n_combi"))
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => combinationsBucketed(events, userCol, typeCol, tsCol,
+        orderCol, stages, b)
+      case None => userEvents(events, userCol, tsCol, orderCol, typed(typeCol))
+        .select(col("user_id"), element_at(folded, k + 1).as("n_combi"))
+    }
   }
 
   /**
@@ -3459,28 +3222,20 @@ object Funnel {
    * evolves LINEARLY too (a loop stage's event matrix carries 2 on
    * its diagonal — still integer, still exact), so the segment
    * summary is the same (k+1)×(k+1) product matrix as
-   * [[funnelAnyCountBucketed]]'s. Bit-identical to the single fold;
+   * [[anyCountBucketed]]'s. Bit-identical to the single fold;
    * gates on w39's oracle VERBATIM.
    */
-  def funnelCombinationsBucketed(events: DataFrame, userCol: String,
+  private def combinationsBucketed(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String,
       stages: Seq[(String, Boolean)], bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    require(k >= 1 && bucketSeconds > 0, "need stages and bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id"),
-        unix_micros(col(tsCol).cast("timestamp")).as("us"),
-        col(orderCol).as("oid"), col(typeCol).as("tp"))
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     def foldRow(entry: Int): Column = {
       val init = array((0 to k).map(j =>
         lit(if (j == entry) 1L else 0L)): _*)
       aggregate(col("evs"), init, combiStep(_, _, stages))
     }
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us"), col("oid"), col("tp"))))
-        .as("evs"))
-      .select(col("user_id"), col("bkt"),
-        array((0 to k).map(foldRow): _*).as("m"))
+    val segs = segments(events, userCol, tsCol, orderCol, typed(typeCol),
+      bucketSeconds)("m" -> array((0 to k).map(foldRow): _*))
     val zero = array(lit(1L) +: Seq.fill(k)(lit(0L)): _*)
     val merged = aggregate(col("segs"), zero, (v, seg) =>
       array((0 to k).map { j =>
@@ -3488,177 +3243,7 @@ object Funnel {
             element_at(element_at(seg.getField("m"), i + 1), j + 1))
           .reduce(_ + _)
       }: _*))
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("m")))).as("segs"))
-      .select(col("user_id"), element_at(merged, k + 1).as("n_combi"))
-  }
-
-  /** Default per-key event-count bound above which the auto-routers
-    * pick the segment-monoid twin: the single per-key fold physically
-    * dies at the ~2 GB UnsafeRow limit on the collected event array
-    * (AUDIT_r15_cep_crossover: every pair's single fold is alive at 40M
-    * and dead at 48M events of (us, oid, tp) structs while every
-    * bucketed twin completes; below the wall the winner is
-    * pair-specific — the multi monoid wins from ~20M, the pattern
-    * NFA's single fold keeps winning — so the default routes on
-    * FEASIBILITY with ~2.5× headroom below the wall). */
-  val AutoBucketKeyEvents: Long = 16000000L
-
-  /** Peak per-key event count — ONE count-by-key aggregation (map-side
-    * partial combine, metadata-sized result): the probe every
-    * `*Auto` router pays before choosing a plan. PUBLIC because the
-    * probe is reusable — a pipeline calling SEVERAL routed operators
-    * on the same events table should compute it ONCE (ideally on the
-    * cached/staged table) and pass it to each router via
-    * `precomputedPeak`, instead of paying one aggregation pass per
-    * router call. */
-  def peakKeyEvents(events: DataFrame, userCol: String): Long = {
-    val row = events.groupBy(col(userCol)).count()
-      .agg(max("count")).head()
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
-
-  /** The routing decision shared by every `*Auto` constructor: take
-    * the caller-supplied peak when present, otherwise run
-    * [[peakKeyEvents]] EAGERLY — note this is a full count-by-key
-    * Spark job at CALL time, before (and regardless of whether) the
-    * returned DataFrame is ever executed, and the probe plus the
-    * chosen plan scan `events` twice; callers composing pipelines
-    * should `persist`/stage `events` or pass `precomputedPeak`. */
-  private def routeBucketed(events: DataFrame, userCol: String,
-      maxKeyEvents: Long, precomputedPeak: Option[Long]): Boolean =
-    precomputedPeak.getOrElse(peakKeyEvents(events, userCol)) > maxKeyEvents
-
-  /** [[funnelAnyCount]] with AUTOMATIC skew routing (the j5a
-    * precedent): probe the peak per-key event count, run the single
-    * fold under `maxKeyEvents` and the matrix-monoid split
-    * ([[funnelAnyCountBucketed]]) above it. Values are
-    * plan-independent (the twins are bit-equal), so the router only
-    * moves cost/feasibility. The probe is EAGER — a count-by-key job
-    * runs at call time unless `precomputedPeak` is supplied (compute
-    * it once via [[peakKeyEvents]] when several routed operators
-    * share one events table). */
-  def funnelAnyCountAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[String], bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    // validation BEFORE the eager probe (the asOfTolerance rule): a
-    // bad-stage call must fail with the contract message, not after a
-    // full count-by-key job
-    require(stages.nonEmpty && bucketSeconds > 0,
-      "need stages and bucketSeconds > 0")
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelAnyCountBucketed(events, userCol, typeCol, tsCol, orderCol,
-        stages, bucketSeconds)
-    else funnelAnyCount(events, userCol, typeCol, tsCol, orderCol, stages)
-  }
-
-  /** [[funnelMulti]]'s auto-router — same eager probe (or
-    * `precomputedPeak`), same rationale (the round-14 audit's honest
-    * loss: the multi monoid costs ~1.2× at a 20M-event power key, so
-    * routing on FEASIBILITY rather than a phantom perf crossover is
-    * the correct policy). */
-  def funnelMultiAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[String], maxMatches: Int, bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    require(stages.nonEmpty && maxMatches >= 1 && bucketSeconds > 0,
-      "need stages, maxMatches >= 1 and bucketSeconds > 0")
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelMultiBucketed(events, userCol, typeCol, tsCol, orderCol,
-        stages, maxMatches, bucketSeconds)
-    else funnelMulti(events, userCol, typeCol, tsCol, orderCol, stages,
-      maxMatches)
-  }
-
-  /** [[funnelSkip]]'s auto-router. This is the family where routing
-    * has the most upside BEYOND feasibility: per-event cost scales
-    * with the pending branch count, and the bucketed twin won 2.6× at
-    * a 20M-event power key (AUDIT_r15_skew_newops, 885 → 343 s) while
-    * the single fold provably dies at ~48M events
-    * (AUDIT_r15_cep_crossover) — before this router the caller had to
-    * know both facts. Same eager probe / `precomputedPeak` contract
-    * as [[funnelAnyCountAuto]]; twins bit-equal, so routing only
-    * moves cost/feasibility. */
-  def funnelSkipAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)], skip: SkipStrategy, maxMatches: Int,
-      bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    skipRequire(stages, skip, maxMatches) // before the eager probe
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelSkipBucketed(events, userCol, typeCol, tsCol, orderCol,
-        stages, skip, maxMatches, bucketSeconds)
-    else funnelSkip(events, userCol, typeCol, tsCol, orderCol, stages,
-      skip, maxMatches)
-  }
-
-  /** [[funnelLoopConsecutive]]'s auto-router — feasibility only: the
-    * consecutive segment split honestly LOSES ~1.5× at a 20M power
-    * key (AUDIT_r15_skew_newops), its value being the 2 GB boundary
-    * itself, so the default threshold routes single as long as the
-    * single fold can physically run. Same eager probe /
-    * `precomputedPeak` contract as [[funnelAnyCountAuto]]. */
-  def funnelLoopConsecutiveAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[(String, Int)], bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None,
-      mode: ConsumeMode = Greedy): DataFrame = {
-    loopRequire(stages) // before the eager probe
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    // the mode rides the route orthogonally: both sides of the
-    // feasibility split are mode-selectable ([[funnelLoopConsecutiveMode]]
-    // carries the flag into the single fold AND the bucketed twin), so
-    // a Reluctant call above threshold lands on the reluctant
-    // segment-split twin, not a silently-greedy one
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelLoopConsecutiveMode(events, userCol, typeCol, tsCol,
-        orderCol, stages, mode, Some(bucketSeconds))
-    else funnelLoopConsecutiveMode(events, userCol, typeCol, tsCol,
-      orderCol, stages, mode, None)
-  }
-
-  /** [[funnelPattern]]'s auto-router — feasibility routing over the
-    * contiguity-NFA pair (the single NFA fold kept winning below the
-    * wall in AUDIT_r15_cep_crossover, so the threshold only guards
-    * the 2 GB death). Same eager probe / `precomputedPeak` contract
-    * as [[funnelAnyCountAuto]]. */
-  def funnelPatternAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[PatternStage], bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    patternRequire(stages) // before the eager probe
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelPatternBucketed(events, userCol, typeCol, tsCol, orderCol,
-        stages, bucketSeconds)
-    else funnelPattern(events, userCol, typeCol, tsCol, orderCol, stages)
-  }
-
-  /** [[funnelPatternWithin]]'s auto-router — the product NFA's twins
-    * were flat at the 20M power key (AUDIT_r15_skew_newops), so this
-    * too routes on feasibility. Same eager probe / `precomputedPeak`
-    * contract as [[funnelAnyCountAuto]]. */
-  def funnelPatternWithinAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String,
-      stages: Seq[PatternStage], windowMicros: Long,
-      bucketSeconds: Long = 3600L,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    patternRequire(stages) // before the eager probe
-    require(windowMicros > 0 && bucketSeconds > 0,
-      "need windowMicros > 0 and bucketSeconds > 0")
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelPatternWithinBucketed(events, userCol, typeCol, tsCol,
-        orderCol, stages, windowMicros, bucketSeconds)
-    else funnelPatternWithin(events, userCol, typeCol, tsCol, orderCol,
-      stages, windowMicros)
+    segs.select(col("user_id"), element_at(merged, k + 1).as("n_combi"))
   }
 
   // -------------------------------------------------------------------
@@ -3787,33 +3372,42 @@ object Funnel {
    * fixed-point. Oracle: chained total-order hop joins CARRYING the
    * anchor (first value, or the hop event's own value), the hop
    * predicate `v·den > anchor·num` verbatim, min-time per stage.
+   *
+   * The skew-safe route is the SORT-BASED fold ([[iterativeSorted]]),
+   * not a segment split, so [[Bucketed]]'s `seconds` is unused here;
+   * it hands an RDD to `createDataFrame`, so building it already runs
+   * the scan and the user-keyed shuffle.
+   * Measured with one power key: the single fold dies at a 48M-event
+   * key while the sorted fold completes in 27 s, and the sorted fold
+   * already wins 3.2× at 10M, so [[Auto]]'s 16M threshold errs safe.
+   * Gates: w50/w51 (single), w52 (sorted), w55 (auto).
    */
   def funnelIterative(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String, valCol: String,
-      stages: Seq[IterStage],
-      anchor: IterAnchor = AnchorFirst): DataFrame = {
+      stages: Seq[IterStage], anchor: IterAnchor = AnchorFirst,
+      route: Route = Single): DataFrame = {
     iterRequire(stages)
     val k = stages.length
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us"),
-      col(orderCol).as("oid"), col(typeCol).as("tp"),
-      iterVal(valCol).as("v"))))
     val init = struct(
       array_repeat(lit(null).cast("long"), k).as("d"),
       array_repeat(lit(null).cast("long"), k).as("ts"))
     val folded = aggregate(col("evs"), init,
       (st, e) => iterStep(st, e, stages, anchor == AnchorFirst))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id") +: ExprUtil.bound(folded) { f =>
-        val ts = f.getField("ts")
-        struct((1 to k).map(j =>
-            when(element_at(ts, j).isNotNull, 1).otherwise(0))
-          .reduce(_ + _).as("stage_reached") +:
-          (1 to k).map(j => element_at(ts, j).as(s"ts${j}_us")): _*)
-      }.as("f") +: Nil: _*)
-      .select(col("user_id") +: (col("f.stage_reached") +:
-        (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(_) => iterativeSorted(events, userCol, typeCol, tsCol,
+        orderCol, valCol, stages, anchor)
+      case None => userEvents(events, userCol, tsCol, orderCol,
+          typed(typeCol) :+ ("v" -> iterVal(valCol)))
+        .select(col("user_id") +: ExprUtil.bound(folded) { f =>
+          val ts = f.getField("ts")
+          struct((1 to k).map(j =>
+              when(element_at(ts, j).isNotNull, 1).otherwise(0))
+            .reduce(_ + _).as("stage_reached") +:
+            (1 to k).map(j => element_at(ts, j).as(s"ts${j}_us")): _*)
+        }.as("f") +: Nil: _*)
+        .select(col("user_id") +: (col("f.stage_reached") +:
+          (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    }
   }
 
   /**
@@ -3837,11 +3431,9 @@ object Funnel {
    * integer ops in the same total order (spec-asserted; gated on the
    * same oracle VERBATIM).
    */
-  def funnelIterativeSorted(events: DataFrame, userCol: String,
+  private def iterativeSorted(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, orderCol: String, valCol: String,
-      stages: Seq[IterStage], anchor: IterAnchor = AnchorFirst,
-      numPartitions: Int = 0): DataFrame = {
-    iterRequire(stages)
+      stages: Seq[IterStage], anchor: IterAnchor): DataFrame = {
     val k = stages.length
     val spark = events.sparkSession
     // oid keeps the order column's NATIVE type: the array fold's
@@ -3852,10 +3444,8 @@ object Funnel {
       unix_micros(col(tsCol).cast("timestamp")).as("us"),
       col(orderCol).as("oid"),
       col(typeCol).as("tp"), iterVal(valCol).as("v"))
-    val parted =
-      (if (numPartitions > 0) base.repartition(numPartitions, col("user_id"))
-       else base.repartition(col("user_id")))
-        .sortWithinPartitions("user_id", "us", "oid")
+    val parted = base.repartition(col("user_id"))
+      .sortWithinPartitions("user_id", "us", "oid")
     val userType = base.schema("user_id").dataType
     val outSchema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("user_id", userType) +:
@@ -3906,29 +3496,6 @@ object Funnel {
       }
     }
     spark.createDataFrame(folded, outSchema)
-  }
-
-  /** [[funnelIterative]]'s auto-router — the family rule applied to
-    * the iterative machine, whose skew twin is the SORT-BASED fold
-    * rather than a segment monoid: below `maxKeyEvents` take the
-    * single array fold (cheapest at ordinary key sizes), above it the
-    * sorted fold, which has no ~2 GB collected-row wall
-    * (AUDIT_r16_newops: single dies at a 48M-event key, sorted
-    * completes in 27 s — and already wins 3.2× at 10M, so the
-    * threshold errs safe). Same eager probe / `precomputedPeak`
-    * contract as [[funnelAnyCountAuto]]. */
-  def funnelIterativeAuto(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, orderCol: String, valCol: String,
-      stages: Seq[IterStage], anchor: IterAnchor = AnchorFirst,
-      numPartitions: Int = 0,
-      maxKeyEvents: Long = AutoBucketKeyEvents,
-      precomputedPeak: Option[Long] = None): DataFrame = {
-    iterRequire(stages) // before the eager probe
-    if (routeBucketed(events, userCol, maxKeyEvents, precomputedPeak))
-      funnelIterativeSorted(events, userCol, typeCol, tsCol, orderCol,
-        valCol, stages, anchor, numPartitions)
-    else funnelIterative(events, userCol, typeCol, tsCol, orderCol,
-      valCol, stages, anchor)
   }
 
   /**
@@ -4015,19 +3582,15 @@ object Funnel {
    * keeps the collected array narrow. Output identical to [[funnel]]:
    * `(user_id, stage_reached, ts1_us..tsk_us)`. Oracle: the w12
    * chained greedy row_number-1 picks with each hop's WHERE spelling
-   * the same predicate.
+   * the same predicate; skew-safe route: [[whereBucketed]] (w54).
    */
   def funnelWhere(events: DataFrame, userCol: String, tsCol: String,
       orderCol: String, carryCols: Seq[String],
-      stages: Seq[Column => Column]): DataFrame = {
+      stages: Seq[Column => Column], route: Route = Single): DataFrame = {
     val k = stages.length
     whereRequire(carryCols, stages)
     val init = struct(lit(0).as("s"),
       array_repeat(lit(null).cast("long"), k).as("ts"))
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol).cast("timestamp")).as("us") +:
-        col(orderCol).as("oid") +:
-        carryCols.map(c => col(c).as(c)): _*)))
     val folded = aggregate(col("evs"), init, (st, e) =>
       when(st.getField("s") < k && whereAdv(st.getField("s"), e, stages),
         struct((st.getField("s") + 1).as("s"),
@@ -4035,19 +3598,23 @@ object Funnel {
             when(i === st.getField("s"), e.getField("us")).otherwise(x))
             .as("ts")))
         .otherwise(st))
-    events.groupBy(col(userCol).as("user_id"))
-      .agg(evs.as("evs"))
-      .select(col("user_id") +: ExprUtil.bound(folded) { f =>
-        struct(f.getField("s").as("stage_reached") +:
-          (1 to k).map(i =>
-            element_at(f.getField("ts"), i).as(s"ts${i}_us")): _*)
-      }.as("f") +: Nil: _*)
-      .select(col("user_id") +: (col("f.stage_reached") +:
-        (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    resolve(route, events, userCol, AutoBucketKeyEvents) match {
+      case Some(b) => whereBucketed(events, userCol, tsCol, orderCol,
+        carryCols, stages, b)
+      case None => userEvents(events, userCol, tsCol, orderCol,
+          carryCols.map(c => c -> col(c)))
+        .select(col("user_id") +: ExprUtil.bound(folded) { f =>
+          struct(f.getField("s").as("stage_reached") +:
+            (1 to k).map(i =>
+              element_at(f.getField("ts"), i).as(s"ts${i}_us")): _*)
+        }.as("f") +: Nil: _*)
+        .select(col("user_id") +: (col("f.stage_reached") +:
+          (1 to k).map(i => col(s"f.ts${i}_us"))): _*)
+    }
   }
 
   /**
-   * [[funnelWhere]] for SKEWED keys — [[funnelBucketed]]'s segment
+   * [[funnelWhere]] for SKEWED keys — [[greedyBucketed]]'s segment
    * monoid verbatim: the monoid argument never used WHAT the advance
    * test is, only that it is a function of (event, stage), which a
    * per-stage predicate still is — a segment's effect from any entry
@@ -4055,16 +3622,10 @@ object Funnel {
    * Bit-identical to the single fold (spec-asserted); gated on w53's
    * oracle VERBATIM (w54).
    */
-  def funnelWhereBucketed(events: DataFrame, userCol: String,
+  private def whereBucketed(events: DataFrame, userCol: String,
       tsCol: String, orderCol: String, carryCols: Seq[String],
       stages: Seq[Column => Column], bucketSeconds: Long): DataFrame = {
     val k = stages.length
-    whereRequire(carryCols, stages)
-    require(bucketSeconds > 0, "need bucketSeconds > 0")
-    val base = events.select(col(userCol).as("user_id") +:
-        unix_micros(col(tsCol).cast("timestamp")).as("us") +:
-        col(orderCol).as("oid") +: carryCols.map(c => col(c).as(c)): _*)
-      .withColumn("bkt", expr(s"us div ${bucketSeconds * 1000000L}"))
     def foldFromWhere(evs: Column, entry: Column): Column =
       aggregate(evs,
         struct(entry.as("s"), array().cast("array<long>").as("w")),
@@ -4073,12 +3634,10 @@ object Funnel {
           struct((st.getField("s") + 1).as("s"),
             concat(st.getField("w"), array(e.getField("us"))).as("w")))
           .otherwise(st))
-    val segs = base.groupBy("user_id", "bkt")
-      .agg(sort_array(collect_list(struct(col("us") +: col("oid") +:
-        carryCols.map(col): _*))).as("evs"))
-      .select(col("user_id"), col("bkt"),
-        transform(sequence(lit(0), lit(k)),
-          s => foldFromWhere(col("evs"), s)).as("f"))
+    val segs = segments(events, userCol, tsCol, orderCol,
+      carryCols.map(c => c -> col(c)), bucketSeconds)(
+      "f" -> transform(sequence(lit(0), lit(k)),
+        s => foldFromWhere(col("evs"), s)))
     val zero = struct(lit(0).as("s"), array().cast("array<long>").as("w"))
     val merged = aggregate(col("segs"), zero, (st, seg) =>
       struct(
@@ -4087,9 +3646,7 @@ object Funnel {
         concat(st.getField("w"),
           element_at(seg.getField("f"), st.getField("s") + 1).getField("w"))
           .as("w")))
-    segs.groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("bkt"), col("f")))).as("segs"))
-      .select(col("user_id") +: ExprUtil.bound(merged) { r =>
+    segs.select(col("user_id") +: ExprUtil.bound(merged) { r =>
         struct(r.getField("s").as("stage_reached") +:
           (1 to k).map(i =>
             when(size(r.getField("w")) >= i, element_at(r.getField("w"), i))
@@ -4100,11 +3657,11 @@ object Funnel {
   }
 
   /** The greedy stage fold from an ARBITRARY entry stage, over a sorted
-    * event array — the segment building block [[funnelWithinBucketed]]
+    * event array — the segment building block [[withinBucketed]]
     * composes its crossing-chain summaries from. Witnesses are the
     * event times of the stages advanced WITHIN this fold, in order.
     * (The plain bucketed funnel now shares the predicate family's
-    * generalization of this fold instead — see [[funnelBucketed]].) */
+    * generalization of this fold instead — see [[greedyBucketed]].) */
   private def foldFrom(evs: Column, entry: Column, k: Int,
       stages: Seq[String]): Column =
     aggregate(evs,
@@ -4122,13 +3679,9 @@ object Funnel {
    * buckets, each bucket folds independently, and the per-bucket
    * results merge in bucket order.
    *
-   * "Blow" is literal, not rhetorical: a key's whole event log becomes
-   * ONE UnsafeRow under `collect_list`, and Spark's row limit is 2 GB —
-   * measured at ~30M+ events/key every single-fold variant in the
-   * family FAILS (BufferHolder overflow) while the bucketed twins
-   * complete (AUDIT_r13_skew_funnel.json: 50M-event key, single folds
-   * die after 69–159 s, bucketed 31–56 s). Past that boundary the
-   * segment monoid is the only correct plan, not an optimization.
+   * "Blow" is literal, not rhetorical: past the ~2 GB row wall
+   * ([[Route]]) the segment monoid is the only correct plan, not an
+   * optimization.
    *
    * What makes the split CORRECT is that the greedy fold is a MONOID
    * under function composition: a segment's effect is fully described
@@ -4140,21 +3693,20 @@ object Funnel {
    * user-keyed shuffles instead of one, per-group memory bounded by
    * the bucket width instead of the user's lifetime.
    *
-   * Since round 16 this DELEGATES to [[funnelWhereBucketed]] — the
+   * Since round 16 this DELEGATES to [[whereBucketed]] — the
    * segment monoid never read what the advance test is, so the typed
    * family is the predicate family at `e.tp === stage` (one shared
    * implementation instead of two byte-similar copies); the columns
    * are renamed to the family's internal names first, which also
    * makes caller-name collisions with us/oid/bkt impossible here.
    */
-  def funnelBucketed(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, orderCol: String, stages: Seq[String],
+  private def greedyBucketed(events: DataFrame, userCol: String,
+      typeCol: String, tsCol: String, orderCol: String, stages: Seq[String],
       bucketSeconds: Long): DataFrame = {
-    require(stages.nonEmpty, "need at least one stage")
     val prepared = events.select(col(userCol).as("__u"),
       col(tsCol).as("__ts"), col(orderCol).as("__oid"),
       col(typeCol).as("tp"))
-    funnelWhereBucketed(prepared, "__u", "__ts", "__oid", Seq("tp"),
+    whereBucketed(prepared, "__u", "__ts", "__oid", Seq("tp"),
       stages.map(t => (e: Column) => e.getField("tp") === lit(t)),
       bucketSeconds)
   }

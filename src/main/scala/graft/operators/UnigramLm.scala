@@ -379,9 +379,13 @@ object UnigramLm {
         distinctWords.repartition(viterbiPartitions(spark, n)))
       .getOrElse(distinctWords).as[String]
       .map { w =>
+        // the maxWordLen cut and the fallback walk count CODE POINTS,
+        // as training's cut does: a non-BMP character is one
+        // character, never two lone surrogates
         val s =
-          if (w.length > maxWord)
-            w.map(c => b.value.getOrElse(c.toString, unk)).sum
+          if (w.codePointCount(0, w.length) > maxWord)
+            w.codePoints().toArray.map(cp =>
+              b.value.getOrElse(new String(Character.toChars(cp)), unk)).sum
           else viterbi(w, b.value, maxPiece, Some(unk))
             .map(pc => b.value.getOrElse(pc, unk)).sum
         (w, s)
@@ -420,9 +424,11 @@ object UnigramLm {
     val enc = knownWords.map(n =>
         distinctWords.repartition(viterbiPartitions(spark, n)))
       .getOrElse(distinctWords).as[String]
-      .map(w => (w,
-        if (w.length > maxWord) w.length.toLong
-        else viterbi(w, b.value, maxPiece, Some(unk)).length.toLong))
+      .map { w =>
+        val cps = w.codePointCount(0, w.length) // docScores' cut
+        (w, if (cps > maxWord) cps.toLong
+          else viterbi(w, b.value, maxPiece, Some(unk)).length.toLong)
+      }
       .toDF("w", "n_pieces")
     BpeTrain.boundedProbeJoin(
         docs.select(col(idCol).as("id"),

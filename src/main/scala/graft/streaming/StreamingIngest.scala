@@ -1583,13 +1583,24 @@ object StreamingIngest {
 
   /** The streaming looping-quantifier funnel over an events stream —
     * the [[streamingFunnel]] plumbing with [[updateFunnelLoop]]'s
-    * state machine. */
+    * state machine; [[graft.operators.Funnel.funnelLoop]]'s streaming
+    * twin, `mode` included. Reluctant reuses the batch reduction
+    * verbatim: the minimal loop is the bounded quantifier at its floor
+    * (`times(m, m)`), so the reluctant stream IS
+    * [[streamingFunnelTimesRange]] with cap = minReps — no third state
+    * machine. */
   def streamingFunnelLoop(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int)], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] = {
+      matchRetentionMs: Long = Long.MaxValue,
+      mode: graft.operators.Funnel.ConsumeMode =
+        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
     import spark.implicits._
     graft.operators.Funnel.loopRequire(stages)
-    events
+    if (mode == graft.operators.Funnel.Reluctant)
+      streamingFunnelTimesRange(spark, events,
+        stages.map { case (t, m) => (t, m, m) }, watermark,
+        matchRetentionMs)
+    else events
       .withWatermark("ts", watermark)
       .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
         col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
@@ -1599,27 +1610,6 @@ object StreamingIngest {
         GroupStateTimeout.EventTimeTimeout)(
         updateFunnelLoop(stages.toIndexedSeq, matchRetentionMs))
   }
-
-  /** [[streamingFunnelLoop]] with a SELECTABLE consume mode —
-    * [[graft.operators.Funnel.funnelLoopMode]]'s streaming twin.
-    * Reluctant reuses the batch reduction verbatim: the minimal loop
-    * is the bounded quantifier at its floor (`times(m, m)`), so the
-    * reluctant stream IS [[streamingFunnelTimesRange]] with cap =
-    * minReps — no third state machine, exactly as the batch side
-    * reuses [[graft.operators.Funnel.funnelTimesRange]]'s fold. */
-  def streamingFunnelLoopMode(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)],
-      mode: graft.operators.Funnel.ConsumeMode, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] =
-    mode match {
-      case graft.operators.Funnel.Greedy =>
-        streamingFunnelLoop(spark, events, stages, watermark,
-          matchRetentionMs)
-      case graft.operators.Funnel.Reluctant =>
-        streamingFunnelTimesRange(spark, events,
-          stages.map { case (t, m) => (t, m, m) }, watermark,
-          matchRetentionMs)
-    }
 
   final case class FunnelConsecState(j: Int, open: Boolean, c: Seq[Long],
       l: Seq[Long], pending: Seq[(Long, Long, String)])
@@ -1706,21 +1696,13 @@ object StreamingIngest {
 
   /** The streaming consecutive-loop funnel over an events stream — the
     * [[streamingFunnel]] plumbing with [[updateFunnelConsecutive]]'s
-    * run machine. */
+    * run machine; [[graft.operators.Funnel.funnelLoopConsecutive]]'s
+    * streaming twin, `mode` included: reluctant is one dead absorb
+    * branch in the open phase, run machine and spine mode-independent. */
   def streamingFunnelConsecutive(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)],
-      watermark: String): Dataset[FunnelLoopUpdate] =
-    streamingFunnelConsecutiveMode(spark, events, stages,
-      graft.operators.Funnel.Greedy, watermark)
-
-  /** [[streamingFunnelConsecutive]] with a SELECTABLE consume mode —
-    * [[graft.operators.Funnel.funnelLoopConsecutiveMode]]'s streaming
-    * twin: one dead absorb branch in [[updateFunnelConsecutive]]'s
-    * open phase, run machine and spine mode-independent. */
-  def streamingFunnelConsecutiveMode(spark: SparkSession,
-      events: DataFrame, stages: Seq[(String, Int)],
-      mode: graft.operators.Funnel.ConsumeMode,
-      watermark: String): Dataset[FunnelLoopUpdate] = {
+      stages: Seq[(String, Int)], watermark: String,
+      mode: graft.operators.Funnel.ConsumeMode =
+        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
     import spark.implicits._
     graft.operators.Funnel.loopRequire(stages)
     events
@@ -1842,21 +1824,15 @@ object StreamingIngest {
 
   /** The streaming loop-until funnel over an events stream — the
     * [[streamingFunnelLoop]] plumbing with [[updateFunnelLoopUntil]]'s
-    * closed-bit state machine. */
+    * closed-bit state machine; [[graft.operators.Funnel.funnelLoopUntil]]'s
+    * streaming twin, `mode` included: absorption is the one dead
+    * branch, the until close/stall machinery (pointer + bit) is
+    * mode-independent. */
   def streamingFunnelLoopUntil(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int, Option[String])], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] =
-    streamingFunnelLoopUntilMode(spark, events, stages,
-      graft.operators.Funnel.Greedy, watermark, matchRetentionMs)
-
-  /** [[streamingFunnelLoopUntil]] with a SELECTABLE consume mode —
-    * [[graft.operators.Funnel.funnelLoopUntilMode]]'s streaming twin:
-    * absorption is the one dead branch; the until close/stall
-    * machinery (pointer + bit) is mode-independent. */
-  def streamingFunnelLoopUntilMode(spark: SparkSession,
-      events: DataFrame, stages: Seq[(String, Int, Option[String])],
-      mode: graft.operators.Funnel.ConsumeMode, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] = {
+      matchRetentionMs: Long = Long.MaxValue,
+      mode: graft.operators.Funnel.ConsumeMode =
+        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
     import spark.implicits._
     graft.operators.Funnel.untilRequire(stages)
     events
@@ -2163,26 +2139,17 @@ object StreamingIngest {
 
   /** The streaming group-loop funnel over an events stream — the
     * [[streamingFunnel]] plumbing with [[updateFunnelGroupLoop]]'s
-    * dominance machine. */
-  def streamingFunnelGroupLoop(spark: SparkSession, events: DataFrame,
-      group: Seq[graft.operators.Funnel.PatternStage], watermark: String,
-      consecutiveSeams: Boolean = false)
-      : Dataset[FunnelGroupLoopUpdate] =
-    streamingFunnelGroupLoopMode(spark, events, group,
-      graft.operators.Funnel.Greedy, watermark, consecutiveSeams)
-
-  /** [[streamingFunnelGroupLoop]] with a SELECTABLE consume mode —
-    * [[graft.operators.Funnel.funnelGroupLoopMode]]'s streaming twin:
-    * reluctant caps [[updateFunnelGroupLoop]]'s completion step at
-    * `minTimes` (the SAME policy point as the batch fold), so the
-    * streamed `reps` saturates at the floor while partial progress
+    * dominance machine; [[graft.operators.Funnel.funnelGroupLoop]]'s
+    * streaming twin, `mode` included: reluctant caps the completion
+    * step at `minTimes` (the SAME policy point as the batch fold), so
+    * the streamed `reps` saturates at the floor while partial progress
     * below it stays observable — stream ≡ batch by construction,
     * StreamingSpec-pinned across out-of-order waves. */
-  def streamingFunnelGroupLoopMode(spark: SparkSession,
-      events: DataFrame,
-      group: Seq[graft.operators.Funnel.PatternStage],
-      mode: graft.operators.Funnel.ConsumeMode, watermark: String,
-      consecutiveSeams: Boolean = false, minTimes: Int = 1)
+  def streamingFunnelGroupLoop(spark: SparkSession, events: DataFrame,
+      group: Seq[graft.operators.Funnel.PatternStage], watermark: String,
+      consecutiveSeams: Boolean = false,
+      mode: graft.operators.Funnel.ConsumeMode =
+        graft.operators.Funnel.Greedy, minTimes: Int = 1)
       : Dataset[FunnelGroupLoopUpdate] = {
     import spark.implicits._
     graft.operators.Funnel.groupLoopRequire(group)
@@ -2235,7 +2202,8 @@ object StreamingIngest {
   }
 
   /** Streaming twin of the GUARDED bounded range ([[graft.operators
-    * .Funnel.funnelGroupTimesRangeGuarded]]) — the batch composition
+    * .Funnel.funnelGroupTimesRange]] with a trailing seam guard) — the
+    * batch composition
     * verbatim: the CAPPED streaming dominance machine at cap =
     * `maxTimes` (the loop state machine carries the trailing seam
     * kill and the completion-step saturation) plus the threshold
@@ -2247,8 +2215,8 @@ object StreamingIngest {
       consecutiveSeams: Boolean = false): DataFrame = {
     require(minTimes >= 1 && maxTimes >= minTimes,
       "need 1 <= minTimes <= maxTimes")
-    streamingFunnelGroupLoopMode(spark, events, group,
-        graft.operators.Funnel.Reluctant, watermark, consecutiveSeams,
+    streamingFunnelGroupLoop(spark, events, group, watermark,
+        consecutiveSeams, graft.operators.Funnel.Reluctant,
         minTimes = maxTimes)
       .select(col("user_id"),
         col("reps").cast("int").as("reps_completed"),
@@ -2266,8 +2234,8 @@ object StreamingIngest {
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): DataFrame = {
     require(minTimes >= 1, "need minTimes >= 1")
-    streamingFunnelGroupLoopMode(spark, events, group, mode, watermark,
-        consecutiveSeams, minTimes)
+    streamingFunnelGroupLoop(spark, events, group, watermark,
+        consecutiveSeams, mode, minTimes)
       .withColumn("matched", col("reps") >= minTimes)
   }
 

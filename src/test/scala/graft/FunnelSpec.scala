@@ -11,6 +11,8 @@ class FunnelSpec extends SparkSpec {
   private def ts(s: Int) = Timestamp.valueOf(f"2026-01-01 00:00:$s%02d")
   private val us0 = ts(0).getTime * 1000L
   private def tsUs(s: Int): Long = us0 + s * 1000000L
+  private def routeOf(bucket: Option[Long]): Funnel.Route =
+    bucket.fold[Funnel.Route](Funnel.Single)(Funnel.Bucketed(_))
 
   /**
    * True iff the plan behind `df` contains an Aggregate whose GROUPING
@@ -137,12 +139,14 @@ class FunnelSpec extends SparkSpec {
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
     val single = Funnel.funnel(df, "user_id", "event_type", "ts", "event_id",
       stages).orderBy("user_id").collect()
-    val bucketed = Funnel.funnelBucketed(df, "user_id", "event_type", "ts",
-      "event_id", stages, bucketSeconds = 1L).orderBy("user_id").collect()
+    val bucketed = Funnel.funnel(df, "user_id", "event_type", "ts",
+      "event_id", stages, route = Funnel.Bucketed(1L))
+      .orderBy("user_id").collect()
     assert(bucketed === single)
     // and the degenerate one-bucket case is the single fold trivially
-    val coarse = Funnel.funnelBucketed(df, "user_id", "event_type", "ts",
-      "event_id", stages, bucketSeconds = 86400L).orderBy("user_id").collect()
+    val coarse = Funnel.funnel(df, "user_id", "event_type", "ts",
+      "event_id", stages, route = Funnel.Bucketed(86400L))
+      .orderBy("user_id").collect()
     assert(coarse === single)
   }
 
@@ -247,12 +251,12 @@ class FunnelSpec extends SparkSpec {
       "event_id", stages, W).orderBy("user_id").collect()
     // 1-second buckets: chains cross MANY segment boundaries, windows
     // expire mid-segment-chain, carried starts extend across segments
-    val bucketed = Funnel.funnelWithinBucketed(df, "user_id", "event_type",
-      "ts", "event_id", stages, W, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelWithin(df, "user_id", "event_type",
+      "ts", "event_id", stages, W, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect()
     assert(bucketed === single)
-    val coarse = Funnel.funnelWithinBucketed(df, "user_id", "event_type",
-      "ts", "event_id", stages, W, bucketSeconds = 86400L)
+    val coarse = Funnel.funnelWithin(df, "user_id", "event_type",
+      "ts", "event_id", stages, W, route = Funnel.Bucketed(86400L))
       .orderBy("user_id").collect()
     assert(coarse === single)
   }
@@ -332,12 +336,13 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_ == 3))
     val single = Funnel.funnelGuarded(df, "user_id", "event_type", "ts",
       "event_id", stages, nb).orderBy("user_id").collect()
-    val bucketed = Funnel.funnelGuardedBucketed(df, "user_id",
-      "event_type", "ts", "event_id", stages, nb, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelGuarded(df, "user_id",
+      "event_type", "ts", "event_id", stages, nb, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect()
     assert(bucketed === single)
-    val coarse = Funnel.funnelGuardedBucketed(df, "user_id",
-      "event_type", "ts", "event_id", stages, nb, bucketSeconds = 86400L)
+    val coarse = Funnel.funnelGuarded(df, "user_id",
+      "event_type", "ts", "event_id", stages, nb,
+      route = Funnel.Bucketed(86400L))
       .orderBy("user_id").collect()
     assert(coarse === single)
   }
@@ -374,7 +379,7 @@ class FunnelSpec extends SparkSpec {
     val single = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
       "event_id", stages).orderBy("user_id").collect()
     val bucketed = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
-      "event_id", stages, bucketSeconds = Some(1L))
+      "event_id", stages, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect()
     assert(bucketed === single)
   }
@@ -458,11 +463,13 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_._1 == 3)) // generator reaches completion
     assert(expected.values.exists(v => v._2.head > 1)) // loops really absorb
     val singleRows = single.orderBy("user_id").collect()
-    val bucketed = Funnel.funnelLoopBucketed(df, "user_id", "event_type",
-      "ts", "event_id", stages, bucketSeconds = 1L).orderBy("user_id").collect()
+    val bucketed = Funnel.funnelLoop(df, "user_id", "event_type",
+      "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+      .orderBy("user_id").collect()
     assert(bucketed === singleRows)
-    val coarse = Funnel.funnelLoopBucketed(df, "user_id", "event_type",
-      "ts", "event_id", stages, bucketSeconds = 86400L).orderBy("user_id").collect()
+    val coarse = Funnel.funnelLoop(df, "user_id", "event_type",
+      "ts", "event_id", stages, route = Funnel.Bucketed(86400L))
+      .orderBy("user_id").collect()
     assert(coarse === singleRows)
   }
 
@@ -539,12 +546,12 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(v => v._2(0) == 2L || v._2(1) == 3L))
     val singleRows = single.orderBy("user_id").collect()
     // 1-second segments force list truncation ACROSS merge boundaries
-    val bucketed = Funnel.funnelTimesRangeBucketed(df, "user_id",
-      "event_type", "ts", "event_id", stages, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelTimesRange(df, "user_id",
+      "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect()
     assert(bucketed === singleRows)
-    val coarse = Funnel.funnelTimesRangeBucketed(df, "user_id",
-      "event_type", "ts", "event_id", stages, bucketSeconds = 86400L)
+    val coarse = Funnel.funnelTimesRange(df, "user_id",
+      "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(86400L))
       .orderBy("user_id").collect()
     assert(coarse === singleRows)
   }
@@ -632,13 +639,13 @@ class FunnelSpec extends SparkSpec {
       val df = events.toDF("user_id", "event_id", "ts", "event_type")
       val single = Funnel.funnelWithinGuarded(df, "user_id", "event_type",
         "ts", "event_id", stages, W, nb).orderBy("user_id").collect()
-      val bucketed = Funnel.funnelWithinGuardedBucketed(df, "user_id",
+      val bucketed = Funnel.funnelWithinGuarded(df, "user_id",
         "event_type", "ts", "event_id", stages, W, nb,
-        bucketSeconds = 1L).orderBy("user_id").collect()
+        route = Funnel.Bucketed(1L)).orderBy("user_id").collect()
       assert(bucketed === single, s"seed $seed")
-      val coarse = Funnel.funnelWithinGuardedBucketed(df, "user_id",
+      val coarse = Funnel.funnelWithinGuarded(df, "user_id",
         "event_type", "ts", "event_id", stages, W, nb,
-        bucketSeconds = 86400L).orderBy("user_id").collect()
+        route = Funnel.Bucketed(86400L)).orderBy("user_id").collect()
       assert(coarse === single, s"seed $seed coarse")
     }
   }
@@ -825,8 +832,8 @@ class FunnelSpec extends SparkSpec {
       val got = runPattern(df, stages).map(x =>
         x._1 -> ((x._2, x._3.map(_.map(_ + us0))))).toMap
       assert(got === expected, s"single fold, config $stages")
-      val gotB = Funnel.funnelPatternBucketed(df, "user_id", "event_type",
-          "ts", "event_id", stages, bucketSeconds = 1L)
+      val gotB = Funnel.funnelPattern(df, "user_id", "event_type",
+          "ts", "event_id", stages, route = Funnel.Bucketed(1L))
         .orderBy("user_id").collect()
         .map(x => (x.getLong(0), x.getInt(1),
           (2 until 2 + stages.length).map(i =>
@@ -845,12 +852,9 @@ class FunnelSpec extends SparkSpec {
 
   private def runMulti(ev: org.apache.spark.sql.DataFrame,
       stages: Seq[String], maxMatches: Int, bucket: Option[Long] = None) =
-    (bucket match {
-      case Some(b) => Funnel.funnelMultiBucketed(ev, "user_id",
-        "event_type", "ts", "event_id", stages, maxMatches, b)
-      case None => Funnel.funnelMulti(ev, "user_id", "event_type", "ts",
-        "event_id", stages, maxMatches)
-    }).orderBy("user_id", "match_idx").collect()
+    Funnel.funnelMulti(ev, "user_id", "event_type", "ts", "event_id",
+        stages, maxMatches, routeOf(bucket))
+      .orderBy("user_id", "match_idx").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         (3 until 3 + stages.length).map(i =>
           x.get(i).asInstanceOf[Long] - us0)))
@@ -1030,8 +1034,8 @@ class FunnelSpec extends SparkSpec {
     for (skip <- Seq[Funnel.SkipStrategy](Funnel.SkipToNext,
         Funnel.SkipToFirst(2), Funnel.SkipToLast(2), Funnel.SkipPastLast)) {
       val single = runSkip(df, quant, skip, 4).toSeq
-      val bucketed = Funnel.funnelSkipBucketed(df, "user_id", "event_type",
-          "ts", "event_id", quant, skip, 4, bucketSeconds = 1L)
+      val bucketed = Funnel.funnelSkip(df, "user_id", "event_type",
+          "ts", "event_id", quant, skip, 4, route = Funnel.Bucketed(1L))
         .orderBy("user_id", "match_idx").collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
           (3 until 7).map(i => x.get(i).asInstanceOf[Long] - us0))).toSeq
@@ -1139,50 +1143,14 @@ class FunnelSpec extends SparkSpec {
     assert(got.values.exists(_._1 == 0), "generator must fail some")
     // the segment split is bit-identical at 1-second buckets (runs
     // straddle boundaries: the entry-state table carries partial counts)
-    val bucketed = Funnel.funnelLoopConsecutiveBucketed(df, "user_id",
-        "event_type", "ts", "event_id", stages, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelLoopConsecutive(df, "user_id",
+        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1),
         Seq((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long])),
           (r.getLong(4), Option(r.get(5)).map(_.asInstanceOf[Long]))))))
       .toMap
     assert(bucketed === got)
-  }
-
-  test("auto-routers: both routes produce identical values; the threshold picks the monoid on a skewed key") {
-    val rnd = new scala.util.Random(7211L)
-    val typesPool = Array("view", "click", "purchase", "error")
-    val events = (0 until 600).map { i =>
-      // user 0 is the power key (half the log)
-      (if (i % 2 == 0) 0L else rnd.nextInt(8).toLong + 1L, i.toLong,
-        ts(rnd.nextInt(60)), typesPool(rnd.nextInt(typesPool.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val stages = Seq("view", "click", "purchase")
-    def anyOut(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("user_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val single = anyOut(Funnel.funnelAnyCount(df, "user_id", "event_type",
-      "ts", "event_id", stages))
-    // threshold above the power key: routes single; threshold below:
-    // routes the monoid — both must equal the plain fold
-    assert(anyOut(Funnel.funnelAnyCountAuto(df, "user_id", "event_type",
-      "ts", "event_id", stages, maxKeyEvents = 1000000L)) === single)
-    assert(anyOut(Funnel.funnelAnyCountAuto(df, "user_id", "event_type",
-      "ts", "event_id", stages, bucketSeconds = 1L,
-      maxKeyEvents = 10L)) === single)
-    def multiOutR(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("user_id", "match_idx").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          (3 to 5).map(r.getLong).toSeq)).toSeq
-    val m = multiOutR(Funnel.funnelMulti(df, "user_id", "event_type",
-      "ts", "event_id", stages, maxMatches = 4))
-    assert(multiOutR(Funnel.funnelMultiAuto(df, "user_id", "event_type",
-      "ts", "event_id", stages, maxMatches = 4,
-      maxKeyEvents = 1000000L)) === m)
-    assert(multiOutR(Funnel.funnelMultiAuto(df, "user_id", "event_type",
-      "ts", "event_id", stages, maxMatches = 4, bucketSeconds = 1L,
-      maxKeyEvents = 10L)) === m)
   }
 
   test("consecutive consume modes: reluctant stops at the mandatory block, greedy absorbs the run; spine identical; bucketed == single") {
@@ -1198,8 +1166,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1))
     def one(mode: Funnel.ConsumeMode, b: Option[Long] = None) = {
-      val r = Funnel.funnelLoopConsecutiveMode(ev, "user_id",
-        "event_type", "ts", "event_id", stages, mode, b).collect()
+      val r = Funnel.funnelLoopConsecutive(ev, "user_id",
+        "event_type", "ts", "event_id", stages, mode, routeOf(b)).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 2).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1218,9 +1186,9 @@ class FunnelSpec extends SparkSpec {
       (2L, 12L, ts(3), "view"), (2L, 13L, ts(4), "view"),
       (2L, 14L, ts(5), "click"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val gB = Funnel.funnelLoopConsecutiveMode(broken, "user_id",
+    val gB = Funnel.funnelLoopConsecutive(broken, "user_id",
       "event_type", "ts", "event_id", stages, Funnel.Greedy).collect()(0)
-    val rB = Funnel.funnelLoopConsecutiveMode(broken, "user_id",
+    val rB = Funnel.funnelLoopConsecutive(broken, "user_id",
       "event_type", "ts", "event_id", stages, Funnel.Reluctant).collect()(0)
     assert(gB.getInt(1) === 2 && rB.getInt(1) === 2)
     assert(gB.getLong(3) === tsUs(4) && rB.getLong(3) === tsUs(4))
@@ -1242,8 +1210,8 @@ class FunnelSpec extends SparkSpec {
     val stages = Seq(("view", 1, Some("signup")), ("click", 2, None),
       ("purchase", 1, Some("error")))
     def run(mode: Funnel.ConsumeMode, b: Option[Long] = None) =
-      Funnel.funnelLoopUntilMode(ev, "user_id", "event_type", "ts",
-        "event_id", stages, mode, b).orderBy("user_id").collect()
+      Funnel.funnelLoopUntil(ev, "user_id", "event_type", "ts",
+        "event_id", stages, mode, routeOf(b)).orderBy("user_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), (0 until 3).map(j =>
           (r.getLong(2 + 2 * j),
             Option(r.get(3 + 2 * j)).map(_.asInstanceOf[Long]))))).toSeq
@@ -1295,8 +1263,8 @@ class FunnelSpec extends SparkSpec {
     val single = Funnel.funnelWhere(big, "user_id", "ts", "event_id",
         Seq("event_type", "v"), stages)
       .orderBy("user_id").collect().map(_.toString).toSeq
-    val bucketed = Funnel.funnelWhereBucketed(big, "user_id", "ts",
-        "event_id", Seq("event_type", "v"), stages, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelWhere(big, "user_id", "ts",
+        "event_id", Seq("event_type", "v"), stages, route = Funnel.Bucketed(1L))
       .orderBy("user_id").collect().map(_.toString).toSeq
     assert(bucketed === single)
   }
@@ -1357,8 +1325,9 @@ class FunnelSpec extends SparkSpec {
     val e1 = intercept[Throwable](Funnel.funnelIterative(withNull,
       "user_id", "event_type", "ts", "event_id", "v", stages).collect())
     assert(chainHas(e1, "NULL in value column"))
-    val e2 = intercept[Throwable](Funnel.funnelIterativeSorted(withNull,
-      "user_id", "event_type", "ts", "event_id", "v", stages).collect())
+    val e2 = intercept[Throwable](Funnel.funnelIterative(withNull,
+      "user_id", "event_type", "ts", "event_id", "v", stages,
+      route = Funnel.Bucketed()).collect())
     assert(chainHas(e2, "NULL in value column"))
     // string order column: same-us ties must break in the STRING order
     // on both plans ("10" < "9" lexicographically)
@@ -1367,16 +1336,16 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type", "v")
     val fold = Funnel.funnelIterative(tied, "user_id", "event_type",
       "ts", "event_id", "v", stages).collect().map(_.toString).toSeq
-    val sorted = Funnel.funnelIterativeSorted(tied, "user_id",
-      "event_type", "ts", "event_id", "v", stages).collect()
-      .map(_.toString).toSeq
+    val sorted = Funnel.funnelIterative(tied, "user_id",
+      "event_type", "ts", "event_id", "v", stages,
+      route = Funnel.Bucketed()).collect().map(_.toString).toSeq
     assert(sorted === fold)
     // and the string order genuinely matters: click "10" precedes view
     // "9", so the funnel must NOT complete
     assert(fold.length === 1 && fold(0).contains(",1,"))
   }
 
-  test("funnelIterativeSorted == funnelIterative on random corpora, both anchors, multi-partition") {
+  test("funnelIterative: the sorted skew route == the array fold on random corpora, both anchors, multi-partition") {
     val rnd = new scala.util.Random(5016L)
     val typesPool = Array("view", "click", "purchase")
     val events = (0 until 400).map { i =>
@@ -1390,10 +1359,18 @@ class FunnelSpec extends SparkSpec {
       val fold = Funnel.funnelIterative(events, "user_id", "event_type",
           "ts", "event_id", "v", stages, anchor)
         .orderBy("user_id").collect().map(_.toString).toSeq
-      val sorted = Funnel.funnelIterativeSorted(events, "user_id",
-          "event_type", "ts", "event_id", "v", stages, anchor,
-          numPartitions = 3)
-        .orderBy("user_id").collect().map(_.toString).toSeq
+      // AQE coalescing off: the user-keyed exchange keeps all its
+      // partitions, so users really are split across sorted passes
+      val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+      spark.conf.set(coalesce, "false")
+      val sortedDf = Funnel.funnelIterative(events, "user_id",
+        "event_type", "ts", "event_id", "v", stages, anchor,
+        route = Funnel.Bucketed())
+      val (sorted, parts) = try (
+          sortedDf.orderBy("user_id").collect().map(_.toString).toSeq,
+          sortedDf.rdd.getNumPartitions)
+        finally spark.conf.unset(coalesce)
+      assert(parts > 1, s"sorted route ran in $parts partition(s)")
       assert(sorted === fold, s"anchor $anchor")
       // some user must actually exercise each depth for the corpus to
       // mean anything
@@ -1416,8 +1393,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1), ("purchase", 1))
     def one(mode: Funnel.ConsumeMode, b: Option[Long] = None) = {
-      val r = Funnel.funnelLoopMode(ev, "user_id", "event_type", "ts",
-        "event_id", stages, mode, b).collect()
+      val r = Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
+        "event_id", stages, mode, routeOf(b)).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 3).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1432,81 +1409,15 @@ class FunnelSpec extends SparkSpec {
     assert(one(Funnel.Greedy, Some(1L)) === ((gReached, gLoops)))
     assert(one(Funnel.Reluctant, Some(1L)) === ((rReached, rLoops)))
     // arm delegation: greedy IS funnelLoop, reluctant IS times(m, m)
-    assert(Funnel.funnelLoopMode(ev, "user_id", "event_type", "ts",
+    assert(Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
         "event_id", stages, Funnel.Greedy).collect().map(_.toString).toSeq
       === Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
         "event_id", stages).collect().map(_.toString).toSeq)
-    assert(Funnel.funnelLoopMode(ev, "user_id", "event_type", "ts",
+    assert(Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
         "event_id", stages, Funnel.Reluctant).collect().map(_.toString).toSeq
       === Funnel.funnelTimesRange(ev, "user_id", "event_type", "ts",
         "event_id", stages.map { case (t, m) => (t, m, m) })
         .collect().map(_.toString).toSeq)
-  }
-
-  test("round-16 auto-routers: skip/consecutive/pattern/within route both ways to identical values") {
-    val rnd = new scala.util.Random(1613L)
-    val typesPool = Array("view", "click", "purchase", "error")
-    val events = (0 until 600).map { i =>
-      (if (i % 2 == 0) 0L else rnd.nextInt(8).toLong + 1L, i.toLong,
-        ts(rnd.nextInt(60)), typesPool(rnd.nextInt(typesPool.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    def rows(d: org.apache.spark.sql.DataFrame, keys: String*) =
-      d.orderBy(keys.head, keys.tail: _*).collect().map(_.toString).toSeq
-    // skip family (the one where bucketed wins on skew)
-    val skipStages = Seq("view" -> 1, "click" -> 2, "purchase" -> 1)
-    val skipRef = rows(Funnel.funnelSkip(df, "user_id", "event_type",
-      "ts", "event_id", skipStages, Funnel.SkipToLast(2), 8),
-      "user_id", "match_idx")
-    assert(rows(Funnel.funnelSkipAuto(df, "user_id", "event_type", "ts",
-      "event_id", skipStages, Funnel.SkipToLast(2), 8,
-      maxKeyEvents = 1000000L), "user_id", "match_idx") === skipRef)
-    assert(rows(Funnel.funnelSkipAuto(df, "user_id", "event_type", "ts",
-      "event_id", skipStages, Funnel.SkipToLast(2), 8, bucketSeconds = 1L,
-      maxKeyEvents = 10L), "user_id", "match_idx") === skipRef)
-    // consecutive loop
-    val consecStages = Seq("view" -> 2, "click" -> 2)
-    val consecRef = rows(Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", consecStages), "user_id")
-    assert(rows(Funnel.funnelLoopConsecutiveAuto(df, "user_id",
-      "event_type", "ts", "event_id", consecStages,
-      maxKeyEvents = 1000000L), "user_id") === consecRef)
-    assert(rows(Funnel.funnelLoopConsecutiveAuto(df, "user_id",
-      "event_type", "ts", "event_id", consecStages, bucketSeconds = 1L,
-      maxKeyEvents = 10L), "user_id") === consecRef)
-    // contiguity NFA and its within product
-    val pat = Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-      Funnel.PatternStage("click", optional = true),
-      Funnel.PatternStage("purchase", strict = true))
-    val patRef = rows(Funnel.funnelPattern(df, "user_id", "event_type",
-      "ts", "event_id", pat), "user_id")
-    assert(rows(Funnel.funnelPatternAuto(df, "user_id", "event_type",
-      "ts", "event_id", pat, maxKeyEvents = 1000000L), "user_id") === patRef)
-    assert(rows(Funnel.funnelPatternAuto(df, "user_id", "event_type",
-      "ts", "event_id", pat, bucketSeconds = 1L,
-      maxKeyEvents = 10L), "user_id") === patRef)
-    val winRef = rows(Funnel.funnelPatternWithin(df, "user_id",
-      "event_type", "ts", "event_id", pat, windowMicros = 10L * 1000000L),
-      "user_id")
-    assert(rows(Funnel.funnelPatternWithinAuto(df, "user_id", "event_type",
-      "ts", "event_id", pat, windowMicros = 10L * 1000000L,
-      maxKeyEvents = 1000000L), "user_id") === winRef)
-    assert(rows(Funnel.funnelPatternWithinAuto(df, "user_id", "event_type",
-      "ts", "event_id", pat, windowMicros = 10L * 1000000L,
-      bucketSeconds = 1L, maxKeyEvents = 10L), "user_id") === winRef)
-    // iterative: single array fold below, the sorted fold above
-    val evV = events.map { case (u, i, t, tp) => (u, i, t, tp, i % 97L) }
-      .toDF("user_id", "event_id", "ts", "event_type", "v")
-    val iterStages = Seq(Funnel.IterStage("view"),
-      Funnel.IterStage("click", Some(Funnel.RelGt(1, 1))))
-    val iterRef = rows(Funnel.funnelIterative(evV, "user_id",
-      "event_type", "ts", "event_id", "v", iterStages), "user_id")
-    assert(rows(Funnel.funnelIterativeAuto(evV, "user_id", "event_type",
-      "ts", "event_id", "v", iterStages,
-      maxKeyEvents = 1000000L), "user_id") === iterRef)
-    assert(rows(Funnel.funnelIterativeAuto(evV, "user_id", "event_type",
-      "ts", "event_id", "v", iterStages, numPartitions = 3,
-      maxKeyEvents = 10L), "user_id") === iterRef)
   }
 
   test("group pattern: strict INSIDE copies, relaxed BETWEEN — the seam never inherits the group's internal strictness") {
@@ -1551,12 +1462,12 @@ class FunnelSpec extends SparkSpec {
     assert(consec(2L)._1 === 1)
     assert(consec(3L)._1 === 2)
     // bucketed twin bit-identical on both seam modes
-    assert(byUser(Funnel.funnelGroupTimesBucketed(ev, "user_id",
+    assert(byUser(Funnel.funnelGroupTimes(ev, "user_id",
       "event_type", "ts", "event_id", group, times = 2,
-      bucketSeconds = 2L)) === relaxed)
-    assert(byUser(Funnel.funnelGroupTimesBucketed(ev, "user_id",
+      route = Funnel.Bucketed(2L))) === relaxed)
+    assert(byUser(Funnel.funnelGroupTimes(ev, "user_id",
       "event_type", "ts", "event_id", group, times = 2,
-      bucketSeconds = 2L, consecutiveSeams = true)) === consec)
+      route = Funnel.Bucketed(2L), consecutiveSeams = true)) === consec)
     // contract: the group is a `begin` (non-strict head), no trailing
     // gap guard, times >= 1
     intercept[IllegalArgumentException] {
@@ -1824,17 +1735,12 @@ class FunnelSpec extends SparkSpec {
       val single = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
         "event_type", "ts", "event_id", g, consec))
       for (b <- Seq(1L, 7L, 3600L)) {
-        val bucketed = collectReps(Funnel.funnelGroupLoopBucketed(ev,
-          "user_id", "event_type", "ts", "event_id", g, b, consec))
+        val bucketed = collectReps(Funnel.funnelGroupLoop(ev,
+          "user_id", "event_type", "ts", "event_id", g, consec,
+          route = Funnel.Bucketed(b)))
         assert(bucketed === single,
           s"group=$g consec=$consec bucket=$b")
       }
-      // the auto-router reproduces both routes bit-identically
-      assert(collectReps(Funnel.funnelGroupLoopAuto(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec,
-        maxKeyEvents = 0L)) === single)
-      assert(collectReps(Funnel.funnelGroupLoopAuto(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec)) === single)
     }
   }
 
@@ -1862,19 +1768,19 @@ class FunnelSpec extends SparkSpec {
         "event_type", "ts", "event_id", g, consec))
       // the in-fold completion cap (a DIFFERENT machine from the
       // greedy fold) must equal min(greedy, m) — the truncation law
-      val rel = collectReps(Funnel.funnelGroupLoopMode(ev, "user_id",
-        "event_type", "ts", "event_id", g, Funnel.Reluctant, consec,
-        bucketSeconds = None, minTimes = m))
+      val rel = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
+        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
+        minTimes = m))
       assert(rel === greedy.map { case (u, r) => u -> math.min(r, m.toLong) },
         s"group=$g consec=$consec m=$m")
       // bucketed (greedy matrices + output cap) and auto agree
-      val relB = collectReps(Funnel.funnelGroupLoopMode(ev, "user_id",
-        "event_type", "ts", "event_id", g, Funnel.Reluctant, consec,
-        bucketSeconds = Some(7L), minTimes = m))
+      val relB = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
+        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
+        minTimes = m, route = Funnel.Bucketed(7L)))
       assert(relB === rel, s"bucketed group=$g consec=$consec m=$m")
-      val relAuto = collectReps(Funnel.funnelGroupLoopAuto(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec, maxKeyEvents = 0L,
-        mode = Funnel.Reluctant, minTimes = m))
+      val relAuto = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
+        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
+        minTimes = m, route = Funnel.Auto()))
       assert(relAuto === rel, s"auto group=$g consec=$consec m=$m")
       // mode never moves EXISTENCE: timesOrMore matched agrees
       val gm = Funnel.funnelGroupTimesOrMore(ev, "user_id",
@@ -1895,8 +1801,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val g = Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click"))
     def reps(mode: Funnel.ConsumeMode, m: Int) =
-      Funnel.funnelGroupLoopMode(ev, "user_id", "event_type", "ts",
-        "event_id", g, mode, minTimes = m).head().getLong(1)
+      Funnel.funnelGroupLoop(ev, "user_id", "event_type", "ts",
+        "event_id", g, mode = mode, minTimes = m).head().getLong(1)
     assert(reps(Funnel.Greedy, 1) === 3L)   // maximal consumption
     assert(reps(Funnel.Reluctant, 1) === 1L) // oneOrMore stops at 1
     assert(reps(Funnel.Reluctant, 2) === 2L) // timesOrMore(2) floor
@@ -1922,8 +1828,8 @@ class FunnelSpec extends SparkSpec {
     // streaming twin agrees (same kill, same event order)
     // (batch == stream is pinned in StreamingSpec for the machine;
     // here we pin the guard's bucketed twin instead)
-    val bucketed = Funnel.funnelGroupLoopBucketed(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, bucketSeconds = 1L)
+    val bucketed = Funnel.funnelGroupLoop(ev, "user_id",
+      "event_type", "ts", "event_id", guarded, route = Funnel.Bucketed(1L))
       .head().getLong(1)
     assert(bucketed === 1L)
     // the BOUNDED group quantifiers reject the trailing guard with a
@@ -1942,8 +1848,8 @@ class FunnelSpec extends SparkSpec {
     // variant puts the boundary EXACTLY between click and error with
     // wider segments on each side (bucket = 2s: [0,1] and [2,3] and
     // [4]), same answer required
-    val boundary = Funnel.funnelGroupLoopBucketed(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, bucketSeconds = 2L)
+    val boundary = Funnel.funnelGroupLoop(ev, "user_id",
+      "event_type", "ts", "event_id", guarded, route = Funnel.Bucketed(2L))
       .head().getLong(1)
     assert(boundary === 1L)
   }
@@ -1971,7 +1877,7 @@ class FunnelSpec extends SparkSpec {
     def rows(bucket: Option[Long]) =
       Funnel.funnelMatchesAbsence(ev, "user_id", "event_type", "ts",
           "event_id", stages, maxMatches = 4, windowMicros = winUs,
-          absentType = "error", bucketSeconds = bucket)
+          absentType = "error", route = routeOf(bucket))
         .orderBy("user_id", "match_idx").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val single = rows(None).toSeq
@@ -2035,7 +1941,7 @@ class FunnelSpec extends SparkSpec {
       def got(bucket: Option[Long]) =
         Funnel.funnelMatchesAbsence(df, "user_id", "event_type", "ts",
             "event_id", stages, maxMatches = 4, windowMicros = winUs,
-            absentType = "error", bucketSeconds = bucket)
+            absentType = "error", route = routeOf(bucket))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getLong(5))).toSet
       assert(got(None) === expected, s"round $round single")
@@ -2169,7 +2075,7 @@ class FunnelSpec extends SparkSpec {
       def readRange(bucket: Option[Long]) =
         Funnel.funnelGroupMatchesRange(df, "user_id",
             "event_type", "ts", "event_id", grp, m, n, maxMatches = 12,
-            bucketSeconds = bucket)
+            route = routeOf(bucket))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
@@ -2189,7 +2095,7 @@ class FunnelSpec extends SparkSpec {
         Funnel.funnelGroupMatchesRangeAbsence(df, "user_id",
             "event_type", "ts", "event_id", grp, m, n, maxMatches = 12,
             windowMicros = winUs, absentType = "error",
-            bucketSeconds = bucket)
+            route = routeOf(bucket))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
@@ -2230,22 +2136,20 @@ class FunnelSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSeq
     assert(got === Seq((1L, 2, true), (2L, 0, false), (3L, 3, true),
       (4L, 1, false)))
-    // bucketed and auto agree row-for-row (auto above AND below the
-    // routing threshold; structural pin via groupsByAttr)
+    // bucketed and auto agree row-for-row: the bucketed route (what an
+    // above-threshold Auto resolves to) and Auto on this small log,
+    // which resolves single — structural pin via groupsByAttr
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("user_id").collect().map(_.toString).toSeq
     val single = rows(routed)
-    assert(rows(Funnel.funnelGroupTimesRangeGuarded(ev, "user_id",
+    val above = Funnel.funnelGroupTimesRange(ev, "user_id",
       "event_type", "ts", "event_id", guarded, 2, 3,
-      bucketSeconds = Some(1L))) === single)
-    val above = Funnel.funnelGroupTimesRangeGuardedAuto(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, 2, 3,
-      bucketSeconds = 1L, maxKeyEvents = 2L)
+      route = Funnel.Bucketed(1L))
     assert(groupsByAttr(above))
     assert(rows(above) === single)
-    val below = Funnel.funnelGroupTimesRangeGuardedAuto(ev, "user_id",
+    val below = Funnel.funnelGroupTimesRange(ev, "user_id",
       "event_type", "ts", "event_id", guarded, 2, 3,
-      maxKeyEvents = 1000000L)
+      route = Funnel.Auto(1L))
     assert(!groupsByAttr(below))
     assert(rows(below) === single)
     // cap placement law UNDER the guard, random corpora: the capped
@@ -2267,12 +2171,12 @@ class FunnelSpec extends SparkSpec {
           least(col("reps"), lit(n.toLong)).cast("int")
             .as("reps_completed"),
           (col("reps") >= lit(m.toLong)).as("matched")))
-      assert(rows(Funnel.funnelGroupTimesRangeGuarded(corpus, "user_id",
+      assert(rows(Funnel.funnelGroupTimesRange(corpus, "user_id",
         "event_type", "ts", "event_id", guarded, m, n)) === ref,
         s"single, times($m,$n)")
-      assert(rows(Funnel.funnelGroupTimesRangeGuarded(corpus, "user_id",
+      assert(rows(Funnel.funnelGroupTimesRange(corpus, "user_id",
         "event_type", "ts", "event_id", guarded, m, n,
-        bucketSeconds = Some(2L))) === ref, s"bucketed, times($m,$n)")
+        route = Funnel.Bucketed(2L))) === ref, s"bucketed, times($m,$n)")
     }
   }
 
@@ -2287,38 +2191,43 @@ class FunnelSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("user_id").collect().map(_.toString).toSeq
     val stages = Seq("view" -> 2, "click" -> 2)
-    val relRef = rows(Funnel.funnelLoopConsecutiveMode(df, "user_id",
+    val relRef = rows(Funnel.funnelLoopConsecutive(df, "user_id",
       "event_type", "ts", "event_id", stages, Funnel.Reluctant))
-    // above threshold: bucketed route (structurally pinned), reluctant
-    // values — the round-16 gap was exactly a silently-greedy route here
-    val above = Funnel.funnelLoopConsecutiveAuto(df, "user_id",
-      "event_type", "ts", "event_id", stages, bucketSeconds = 1L,
-      maxKeyEvents = 10L, mode = Funnel.Reluctant)
+    // above threshold: Auto resolves to the bucketed route
+    // (structurally pinned) with reluctant values — the round-16 gap
+    // was exactly a silently-greedy route here
+    val resolved = Funnel.resolve(Funnel.Auto(1L), df, "user_id",
+      threshold = 10L)
+    assert(resolved === Some(1L))
+    val above = Funnel.funnelLoopConsecutive(df, "user_id",
+      "event_type", "ts", "event_id", stages, Funnel.Reluctant,
+      routeOf(resolved))
     assert(groupsByAttr(above))
     assert(rows(above) === relRef)
-    // below threshold: single route, same reluctant values
-    val below = Funnel.funnelLoopConsecutiveAuto(df, "user_id",
-      "event_type", "ts", "event_id", stages,
-      maxKeyEvents = 1000000L, mode = Funnel.Reluctant)
+    // below threshold (the real Auto on this log): single route, same
+    // reluctant values
+    val below = Funnel.funnelLoopConsecutive(df, "user_id",
+      "event_type", "ts", "event_id", stages, Funnel.Reluctant,
+      Funnel.Auto())
     assert(!groupsByAttr(below))
     assert(rows(below) === relRef)
     // the mode really bit on this corpus (greedy differs)
     assert(rows(Funnel.funnelLoopConsecutive(df, "user_id",
       "event_type", "ts", "event_id", stages)) !== relRef)
     // default mode unchanged: Greedy both ways
-    assert(rows(Funnel.funnelLoopConsecutiveAuto(df, "user_id",
-      "event_type", "ts", "event_id", stages, maxKeyEvents = 1000000L))
+    assert(rows(Funnel.funnelLoopConsecutive(df, "user_id",
+      "event_type", "ts", "event_id", stages, route = Funnel.Auto()))
       === rows(Funnel.funnelLoopConsecutive(df, "user_id", "event_type",
         "ts", "event_id", stages)))
-    // w58's own call (maxKeyEvents = 1 over the corpus events) lands on
-    // the bucketed route with w56's single-route reluctant values
+    // w58's own call lands on the bucketed route with w56's
+    // single-route reluctant values
     val w58 = Queries.w58_funnel_loop_consecutive_auto_reluctant.run(spark, sf())
     assert(groupsByAttr(w58))
     assert(rows(w58) ===
       rows(Queries.w56_funnel_loop_consecutive_reluctant.run(spark, sf())))
   }
 
-  test("auto-router probe cost: precomputedPeak skips the count-by-key job entirely; without it the probe is eager at call time") {
+  test("auto-route probe cost: the peak probe is eager at call time, runs only under Auto, and only after validation") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // a DataFrame that THROWS if any job ever scans it — the probe's
@@ -2340,22 +2249,35 @@ class FunnelSpec extends SparkSpec {
       acc
     }
     val stages = Seq("view" -> 1, "click" -> 1)
-    // precomputed peak: plan construction must run NO Spark job —
-    // a single probe shared by many routed operators is the contract
-    Funnel.funnelSkipAuto(failing, "user_id", "event_type", "ts",
-      "event_id", stages, Funnel.SkipToLast(1), 4,
-      precomputedPeak = Some(5L))
-    Funnel.funnelLoopConsecutiveAuto(failing, "user_id", "event_type",
-      "ts", "event_id", Seq("view" -> 1, "click" -> 1),
-      precomputedPeak = Some(1L << 60))
-    Funnel.funnelAnyCountAuto(failing, "user_id", "event_type", "ts",
-      "event_id", Seq("view"), precomputedPeak = Some(5L))
-    // no precomputed peak: the probe is EAGER — the count-by-key job
-    // runs at CALL time (the documented contract), hence the throw
-    val e = intercept[Throwable](
-      Funnel.funnelSkipAuto(failing, "user_id", "event_type", "ts",
-        "event_id", stages, Funnel.SkipToLast(1), 4))
+    def skip(route: Funnel.Route) = Funnel.funnelSkip(failing, "user_id",
+      "event_type", "ts", "event_id", stages, Funnel.SkipToLast(1), 4,
+      route)
+    // Single and Bucketed never probe: plan construction runs no job
+    skip(Funnel.Single)
+    skip(Funnel.Bucketed(1L))
+    // Auto probes EAGERLY — the count-by-key job runs at CALL time (the
+    // documented contract), hence the throw
+    val e = intercept[Throwable](skip(Funnel.Auto()))
     assert(chain(e).exists(_.contains("probe ran")))
+    // bad arguments fail with the contract message BEFORE the probe:
+    // a probe-first shape would throw "probe ran" here instead
+    def failsFirst(msg: String)(call: => Any): Unit = {
+      val bad = intercept[IllegalArgumentException](call)
+      assert(bad.getMessage.contains(msg), bad.getMessage)
+    }
+    failsFirst("expanded length >= 2")(Funnel.funnelSkip(failing,
+      "user_id", "event_type", "ts", "event_id", Seq("view" -> 1),
+      Funnel.SkipToLast(1), 4, Funnel.Auto()))
+    failsFirst("adjacent stages must differ")(Funnel.funnelLoopConsecutive(
+      failing, "user_id", "event_type", "ts", "event_id",
+      Seq("view" -> 1, "view" -> 2), route = Funnel.Auto()))
+    failsFirst("need at least one stage")(Funnel.funnelAnyCount(failing,
+      "user_id", "event_type", "ts", "event_id", Nil, Funnel.Auto()))
+    failsFirst("optional head")(Funnel.funnelGroupLoop(failing, "user_id",
+      "event_type", "ts", "event_id",
+      Seq(Funnel.PatternStage("view", optional = true),
+        Funnel.PatternStage("click")), route = Funnel.Auto()))
+    failsFirst("need bucket seconds > 0")(skip(Funnel.Auto(0L)))
   }
 
   test("funnelCombinations: loop stage counts every non-empty subset; property vs closed form; bucketed == single") {
@@ -2397,8 +2319,8 @@ class FunnelSpec extends SparkSpec {
       assert(got(u) === expected, s"user $u")
     }
     assert(got.values.exists(_ > 100L), "generator must hit real blow-up")
-    val gotB = Funnel.funnelCombinationsBucketed(df, "user_id",
-        "event_type", "ts", "event_id", stages, bucketSeconds = 1L)
+    val gotB = Funnel.funnelCombinations(df, "user_id",
+        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
   }
@@ -2505,8 +2427,8 @@ class FunnelSpec extends SparkSpec {
     }
     assert(got.values.exists(_._1 == 3) && got.values.exists(_._1 < 3),
       "generator must produce both full and expired chains")
-    val gotB = collectOut(Funnel.funnelPatternWithinBucketed(df, "user_id",
-      "event_type", "ts", "event_id", stages, T, bucketSeconds = 1L))
+    val gotB = collectOut(Funnel.funnelPatternWithin(df, "user_id",
+      "event_type", "ts", "event_id", stages, T, route = Funnel.Bucketed(1L)))
     assert(gotB === got)
   }
 
@@ -2603,8 +2525,8 @@ class FunnelSpec extends SparkSpec {
       val got = read(Funnel.funnelLoopUntil(df, "user_id", "event_type",
         "ts", "event_id", stages))
       assert(got === expected, s"single fold, config $stages")
-      val gotB = read(Funnel.funnelLoopUntilBucketed(df, "user_id",
-        "event_type", "ts", "event_id", stages, bucketSeconds = 1L))
+      val gotB = read(Funnel.funnelLoopUntil(df, "user_id",
+        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L)))
       assert(gotB === got, s"bucketed twin, config $stages")
       // the generator must exercise stalls AND completions
       assert(expected.values.map(_._1).toSet.size >= 2, s"degenerate $stages")
@@ -2637,8 +2559,8 @@ class FunnelSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expected)
     assert(expected.values.exists(_ > 100L), "combinatorial counts exercised")
-    val gotB = Funnel.funnelAnyCountBucketed(df, "user_id", "event_type",
-        "ts", "event_id", stages, bucketSeconds = 1L)
+    val gotB = Funnel.funnelAnyCount(df, "user_id", "event_type",
+        "ts", "event_id", stages, route = Funnel.Bucketed(1L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
     // sanity against literal enumeration on the same data
@@ -2669,6 +2591,130 @@ class FunnelSpec extends SparkSpec {
         s"expected exactly one shuffle:\n$plan")
       assert(!plan.contains("Window") && !plan.contains("Join"),
         s"must not plan per-stage joins or windows:\n$plan")
+    }
+  }
+
+  test("resolve: Auto routes bucketed only when the peak key EXCEEDS the threshold; Single and Bucketed pass through") {
+    // user 1 is the peak key with 5 events, user 2 has 3
+    val df = (Seq.fill(5)(1L) ++ Seq.fill(3)(2L)).zipWithIndex
+      .map { case (u, i) => (u, i.toLong) }.toDF("user_id", "event_id")
+    assert(Funnel.resolve(Funnel.Auto(60L), df, "user_id",
+      threshold = 5L) === None) // peak = threshold: single
+    assert(Funnel.resolve(Funnel.Auto(60L), df, "user_id",
+      threshold = 4L) === Some(60L)) // peak = threshold + 1: bucketed
+    assert(Funnel.resolve(Funnel.Single, df, "user_id", 0L) === None)
+    assert(Funnel.resolve(Funnel.Bucketed(7L), df, "user_id",
+      Long.MaxValue) === Some(7L))
+    // an empty log has peak 0
+    assert(Funnel.resolve(Funnel.Auto(), df.limit(0), "user_id",
+      threshold = 0L) === None)
+    for (bad <- Seq(Funnel.Bucketed(0L), Funnel.Auto(-1L)))
+      intercept[IllegalArgumentException](
+        Funnel.resolve(bad, df, "user_id", 0L))
+  }
+
+  test("route equivalence: every routed shape gives equal results under Single, Bucketed(1) and a resolved Auto on random logs") {
+    val rnd = new scala.util.Random(20261018L)
+    val typesPool = Array("view", "click", "purchase", "error", "signup")
+    // user 0 is the power key (half the log); 1-second buckets put
+    // every distinct second in its own segment
+    val df = (0 until 600).map { i =>
+      (if (i % 2 == 0) 0L else rnd.nextInt(8).toLong + 1L, i.toLong,
+        ts(rnd.nextInt(60)), typesPool(rnd.nextInt(typesPool.length)),
+        rnd.nextInt(100).toLong)
+    }.toDF("user_id", "event_id", "ts", "event_type", "v")
+    val peak = df.groupBy("user_id").count().agg(
+      org.apache.spark.sql.functions.max("count")).head().getLong(0)
+    // Auto resolved against a threshold just below the log's peak
+    val resolvedAuto = routeOf(
+      Funnel.resolve(Funnel.Auto(1L), df, "user_id", peak - 1))
+    assert(resolvedAuto === Funnel.Bucketed(1L))
+    val W = 10L * 1000000L
+    val ids = Seq("user_id", "event_type", "ts", "event_id")
+    val (u, tp, t, o) = (ids(0), ids(1), ids(2), ids(3))
+    val pat = Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
+      Funnel.PatternStage("click", optional = true),
+      Funnel.PatternStage("purchase", strict = true))
+    val grp = Seq(Funnel.PatternStage("view"),
+      Funnel.PatternStage("click", strict = true))
+    val guarded = Seq(Funnel.PatternStage("view"),
+      Funnel.PatternStage("click", notNextAfter = Some("error")))
+    val loop = Seq("view" -> 2, "click" -> 1, "purchase" -> 1)
+    val until = Seq(("view", 1, Some("signup")), ("click", 2, None),
+      ("purchase", 1, Some("error")))
+    val vcp = Seq("view", "click", "purchase")
+    type Run = Funnel.Route => org.apache.spark.sql.DataFrame
+    val shapes: Seq[(String, Run)] = Seq(
+      "funnel" -> (r => Funnel.funnel(df, u, tp, t, o, vcp, r)),
+      "funnelTimes" -> (r => Funnel.funnelTimes(df, u, tp, t, o,
+        Seq("view" -> 2, "click" -> 1), r)),
+      "funnelLoop greedy" -> (r => Funnel.funnelLoop(df, u, tp, t, o, loop,
+        route = r)),
+      "funnelLoop reluctant" -> (r => Funnel.funnelLoop(df, u, tp, t, o,
+        loop, Funnel.Reluctant, r)),
+      "funnelTimesRange" -> (r => Funnel.funnelTimesRange(df, u, tp, t, o,
+        Seq(("view", 1, 2), ("click", 1, 3)), r)),
+      "funnelLoopConsecutive greedy" -> (r => Funnel.funnelLoopConsecutive(
+        df, u, tp, t, o, Seq("view" -> 2, "click" -> 2), route = r)),
+      "funnelLoopConsecutive reluctant" -> (r =>
+        Funnel.funnelLoopConsecutive(df, u, tp, t, o,
+          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant, r)),
+      "funnelLoopUntil greedy" -> (r => Funnel.funnelLoopUntil(df, u, tp,
+        t, o, until, route = r)),
+      "funnelLoopUntil reluctant" -> (r => Funnel.funnelLoopUntil(df, u,
+        tp, t, o, until, Funnel.Reluctant, r)),
+      "funnelWithin" -> (r => Funnel.funnelWithin(df, u, tp, t, o, vcp, W,
+        r)),
+      "funnelGuarded" -> (r => Funnel.funnelGuarded(df, u, tp, t, o, vcp,
+        Seq(Some("error"), None), r)),
+      "funnelWithinGuarded" -> (r => Funnel.funnelWithinGuarded(df, u, tp,
+        t, o, vcp, W, Seq(Some("error"), None), r)),
+      "funnelPattern" -> (r => Funnel.funnelPattern(df, u, tp, t, o, pat,
+        r)),
+      "funnelPatternWithin" -> (r => Funnel.funnelPatternWithin(df, u, tp,
+        t, o, pat, W, r)),
+      "funnelGroupTimes" -> (r => Funnel.funnelGroupTimes(df, u, tp, t, o,
+        grp, 2, route = r)),
+      "funnelGroupLoop greedy" -> (r => Funnel.funnelGroupLoop(df, u, tp,
+        t, o, grp, route = r)),
+      "funnelGroupLoop reluctant, consecutive seams" -> (r =>
+        Funnel.funnelGroupLoop(df, u, tp, t, o, grp, consecutiveSeams = true,
+          mode = Funnel.Reluctant, minTimes = 2, route = r)),
+      "funnelGroupTimesRange" -> (r => Funnel.funnelGroupTimesRange(df, u,
+        tp, t, o, grp, 1, 2, route = r)),
+      "funnelGroupTimesRange guarded" -> (r => Funnel.funnelGroupTimesRange(
+        df, u, tp, t, o, guarded, 1, 2, route = r)),
+      "funnelGroupMatchesRange" -> (r => Funnel.funnelGroupMatchesRange(df,
+        u, tp, t, o, Seq("view", "click"), 1, 2, 3, r)),
+      "funnelGroupMatchesRangeAbsence" -> (r =>
+        Funnel.funnelGroupMatchesRangeAbsence(df, u, tp, t, o,
+          Seq("view", "click"), 1, 2, 3, 2 * W, "error", r)),
+      "funnelMulti" -> (r => Funnel.funnelMulti(df, u, tp, t, o, vcp, 4, r)),
+      "funnelMatchesAbsence" -> (r => Funnel.funnelMatchesAbsence(df, u, tp,
+        t, o, Seq("view", "click"), 4, W, "error", r)),
+      "funnelSkip" -> (r => Funnel.funnelSkip(df, u, tp, t, o,
+        Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
+        Funnel.SkipToLast(2), 8, r)),
+      "funnelAnyCount" -> (r => Funnel.funnelAnyCount(df, u, tp, t, o, vcp,
+        r)),
+      "funnelCombinations" -> (r => Funnel.funnelCombinations(df, u, tp, t,
+        o, Seq("view" -> false, "click" -> true, "purchase" -> false), r)),
+      "funnelIterative" -> (r => Funnel.funnelIterative(df, u, tp, t, o,
+        "v", Seq(Funnel.IterStage("view"),
+          Funnel.IterStage("click", Some(Funnel.RelGt(1, 1)))),
+        route = r)),
+      "funnelWhere" -> (r => Funnel.funnelWhere(df, u, t, o,
+        Seq("event_type", "v"),
+        Seq(e => e.getField("event_type") === "view" &&
+            e.getField("v") >= 20L,
+          e => e.getField("event_type") === "click"), r)))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    for ((name, run) <- shapes) {
+      val single = rows(run(Funnel.Single))
+      assert(single.nonEmpty, s"$name: empty output proves nothing")
+      assert(rows(run(Funnel.Bucketed(1L))) === single, s"$name: Bucketed(1)")
+      assert(rows(run(resolvedAuto)) === single, s"$name: resolved Auto")
     }
   }
 }

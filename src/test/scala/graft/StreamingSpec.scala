@@ -2850,11 +2850,11 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-loop-src")
     writeWaves(src, waves)
     val last = runLoopStream(src, st =>
-      StreamingIngest.streamingFunnelLoopMode(spark, st, stages,
-        graft.operators.Funnel.Reluctant, "2 hours"))
+      StreamingIngest.streamingFunnelLoop(spark, st, stages, "2 hours",
+        mode = graft.operators.Funnel.Reluctant))
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoopMode(all,
+    val batch = loopObs(graft.operators.Funnel.funnelLoop(all,
       "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Reluctant), 3)
     assert(last.keySet === batch.keySet)
@@ -2864,7 +2864,7 @@ class StreamingSpec extends SparkSpec {
     assert(last(1L) === ((3, Seq(1L, 2L, 1L),
       Seq(us("2024-01-01 10:00:00"), us("2024-01-01 10:03:00"),
         us("2024-01-01 10:06:00")))))
-    val greedy = loopObs(graft.operators.Funnel.funnelLoopMode(all,
+    val greedy = loopObs(graft.operators.Funnel.funnelLoop(all,
       "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Greedy), 3)
     assert(greedy(1L) !== last(1L))
@@ -2894,11 +2894,11 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-consec-src")
     writeWaves(src, waves)
     val last = runLoopStream(src, st =>
-      StreamingIngest.streamingFunnelConsecutiveMode(spark, st, stages,
-        graft.operators.Funnel.Reluctant, "2 hours"))
+      StreamingIngest.streamingFunnelConsecutive(spark, st, stages,
+        "2 hours", graft.operators.Funnel.Reluctant))
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoopConsecutiveMode(
+    val batch = loopObs(graft.operators.Funnel.funnelLoopConsecutive(
       all, "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Reluctant), 2)
     assert(last.keySet === batch.keySet)
@@ -2908,7 +2908,7 @@ class StreamingSpec extends SparkSpec {
       Seq(us("2024-01-01 10:01:00"), us("2024-01-01 10:04:00")))))
     // the breaker reset is mode-independent: u2's trailing partial
     assert(last(2L) === ((0, Seq(1L, 0L), Seq(us("2024-01-01 10:02:00")))))
-    val greedy = loopObs(graft.operators.Funnel.funnelLoopConsecutiveMode(
+    val greedy = loopObs(graft.operators.Funnel.funnelLoopConsecutive(
       all, "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Greedy), 2)
     assert(greedy(1L) === ((2, Seq(3L, 3L),
@@ -2958,10 +2958,10 @@ class StreamingSpec extends SparkSpec {
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Seq[Long], Seq[Long])]
     def runOnce(): Unit = {
-      val q = StreamingIngest.streamingFunnelLoopUntilMode(spark,
+      val q = StreamingIngest.streamingFunnelLoopUntil(spark,
           spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          stages, graft.operators.Funnel.Reluctant, "2 hours")
+          stages, "2 hours", mode = graft.operators.Funnel.Reluctant)
         .toDF().writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -2982,7 +2982,7 @@ class StreamingSpec extends SparkSpec {
       .toMap
     val all = spark.createDataFrame(spark.sparkContext.parallelize(
       (preWaves ++ postWaves).flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoopUntilMode(all,
+    val batch = loopObs(graft.operators.Funnel.funnelLoopUntil(all,
       "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Reluctant), 2)
     assert(last.keySet === batch.keySet)
@@ -2995,7 +2995,7 @@ class StreamingSpec extends SparkSpec {
     // the stall is mode-independent (u2 frozen at 0 by the late signup)
     assert(last(2L)._1 === 0)
     // greedy absorbs u1's trailing purchases up to the error
-    val greedy = loopObs(graft.operators.Funnel.funnelLoopUntilMode(all,
+    val greedy = loopObs(graft.operators.Funnel.funnelLoopUntil(all,
       "user_id", "event_type", "ts", "event_id", stages,
       graft.operators.Funnel.Greedy), 2)
     assert(greedy(1L) === ((2, Seq(1L, 4L),
@@ -3026,10 +3026,10 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-group-loop-src")
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = StreamingIngest.streamingFunnelGroupLoopMode(spark,
+    val q = StreamingIngest.streamingFunnelGroupLoop(spark,
         spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, graft.operators.Funnel.Reluctant, "2 hours",
+        group, "2 hours", mode = graft.operators.Funnel.Reluctant,
         minTimes = 2)
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -3043,9 +3043,9 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => es.maxBy(_._2)._1._2).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupLoopMode(all,
+    val batch = graft.operators.Funnel.funnelGroupLoop(all,
         "user_id", "event_type", "ts", "event_id", group,
-        graft.operators.Funnel.Reluctant, minTimes = 2)
+        mode = graft.operators.Funnel.Reluctant, minTimes = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }

@@ -55,6 +55,33 @@ class UnigramLmSpec extends SparkSpec {
     }
   }
 
+  test("encode side counts code points: a word of exactly maxWordLen non-BMP characters is Viterbi-scored and never over-counted") {
+    val a = "\uD83D\uDE00" // U+1F600, two UTF-16 units
+    val b = "\uD83D\uDE01" // U+1F601
+    val w = a * 4 // 4 code points = maxWordLen, 8 UTF-16 units
+    val corpus = Seq((1L, s"$a$a $a$b $b$a $w"), (2L, s"$w the cat"),
+      (3L, s"$b $a$a$b $w")).toDF("doc_id", "text")
+    val p = UnigramLm.Params(maxPieceLen = 2, maxWordLen = 4, seedSize = 40,
+      vocabMulti = 10)
+    val vocab = UnigramLm.train(corpus, "text", p)
+    val scores = vocab.map(v => v.piece -> v.scoreMicro).toMap
+    val unk = scores.values.min - 1000000L
+    val best = UnigramLm.viterbi(w, scores, p.maxPieceLen, Some(unk))
+    assert(best.nonEmpty && best.length <= p.maxWordLen)
+    val one = Seq((9L, w)).toDF("doc_id", "text")
+    val stats = UnigramLm.encodeStats(one, "doc_id", "text", vocab, p)
+      .collect().head
+    // (id, n_words, n_pieces, n_chars): the word's own Viterbi pieces,
+    // not one piece per UTF-16 unit
+    assert(stats.getLong(2) === best.length.toLong)
+    assert(stats.getLong(2) <= p.maxWordLen)
+    assert(stats.getLong(3) === 4L)
+    val score = UnigramLm.docScores(one, "doc_id", "text", vocab, p)
+      .collect().head.getLong(2)
+    assert(score === best.map(pc => scores.getOrElse(pc, unk)).sum)
+    assert(score > 8 * unk) // not eight lone surrogates at the UNK floor
+  }
+
   test("parallel local E-step equals a serial fold whatever the chunking (exact Long merge is order-independent)") {
     // the r22 parallelization argument: per-chunk usage maps merged by
     // exact Long addition give the same (piece -> Σ cnt) table as one

@@ -76,6 +76,23 @@ echo "$WLOG" | grep -q "in-memory width measurement equals the bytes of Spark's 
   || { echo "FATAL: width-probe equality test did not run (renamed or filtered out)"; exit 1; }
 echo "$WLOG" | grep -q "All tests passed" \
   || { echo "FATAL: width-probe equality test failed"; echo "$WLOG" | tail -20; exit 1; }
+echo "=== CEP route-equivalence guard (mandatory): every route gives the single fold's rows"
+# the skew-safe routes (Bucketed, Auto) are honest only while one
+# property pins every routed shape's Single, Bucketed(1) and resolved
+# Auto outputs equal — this test is that guard and must demonstrably RUN
+RLOG=$(sbt -batch 'testOnly graft.FunnelSpec -- -z "route equivalence"' 2>&1)
+echo "$RLOG" | grep -q "route equivalence: every routed shape gives equal results under Single, Bucketed(1) and a resolved Auto on random logs" \
+  || { echo "FATAL: CEP route-equivalence test did not run (renamed or filtered out)"; exit 1; }
+echo "$RLOG" | grep -q "All tests passed" \
+  || { echo "FATAL: CEP route-equivalence test failed"; echo "$RLOG" | tail -20; exit 1; }
+echo "=== one entry point per CEP shape: no public *Auto/*Bucketed/*Mode/*Sorted twin"
+# how a shape runs is its route/mode argument, not a second public name
+if grep -nE '^\s*def (funnel|streamingFunnel)\w*(Auto|Bucketed|Mode|Sorted)\(' \
+    src/main/scala/graft/operators/Funnel.scala \
+    src/main/scala/graft/streaming/StreamingIngest.scala; then
+  echo "FATAL: a routed twin is back (use route = Funnel.Bucketed/Auto or mode = ...)"
+  exit 1
+fi
 OUT=$(mktemp -d)
 echo "=== Verify sf0.01 -> $OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" 2>&1 \
