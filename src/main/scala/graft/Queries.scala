@@ -2724,8 +2724,8 @@ object Queries {
          |ORDER BY l_orderkey, l_linenumber""".stripMargin
     })
 
-  /** 3-KEY Hilbert clustering key ([[Layout.hilbertValue3]], the t96
-    * 3-key Morton configuration's locality upgrade): Skilling's
+  /** 3-KEY Hilbert clustering key ([[Layout.hilbertValueN]] at n = 3,
+    * the t96 3-key Morton configuration's locality upgrade): Skilling's
     * transpose algorithm — per-level undo rotations, Gray encode,
     * last-axis parity smear, MSB-first round-robin interleave. The
     * oracle replays the identical integer recurrence as chained
@@ -2737,20 +2737,20 @@ object Queries {
     run = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.hilbertValue3(
+          graft.operators.Layout.hilbertValueN(Seq(
             pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
             pmod(col("l_partkey").cast("long"), lit(1L << 16)),
-            pmod(col("l_suppkey").cast("long"), lit(1L << 16)),
+            pmod(col("l_suppkey").cast("long"), lit(1L << 16))),
             bits = 16).as("h_key"))
         .orderBy("l_orderkey", "l_linenumber"),
     bench = true,
     benchRun = Some((spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.hilbertValue3(
+          graft.operators.Layout.hilbertValueN(Seq(
             pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
             pmod(col("l_partkey").cast("long"), lit(1L << 16)),
-            pmod(col("l_suppkey").cast("long"), lit(1L << 16)),
+            pmod(col("l_suppkey").cast("long"), lit(1L << 16))),
             bits = 16).as("h_key"))),
     oracle = Some {
       val bits = 16

@@ -10,17 +10,21 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /**
- * Native codegen'd N-DIMENSIONAL Hilbert curve index — the
- * [[HilbertIndex3]] Skilling-transpose loop at GENERIC arity, making
- * the layout family symmetric with [[graft.operators.Layout.zValueN]]
- * (Skilling's construction, "Programming the Hilbert curve", AIP
- * Conf. Proc. 707, 2004, is dimension-generic: the same
- * undo-excess-work rotations, Gray encode and parity smear run over
- * an n-element axis word array). The 3-key case keeps its dedicated
- * [[HilbertIndex3]] (same recurrence — this expression delegates to
- * its shared JVM walk for interpreted eval and generates the
- * identical Java loop, so the two agree bit-for-bit at n = 3,
- * spec-asserted).
+ * Native codegen'd N-DIMENSIONAL Hilbert curve index via Skilling's
+ * transpose algorithm ("Programming the Hilbert curve", AIP Conf.
+ * Proc. 707, 2004), making the layout family symmetric with
+ * [[graft.operators.Layout.zValueN]]: undo-excess-work rotations per
+ * level (MSB down), one Gray encode, a parity smear from the last
+ * axis, then an MSB-first round-robin interleave of the transposed
+ * words — dimension-generic, over an n-element axis word array. The
+ * walk is a per-level LOOP rewriting its state (inexpressible
+ * compactly as an expression tree), hence the generated Java loop;
+ * interpreted eval runs the identical recurrence ([[HilbertIndexN.index]]).
+ * The 3-key t96 configuration is this expression at n = 3. Adjacency
+ * (every consecutive index step moves exactly one cell in one
+ * dimension — Morton's Z breaks this at every orthant seam) is
+ * spec-verified on the full 8×8×8 and 8^4 grids via the inverse
+ * transform.
  *
  * Caller contract mirrors [[graft.operators.Layout.zValueN]]: inputs
  * already in `[0, 2^bits)`; `n·bits ≤ 62` keeps the index positive;
@@ -55,7 +59,7 @@ case class HilbertIndexN(children: Seq[Expression], bits: Int)
       x(i) = v.asInstanceOf[Long]
       i += 1
     }
-    HilbertIndex3.index(x, bits)
+    HilbertIndexN.index(x, bits)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -114,4 +118,72 @@ object HilbertIndexN {
   /** Column-API entry: `graft_hilbertn(x1..xn, bits)`. */
   def apply(cols: Seq[Column], bits: Int): Column =
     bridge.column(HilbertIndexN(cols.map(bridge.expression), bits))
+
+  /** The shared JVM recurrence (interpreted eval + spec replays):
+    * Skilling AxestoTranspose followed by the MSB-first round-robin
+    * interleave. MUTATES `x`. */
+  private[graft] def index(x: Array[Long], bits: Int): Long = {
+    val n = x.length
+    var q = 1L << (bits - 1)
+    while (q > 1L) {
+      val p = q - 1L
+      var i = 0
+      while (i < n) {
+        if ((x(i) & q) != 0L) x(0) ^= p
+        else { val t = (x(0) ^ x(i)) & p; x(0) ^= t; x(i) ^= t }
+        i += 1
+      }
+      q >>= 1
+    }
+    var i = 1
+    while (i < n) { x(i) ^= x(i - 1); i += 1 }
+    var t = 0L
+    q = 1L << (bits - 1)
+    while (q > 1L) { if ((x(n - 1) & q) != 0L) t ^= q - 1L; q >>= 1 }
+    i = 0
+    while (i < n) { x(i) ^= t; i += 1 }
+    var d = 0L
+    var b = bits - 1
+    while (b >= 0) {
+      i = 0
+      while (i < n) { d = (d << 1) | ((x(i) >> b) & 1L); i += 1 }
+      b -= 1
+    }
+    d
+  }
+
+  /** The inverse walk (index → axes) — spec-only, for the adjacency
+    * and bijection properties (Skilling TransposetoAxes after
+    * un-interleaving). */
+  private[graft] def axes(d: Long, bits: Int, n: Int): Array[Long] = {
+    val x = new Array[Long](n)
+    var pos = n * bits - 1
+    var b = bits - 1
+    while (b >= 0) {
+      var i = 0
+      while (i < n) {
+        x(i) |= ((d >> pos) & 1L) << b
+        pos -= 1
+        i += 1
+      }
+      b -= 1
+    }
+    var t = x(n - 1) >> 1
+    var i = n - 1
+    while (i > 0) { x(i) ^= x(i - 1); i -= 1 }
+    x(0) ^= t
+    var q = 2L
+    val top = 2L << (bits - 1)
+    while (q != top) {
+      val p = q - 1L
+      i = n - 1
+      while (i >= 0) {
+        if ((x(i) & q) != 0L) x(0) ^= p
+        else { t = (x(0) ^ x(i)) & p; x(0) ^= t; x(i) ^= t }
+        i -= 1
+      }
+      q <<= 1
+    }
+    x
+  }
 }

@@ -3375,8 +3375,7 @@ object Funnel {
    *
    * The skew-safe route is the SORT-BASED fold ([[iterativeSorted]]),
    * not a segment split, so [[Bucketed]]'s `seconds` is unused here;
-   * it hands an RDD to `createDataFrame`, so building it already runs
-   * the scan and the user-keyed shuffle.
+   * like every other route it builds with no Spark job.
    * Measured with one power key: the single fold dies at a 48M-event
    * key while the sorted fold completes in 27 s, and the sorted fold
    * already wins 3.2× at 10M, so [[Auto]]'s 16M threshold errs safe.
@@ -3435,7 +3434,6 @@ object Funnel {
       typeCol: String, tsCol: String, orderCol: String, valCol: String,
       stages: Seq[IterStage], anchor: IterAnchor): DataFrame = {
     val k = stages.length
-    val spark = events.sparkSession
     // oid keeps the order column's NATIVE type: the array fold's
     // sort_array ties break in that type's own ordering, and a cast
     // here (e.g. string "9"/"10") would re-order ties and break the
@@ -3454,48 +3452,59 @@ object Funnel {
         (1 to k).map(j => org.apache.spark.sql.types.StructField(
           s"ts${j}_us", org.apache.spark.sql.types.LongType)))
     val anchorFirst = anchor == AnchorFirst
-    val tps = stages.map(_.tp).toArray
-    val conds = stages.map(_.cond).toArray
-    val folded = parted.rdd.mapPartitions { it =>
+    val st = stages.toArray
+    // a Dataset map, not an RDD handed to createDataFrame: the plan
+    // stays lazy, so building it runs neither the scan nor the shuffle
+    parted.mapPartitions { it =>
       val buf = it.buffered
       new Iterator[org.apache.spark.sql.Row] {
         def hasNext: Boolean = buf.hasNext
         def next(): org.apache.spark.sql.Row = {
           val user = buf.head.get(0)
-          val d = new Array[Long](k); val dSet = new Array[Boolean](k)
-          val ts = new Array[Long](k); val tsSet = new Array[Boolean](k)
+          val d = new Array[Long](k)
+          val ts = Array.fill(k)(IterUnreached)
           while (buf.hasNext && buf.head.get(0) == user) {
             val r = buf.next()
-            val us = r.getLong(1); val tp = r.getString(3)
-            val v = r.getLong(4)
-            // DESCENDING stage order = the pre-state rule with zero
-            // allocations: stage idx reads only slot idx-1, which a
-            // descending walk has not yet written (round-16 review —
-            // clone-per-event was ~100M arrays at the 48M power key)
-            var idx = k - 1
-            while (idx >= 0) {
-              val passes = tp == tps(idx) && (idx == 0 ||
-                (dSet(idx - 1) && (conds(idx) match {
-                  case Some(RelGt(num, den)) => v * den > d(idx - 1) * num
-                  case None => true
-                })))
-              if (passes) {
-                val cand = if (idx == 0 || !anchorFirst) v else d(idx - 1)
-                d(idx) = if (dSet(idx)) math.min(d(idx), cand) else cand
-                dSet(idx) = true
-                if (!tsSet(idx)) { ts(idx) = us; tsSet(idx) = true }
-              }
-              idx -= 1
-            }
+            iterAdvance(st, anchorFirst, d, ts, r.getLong(1), r.getString(3),
+              r.getLong(4))
           }
-          val reached = tsSet.count(identity)
-          org.apache.spark.sql.Row.fromSeq(user +: reached +:
-            (0 until k).map(j =>
-              if (tsSet(j)) ts(j) else null.asInstanceOf[Any]))
+          org.apache.spark.sql.Row.fromSeq(user +:
+            ts.count(_ != IterUnreached) +: ts.toSeq.map(t =>
+              if (t == IterUnreached) null else t))
         }
       }
+    }(org.apache.spark.sql.Encoders.row(outSchema))
+  }
+
+  /** [[iterAdvance]]'s mark for a stage no chain has reached yet. */
+  private[graft] val IterUnreached = Long.MinValue
+
+  /** One event of the min-anchor dominance fold ([[iterStep]]'s
+    * transition and argument) over plain arrays, IN PLACE: `ts(j) ==
+    * [[IterUnreached]]` marks stage j unreached, and `d(j)` is valid
+    * exactly where `ts(j)` is set (both are first written by the same
+    * advance). Walking the stages in DESCENDING order is the pre-state
+    * rule with zero allocations: stage j reads only slot j-1, which
+    * the walk has not yet written (clone-per-event was ~100M arrays at
+    * a 48M-event power key). The sorted skew route and the streaming
+    * twin both fold with this one function. */
+  private[graft] def iterAdvance(stages: Array[IterStage],
+      anchorFirst: Boolean, d: Array[Long], ts: Array[Long], us: Long,
+      tp: String, v: Long): Unit = {
+    var j = stages.length - 1
+    while (j >= 0) {
+      val passes = tp == stages(j).tp && (j == 0 ||
+        (ts(j - 1) != IterUnreached && (stages(j).cond match {
+          case Some(RelGt(num, den)) => v * den > d(j - 1) * num
+          case None => true
+        })))
+      if (passes) {
+        val cand = if (j == 0 || !anchorFirst) v else d(j - 1)
+        d(j) = if (ts(j) != IterUnreached) math.min(d(j), cand) else cand
+        if (ts(j) == IterUnreached) ts(j) = us
+      }
+      j -= 1
     }
-    spark.createDataFrame(folded, outSchema)
   }
 
   /**

@@ -176,32 +176,6 @@ object Layout {
     graft.functions.HilbertIndex(x.cast("long"), y.cast("long"), bits)
   }
 
-  /** 3-KEY Hilbert index ([[zValueN]]'s locality upgrade at n = 3,
-    * the t96 configuration) — Skilling's transpose algorithm as the
-    * native codegen'd [[graft.functions.HilbertIndex3]] loop. Same
-    * caller contract as [[zValueN]]: inputs in `[0, 2^bits)`,
-    * `3·bits ≤ 62`. Note the 3-D curve is Skilling's orientation, a
-    * different (equally valid) Hilbert curve family than the 2-D
-    * [[hilbertValue]]'s classical xy2d orientation — each gates
-    * against its own cross-engine replay. */
-  def hilbertValue3(x: Column, y: Column, z: Column, bits: Int): Column = {
-    require(bits >= 1 && 3 * bits <= 62, "need 1 <= bits and 3*bits <= 62")
-    graft.functions.HilbertIndex3(x.cast("long"), y.cast("long"),
-      z.cast("long"), bits)
-  }
-
-  /** [[zOrderWriteN]]'s 3-key Hilbert sibling — range-partition +
-    * sort on [[hilbertValue3]], same pmod bounding, same optional
-    * audit, key staged once ([[stagedClusteredWrite]]). */
-  def hilbertOrderWrite3(df: DataFrame, cols: Seq[String], bits: Int,
-      path: String, numFiles: Int, audit: Boolean = false): Unit = {
-    require(cols.length == 3, "hilbertOrderWrite3 takes exactly 3 keys")
-    if (audit) requireBounded(df, cols, bits)
-    val Seq(a, b, c) = cols.map(k =>
-      pmod(col(k).cast("long"), lit(1L << bits)))
-    stagedClusteredWrite(df, hilbertValue3(a, b, c, bits), path, numFiles)
-  }
-
   /** [[hilbertValue]] built from STOCK operators only — the
     * no-custom-Expression alternative, kept as the measured
     * comparison point (measured at ~16× the native loop's cost) and as
@@ -243,9 +217,11 @@ object Layout {
     * arity via the dimension-generic Skilling transpose
     * ([[graft.functions.HilbertIndexN]]'s native codegen'd loop).
     * Same caller contract as [[zValueN]]: inputs in `[0, 2^bits)`,
-    * `n·bits ≤ 62`. Same curve family and orientation as
-    * [[hilbertValue3]] (bit-identical at n = 3, spec-asserted); the
-    * 2-D [[hilbertValue]] keeps its classical xy2d orientation. */
+    * `n·bits ≤ 62`. Skilling's orientation — a different (equally
+    * valid) Hilbert curve family than the 2-D [[hilbertValue]]'s
+    * classical xy2d orientation, which it does not reproduce at n = 2;
+    * each gates against its own cross-engine replay (t98 the 2-D
+    * curve, t99 this one at n = 3). */
   def hilbertValueN(cols: Seq[Column], bits: Int): Column = {
     val n = cols.length
     require(n >= 2, "interleave needs at least two keys")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.ColumnMeta
 import graft.operators.Enrich
 
@@ -24,8 +26,12 @@ import graft.operators.Enrich
  * watermarked tumbling-window aggregation and arbitrary-stateful
  * sessionization via `flatMapGroupsWithState` — the Flink
  * keyed-state/timer analogue.
+ *
+ * Serializable because the CEP machine values ([[Cep]]) are closures
+ * over this object's helpers that ship to the executors; a Scala 2.13
+ * module serializes as a proxy naming its class, never its fields.
  */
-object StreamingIngest {
+object StreamingIngest extends Serializable {
 
   /** Legacy raw schema of a TIMESTAMP(NANOS) events corpus: streamed as
     * raw nanos (LongType) and converted to TimestampType (µs
@@ -212,80 +218,27 @@ object StreamingIngest {
       .select(col("window.start").as("window_start"), col(keyCol),
         col("sketch"))
 
-  /** One micro-batch of STREAMING ANN-index maintenance, EXACTLY-ONCE
-    * by batch id: the batch is coded against the frozen quantizers and
-    * committed through [[graft.operators.CommitLog]] — data visibility
-    * and commit are one atomic directory rename, the replay check is
-    * the committed directory's existence, and there is no second write
-    * for a crash to land between (the round-9 one-batch duplication
-    * window is structurally gone; StreamingSpec's crash-injection row
-    * proves it). The committed batch is an unbucketed L0 side run the
-    * probes union in; a periodic
-    * [[graft.operators.VectorOps.compactIndex]] folds runs into the
-    * bucketed base, restoring fully exchange-free probes. `numBuckets`
-    * is retired by that design (the side run is unbucketed until
-    * compaction, which reads the bucket spec from the catalog). */
-  def appendVectorBatch(batch: DataFrame, batchId: Long, idCol: String,
-      vecCol: String, table: String): Unit =
-    graft.operators.VectorOps.appendToIndexCommitted(batch, idCol, vecCol,
-      table, batchId)
-
-  /** [[appendVectorBatch]]'s PQ twin: one exactly-once micro-batch of
-    * PQ-index maintenance
-    * ([[graft.operators.VectorOps.appendToPqIndexCommitted]] — frozen
-    * codebooks, atomic CommitLog rename). */
-  def appendPqBatch(batch: DataFrame, batchId: Long, idCol: String,
-      vecCol: String, table: String): Unit =
-    graft.operators.VectorOps.appendToPqIndexCommitted(batch, idCol, vecCol,
-      table, batchId)
-
-  /** [[appendVectorBatch]]'s keyword twin: one idempotent micro-batch of
-    * BM25-index maintenance
+  /** One idempotent micro-batch of BM25-index maintenance
     * ([[graft.operators.Retrieval.appendToBm25Index]] under a
-    * `<table>_appends` ledger). The BM25 append spans THREE tables
-    * (postings, docs, stats overwrite), which a single-directory rename
-    * cannot cover — this path keeps the ledger recipe and its one-batch
-    * crash window; the honest remedy is a multi-table transactional
-    * format (the documented Iceberg seam, DESIGN.md). */
+    * `<table>_appends` ledger) — a [[streamingIndexSink]] writer. The
+    * BM25 append spans THREE tables (postings, docs, stats overwrite),
+    * which a single-directory rename cannot cover — this path keeps the
+    * ledger recipe and its one-batch crash window; the honest remedy is
+    * a multi-table transactional format (the documented Iceberg seam,
+    * DESIGN.md). [[graft.operators.Retrieval.appendToBm25IndexCommitted]]
+    * is the writer WITHOUT the crash window: the batch's postings and
+    * docs land under ONE CommitLog rename, and probes read the committed
+    * batches via `loadBm25Index[AsOf]` (the base-table-only
+    * [[graft.operators.Retrieval.bm25TopKFromIndex]] does not see them
+    * until a compaction folds them). */
   def appendDocBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, table: String, numBuckets: Int = 8): Unit =
     ledgered(batch, batchId, s"${table}_appends")(
       graft.operators.Retrieval.appendToBm25Index(_, idCol, textCol,
         table, numBuckets))
 
-  /** [[appendDocBatch]] WITHOUT the crash window: the atomic
-    * [[graft.operators.Retrieval.appendToBm25IndexCommitted]] commit —
-    * the batch's postings and docs land under ONE CommitLog rename, so
-    * replay idempotence comes from the log itself (no side ledger) and
-    * a crash leaves either nothing or the whole batch. Probes read the
-    * committed batches via `loadBm25Index[AsOf]`; the trade vs the
-    * ledgered path is that the base-table-only
-    * [[graft.operators.Retrieval.bm25TopKFromIndex]] does not see side
-    * batches until a compaction folds them. */
-  def appendDocBatchCommitted(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, table: String): Unit = {
-    graft.operators.Retrieval.appendToBm25IndexCommitted(batch, idCol,
-      textCol, table, batchId)
-    ()
-  }
-
-  /** The streaming BM25 maintenance sink over the atomic committed
-    * path — [[streamingBm25Append]]'s exactly-once-by-rename twin. */
-  def streamingBm25AppendCommitted(stream: DataFrame, idCol: String,
-      textCol: String, table: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Staging.scoped {
-          appendDocBatchCommitted(batch, id, idCol, textCol, table)
-        }
-      }
-      .trigger(trigger)
-      .start()
-
-  /** [[appendVectorBatch]]'s DELETE twin: one idempotent micro-batch of
-    * tombstones ([[graft.operators.VectorOps.deleteFromIndex]] under a
+  /** One idempotent micro-batch of tombstones against a persisted ANN
+    * index ([[graft.operators.VectorOps.deleteFromIndex]] under a
     * SEPARATE `<table>_deletes` ledger — append and delete streams have
     * independent batch-id sequences). Replaying a committed batch id is
     * a no-op; within a fresh batch the tombstone write itself is
@@ -347,98 +300,6 @@ object StreamingIngest {
     }
   }
 
-  /** CONTINUOUS index maintenance: the t50 append path as a streaming
-    * sink — each micro-batch of new vectors is coded against the frozen
-    * quantizers and appended to the cell-bucketed index, idempotently
-    * per batch id ([[appendVectorBatch]]). This closes the production
-    * loop for the build-once/probe-many family: build once, probe many,
-    * and INGEST FOREVER, with per-batch cost proportional to the batch
-    * (one coding pass + one atomic directory commit) — never the index.
-    * StreamingSpec proves stream-fed equals one-shot batch append, that
-    * a replayed batch id leaves the index untouched, and that a crash
-    * mid-batch leaves NOTHING visible (exactly-once, not just
-    * replay-safe). `numBuckets` kept for source compatibility; the
-    * committed side runs are unbucketed until compaction. */
-  def streamingIndexAppend(stream: DataFrame, idCol: String,
-      vecCol: String, table: String, checkpoint: String,
-      numBuckets: Int = 8): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVectorBatch(batch, batchId, idCol, vecCol, table)
-      }
-      .start()
-
-  /** [[streamingIndexAppend]]'s PQ twin: continuous PQ-index
-    * maintenance — each micro-batch is coded against the frozen
-    * codebooks and atomically committed ([[appendPqBatch]]).
-    * StreamingSpec proves stream-fed ≡ one-shot batch append and
-    * replayed-batch no-op. */
-  def streamingPqAppend(stream: DataFrame, idCol: String,
-      vecCol: String, table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendPqBatch(batch, batchId, idCol, vecCol, table)
-      }
-      .start()
-
-  /** [[streamingIndexAppend]]'s keyword twin: continuous BM25-index
-    * maintenance — each micro-batch of new documents appends its
-    * term-bucketed postings and refreshes the corpus stats,
-    * idempotently per batch id ([[appendDocBatch]]). StreamingSpec
-    * proves the stream-fed index answers probes exactly as a one-shot
-    * batch append. */
-  def streamingBm25Append(stream: DataFrame, idCol: String,
-      textCol: String, table: String, checkpoint: String,
-      numBuckets: Int = 8): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendDocBatch(batch, batchId, idCol, textCol, table, numBuckets)
-      }
-      .start()
-
-  /** CONTINUOUS index deletes — the delete stream (GDPR erasure feed,
-    * a CDC delete topic) as a streaming sink: each micro-batch of ids
-    * is tombstoned idempotently per batch id ([[deleteVectorBatch]]).
-    * Per-batch cost is the tombstone write — never the index; a
-    * periodic [[graft.operators.VectorOps.compactIndex]] (maintenance
-    * cadence, not per-batch) physically removes the rows and keeps the
-    * probe-time anti-join metadata-sized. */
-  def streamingIndexDelete(stream: DataFrame, idCol: String,
-      table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deleteVectorBatch(batch, batchId, idCol, table)
-      }
-      .start()
-
-  /** [[streamingIndexDelete]]'s PQ twin: continuous tombstones against
-    * a persisted PQ index ([[deletePqBatch]]); a periodic
-    * [[graft.operators.VectorOps.compactPqIndex]] physically removes
-    * the rows. */
-  def streamingPqDelete(stream: DataFrame, idCol: String,
-      table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deletePqBatch(batch, batchId, idCol, table)
-      }
-      .start()
-
-  /** [[streamingIndexDelete]]'s keyword twin: continuous BM25 deletes
-    * with the per-batch exact stats refresh ([[deleteDocBatch]]). */
-  def streamingBm25Delete(stream: DataFrame, idCol: String,
-      table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deleteDocBatch(batch, batchId, idCol, table)
-      }
-      .start()
-
   /** [[deleteVectorBatch]]'s minhash twin: idempotent micro-batch
     * tombstones against a persisted near-dup index
     * ([[graft.operators.TextDedup.deleteFromMinhashIndex]] under the
@@ -448,15 +309,49 @@ object StreamingIngest {
     ledgered(batch, batchId, s"${table}_deletes")(
       graft.operators.TextDedup.deleteFromMinhashIndex(_, idCol, table))
 
+  /** CONTINUOUS index maintenance — the one streaming sink for every
+    * index writer: each micro-batch runs `perBatch(batch, batchId)` in
+    * its own [[graft.operators.Staging]] scope, with the batch id from
+    * the offset log under `checkpoint` (so a restart replays a batch
+    * under the id it had). This closes the production loop for the
+    * build-once/probe-many family — build once, probe many, INGEST
+    * FOREVER — with per-batch cost proportional to the batch, never
+    * the index. The writers:
+    *   - appends, exactly-once by one atomic CommitLog rename per batch
+    *     (a replayed id is refused, a crash mid-batch leaves NOTHING
+    *     visible): [[graft.operators.VectorOps.appendToIndexCommitted]]
+    *     and [[graft.operators.VectorOps.appendToPqIndexCommitted]]
+    *     (coded against the frozen quantizers/codebooks; the committed
+    *     side runs are unbucketed L0 runs the probes union in until
+    *     [[graft.operators.VectorOps.compactIndex]] /
+    *     `compactPqIndex` folds them into the bucketed base) and
+    *     [[graft.operators.Retrieval.appendToBm25IndexCommitted]];
+    *   - appends and deletes idempotent per batch id by a ledger:
+    *     [[appendDocBatch]], [[deleteVectorBatch]], [[deletePqBatch]],
+    *     [[deleteDocBatch]] (a periodic compaction — maintenance
+    *     cadence, not per batch — physically removes tombstoned rows
+    *     and keeps the probe-time anti-join metadata-sized).
+    * StreamingSpec proves each stream-fed index answers probes exactly
+    * as its one-shot batch twin, that replayed batch ids are no-ops,
+    * and that a crash before the commit leaves nothing. */
+  def streamingIndexSink(stream: DataFrame, checkpoint: String)(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.operators.Staging.scoped { perBatch(batch, batchId) }
+      }
+      .start()
+
   /** CONTINUOUS forget-everywhere — the t95 takedown operation
     * ([[graft.operators.Forget.forgetEverywhere]]) as a streaming sink,
     * because takedown requests arrive as a stream in production (a
     * GDPR erasure feed, a trust-and-safety queue): each micro-batch of
     * ids is tombstoned across EVERY configured index of the corpus
-    * under one foreachBatch, each modality guarded by its own
-    * per-table batch-id ledger — so a replayed batch is a no-op per
-    * modality, and a crash between modality writes completes exactly
-    * the missing ones on replay (per-modality exactly-once; the
+    * under one [[streamingIndexSink]] batch, each modality guarded by
+    * its own per-table batch-id ledger — so a replayed batch is a no-op
+    * per modality, and a crash between modality writes completes
+    * exactly the missing ones on replay (per-modality exactly-once; the
     * composition is idempotent because tombstone writes are). Per-batch
     * cost stays O(|ids|) × modalities, never index-sized. All
     * configured indexes must share the stream's id space — run one
@@ -466,15 +361,12 @@ object StreamingIngest {
       checkpoint: String): StreamingQuery = {
     require(ix.productIterator.exists(_ != None),
       "streamingForget with no indexes is a no-op — pass at least one")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ix.ann.foreach(deleteVectorBatch(batch, batchId, idCol, _))
-        ix.pq.foreach(deletePqBatch(batch, batchId, idCol, _))
-        ix.bm25.foreach(deleteDocBatch(batch, batchId, idCol, _))
-        ix.minhash.foreach(deleteMinhashBatch(batch, batchId, idCol, _))
-      }
-      .start()
+    streamingIndexSink(stream, checkpoint) { (batch, batchId) =>
+      ix.ann.foreach(deleteVectorBatch(batch, batchId, idCol, _))
+      ix.pq.foreach(deletePqBatch(batch, batchId, idCol, _))
+      ix.bm25.foreach(deleteDocBatch(batch, batchId, idCol, _))
+      ix.minhash.foreach(deleteMinhashBatch(batch, batchId, idCol, _))
+    }
   }
 
   /** Streaming exact deduplication — the dedup family's streaming twin:
@@ -895,338 +787,332 @@ object StreamingIngest {
   }
 
   // -------------------------------------------------------------------
-  // Streaming CEP: watermark-ordered funnel matching (the w6 twin)
+  // Streaming CEP: one event-time buffer driving one machine per shape
   // -------------------------------------------------------------------
 
-  final case class FunnelEvent(user_id: Long, usMicros: Long,
-      eventId: Long, tp: String, ts: java.sql.Timestamp)
-  final case class FunnelCepState(stage: Int, witnessUs: Seq[Long],
-      pending: Seq[(Long, Long, String)])
-  final case class FunnelUpdate(user_id: Long, stage_reached: Int,
-      witness_us: Seq[Long])
+  /** One CEP input row: event time, event_id, type and the stage
+    * condition VALUE (integer fixed-point, the caller's conversion; 0
+    * for the typed shapes, whose machines never read it). */
+  final case class FunnelValueEvent(user_id: Long, usMicros: Long,
+      eventId: Long, tp: String, v: Long, ts: java.sql.Timestamp)
 
-  /**
-   * Streaming CEP funnel — the [[graft.operators.Funnel]] batch
-   * operator's twin, and the honest answer to CEP's ordering problem
-   * in a streaming runtime: the greedy stage fold is ORDER-SENSITIVE
-   * (an early `view` arriving after a later `click` changes the
-   * verdict), so events cannot be folded in arrival order. Flink's CEP
-   * library buffers by event time behind the watermark; this operator
-   * does exactly that with Spark primitives — per-user state holds a
-   * PENDING buffer of not-yet-mature events, and each invocation folds
-   * only the prefix at or below the current watermark, in (event-time,
-   * event_id) order. An event-time timeout re-invokes the group when
-   * the watermark passes its earliest pending event even if no new
-   * data arrives, so buffered events always flush.
-   *
-   * Contract (spec-asserted): with any on-time arrival order, the last
-   * Update-mode emission per user equals the batch [[graft.operators
-   * .Funnel.funnel]] over the same rows. Emission is delta-style: a
-   * row only when the stage advances, plus a first-sight stage-0 row
-   * for users whose entry is RETAINED (pending buffer or witnesses) —
-   * users with only non-matching mature events emit nothing (their
-   * entry is never created, so a first-sight row would repeat on
-   * every touching batch; emit-once requires suppressing it).
-   * State is bounded per ACTIVE user: witness + stage are O(k);
-   * pending holds at most the user's events inside the watermark lag
-   * (the same bound as any event-time buffer); a COMPLETED funnel
-   * drops its buffer and stops emitting. Late events (behind the
-   * watermark on arrival) are dropped by the stream's watermark
-   * filter — standard CEP best-effort lateness.
-   *
-   * State RETENTION: an informationally-empty entry (stage 0, no
-   * witnesses, no buffer) is removed immediately — losslessly, since
-   * re-creating it from scratch folds identically (dormant users cost
-   * nothing). In-progress funnels must keep their witnesses. Completed
-   * funnels keep a k-sized tombstone so post-completion stragglers
-   * don't restart the pattern; with the default infinite
-   * `matchRetentionMs` that tombstone lives for the stream's life
-   * (one O(k) entry per COMPLETED user — the documented trade for
-   * exactly-once match semantics). A finite `matchRetentionMs` frees
-   * it once the watermark passes `completion + retention` — Flink's
-   * AFTER MATCH SKIP PAST LAST ROW with a TTL: an event arriving
-   * later than that starts a NEW funnel instance (spec-asserted).
-   */
-  def updateFunnel(stages: IndexedSeq[String],
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelCepState]): Iterator[FunnelUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelCepState(0, Nil, Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    // cleanup timer on a completed funnel: retention elapsed, free the
-    // tombstone (any later event for this user starts a new instance).
-    // Reachable only via the finite-retention timer: GroupState CLEARS
-    // a pending timeout on every invocation that does not re-set it,
-    // so a pre-completion flush timer cannot fire here stale
-    if (prev.stage == k && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var stage = prev.stage
-    var wit = prev.witnessUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      if (stage < k && tp == stages(stage)) { wit = wit :+ us; stage += 1 }
-    }
-    val rest = if (stage == k) Nil else immature
-    val removable = stage == 0 && wit.isEmpty && rest.isEmpty
-    if (removable) {
-      // nothing worth remembering — drop (or never create) the entry
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelCepState(stage, wit, rest))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (stage == k && matchRetentionMs != Long.MaxValue)
-        // EventTimeTimeout rejects timestamps at/behind the watermark —
-        // clamp for funnels completing long after their last witness
-        state.setTimeoutTimestamp(math.max(
-          wit.last / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    // first-sight stage-0 rows only for RETAINED entries — an
-    // immediately-removable entry leaves no state, so emitting for it
-    // would repeat on every touching batch (at-least-once) instead of
-    // the emit-once delta contract; such users emit nothing until a
-    // stage advances
-    if ((first && !removable) || stage != prev.stage)
-      Iterator(FunnelUpdate(userId, stage, wit))
-    else Iterator.empty
-  }
+  /** A buffered event: (event time µs, event_id, type, value). */
+  private type Ev = (Long, Long, String, Long)
 
   /** DP-slot sentinel for "no partial match at this stage" — the state
     * encoder carries plain longs, not options. */
   private val NoStart = Long.MinValue
 
-  final case class FunnelWinState(b: Seq[Long],
-      pending: Seq[(Long, Long, String)])
-  final case class FunnelWinUpdate(user_id: Long, stage_reached: Int,
-      win_start_us: Option[Long])
+  /** The driver's per-key state: the machine's own state, the events
+    * the watermark has not passed yet, and the event time at which the
+    * machine first became done ([[NoStart]] before that). */
+  final case class CepBuffer[S](machine: S,
+      pending: Seq[(Long, Long, String, Long)], doneUs: Long)
+
+  /** A streaming CEP twin as a value: everything in which the pattern
+    * shapes differ. The buffer, timer and retention work is
+    * [[cepUpdate]]'s alone.
+    *
+    * @param init       the state of a key seen for the first time
+    * @param step       fold one mature event into the state
+    * @param idle       the state holds nothing worth keeping: the
+    *                   entry is dropped while nothing is buffered, and
+    *                   re-creating it from `init` folds identically
+    * @param done       the match is complete: the retention TTL runs
+    *                   and the buffer drops
+    * @param keeps      which immature events stay buffered (default:
+    *                   all until `done`, none after) — the loop shapes
+    *                   keep the events a complete spine can still absorb
+    * @param retainFrom the event time the TTL counts from, given the
+    *                   state and the time it first became done
+    * @param retentionMs the TTL of a done entry; `Long.MaxValue` keeps
+    *                   it for the stream's life
+    * @param wakeUps    event times (µs) at which the key must re-run
+    *                   even without data (the absence holding pen)
+    * @param row        the observable row: emitted on first sight of a
+    *                   retained entry and whenever it changes
+    * @param drain      the per-match rows the folded state owes at the
+    *                   watermark (µs), and the state without them
+    */
+  private final case class Cep[S, O](
+      init: S,
+      step: (S, Ev) => S,
+      idle: S => Boolean,
+      done: S => Boolean = (_: S) => false,
+      keeps: Option[(S, Ev) => Boolean] = None,
+      retainFrom: (S, Long) => Long = (_: S, doneUs: Long) => doneUs,
+      retentionMs: Long = Long.MaxValue,
+      wakeUps: S => Seq[Long] = (_: S) => Nil,
+      row: Option[(Long, S) => O] = None,
+      drain: (Long, S, Long) => (S, Seq[O]) =
+        (_: Long, s: S, _: Long) => (s, Nil))
 
   /**
-   * Streaming WINDOWED funnel — [[graft.operators.Funnel.funnelWithin]]'s
-   * twin, completing the CEP family's batch/stream symmetry for the
-   * `within(T)` bound. Same watermark-buffer discipline as
-   * [[updateFunnel]] (the DP is order-sensitive too: a late-but-on-time
-   * stage-1 event can RAISE the max feasible start retroactively), but
-   * the per-user state is the max-start DP vector instead of the greedy
-   * stage pointer: B[j] = the latest stage-1 time among in-window
-   * chains at stage j (NoStart when none) — k longs however many
-   * restarts the user's history holds.
+   * The one event-time buffer behind every streaming CEP twin — Flink
+   * CEP's keyed buffer flushed at the watermark, on Spark primitives.
+   * Pattern folds are ORDER-SENSITIVE (an early `view` arriving after a
+   * later `click` changes the verdict), so events are never folded in
+   * arrival order: the key's `pending` buffer holds the events the
+   * watermark has not passed, and each invocation folds only the
+   * mature prefix, in (event time, event_id) order. Late events
+   * (behind the watermark on arrival) are dropped by the stream's
+   * watermark filter — standard CEP best-effort lateness.
    *
-   * Emission is delta-style on the OBSERVABLE pair: a row whenever
-   * (stage_reached, win_start_us) changes — the window start can move
-   * to a later restart without the stage changing, and the last
-   * emission must equal the batch operator (spec contract). State
-   * retention mirrors [[updateFunnel]]: empty entries drop losslessly,
-   * completed funnels tombstone with the optional after-match TTL.
+   * One invocation:
+   *   - a timeout on a done entry with nothing buffered is its
+   *     retention timer: the entry is freed and a later event starts a
+   *     new instance (Flink's AFTER MATCH SKIP PAST LAST ROW with a
+   *     TTL). With events buffered the timer was their flush timer, so
+   *     the invocation folds them instead (a complete loop spine can
+   *     still absorb);
+   *   - the new rows join `pending`; the mature part folds through
+   *     `step`, and the first event after which the state is `done`
+   *     stamps `doneUs`;
+   *   - the immature events the machine still `keeps` stay buffered;
+   *   - an `idle` state with nothing buffered is removed (or never
+   *     created) — losslessly;
+   *   - otherwise the timeout is the earliest of the oldest buffered
+   *     event, the machine's `wakeUps` and — for a done entry with
+   *     nothing buffered (the only kind the retention timer frees) and
+   *     a finite retention — `retainFrom + retentionMs`, clamped past
+   *     the watermark, which the timer must not sit behind. GroupState
+   *     clears a timeout that an invocation does not re-set, so no
+   *     stale flush timer can fire on a done entry;
+   *   - the output is the drained per-match rows, plus the observable
+   *     row when it changed or on first sight of a retained entry (an
+   *     entry removed at once emits no first-sight row: it would repeat
+   *     on every touching batch, breaking emit-once).
    */
-  def updateFunnelWithin(stages: IndexedSeq[String], windowMicros: Long,
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelWinState]): Iterator[FunnelWinUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(
-      FunnelWinState(Seq.fill(k)(NoStart), Nil))
-    def stageOf(b: Seq[Long]): Int = b.count(_ != NoStart)
-    def winOf(b: Seq[Long]): Option[Long] = {
-      val s = stageOf(b); if (s > 0) Some(b(s - 1)) else None
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    if (stageOf(prev.b) == k && state.hasTimedOut) {
+  private def cepUpdate[S, O](m: Cep[S, O])(key: Long,
+      rows: Iterator[FunnelValueEvent],
+      state: GroupState[CepBuffer[S]]): Iterator[O] = {
+    val first = !state.exists
+    val prev = state.getOption.getOrElse(CepBuffer(m.init, Nil, NoStart))
+    if (state.hasTimedOut && prev.pending.isEmpty && m.done(prev.machine)) {
       state.remove()
       return Iterator.empty
     }
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val b = prev.b.toArray
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      // pre-event values: an event never extends a chain containing
-      // itself (matches the batch DP's transform-over-pre-state)
-      val pre = b.clone()
-      var j = k
-      while (j >= 2) {
-        if (tp == stages(j - 1) && pre(j - 2) != NoStart &&
-            us <= pre(j - 2) + windowMicros)
-          b(j - 1) = math.max(b(j - 1), pre(j - 2))
-        j -= 1
-      }
-      if (tp == stages(0)) b(0) = math.max(b(0), us)
+    val wmMs = state.getCurrentWatermarkMs()
+    val (mature, immature) = (prev.pending ++
+      rows.map(e => (e.usMicros, e.eventId, e.tp, e.v)))
+      .partition(_._1 <= wmMs * 1000L)
+    var s = prev.machine
+    var doneUs = prev.doneUs
+    mature.sortBy(e => (e._1, e._2)).foreach { e =>
+      s = m.step(s, e)
+      if (doneUs == NoStart && m.done(s)) doneUs = e._1
     }
-    val stage = stageOf(b)
-    val rest = if (stage == k) Nil else immature
-    val removable = stage == 0 && rest.isEmpty
+    val (settled, matches) = m.drain(key, s, wmMs * 1000L)
+    s = settled
+    val rest = immature.filter(e => m.keeps.fold(!m.done(s))(_(s, e)))
+    val removable = m.idle(s) && rest.isEmpty
     if (removable) {
       if (!first) state.remove()
     } else {
-      state.update(FunnelWinState(b.toSeq, rest))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (stage == k && matchRetentionMs != Long.MaxValue)
-        state.setTimeoutTimestamp(math.max(
-          b(k - 1) / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
+      state.update(CepBuffer(s, rest, doneUs))
+      val retention =
+        if (m.done(s) && rest.isEmpty && m.retentionMs != Long.MaxValue)
+          Seq(math.max(m.retainFrom(s, doneUs) / 1000L + m.retentionMs,
+            wmMs + 1L))
+        else Nil
+      val timers =
+        (rest.map(_._1) ++ m.wakeUps(s)).map(_ / 1000L + 1L) ++ retention
+      if (timers.nonEmpty) state.setTimeoutTimestamp(timers.min)
     }
-    val out = (stage, winOf(b.toSeq))
-    // same retained-entry first-sight rule as updateFunnel
-    if ((first && !removable) || out != ((stageOf(prev.b), winOf(prev.b))))
-      Iterator(FunnelWinUpdate(userId, stage, out._2))
-    else Iterator.empty
+    val changed = m.row.map(r => r(key, s)).filter(out =>
+      (first && !removable) || out != m.row.get(key, prev.machine))
+    (matches ++ changed).iterator
   }
 
-  /** The streaming windowed funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelWithin]]'s DP
-    * state. */
-  def streamingFunnelWithin(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], windowMicros: Long, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
+  /** The streaming plumbing every CEP twin shares: watermark the
+    * stream, project the [[FunnelValueEvent]] (`v` is the value the
+    * stage conditions read), key by user and run the machine through
+    * [[cepUpdate]]. */
+  private def runCep[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: DataFrame, watermark: String, m: Cep[S, O],
+      v: Column = lit(0L)): Dataset[O] = {
+    val spark = events.sparkSession
     import spark.implicits._
     events
       .withWatermark("ts", watermark)
+      // the watermarked ts column must SURVIVE the projection — the
+      // unsupported-operation checker requires a watermark-tagged
+      // event-time column in the stateful operator's child
       .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
+        col("event_id").as("eventId"), col("event_type").as("tp"),
+        v.as("v"), col("ts"))
+      .as[FunnelValueEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelWithin(stages.toIndexedSeq, windowMicros,
-          matchRetentionMs))
+        GroupStateTimeout.EventTimeTimeout)(cepUpdate(m))
   }
 
-  final case class FunnelGuardState(o: Seq[Boolean], e: Seq[Boolean],
-      pending: Seq[(Long, Long, String)], completionUs: Long)
+  /** Stage reached by a max-start vector (its set slots are a prefix). */
+  private def slotsSet(b: Seq[Long]): Int = b.count(_ != NoStart)
+
+  /** The window start a max-start vector reports: its deepest set slot. */
+  private def deepestStart(b: Seq[Long]): Option[Long] = {
+    val s = slotsSet(b); if (s > 0) Some(b(s - 1)) else None
+  }
+
+  final case class FunnelUpdate(user_id: Long, stage_reached: Int,
+      witness_us: Seq[Long])
+  /** The greedy stage pointer and its witnesses. */
+  final case class FunnelWhereState(stage: Int, witnessUs: Seq[Long])
+
+  /** Greedy pointer + witnesses: stage j advances on the first mature
+    * event its predicate accepts. Conditions are event-local, so
+    * greedy-earliest stays exact. */
+  private def whereMachine(stages: IndexedSeq[(String, Long) => Boolean],
+      retentionMs: Long): Cep[FunnelWhereState, FunnelUpdate] = {
+    val k = stages.length
+    Cep[FunnelWhereState, FunnelUpdate](
+      init = FunnelWhereState(0, Nil),
+      step = { case (s, (us, _, tp, v)) =>
+        if (s.stage < k && stages(s.stage)(tp, v))
+          FunnelWhereState(s.stage + 1, s.witnessUs :+ us)
+        else s
+      },
+      idle = _.stage == 0,
+      done = _.stage == k,
+      retentionMs = retentionMs,
+      row = Some((u, s) => FunnelUpdate(u, s.stage, s.witnessUs)))
+  }
+
+  /**
+   * Streaming CEP funnel — the [[graft.operators.Funnel.funnel]] batch
+   * operator's twin: [[streamingFunnelWhere]] with one type test per
+   * stage, through the [[cepUpdate]] buffer. `watermark` is the allowed
+   * lateness — and therefore the event-time reordering window the
+   * buffer absorbs.
+   *
+   * Contract (spec-asserted): with any on-time arrival order, the last
+   * Update-mode emission per user equals the batch funnel over the same
+   * rows. Emission is delta-style: a row when the stage advances, plus
+   * a first-sight stage-0 row for users whose entry is RETAINED (a
+   * pending buffer) — users with only non-matching mature events emit
+   * nothing. State per active user is the O(k) pointer + witnesses plus
+   * the events inside the watermark lag; a COMPLETED funnel drops its
+   * buffer and stops emitting, and keeps a k-sized tombstone so
+   * stragglers don't restart the pattern — for the stream's life with
+   * the default infinite `matchRetentionMs`, else until the watermark
+   * passes `completion + retention`, after which a new event starts a
+   * NEW instance (spec-asserted).
+   */
+  def streamingFunnel(spark: SparkSession, events: DataFrame,
+      stages: Seq[String], watermark: String,
+      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] =
+    runCep(events, watermark, whereMachine(
+      stages.map(t => (tp: String, _: Long) => tp == t).toIndexedSeq,
+      matchRetentionMs))
+
+  /** The max-start DP vector: B[j] = the latest stage-1 time among
+    * in-window chains at stage j ([[NoStart]] when none). */
+  final case class FunnelWinState(b: Seq[Long])
+  final case class FunnelWinUpdate(user_id: Long, stage_reached: Int,
+      win_start_us: Option[Long])
+
+  private def withinMachine(stages: IndexedSeq[String], windowMicros: Long,
+      retentionMs: Long): Cep[FunnelWinState, FunnelWinUpdate] = {
+    val k = stages.length
+    Cep[FunnelWinState, FunnelWinUpdate](
+      init = FunnelWinState(Seq.fill(k)(NoStart)),
+      step = { case (s, (us, _, tp, _)) =>
+        // pre-event values: an event never extends a chain containing
+        // itself (the batch DP's transform-over-pre-state)
+        val pre = s.b.toArray
+        val b = pre.clone()
+        var j = k
+        while (j >= 2) {
+          if (tp == stages(j - 1) && pre(j - 2) != NoStart &&
+              us <= pre(j - 2) + windowMicros)
+            b(j - 1) = math.max(b(j - 1), pre(j - 2))
+          j -= 1
+        }
+        if (tp == stages(0)) b(0) = math.max(b(0), us)
+        FunnelWinState(b.toSeq)
+      },
+      idle = s => slotsSet(s.b) == 0,
+      done = s => slotsSet(s.b) == k,
+      // the TTL counts from the completing chain's window start
+      retainFrom = (s, _) => s.b(k - 1),
+      retentionMs = retentionMs,
+      row = Some((u, s) =>
+        FunnelWinUpdate(u, slotsSet(s.b), deepestStart(s.b))))
+  }
+
+  /**
+   * Streaming WINDOWED funnel — [[graft.operators.Funnel.funnelWithin]]'s
+   * twin. The DP is order-sensitive too (a late-but-on-time stage-1
+   * event can RAISE the max feasible start retroactively), so it runs
+   * behind the [[cepUpdate]] buffer; the state is k longs however many
+   * restarts the user's history holds. Emission is delta-style on the
+   * OBSERVABLE pair (stage_reached, win_start_us) — the window start
+   * can move to a later restart without the stage changing, and the
+   * last emission must equal the batch operator (spec contract).
+   */
+  def streamingFunnelWithin(spark: SparkSession, events: DataFrame,
+      stages: Seq[String], windowMicros: Long, watermark: String,
+      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] =
+    runCep(events, watermark, withinMachine(stages.toIndexedSeq,
+      windowMicros, matchRetentionMs))
+
+  /** The NFA's open-clean and sticky ever-reached bit vectors. */
+  final case class FunnelGuardState(o: Seq[Boolean], e: Seq[Boolean])
   final case class FunnelGuardUpdate(user_id: Long, stage_reached: Int)
+
+  private def guardedMachine(stages: IndexedSeq[String],
+      notBetween: IndexedSeq[Option[String]], retentionMs: Long)
+      : Cep[FunnelGuardState, FunnelGuardUpdate] = {
+    val k = stages.length
+    Cep[FunnelGuardState, FunnelGuardUpdate](
+      init = FunnelGuardState(Seq.fill(k)(false), Seq.fill(k)(false)),
+      step = { case (s, (_, _, tp, _)) =>
+        val pre = s.o.toArray
+        val o = pre.clone()
+        val ev = s.e.toArray
+        var j = 0
+        while (j < k) {
+          if (tp == stages(j) && (j == 0 || pre(j - 1))) {
+            o(j) = true; ev(j) = true
+          } else if (j < k - 1 && notBetween(j).contains(tp)) o(j) = false
+          j += 1
+        }
+        FunnelGuardState(o.toSeq, ev.toSeq)
+      },
+      idle = s => !s.e.contains(true) && !s.o.contains(true),
+      done = _.e.forall(identity),
+      retentionMs = retentionMs,
+      row = Some((u, s) => FunnelGuardUpdate(u, s.e.count(identity))))
+  }
 
   /**
    * Streaming GUARDED funnel — [[graft.operators.Funnel.funnelGuarded]]'s
-   * twin (CEP `notFollowedBy` inside the pattern): per-user state is
-   * the NFA's open-clean and sticky ever-reached bit vectors plus the
-   * event-time pending buffer; mature events fold in watermark order
-   * (blocker kills are order-sensitive). Emission on stage_reached
-   * change (sticky — it only grows). Retention mirrors the family:
-   * lossless empty-entry removal, completed-match tombstone with the
-   * optional after-match TTL.
+   * twin (CEP `notFollowedBy` inside the pattern): the NFA's bit
+   * vectors behind the [[cepUpdate]] buffer (blocker kills are
+   * order-sensitive). Emission on stage_reached change (sticky — it
+   * only grows).
    */
-  def updateFunnelGuarded(stages: IndexedSeq[String],
-      notBetween: IndexedSeq[Option[String]],
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelGuardState]): Iterator[FunnelGuardUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(
-      FunnelGuardState(Seq.fill(k)(false), Seq.fill(k)(false), Nil, 0L))
-    def stageOf(e: Seq[Boolean]): Int = e.count(identity)
-    if (stageOf(prev.e) == k && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val o = prev.o.toArray
-    val ev = prev.e.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      val pre = o.clone()
-      var j = 0
-      while (j < k) {
-        val adv = tp == stages(j) && (j == 0 || pre(j - 1))
-        if (adv) { o(j) = true; ev(j) = true }
-        j += 1
-      }
-      j = 0
-      while (j < k - 1) {
-        if (notBetween(j).contains(tp) &&
-            !(tp == stages(j) && (j == 0 || pre(j - 1))))
-          o(j) = false
-        j += 1
-      }
-      // the stage-k witness time — the NFA carries no witnesses, so
-      // the completion instant is captured here, once, so the cleanup
-      // timer keys to COMPLETION + retention (post-completion
-      // stragglers must not keep pushing the tombstone expiry out)
-      if (comp == 0L && ev(k - 1)) comp = us
-    }
-    val stage = stageOf(ev.toSeq)
-    val rest = if (stage == k) Nil else immature
-    val removable = stage == 0 && !o.exists(identity) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelGuardState(o.toSeq, ev.toSeq, rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (stage == k && matchRetentionMs != Long.MaxValue && comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    // same retained-entry first-sight rule as updateFunnel
-    if ((first && !removable) || stage != stageOf(prev.e))
-      Iterator(FunnelGuardUpdate(userId, stage))
-    else Iterator.empty
-  }
-
-  /** The streaming guarded funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelGuarded]]'s NFA
-    * state. */
   def streamingFunnelGuarded(spark: SparkSession, events: DataFrame,
       stages: Seq[String], notBetween: Seq[Option[String]],
       watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelGuardUpdate] = {
-    import spark.implicits._
     require(notBetween.length == stages.length - 1,
       "need one (optional) blocker per gap")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelGuarded(stages.toIndexedSeq, notBetween.toIndexedSeq,
-          matchRetentionMs))
+    runCep(events, watermark, guardedMachine(stages.toIndexedSeq,
+      notBetween.toIndexedSeq, matchRetentionMs))
   }
 
+  /** The max-start product NFA's three vectors (see
+    * [[streamingFunnelPatternWithin]]). */
   final case class FunnelPatternWinState(l: Seq[Long], o: Seq[Long],
-      m: Seq[Long], pending: Seq[(Long, Long, String)], completionUs: Long)
+      m: Seq[Long])
 
-  /**
-   * Streaming CONTIGUITY × WITHIN product funnel —
-   * [[graft.operators.Funnel.funnelPatternWithin]]'s twin, closing
-   * the last batch-only gap in the CEP product family: per-user state
-   * is the max-start product NFA's three vectors (`l[j]` — latest
-   * start among chains whose prefix-j match ends at the immediately
-   * previous event; `o[j]` — latest start among chains matched
-   * strictly before it; `m[j]` — the STICKY latest start ever to
-   * actually match stage j, the observable) plus the event-time
-   * pending buffer. Mature events fold in watermark order (strict
-   * hops, notNext kills and window expiry are all order-sensitive);
-   * every advance reads the PRE state (an event never extends the
-   * partials it just created — the guarded-fold rule) and checks the
-   * `within` deadline against the max eligible predecessor (the w8
-   * dominance: the max is also the easiest to satisfy). Emission is
-   * delta-style on (stage_reached, win_start_us); completed funnels
-   * drop their buffer and tombstone with the optional after-match TTL
-   * (the family's documented finality trade, as [[updateFunnelWithin]]).
-   */
-  def updateFunnelPatternWithin(
+  private def patternWithinMachine(
       stages: IndexedSeq[graft.operators.Funnel.PatternStage],
-      windowMicros: Long, matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelPatternWinState])
-      : Iterator[FunnelWinUpdate] = {
+      windowMicros: Long, retentionMs: Long)
+      : Cep[FunnelPatternWinState, FunnelWinUpdate] = {
     val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelPatternWinState(
-      Seq.fill(k)(NoStart), Seq.fill(k)(NoStart), Seq.fill(k)(NoStart),
-      Nil, 0L))
     // trailing-optional run after each stage (for the win realizer)
     val tOpt = (1 to k).map(j => stages.drop(j).takeWhile(_.optional).length)
     def satUpTo(m: Seq[Long]): Int = {
@@ -1242,97 +1128,78 @@ object StreamingIngest {
         .map(j => m(j - 1)).filter(_ != NoStart)
       if (cands.nonEmpty) Some(cands.max) else None
     }
-    if (satUpTo(prev.m) == k && state.hasTimedOut && prev.pending.isEmpty) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val l = prev.l.toArray
-    val o = prev.o.toArray
-    val m = prev.m.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      val preL = l.clone(); val preO = o.clone()
-      def effLast(j: Int): Long =
-        if (j == 0) NoStart
-        else if (stages(j - 1).optional)
-          math.max(preL(j - 1), effLast(j - 1))
-        else preL(j - 1)
-      def effAny(j: Int): Long =
-        if (j == 0) NoStart
-        else if (stages(j - 1).optional)
-          math.max(math.max(preL(j - 1), preO(j - 1)), effAny(j - 1))
-        else math.max(preL(j - 1), preO(j - 1))
-      def adv(j: Int): Long =
-        if (tp != stages(j - 1).tp) NoStart
-        else if (j == 1) us
-        else {
-          val base = if (stages(j - 1).strict) effLast(j - 1)
-            else effAny(j - 1)
-          val pred = if (base != NoStart && us - base <= windowMicros)
-            base else NoStart
-          if (stages.take(j - 1).forall(_.optional)) math.max(pred, us)
-          else pred
+    Cep[FunnelPatternWinState, FunnelWinUpdate](
+      init = FunnelPatternWinState(Seq.fill(k)(NoStart),
+        Seq.fill(k)(NoStart), Seq.fill(k)(NoStart)),
+      step = { case (s, (us, _, tp, _)) =>
+        val preL = s.l.toArray; val preO = s.o.toArray
+        val l = new Array[Long](k); val o = new Array[Long](k)
+        val m = s.m.toArray
+        def effLast(j: Int): Long =
+          if (j == 0) NoStart
+          else if (stages(j - 1).optional)
+            math.max(preL(j - 1), effLast(j - 1))
+          else preL(j - 1)
+        def effAny(j: Int): Long =
+          if (j == 0) NoStart
+          else if (stages(j - 1).optional)
+            math.max(math.max(preL(j - 1), preO(j - 1)), effAny(j - 1))
+          else math.max(preL(j - 1), preO(j - 1))
+        def adv(j: Int): Long =
+          if (tp != stages(j - 1).tp) NoStart
+          else if (j == 1) us
+          else {
+            val base = if (stages(j - 1).strict) effLast(j - 1)
+              else effAny(j - 1)
+            val pred = if (base != NoStart && us - base <= windowMicros)
+              base else NoStart
+            if (stages.take(j - 1).forall(_.optional)) math.max(pred, us)
+            else pred
+          }
+        var j = 1
+        while (j <= k) {
+          val a = adv(j)
+          l(j - 1) = a
+          o(j - 1) =
+            if (stages(j - 1).notNextAfter.contains(tp)) preO(j - 1)
+            else math.max(preO(j - 1), preL(j - 1))
+          m(j - 1) = math.max(m(j - 1), a)
+          j += 1
         }
-      var j = 1
-      while (j <= k) {
-        val a = adv(j)
-        l(j - 1) = a
-        o(j - 1) =
-          if (stages(j - 1).notNextAfter.contains(tp)) preO(j - 1)
-          else math.max(preO(j - 1), preL(j - 1))
-        m(j - 1) = math.max(m(j - 1), a)
-        j += 1
-      }
-      if (comp == 0L && satUpTo(m.toSeq) == k) comp = us
-    }
-    val reached = satUpTo(m.toSeq)
-    val rest = if (reached == k) Nil else immature
-    val removable = reached == 0 && m.forall(_ == NoStart) &&
-      l.forall(_ == NoStart) && o.forall(_ == NoStart) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelPatternWinState(l.toSeq, o.toSeq, m.toSeq,
-        rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (reached == k && matchRetentionMs != Long.MaxValue &&
-          comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    val out = (reached, winOf(m.toSeq))
-    if ((first && !removable) ||
-        out != ((satUpTo(prev.m), winOf(prev.m))))
-      Iterator(FunnelWinUpdate(userId, reached, out._2))
-    else Iterator.empty
+        FunnelPatternWinState(l.toSeq, o.toSeq, m.toSeq)
+      },
+      idle = s => satUpTo(s.m) == 0 &&
+        (s.l ++ s.o ++ s.m).forall(_ == NoStart),
+      done = s => satUpTo(s.m) == k,
+      retentionMs = retentionMs,
+      row = Some((u, s) => FunnelWinUpdate(u, satUpTo(s.m), winOf(s.m))))
   }
 
-  /** The streaming contiguity × within funnel over an events stream —
-    * the [[streamingFunnel]] plumbing with
-    * [[updateFunnelPatternWithin]]'s product-NFA state. */
+  /**
+   * Streaming CONTIGUITY × WITHIN product funnel —
+   * [[graft.operators.Funnel.funnelPatternWithin]]'s twin: per-user
+   * state is the max-start product NFA's three vectors (`l[j]` —
+   * latest start among chains whose prefix-j match ends at the
+   * immediately previous event; `o[j]` — latest start among chains
+   * matched strictly before it; `m[j]` — the STICKY latest start ever
+   * to actually match stage j, the observable) behind the
+   * [[cepUpdate]] buffer (strict hops, notNext kills and window expiry
+   * are all order-sensitive). Every advance reads the PRE state (an
+   * event never extends the partials it just created — the
+   * guarded-fold rule) and checks the `within` deadline against the
+   * max eligible predecessor (the w8 dominance: the max is also the
+   * easiest to satisfy). Emission is delta-style on (stage_reached,
+   * win_start_us).
+   */
   def streamingFunnelPatternWithin(spark: SparkSession,
       events: DataFrame,
       stages: Seq[graft.operators.Funnel.PatternStage],
       windowMicros: Long, watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.patternRequire(stages)
     require(windowMicros > 0, "need windowMicros > 0")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelPatternWithin(stages.toIndexedSeq, windowMicros,
-          matchRetentionMs))
+    runCep(events, watermark, patternWithinMachine(stages.toIndexedSeq,
+      windowMicros, matchRetentionMs))
   }
 
   /** Streaming GROUP pattern under `within(T)` —
@@ -1357,102 +1224,57 @@ object StreamingIngest {
         col("win_start_us"))
   }
 
-  final case class FunnelWinGuardState(b: Seq[Long], m: Seq[Long],
-      pending: Seq[(Long, Long, String)], completionUs: Long)
+  /** The alive max-start vector (killable by gap blockers) and the
+    * sticky ever-reached one (the observable). */
+  final case class FunnelWinGuardState(b: Seq[Long], m: Seq[Long])
+
+  private def withinGuardedMachine(stages: IndexedSeq[String],
+      windowMicros: Long, notBetween: IndexedSeq[Option[String]],
+      retentionMs: Long): Cep[FunnelWinGuardState, FunnelWinUpdate] = {
+    val k = stages.length
+    Cep[FunnelWinGuardState, FunnelWinUpdate](
+      init = FunnelWinGuardState(Seq.fill(k)(NoStart), Seq.fill(k)(NoStart)),
+      step = { case (s, (us, _, tp, _)) =>
+        val pre = s.b.toArray
+        val b = pre.clone()
+        val m = s.m.toArray
+        var j = 0
+        while (j < k) {
+          val adv =
+            if (j == 0) { if (tp == stages(0)) us else NoStart }
+            else if (tp == stages(j) && pre(j - 1) != NoStart &&
+              us <= pre(j - 1) + windowMicros) pre(j - 1)
+            else NoStart
+          val kill = j < k - 1 && notBetween(j).contains(tp)
+          b(j) = if (kill) adv else math.max(b(j), adv)
+          m(j) = math.max(m(j), adv)
+          j += 1
+        }
+        FunnelWinGuardState(b.toSeq, m.toSeq)
+      },
+      idle = s => slotsSet(s.m) == 0 && s.b.forall(_ == NoStart),
+      done = s => slotsSet(s.m) == k,
+      retentionMs = retentionMs,
+      row = Some((u, s) =>
+        FunnelWinUpdate(u, slotsSet(s.m), deepestStart(s.m))))
+  }
 
   /**
    * Streaming COMBINED windowed+guarded funnel —
-   * [[graft.operators.Funnel.funnelWithinGuarded]]'s twin, keeping the
-   * family's batch/stream symmetry complete: per-user state is the
-   * alive max-start vector (killable by gap blockers), the sticky
-   * ever-reached max-start vector (the observable), and the
-   * event-time pending buffer; folding is watermark-ordered (both
-   * window expiry and blocker kills are order-sensitive). Emission on
-   * (stage_reached, win_start_us) change; retention as in the rest of
-   * the family.
+   * [[graft.operators.Funnel.funnelWithinGuarded]]'s twin: the alive
+   * max-start vector (killable by gap blockers) and the sticky
+   * ever-reached one (the observable) behind the [[cepUpdate]] buffer
+   * (window expiry and blocker kills are both order-sensitive).
+   * Emission on (stage_reached, win_start_us) change.
    */
-  def updateFunnelWithinGuarded(stages: IndexedSeq[String],
-      windowMicros: Long, notBetween: IndexedSeq[Option[String]],
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelWinGuardState]): Iterator[FunnelWinUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelWinGuardState(
-      Seq.fill(k)(NoStart), Seq.fill(k)(NoStart), Nil, 0L))
-    def stageOf(m: Seq[Long]): Int = m.count(_ != NoStart)
-    def winOf(m: Seq[Long]): Option[Long] = {
-      val s = stageOf(m); if (s > 0) Some(m(s - 1)) else None
-    }
-    if (stageOf(prev.m) == k && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val b = prev.b.toArray
-    val m = prev.m.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      val pre = b.clone()
-      val adv = Array.tabulate(k) { j =>
-        if (j == 0) { if (tp == stages(0)) us else NoStart }
-        else if (tp == stages(j) && pre(j - 1) != NoStart &&
-          us <= pre(j - 1) + windowMicros) pre(j - 1)
-        else NoStart
-      }
-      var j = 0
-      while (j < k) {
-        val kill = j < k - 1 && notBetween(j).contains(tp)
-        b(j) = if (kill) adv(j) else math.max(b(j), adv(j))
-        m(j) = math.max(m(j), adv(j))
-        j += 1
-      }
-      // capture the completion instant once (see updateFunnelGuarded)
-      if (comp == 0L && m(k - 1) != NoStart) comp = us
-    }
-    val stage = stageOf(m.toSeq)
-    val rest = if (stage == k) Nil else immature
-    val removable = stage == 0 && !b.exists(_ != NoStart) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelWinGuardState(b.toSeq, m.toSeq, rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (stage == k && matchRetentionMs != Long.MaxValue && comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    val out = (stage, winOf(m.toSeq))
-    // same retained-entry first-sight rule as updateFunnel
-    if ((first && !removable) || out != ((stageOf(prev.m), winOf(prev.m))))
-      Iterator(FunnelWinUpdate(userId, stage, out._2))
-    else Iterator.empty
-  }
-
-  /** The streaming combined windowed+guarded funnel — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelWithinGuarded]]'s
-    * DP state. */
   def streamingFunnelWithinGuarded(spark: SparkSession, events: DataFrame,
       stages: Seq[String], windowMicros: Long,
       notBetween: Seq[Option[String]], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
-    import spark.implicits._
     require(notBetween.length == stages.length - 1,
       "need one (optional) blocker per gap")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelWithinGuarded(stages.toIndexedSeq, windowMicros,
-          notBetween.toIndexedSeq, matchRetentionMs))
+    runCep(events, watermark, withinGuardedMachine(stages.toIndexedSeq,
+      windowMicros, notBetween.toIndexedSeq, matchRetentionMs))
   }
 
   /** Streaming QUANTIFIED funnel — CEP `times(n)` over a stream. The
@@ -1477,272 +1299,179 @@ object StreamingIngest {
           element_at(col("witness_us"), bounds(j))).as(s"ts${j + 1}_us")): _*)
   }
 
-  final case class FunnelLoopState(s: Int, c: Seq[Long], l: Seq[Long],
-      pending: Seq[(Long, Long, String)], completionUs: Long)
+  /** The expanded-list spine pointer plus the per-stage (count,
+    * last-time) loop slots. */
+  final case class FunnelLoopState(s: Int, c: Seq[Long], l: Seq[Long])
   final case class FunnelLoopUpdate(user_id: Long, stage_reached: Int,
       reps: Seq[Long], last_us: Seq[Long])
 
-  /**
-   * Streaming LOOPING-quantifier funnel — [[graft.operators.Funnel
-   * .funnelLoop]]'s twin (CEP `oneOrMore`/`timesOrMore` with greedy
-   * repetition). The times(n) trick (compose with the expanded
-   * [[streamingFunnel]]) does not carry over: the loop counters are
-   * NOT a projection of the expanded witnesses, so this runs the
-   * batch fold's state machine directly — per-user state is the
-   * expanded-list spine pointer plus the per-stage (count, last-time)
-   * loop slots and the event-time pending buffer; mature events fold
-   * in (event-time, event_id) order behind the watermark, exactly the
-   * family's buffer discipline.
-   *
-   * The LAST stage's loop never closes (batch absorbs to end of log),
-   * so a "completed" funnel keeps absorbing its type's mature events
-   * instead of freezing — state stays O(K) (the buffer keeps only
-   * last-stage-type events once the spine is complete), and with the
-   * default infinite retention the final emission equals the batch
-   * operator over the same rows (spec contract). A finite
-   * `matchRetentionMs` frees the entry at completion + retention —
-   * trailing absorptions after that are dropped with the tombstone
-   * (the documented TTL trade, as across the family). Emission:
-   * delta-style on the full observable (stage, counts, last-times),
-   * retained-entry first-sight rule as [[updateFunnel]].
-   */
-  def updateFunnelLoop(stages: IndexedSeq[(String, Int)],
-      matchRetentionMs: Long = Long.MaxValue,
-      caps: Option[IndexedSeq[Int]] = None)
-      : (Long, Iterator[FunnelEvent], GroupState[FunnelLoopState]) =>
-        Iterator[FunnelLoopUpdate] = {
-    // everything derivable from `stages` is computed ONCE here, not
-    // per user per micro-batch (the family's precompute discipline)
+  /** The loop family's observable row: slot counts and the set
+    * last-times. */
+  private def loopRow(u: Long, stage: Int, c: Seq[Long],
+      l: Seq[Long]): FunnelLoopUpdate =
+    FunnelLoopUpdate(u, stage, c, l.filter(_ != NoStart))
+
+  /** The loop fold; `caps` bounds each stage's absorption (times(m, n);
+    * None = ∞). Everything derivable from `stages` is computed once
+    * here, not per user per micro-batch. */
+  private def loopMachine(stages: IndexedSeq[(String, Int)],
+      retentionMs: Long, caps: Option[IndexedSeq[Int]])
+      : Cep[FunnelLoopState, FunnelLoopUpdate] = {
     val k = stages.length
     val expanded = stages.flatMap { case (t, n) => Seq.fill(n)(t) }
     val kx = expanded.length
     val bounds = stages.map(_._2).scanLeft(0)(_ + _).tail
     def stageOf(s: Int): Int = bounds.count(_ <= s)
-    (userId: Long, rows: Iterator[FunnelEvent],
-        state: GroupState[FunnelLoopState]) => {
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelLoopState(0,
-      Seq.fill(k)(0L), Seq.fill(k)(NoStart), Nil, 0L))
-    // a timeout on a COMPLETE spine is the retention cleanup ONLY when
-    // nothing is buffered (with pending events the set timer was the
-    // pending-flush timer — fall through and fold the matured buffer,
-    // else trailing absorptions are lost and the tombstone dropped)
-    if (stageOf(prev.s) == k && state.hasTimedOut && prev.pending.isEmpty) {
-      state.remove()
-      Iterator.empty
-    } else {
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var s = prev.s
-    val c = prev.c.toArray
-    val l = prev.l.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      if (s < kx && tp == expanded(s)) {
-        s += 1
-        val j = bounds.indexWhere(_ >= s)
-        c(j) += 1; l(j) = us
-        if (comp == 0L && s == kx) comp = us
-      } else {
-        val j = bounds.indexOf(s)
-        // times(m, n): absorb only below the stage's cap (None = ∞)
-        if (j >= 0 && tp == stages(j)._1 &&
-            caps.forall(cs => c(j) < cs(j))) { c(j) += 1; l(j) = us }
-      }
-    }
-    val complete = s == kx
-    // a complete spine can only absorb last-stage-type events — the
-    // rest of the buffer is dead weight (and nothing at all once the
-    // last stage's loop is capped out)
-    val rest =
-      if (complete) immature.filter(e => e._3 == stages(k - 1)._1 &&
-        caps.forall(cs => c(k - 1) < cs(k - 1)))
-      else immature
-    val removable = s == 0 && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelLoopState(s, c.toSeq, l.toSeq, rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (complete && matchRetentionMs != Long.MaxValue && comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    def obs(sv: Int, cv: Seq[Long], lv: Seq[Long]) =
-      (stageOf(sv), cv, lv.filter(_ != NoStart))
-    val out = obs(s, c.toSeq, l.toSeq)
-    if ((first && !removable) || out != obs(prev.s, prev.c, prev.l))
-      Iterator(FunnelLoopUpdate(userId, out._1, out._2, out._3))
-    else Iterator.empty
-    }
-    }
+    def underCap(c: Seq[Long], j: Int): Boolean =
+      caps.forall(cs => c(j) < cs(j))
+    Cep[FunnelLoopState, FunnelLoopUpdate](
+      init = FunnelLoopState(0, Seq.fill(k)(0L), Seq.fill(k)(NoStart)),
+      step = { case (st, (us, _, tp, _)) =>
+        val j = bounds.indexOf(st.s)
+        if (st.s < kx && tp == expanded(st.s)) {
+          val a = bounds.indexWhere(_ >= st.s + 1)
+          FunnelLoopState(st.s + 1, st.c.updated(a, st.c(a) + 1),
+            st.l.updated(a, us))
+        } else if (j >= 0 && tp == stages(j)._1 && underCap(st.c, j))
+          st.copy(c = st.c.updated(j, st.c(j) + 1), l = st.l.updated(j, us))
+        else st
+      },
+      idle = _.s == 0,
+      done = _.s == kx,
+      // a complete spine can only absorb last-stage-type events — the
+      // rest of the buffer is dead weight (and nothing at all once the
+      // last stage's loop is capped out)
+      keeps = Some((st, e) => st.s < kx ||
+        (e._3 == stages(k - 1)._1 && underCap(st.c, k - 1))),
+      retentionMs = retentionMs,
+      row = Some((u, st) => loopRow(u, stageOf(st.s), st.c, st.l)))
   }
 
-  /** The streaming looping-quantifier funnel over an events stream —
-    * the [[streamingFunnel]] plumbing with [[updateFunnelLoop]]'s
-    * state machine; [[graft.operators.Funnel.funnelLoop]]'s streaming
-    * twin, `mode` included. Reluctant reuses the batch reduction
-    * verbatim: the minimal loop is the bounded quantifier at its floor
-    * (`times(m, m)`), so the reluctant stream IS
-    * [[streamingFunnelTimesRange]] with cap = minReps — no third state
-    * machine. */
+  /**
+   * Streaming LOOPING-quantifier funnel — [[graft.operators.Funnel
+   * .funnelLoop]]'s twin (CEP `oneOrMore`/`timesOrMore` with greedy
+   * repetition), `mode` included. The times(n) trick does not carry
+   * over (the loop counters are NOT a projection of the expanded
+   * witnesses), so this runs the batch fold's state machine directly:
+   * the expanded-list spine pointer plus the per-stage (count,
+   * last-time) loop slots, behind the [[cepUpdate]] buffer.
+   *
+   * The LAST stage's loop never closes (batch absorbs to end of log),
+   * so a "completed" funnel keeps absorbing its type's mature events
+   * instead of freezing — the buffer keeps only last-stage-type events
+   * once the spine is complete, and with the default infinite
+   * retention the final emission equals the batch operator over the
+   * same rows (spec contract). A finite `matchRetentionMs` frees the
+   * entry at completion + retention — trailing absorptions after that
+   * are dropped with the tombstone (the documented TTL trade).
+   * Emission: delta-style on (stage, counts, last-times).
+   *
+   * Reluctant reuses the batch reduction verbatim: the minimal loop is
+   * the bounded quantifier at its floor (`times(m, m)`), so the
+   * reluctant stream IS [[streamingFunnelTimesRange]] with cap =
+   * minReps.
+   */
   def streamingFunnelLoop(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int)], watermark: String,
       matchRetentionMs: Long = Long.MaxValue,
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.loopRequire(stages)
     if (mode == graft.operators.Funnel.Reluctant)
       streamingFunnelTimesRange(spark, events,
         stages.map { case (t, m) => (t, m, m) }, watermark,
         matchRetentionMs)
-    else events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelLoop(stages.toIndexedSeq, matchRetentionMs))
+    else runCep(events, watermark,
+      loopMachine(stages.toIndexedSeq, matchRetentionMs, None))
   }
 
+  /** The run machine: stage pointer, open-loop bit, per-stage
+    * count/last-time. */
   final case class FunnelConsecState(j: Int, open: Boolean, c: Seq[Long],
-      l: Seq[Long], pending: Seq[(Long, Long, String)])
+      l: Seq[Long])
+
+  private def consecutiveMachine(stages: IndexedSeq[(String, Int)],
+      reluctant: Boolean): Cep[FunnelConsecState, FunnelLoopUpdate] = {
+    val types = stages.map(_._1)
+    val m = stages.map(_._2)
+    val k = stages.length
+    Cep[FunnelConsecState, FunnelLoopUpdate](
+      init = FunnelConsecState(1, false, Seq.fill(k)(0L),
+        Seq.fill(k)(NoStart)),
+      step = { case (st, (us, _, tp, _)) =>
+        var j = st.j
+        var open = st.open
+        val c = st.c.toArray
+        val l = st.l.toArray
+        if (j <= k) {
+          if (open) {
+            // reluctant consume mode: the open loop never absorbs — the
+            // batch fold's dead absorb branch (consecStep's `absorb =
+            // st`); the run machine and close/start transitions are
+            // mode-independent
+            if (tp == types(j - 1)) {
+              if (!reluctant) { c(j - 1) += 1; l(j - 1) = us }
+            } else {
+              j += 1
+              open = false
+              if (j <= k && tp == types(j - 1)) {
+                c(j - 1) = 1; l(j - 1) = us; open = m(j - 1) == 1
+              }
+            }
+          } else {
+            if (tp == types(j - 1)) {
+              c(j - 1) += 1; l(j - 1) = us
+              if (c(j - 1) == m(j - 1)) open = true
+            } else { c(j - 1) = 0; l(j - 1) = NoStart }
+          }
+        }
+        FunnelConsecState(j, open, c.toSeq, l.toSeq)
+      },
+      idle = st => st.j == 1 && !st.open && st.c.forall(_ == 0L),
+      // a machine past its last stage is final; a reluctant one with the
+      // LAST stage's block complete is observationally final even while
+      // the loop is formally open (the open loop never absorbs and a
+      // breaker only moves j past k with c/l untouched) — either way
+      // the buffer is dead weight
+      keeps = Some((st, _) =>
+        st.j <= k && !(reluctant && st.j == k && st.open)),
+      row = Some((u, st) =>
+        loopRow(u, st.j - 1 + (if (st.open) 1 else 0), st.c, st.l)))
+  }
 
   /**
    * Streaming CONSECUTIVE-loop funnel —
    * [[graft.operators.Funnel.funnelLoopConsecutive]]'s twin (CEP
-   * `oneOrMore.consecutive()`): per-user state is the run machine
-   * (stage pointer, open-loop bit, per-stage count/last-time) plus the
-   * event-time pending buffer; mature events fold in watermark order,
-   * which preserves run ADJACENCY across flushes for the same reason
-   * the contiguity NFA's does — maturity is a prefix of the event-time
+   * `oneOrMore.consecutive()`), `mode` included: the run machine
+   * (stage pointer, open-loop bit, per-stage count/last-time) behind
+   * the [[cepUpdate]] buffer. Folding mature events in watermark order
+   * preserves run ADJACENCY across flushes for the same reason the
+   * contiguity NFA's does — maturity is a prefix of the event-time
    * total order, so "immediately consecutive" means the same thing
-   * batch and streamed. Late events are dropped (a late event inside
-   * a run would break it retroactively — the family's best-effort
-   * lateness contract). A machine past its last stage (`j > K`) is
-   * final: the buffer drops; an open LAST loop keeps the full buffer
-   * (the next event either absorbs or permanently closes, and the
-   * close silently changes future absorption). Emission: delta-style
-   * on the observable (stage_reached, counts, last-times).
+   * batch and streamed. A late event inside a run would break it
+   * retroactively; it is dropped (best-effort lateness). An open LAST
+   * loop keeps the full buffer (the next event either absorbs or
+   * permanently closes). Reluctant is one dead absorb branch in the
+   * open phase. No retention: the machine never completes. Emission:
+   * delta-style on (stage_reached, counts, last-times).
    */
-  def updateFunnelConsecutive(stages: IndexedSeq[(String, Int)],
-      reluctant: Boolean = false)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelConsecState]): Iterator[FunnelLoopUpdate] = {
-    val types = stages.map(_._1)
-    val m = stages.map(_._2)
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelConsecState(1, false,
-      Seq.fill(k)(0L), Seq.fill(k)(NoStart), Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var j = prev.j
-    var open = prev.open
-    val c = prev.c.toArray
-    val l = prev.l.toArray
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      if (j <= k) {
-        if (open) {
-          // reluctant consume mode: the open loop never absorbs — the
-          // batch fold's dead absorb branch (consecStep's `absorb =
-          // st`); the run machine and close/start transitions are
-          // mode-independent
-          if (tp == types(j - 1)) {
-            if (!reluctant) { c(j - 1) += 1; l(j - 1) = us }
-          } else {
-            j += 1
-            open = false
-            if (j <= k && tp == types(j - 1)) {
-              c(j - 1) = 1; l(j - 1) = us; open = m(j - 1) == 1
-            }
-          }
-        } else {
-          if (tp == types(j - 1)) {
-            c(j - 1) += 1; l(j - 1) = us
-            if (c(j - 1) == m(j - 1)) open = true
-          } else { c(j - 1) = 0; l(j - 1) = NoStart }
-        }
-      }
-    }
-    // a reluctant machine with the LAST stage's block complete is
-    // observationally final even while the loop is formally open: the
-    // open loop never absorbs and a breaker only moves j past k with
-    // c/l untouched — so the buffer is dead weight and drops
-    val rest =
-      if (j > k || (reluctant && j == k && open)) Nil else immature
-    val removable = j == 1 && !open && c.forall(_ == 0L) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelConsecState(j, open, c.toSeq, l.toSeq, rest))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-    }
-    def obs(jv: Int, ov: Boolean, cv: Seq[Long], lv: Seq[Long]) =
-      (jv - 1 + (if (ov) 1 else 0), cv, lv.filter(_ != NoStart))
-    val out = obs(j, open, c.toSeq, l.toSeq)
-    if ((first && !removable) || out != obs(prev.j, prev.open, prev.c, prev.l))
-      Iterator(FunnelLoopUpdate(userId, out._1, out._2, out._3))
-    else Iterator.empty
-  }
-
-  /** The streaming consecutive-loop funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelConsecutive]]'s
-    * run machine; [[graft.operators.Funnel.funnelLoopConsecutive]]'s
-    * streaming twin, `mode` included: reluctant is one dead absorb
-    * branch in the open phase, run machine and spine mode-independent. */
   def streamingFunnelConsecutive(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int)], watermark: String,
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.loopRequire(stages)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelConsecutive(stages.toIndexedSeq,
-          reluctant = mode == graft.operators.Funnel.Reluctant))
+    runCep(events, watermark, consecutiveMachine(stages.toIndexedSeq,
+      reluctant = mode == graft.operators.Funnel.Reluctant))
   }
 
+  /** The loop machine plus `x`: the CURRENT stage's repetition is
+    * closed. */
   final case class FunnelLoopUntilState(s: Int, c: Seq[Long], l: Seq[Long],
-      x: Boolean, pending: Seq[(Long, Long, String)], completionUs: Long)
+      x: Boolean)
 
-  /**
-   * Streaming loop funnel WITH Flink's `until` boundary —
-   * [[graft.operators.Funnel.funnelLoopUntil]]'s twin. State adds one
-   * boolean to the loop machine: the CURRENT stage's repetition is
-   * closed (set by the stage's until event, cleared on crossing into
-   * a new stage). Three terminal shapes instead of one:
-   *   - complete spine, last loop open — keeps absorbing last-stage
-   *     events AND watching for the last stage's until type (closing
-   *     the loop changes FUTURE observables, so both stay buffered);
-   *   - complete spine, last loop closed — fully final, buffer drops;
-   *   - STALLED (closed during a mandatory block) — frozen forever,
-   *     buffer drops, and the entry is a tombstone even at stage 0
-   *     (dropping a stage-0 stall would forget that the pattern can
-   *     never start — the one case where an "empty-looking" entry is
-   *     informationally LOADED). Retention TTL applies to completed
-   *     funnels only; stalled tombstones live for the stream's life.
-   */
-  def updateFunnelLoopUntil(
-      stages: IndexedSeq[(String, Int, Option[String])],
-      matchRetentionMs: Long = Long.MaxValue,
-      reluctant: Boolean = false)
-      : (Long, Iterator[FunnelEvent], GroupState[FunnelLoopUntilState]) =>
-        Iterator[FunnelLoopUpdate] = {
+  private def loopUntilMachine(
+      stages: IndexedSeq[(String, Int, Option[String])], retentionMs: Long,
+      reluctant: Boolean): Cep[FunnelLoopUntilState, FunnelLoopUpdate] = {
     val mst = stages.map { case (t, m, _) => (t, m) }
     val k = stages.length
     val expanded = mst.flatMap { case (t, n) => Seq.fill(n)(t) }
@@ -1753,141 +1482,86 @@ object StreamingIngest {
     val loopOf = (0 to kx).map(s => bounds.indexOf(s) + 1)
     val curOf = (0 to kx).map(s => if (loopOf(s) > 0) loopOf(s) else subOf(s))
     def stageOf(s: Int): Int = bounds.count(_ <= s)
-    (userId: Long, rows: Iterator[FunnelEvent],
-        state: GroupState[FunnelLoopUntilState]) => {
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelLoopUntilState(0,
-      Seq.fill(k)(0L), Seq.fill(k)(NoStart), x = false, Nil, 0L))
-    if (stageOf(prev.s) == k && state.hasTimedOut && prev.pending.isEmpty) {
-      state.remove()
-      Iterator.empty
-    } else {
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var s = prev.s
-    var x = prev.x
-    val c = prev.c.toArray
-    val l = prev.l.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      val curJ = curOf(s)
-      val advT = s < kx && tp == expanded(s)
-      val jAdv = if (s < kx) subOf(s) else 0
-      val adv = advT && (jAdv != curJ || !x)
-      val jLoop = loopOf(s)
-      // reluctant consume mode: absorption is the one dead branch —
-      // the until close/stall machinery reads only the pointer and
-      // the bit and is mode-independent (the batch fold's contract)
-      val absorb = !reluctant && !adv && jLoop > 0 && !x &&
-        tp == mst(jLoop - 1)._1
-      if (adv) {
-        c(jAdv - 1) += 1; l(jAdv - 1) = us; s += 1
-        if (comp == 0L && s == kx) comp = us
-      } else if (absorb) { c(jLoop - 1) += 1; l(jLoop - 1) = us }
-      val newCurJ = curOf(s)
-      if (newCurJ != curJ) x = false
-      if (stages(newCurJ - 1)._3.contains(tp)) x = true
-    }
-    val complete = s == kx
-    val frozen = x && (loopOf(s) == 0 || complete)
-    val rest =
-      if (frozen) Nil
-      // a complete reluctant spine is observationally final: loop
-      // absorption is dead and a last-stage until close only stops
-      // absorption that already never happens — buffer drops
-      else if (complete && reluctant) Nil
-      else if (complete) immature.filter(e =>
-        e._3 == mst(k - 1)._1 || stages(k - 1)._3.contains(e._3))
-      else immature
-    val removable = s == 0 && !x && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelLoopUntilState(s, c.toSeq, l.toSeq, x, rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (complete && matchRetentionMs != Long.MaxValue && comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    def obs(sv: Int, cv: Seq[Long], lv: Seq[Long]) =
-      (stageOf(sv), cv, lv.filter(_ != NoStart))
-    val out = obs(s, c.toSeq, l.toSeq)
-    if ((first && !removable) || out != obs(prev.s, prev.c, prev.l))
-      Iterator(FunnelLoopUpdate(userId, out._1, out._2, out._3))
-    else Iterator.empty
-    }
-    }
+    Cep[FunnelLoopUntilState, FunnelLoopUpdate](
+      init = FunnelLoopUntilState(0, Seq.fill(k)(0L), Seq.fill(k)(NoStart),
+        x = false),
+      step = { case (st, (us, _, tp, _)) =>
+        var s = st.s
+        var x = st.x
+        val c = st.c.toArray
+        val l = st.l.toArray
+        val curJ = curOf(s)
+        val advT = s < kx && tp == expanded(s)
+        val jAdv = if (s < kx) subOf(s) else 0
+        val adv = advT && (jAdv != curJ || !x)
+        val jLoop = loopOf(s)
+        // reluctant consume mode: absorption is the one dead branch —
+        // the until close/stall machinery reads only the pointer and
+        // the bit and is mode-independent (the batch fold's contract)
+        val absorb = !reluctant && !adv && jLoop > 0 && !x &&
+          tp == mst(jLoop - 1)._1
+        if (adv) { c(jAdv - 1) += 1; l(jAdv - 1) = us; s += 1 }
+        else if (absorb) { c(jLoop - 1) += 1; l(jLoop - 1) = us }
+        val newCurJ = curOf(s)
+        if (newCurJ != curJ) x = false
+        if (stages(newCurJ - 1)._3.contains(tp)) x = true
+        FunnelLoopUntilState(s, c.toSeq, l.toSeq, x)
+      },
+      // a stage-0 STALL is a tombstone: dropping it would forget that
+      // the pattern can never start
+      idle = st => st.s == 0 && !st.x,
+      done = _.s == kx,
+      keeps = Some { (st, e) =>
+        val complete = st.s == kx
+        val frozen = st.x && (loopOf(st.s) == 0 || complete)
+        // a complete reluctant spine is observationally final: loop
+        // absorption is dead and a last-stage until close only stops
+        // absorption that already never happens
+        !frozen && !(complete && reluctant) && (!complete ||
+          e._3 == mst(k - 1)._1 || stages(k - 1)._3.contains(e._3))
+      },
+      retentionMs = retentionMs,
+      row = Some((u, st) => loopRow(u, stageOf(st.s), st.c, st.l)))
   }
 
-  /** The streaming loop-until funnel over an events stream — the
-    * [[streamingFunnelLoop]] plumbing with [[updateFunnelLoopUntil]]'s
-    * closed-bit state machine; [[graft.operators.Funnel.funnelLoopUntil]]'s
-    * streaming twin, `mode` included: absorption is the one dead
-    * branch, the until close/stall machinery (pointer + bit) is
-    * mode-independent. */
+  /**
+   * Streaming loop funnel WITH Flink's `until` boundary —
+   * [[graft.operators.Funnel.funnelLoopUntil]]'s twin, `mode`
+   * included. State adds one boolean to the loop machine: the CURRENT
+   * stage's repetition is closed (set by the stage's until event,
+   * cleared on crossing into a new stage). Three terminal shapes:
+   *   - complete spine, last loop open — keeps absorbing last-stage
+   *     events AND watching for the last stage's until type (closing
+   *     the loop changes FUTURE observables, so both stay buffered);
+   *   - complete spine, last loop closed — fully final, buffer drops;
+   *   - STALLED (closed during a mandatory block) — frozen forever,
+   *     buffer drops, and the entry is a tombstone even at stage 0.
+   * Retention TTL applies to completed funnels only; stalled
+   * tombstones live for the stream's life. Reluctant: absorption is
+   * the one dead branch, the until close/stall machinery (pointer +
+   * bit) is mode-independent.
+   */
   def streamingFunnelLoopUntil(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int, Option[String])], watermark: String,
       matchRetentionMs: Long = Long.MaxValue,
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.untilRequire(stages)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelLoopUntil(stages.toIndexedSeq, matchRetentionMs,
-          reluctant = mode == graft.operators.Funnel.Reluctant))
+    runCep(events, watermark, loopUntilMachine(stages.toIndexedSeq,
+      matchRetentionMs, reluctant = mode == graft.operators.Funnel.Reluctant))
   }
 
-  /** The streaming BOUNDED quantifier times(m, n) — the
-    * [[streamingFunnelLoop]] plumbing with the absorb cap threaded
-    * into [[updateFunnelLoop]] (one extra comparison in the state
-    * machine; pointer and spine untouched, the
-    * [[graft.operators.Funnel.funnelTimesRange]] contract). */
+  /** The streaming BOUNDED quantifier times(m, n) — the loop machine
+    * with the absorb cap (one extra comparison; pointer and spine
+    * untouched, the [[graft.operators.Funnel.funnelTimesRange]]
+    * contract). */
   def streamingFunnelTimesRange(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int, Int)], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.rangeRequire(stages)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelLoop(stages.map { case (t, m, _) => (t, m) }.toIndexedSeq,
-          matchRetentionMs, Some(stages.map(_._3).toIndexedSeq)))
-  }
-
-  /** The streaming funnel over an events stream (`user_id`, `event_id`,
-    * `ts`, `event_type`). `watermark` is the allowed lateness — and
-    * therefore the event-time reordering window the buffer absorbs. */
-  def streamingFunnel(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] = {
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermark)
-      // the watermarked ts column must SURVIVE the projection — the
-      // unsupported-operation checker requires a watermark-tagged
-      // event-time column in the stateful operator's child
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnel(stages.toIndexedSeq, matchRetentionMs))
+    runCep(events, watermark,
+      loopMachine(stages.map { case (t, m, _) => (t, m) }.toIndexedSeq,
+        matchRetentionMs, Some(stages.map(_._3).toIndexedSeq)))
   }
 
   // -------------------------------------------------------------------
@@ -1895,126 +1569,85 @@ object StreamingIngest {
   // (funnelMulti's twin)
   // -------------------------------------------------------------------
 
-  /** `ts` slots use [[NoStart]] as the unset sentinel (state encoders
-    * carry plain longs). */
+  /** The l/o NFA (chains ending at the immediately previous event vs
+    * earlier) plus the first-match time per stage; `ts` slots use
+    * [[NoStart]] as the unset sentinel. */
   final case class FunnelPatternState(l: Seq[Boolean], o: Seq[Boolean],
-      ts: Seq[Long], pending: Seq[(Long, Long, String)], completionUs: Long)
+      ts: Seq[Long])
   final case class FunnelPatternUpdate(user_id: Long, stage_reached: Int,
       ts_us: Seq[Option[Long]])
 
-  /**
-   * Streaming contiguity funnel —
-   * [[graft.operators.Funnel.funnelPattern]]'s twin (CEP `next` /
-   * `notNext` / `optional`). Per-user state is the l/o NFA (chains
-   * ending at the immediately previous event vs earlier) plus the
-   * family's event-time pending buffer; mature events fold in
-   * watermark order, which preserves IMMEDIATE-successor adjacency
-   * across flushes (the fold's `l` bits always refer to the last
-   * FOLDED event, and maturity is a prefix of the event-time order).
-   * Emission on any (stage_reached, ts vector) change — unlike the
-   * plain funnel, a pattern with an optional stage can stamp that
-   * stage's first actual match AFTER the prefix is already satisfied,
-   * so completion here means reached == k AND every ts slot set; only
-   * then does the buffer drop and the retention tombstone start. Late
-   * events (behind the watermark) are dropped — if a late event sat
-   * between two folded events, batch adjacency would differ: the same
-   * best-effort lateness contract as the rest of the family, here
-   * extended to contiguity.
-   */
-  def updateFunnelPattern(
+  private def patternMachine(
       stages: IndexedSeq[graft.operators.Funnel.PatternStage],
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelPatternState]): Iterator[FunnelPatternUpdate] = {
+      retentionMs: Long): Cep[FunnelPatternState, FunnelPatternUpdate] = {
     val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelPatternState(
-      Seq.fill(k)(false), Seq.fill(k)(false), Seq.fill(k)(NoStart), Nil, 0L))
     def reached(ts: Seq[Long]): Int = {
       def sat(j: Int): Boolean =
         j == 0 || ts(j - 1) != NoStart ||
           (stages(j - 1).optional && sat(j - 1))
       (1 to k).count(sat)
     }
-    def isFinal(ts: Seq[Long]): Boolean = ts.forall(_ != NoStart)
-    // reachable only via the finite-retention timer (GroupState
-    // clears an un-renewed timeout on every invocation)
-    if (isFinal(prev.ts) && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val l = prev.l.toArray
-    val o = prev.o.toArray
-    val ts = prev.ts.toArray
-    var comp = prev.completionUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      val preL = l.clone()
-      val preO = o.clone()
-      def effLast(j: Int): Boolean =
-        if (j == 0) true
-        else if (stages(j - 1).optional) preL(j - 1) || effLast(j - 1)
-        else preL(j - 1)
-      def effAny(j: Int): Boolean =
-        if (j == 0) true
-        else if (stages(j - 1).optional)
-          preL(j - 1) || preO(j - 1) || effAny(j - 1)
-        else preL(j - 1) || preO(j - 1)
-      var j = 1
-      while (j <= k) {
-        val st = stages(j - 1)
-        val adv = tp == st.tp &&
-          (j == 1 || (if (st.strict) effLast(j - 1) else effAny(j - 1)))
-        l(j - 1) = adv
-        o(j - 1) = preO(j - 1) ||
-          (preL(j - 1) && !st.notNextAfter.contains(tp))
-        if (adv && ts(j - 1) == NoStart) ts(j - 1) = us
-        j += 1
-      }
-      if (comp == 0L && isFinal(ts.toSeq)) comp = us
-    }
-    val rest = if (isFinal(ts.toSeq)) Nil else immature
-    val removable = !l.exists(identity) && !o.exists(identity) &&
-      ts.forall(_ == NoStart) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelPatternState(l.toSeq, o.toSeq, ts.toSeq, rest, comp))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (isFinal(ts.toSeq) && matchRetentionMs != Long.MaxValue &&
-          comp > 0)
-        state.setTimeoutTimestamp(math.max(
-          comp / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    val out = FunnelPatternUpdate(userId, reached(ts.toSeq),
-      ts.toSeq.map(v => if (v == NoStart) None else Some(v)))
-    if ((first && !removable) ||
-        reached(ts.toSeq) != reached(prev.ts) || ts.toSeq != prev.ts)
-      Iterator(out)
-    else Iterator.empty
+    Cep[FunnelPatternState, FunnelPatternUpdate](
+      init = FunnelPatternState(Seq.fill(k)(false), Seq.fill(k)(false),
+        Seq.fill(k)(NoStart)),
+      step = { case (s, (us, _, tp, _)) =>
+        val preL = s.l.toArray
+        val preO = s.o.toArray
+        val l = new Array[Boolean](k)
+        val o = new Array[Boolean](k)
+        val ts = s.ts.toArray
+        def effLast(j: Int): Boolean =
+          if (j == 0) true
+          else if (stages(j - 1).optional) preL(j - 1) || effLast(j - 1)
+          else preL(j - 1)
+        def effAny(j: Int): Boolean =
+          if (j == 0) true
+          else if (stages(j - 1).optional)
+            preL(j - 1) || preO(j - 1) || effAny(j - 1)
+          else preL(j - 1) || preO(j - 1)
+        var j = 1
+        while (j <= k) {
+          val st = stages(j - 1)
+          val adv = tp == st.tp &&
+            (j == 1 || (if (st.strict) effLast(j - 1) else effAny(j - 1)))
+          l(j - 1) = adv
+          o(j - 1) = preO(j - 1) ||
+            (preL(j - 1) && !st.notNextAfter.contains(tp))
+          if (adv && ts(j - 1) == NoStart) ts(j - 1) = us
+          j += 1
+        }
+        FunnelPatternState(l.toSeq, o.toSeq, ts.toSeq)
+      },
+      idle = s => !s.l.contains(true) && !s.o.contains(true) &&
+        s.ts.forall(_ == NoStart),
+      done = _.ts.forall(_ != NoStart),
+      retentionMs = retentionMs,
+      row = Some((u, s) => FunnelPatternUpdate(u, reached(s.ts),
+        s.ts.map(v => if (v == NoStart) None else Some(v)))))
   }
 
-  /** The streaming contiguity funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelPattern]]'s l/o
-    * NFA state. */
+  /**
+   * Streaming contiguity funnel —
+   * [[graft.operators.Funnel.funnelPattern]]'s twin (CEP `next` /
+   * `notNext` / `optional`): the l/o NFA behind the [[cepUpdate]]
+   * buffer. Folding mature events in watermark order preserves
+   * IMMEDIATE-successor adjacency across flushes (the fold's `l` bits
+   * always refer to the last FOLDED event, and maturity is a prefix of
+   * the event-time order). Emission on any (stage_reached, ts vector)
+   * change — unlike the plain funnel, a pattern with an optional stage
+   * can stamp that stage's first actual match AFTER the prefix is
+   * already satisfied, so completion here means every ts slot set;
+   * only then does the buffer drop and the retention tombstone start.
+   * A late event between two folded events would change batch
+   * adjacency; it is dropped (best-effort lateness, here extended to
+   * contiguity).
+   */
   def streamingFunnelPattern(spark: SparkSession, events: DataFrame,
       stages: Seq[graft.operators.Funnel.PatternStage], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelPatternUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.patternRequire(stages)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelPattern(stages.toIndexedSeq, matchRetentionMs))
+    runCep(events, watermark,
+      patternMachine(stages.toIndexedSeq, matchRetentionMs))
   }
 
   /** Streaming GROUP pattern — [[graft.operators.Funnel
@@ -2045,128 +1678,93 @@ object StreamingIngest {
     * −∞ sentinel (state encoders carry plain longs; every live value
     * is ≥ 0). */
   final case class FunnelGroupLoopState(bo: Long, bl: Long, l: Seq[Long],
-      o: Seq[Long], pending: Seq[(Long, Long, String)])
+      o: Seq[Long])
   final case class FunnelGroupLoopUpdate(user_id: Long, reps: Long)
+
+  private def groupLoopMachine(
+      group: IndexedSeq[graft.operators.Funnel.PatternStage],
+      consecutiveSeams: Boolean, cap: Option[Long])
+      : Cep[FunnelGroupLoopState, FunnelGroupLoopUpdate] = {
+    val k = group.length
+    def vmax(a: Long, b: Long): Long = if (a >= b) a else b
+    Cep[FunnelGroupLoopState, FunnelGroupLoopUpdate](
+      init = FunnelGroupLoopState(0L, NoStart, Seq.fill(k)(NoStart),
+        Seq.fill(k)(NoStart)),
+      step = { case (s, (_, _, tp, _)) =>
+        val preL = s.l.toArray; val preO = s.o.toArray
+        val l = new Array[Long](k); val o = new Array[Long](k)
+        // the trailing SEAM guard — the batch fold's `seamKill`,
+        // verbatim: at the blocker event a freshly-completed chain dies
+        val preBlAlive =
+          if (group.last.notNextAfter.contains(tp)) NoStart else s.bl
+        def effLastV(j: Int): Long =
+          if (j == 0) NoStart
+          else if (group(j - 1).optional) vmax(preL(j - 1), effLastV(j - 1))
+          else preL(j - 1)
+        def effAnyV(j: Int): Long =
+          if (j == 0) NoStart
+          else if (group(j - 1).optional)
+            vmax(vmax(preL(j - 1), preO(j - 1)), effAnyV(j - 1))
+          else vmax(preL(j - 1), preO(j - 1))
+        def adv(j: Int): Long =
+          if (tp != group(j - 1).tp) NoStart
+          else if (j == 1) {
+            if (!consecutiveSeams) vmax(s.bo, preBlAlive)
+            else vmax(preBlAlive, 0L)
+          } else if (group(j - 1).strict) effLastV(j - 1)
+          else effAnyV(j - 1)
+        var j = 1
+        while (j <= k) {
+          l(j - 1) = adv(j)
+          o(j - 1) =
+            if (group(j - 1).notNextAfter.contains(tp)) preO(j - 1)
+            else vmax(preO(j - 1), preL(j - 1))
+          j += 1
+        }
+        val compBase = l(k - 1)
+        // reluctant consume mode caps the completion step — the batch
+        // fold's policy point (groupLoopStep's `cap`), verbatim
+        val bl = if (compBase == NoStart) NoStart
+          else cap.fold(compBase + 1L)(m => math.min(compBase + 1L, m))
+        FunnelGroupLoopState(vmax(s.bo, preBlAlive), bl, l.toSeq, o.toSeq)
+      },
+      idle = s => s.bo == 0L && s.bl == NoStart &&
+        s.l.forall(_ == NoStart) && s.o.forall(_ == NoStart),
+      row = Some((u, s) =>
+        FunnelGroupLoopUpdate(u, math.max(vmax(s.bo, s.bl), 0L))))
+  }
 
   /**
    * Streaming GROUP oneOrMore — [[graft.operators.Funnel
-   * .funnelGroupLoop]]'s twin. The unbounded quantifier has no finite
-   * stage-list expansion, so unlike [[streamingFunnelGroupTimes]]
-   * this is its own state machine: the batch dominance fold
-   * (max-completed-reps per (stage, l/o) slot, idle chains in
-   * `bl`/`bo`) replayed over mature events in watermark order, which
+   * .funnelGroupLoop]]'s twin, `mode` included. The unbounded
+   * quantifier has no finite stage-list expansion, so unlike
+   * [[streamingFunnelGroupTimes]] this is its own state machine: the
+   * batch dominance fold (max-completed-reps per (stage, l/o) slot,
+   * idle chains in `bl`/`bo`) behind the [[cepUpdate]] buffer, which
    * preserves the immediate-successor adjacency `bl` and the strict
-   * in-group hops rely on (the [[updateFunnelPattern]] argument).
-   * There is NO final state — a loop can always extend — so there is
-   * no completion tombstone either; the state the entry retains
-   * forever is 2k+2 longs plus the immature buffer (the same
-   * unbounded-operator contract as the batch machine's, where `reps`
-   * likewise never stops growing). Emission: delta-style on `reps`.
+   * in-group hops rely on. There is NO final state — a loop can always
+   * extend — so there is no completion tombstone and no retention; the
+   * entry keeps 2k+2 longs (the batch machine's unbounded-operator
+   * contract, where `reps` likewise never stops growing). Reluctant
+   * caps the completion step at `minTimes` (the SAME policy point as
+   * the batch fold), so `reps` saturates at the floor while partial
+   * progress below it stays observable — stream ≡ batch by
+   * construction. Emission: delta-style on `reps`.
    */
-  def updateFunnelGroupLoop(
-      group: IndexedSeq[graft.operators.Funnel.PatternStage],
-      consecutiveSeams: Boolean, cap: Option[Long] = None)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelGroupLoopState])
-      : Iterator[FunnelGroupLoopUpdate] = {
-    val k = group.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelGroupLoopState(0L, NoStart,
-      Seq.fill(k)(NoStart), Seq.fill(k)(NoStart), Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var bo = prev.bo
-    var bl = prev.bl
-    val l = prev.l.toArray
-    val o = prev.o.toArray
-    def vmax(a: Long, b: Long): Long = if (a >= b) a else b
-    mature.sortBy(e => (e._1, e._2)).foreach { case (_, _, tp) =>
-      val preL = l.clone(); val preO = o.clone()
-      val preBo = bo; val preBl = bl
-      // the trailing SEAM guard — the batch fold's `seamKill`,
-      // verbatim: at the blocker event a freshly-completed chain dies
-      val preBlAlive =
-        if (group.last.notNextAfter.contains(tp)) NoStart else preBl
-      def effLastV(j: Int): Long =
-        if (j == 0) NoStart
-        else if (group(j - 1).optional) vmax(preL(j - 1), effLastV(j - 1))
-        else preL(j - 1)
-      def effAnyV(j: Int): Long =
-        if (j == 0) NoStart
-        else if (group(j - 1).optional)
-          vmax(vmax(preL(j - 1), preO(j - 1)), effAnyV(j - 1))
-        else vmax(preL(j - 1), preO(j - 1))
-      def adv(j: Int): Long =
-        if (tp != group(j - 1).tp) NoStart
-        else if (j == 1) {
-          if (!consecutiveSeams) vmax(preBo, preBlAlive)
-          else vmax(preBlAlive, 0L)
-        } else if (group(j - 1).strict) effLastV(j - 1)
-        else effAnyV(j - 1)
-      var j = 1
-      while (j <= k) {
-        l(j - 1) = adv(j)
-        o(j - 1) =
-          if (group(j - 1).notNextAfter.contains(tp)) preO(j - 1)
-          else vmax(preO(j - 1), preL(j - 1))
-        j += 1
-      }
-      bo = vmax(preBo, preBlAlive)
-      val compBase = adv(k)
-      // reluctant consume mode caps the completion step — the batch
-      // fold's policy point (groupLoopStep's `cap`), verbatim
-      bl = if (compBase == NoStart) NoStart
-        else cap.fold(compBase + 1L)(m => math.min(compBase + 1L, m))
-    }
-    val reps = math.max(vmax(bo, bl), 0L)
-    val prevReps = math.max(vmax(prev.bo, prev.bl), 0L)
-    val untouched = bo == 0L && bl == NoStart &&
-      l.forall(_ == NoStart) && o.forall(_ == NoStart)
-    val removable = untouched && immature.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelGroupLoopState(bo, bl, l.toSeq, o.toSeq,
-        immature))
-      if (immature.nonEmpty)
-        state.setTimeoutTimestamp(immature.map(_._1).min / 1000L + 1L)
-    }
-    if ((first && !removable) || reps != prevReps)
-      Iterator(FunnelGroupLoopUpdate(userId, reps))
-    else Iterator.empty
-  }
-
-  /** The streaming group-loop funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelGroupLoop]]'s
-    * dominance machine; [[graft.operators.Funnel.funnelGroupLoop]]'s
-    * streaming twin, `mode` included: reluctant caps the completion
-    * step at `minTimes` (the SAME policy point as the batch fold), so
-    * the streamed `reps` saturates at the floor while partial progress
-    * below it stays observable — stream ≡ batch by construction,
-    * StreamingSpec-pinned across out-of-order waves. */
   def streamingFunnelGroupLoop(spark: SparkSession, events: DataFrame,
       group: Seq[graft.operators.Funnel.PatternStage], watermark: String,
       consecutiveSeams: Boolean = false,
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy, minTimes: Int = 1)
       : Dataset[FunnelGroupLoopUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.groupLoopRequire(group)
     require(minTimes >= 1, "need minTimes >= 1")
     val cap = mode match {
       case graft.operators.Funnel.Greedy => None
       case graft.operators.Funnel.Reluctant => Some(minTimes.toLong)
     }
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelGroupLoop(group.toIndexedSeq, consecutiveSeams, cap))
+    runCep(events, watermark,
+      groupLoopMachine(group.toIndexedSeq, consecutiveSeams, cap))
   }
 
   /** Streaming `times(m, n)` on a GROUP — [[graft.operators.Funnel
@@ -2239,403 +1837,211 @@ object StreamingIngest {
       .withColumn("matched", col("reps") >= minTimes)
   }
 
-  /** [[FunnelEvent]] with the stage-condition VALUE (integer
-    * fixed-point, the caller's conversion) — the iterative-condition
-    * twin's event shape. */
-  final case class FunnelValueEvent(user_id: Long, usMicros: Long,
-      eventId: Long, tp: String, v: Long, ts: java.sql.Timestamp)
-  /** `d` is valid exactly where `ts != NoStart` (the set flags
-    * coincide: both are first written by the same advance). */
-  final case class FunnelIterState(d: Seq[Long], ts: Seq[Long],
-      pending: Seq[(Long, Long, String, Long)])
+  /** The min-anchor dominance vector of
+    * [[graft.operators.Funnel.iterAdvance]]: `d` is valid exactly where
+    * `ts` is set. */
+  final case class FunnelIterState(d: Seq[Long], ts: Seq[Long])
   final case class FunnelIterUpdate(user_id: Long, stage_reached: Int,
       ts_us: Seq[Option[Long]])
 
-  /**
-   * Streaming ITERATIVE-condition funnel —
-   * [[graft.operators.Funnel.funnelIterative]]'s twin: per-user state
-   * is the min-anchor dominance vector (`d[j]` = minimal anchor among
-   * chains completing stage j, lossless under the `num >= 0`
-   * monotonicity contract — the batch fold's argument verbatim) plus
-   * the family's event-time pending buffer; mature events fold in
-   * watermark order with the pre-state rule. Emission on any ts-slot
-   * change (stage progress; `d`-only improvements move no
-   * observable). The ts slots fill strictly in stage order, so
-   * completion is `reached == k`; completed funnels drop their buffer
-   * and tombstone with the family's optional retention TTL. Late
-   * events drop — best-effort lateness, as everywhere in the family.
-   */
-  def updateFunnelIterative(
+  private def iterativeMachine(
       stages: IndexedSeq[graft.operators.Funnel.IterStage],
-      anchorFirst: Boolean, matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelValueEvent],
-      state: GroupState[FunnelIterState]): Iterator[FunnelIterUpdate] = {
+      anchorFirst: Boolean, retentionMs: Long)
+      : Cep[FunnelIterState, FunnelIterUpdate] = {
     val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(
-      FunnelIterState(Seq.fill(k)(0L), Seq.fill(k)(NoStart), Nil))
-    def reached(ts: Seq[Long]): Int = ts.count(_ != NoStart)
-    if (reached(prev.ts) == k && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp, e.v))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val d = prev.d.toArray
-    val ts = prev.ts.toArray
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp, v) =>
-      // descending stage order = the pre-state rule with zero
-      // allocations (stage j reads only slot j-1, not yet written)
-      var j = k - 1
-      while (j >= 0) {
-        val passes = tp == stages(j).tp && (j == 0 ||
-          (ts(j - 1) != NoStart && (stages(j).cond match {
-            case Some(graft.operators.Funnel.RelGt(num, den)) =>
-              v * den > d(j - 1) * num
-            case None => true
-          })))
-        if (passes) {
-          val cand = if (j == 0 || !anchorFirst) v else d(j - 1)
-          d(j) = if (ts(j) != NoStart) math.min(d(j), cand) else cand
-          if (ts(j) == NoStart) ts(j) = us
-        }
-        j -= 1
-      }
-    }
-    val done = reached(ts.toSeq) == k
-    val rest = if (done) Nil else immature
-    val removable = ts.forall(_ == NoStart) && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelIterState(d.toSeq, ts.toSeq, rest))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (done && matchRetentionMs != Long.MaxValue)
-        state.setTimeoutTimestamp(math.max(
-          ts(k - 1) / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    if ((first && !removable) || ts.toSeq != prev.ts)
-      Iterator(FunnelIterUpdate(userId, reached(ts.toSeq),
-        ts.toSeq.map(x => if (x == NoStart) None else Some(x))))
-    else Iterator.empty
+    val st = stages.toArray
+    val unreached = graft.operators.Funnel.IterUnreached
+    def reached(ts: Seq[Long]): Int = ts.count(_ != unreached)
+    Cep[FunnelIterState, FunnelIterUpdate](
+      init = FunnelIterState(Seq.fill(k)(0L), Seq.fill(k)(unreached)),
+      step = { case (s, (us, _, tp, v)) =>
+        val d = s.d.toArray
+        val ts = s.ts.toArray
+        graft.operators.Funnel.iterAdvance(st, anchorFirst, d, ts, us, tp, v)
+        FunnelIterState(d.toSeq, ts.toSeq)
+      },
+      idle = _.ts.forall(_ == unreached),
+      done = s => reached(s.ts) == k,
+      retentionMs = retentionMs,
+      row = Some((u, s) => FunnelIterUpdate(u, reached(s.ts),
+        s.ts.map(x => if (x == unreached) None else Some(x)))))
   }
 
-  /** The streaming iterative-condition funnel over an events stream —
-    * the [[streamingFunnel]] plumbing with [[updateFunnelIterative]]'s
-    * dominance state; `valCol` must already be integer fixed-point
-    * (the batch operator's contract). */
+  /**
+   * Streaming ITERATIVE-condition funnel —
+   * [[graft.operators.Funnel.funnelIterative]]'s twin: the min-anchor
+   * dominance vector (`d[j]` = minimal anchor among chains completing
+   * stage j, lossless under the `num >= 0` monotonicity contract)
+   * behind the [[cepUpdate]] buffer, folded by the batch sorted route's
+   * own [[graft.operators.Funnel.iterAdvance]]. Emission on any
+   * ts-slot change (stage progress; `d`-only improvements move no
+   * observable). The ts slots fill strictly in stage order, so
+   * completion is `reached == k`. `valCol` must already be integer
+   * fixed-point (the batch operator's contract); a NULL fails LOUDLY
+   * ([[graft.operators.Funnel.iterVal]]) — the typed encoder would
+   * otherwise fail opaquely and the batch twins would diverge.
+   */
   def streamingFunnelIterative(spark: SparkSession, events: DataFrame,
       valCol: String, stages: Seq[graft.operators.Funnel.IterStage],
       anchor: graft.operators.Funnel.IterAnchor, watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelIterUpdate] = {
-    import spark.implicits._
     graft.operators.Funnel.iterRequire(stages)
-    events
-      .withWatermark("ts", watermark)
-      // iterVal raises LOUDLY on a NULL value — the typed encoder
-      // would otherwise fail opaquely and the batch twins would
-      // diverge (the shared non-null contract)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"),
-        graft.operators.Funnel.iterVal(valCol).as("v"), col("ts"))
-      .as[FunnelValueEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelIterative(stages.toIndexedSeq,
-          anchor == graft.operators.Funnel.AnchorFirst, matchRetentionMs))
+    runCep(events, watermark, iterativeMachine(stages.toIndexedSeq,
+        anchor == graft.operators.Funnel.AnchorFirst, matchRetentionMs),
+      graft.operators.Funnel.iterVal(valCol))
   }
-
-  /** State of the PREDICATE funnel twin — the greedy pointer +
-    * witnesses, with the pending buffer carrying the value the
-    * predicates read. */
-  final case class FunnelWhereState(stage: Int, witnessUs: Seq[Long],
-      pending: Seq[(Long, Long, String, Long)])
 
   /**
    * Streaming PREDICATE funnel —
    * [[graft.operators.Funnel.funnelWhere]]'s twin for per-stage
    * SIMPLE conditions (Flink `where(SimpleCondition)` / `subtype`):
-   * stage j advances on the first mature event satisfying an
-   * arbitrary SERIALIZABLE predicate over (event type, value) — the
-   * streaming surface trades the batch side's Column predicates for
-   * Scala functions of the standard [[FunnelValueEvent]] fields,
-   * since a closure must ship to the state store where a Column
-   * cannot. Same watermark-buffer, emission and retention discipline
-   * as [[updateFunnel]] (greedy pointer + witnesses; conditions are
-   * event-local, so greedy-earliest stays exact).
+   * stage j advances on the first mature event satisfying an arbitrary
+   * SERIALIZABLE predicate over (event type, value) — the streaming
+   * surface trades the batch side's Column predicates for Scala
+   * functions, since a closure must ship to the state store where a
+   * Column cannot. Same machine and contract as [[streamingFunnel]].
+   * `valCol` is the one carried value column (integer domain, the
+   * batch contract). NULL (or unparseable) values fail LOUDLY via the
+   * family's shared non-null guard ([[graft.operators.Funnel.iterVal]])
+   * — the typed state encoder cannot represent a NULL long, and a
+   * silent per-surface default would diverge from the batch
+   * predicate's NULL-is-false Column semantics with no signal; filter
+   * or default NULLs first.
    */
-  def updateFunnelWhere(stages: IndexedSeq[(String, Long) => Boolean],
-      matchRetentionMs: Long = Long.MaxValue)(
-      userId: Long, rows: Iterator[FunnelValueEvent],
-      state: GroupState[FunnelWhereState]): Iterator[FunnelUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelWhereState(0, Nil, Nil))
-    if (prev.stage == k && state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp, e.v))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var stage = prev.stage
-    var wit = prev.witnessUs
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp, v) =>
-      if (stage < k && stages(stage)(tp, v)) { wit = wit :+ us; stage += 1 }
-    }
-    val rest = if (stage == k) Nil else immature
-    val removable = stage == 0 && wit.isEmpty && rest.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelWhereState(stage, wit, rest))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(rest.map(_._1).min / 1000L + 1L)
-      else if (stage == k && matchRetentionMs != Long.MaxValue)
-        state.setTimeoutTimestamp(math.max(
-          wit.last / 1000L + matchRetentionMs,
-          state.getCurrentWatermarkMs() + 1L))
-    }
-    if ((first && !removable) || stage != prev.stage)
-      Iterator(FunnelUpdate(userId, stage, wit))
-    else Iterator.empty
-  }
-
-  /** The streaming predicate funnel over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelWhere]]'s
-    * pointer; `valCol` is the one carried value column (integer
-    * domain, the batch contract). NULL (or unparseable) values fail
-    * LOUDLY via the family's shared non-null guard
-    * ([[graft.operators.Funnel.iterVal]]) — the typed state encoder
-    * cannot represent a NULL long, and a silent per-surface default
-    * would diverge from the batch predicate's NULL-is-false Column
-    * semantics with no signal; filter or default NULLs first. */
   def streamingFunnelWhere(spark: SparkSession, events: DataFrame,
       valCol: String, stages: Seq[(String, Long) => Boolean],
       watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] = {
-    import spark.implicits._
     require(stages.nonEmpty, "need at least one stage")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"),
-        graft.operators.Funnel.iterVal(valCol, "streamingFunnelWhere")
-          .as("v"), col("ts"))
-      .as[FunnelValueEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelWhere(stages.toIndexedSeq, matchRetentionMs))
+    runCep(events, watermark,
+      whereMachine(stages.toIndexedSeq, matchRetentionMs),
+      graft.operators.Funnel.iterVal(valCol, "streamingFunnelWhere"))
   }
 
-  final case class FunnelAnyState(c: Seq[Long],
-      pending: Seq[(Long, Long, String)])
+  /** The k-slot path-counting vector. */
+  final case class FunnelAnyState(c: Seq[Long])
   final case class FunnelAnyUpdate(user_id: Long, n_any: Long)
 
-  /**
-   * Streaming `followedByAny` combination COUNT —
-   * [[graft.operators.Funnel.funnelAnyCount]]'s twin: per-user state
-   * is the k-slot path-counting vector plus the family's event-time
-   * buffer; mature events fold in watermark order with the same
-   * pre-state rule (an event never extends the combinations it just
-   * created). Emission on count change (monotone — it only grows).
-   * A user whose vector is all-zero with nothing buffered drops
-   * losslessly; an active user's state is k longs forever (the count
-   * never "completes" — the same persistence contract as the match
-   * enumerator).
-   */
-  def updateFunnelAnyCount(stages: IndexedSeq[String])(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelAnyState]): Iterator[FunnelAnyUpdate] = {
+  private def combinationsMachine(stages: IndexedSeq[(String, Boolean)])
+      : Cep[FunnelAnyState, FunnelAnyUpdate] = {
     val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelAnyState(Seq.fill(k)(0L), Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val c = prev.c.toArray
-    mature.sortBy(e => (e._1, e._2)).foreach { case (_, _, tp) =>
-      val pre = c.clone()
-      stages.indices.foreach { j =>
-        if (tp == stages(j)) c(j) += (if (j == 0) 1L else pre(j - 1))
-      }
-    }
-    val removable = c.forall(_ == 0L) && immature.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelAnyState(c.toSeq, immature))
-      if (immature.nonEmpty)
-        state.setTimeoutTimestamp(immature.map(_._1).min / 1000L + 1L)
-    }
-    if ((first && !removable) || c(k - 1) != prev.c(k - 1))
-      Iterator(FunnelAnyUpdate(userId, c(k - 1)))
-    else Iterator.empty
+    Cep[FunnelAnyState, FunnelAnyUpdate](
+      init = FunnelAnyState(Seq.fill(k)(0L)),
+      step = { case (s, (_, _, tp, _)) =>
+        val pre = s.c.toArray
+        val c = pre.clone()
+        var j = 0
+        while (j < k) {
+          val (t, loop) = stages(j)
+          if (tp == t)
+            c(j) += (if (j == 0) 1L else pre(j - 1)) +
+              (if (loop) pre(j) else 0L)
+          j += 1
+        }
+        FunnelAnyState(c.toSeq)
+      },
+      idle = _.c.forall(_ == 0L),
+      row = Some((u, s) => FunnelAnyUpdate(u, s.c(k - 1))))
   }
 
   /**
    * Streaming `allowCombinations()` loop-stage multiplicity —
-   * [[graft.operators.Funnel.funnelCombinations]]'s twin: the
-   * [[updateFunnelAnyCount]] fold with the loop rule (a loop-stage
-   * event also re-adds the stage's own pre-count — every existing
-   * combination may absorb it), same buffer discipline, emission on
-   * count change.
+   * [[graft.operators.Funnel.funnelCombinations]]'s twin: the k-slot
+   * path-counting vector behind the [[cepUpdate]] buffer, with the
+   * pre-state rule (an event never extends the combinations it just
+   * created) and the loop rule (a loop-stage event also re-adds the
+   * stage's own pre-count — every existing combination may absorb
+   * it). Emission on count change (monotone — it only grows). The
+   * count never "completes": an active user's state is k longs
+   * forever, an all-zero one drops losslessly.
    */
-  def updateFunnelCombinations(stages: IndexedSeq[(String, Boolean)])(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelAnyState]): Iterator[FunnelAnyUpdate] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelAnyState(Seq.fill(k)(0L), Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    val c = prev.c.toArray
-    mature.sortBy(e => (e._1, e._2)).foreach { case (_, _, tp) =>
-      val pre = c.clone()
-      stages.indices.foreach { j =>
-        val (t, loop) = stages(j)
-        if (tp == t)
-          c(j) += (if (j == 0) 1L else pre(j - 1)) +
-            (if (loop) pre(j) else 0L)
-      }
-    }
-    val removable = c.forall(_ == 0L) && immature.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelAnyState(c.toSeq, immature))
-      if (immature.nonEmpty)
-        state.setTimeoutTimestamp(immature.map(_._1).min / 1000L + 1L)
-    }
-    if ((first && !removable) || c(k - 1) != prev.c(k - 1))
-      Iterator(FunnelAnyUpdate(userId, c(k - 1)))
-    else Iterator.empty
-  }
-
-  /** The streaming combinations counter over an events stream. */
   def streamingFunnelCombinations(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Boolean)],
       watermark: String): Dataset[FunnelAnyUpdate] = {
-    import spark.implicits._
     require(stages.nonEmpty, "need at least one stage")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelCombinations(stages.toIndexedSeq))
+    runCep(events, watermark, combinationsMachine(stages.toIndexedSeq))
   }
 
-  /** The streaming combination counter over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelAnyCount]]'s
-    * path-counting state. */
+  /** Streaming `followedByAny` combination COUNT —
+    * [[graft.operators.Funnel.funnelAnyCount]]'s twin: the
+    * combinations counter with no loop stage. */
   def streamingFunnelAnyCount(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], watermark: String): Dataset[FunnelAnyUpdate] = {
-    import spark.implicits._
-    require(stages.nonEmpty, "need at least one stage")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelAnyCount(stages.toIndexedSeq))
-  }
+      stages: Seq[String], watermark: String): Dataset[FunnelAnyUpdate] =
+    streamingFunnelCombinations(spark, events, stages.map(_ -> false),
+      watermark)
 
-  /** `partial` holds the in-progress match's witnesses (length =
-    * advances mod k). */
-  final case class FunnelMultiState(n: Long, partial: Seq[Long],
-      pending: Seq[(Long, Long, String)])
+  /** The skip-past-last pointer machine: `n` advances, `partial` the
+    * in-progress match's witnesses (length = advances mod k), `held`
+    * the completed matches `(match_idx, witnesses)` not yet emitted. */
+  final case class FunnelMatchesState(n: Long, partial: Seq[Long],
+      held: Seq[(Long, Seq[Long])])
   final case class FunnelMatchEmit(user_id: Long, match_idx: Long,
       ts_us: Seq[Long])
+
+  /** Skip-past-last enumeration; `absence` = (window µs, blocker type)
+    * turns the emit-on-completion into the absence alarm's holding
+    * pen. */
+  private def matchesMachine(stages: IndexedSeq[String], maxMatches: Int,
+      absence: Option[(Long, String)])
+      : Cep[FunnelMatchesState, FunnelMatchEmit] = {
+    val k = stages.length
+    def deadlines(s: FunnelMatchesState): Seq[Long] =
+      absence.fold(Seq.empty[Long])(a => s.held.map(_._2.head + a._1))
+    Cep[FunnelMatchesState, FunnelMatchEmit](
+      init = FunnelMatchesState(0L, Nil, Nil),
+      step = { case (s, (us, _, tp, _)) =>
+        var n = s.n
+        var partial = s.partial
+        var held = s.held
+        if (tp == stages((n % k).toInt)) {
+          n += 1
+          partial = partial :+ us
+          if (partial.length == k) {
+            val matchIdx = n / k
+            if (matchIdx <= maxMatches &&
+                absence.forall(a => partial.last - partial.head <= a._1))
+              held = held :+ ((matchIdx, partial))
+            partial = Nil
+          }
+        }
+        absence.foreach { case (w, absentType) =>
+          if (tp == absentType)
+            held = held.filterNot { case (_, m) =>
+              m.last < us && us <= m.head + w }
+        }
+        FunnelMatchesState(n, partial, held)
+      },
+      idle = s => s.n == 0L && s.held.isEmpty,
+      wakeUps = deadlines,
+      drain = { (u, s, wmUs) =>
+        val (matured, held) = s.held.partition { case (_, w) =>
+          absence.forall(a => w.head + a._1 <= wmUs) }
+        (s.copy(held = held),
+          matured.sortBy(_._1).map { case (i, w) => FunnelMatchEmit(u, i, w) })
+      })
+  }
 
   /**
    * Streaming match ENUMERATION —
    * [[graft.operators.Funnel.funnelMulti]]'s twin (AFTER MATCH SKIP
    * PAST LAST EVENT): each completed non-overlapping match emits
-   * exactly ONE `(user_id, match_idx, witnesses)` row at the moment
-   * its last stage matures, up to `maxMatches` per user (later
-   * matches still advance the counter silently, the batch cap
-   * contract; the batch `n_matches` total is the stream's running
-   * high-water mark and is not re-emitted per row). State is O(k)
-   * forever for an active user — the pointer must persist because
-   * skip-past-last matching never "completes" — plus the event-time
-   * buffer; a user whose counter is 0 with nothing buffered is
-   * dropped losslessly.
+   * exactly ONE `(user_id, match_idx, witnesses)` row at the moment its
+   * last stage matures behind the [[cepUpdate]] buffer, up to
+   * `maxMatches` per user (later matches still advance the counter
+   * silently, the batch cap contract; the batch `n_matches` total is
+   * the stream's running high-water mark and is not re-emitted per
+   * row). State is O(k) forever for an active user — the pointer must
+   * persist because skip-past-last matching never "completes"; a user
+   * whose counter is 0 with nothing buffered is dropped losslessly.
    */
-  def updateFunnelMulti(stages: IndexedSeq[String], maxMatches: Int)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelMultiState]): Iterator[FunnelMatchEmit] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelMultiState(0L, Nil, Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var n = prev.n
-    var partial = prev.partial
-    val emits = scala.collection.mutable.ArrayBuffer.empty[FunnelMatchEmit]
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      if (tp == stages((n % k).toInt)) {
-        n += 1
-        partial = partial :+ us
-        if (partial.length == k) {
-          val matchIdx = n / k
-          if (matchIdx <= maxMatches)
-            emits += FunnelMatchEmit(userId, matchIdx, partial)
-          partial = Nil
-        }
-      }
-    }
-    val removable = n == 0L && immature.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelMultiState(n, partial, immature))
-      if (immature.nonEmpty)
-        state.setTimeoutTimestamp(immature.map(_._1).min / 1000L + 1L)
-    }
-    emits.iterator
-  }
-
-  /** The streaming match enumerator over an events stream — the
-    * [[streamingFunnel]] plumbing with [[updateFunnelMulti]]'s
-    * witness-stream state. */
   def streamingFunnelMulti(spark: SparkSession, events: DataFrame,
       stages: Seq[String], maxMatches: Int,
       watermark: String): Dataset[FunnelMatchEmit] = {
-    import spark.implicits._
     require(stages.nonEmpty && maxMatches >= 1,
       "need stages and maxMatches >= 1")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelMulti(stages.toIndexedSeq, maxMatches))
+    runCep(events, watermark,
+      matchesMachine(stages.toIndexedSeq, maxMatches, None))
   }
-
-  /** [[updateFunnelMulti]]'s state plus the ABSENCE-alarm holding pen:
-    * `held` carries completed, span-fit matches `(match_idx,
-    * witnesses)` whose tail window (completion, start + T] is not yet
-    * fully below the watermark — a blocker maturing inside the tail
-    * kills them; the window closing blocker-free emits them. */
-  final case class FunnelAbsenceState(n: Long, partial: Seq[Long],
-    held: Seq[(Long, Seq[Long])], pending: Seq[(Long, Long, String)])
 
   /**
    * Streaming ABSENCE alarm — [[graft.operators.Funnel
@@ -2643,7 +2049,7 @@ object StreamingIngest {
    * `notFollowedBy(B).within(T)`, the one pattern shape whose match
    * can only emit on TIME — the moment the window closes without the
    * blocker — which is exactly Flink's timed-out-partial-match
-   * emission). The [[updateFunnelMulti]] pointer machine enumerates
+   * emission). The [[streamingFunnelMulti]] pointer machine enumerates
    * skip-past-last matches over the mature (watermark-ordered) event
    * stream; a completed match whose span fits the window enters the
    * holding pen instead of emitting; a mature `absentType` event at
@@ -2651,83 +2057,22 @@ object StreamingIngest {
    * (time comparisons, the batch contract — a blocker sharing the
    * completion's exact timestamp does not kill); once the watermark
    * passes start + T the tail is fully observed and the match emits.
-   * The state requests an event-time timeout at the earliest held
-   * deadline, so matches mature even when the user's stream goes
-   * quiet — the ALARM fires without a further event, the absence
-   * semantics' whole point. Held state is bounded by `maxMatches`;
-   * `match_idx` gaps mark window-cut or blocker-killed matches
-   * (batch contract; the batch `n_matches` recount is deliberately
-   * absent mid-stream — StreamingSpec pins the drain-time recount
-   * law instead).
+   * The held deadlines are the machine's wake-ups, so matches mature
+   * even when the user's stream goes quiet — the ALARM fires without
+   * a further event, the absence semantics' whole point. Held state is
+   * bounded by `maxMatches`; `match_idx` gaps mark window-cut or
+   * blocker-killed matches (batch contract; the batch `n_matches`
+   * recount is deliberately absent mid-stream — StreamingSpec pins the
+   * drain-time recount law instead).
    */
-  def updateFunnelMatchesAbsence(stages: IndexedSeq[String],
-      maxMatches: Int, windowMicros: Long, absentType: String)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelAbsenceState]): Iterator[FunnelMatchEmit] = {
-    val k = stages.length
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(
-      FunnelAbsenceState(0L, Nil, Nil, Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var n = prev.n
-    var partial = prev.partial
-    var held = prev.held
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, _, tp) =>
-      if (tp == stages((n % k).toInt)) {
-        n += 1
-        partial = partial :+ us
-        if (partial.length == k) {
-          val matchIdx = n / k
-          if (matchIdx <= maxMatches &&
-              partial.last - partial.head <= windowMicros)
-            held = held :+ ((matchIdx, partial))
-          partial = Nil
-        }
-      }
-      if (tp == absentType)
-        held = held.filterNot { case (_, w) =>
-          w.last < us && us <= w.head + windowMicros }
-    }
-    val (matured, stillHeld) = held.partition { case (_, w) =>
-      w.head + windowMicros <= wmUs }
-    held = stillHeld
-    val removable = n == 0L && immature.isEmpty && held.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelAbsenceState(n, partial, held, immature))
-      val wakeups = immature.map(_._1) ++
-        held.map { case (_, w) => w.head + windowMicros }
-      if (wakeups.nonEmpty)
-        state.setTimeoutTimestamp(wakeups.min / 1000L + 1L)
-    }
-    matured.sortBy(_._1)
-      .map { case (idx, w) => FunnelMatchEmit(userId, idx, w) }
-      .iterator
-  }
-
-  /** The streaming absence alarm over an events stream — the
-    * [[streamingFunnel]] plumbing with
-    * [[updateFunnelMatchesAbsence]]'s holding-pen state. */
   def streamingFunnelMatchesAbsence(spark: SparkSession,
       events: DataFrame, stages: Seq[String], maxMatches: Int,
       windowMicros: Long, absentType: String,
       watermark: String): Dataset[FunnelMatchEmit] = {
-    import spark.implicits._
     require(stages.nonEmpty && maxMatches >= 1 && windowMicros > 0,
       "need stages, maxMatches >= 1 and windowMicros > 0")
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelMatchesAbsence(stages.toIndexedSeq, maxMatches,
-          windowMicros, absentType))
+    runCep(events, watermark, matchesMachine(stages.toIndexedSeq,
+      maxMatches, Some((windowMicros, absentType))))
   }
 
   /** Streaming GROUP match enumeration — [[graft.operators.Funnel
@@ -2777,7 +2122,7 @@ object StreamingIngest {
    * [[graft.operators.Funnel.funnelGroupMatchesRangeAbsence]]'s twin
    * (`begin(group).times(m, n).notFollowedBy(B).within(T)`). FULL
    * (`maxTimes`-repetition) matches stream exactly like the fixed
-   * form's: [[updateFunnelMatchesAbsence]]'s holding pen over the
+   * form's: [[streamingFunnelMatchesAbsence]]'s holding pen over the
    * `maxTimes`-fold expansion — span-fit at completion, killed by a
    * mature tail blocker, emitted on the event-time timer when the
    * watermark closes the tail — with the flat witnesses relabeled
@@ -2817,9 +2162,64 @@ object StreamingIngest {
 
   /** Chains are flat `Seq[Long]` of interleaved (us, oid) pairs;
     * `buckets(j-1)` holds the prefixes that matched stages 1..j.
-    * (mu, mo) is the running after-match-skip threshold. */
+    * (mu, mo) is the running after-match-skip threshold; `ready` the
+    * surviving matches `(match_idx, witnesses)` not yet emitted. */
   final case class FunnelSkipState(n: Long, mu: Long, mo: Long,
-      buckets: Seq[Seq[Seq[Long]]], pending: Seq[(Long, Long, String)])
+      buckets: Seq[Seq[Seq[Long]]], ready: Seq[(Long, Seq[Long])])
+
+  private def skipMachine(stages: Seq[(String, Int)],
+      skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int)
+      : Cep[FunnelSkipState, FunnelMatchEmit] = {
+    val types = graft.operators.Funnel.expandStages(stages)
+    val k = types.length
+    val (anchor, inclusive) = graft.operators.Funnel.skipAnchor(stages, skip)
+    def survives(c: Seq[Long], mu: Long, mo: Long): Boolean = {
+      val (su, so) = (c(0), c(1))
+      if (inclusive) su > mu || (su == mu && so >= mo)
+      else su > mu || (su == mu && so > mo)
+    }
+    Cep[FunnelSkipState, FunnelMatchEmit](
+      init = FunnelSkipState(0L, Long.MinValue, Long.MinValue,
+        Seq.fill(k - 1)(Nil), Nil),
+      step = { case (s, (us, oid, tp, _)) =>
+        var n = s.n
+        var mu = s.mu
+        var mo = s.mo
+        var ready = s.ready
+        val pre = s.buckets.toArray
+        val buckets = pre.clone()
+        (1 to k - 1).foreach { j =>
+          val stay = if (tp == types(j)) Nil else pre(j - 1)
+          val arrive =
+            if (j == 1) { if (tp == types.head) Seq(Seq(us, oid)) else Nil }
+            else if (tp == types(j - 1)) pre(j - 2).map(_ :+ us :+ oid)
+            else Nil
+          buckets(j - 1) = stay ++ arrive
+        }
+        val completions =
+          if (tp == types(k - 1)) pre(k - 2).map(_ :+ us :+ oid) else Nil
+        completions.foreach { c =>
+          if (survives(c, mu, mo)) {
+            n += 1
+            if (n <= maxMatches)
+              ready = ready :+ ((n, c.indices.collect {
+                case i if i % 2 == 0 => c(i) }))
+            anchor.foreach { a =>
+              val (au, ao) = (c(2 * (a - 1)), c(2 * (a - 1) + 1))
+              if (au > mu || (au == mu && ao > mo)) { mu = au; mo = ao }
+            }
+          }
+        }
+        FunnelSkipState(n, mu, mo, buckets.toSeq, ready)
+      },
+      idle = s => s.n == 0L && s.buckets.forall(_.isEmpty),
+      // semantic GC: a branch whose start is behind the threshold can
+      // never survive the pruning scan — drop it (output-invariant)
+      drain = (u, s, _) => (
+        s.copy(buckets = s.buckets.map(_.filter(survives(_, s.mu, s.mo))),
+          ready = Nil),
+        s.ready.map { case (i, w) => FunnelMatchEmit(u, i, w) }))
+  }
 
   /**
    * Streaming after-match-skip enumeration —
@@ -2828,105 +2228,32 @@ object StreamingIngest {
    * advance together) plus the running anchor threshold, so the
    * pruning scan happens ONLINE — each completion is checked against
    * the threshold the moment its last stage matures, which is exactly
-   * the batch completion-order scan because mature events fold in
-   * watermark order. Each surviving match emits exactly ONE
-   * `(user_id, match_idx, witnesses)` row, up to `maxMatches` (later
-   * survivors advance the counter silently, the batch cap contract).
-   * Branches whose start falls behind the threshold can never emit
-   * and are garbage-collected from the buckets at each flush — under
-   * an anchored strategy the live state is bounded by the branches
-   * started since the last emitted match's anchor (SkipToNext keeps
-   * every live branch, the batch contract). A user with no branches,
-   * no count and nothing buffered drops losslessly.
+   * the batch completion-order scan because the [[cepUpdate]] buffer
+   * folds mature events in watermark order. Each surviving match emits
+   * exactly ONE `(user_id, match_idx, witnesses)` row, up to
+   * `maxMatches` (later survivors advance the counter silently, the
+   * batch cap contract). Branches whose start falls behind the
+   * threshold can never emit and are garbage-collected at each flush —
+   * under an anchored strategy the live state is bounded by the
+   * branches started since the last emitted match's anchor
+   * (SkipToNext keeps every live branch, the batch contract). A user
+   * with no branches, no count and nothing buffered drops losslessly.
    */
-  def updateFunnelSkip(stages: Seq[(String, Int)],
-      skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int)(
-      userId: Long, rows: Iterator[FunnelEvent],
-      state: GroupState[FunnelSkipState]): Iterator[FunnelMatchEmit] = {
-    val types = graft.operators.Funnel.expandStages(stages)
-    val k = types.length
-    val (anchor, inclusive) = graft.operators.Funnel.skipAnchor(stages, skip)
-    val first = state.getOption.isEmpty
-    val prev = state.getOption.getOrElse(FunnelSkipState(0L, Long.MinValue,
-      Long.MinValue, Seq.fill(k - 1)(Nil), Nil))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val all = prev.pending ++ rows.map(e => (e.usMicros, e.eventId, e.tp))
-    val (mature, immature) = all.partition(_._1 <= wmUs)
-    var n = prev.n
-    var mu = prev.mu
-    var mo = prev.mo
-    val buckets = prev.buckets.toArray
-    val emits = scala.collection.mutable.ArrayBuffer.empty[FunnelMatchEmit]
-    mature.sortBy(e => (e._1, e._2)).foreach { case (us, oid, tp) =>
-      val pre = buckets.clone()
-      (1 to k - 1).foreach { j =>
-        val stay = if (tp == types(j)) Nil else pre(j - 1)
-        val arrive =
-          if (j == 1) { if (tp == types.head) Seq(Seq(us, oid)) else Nil }
-          else if (tp == types(j - 1)) pre(j - 2).map(_ :+ us :+ oid)
-          else Nil
-        buckets(j - 1) = stay ++ arrive
-      }
-      val completions =
-        if (tp == types(k - 1)) pre(k - 2).map(_ :+ us :+ oid) else Nil
-      completions.foreach { c =>
-        val (su, so) = (c(0), c(1))
-        val surv = if (inclusive) su > mu || (su == mu && so >= mo)
-          else su > mu || (su == mu && so > mo)
-        if (surv) {
-          n += 1
-          if (n <= maxMatches)
-            emits += FunnelMatchEmit(userId, n,
-              c.indices.collect { case i if i % 2 == 0 => c(i) })
-          anchor.foreach { a =>
-            val (au, ao) = (c(2 * (a - 1)), c(2 * (a - 1) + 1))
-            if (au > mu || (au == mu && ao > mo)) { mu = au; mo = ao }
-          }
-        }
-      }
-    }
-    // semantic GC: a branch whose start is behind the threshold can
-    // never survive the pruning scan — drop it (output-invariant)
-    val gcd = buckets.map(_.filter { c =>
-      val (su, so) = (c(0), c(1))
-      if (inclusive) su > mu || (su == mu && so >= mo)
-      else su > mu || (su == mu && so > mo)
-    })
-    val removable = n == 0L && gcd.forall(_.isEmpty) && immature.isEmpty
-    if (removable) {
-      if (!first) state.remove()
-    } else {
-      state.update(FunnelSkipState(n, mu, mo, gcd.toSeq, immature))
-      if (immature.nonEmpty)
-        state.setTimeoutTimestamp(immature.map(_._1).min / 1000L + 1L)
-    }
-    emits.iterator
-  }
-
-  /** The streaming after-match-skip enumerator over an events stream —
-    * the [[streamingFunnel]] plumbing with [[updateFunnelSkip]]'s
-    * branch-bucket state. */
   def streamingFunnelSkip(spark: SparkSession, events: DataFrame,
       stages: Seq[(String, Int)],
       skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int,
       watermark: String): Dataset[FunnelMatchEmit] = {
-    import spark.implicits._
     graft.operators.Funnel.skipRequire(stages, skip, maxMatches)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"), col("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(
-        updateFunnelSkip(stages, skip, maxMatches))
+    runCep(events, watermark, skipMachine(stages, skip, maxMatches))
   }
 
   // -------------------------------------------------------------------
   // Streaming absence detection (the j6 batch notFollowedBy's twin)
   // -------------------------------------------------------------------
 
+  /** A view/purchase event of the absence detector. */
+  final case class FunnelEvent(user_id: Long, usMicros: Long,
+      eventId: Long, tp: String, ts: java.sql.Timestamp)
   final case class AbsenceState(pendingViews: Seq[(Long, Long)],
       purchases: Seq[Long])
   final case class AbsenceVerdict(user_id: Long, event_id: Long,

@@ -1345,6 +1345,33 @@ class FunnelSpec extends SparkSpec {
     assert(fold.length === 1 && fold(0).contains(",1,"))
   }
 
+  test("funnelIterative: the sorted skew route builds with no Spark job over a frame whose scan throws") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("user_id", LongType),
+      StructField("event_id", LongType), StructField("ts", StringType),
+      StructField("event_type", StringType), StructField("v", LongType)))
+    val failing = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(1), 1)
+        .mapPartitions[Row](_ => throw new RuntimeException("scan ran")),
+      schema)
+    val stages = Seq(Funnel.IterStage("view"),
+      Funnel.IterStage("click", Some(Funnel.RelGt(1, 1))))
+    // building the plan must run nothing: no scan, no user-keyed shuffle
+    val sorted = Funnel.funnelIterative(failing, "user_id", "event_type",
+      "ts", "event_id", "v", stages, route = Funnel.Bucketed())
+    assert(sorted.columns.toSeq ===
+      Seq("user_id", "stage_reached", "ts1_us", "ts2_us"))
+    // the frame really does throw once an action runs it
+    val e = intercept[Throwable](sorted.collect())
+    var cur = e; var seen = List.empty[Throwable]; var found = false
+    while (cur != null && !seen.exists(_ eq cur)) {
+      found ||= Option(cur.getMessage).exists(_.contains("scan ran"))
+      seen ::= cur; cur = cur.getCause
+    }
+    assert(found, e.toString)
+  }
+
   test("funnelIterative: the sorted skew route == the array fold on random corpora, both anchors, multi-partition") {
     val rnd = new scala.util.Random(5016L)
     val typesPool = Array("view", "click", "purchase")

@@ -228,19 +228,20 @@ class LayoutSpec extends SparkSpec {
     }, "Morton must exhibit a seam jump for the comparison to mean anything")
   }
 
-  test("hilbertValue3: Skilling walk matches the JVM replay; full 8x8x8 grid is a bijection with unit steps; 3-dim pruning beats Morton's") {
-    import graft.functions.HilbertIndex3
+  test("hilbertValueN at n = 3: Skilling walk matches the JVM replay; full 8x8x8 grid is a bijection with unit steps; 3-dim pruning beats Morton's") {
+    import graft.functions.HilbertIndexN
     val rnd = new scala.util.Random(1699L)
     val rows = (0 until 300).map(_ => (rnd.nextInt(1 << 16).toLong,
       rnd.nextInt(1 << 16).toLong, rnd.nextInt(1 << 16).toLong))
     val got = rows.toDF("a", "b", "c")
-      .select(Layout.hilbertValue3(col("a"), col("b"), col("c"), 16).as("h"))
+      .select(Layout.hilbertValueN(Seq(col("a"), col("b"), col("c")), 16)
+        .as("h"))
       .collect().map(_.getLong(0))
     assert(got.toSeq === rows.map { case (a, b, c) =>
-      HilbertIndex3.index(Array(a, b, c), 16) })
+      HilbertIndexN.index(Array(a, b, c), 16) })
     // structure on the full 8x8x8 grid: bijection + every step moves
     // exactly ONE cell in ONE dimension (Morton jumps at octant seams)
-    val cells = (0L until 512L).map(HilbertIndex3.axes(_, 3, 3).toSeq)
+    val cells = (0L until 512L).map(HilbertIndexN.axes(_, 3, 3).toSeq)
     assert(cells.toSet.size === 512)
     cells.sliding(2).foreach { case Seq(p1, p2) =>
       assert(p1.zip(p2).map { case (u, v) => math.abs(u - v) }.sum === 1L,
@@ -248,15 +249,15 @@ class LayoutSpec extends SparkSpec {
     }
     // forward really inverts the inverse
     (0L until 512L).foreach { d =>
-      assert(HilbertIndex3.index(HilbertIndex3.axes(d, 3, 3), 3) === d)
+      assert(HilbertIndexN.index(HilbertIndexN.axes(d, 3, 3), 3) === d)
     }
-    // 3-dim box pruning: hilbert3 layout reads no more files than the
+    // 3-dim box pruning: the n = 3 layout reads no more files than the
     // 3-key Morton layout on the t96 box shape, fewer than linear
     val li = (0 until 40000).map(_ => (rnd.nextInt(128).toLong,
         rnd.nextInt(128).toLong, rnd.nextInt(128).toLong, rnd.nextInt(100)))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     val dir = java.nio.file.Files.createTempDirectory("hilbert3").toString
-    Layout.hilbertOrderWrite3(li,
+    Layout.hilbertOrderWriteN(li,
       Seq("l_orderkey", "l_partkey", "l_suppkey"), bits = 7,
       s"$dir/h3", numFiles = 16, audit = true)
     Layout.zOrderWriteN(li, Seq("l_orderkey", "l_partkey", "l_suppkey"),
@@ -278,19 +279,9 @@ class LayoutSpec extends SparkSpec {
     assert(boxRows(s"$dir/h3").nonEmpty)
   }
 
-  test("hilbertValueN: generic Skilling loop equals hilbertValue3 at n=3; 4-d grid is a bijection with unit steps; 4-d pruning beats Morton") {
-    import graft.functions.HilbertIndex3
+  test("hilbertValueN at n = 4: codegen equals the JVM walk; the 4-d grid is a bijection with unit steps; 4-d pruning beats Morton") {
+    import graft.functions.HilbertIndexN
     val rnd = new scala.util.Random(1700L)
-    // n = 3 parity: the generic expression and the dedicated ternary
-    // one generate the same codegen'd recurrence — bit-identical
-    val rows3 = (0 until 300).map(_ => (rnd.nextInt(1 << 16).toLong,
-      rnd.nextInt(1 << 16).toLong, rnd.nextInt(1 << 16).toLong))
-    val df3 = rows3.toDF("a", "b", "c")
-    assert(
-      df3.select(Layout.hilbertValueN(Seq(col("a"), col("b"), col("c")),
-          16).as("h")).collect().map(_.getLong(0)).toSeq ===
-        df3.select(Layout.hilbertValue3(col("a"), col("b"), col("c"),
-          16).as("h")).collect().map(_.getLong(0)).toSeq)
     // n = 4 codegen vs the shared JVM walk (the replay both the spec
     // and the t100 oracle derive from)
     val rows4 = (0 until 300).map(_ => (rnd.nextInt(1 << 15).toLong,
@@ -301,21 +292,21 @@ class LayoutSpec extends SparkSpec {
         Seq(col("a"), col("b"), col("c"), col("d")), 15).as("h"))
       .collect().map(_.getLong(0))
     assert(got4.toSeq === rows4.map { case (a, b, c, d) =>
-      HilbertIndex3.index(Array(a, b, c, d), 15) })
+      HilbertIndexN.index(Array(a, b, c, d), 15) })
     // NULL in any key → NULL out
     assert(Seq((Some(1L), None: Option[Long])).toDF("a", "b")
       .select(Layout.hilbertValueN(Seq(col("a"), col("b")), 3))
       .collect().head.isNullAt(0))
     // structure on the full 8^4 grid: bijection + every step moves
     // exactly ONE cell in ONE dimension
-    val cells = (0L until 4096L).map(HilbertIndex3.axes(_, 3, 4).toSeq)
+    val cells = (0L until 4096L).map(HilbertIndexN.axes(_, 3, 4).toSeq)
     assert(cells.toSet.size === 4096)
     cells.sliding(2).foreach { case Seq(p1, p2) =>
       assert(p1.zip(p2).map { case (u, v) => math.abs(u - v) }.sum === 1L,
         s"$p1 -> $p2 not adjacent")
     }
     (0L until 4096L).foreach { d =>
-      assert(HilbertIndex3.index(HilbertIndex3.axes(d, 3, 4), 3) === d)
+      assert(HilbertIndexN.index(HilbertIndexN.axes(d, 3, 4), 3) === d)
     }
     // 4-dim box pruning: no more files than 4-key Morton, fewer than
     // linear; contents identical

@@ -356,8 +356,9 @@ class StreamingSpec extends SparkSpec {
       }
     val stream = spark.readStream.schema(appendSide.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingIndexAppend(stream, "vec_id",
-      "embedding", streamTable, tmp("idx-append-ckpt"))
+    val q = StreamingIngest.streamingIndexSink(stream,
+      tmp("idx-append-ckpt"))(VectorOps.appendToIndexCommitted(_,
+      "vec_id", "embedding", streamTable, _))
     q.processAllAvailable(); q.stop()
     val probeStream = Staging.scoped {
       VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, streamTable),
@@ -370,12 +371,12 @@ class StreamingSpec extends SparkSpec {
       VectorOps.loadIndex(spark, streamTable).coded.count()
     }
     val before = codedCount()
-    StreamingIngest.appendVectorBatch(appendSide, batchId = 0L,
-      "vec_id", "embedding", streamTable)
+    VectorOps.appendToIndexCommitted(appendSide, "vec_id", "embedding",
+      streamTable, batchId = 0L)
     assert(codedCount() === before)
     // a NEW batch id with an empty frame commits without adding rows
-    StreamingIngest.appendVectorBatch(appendSide.limit(0), batchId = 99L,
-      "vec_id", "embedding", streamTable)
+    VectorOps.appendToIndexCommitted(appendSide.limit(0), "vec_id",
+      "embedding", streamTable, batchId = 99L)
     assert(codedCount() === before)
     assert(CommitLog.committedBatches(spark, streamTable) === Seq(0L, 1L, 99L))
     // COMPACTION folds the committed side runs into the bucketed base
@@ -421,8 +422,8 @@ class StreamingSpec extends SparkSpec {
     assert(probe() === probeBase) // staged rows never became visible
     // RESTART: Structured Streaming replays batch 0 with the same rows;
     // the stale staging debris is cleared and the batch commits once
-    StreamingIngest.appendVectorBatch(appendSide, batchId = 0L,
-      "vec_id", "embedding", table)
+    VectorOps.appendToIndexCommitted(appendSide, "vec_id", "embedding",
+      table, batchId = 0L)
     assert(CommitLog.isCommitted(spark, table, 0L))
     val afterReplay = probe()
     // the replayed result equals a ONE-SHOT batch append (exactly-once)
@@ -437,8 +438,8 @@ class StreamingSpec extends SparkSpec {
     assert(afterReplay === probeRef)
     // and a second replay of the committed id is a no-op
     val n = Staging.scoped { VectorOps.loadIndex(spark, table).coded.count() }
-    StreamingIngest.appendVectorBatch(appendSide, batchId = 0L,
-      "vec_id", "embedding", table)
+    VectorOps.appendToIndexCommitted(appendSide, "vec_id", "embedding",
+      table, batchId = 0L)
     assert(Staging.scoped {
       VectorOps.loadIndex(spark, table).coded.count() } === n)
   }
@@ -477,8 +478,9 @@ class StreamingSpec extends SparkSpec {
       }
     val stream = spark.readStream.schema(appendSide.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingPqAppend(stream, "vec_id",
-      "embedding", streamTable, tmp("pq-append-ckpt"))
+    val q = StreamingIngest.streamingIndexSink(stream,
+      tmp("pq-append-ckpt"))(VectorOps.appendToPqIndexCommitted(_,
+      "vec_id", "embedding", streamTable, _))
     q.processAllAvailable(); q.stop()
     def probePq(): Set[org.apache.spark.sql.Row] = Staging.scoped {
       VectorOps.pqTopKFromIndex(VectorOps.loadPqIndex(spark, streamTable),
@@ -490,8 +492,8 @@ class StreamingSpec extends SparkSpec {
       VectorOps.loadPqIndex(spark, streamTable).coded.count()
     }
     val before = codedCount()
-    StreamingIngest.appendPqBatch(appendSide, batchId = 0L,
-      "vec_id", "embedding", streamTable)
+    VectorOps.appendToPqIndexCommitted(appendSide, "vec_id", "embedding",
+      streamTable, batchId = 0L)
     assert(codedCount() === before)
     assert(CommitLog.committedBatches(spark, streamTable) === Seq(0L, 1L))
     // DELETE twin: stream-fed tombstones equal the one-shot t60 path
@@ -506,8 +508,9 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$delSrc/wave0.parquet"))
     val delStream = spark.readStream
       .schema(doomed.select("vec_id").schema).parquet(delSrc)
-    val dq = StreamingIngest.streamingPqDelete(delStream, "vec_id",
-      streamTable, tmp("pq-del-ckpt"))
+    val dq = StreamingIngest.streamingIndexSink(delStream,
+      tmp("pq-del-ckpt"))(StreamingIngest.deletePqBatch(_, _, "vec_id",
+      streamTable))
     dq.processAllAvailable(); dq.stop()
     val refDel = Staging.scoped {
       VectorOps.deleteFromPqIndex(doomed, "vec_id", refTable)
@@ -562,8 +565,9 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(doomed.select("vec_id").schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingIndexDelete(stream, "vec_id",
-      streamTable, tmp("idx-del-ckpt"))
+    val q = StreamingIngest.streamingIndexSink(stream,
+      tmp("idx-del-ckpt"))(StreamingIngest.deleteVectorBatch(_, _,
+      "vec_id", streamTable))
     q.processAllAvailable(); q.stop()
     val probeStream = Staging.scoped {
       VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, streamTable),
@@ -595,8 +599,9 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$bmSrc/wave0.parquet"))
     val bmStream = spark.readStream.schema(bmDoomed.schema)
       .parquet(bmSrc)
-    val bq = StreamingIngest.streamingBm25Delete(bmStream, "doc_id",
-      bmTable, tmp("bm25-del-ckpt"))
+    val bq = StreamingIngest.streamingIndexSink(bmStream,
+      tmp("bm25-del-ckpt"))(StreamingIngest.deleteDocBatch(_, _, "doc_id",
+      bmTable))
     bq.processAllAvailable(); bq.stop()
     val probe = Retrieval
       .bm25TopKFromIndex(spark, bmTable, Seq("data", "model"), k = 20)
@@ -733,8 +738,9 @@ class StreamingSpec extends SparkSpec {
       }
     val stream = spark.readStream.schema(appendSide.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingBm25Append(stream, "doc_id", "text",
-      streamTable, tmp("bm25-append-ckpt"))
+    val q = StreamingIngest.streamingIndexSink(stream,
+      tmp("bm25-append-ckpt"))(StreamingIngest.appendDocBatch(_, _,
+      "doc_id", "text", streamTable))
     q.processAllAvailable(); q.stop()
     val probeStream = Staging.scoped {
       Retrieval.bm25TopKFromIndex(spark, streamTable, terms, k = 20)
@@ -768,8 +774,9 @@ class StreamingSpec extends SparkSpec {
       }
     val stream = spark.readStream.schema(appendSide.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingBm25AppendCommitted(stream, "doc_id",
-      "text", table)
+    val q = StreamingIngest.streamingIndexSink(stream,
+      tmp("bm25-commit-ckpt"))(Retrieval.appendToBm25IndexCommitted(_,
+      "doc_id", "text", table, _))
     q.processAllAvailable(); q.stop()
     // one atomic commit per micro-batch; the base tables are untouched
     assert(CommitLog.committedBatches(spark, table).size === 2)
@@ -1109,6 +1116,87 @@ class StreamingSpec extends SparkSpec {
     val last = u1.last
     assert(last._3 === 1)
     assert(last._4 === Seq(t("2024-01-01 14:00:00").getTime * 1000L))
+  }
+
+  test("retention property: every completing CEP twin frees its completed state once the watermark passes completion + retention, and a later event starts a new instance") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.operators.Funnel.{IterStage, PatternStage}
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    // 2-hour lag, 30-minute retention; the comments give the watermark
+    // each wave's batch runs with. u1 completes at 10:10 (batch 1), is
+    // freed once the watermark passes 10:40 (batch 2) and its 14:00
+    // view starts a NEW instance (stage 1 after the wm-15:10 flush). u2
+    // completes at 12:50 (batch 2); batch 3 runs at wm 13:05 without u2
+    // data (a timer set short of 12:50 + 30 min would fire there) and
+    // u2's 13:15 view arrives at wm 13:10 — both before completion +
+    // retention — so u2 must neither be freed nor restart.
+    val waves = Seq(
+      Seq(Row(1L, 1L, t("2024-01-01 10:00:00"), "view"),
+        Row(1L, 2L, t("2024-01-01 10:05:00"), "click"),
+        Row(1L, 3L, t("2024-01-01 10:10:00"), "purchase"),
+        Row(2L, 4L, t("2024-01-01 12:40:00"), "view"),
+        Row(2L, 5L, t("2024-01-01 12:45:00"), "click"),
+        Row(2L, 6L, t("2024-01-01 12:50:00"), "purchase")),
+      Seq(Row(9L, 90L, t("2024-01-01 15:00:00"), "error")), // wm 10:50
+      Seq(Row(9L, 91L, t("2024-01-01 15:05:00"), "error")), // wm 13:00
+      Seq(Row(9L, 92L, t("2024-01-01 15:10:00"), "error")), // wm 13:05
+      Seq(Row(1L, 7L, t("2024-01-01 14:00:00"), "view"),    // wm 13:10
+        Row(2L, 8L, t("2024-01-01 13:15:00"), "view")),
+      Seq(Row(9L, 93L, t("2024-01-01 17:10:00"), "error")), // wm 13:10
+      Seq(Row(9L, 94L, t("2024-01-01 17:20:00"), "error"))) // wm 15:10
+    val src = tmp("retention-prop-src")
+    writeWaves(src, waves)
+    val ret = 30L * 60 * 1000
+    val hour = 3600L * 1000 * 1000
+    val abc = Seq("view", "click", "purchase")
+    val twins: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "Within" -> (s => StreamingIngest.streamingFunnelWithin(spark, s,
+        abc, hour, "2 hours", ret).toDF()),
+      "Guarded" -> (s => StreamingIngest.streamingFunnelGuarded(spark, s,
+        abc, Seq(Some("error"), Some("error")), "2 hours", ret).toDF()),
+      "PatternWithin" -> (s => StreamingIngest.streamingFunnelPatternWithin(
+        spark, s, abc.map(PatternStage(_)), hour, "2 hours", ret).toDF()),
+      "WithinGuarded" -> (s => StreamingIngest.streamingFunnelWithinGuarded(
+        spark, s, abc, hour, Seq(None, Some("error")), "2 hours",
+        ret).toDF()),
+      "Loop" -> (s => StreamingIngest.streamingFunnelLoop(spark, s,
+        abc.map(_ -> 1), "2 hours", ret).toDF()),
+      "LoopUntil" -> (s => StreamingIngest.streamingFunnelLoopUntil(spark,
+        s, abc.map(tp => (tp, 1, None)), "2 hours", ret).toDF()),
+      "Pattern" -> (s => StreamingIngest.streamingFunnelPattern(spark, s,
+        abc.map(PatternStage(_)), "2 hours", ret).toDF()),
+      "Iterative" -> (s => StreamingIngest.streamingFunnelIterative(spark,
+        s, "v", abc.map(IterStage(_)),
+        graft.operators.Funnel.AnchorFirst, "2 hours", ret).toDF()),
+      "Where" -> (s => StreamingIngest.streamingFunnelWhere(spark, s, "v",
+        abc.map(want => (tp: String, _: Long) => tp == want), "2 hours",
+        ret).toDF()),
+      "Times" -> (s => StreamingIngest.streamingFunnelTimes(spark, s,
+        abc.map(_ -> 1), "2 hours", ret)))
+    for ((name, run) <- twins) {
+      val emitted = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Int)]
+      val q = run(spark.readStream.schema(funnelWaveSchema)
+          .option("maxFilesPerTrigger", "1").parquet(src)
+          .withColumn("v", lit(1L)))
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          df.collect().foreach(r => emitted.synchronized {
+            emitted += ((id, r.getLong(0), r.getInt(1)))
+          })
+          ()
+        }.start()
+      q.processAllAvailable(); q.stop()
+      def stages(u: Long): Seq[Int] =
+        emitted.filter(_._2 == u).sortBy(_._1).map(_._3).toSeq
+      val u1 = stages(1L)
+      val u2 = stages(2L)
+      // u1: completed, freed, then a fresh instance at stage 1
+      assert(u1.contains(3) && u1.last === 1, s"$name u1 $u1")
+      // u2: completed and still retained — nothing after completion
+      assert(u2.contains(3) && u2.drop(u2.indexOf(3) + 1).isEmpty,
+        s"$name u2 $u2")
+    }
   }
 
   test("streaming CEP funnel survives a checkpoint restart: resumed state equals batch") {

@@ -93,6 +93,30 @@ if grep -nE '^\s*def (funnel|streamingFunnel)\w*(Auto|Bucketed|Mode|Sorted)\(' \
   echo "FATAL: a routed twin is back (use route = Funnel.Bucketed/Auto or mode = ...)"
   exit 1
 fi
+echo "=== CEP retention guard (mandatory): every completing twin frees its state after the TTL"
+# the streaming CEP twins share one buffer whose retention rule is
+# honest only while one property pins it for every completing twin:
+# freed once the watermark passes completion + retention, not before
+RTLOG=$(sbt -batch 'testOnly graft.StreamingSpec -- -z "retention property"' 2>&1)
+echo "$RTLOG" | grep -q "retention property: every completing CEP twin frees its completed state once the watermark passes completion + retention, and a later event starts a new instance" \
+  || { echo "FATAL: CEP retention property did not run (renamed or filtered out)"; exit 1; }
+echo "$RTLOG" | grep -q "All tests passed" \
+  || { echo "FATAL: CEP retention property failed"; echo "$RTLOG" | tail -20; exit 1; }
+echo "=== one CEP event-time buffer: timeouts handled only by the driver"
+# every streaming CEP twin is a machine value run by cepUpdate (the one
+# timeout check) through runCep (the one event-time-timeout operator);
+# a twin with its own buffer must not come back. The j6 absence
+# detector (streamingNotFollowedBy) is not a CEP twin and keeps its own.
+if ! awk '
+  /^  ((private|final) )*def / {
+    match($0, /def [A-Za-z0-9_]+/); fn = substr($0, RSTART + 4, RLENGTH - 4) }
+  /hasTimedOut/ && fn != "cepUpdate" { print FILENAME ":" FNR ": " $0; bad = 1 }
+  /GroupStateTimeout\.EventTimeTimeout/ && fn != "runCep" &&
+    fn != "streamingNotFollowedBy" { print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/streaming/StreamingIngest.scala; then
+  echo "FATAL: event-time timeout handling outside the CEP driver (write a Cep machine instead)"
+  exit 1
+fi
 OUT=$(mktemp -d)
 echo "=== Verify sf0.01 -> $OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" 2>&1 \
