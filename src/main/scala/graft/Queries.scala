@@ -6678,8 +6678,8 @@ object Queries {
 
   /** CEP ordered-funnel matching ([[Funnel.funnel]]): per-user greedy
     * stage progression view → click → purchase in the total
-    * (event-time, event_id) order. One user-keyed hash-agg + an
-    * expression fold — no per-stage self-join, no window; the oracle
+    * (event-time, event_id) order. One user-keyed exchange, a sort and
+    * a per-user machine fold — no per-stage self-join, no window; the oracle
     * replays the greedy-earliest witness as a chain of row_number=1
     * picks each strictly after the previous. */
   val w6_funnel: Q = Q(
@@ -6714,21 +6714,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     },
     bench = true)
-
-  /** [[w6_funnel]] through the SKEW-SAFE bucketed monoid
-    * ([[Funnel.funnel]], 1-hour segments): each segment's
-    * effect is a (k+1)-slot transition vector, composed in bucket
-    * order — value-identical to the single fold by the composition
-    * law, so it gates against w6's oracle VERBATIM (the p12a-style
-    * strongest twin check). Per-group memory is bounded by the bucket
-    * width, the power-user answer the w6 scaladoc promises. */
-  val w7_funnel_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnel(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w6_funnel.oracle)
 
   private val FunnelWithinMicros = 7200000000L // CEP within(2 hours)
 
@@ -6779,22 +6764,6 @@ object Queries {
     },
     bench = true)
 
-  /** [[w8_funnel_within]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelWithin]], 1-hour segments): the windowed
-    * DP's segment summary needs the window-start slot the
-    * unconstrained monoid lacked — in-segment DP starts, plus
-    * greedy-earliest i→j completion times that decide whether a
-    * carried start's deadline survives the segment. Value-identical
-    * to the single fold, so it gates against w8's oracle VERBATIM
-    * (the w7-style strongest twin check). */
-  val w9_funnel_within_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelWithin(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          FunnelWithinMicros, route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w8_funnel_within.oracle)
-
   /** COMBINED windowed + guarded funnel
     * ([[Funnel.funnelWithinGuarded]]): convert within 2 h of your own
     * first view AND with no `error` between consecutive matched
@@ -6843,22 +6812,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[w14_funnel_within_guarded]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelWithinGuarded]]): the combined
-    * constraint's segment summary is richer than either single twin's
-    * — the fresh in-segment DP plus per-entry MIN-completion DPs
-    * whose alive vectors carry the clean-suffix requirement through
-    * the boundary, window feasibility tested against the carried
-    * start at merge time. Gates against w14's oracle VERBATIM. */
-  val w15_funnel_within_guarded_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelWithinGuarded(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id", FunnelStages,
-          FunnelWithinMicros, Seq(Some("error"), Some("error")),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w14_funnel_within_guarded.oracle)
-
   /** QUANTIFIED funnel — Flink CEP's `times(n)`
     * ([[Funnel.funnelTimes]]): two views, then two clicks, then a
     * purchase. The operator reduces the quantifiers to stage-list
@@ -6901,20 +6854,6 @@ object Queries {
          |  LEFT JOIN s5 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w12_funnel_times]] through the SKEW-SAFE segment monoid — the
-    * expansion composes with [[Funnel.funnel]] for free (same
-    * expanded stage list, k+1 transition slots per segment), so the
-    * quantified bucketed variant gates against w12's oracle
-    * VERBATIM. */
-  val w13_funnel_times_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelTimes(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w12_funnel_times.oracle)
 
   /** LOOPING-quantifier funnel — Flink CEP's `oneOrMore` /
     * `timesOrMore(n)` with GREEDY repetition
@@ -6984,20 +6923,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[w16_funnel_loop]] through the SKEW-SAFE segment monoid — the
-    * loop fold's summary (exit pointer, count DELTAS, last times) is
-    * exact for every entry pointer because increments depend only on
-    * the running pointer, so the bucketed variant gates against w16's
-    * oracle VERBATIM. */
-  val w17_funnel_loop_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w16_funnel_loop.oracle)
-
   /** BOUNDED quantifier times(m, n) ([[Funnel.funnelTimesRange]]) —
     * the last Flink quantifier shape after times(n) (w12) and
     * oneOrMore/timesOrMore (w16): view×(2..3) → click×(1..2) →
@@ -7064,22 +6989,6 @@ object Queries {
          |  LEFT JOIN r3 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w18_funnel_times_range]] through the SKEW-SAFE segment monoid
-    * ([[Funnel.funnelTimesRange]]): with a cap the count-delta
-    * summary is insufficient (a segment's usable absorptions depend on
-    * slots already used), so segments carry per-stage capped
-    * consumed-time LISTS and the merge concatenates-then-truncates —
-    * exact because the pointer trajectory never reads counts. Gated on
-    * w18's oracle VERBATIM. */
-  val w19_funnel_times_range_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelTimesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2, 3), ("click", 1, 2), ("purchase", 1, 1)),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w18_funnel_times_range.oracle)
 
   /** RELUCTANT consume mode ([[Funnel.funnelLoop]] with
     * [[Funnel.Reluctant]]) on w16's loop pattern — Flink's DEFAULT
@@ -7148,18 +7057,6 @@ object Queries {
          |  LEFT JOIN r3 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w49_funnel_loop_reluctant]] through the SKEW-SAFE twin the
-    * mode flag routes to (the w19 list-carrying monoid at the m = n
-    * floor). Gated on w49's oracle VERBATIM. */
-  val w49b_funnel_loop_reluctant_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          Funnel.Reluctant, Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w49_funnel_loop_reluctant.oracle)
 
   /** Events with the `value` column converted ONCE to integer cents —
     * the fixed-point domain every iterative-condition predicate runs
@@ -7266,20 +7163,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[Funnel.funnelIterative]] under `Auto()` — the iterative machine
-    * through the feasibility router (single array fold below the
-    * threshold, the wall-free sorted fold above it; measured, the
-    * single fold dies at a 48M-event key where the sorted fold finishes
-    * in 27 s). Routes single at sf0.01; FunnelSpec forces both routes.
-    * Gated on w50's oracle VERBATIM. */
-  val w55_funnel_iterative_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelIterative(eventsWithCents(spark, dir), "user_id",
-          "event_type", "ts", "event_id", "v_cents", iterStagesFirst,
-          Funnel.AnchorFirst, Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w50_funnel_iterative_first.oracle)
-
   /** Per-stage SIMPLE conditions ([[Funnel.funnelWhere]]) — Flink
     * CEP's `where(SimpleCondition)`: view worth ≥ $5 → click worth
     * ≥ $8 → any purchase, each stage an arbitrary event-local
@@ -7372,40 +7255,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[w53_funnel_where]] through the SKEW-SAFE split
-    * ([[Funnel.funnelWhere]]): the funnel segment monoid never
-    * read WHAT the advance test is — (exit stage, witnesses) per entry
-    * stage summarizes a segment under any event-local predicate.
-    * Gated on w53's oracle VERBATIM. */
-  val w54_funnel_where_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelWhere(eventsWithCents(spark, dir), "user_id",
-          "ts", "event_id", Seq("event_type", "v_cents"),
-          Seq(
-            e => e.getField("event_type") === "view" &&
-              e.getField("v_cents") >= 500L,
-            e => e.getField("event_type") === "click" &&
-              e.getField("v_cents") >= 800L,
-            e => e.getField("event_type") === "purchase"),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w53_funnel_where.oracle)
-
-  /** [[w50_funnel_iterative_first]] through the SKEW-SAFE plan
-    * ([[Funnel.funnelIterative]]): iterative conditions break
-    * the segment monoid (a segment's effect depends on entry anchors
-    * through value comparisons — no O(k) summary), so the skew path
-    * is the sort-based fold: one hash exchange, spill-backed
-    * secondary sort, O(k) memory per key with NO 2 GB collected-row
-    * wall. Gated on w50's oracle VERBATIM. */
-  val w52_funnel_iterative_sorted: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelIterative(eventsWithCents(spark, dir),
-          "user_id", "event_type", "ts", "event_id", "v_cents",
-          iterStagesFirst, Funnel.AnchorFirst, Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w50_funnel_iterative_first.oracle)
-
   // -------------------------------------------------------------------
   // CEP contiguity modes (next / notNext / optional) + match
   // enumeration (after-match-skip) — w20–w27
@@ -7484,24 +7333,6 @@ object Queries {
          |  LEFT JOIN m3 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w20_funnel_strict]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelPattern]], 1-hour segments): chains stay
-    * independent under strict hops, so a segment's effect is linear
-    * over the (l, o) entry vector — 2k+1 unit-entry folds, min-merge
-    * on first-reach times. Cross-boundary adjacency is sound because
-    * time buckets partition the total order contiguously. Gates
-    * against w20's oracle VERBATIM. */
-  val w21_funnel_strict_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w20_funnel_strict.oracle)
 
   /** OPTIONAL stage — Flink CEP's `optional()`: signup →
     * error(optional) → purchase. A chain may skip the optional stage
@@ -7598,38 +7429,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[w24_funnel_pattern_product]] through the bucketed split —
-    * notNext kills discriminate only by last-ness, which the (l, o)
-    * entry vector carries, so segment linearity survives the full
-    * combinator product. Gated on w24's oracle VERBATIM. */
-  val w25_funnel_pattern_product_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-            Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w24_funnel_pattern_product.oracle)
-
-  /** [[Funnel.funnelPattern]] — the contiguity-NFA pair through
-    * the round-16 feasibility router (the w44 recipe extended to the
-    * pattern family): one peak-per-key probe, single NFA fold below
-    * [[Funnel.AutoBucketKeyEvents]], the (l, o) segment split above
-    * it. Routes single at sf0.01; FunnelSpec forces both routes and
-    * proves them equal. Gated on w24's oracle VERBATIM. */
-  val w47_funnel_pattern_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-            Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w24_funnel_pattern_product.oracle)
-
   /** The CONTIGUITY × WITHIN product
     * ([[Funnel.funnelPatternWithin]]): w24's full combinator pattern —
     * view (notNext `error`) → click (optional) → purchase (strict) —
@@ -7684,38 +7483,6 @@ object Queries {
          |FROM u LEFT JOIN m1 USING (user_id) LEFT JOIN m3 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w42_funnel_pattern_within]] through the SKEW-SAFE split
-    * ([[Funnel.funnelPatternWithin]]): fresh product-NFA fold
-    * plus 2k entry folds carrying first-reach times per (stage, l/o)
-    * slot; composition applies the deadline once per target against
-    * the carried max-start. Gated on w42's oracle VERBATIM. */
-  val w43_funnel_pattern_within_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelPatternWithin(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-            Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          windowMicros = 7200L * 1000000L, route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w42_funnel_pattern_within.oracle)
-
-  /** [[Funnel.funnelPatternWithin]] — w42's product NFA through
-    * the feasibility router (twins were flat at the 20M power key, so
-    * the threshold only guards the 2 GB wall). Routes single at
-    * sf0.01; FunnelSpec forces both routes. Gated on w42's oracle
-    * VERBATIM. */
-  val w48_funnel_pattern_within_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelPatternWithin(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-            Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          windowMicros = 7200L * 1000000L, route = Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w42_funnel_pattern_within.oracle)
 
   /** Loop boundary condition — Flink CEP's `until`
     * ([[Funnel.funnelLoopUntil]]): view(1+, until `signup`) →
@@ -7803,10 +7570,7 @@ object Queries {
     * gaps-and-islands replay with each completed stage's reps
     * literal-capped and its time read from the island's (s+m-1)-th
     * event (one idx join); trailing-partial branches are unchanged —
-    * a partial run consumes identically under both modes. The
-    * bucketed twin gates on the same oracle (w56b): the entry-state
-    * machinery is mode-independent (a reluctant open segment's count
-    * delta is zero). */
+    * a partial run consumes identically under both modes. */
   val w56_funnel_loop_consecutive_reluctant: Q = Q(
     run = (spark, dir) =>
       Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
@@ -7865,34 +7629,6 @@ object Queries {
         |  LEFT JOIN tr USING (user_id)
         |ORDER BY user_id""".stripMargin))
 
-  /** [[w56_funnel_loop_consecutive_reluctant]] through the SKEW-SAFE
-    * segment split. Gated on w56's oracle VERBATIM. */
-  val w56b_funnel_loop_consecutive_reluctant_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant,
-          Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w56_funnel_loop_consecutive_reluctant.oracle)
-
-  /** Consume mode on the skew-safe route
-    * ([[Funnel.funnelLoopConsecutive]] with [[Funnel.Reluctant]] and
-    * `Bucketed(3600)`, the route an above-threshold `Auto()` resolves
-    * to): this row proves a reluctant call lands on the reluctant
-    * BUCKETED twin — not a silently-greedy one (the round-16 verdict's
-    * router/mode coverage gap). Gated on w56's oracle VERBATIM;
-    * FunnelSpec's consume-mode route test additionally pins the picked
-    * route structurally. */
-  val w58_funnel_loop_consecutive_auto_reluctant: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant,
-          Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w56_funnel_loop_consecutive_reluctant.oracle)
-
   /** GROUP pattern under `times(n)` ([[Funnel.funnelGroupTimes]]) —
     * Flink CEP's GroupPattern: the quantifier applied to a SEQUENCE
     * (`begin(begin("view").next("click")).times(2)`). The reduction is
@@ -7930,20 +7666,6 @@ object Queries {
          |  LEFT JOIN m3 USING (user_id) LEFT JOIN m4 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w59_funnel_group_times]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelGroupTimes]]): the segment split never
-    * reads what the stage list means, only its length. Gates on w59's
-    * oracle VERBATIM. */
-  val w59b_funnel_group_times_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupTimes(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)), times = 2,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w59_funnel_group_times.oracle)
 
   /** [[w59_funnel_group_times]] with CONSECUTIVE seams — Flink's
     * `consecutive()` on the GROUP: repetitions must be strictly
@@ -8108,9 +7830,7 @@ object Queries {
     * completing click is immediately followed by an error is INVALID
     * (the chain dies at the blocker — no seam extension, no count);
     * completions at end-of-log pass. The machine is the dominance
-    * fold's `bl` kill transition — still max-plus linear, so the
-    * bucketed twin (w71b) carries it through the gain matrices
-    * unchanged. Oracle: the guarded greedy-earliest chain —
+    * fold's `bl` kill transition. Oracle: the guarded greedy-earliest chain —
     * exchange-optimal because completion validity is an index
     * property (see [[duckGroupLoopGreedyGuarded]]). */
   val w71_funnel_group_loop_seam_guard: Q = Q(
@@ -8126,19 +7846,6 @@ object Queries {
          |SELECT u.user_id, CAST(COALESCE(max(lvl), 0) AS BIGINT) AS reps
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
-
-  /** [[w71_funnel_group_loop_seam_guard]] through the TROPICAL
-    * segment split: the kill is the -inf coefficient, linear, so the
-    * twin gates on w71's oracle VERBATIM. */
-  val w71b_funnel_group_loop_seam_guard_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w71_funnel_group_loop_seam_guard.oracle)
 
   /** BOUNDED group quantifier WITH a trailing seam guard —
     * `begin(view→click·notNextAfter(error)).times(2,3)`, the one
@@ -8170,36 +7877,6 @@ object Queries {
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
 
-  /** [[w72_funnel_group_times_range_guarded]] through the TROPICAL
-    * segment split: the guarded gain matrices run UNCHANGED (the kill
-    * is the −inf coefficient, w71b) and the cap applies to the OUTPUT
-    * (min-with-constant is not max-plus linear; the w68b placement
-    * argument). Gates on w72's oracle VERBATIM. */
-  val w72b_funnel_group_times_range_guarded_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupTimesRange(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          minTimes = 2, maxTimes = 3, route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w72_funnel_group_times_range_guarded.oracle)
-
-  /** [[w72_funnel_group_times_range_guarded]] through the AUTO router
-    * ([[Funnel.funnelGroupTimesRange]]): the guarded range
-    * rides the measured feasibility routing — below the 24M threshold
-    * this is the capped single fold. Gates on w72's oracle VERBATIM
-    * (the w68c auto-gate pattern). */
-  val w72c_funnel_group_times_range_guarded_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupTimesRange(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          minTimes = 2, maxTimes = 3, route = Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w72_funnel_group_times_range_guarded.oracle)
-
   /** GROUP pattern under `oneOrMore` ([[Funnel.funnelGroupLoop]]) —
     * the UNBOUNDED quantifier over a sequence, which stage-list
     * expansion cannot reach: view→click traversals repeated
@@ -8223,20 +7900,6 @@ object Queries {
          |SELECT u.user_id, CAST(COALESCE(max(lvl), 0) AS BIGINT) AS reps
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
-
-  /** [[w62_funnel_group_loop]] through the TROPICAL segment split
-    * ([[Funnel.funnelGroupLoop]]): the dominance fold is
-    * max-plus linear, so a segment is a (gain matrix, fresh vector)
-    * pair and composition is the tropical matrix product. Gates on
-    * w62's oracle VERBATIM. */
-  val w62b_funnel_group_loop_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w62_funnel_group_loop.oracle)
 
   /** [[w62_funnel_group_loop]] with STRICT in-group contiguity AND
     * consecutive seams (`oneOrMore.consecutive()` on the group): each
@@ -8304,35 +7967,6 @@ object Queries {
          |  LEAST(CAST(COALESCE(max(lvl), 0) AS BIGINT), 2) AS reps
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
-
-  /** [[w68_funnel_group_loop_reluctant]] through the TROPICAL segment
-    * split: the cap is min-with-a-constant — NOT max-plus linear — so
-    * the bucketed twin runs the greedy gain matrices UNCHANGED and
-    * caps the OUTPUT; the truncation lemma makes the two placements
-    * the same function. Gates on w68's oracle VERBATIM. */
-  val w68b_funnel_group_loop_reluctant_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          mode = Funnel.Reluctant, minTimes = 2,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w68_funnel_group_loop_reluctant.oracle)
-
-  /** [[w68_funnel_group_loop_reluctant]] through the AUTO router
-    * ([[Funnel.funnelGroupLoop]] with `mode = Reluctant`): the
-    * consume mode rides the feasibility routing — below the threshold
-    * this is the capped single fold. Gates on w68's oracle VERBATIM
-    * (the j5a/t34a auto-gate pattern). */
-  val w68c_funnel_group_loop_reluctant_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          mode = Funnel.Reluctant, minTimes = 2, route = Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w68_funnel_group_loop_reluctant.oracle)
 
   /** RELUCTANT group loop under CONSECUTIVE seams and strict in-group
     * contiguity — the mode composed with the seam axis where greedy
@@ -8669,63 +8303,6 @@ object Queries {
          |ORDER BY user_id, match_idx""".stripMargin
     })
 
-  /** [[w75_funnel_group_matches_range]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelMulti]]'s monoid over the ceiling
-    * expansion): the bucketed machine reproduces the witness stream
-    * `(n, w)` bit-identically, so the range reading composes onto it
-    * unchanged. Gates on w75's oracle VERBATIM. */
-  lazy val w75c_funnel_group_matches_range_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupMatchesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click"), minTimes = 2, maxTimes = 3,
-          maxMatches = MultiMatchCap, route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w75_funnel_group_matches_range.oracle)
-
-  /** [[w75b_funnel_group_matches_range_absence]] with the enumeration
-    * routed through the bucketed split — the absence predicates are
-    * per-match index properties of the (bit-identical) witness
-    * stream, so the whole composition is route-independent (the w73b
-    * pattern). Gates on w75b's oracle VERBATIM. */
-  lazy val w75d_funnel_group_matches_range_absence_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGroupMatchesRangeAbsence(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click"), minTimes = 2, maxTimes = 3,
-          maxMatches = MultiMatchCap,
-          windowMicros = 432000L * 1000000L, absentType = "error",
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w75b_funnel_group_matches_range_absence.oracle)
-
-  /** [[w38_funnel_loop_consecutive]] through the SKEW-SAFE segment
-    * split ([[Funnel.funnelLoopConsecutive]]): one machine fold
-    * per entry state (stage × partial-run-count-or-open), composed by
-    * table lookup with replace-vs-add merge. Gated on w38's oracle
-    * VERBATIM. */
-  val w40_funnel_loop_consecutive_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w38_funnel_loop_consecutive.oracle)
-
-  /** [[Funnel.funnelLoopConsecutive]] — w38's consecutive-run
-    * machine through the feasibility router (this split honestly
-    * LOSES ~1.5× on skew, so the default threshold routes single
-    * until the 2 GB wall makes the split the only runnable plan).
-    * Routes single at sf0.01; FunnelSpec forces both routes. Gated on
-    * w38's oracle VERBATIM. */
-  val w46_funnel_loop_consecutive_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), route = Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w38_funnel_loop_consecutive.oracle)
-
   val w31_funnel_loop_until: Q = Q(
     run = (spark, dir) =>
       Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
@@ -8809,8 +8386,7 @@ object Queries {
     * reluctant caps each completed stage's reps at minReps with ts at
     * the block's last mandatory pick. Oracle: w31's pick-chain +
     * until-truncated repetition intervals with a rank cut at each
-    * stage's minReps (the w18 cap recipe inside w31's truncation).
-    * The bucketed twin gates on the same oracle (w57b). */
+    * stage's minReps (the w18 cap recipe inside w31's truncation). */
   val w57_funnel_loop_until_reluctant: Q = Q(
     run = (spark, dir) =>
       Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
@@ -8891,33 +8467,6 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** [[w57_funnel_loop_until_reluctant]] through the SKEW-SAFE
-    * doubled-entry split. Gated on w57's oracle VERBATIM. */
-  val w57b_funnel_loop_until_reluctant_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 1, Some("signup")), ("click", 2, None),
-            ("purchase", 1, Some("error"))),
-          Funnel.Reluctant, Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w57_funnel_loop_until_reluctant.oracle)
-
-  /** [[w31_funnel_loop_until]] through the SKEW-SAFE split
-    * ([[Funnel.funnelLoopUntil]]): the loop monoid's entry
-    * state doubles to (pointer, closed-bit) — 2·(K'+1) slots per
-    * segment, count deltas still exact (absorption reads the pointer
-    * and the bit, never counts). Gated on w31's oracle VERBATIM. */
-  val w32_funnel_loop_until_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 1, Some("signup")), ("click", 2, None),
-            ("purchase", 1, Some("error"))),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w31_funnel_loop_until.oracle)
-
   /** `followedByAny` MULTIPLICITY ([[Funnel.funnelAnyCount]]): the
     * number of ALL ordered view → click → purchase combinations per
     * user (overlapping included — w6 is one witness, w26 the
@@ -8945,35 +8494,6 @@ object Queries {
          |FROM u LEFT JOIN m USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w28_funnel_any_count]] through the SKEW-SAFE split
-    * ([[Funnel.funnelAnyCount]]): the count vector evolves
-    * linearly, so a segment summarizes as the (k+1)² unit-triangular
-    * product matrix — the cheapest segment summary in the family —
-    * and merging is one matrix–vector product. Gated on w28's oracle
-    * VERBATIM. */
-  val w29_funnel_any_count_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelAnyCount(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", Seq("view", "click", "purchase"),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w28_funnel_any_count.oracle)
-
-  /** [[Funnel.funnelAnyCount]] — the measured-crossover router
-    * (round 15): probe the peak per-key event count once, take the
-    * single fold below [[Funnel.AutoBucketKeyEvents]] and the matrix
-    * monoid above it (the single fold's ~2 GB collected-row wall:
-    * alive at 40M events, dead at 48M). Routes to the single fold at
-    * sf0.01; FunnelSpec forces both routes and proves them equal.
-    * Gated on w28's oracle VERBATIM. */
-  val w44_funnel_any_count_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelAnyCount(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", Seq("view", "click", "purchase"),
-          Funnel.Auto())
-        .orderBy("user_id"),
-    oracle = w28_funnel_any_count.oracle)
 
   /** `followedByAny` ENUMERATION ([[Funnel.funnelAnyEnumerate]]): one
     * row per ordered combination. Answer-size-bound by construction
@@ -9064,21 +8584,6 @@ object Queries {
          |ORDER BY user_id, match_idx""".stripMargin
     })
 
-  /** [[w26_funnel_matches]] through the SKEW-SAFE segment monoid
-    * ([[Funnel.funnelMulti]]): the witness-stream reduction
-    * makes the summary (advance count, capped witness list) with
-    * concat-truncate composition — exact because the trajectory reads
-    * the TRUE counter, never the capped list. Gated on w26's oracle
-    * VERBATIM. */
-  val w27_funnel_matches_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelMulti(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase"), maxMatches = MultiMatchCap,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w26_funnel_matches.oracle)
-
   private val AbsenceWindowUs = 432000L * 1000000L // 5 days
 
   /** TRAILING `notFollowedBy(error).within(5 days)` — Flink's absence
@@ -9139,21 +8644,6 @@ object Queries {
          |      AND b.us > m.ts3_us AND b.us <= m.ts1_us + $AbsenceWindowUs)
          |ORDER BY user_id, match_idx""".stripMargin
     })
-
-  /** [[w73_funnel_matches_absence]] through the SKEW-SAFE segment
-    * monoid (the enumeration rides [[Funnel.funnelMulti]],
-    * w27's machine; span and tail filters are per-match index
-    * properties, unchanged by how the witness stream was folded).
-    * Gates on w73's oracle VERBATIM. */
-  val w73b_funnel_matches_absence_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelMatchesAbsence(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase"), maxMatches = MultiMatchCap,
-          windowMicros = AbsenceWindowUs, absentType = "error",
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w73_funnel_matches_absence.oracle)
 
   /** Oracle for the after-match-skip family ([[Funnel.funnelSkip]]):
     * per-start greedy chains as k-1 chained first-after picks (one
@@ -9265,18 +8755,6 @@ object Queries {
         |FROM u LEFT JOIN pairs USING (user_id)
         |GROUP BY u.user_id ORDER BY user_id""".stripMargin))
 
-  /** [[w39_funnel_combinations]] through the SKEW-SAFE matrix-monoid
-    * split ([[Funnel.funnelCombinations]] — the w29 machinery
-    * with diagonal-2 loop rows). Gated on w39's oracle VERBATIM. */
-  val w41_funnel_combinations_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelCombinations(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> false, "click" -> true, "purchase" -> false),
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w39_funnel_combinations.oracle)
-
   /** After-match skip SKIP_TO_LAST ([[Funnel.funnelSkip]] with
     * [[Funnel.SkipToLast]]): view → click×2 → purchase, an emitted
     * match discards partial matches started strictly before its LAST
@@ -9334,52 +8812,6 @@ object Queries {
       Seq("view", "click", "purchase"),
       anchor = None, inclusive = true, cap = MultiMatchCap)))
 
-  /** [[w33_funnel_skip_to_last]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelSkip]]): per-segment entry-bucket scalar
-    * simulations + an internal machine run, carried buckets
-    * re-distributed through the entry table, completions re-sorted on
-    * (completion, start) before the identical pruning scan. Gated on
-    * w33's oracle VERBATIM. */
-  val w36_funnel_skip_to_last_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-          Funnel.SkipToLast(2), maxMatches = MultiMatchCap,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w33_funnel_skip_to_last.oracle)
-
-  /** [[Funnel.funnelSkip]] — w33's after-match-skip machine
-    * through the feasibility router: the family where routing matters
-    * most (bucketed WON 2.6× at the 20M power key and the single fold
-    * dies at ~48M events — before the router the caller had to know
-    * both facts). Routes single at sf0.01; FunnelSpec forces both
-    * routes. Gated on w33's oracle VERBATIM. */
-  val w45_funnel_skip_auto: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-          Funnel.SkipToLast(2), maxMatches = MultiMatchCap,
-          route = Funnel.Auto())
-        .orderBy("user_id", "match_idx"),
-    oracle = w33_funnel_skip_to_last.oracle)
-
-  /** [[w35_funnel_skip_to_next]] through the bucketed split — the
-    * no-pruning case exercises the pure chain-enumeration monoid
-    * (entry-table composition with nothing killed). Gated on w35's
-    * oracle VERBATIM. */
-  val w37_funnel_skip_to_next_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 1, "purchase" -> 1),
-          Funnel.SkipToNext, maxMatches = MultiMatchCap,
-          route = Funnel.Bucketed(3600L))
-        .orderBy("user_id", "match_idx"),
-    oracle = w35_funnel_skip_to_next.oracle)
-
   /** GUARDED funnel — Flink CEP's `notFollowedBy` INSIDE a pattern
     * ([[Funnel.funnelGuarded]]): view → click → purchase counts only
     * via chains with NO `error` event strictly between consecutive
@@ -9422,20 +8854,6 @@ object Queries {
          |  LEFT JOIN m3 USING (user_id)
          |ORDER BY user_id""".stripMargin
     })
-
-  /** [[w10_funnel_guarded]] through the SKEW-SAFE bucketed split
-    * ([[Funnel.funnelGuarded]], 1-hour segments): the NFA is
-    * a union of independent chains, so a segment's effect is LINEAR
-    * over the entry vector in the boolean semiring — k+1 unit-entry
-    * folds of O(k) metadata per segment, composed in bucket order.
-    * Gates against w10's oracle VERBATIM. */
-  val w11_funnel_guarded_bucketed: Q = Q(
-    run = (spark, dir) =>
-      Funnel.funnelGuarded(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          Seq(Some("error"), Some("error")), route = Funnel.Bucketed(3600L))
-        .orderBy("user_id"),
-    oracle = w10_funnel_guarded.oracle)
 
   /** Semi-structured extraction: pull a typed field out of the JSON
     * `props` column and aggregate it — the event-pipeline staple Spark
@@ -10685,7 +10103,6 @@ object Queries {
     "t90_minhash_index_probe" -> t90_minhash_index_probe,
     "t91_rp_ivf_ann" -> t91_rp_ivf_ann,
     "w18_funnel_times_range" -> w18_funnel_times_range,
-    "w19_funnel_times_range_bucketed" -> w19_funnel_times_range_bucketed,
     "t87_minhash_index_asof" -> t87_minhash_index_asof,
     "t88_minhash_index_delete" -> t88_minhash_index_delete,
     "t89_minhash_index_compact" -> t89_minhash_index_compact,
@@ -10815,71 +10232,36 @@ object Queries {
     "j6_not_followed_by" -> j6_not_followed_by,
     "j7_conversion_latency" -> j7_conversion_latency,
     "w6_funnel" -> w6_funnel,
-    "w7_funnel_bucketed" -> w7_funnel_bucketed,
     "w8_funnel_within" -> w8_funnel_within,
-    "w9_funnel_within_bucketed" -> w9_funnel_within_bucketed,
     "w10_funnel_guarded" -> w10_funnel_guarded,
-    "w11_funnel_guarded_bucketed" -> w11_funnel_guarded_bucketed,
     "w12_funnel_times" -> w12_funnel_times,
-    "w13_funnel_times_bucketed" -> w13_funnel_times_bucketed,
     "w14_funnel_within_guarded" -> w14_funnel_within_guarded,
-    "w15_funnel_within_guarded_bucketed" -> w15_funnel_within_guarded_bucketed,
     "w16_funnel_loop" -> w16_funnel_loop,
-    "w17_funnel_loop_bucketed" -> w17_funnel_loop_bucketed,
     "w20_funnel_strict" -> w20_funnel_strict,
-    "w21_funnel_strict_bucketed" -> w21_funnel_strict_bucketed,
     "w22_funnel_optional" -> w22_funnel_optional,
     "w23_funnel_not_next" -> w23_funnel_not_next,
     "w24_funnel_pattern_product" -> w24_funnel_pattern_product,
-    "w25_funnel_pattern_product_bucketed" -> w25_funnel_pattern_product_bucketed,
     "w26_funnel_matches" -> w26_funnel_matches,
     "w73_funnel_matches_absence" -> w73_funnel_matches_absence,
-    "w73b_funnel_matches_absence_bucketed" ->
-      w73b_funnel_matches_absence_bucketed,
-    "w27_funnel_matches_bucketed" -> w27_funnel_matches_bucketed,
     "w33_funnel_skip_to_last" -> w33_funnel_skip_to_last,
     "w34_funnel_skip_to_first" -> w34_funnel_skip_to_first,
     "w35_funnel_skip_to_next" -> w35_funnel_skip_to_next,
-    "w36_funnel_skip_to_last_bucketed" -> w36_funnel_skip_to_last_bucketed,
-    "w37_funnel_skip_to_next_bucketed" -> w37_funnel_skip_to_next_bucketed,
     "w31_funnel_loop_until" -> w31_funnel_loop_until,
     "w38_funnel_loop_consecutive" -> w38_funnel_loop_consecutive,
     "w42_funnel_pattern_within" -> w42_funnel_pattern_within,
-    "w43_funnel_pattern_within_bucketed" -> w43_funnel_pattern_within_bucketed,
-    "w40_funnel_loop_consecutive_bucketed" -> w40_funnel_loop_consecutive_bucketed,
     "w39_funnel_combinations" -> w39_funnel_combinations,
-    "w41_funnel_combinations_bucketed" -> w41_funnel_combinations_bucketed,
-    "w32_funnel_loop_until_bucketed" -> w32_funnel_loop_until_bucketed,
     "w28_funnel_any_count" -> w28_funnel_any_count,
-    "w29_funnel_any_count_bucketed" -> w29_funnel_any_count_bucketed,
-    "w44_funnel_any_count_auto" -> w44_funnel_any_count_auto,
-    "w45_funnel_skip_auto" -> w45_funnel_skip_auto,
-    "w46_funnel_loop_consecutive_auto" -> w46_funnel_loop_consecutive_auto,
-    "w47_funnel_pattern_auto" -> w47_funnel_pattern_auto,
-    "w48_funnel_pattern_within_auto" -> w48_funnel_pattern_within_auto,
     "w49_funnel_loop_reluctant" -> w49_funnel_loop_reluctant,
-    "w49b_funnel_loop_reluctant_bucketed" -> w49b_funnel_loop_reluctant_bucketed,
     "w50_funnel_iterative_first" -> w50_funnel_iterative_first,
     "w51_funnel_iterative_prev" -> w51_funnel_iterative_prev,
-    "w52_funnel_iterative_sorted" -> w52_funnel_iterative_sorted,
     "w53_funnel_where" -> w53_funnel_where,
-    "w54_funnel_where_bucketed" -> w54_funnel_where_bucketed,
-    "w55_funnel_iterative_auto" -> w55_funnel_iterative_auto,
     "w56_funnel_loop_consecutive_reluctant" -> w56_funnel_loop_consecutive_reluctant,
-    "w56b_funnel_loop_consecutive_reluctant_bucketed" -> w56b_funnel_loop_consecutive_reluctant_bucketed,
-    "w58_funnel_loop_consecutive_auto_reluctant" -> w58_funnel_loop_consecutive_auto_reluctant,
     "w59_funnel_group_times" -> w59_funnel_group_times,
-    "w59b_funnel_group_times_bucketed" -> w59b_funnel_group_times_bucketed,
     "w60_funnel_group_times_consecutive" -> w60_funnel_group_times_consecutive,
     "w61_funnel_group_times_within" -> w61_funnel_group_times_within,
     "w62_funnel_group_loop" -> w62_funnel_group_loop,
-    "w62b_funnel_group_loop_bucketed" -> w62b_funnel_group_loop_bucketed,
     "w63_funnel_group_loop_consecutive" -> w63_funnel_group_loop_consecutive,
     "w68_funnel_group_loop_reluctant" -> w68_funnel_group_loop_reluctant,
-    "w68b_funnel_group_loop_reluctant_bucketed" ->
-      w68b_funnel_group_loop_reluctant_bucketed,
-    "w68c_funnel_group_loop_reluctant_auto" ->
-      w68c_funnel_group_loop_reluctant_auto,
     "w69_funnel_group_loop_reluctant_consecutive" ->
       w69_funnel_group_loop_reluctant_consecutive,
     "w64_funnel_group_times_range" -> w64_funnel_group_times_range,
@@ -10893,22 +10275,11 @@ object Queries {
       w75_funnel_group_matches_range,
     "w75b_funnel_group_matches_range_absence" ->
       w75b_funnel_group_matches_range_absence,
-    "w75c_funnel_group_matches_range_bucketed" ->
-      w75c_funnel_group_matches_range_bucketed,
-    "w75d_funnel_group_matches_range_absence_bucketed" ->
-      w75d_funnel_group_matches_range_absence_bucketed,
     "w71_funnel_group_loop_seam_guard" ->
       w71_funnel_group_loop_seam_guard,
-    "w71b_funnel_group_loop_seam_guard_bucketed" ->
-      w71b_funnel_group_loop_seam_guard_bucketed,
     "w72_funnel_group_times_range_guarded" ->
       w72_funnel_group_times_range_guarded,
-    "w72b_funnel_group_times_range_guarded_bucketed" ->
-      w72b_funnel_group_times_range_guarded_bucketed,
-    "w72c_funnel_group_times_range_guarded_auto" ->
-      w72c_funnel_group_times_range_guarded_auto,
     "w57_funnel_loop_until_reluctant" -> w57_funnel_loop_until_reluctant,
-    "w57b_funnel_loop_until_reluctant_bucketed" -> w57b_funnel_loop_until_reluctant_bucketed,
     "w30_funnel_any" -> w30_funnel_any,
     "t14_sq8_ann" -> t14_sq8_ann,
     "j2_json_extract" -> j2_json_extract,

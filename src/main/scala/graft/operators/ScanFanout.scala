@@ -28,18 +28,18 @@ import org.apache.spark.sql.DataFrame
  *     `spark.graft.scan.fanout.maxBytes` (default 256 MB) — inputs whose
  *     full shuffle costs less than a second on any node, and whose
  *     natural row-group parallelism cannot be assumed;
- *   - skip relations under `spark.graft.scan.fanout.minBytes` (default
- *     32 KB) — tiny dimension tables, where an extra exchange is pure
- *     overhead and there is no map work to spread (32 KB also keeps the
- *     sf0.01 oracle corpus ABOVE the floor for documents/embeddings/
- *     lineitem, so the 289-gate differential exercises the fanned-out
+ *   - skip relations under [[ScanFanout.MinBytes]] (32 KB) — tiny
+ *     dimension tables, where an extra exchange is pure overhead and
+ *     there is no map work to spread (32 KB also keeps the sf0.01
+ *     oracle corpus ABOVE the floor for documents/embeddings/
+ *     lineitem, so the oracle differential exercises the fanned-out
  *     plan shape, not just the bare one);
- *   - the partition count is `ceil(bytes / spark.graft.scan.fanout
- *     .targetBytes)` (default 64 KB of compressed parquet per
- *     partition — tokenize/MD5 kernels cost far more per byte than the
- *     shuffle) capped at `sparkContext.defaultParallelism`, so the
- *     fan-out follows the session's core count (the driver re-runs the
- *     bench at lower core counts to measure scaling; a constant would
+ *   - the partition count is `ceil(bytes / [[ScanFanout.TargetBytes]])`
+ *     (64 KB of compressed parquet per partition — tokenize/MD5
+ *     kernels cost far more per byte than the shuffle) capped at
+ *     `sparkContext.defaultParallelism`, so the fan-out follows the
+ *     session's core count (the driver re-runs the bench at lower core
+ *     counts to measure scaling; a constant would
  *     poison that measurement) while iteration-heavy consumers of
  *     smaller tables (Lloyd loops over the embeddings, tokenizer
  *     encode chains) don't pay 32 near-empty tasks per downstream
@@ -58,11 +58,11 @@ import org.apache.spark.sql.DataFrame
  */
 object ScanFanout {
   val MaxBytesConf = "spark.graft.scan.fanout.maxBytes"
-  val MinBytesConf = "spark.graft.scan.fanout.minBytes"
-  val TargetBytesConf = "spark.graft.scan.fanout.targetBytes"
   val DefaultMaxBytes: Long = 256L << 20
-  val DefaultMinBytes: Long = 32L << 10
-  val DefaultTargetBytes: Long = 64L << 10
+  /** Relations smaller than this are never fanned out. */
+  val MinBytes: Long = 32L << 10
+  /** Compressed parquet bytes per fanned-out partition. */
+  val TargetBytes: Long = 64L << 10
 
   /** `df` repartitioned (size/targetBytes partitions, capped at the
     * session's default parallelism) when the size gate says the shuffle
@@ -80,19 +80,15 @@ object ScanFanout {
     // byteStringAsBytes accepts both plain numbers and the
     // "256m"-style suffixed values the adjacent spark.sql.files.*
     // confs use (a bare .toLong threw NumberFormatException at
-    // plan-build time on suffixed input — r21 ADVICE)
-    def confBytes(k: String, dflt: Long): Long =
-      spark.conf.getOption(k)
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(dflt)
-    val maxBytes = confBytes(MaxBytesConf, DefaultMaxBytes)
+    // plan-build time on suffixed input)
+    val maxBytes = spark.conf.getOption(MaxBytesConf)
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(DefaultMaxBytes)
     if (maxBytes <= 0) return df
-    val minBytes = confBytes(MinBytesConf, DefaultMinBytes)
-    val targetBytes = confBytes(TargetBytesConf, DefaultTargetBytes).max(1L)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes < minBytes || bytes > maxBytes) df
+    if (bytes < MinBytes || bytes > maxBytes) df
     else {
-      val parts = ((bytes + targetBytes - 1) / targetBytes).toLong
+      val parts = ((bytes + TargetBytes - 1) / TargetBytes).toLong
         .min(spark.sparkContext.defaultParallelism.toLong).max(2L).toInt
       key match {
         case Some(k) => df.repartition(parts,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.ColumnMeta
-import graft.operators.Enrich
+import graft.operators.{Cep, Enrich}
 
 /**
  * Structured-Streaming surface (SURVEY §2 "Streaming semantics" + north-
@@ -25,9 +25,11 @@ import graft.operators.Enrich
  * On top (capabilities the reference lacks, driver north-star):
  * watermarked tumbling-window aggregation and arbitrary-stateful
  * sessionization via `flatMapGroupsWithState` — the Flink
- * keyed-state/timer analogue.
+ * keyed-state/timer analogue. Every `streamingFunnel*` CEP twin runs
+ * its batch shape's machine ([[graft.operators.Cep]]) through one
+ * event-time buffer, [[cepUpdate]].
  *
- * Serializable because the CEP machine values ([[Cep]]) are closures
+ * Serializable because the CEP twins' output closures are closures
  * over this object's helpers that ship to the executors; a Scala 2.13
  * module serializes as a proxy naming its class, never its fields.
  */
@@ -796,62 +798,32 @@ object StreamingIngest extends Serializable {
   final case class FunnelValueEvent(user_id: Long, usMicros: Long,
       eventId: Long, tp: String, v: Long, ts: java.sql.Timestamp)
 
-  /** A buffered event: (event time µs, event_id, type, value). */
-  private type Ev = (Long, Long, String, Long)
-
-  /** DP-slot sentinel for "no partial match at this stage" — the state
-    * encoder carries plain longs, not options. */
-  private val NoStart = Long.MinValue
-
   /** The driver's per-key state: the machine's own state, the events
     * the watermark has not passed yet, and the event time at which the
-    * machine first became done ([[NoStart]] before that). */
+    * machine first became done ([[Cep.NoStart]] before that). */
   final case class CepBuffer[S](machine: S,
       pending: Seq[(Long, Long, String, Long)], doneUs: Long)
 
-  /** A streaming CEP twin as a value: everything in which the pattern
-    * shapes differ. The buffer, timer and retention work is
-    * [[cepUpdate]]'s alone.
-    *
-    * @param init       the state of a key seen for the first time
-    * @param step       fold one mature event into the state
-    * @param idle       the state holds nothing worth keeping: the
-    *                   entry is dropped while nothing is buffered, and
-    *                   re-creating it from `init` folds identically
-    * @param done       the match is complete: the retention TTL runs
-    *                   and the buffer drops
-    * @param keeps      which immature events stay buffered (default:
-    *                   all until `done`, none after) — the loop shapes
-    *                   keep the events a complete spine can still absorb
-    * @param retainFrom the event time the TTL counts from, given the
-    *                   state and the time it first became done
-    * @param retentionMs the TTL of a done entry; `Long.MaxValue` keeps
-    *                   it for the stream's life
-    * @param wakeUps    event times (µs) at which the key must re-run
-    *                   even without data (the absence holding pen)
-    * @param row        the observable row: emitted on first sight of a
-    *                   retained entry and whenever it changes
-    * @param drain      the per-match rows the folded state owes at the
-    *                   watermark (µs), and the state without them
-    */
-  private final case class Cep[S, O](
-      init: S,
-      step: (S, Ev) => S,
-      idle: S => Boolean,
-      done: S => Boolean = (_: S) => false,
-      keeps: Option[(S, Ev) => Boolean] = None,
-      retainFrom: (S, Long) => Long = (_: S, doneUs: Long) => doneUs,
-      retentionMs: Long = Long.MaxValue,
-      wakeUps: S => Seq[Long] = (_: S) => Nil,
-      row: Option[(Long, S) => O] = None,
-      drain: (Long, S, Long) => (S, Seq[O]) =
-        (_: Long, s: S, _: Long) => (s, Nil))
+  /** What a streaming twin emits: the observable `row` of a key's
+    * state (emitted on first sight of a retained entry and whenever it
+    * changes), or — for the enumeration twins — one `emit` row per
+    * drained match. */
+  private final case class CepOut[S, O](row: Option[(Long, S) => O],
+      emit: (Long, Cep.Match) => O)
+
+  private def rowOut[S, O](row: (Long, S) => O): CepOut[S, O] =
+    CepOut[S, O](Some(row), (_, _) =>
+      throw new IllegalStateException("a row twin drains no matches"))
+
+  private def matchOut[S]: CepOut[S, FunnelMatchEmit] =
+    CepOut[S, FunnelMatchEmit](None, (u, x) => FunnelMatchEmit(u, x._1, x._2))
 
   /**
    * The one event-time buffer behind every streaming CEP twin — Flink
    * CEP's keyed buffer flushed at the watermark, on Spark primitives.
-   * Pattern folds are ORDER-SENSITIVE (an early `view` arriving after a
-   * later `click` changes the verdict), so events are never folded in
+   * The machine is the batch operator's own ([[Cep]]). Pattern folds
+   * are ORDER-SENSITIVE (an early `view` arriving after a later
+   * `click` changes the verdict), so events are never folded in
    * arrival order: the key's `pending` buffer holds the events the
    * watermark has not passed, and each invocation folds only the
    * mature prefix, in (event time, event_id) order. Late events
@@ -874,20 +846,20 @@ object StreamingIngest extends Serializable {
    *   - otherwise the timeout is the earliest of the oldest buffered
    *     event, the machine's `wakeUps` and — for a done entry with
    *     nothing buffered (the only kind the retention timer frees) and
-   *     a finite retention — `retainFrom + retentionMs`, clamped past
-   *     the watermark, which the timer must not sit behind. GroupState
-   *     clears a timeout that an invocation does not re-set, so no
-   *     stale flush timer can fire on a done entry;
-   *   - the output is the drained per-match rows, plus the observable
-   *     row when it changed or on first sight of a retained entry (an
-   *     entry removed at once emits no first-sight row: it would repeat
-   *     on every touching batch, breaking emit-once).
+   *     a finite `retentionMs` — `retainFrom + retentionMs`, clamped
+   *     past the watermark, which the timer must not sit behind.
+   *     GroupState clears a timeout that an invocation does not re-set,
+   *     so no stale flush timer can fire on a done entry;
+   *   - the output is the drained matches, plus the observable row
+   *     when it changed or on first sight of a retained entry (an entry
+   *     removed at once emits no first-sight row: it would repeat on
+   *     every touching batch, breaking emit-once).
    */
-  private def cepUpdate[S, O](m: Cep[S, O])(key: Long,
-      rows: Iterator[FunnelValueEvent],
+  private def cepUpdate[S, O](m: Cep.Machine[S], retentionMs: Long,
+      out: CepOut[S, O])(key: Long, rows: Iterator[FunnelValueEvent],
       state: GroupState[CepBuffer[S]]): Iterator[O] = {
     val first = !state.exists
-    val prev = state.getOption.getOrElse(CepBuffer(m.init, Nil, NoStart))
+    val prev = state.getOption.getOrElse(CepBuffer(m.init, Nil, Cep.NoStart))
     if (state.hasTimedOut && prev.pending.isEmpty && m.done(prev.machine)) {
       state.remove()
       return Iterator.empty
@@ -900,9 +872,9 @@ object StreamingIngest extends Serializable {
     var doneUs = prev.doneUs
     mature.sortBy(e => (e._1, e._2)).foreach { e =>
       s = m.step(s, e)
-      if (doneUs == NoStart && m.done(s)) doneUs = e._1
+      if (doneUs == Cep.NoStart && m.done(s)) doneUs = e._1
     }
-    val (settled, matches) = m.drain(key, s, wmMs * 1000L)
+    val (settled, matches) = m.drain(s, wmMs * 1000L)
     s = settled
     val rest = immature.filter(e => m.keeps.fold(!m.done(s))(_(s, e)))
     val removable = m.idle(s) && rest.isEmpty
@@ -911,17 +883,17 @@ object StreamingIngest extends Serializable {
     } else {
       state.update(CepBuffer(s, rest, doneUs))
       val retention =
-        if (m.done(s) && rest.isEmpty && m.retentionMs != Long.MaxValue)
-          Seq(math.max(m.retainFrom(s, doneUs) / 1000L + m.retentionMs,
+        if (m.done(s) && rest.isEmpty && retentionMs != Long.MaxValue)
+          Seq(math.max(m.retainFrom(s, doneUs) / 1000L + retentionMs,
             wmMs + 1L))
         else Nil
       val timers =
         (rest.map(_._1) ++ m.wakeUps(s)).map(_ / 1000L + 1L) ++ retention
       if (timers.nonEmpty) state.setTimeoutTimestamp(timers.min)
     }
-    val changed = m.row.map(r => r(key, s)).filter(out =>
-      (first && !removable) || out != m.row.get(key, prev.machine))
-    (matches ++ changed).iterator
+    val changed = out.row.map(r => r(key, s)).filter(o =>
+      (first && !removable) || o != out.row.get(key, prev.machine))
+    (matches.map(out.emit(key, _)) ++ changed).iterator
   }
 
   /** The streaming plumbing every CEP twin shares: watermark the
@@ -929,7 +901,8 @@ object StreamingIngest extends Serializable {
     * stage conditions read), key by user and run the machine through
     * [[cepUpdate]]. */
   private def runCep[S <: Product : TypeTag, O <: Product : TypeTag](
-      events: DataFrame, watermark: String, m: Cep[S, O],
+      events: DataFrame, watermark: String, m: Cep.Machine[S],
+      out: CepOut[S, O], retentionMs: Long = Long.MaxValue,
       v: Column = lit(0L)): Dataset[O] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -944,40 +917,15 @@ object StreamingIngest extends Serializable {
       .as[FunnelValueEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(cepUpdate(m))
+        GroupStateTimeout.EventTimeTimeout)(cepUpdate(m, retentionMs, out))
   }
 
-  /** Stage reached by a max-start vector (its set slots are a prefix). */
-  private def slotsSet(b: Seq[Long]): Int = b.count(_ != NoStart)
-
-  /** The window start a max-start vector reports: its deepest set slot. */
-  private def deepestStart(b: Seq[Long]): Option[Long] = {
-    val s = slotsSet(b); if (s > 0) Some(b(s - 1)) else None
-  }
+  /** A slot vector as an output row's optional values. */
+  private def present(xs: Seq[Long]): Seq[Option[Long]] =
+    xs.map(x => if (x == Cep.NoStart) None else Some(x))
 
   final case class FunnelUpdate(user_id: Long, stage_reached: Int,
       witness_us: Seq[Long])
-  /** The greedy stage pointer and its witnesses. */
-  final case class FunnelWhereState(stage: Int, witnessUs: Seq[Long])
-
-  /** Greedy pointer + witnesses: stage j advances on the first mature
-    * event its predicate accepts. Conditions are event-local, so
-    * greedy-earliest stays exact. */
-  private def whereMachine(stages: IndexedSeq[(String, Long) => Boolean],
-      retentionMs: Long): Cep[FunnelWhereState, FunnelUpdate] = {
-    val k = stages.length
-    Cep[FunnelWhereState, FunnelUpdate](
-      init = FunnelWhereState(0, Nil),
-      step = { case (s, (us, _, tp, v)) =>
-        if (s.stage < k && stages(s.stage)(tp, v))
-          FunnelWhereState(s.stage + 1, s.witnessUs :+ us)
-        else s
-      },
-      idle = _.stage == 0,
-      done = _.stage == k,
-      retentionMs = retentionMs,
-      row = Some((u, s) => FunnelUpdate(u, s.stage, s.witnessUs)))
-  }
 
   /**
    * Streaming CEP funnel — the [[graft.operators.Funnel.funnel]] batch
@@ -1002,44 +950,16 @@ object StreamingIngest extends Serializable {
   def streamingFunnel(spark: SparkSession, events: DataFrame,
       stages: Seq[String], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] =
-    runCep(events, watermark, whereMachine(
-      stages.map(t => (tp: String, _: Long) => tp == t).toIndexedSeq,
-      matchRetentionMs))
+    runCep(events, watermark, Cep.typed(stages),
+      rowOut((u: Long, s: Cep.FunnelWhereState) =>
+        FunnelUpdate(u, s.stage, s.witnessUs)),
+      matchRetentionMs)
 
-  /** The max-start DP vector: B[j] = the latest stage-1 time among
-    * in-window chains at stage j ([[NoStart]] when none). */
-  final case class FunnelWinState(b: Seq[Long])
   final case class FunnelWinUpdate(user_id: Long, stage_reached: Int,
       win_start_us: Option[Long])
 
-  private def withinMachine(stages: IndexedSeq[String], windowMicros: Long,
-      retentionMs: Long): Cep[FunnelWinState, FunnelWinUpdate] = {
-    val k = stages.length
-    Cep[FunnelWinState, FunnelWinUpdate](
-      init = FunnelWinState(Seq.fill(k)(NoStart)),
-      step = { case (s, (us, _, tp, _)) =>
-        // pre-event values: an event never extends a chain containing
-        // itself (the batch DP's transform-over-pre-state)
-        val pre = s.b.toArray
-        val b = pre.clone()
-        var j = k
-        while (j >= 2) {
-          if (tp == stages(j - 1) && pre(j - 2) != NoStart &&
-              us <= pre(j - 2) + windowMicros)
-            b(j - 1) = math.max(b(j - 1), pre(j - 2))
-          j -= 1
-        }
-        if (tp == stages(0)) b(0) = math.max(b(0), us)
-        FunnelWinState(b.toSeq)
-      },
-      idle = s => slotsSet(s.b) == 0,
-      done = s => slotsSet(s.b) == k,
-      // the TTL counts from the completing chain's window start
-      retainFrom = (s, _) => s.b(k - 1),
-      retentionMs = retentionMs,
-      row = Some((u, s) =>
-        FunnelWinUpdate(u, slotsSet(s.b), deepestStart(s.b))))
-  }
+  private val winRow = rowOut((u: Long, s: Cep.FunnelWinState) =>
+    FunnelWinUpdate(u, Cep.slotsSet(s.b), Cep.deepestStart(s.b)))
 
   /**
    * Streaming WINDOWED funnel — [[graft.operators.Funnel.funnelWithin]]'s
@@ -1054,37 +974,10 @@ object StreamingIngest extends Serializable {
   def streamingFunnelWithin(spark: SparkSession, events: DataFrame,
       stages: Seq[String], windowMicros: Long, watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] =
-    runCep(events, watermark, withinMachine(stages.toIndexedSeq,
-      windowMicros, matchRetentionMs))
+    runCep(events, watermark, Cep.within(stages.toIndexedSeq, windowMicros),
+      winRow, matchRetentionMs)
 
-  /** The NFA's open-clean and sticky ever-reached bit vectors. */
-  final case class FunnelGuardState(o: Seq[Boolean], e: Seq[Boolean])
   final case class FunnelGuardUpdate(user_id: Long, stage_reached: Int)
-
-  private def guardedMachine(stages: IndexedSeq[String],
-      notBetween: IndexedSeq[Option[String]], retentionMs: Long)
-      : Cep[FunnelGuardState, FunnelGuardUpdate] = {
-    val k = stages.length
-    Cep[FunnelGuardState, FunnelGuardUpdate](
-      init = FunnelGuardState(Seq.fill(k)(false), Seq.fill(k)(false)),
-      step = { case (s, (_, _, tp, _)) =>
-        val pre = s.o.toArray
-        val o = pre.clone()
-        val ev = s.e.toArray
-        var j = 0
-        while (j < k) {
-          if (tp == stages(j) && (j == 0 || pre(j - 1))) {
-            o(j) = true; ev(j) = true
-          } else if (j < k - 1 && notBetween(j).contains(tp)) o(j) = false
-          j += 1
-        }
-        FunnelGuardState(o.toSeq, ev.toSeq)
-      },
-      idle = s => !s.e.contains(true) && !s.o.contains(true),
-      done = _.e.forall(identity),
-      retentionMs = retentionMs,
-      row = Some((u, s) => FunnelGuardUpdate(u, s.e.count(identity))))
-  }
 
   /**
    * Streaming GUARDED funnel — [[graft.operators.Funnel.funnelGuarded]]'s
@@ -1099,80 +992,11 @@ object StreamingIngest extends Serializable {
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelGuardUpdate] = {
     require(notBetween.length == stages.length - 1,
       "need one (optional) blocker per gap")
-    runCep(events, watermark, guardedMachine(stages.toIndexedSeq,
-      notBetween.toIndexedSeq, matchRetentionMs))
-  }
-
-  /** The max-start product NFA's three vectors (see
-    * [[streamingFunnelPatternWithin]]). */
-  final case class FunnelPatternWinState(l: Seq[Long], o: Seq[Long],
-      m: Seq[Long])
-
-  private def patternWithinMachine(
-      stages: IndexedSeq[graft.operators.Funnel.PatternStage],
-      windowMicros: Long, retentionMs: Long)
-      : Cep[FunnelPatternWinState, FunnelWinUpdate] = {
-    val k = stages.length
-    // trailing-optional run after each stage (for the win realizer)
-    val tOpt = (1 to k).map(j => stages.drop(j).takeWhile(_.optional).length)
-    def satUpTo(m: Seq[Long]): Int = {
-      def sat(j: Int): Boolean =
-        if (j == 0) true
-        else if (stages(j - 1).optional) m(j - 1) != NoStart || sat(j - 1)
-        else m(j - 1) != NoStart
-      (1 to k).count(sat)
-    }
-    def winOf(m: Seq[Long]): Option[Long] = {
-      val r = satUpTo(m)
-      val cands = (1 to k).filter(j => r <= j + tOpt(j - 1))
-        .map(j => m(j - 1)).filter(_ != NoStart)
-      if (cands.nonEmpty) Some(cands.max) else None
-    }
-    Cep[FunnelPatternWinState, FunnelWinUpdate](
-      init = FunnelPatternWinState(Seq.fill(k)(NoStart),
-        Seq.fill(k)(NoStart), Seq.fill(k)(NoStart)),
-      step = { case (s, (us, _, tp, _)) =>
-        val preL = s.l.toArray; val preO = s.o.toArray
-        val l = new Array[Long](k); val o = new Array[Long](k)
-        val m = s.m.toArray
-        def effLast(j: Int): Long =
-          if (j == 0) NoStart
-          else if (stages(j - 1).optional)
-            math.max(preL(j - 1), effLast(j - 1))
-          else preL(j - 1)
-        def effAny(j: Int): Long =
-          if (j == 0) NoStart
-          else if (stages(j - 1).optional)
-            math.max(math.max(preL(j - 1), preO(j - 1)), effAny(j - 1))
-          else math.max(preL(j - 1), preO(j - 1))
-        def adv(j: Int): Long =
-          if (tp != stages(j - 1).tp) NoStart
-          else if (j == 1) us
-          else {
-            val base = if (stages(j - 1).strict) effLast(j - 1)
-              else effAny(j - 1)
-            val pred = if (base != NoStart && us - base <= windowMicros)
-              base else NoStart
-            if (stages.take(j - 1).forall(_.optional)) math.max(pred, us)
-            else pred
-          }
-        var j = 1
-        while (j <= k) {
-          val a = adv(j)
-          l(j - 1) = a
-          o(j - 1) =
-            if (stages(j - 1).notNextAfter.contains(tp)) preO(j - 1)
-            else math.max(preO(j - 1), preL(j - 1))
-          m(j - 1) = math.max(m(j - 1), a)
-          j += 1
-        }
-        FunnelPatternWinState(l.toSeq, o.toSeq, m.toSeq)
-      },
-      idle = s => satUpTo(s.m) == 0 &&
-        (s.l ++ s.o ++ s.m).forall(_ == NoStart),
-      done = s => satUpTo(s.m) == k,
-      retentionMs = retentionMs,
-      row = Some((u, s) => FunnelWinUpdate(u, satUpTo(s.m), winOf(s.m))))
+    runCep(events, watermark,
+      Cep.guarded(stages.toIndexedSeq, notBetween.toIndexedSeq),
+      rowOut((u: Long, s: Cep.FunnelGuardState) =>
+        FunnelGuardUpdate(u, s.e.count(identity))),
+      matchRetentionMs)
   }
 
   /**
@@ -1184,12 +1008,8 @@ object StreamingIngest extends Serializable {
    * matched strictly before it; `m[j]` — the STICKY latest start ever
    * to actually match stage j, the observable) behind the
    * [[cepUpdate]] buffer (strict hops, notNext kills and window expiry
-   * are all order-sensitive). Every advance reads the PRE state (an
-   * event never extends the partials it just created — the
-   * guarded-fold rule) and checks the `within` deadline against the
-   * max eligible predecessor (the w8 dominance: the max is also the
-   * easiest to satisfy). Emission is delta-style on (stage_reached,
-   * win_start_us).
+   * are all order-sensitive). Emission is delta-style on
+   * (stage_reached, win_start_us).
    */
   def streamingFunnelPatternWithin(spark: SparkSession,
       events: DataFrame,
@@ -1198,8 +1018,13 @@ object StreamingIngest extends Serializable {
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
     graft.operators.Funnel.patternRequire(stages)
     require(windowMicros > 0, "need windowMicros > 0")
-    runCep(events, watermark, patternWithinMachine(stages.toIndexedSeq,
-      windowMicros, matchRetentionMs))
+    val st = stages.toIndexedSeq
+    runCep(events, watermark, Cep.patternWithin(st, windowMicros),
+      rowOut { (u: Long, s: Cep.FunnelPatternWinState) =>
+        val (r, win) = Cep.patternWindow(st, s.m)
+        FunnelWinUpdate(u, r, win)
+      },
+      matchRetentionMs)
   }
 
   /** Streaming GROUP pattern under `within(T)` —
@@ -1224,41 +1049,6 @@ object StreamingIngest extends Serializable {
         col("win_start_us"))
   }
 
-  /** The alive max-start vector (killable by gap blockers) and the
-    * sticky ever-reached one (the observable). */
-  final case class FunnelWinGuardState(b: Seq[Long], m: Seq[Long])
-
-  private def withinGuardedMachine(stages: IndexedSeq[String],
-      windowMicros: Long, notBetween: IndexedSeq[Option[String]],
-      retentionMs: Long): Cep[FunnelWinGuardState, FunnelWinUpdate] = {
-    val k = stages.length
-    Cep[FunnelWinGuardState, FunnelWinUpdate](
-      init = FunnelWinGuardState(Seq.fill(k)(NoStart), Seq.fill(k)(NoStart)),
-      step = { case (s, (us, _, tp, _)) =>
-        val pre = s.b.toArray
-        val b = pre.clone()
-        val m = s.m.toArray
-        var j = 0
-        while (j < k) {
-          val adv =
-            if (j == 0) { if (tp == stages(0)) us else NoStart }
-            else if (tp == stages(j) && pre(j - 1) != NoStart &&
-              us <= pre(j - 1) + windowMicros) pre(j - 1)
-            else NoStart
-          val kill = j < k - 1 && notBetween(j).contains(tp)
-          b(j) = if (kill) adv else math.max(b(j), adv)
-          m(j) = math.max(m(j), adv)
-          j += 1
-        }
-        FunnelWinGuardState(b.toSeq, m.toSeq)
-      },
-      idle = s => slotsSet(s.m) == 0 && s.b.forall(_ == NoStart),
-      done = s => slotsSet(s.m) == k,
-      retentionMs = retentionMs,
-      row = Some((u, s) =>
-        FunnelWinUpdate(u, slotsSet(s.m), deepestStart(s.m))))
-  }
-
   /**
    * Streaming COMBINED windowed+guarded funnel —
    * [[graft.operators.Funnel.funnelWithinGuarded]]'s twin: the alive
@@ -1273,8 +1063,11 @@ object StreamingIngest extends Serializable {
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
     require(notBetween.length == stages.length - 1,
       "need one (optional) blocker per gap")
-    runCep(events, watermark, withinGuardedMachine(stages.toIndexedSeq,
-      windowMicros, notBetween.toIndexedSeq, matchRetentionMs))
+    runCep(events, watermark, Cep.withinGuarded(stages.toIndexedSeq,
+        windowMicros, notBetween.toIndexedSeq),
+      rowOut((u: Long, s: Cep.FunnelWinGuardState) =>
+        FunnelWinUpdate(u, Cep.slotsSet(s.m), Cep.deepestStart(s.m))),
+      matchRetentionMs)
   }
 
   /** Streaming QUANTIFIED funnel — CEP `times(n)` over a stream. The
@@ -1299,9 +1092,6 @@ object StreamingIngest extends Serializable {
           element_at(col("witness_us"), bounds(j))).as(s"ts${j + 1}_us")): _*)
   }
 
-  /** The expanded-list spine pointer plus the per-stage (count,
-    * last-time) loop slots. */
-  final case class FunnelLoopState(s: Int, c: Seq[Long], l: Seq[Long])
   final case class FunnelLoopUpdate(user_id: Long, stage_reached: Int,
       reps: Seq[Long], last_us: Seq[Long])
 
@@ -1309,52 +1099,18 @@ object StreamingIngest extends Serializable {
     * last-times. */
   private def loopRow(u: Long, stage: Int, c: Seq[Long],
       l: Seq[Long]): FunnelLoopUpdate =
-    FunnelLoopUpdate(u, stage, c, l.filter(_ != NoStart))
+    FunnelLoopUpdate(u, stage, c, l.filter(_ != Cep.NoStart))
 
-  /** The loop fold; `caps` bounds each stage's absorption (times(m, n);
-    * None = ∞). Everything derivable from `stages` is computed once
-    * here, not per user per micro-batch. */
-  private def loopMachine(stages: IndexedSeq[(String, Int)],
-      retentionMs: Long, caps: Option[IndexedSeq[Int]])
-      : Cep[FunnelLoopState, FunnelLoopUpdate] = {
-    val k = stages.length
-    val expanded = stages.flatMap { case (t, n) => Seq.fill(n)(t) }
-    val kx = expanded.length
-    val bounds = stages.map(_._2).scanLeft(0)(_ + _).tail
-    def stageOf(s: Int): Int = bounds.count(_ <= s)
-    def underCap(c: Seq[Long], j: Int): Boolean =
-      caps.forall(cs => c(j) < cs(j))
-    Cep[FunnelLoopState, FunnelLoopUpdate](
-      init = FunnelLoopState(0, Seq.fill(k)(0L), Seq.fill(k)(NoStart)),
-      step = { case (st, (us, _, tp, _)) =>
-        val j = bounds.indexOf(st.s)
-        if (st.s < kx && tp == expanded(st.s)) {
-          val a = bounds.indexWhere(_ >= st.s + 1)
-          FunnelLoopState(st.s + 1, st.c.updated(a, st.c(a) + 1),
-            st.l.updated(a, us))
-        } else if (j >= 0 && tp == stages(j)._1 && underCap(st.c, j))
-          st.copy(c = st.c.updated(j, st.c(j) + 1), l = st.l.updated(j, us))
-        else st
-      },
-      idle = _.s == 0,
-      done = _.s == kx,
-      // a complete spine can only absorb last-stage-type events — the
-      // rest of the buffer is dead weight (and nothing at all once the
-      // last stage's loop is capped out)
-      keeps = Some((st, e) => st.s < kx ||
-        (e._3 == stages(k - 1)._1 && underCap(st.c, k - 1))),
-      retentionMs = retentionMs,
-      row = Some((u, st) => loopRow(u, stageOf(st.s), st.c, st.l)))
-  }
+  private def loopRows(stages: Seq[(String, Int)]) =
+    rowOut((u: Long, st: Cep.FunnelLoopState) =>
+      loopRow(u, Cep.loopStage(stages, st.s), st.c, st.l))
 
   /**
    * Streaming LOOPING-quantifier funnel — [[graft.operators.Funnel
    * .funnelLoop]]'s twin (CEP `oneOrMore`/`timesOrMore` with greedy
-   * repetition), `mode` included. The times(n) trick does not carry
-   * over (the loop counters are NOT a projection of the expanded
-   * witnesses), so this runs the batch fold's state machine directly:
-   * the expanded-list spine pointer plus the per-stage (count,
-   * last-time) loop slots, behind the [[cepUpdate]] buffer.
+   * repetition), `mode` included: the batch operator's loop machine
+   * (the expanded-list spine pointer plus the per-stage (count,
+   * last-time) loop slots) behind the [[cepUpdate]] buffer.
    *
    * The LAST stage's loop never closes (batch absorbs to end of log),
    * so a "completed" funnel keeps absorbing its type's mature events
@@ -1381,62 +1137,8 @@ object StreamingIngest extends Serializable {
       streamingFunnelTimesRange(spark, events,
         stages.map { case (t, m) => (t, m, m) }, watermark,
         matchRetentionMs)
-    else runCep(events, watermark,
-      loopMachine(stages.toIndexedSeq, matchRetentionMs, None))
-  }
-
-  /** The run machine: stage pointer, open-loop bit, per-stage
-    * count/last-time. */
-  final case class FunnelConsecState(j: Int, open: Boolean, c: Seq[Long],
-      l: Seq[Long])
-
-  private def consecutiveMachine(stages: IndexedSeq[(String, Int)],
-      reluctant: Boolean): Cep[FunnelConsecState, FunnelLoopUpdate] = {
-    val types = stages.map(_._1)
-    val m = stages.map(_._2)
-    val k = stages.length
-    Cep[FunnelConsecState, FunnelLoopUpdate](
-      init = FunnelConsecState(1, false, Seq.fill(k)(0L),
-        Seq.fill(k)(NoStart)),
-      step = { case (st, (us, _, tp, _)) =>
-        var j = st.j
-        var open = st.open
-        val c = st.c.toArray
-        val l = st.l.toArray
-        if (j <= k) {
-          if (open) {
-            // reluctant consume mode: the open loop never absorbs — the
-            // batch fold's dead absorb branch (consecStep's `absorb =
-            // st`); the run machine and close/start transitions are
-            // mode-independent
-            if (tp == types(j - 1)) {
-              if (!reluctant) { c(j - 1) += 1; l(j - 1) = us }
-            } else {
-              j += 1
-              open = false
-              if (j <= k && tp == types(j - 1)) {
-                c(j - 1) = 1; l(j - 1) = us; open = m(j - 1) == 1
-              }
-            }
-          } else {
-            if (tp == types(j - 1)) {
-              c(j - 1) += 1; l(j - 1) = us
-              if (c(j - 1) == m(j - 1)) open = true
-            } else { c(j - 1) = 0; l(j - 1) = NoStart }
-          }
-        }
-        FunnelConsecState(j, open, c.toSeq, l.toSeq)
-      },
-      idle = st => st.j == 1 && !st.open && st.c.forall(_ == 0L),
-      // a machine past its last stage is final; a reluctant one with the
-      // LAST stage's block complete is observationally final even while
-      // the loop is formally open (the open loop never absorbs and a
-      // breaker only moves j past k with c/l untouched) — either way
-      // the buffer is dead weight
-      keeps = Some((st, _) =>
-        st.j <= k && !(reluctant && st.j == k && st.open)),
-      row = Some((u, st) =>
-        loopRow(u, st.j - 1 + (if (st.open) 1 else 0), st.c, st.l)))
+    else runCep(events, watermark, Cep.loop(stages.toIndexedSeq, None),
+      loopRows(stages), matchRetentionMs)
   }
 
   /**
@@ -1460,68 +1162,10 @@ object StreamingIngest extends Serializable {
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
     graft.operators.Funnel.loopRequire(stages)
-    runCep(events, watermark, consecutiveMachine(stages.toIndexedSeq,
-      reluctant = mode == graft.operators.Funnel.Reluctant))
-  }
-
-  /** The loop machine plus `x`: the CURRENT stage's repetition is
-    * closed. */
-  final case class FunnelLoopUntilState(s: Int, c: Seq[Long], l: Seq[Long],
-      x: Boolean)
-
-  private def loopUntilMachine(
-      stages: IndexedSeq[(String, Int, Option[String])], retentionMs: Long,
-      reluctant: Boolean): Cep[FunnelLoopUntilState, FunnelLoopUpdate] = {
-    val mst = stages.map { case (t, m, _) => (t, m) }
-    val k = stages.length
-    val expanded = mst.flatMap { case (t, n) => Seq.fill(n)(t) }
-    val kx = expanded.length
-    val bounds = mst.map(_._2).scanLeft(0)(_ + _).tail
-    val subOf = mst.zipWithIndex.flatMap { case ((_, n), j) =>
-      Seq.fill(n)(j + 1) }
-    val loopOf = (0 to kx).map(s => bounds.indexOf(s) + 1)
-    val curOf = (0 to kx).map(s => if (loopOf(s) > 0) loopOf(s) else subOf(s))
-    def stageOf(s: Int): Int = bounds.count(_ <= s)
-    Cep[FunnelLoopUntilState, FunnelLoopUpdate](
-      init = FunnelLoopUntilState(0, Seq.fill(k)(0L), Seq.fill(k)(NoStart),
-        x = false),
-      step = { case (st, (us, _, tp, _)) =>
-        var s = st.s
-        var x = st.x
-        val c = st.c.toArray
-        val l = st.l.toArray
-        val curJ = curOf(s)
-        val advT = s < kx && tp == expanded(s)
-        val jAdv = if (s < kx) subOf(s) else 0
-        val adv = advT && (jAdv != curJ || !x)
-        val jLoop = loopOf(s)
-        // reluctant consume mode: absorption is the one dead branch —
-        // the until close/stall machinery reads only the pointer and
-        // the bit and is mode-independent (the batch fold's contract)
-        val absorb = !reluctant && !adv && jLoop > 0 && !x &&
-          tp == mst(jLoop - 1)._1
-        if (adv) { c(jAdv - 1) += 1; l(jAdv - 1) = us; s += 1 }
-        else if (absorb) { c(jLoop - 1) += 1; l(jLoop - 1) = us }
-        val newCurJ = curOf(s)
-        if (newCurJ != curJ) x = false
-        if (stages(newCurJ - 1)._3.contains(tp)) x = true
-        FunnelLoopUntilState(s, c.toSeq, l.toSeq, x)
-      },
-      // a stage-0 STALL is a tombstone: dropping it would forget that
-      // the pattern can never start
-      idle = st => st.s == 0 && !st.x,
-      done = _.s == kx,
-      keeps = Some { (st, e) =>
-        val complete = st.s == kx
-        val frozen = st.x && (loopOf(st.s) == 0 || complete)
-        // a complete reluctant spine is observationally final: loop
-        // absorption is dead and a last-stage until close only stops
-        // absorption that already never happens
-        !frozen && !(complete && reluctant) && (!complete ||
-          e._3 == mst(k - 1)._1 || stages(k - 1)._3.contains(e._3))
-      },
-      retentionMs = retentionMs,
-      row = Some((u, st) => loopRow(u, stageOf(st.s), st.c, st.l)))
+    runCep(events, watermark, Cep.consecutive(stages.toIndexedSeq,
+        reluctant = mode == graft.operators.Funnel.Reluctant),
+      rowOut((u: Long, st: Cep.FunnelConsecState) =>
+        loopRow(u, st.j - 1 + (if (st.open) 1 else 0), st.c, st.l)))
   }
 
   /**
@@ -1547,8 +1191,12 @@ object StreamingIngest extends Serializable {
       mode: graft.operators.Funnel.ConsumeMode =
         graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
     graft.operators.Funnel.untilRequire(stages)
-    runCep(events, watermark, loopUntilMachine(stages.toIndexedSeq,
-      matchRetentionMs, reluctant = mode == graft.operators.Funnel.Reluctant))
+    val mst = stages.map { case (t, m, _) => (t, m) }
+    runCep(events, watermark, Cep.loopUntil(stages.toIndexedSeq,
+        reluctant = mode == graft.operators.Funnel.Reluctant),
+      rowOut((u: Long, st: Cep.FunnelLoopUntilState) =>
+        loopRow(u, Cep.loopStage(mst, st.s), st.c, st.l)),
+      matchRetentionMs)
   }
 
   /** The streaming BOUNDED quantifier times(m, n) — the loop machine
@@ -1559,9 +1207,10 @@ object StreamingIngest extends Serializable {
       stages: Seq[(String, Int, Int)], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] = {
     graft.operators.Funnel.rangeRequire(stages)
+    val mst = stages.map { case (t, m, _) => (t, m) }
     runCep(events, watermark,
-      loopMachine(stages.map { case (t, m, _) => (t, m) }.toIndexedSeq,
-        matchRetentionMs, Some(stages.map(_._3).toIndexedSeq)))
+      Cep.loop(mst.toIndexedSeq, Some(stages.map(_._3).toIndexedSeq)),
+      loopRows(mst), matchRetentionMs)
   }
 
   // -------------------------------------------------------------------
@@ -1569,62 +1218,8 @@ object StreamingIngest extends Serializable {
   // (funnelMulti's twin)
   // -------------------------------------------------------------------
 
-  /** The l/o NFA (chains ending at the immediately previous event vs
-    * earlier) plus the first-match time per stage; `ts` slots use
-    * [[NoStart]] as the unset sentinel. */
-  final case class FunnelPatternState(l: Seq[Boolean], o: Seq[Boolean],
-      ts: Seq[Long])
   final case class FunnelPatternUpdate(user_id: Long, stage_reached: Int,
       ts_us: Seq[Option[Long]])
-
-  private def patternMachine(
-      stages: IndexedSeq[graft.operators.Funnel.PatternStage],
-      retentionMs: Long): Cep[FunnelPatternState, FunnelPatternUpdate] = {
-    val k = stages.length
-    def reached(ts: Seq[Long]): Int = {
-      def sat(j: Int): Boolean =
-        j == 0 || ts(j - 1) != NoStart ||
-          (stages(j - 1).optional && sat(j - 1))
-      (1 to k).count(sat)
-    }
-    Cep[FunnelPatternState, FunnelPatternUpdate](
-      init = FunnelPatternState(Seq.fill(k)(false), Seq.fill(k)(false),
-        Seq.fill(k)(NoStart)),
-      step = { case (s, (us, _, tp, _)) =>
-        val preL = s.l.toArray
-        val preO = s.o.toArray
-        val l = new Array[Boolean](k)
-        val o = new Array[Boolean](k)
-        val ts = s.ts.toArray
-        def effLast(j: Int): Boolean =
-          if (j == 0) true
-          else if (stages(j - 1).optional) preL(j - 1) || effLast(j - 1)
-          else preL(j - 1)
-        def effAny(j: Int): Boolean =
-          if (j == 0) true
-          else if (stages(j - 1).optional)
-            preL(j - 1) || preO(j - 1) || effAny(j - 1)
-          else preL(j - 1) || preO(j - 1)
-        var j = 1
-        while (j <= k) {
-          val st = stages(j - 1)
-          val adv = tp == st.tp &&
-            (j == 1 || (if (st.strict) effLast(j - 1) else effAny(j - 1)))
-          l(j - 1) = adv
-          o(j - 1) = preO(j - 1) ||
-            (preL(j - 1) && !st.notNextAfter.contains(tp))
-          if (adv && ts(j - 1) == NoStart) ts(j - 1) = us
-          j += 1
-        }
-        FunnelPatternState(l.toSeq, o.toSeq, ts.toSeq)
-      },
-      idle = s => !s.l.contains(true) && !s.o.contains(true) &&
-        s.ts.forall(_ == NoStart),
-      done = _.ts.forall(_ != NoStart),
-      retentionMs = retentionMs,
-      row = Some((u, s) => FunnelPatternUpdate(u, reached(s.ts),
-        s.ts.map(v => if (v == NoStart) None else Some(v)))))
-  }
 
   /**
    * Streaming contiguity funnel —
@@ -1646,8 +1241,11 @@ object StreamingIngest extends Serializable {
       stages: Seq[graft.operators.Funnel.PatternStage], watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelPatternUpdate] = {
     graft.operators.Funnel.patternRequire(stages)
-    runCep(events, watermark,
-      patternMachine(stages.toIndexedSeq, matchRetentionMs))
+    val st = stages.toIndexedSeq
+    runCep(events, watermark, Cep.pattern(st),
+      rowOut((u: Long, s: Cep.FunnelPatternState) => FunnelPatternUpdate(u,
+        Cep.patternReached(st, s.ts), present(s.ts))),
+      matchRetentionMs)
   }
 
   /** Streaming GROUP pattern — [[graft.operators.Funnel
@@ -1674,82 +1272,23 @@ object StreamingIngest extends Serializable {
           .as(s"ts_r${r}_s${i}_us")): _*)
   }
 
-  /** Group-loop dominance state: rep values use [[NoStart]] as the
-    * −∞ sentinel (state encoders carry plain longs; every live value
-    * is ≥ 0). */
-  final case class FunnelGroupLoopState(bo: Long, bl: Long, l: Seq[Long],
-      o: Seq[Long])
   final case class FunnelGroupLoopUpdate(user_id: Long, reps: Long)
-
-  private def groupLoopMachine(
-      group: IndexedSeq[graft.operators.Funnel.PatternStage],
-      consecutiveSeams: Boolean, cap: Option[Long])
-      : Cep[FunnelGroupLoopState, FunnelGroupLoopUpdate] = {
-    val k = group.length
-    def vmax(a: Long, b: Long): Long = if (a >= b) a else b
-    Cep[FunnelGroupLoopState, FunnelGroupLoopUpdate](
-      init = FunnelGroupLoopState(0L, NoStart, Seq.fill(k)(NoStart),
-        Seq.fill(k)(NoStart)),
-      step = { case (s, (_, _, tp, _)) =>
-        val preL = s.l.toArray; val preO = s.o.toArray
-        val l = new Array[Long](k); val o = new Array[Long](k)
-        // the trailing SEAM guard — the batch fold's `seamKill`,
-        // verbatim: at the blocker event a freshly-completed chain dies
-        val preBlAlive =
-          if (group.last.notNextAfter.contains(tp)) NoStart else s.bl
-        def effLastV(j: Int): Long =
-          if (j == 0) NoStart
-          else if (group(j - 1).optional) vmax(preL(j - 1), effLastV(j - 1))
-          else preL(j - 1)
-        def effAnyV(j: Int): Long =
-          if (j == 0) NoStart
-          else if (group(j - 1).optional)
-            vmax(vmax(preL(j - 1), preO(j - 1)), effAnyV(j - 1))
-          else vmax(preL(j - 1), preO(j - 1))
-        def adv(j: Int): Long =
-          if (tp != group(j - 1).tp) NoStart
-          else if (j == 1) {
-            if (!consecutiveSeams) vmax(s.bo, preBlAlive)
-            else vmax(preBlAlive, 0L)
-          } else if (group(j - 1).strict) effLastV(j - 1)
-          else effAnyV(j - 1)
-        var j = 1
-        while (j <= k) {
-          l(j - 1) = adv(j)
-          o(j - 1) =
-            if (group(j - 1).notNextAfter.contains(tp)) preO(j - 1)
-            else vmax(preO(j - 1), preL(j - 1))
-          j += 1
-        }
-        val compBase = l(k - 1)
-        // reluctant consume mode caps the completion step — the batch
-        // fold's policy point (groupLoopStep's `cap`), verbatim
-        val bl = if (compBase == NoStart) NoStart
-          else cap.fold(compBase + 1L)(m => math.min(compBase + 1L, m))
-        FunnelGroupLoopState(vmax(s.bo, preBlAlive), bl, l.toSeq, o.toSeq)
-      },
-      idle = s => s.bo == 0L && s.bl == NoStart &&
-        s.l.forall(_ == NoStart) && s.o.forall(_ == NoStart),
-      row = Some((u, s) =>
-        FunnelGroupLoopUpdate(u, math.max(vmax(s.bo, s.bl), 0L))))
-  }
 
   /**
    * Streaming GROUP oneOrMore — [[graft.operators.Funnel
    * .funnelGroupLoop]]'s twin, `mode` included. The unbounded
    * quantifier has no finite stage-list expansion, so unlike
    * [[streamingFunnelGroupTimes]] this is its own state machine: the
-   * batch dominance fold (max-completed-reps per (stage, l/o) slot,
-   * idle chains in `bl`/`bo`) behind the [[cepUpdate]] buffer, which
+   * dominance fold (max-completed-reps per (stage, l/o) slot, idle
+   * chains in `bl`/`bo`) behind the [[cepUpdate]] buffer, which
    * preserves the immediate-successor adjacency `bl` and the strict
    * in-group hops rely on. There is NO final state — a loop can always
    * extend — so there is no completion tombstone and no retention; the
    * entry keeps 2k+2 longs (the batch machine's unbounded-operator
    * contract, where `reps` likewise never stops growing). Reluctant
    * caps the completion step at `minTimes` (the SAME policy point as
-   * the batch fold), so `reps` saturates at the floor while partial
-   * progress below it stays observable — stream ≡ batch by
-   * construction. Emission: delta-style on `reps`.
+   * the batch operator), so `reps` saturates at the floor while partial
+   * progress below it stays observable. Emission: delta-style on `reps`.
    */
   def streamingFunnelGroupLoop(spark: SparkSession, events: DataFrame,
       group: Seq[graft.operators.Funnel.PatternStage], watermark: String,
@@ -1764,7 +1303,9 @@ object StreamingIngest extends Serializable {
       case graft.operators.Funnel.Reluctant => Some(minTimes.toLong)
     }
     runCep(events, watermark,
-      groupLoopMachine(group.toIndexedSeq, consecutiveSeams, cap))
+      Cep.groupLoop(group.toIndexedSeq, consecutiveSeams, cap),
+      rowOut((u: Long, s: Cep.FunnelGroupLoopState) =>
+        FunnelGroupLoopUpdate(u, Cep.groupLoopReps(s))))
   }
 
   /** Streaming `times(m, n)` on a GROUP — [[graft.operators.Funnel
@@ -1837,47 +1378,19 @@ object StreamingIngest extends Serializable {
       .withColumn("matched", col("reps") >= minTimes)
   }
 
-  /** The min-anchor dominance vector of
-    * [[graft.operators.Funnel.iterAdvance]]: `d` is valid exactly where
-    * `ts` is set. */
-  final case class FunnelIterState(d: Seq[Long], ts: Seq[Long])
   final case class FunnelIterUpdate(user_id: Long, stage_reached: Int,
       ts_us: Seq[Option[Long]])
-
-  private def iterativeMachine(
-      stages: IndexedSeq[graft.operators.Funnel.IterStage],
-      anchorFirst: Boolean, retentionMs: Long)
-      : Cep[FunnelIterState, FunnelIterUpdate] = {
-    val k = stages.length
-    val st = stages.toArray
-    val unreached = graft.operators.Funnel.IterUnreached
-    def reached(ts: Seq[Long]): Int = ts.count(_ != unreached)
-    Cep[FunnelIterState, FunnelIterUpdate](
-      init = FunnelIterState(Seq.fill(k)(0L), Seq.fill(k)(unreached)),
-      step = { case (s, (us, _, tp, v)) =>
-        val d = s.d.toArray
-        val ts = s.ts.toArray
-        graft.operators.Funnel.iterAdvance(st, anchorFirst, d, ts, us, tp, v)
-        FunnelIterState(d.toSeq, ts.toSeq)
-      },
-      idle = _.ts.forall(_ == unreached),
-      done = s => reached(s.ts) == k,
-      retentionMs = retentionMs,
-      row = Some((u, s) => FunnelIterUpdate(u, reached(s.ts),
-        s.ts.map(x => if (x == unreached) None else Some(x)))))
-  }
 
   /**
    * Streaming ITERATIVE-condition funnel —
    * [[graft.operators.Funnel.funnelIterative]]'s twin: the min-anchor
    * dominance vector (`d[j]` = minimal anchor among chains completing
    * stage j, lossless under the `num >= 0` monotonicity contract)
-   * behind the [[cepUpdate]] buffer, folded by the batch sorted route's
-   * own [[graft.operators.Funnel.iterAdvance]]. Emission on any
-   * ts-slot change (stage progress; `d`-only improvements move no
-   * observable). The ts slots fill strictly in stage order, so
-   * completion is `reached == k`. `valCol` must already be integer
-   * fixed-point (the batch operator's contract); a NULL fails LOUDLY
+   * behind the [[cepUpdate]] buffer. Emission on any ts-slot change
+   * (stage progress; `d`-only improvements move no observable). The
+   * ts slots fill strictly in stage order, so completion is
+   * `reached == k`. `valCol` must already be integer fixed-point (the
+   * batch operator's contract); a NULL fails LOUDLY
    * ([[graft.operators.Funnel.iterVal]]) — the typed encoder would
    * otherwise fail opaquely and the batch twins would diverge.
    */
@@ -1886,9 +1399,11 @@ object StreamingIngest extends Serializable {
       anchor: graft.operators.Funnel.IterAnchor, watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelIterUpdate] = {
     graft.operators.Funnel.iterRequire(stages)
-    runCep(events, watermark, iterativeMachine(stages.toIndexedSeq,
-        anchor == graft.operators.Funnel.AnchorFirst, matchRetentionMs),
-      graft.operators.Funnel.iterVal(valCol))
+    runCep(events, watermark, Cep.iterative(stages.toIndexedSeq,
+        anchor == graft.operators.Funnel.AnchorFirst),
+      rowOut((u: Long, s: Cep.FunnelIterState) => FunnelIterUpdate(u,
+        Cep.slotsSet(s.ts), present(s.ts))),
+      matchRetentionMs, graft.operators.Funnel.iterVal(valCol))
   }
 
   /**
@@ -1913,36 +1428,14 @@ object StreamingIngest extends Serializable {
       watermark: String,
       matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] = {
     require(stages.nonEmpty, "need at least one stage")
-    runCep(events, watermark,
-      whereMachine(stages.toIndexedSeq, matchRetentionMs),
+    runCep(events, watermark, Cep.where(stages.toIndexedSeq),
+      rowOut((u: Long, s: Cep.FunnelWhereState) =>
+        FunnelUpdate(u, s.stage, s.witnessUs)),
+      matchRetentionMs,
       graft.operators.Funnel.iterVal(valCol, "streamingFunnelWhere"))
   }
 
-  /** The k-slot path-counting vector. */
-  final case class FunnelAnyState(c: Seq[Long])
   final case class FunnelAnyUpdate(user_id: Long, n_any: Long)
-
-  private def combinationsMachine(stages: IndexedSeq[(String, Boolean)])
-      : Cep[FunnelAnyState, FunnelAnyUpdate] = {
-    val k = stages.length
-    Cep[FunnelAnyState, FunnelAnyUpdate](
-      init = FunnelAnyState(Seq.fill(k)(0L)),
-      step = { case (s, (_, _, tp, _)) =>
-        val pre = s.c.toArray
-        val c = pre.clone()
-        var j = 0
-        while (j < k) {
-          val (t, loop) = stages(j)
-          if (tp == t)
-            c(j) += (if (j == 0) 1L else pre(j - 1)) +
-              (if (loop) pre(j) else 0L)
-          j += 1
-        }
-        FunnelAnyState(c.toSeq)
-      },
-      idle = _.c.forall(_ == 0L),
-      row = Some((u, s) => FunnelAnyUpdate(u, s.c(k - 1))))
-  }
 
   /**
    * Streaming `allowCombinations()` loop-stage multiplicity —
@@ -1959,7 +1452,8 @@ object StreamingIngest extends Serializable {
       stages: Seq[(String, Boolean)],
       watermark: String): Dataset[FunnelAnyUpdate] = {
     require(stages.nonEmpty, "need at least one stage")
-    runCep(events, watermark, combinationsMachine(stages.toIndexedSeq))
+    runCep(events, watermark, Cep.combinations(stages.toIndexedSeq),
+      rowOut((u: Long, s: Cep.FunnelAnyState) => FunnelAnyUpdate(u, s.c.last)))
   }
 
   /** Streaming `followedByAny` combination COUNT —
@@ -1970,56 +1464,8 @@ object StreamingIngest extends Serializable {
     streamingFunnelCombinations(spark, events, stages.map(_ -> false),
       watermark)
 
-  /** The skip-past-last pointer machine: `n` advances, `partial` the
-    * in-progress match's witnesses (length = advances mod k), `held`
-    * the completed matches `(match_idx, witnesses)` not yet emitted. */
-  final case class FunnelMatchesState(n: Long, partial: Seq[Long],
-      held: Seq[(Long, Seq[Long])])
   final case class FunnelMatchEmit(user_id: Long, match_idx: Long,
       ts_us: Seq[Long])
-
-  /** Skip-past-last enumeration; `absence` = (window µs, blocker type)
-    * turns the emit-on-completion into the absence alarm's holding
-    * pen. */
-  private def matchesMachine(stages: IndexedSeq[String], maxMatches: Int,
-      absence: Option[(Long, String)])
-      : Cep[FunnelMatchesState, FunnelMatchEmit] = {
-    val k = stages.length
-    def deadlines(s: FunnelMatchesState): Seq[Long] =
-      absence.fold(Seq.empty[Long])(a => s.held.map(_._2.head + a._1))
-    Cep[FunnelMatchesState, FunnelMatchEmit](
-      init = FunnelMatchesState(0L, Nil, Nil),
-      step = { case (s, (us, _, tp, _)) =>
-        var n = s.n
-        var partial = s.partial
-        var held = s.held
-        if (tp == stages((n % k).toInt)) {
-          n += 1
-          partial = partial :+ us
-          if (partial.length == k) {
-            val matchIdx = n / k
-            if (matchIdx <= maxMatches &&
-                absence.forall(a => partial.last - partial.head <= a._1))
-              held = held :+ ((matchIdx, partial))
-            partial = Nil
-          }
-        }
-        absence.foreach { case (w, absentType) =>
-          if (tp == absentType)
-            held = held.filterNot { case (_, m) =>
-              m.last < us && us <= m.head + w }
-        }
-        FunnelMatchesState(n, partial, held)
-      },
-      idle = s => s.n == 0L && s.held.isEmpty,
-      wakeUps = deadlines,
-      drain = { (u, s, wmUs) =>
-        val (matured, held) = s.held.partition { case (_, w) =>
-          absence.forall(a => w.head + a._1 <= wmUs) }
-        (s.copy(held = held),
-          matured.sortBy(_._1).map { case (i, w) => FunnelMatchEmit(u, i, w) })
-      })
-  }
 
   /**
    * Streaming match ENUMERATION —
@@ -2040,7 +1486,7 @@ object StreamingIngest extends Serializable {
     require(stages.nonEmpty && maxMatches >= 1,
       "need stages and maxMatches >= 1")
     runCep(events, watermark,
-      matchesMachine(stages.toIndexedSeq, maxMatches, None))
+      Cep.matches(stages.toIndexedSeq, maxMatches, None), matchOut)
   }
 
   /**
@@ -2071,8 +1517,8 @@ object StreamingIngest extends Serializable {
       watermark: String): Dataset[FunnelMatchEmit] = {
     require(stages.nonEmpty && maxMatches >= 1 && windowMicros > 0,
       "need stages, maxMatches >= 1 and windowMicros > 0")
-    runCep(events, watermark, matchesMachine(stages.toIndexedSeq,
-      maxMatches, Some((windowMicros, absentType))))
+    runCep(events, watermark, Cep.matches(stages.toIndexedSeq,
+      maxMatches, Some((windowMicros, absentType))), matchOut)
   }
 
   /** Streaming GROUP match enumeration — [[graft.operators.Funnel
@@ -2160,67 +1606,6 @@ object StreamingIngest extends Serializable {
             .as(s"ts_r${r}_s${i}_us")): _*)
   }
 
-  /** Chains are flat `Seq[Long]` of interleaved (us, oid) pairs;
-    * `buckets(j-1)` holds the prefixes that matched stages 1..j.
-    * (mu, mo) is the running after-match-skip threshold; `ready` the
-    * surviving matches `(match_idx, witnesses)` not yet emitted. */
-  final case class FunnelSkipState(n: Long, mu: Long, mo: Long,
-      buckets: Seq[Seq[Seq[Long]]], ready: Seq[(Long, Seq[Long])])
-
-  private def skipMachine(stages: Seq[(String, Int)],
-      skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int)
-      : Cep[FunnelSkipState, FunnelMatchEmit] = {
-    val types = graft.operators.Funnel.expandStages(stages)
-    val k = types.length
-    val (anchor, inclusive) = graft.operators.Funnel.skipAnchor(stages, skip)
-    def survives(c: Seq[Long], mu: Long, mo: Long): Boolean = {
-      val (su, so) = (c(0), c(1))
-      if (inclusive) su > mu || (su == mu && so >= mo)
-      else su > mu || (su == mu && so > mo)
-    }
-    Cep[FunnelSkipState, FunnelMatchEmit](
-      init = FunnelSkipState(0L, Long.MinValue, Long.MinValue,
-        Seq.fill(k - 1)(Nil), Nil),
-      step = { case (s, (us, oid, tp, _)) =>
-        var n = s.n
-        var mu = s.mu
-        var mo = s.mo
-        var ready = s.ready
-        val pre = s.buckets.toArray
-        val buckets = pre.clone()
-        (1 to k - 1).foreach { j =>
-          val stay = if (tp == types(j)) Nil else pre(j - 1)
-          val arrive =
-            if (j == 1) { if (tp == types.head) Seq(Seq(us, oid)) else Nil }
-            else if (tp == types(j - 1)) pre(j - 2).map(_ :+ us :+ oid)
-            else Nil
-          buckets(j - 1) = stay ++ arrive
-        }
-        val completions =
-          if (tp == types(k - 1)) pre(k - 2).map(_ :+ us :+ oid) else Nil
-        completions.foreach { c =>
-          if (survives(c, mu, mo)) {
-            n += 1
-            if (n <= maxMatches)
-              ready = ready :+ ((n, c.indices.collect {
-                case i if i % 2 == 0 => c(i) }))
-            anchor.foreach { a =>
-              val (au, ao) = (c(2 * (a - 1)), c(2 * (a - 1) + 1))
-              if (au > mu || (au == mu && ao > mo)) { mu = au; mo = ao }
-            }
-          }
-        }
-        FunnelSkipState(n, mu, mo, buckets.toSeq, ready)
-      },
-      idle = s => s.n == 0L && s.buckets.forall(_.isEmpty),
-      // semantic GC: a branch whose start is behind the threshold can
-      // never survive the pruning scan — drop it (output-invariant)
-      drain = (u, s, _) => (
-        s.copy(buckets = s.buckets.map(_.filter(survives(_, s.mu, s.mo))),
-          ready = Nil),
-        s.ready.map { case (i, w) => FunnelMatchEmit(u, i, w) }))
-  }
-
   /**
    * Streaming after-match-skip enumeration —
    * [[graft.operators.Funnel.funnelSkip]]'s twin: per-user state is
@@ -2244,7 +1629,7 @@ object StreamingIngest extends Serializable {
       skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int,
       watermark: String): Dataset[FunnelMatchEmit] = {
     graft.operators.Funnel.skipRequire(stages, skip, maxMatches)
-    runCep(events, watermark, skipMachine(stages, skip, maxMatches))
+    runCep(events, watermark, Cep.skip(stages, skip, maxMatches), matchOut)
   }
 
   // -------------------------------------------------------------------

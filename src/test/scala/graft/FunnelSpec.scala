@@ -11,15 +11,22 @@ class FunnelSpec extends SparkSpec {
   private def ts(s: Int) = Timestamp.valueOf(f"2026-01-01 00:00:$s%02d")
   private val us0 = ts(0).getTime * 1000L
   private def tsUs(s: Int): Long = us0 + s * 1000000L
-  private def routeOf(bucket: Option[Long]): Funnel.Route =
-    bucket.fold[Funnel.Route](Funnel.Single)(Funnel.Bucketed(_))
+  /** The same log split into input partitions by event-time range
+    * (`split`, the default) or left as it is: a shape's rows must not
+    * depend on how its input arrives — the "bucketed == single" clauses
+    * of the properties below, which once compared a time-bucketed plan
+    * with the per-user one. */
+  private def splitByTime(df: org.apache.spark.sql.DataFrame,
+      split: Boolean = true): org.apache.spark.sql.DataFrame =
+    if (split)
+      df.repartitionByRange(16, org.apache.spark.sql.functions.col("ts"))
+    else df
 
   /**
    * True iff the plan behind `df` contains an Aggregate whose GROUPING
    * expressions include an attribute named exactly `bkt` — the
-   * structural signature of the bucketed CEP twins (they all
-   * `groupBy(user_id, bkt)` in their segment stage), used to pin which
-   * side an auto-router picked.
+   * structural signature of a time-bucketed segment split
+   * (`groupBy(user_id, bkt)`), which no CEP shape may plan.
    *
    * Structural on purpose: a `toString.contains("bkt#")` sniff could be
    * flipped by any attribute whose name merely ends in "bkt" or by a
@@ -126,30 +133,6 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_._1 == 3))
   }
 
-  test("bucketed monoid funnel == single fold on random logs (1-second segments)") {
-    val rnd = new scala.util.Random(999L)
-    val types = Array("view", "click", "purchase", "error")
-    val stages = Seq("view", "click", "purchase")
-    // 1-second buckets against second-granularity timestamps force MANY
-    // multi-segment users, including segments entered mid-funnel
-    val events = (0 until 400).map { i =>
-      (rnd.nextInt(10).toLong, i.toLong, ts(rnd.nextInt(45)),
-        types(rnd.nextInt(types.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val single = Funnel.funnel(df, "user_id", "event_type", "ts", "event_id",
-      stages).orderBy("user_id").collect()
-    val bucketed = Funnel.funnel(df, "user_id", "event_type", "ts",
-      "event_id", stages, route = Funnel.Bucketed(1L))
-      .orderBy("user_id").collect()
-    assert(bucketed === single)
-    // and the degenerate one-bucket case is the single fold trivially
-    val coarse = Funnel.funnel(df, "user_id", "event_type", "ts",
-      "event_id", stages, route = Funnel.Bucketed(86400L))
-      .orderBy("user_id").collect()
-    assert(coarse === single)
-  }
-
   test("funnelWithin: the expired-window restart trap, boundary inclusivity, repeated types") {
     val W = 15000000L // 15 s in micros
     val s = 1000000L
@@ -237,30 +220,6 @@ class FunnelSpec extends SparkSpec {
     assert(got.exists { case (u, v) => wide(u) != v })
   }
 
-  test("bucketed windowed funnel == single windowed fold on random logs (1-second segments)") {
-    val rnd = new scala.util.Random(777777L)
-    val types = Array("view", "click", "purchase", "error")
-    val stages = Seq("view", "click", "purchase")
-    val W = 8000000L
-    val events = (0 until 400).map { i =>
-      (rnd.nextInt(10).toLong, i.toLong, ts(rnd.nextInt(45)),
-        types(rnd.nextInt(types.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val single = Funnel.funnelWithin(df, "user_id", "event_type", "ts",
-      "event_id", stages, W).orderBy("user_id").collect()
-    // 1-second buckets: chains cross MANY segment boundaries, windows
-    // expire mid-segment-chain, carried starts extend across segments
-    val bucketed = Funnel.funnelWithin(df, "user_id", "event_type",
-      "ts", "event_id", stages, W, route = Funnel.Bucketed(1L))
-      .orderBy("user_id").collect()
-    assert(bucketed === single)
-    val coarse = Funnel.funnelWithin(df, "user_id", "event_type",
-      "ts", "event_id", stages, W, route = Funnel.Bucketed(86400L))
-      .orderBy("user_id").collect()
-    assert(coarse === single)
-  }
-
   test("funnelGuarded: poisoned-start restarts, blocker-as-endpoint, per-gap guards, ties") {
     val nb = Seq(Some("error"), Some("error"))
     val stages = Seq("view", "click", "purchase")
@@ -336,15 +295,10 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_ == 3))
     val single = Funnel.funnelGuarded(df, "user_id", "event_type", "ts",
       "event_id", stages, nb).orderBy("user_id").collect()
-    val bucketed = Funnel.funnelGuarded(df, "user_id",
-      "event_type", "ts", "event_id", stages, nb, route = Funnel.Bucketed(1L))
+    val byTime = Funnel.funnelGuarded(splitByTime(df), "user_id",
+      "event_type", "ts", "event_id", stages, nb)
       .orderBy("user_id").collect()
-    assert(bucketed === single)
-    val coarse = Funnel.funnelGuarded(df, "user_id",
-      "event_type", "ts", "event_id", stages, nb,
-      route = Funnel.Bucketed(86400L))
-      .orderBy("user_id").collect()
-    assert(coarse === single)
+    assert(byTime === single)
   }
 
   test("funnelTimes: quantified stages via expansion — counts, boundary witnesses, bucketed twin") {
@@ -375,13 +329,13 @@ class FunnelSpec extends SparkSpec {
       (1L, 3, Some(5 * s), Some(15 * s), Some(20 * s)),
       (2L, 0, None, None, None),
       (3L, 1, Some(2 * s), None, None)))
-    // bucketed twin (1-second segments over multi-second chains)
+    // the log split by event time gives the same rows
     val single = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
       "event_id", stages).orderBy("user_id").collect()
-    val bucketed = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
-      "event_id", stages, route = Funnel.Bucketed(1L))
+    val byTime = Funnel.funnelTimes(splitByTime(ev), "user_id", "event_type", "ts",
+      "event_id", stages)
       .orderBy("user_id").collect()
-    assert(bucketed === single)
+    assert(byTime === single)
   }
 
   /** Independent reference for [[Funnel.funnelLoop]]'s documented
@@ -463,14 +417,10 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_._1 == 3)) // generator reaches completion
     assert(expected.values.exists(v => v._2.head > 1)) // loops really absorb
     val singleRows = single.orderBy("user_id").collect()
-    val bucketed = Funnel.funnelLoop(df, "user_id", "event_type",
-      "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+    val byTime = Funnel.funnelLoop(splitByTime(df), "user_id", "event_type",
+      "ts", "event_id", stages)
       .orderBy("user_id").collect()
-    assert(bucketed === singleRows)
-    val coarse = Funnel.funnelLoop(df, "user_id", "event_type",
-      "ts", "event_id", stages, route = Funnel.Bucketed(86400L))
-      .orderBy("user_id").collect()
-    assert(coarse === singleRows)
+    assert(byTime === singleRows)
   }
 
   private def rangeRef(es: Seq[(Long, Long, Timestamp, String)],
@@ -545,15 +495,11 @@ class FunnelSpec extends SparkSpec {
     // caps really truncate: some user hits a cap exactly
     assert(expected.values.exists(v => v._2(0) == 2L || v._2(1) == 3L))
     val singleRows = single.orderBy("user_id").collect()
-    // 1-second segments force list truncation ACROSS merge boundaries
-    val bucketed = Funnel.funnelTimesRange(df, "user_id",
-      "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+    // the log split by event time gives the same rows
+    val byTime = Funnel.funnelTimesRange(splitByTime(df), "user_id",
+      "event_type", "ts", "event_id", stages)
       .orderBy("user_id").collect()
-    assert(bucketed === singleRows)
-    val coarse = Funnel.funnelTimesRange(df, "user_id",
-      "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(86400L))
-      .orderBy("user_id").collect()
-    assert(coarse === singleRows)
+    assert(byTime === singleRows)
   }
 
   test("funnelWithinGuarded: both constraints bite; property vs a brute-force DP") {
@@ -618,36 +564,6 @@ class FunnelSpec extends SparkSpec {
         ((x.getInt(1), Option(x.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(got === expected)
     assert(expected.values.exists(_._1 == 3))
-  }
-
-  test("bucketed combined windowed+guarded funnel == single fold on random logs (1-second segments)") {
-    val stages = Seq("view", "click", "purchase")
-    val nb = Seq(Some("error"), Some("error"))
-    val W = 8000000L
-    // two generators: blocker-heavy (kills dominate) and blocker-light
-    // (windows dominate) — chains, kills, expiries and survivals all
-    // cross segment boundaries at 1-second buckets
-    for ((seed, types) <- Seq(
-        (1111L, Array("view", "click", "purchase", "error")),
-        (2222L, Array("view", "click", "purchase", "error",
-          "view", "click", "purchase")))) {
-      val rnd = new scala.util.Random(seed)
-      val events = (0 until 400).map { i =>
-        (rnd.nextInt(10).toLong, i.toLong, ts(rnd.nextInt(45)),
-          types(rnd.nextInt(types.length)))
-      }
-      val df = events.toDF("user_id", "event_id", "ts", "event_type")
-      val single = Funnel.funnelWithinGuarded(df, "user_id", "event_type",
-        "ts", "event_id", stages, W, nb).orderBy("user_id").collect()
-      val bucketed = Funnel.funnelWithinGuarded(df, "user_id",
-        "event_type", "ts", "event_id", stages, W, nb,
-        route = Funnel.Bucketed(1L)).orderBy("user_id").collect()
-      assert(bucketed === single, s"seed $seed")
-      val coarse = Funnel.funnelWithinGuarded(df, "user_id",
-        "event_type", "ts", "event_id", stages, W, nb,
-        route = Funnel.Bucketed(86400L)).orderBy("user_id").collect()
-      assert(coarse === single, s"seed $seed coarse")
-    }
   }
 
   test("plan gate: the funnel is ONE user-keyed shuffle, no window, no join") {
@@ -832,13 +748,13 @@ class FunnelSpec extends SparkSpec {
       val got = runPattern(df, stages).map(x =>
         x._1 -> ((x._2, x._3.map(_.map(_ + us0))))).toMap
       assert(got === expected, s"single fold, config $stages")
-      val gotB = Funnel.funnelPattern(df, "user_id", "event_type",
-          "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+      val gotB = Funnel.funnelPattern(splitByTime(df), "user_id", "event_type",
+          "ts", "event_id", stages)
         .orderBy("user_id").collect()
         .map(x => (x.getLong(0), x.getInt(1),
           (2 until 2 + stages.length).map(i =>
             Option(x.get(i)).map(_.asInstanceOf[Long] - us0))))
-      assert(gotB === runPattern(df, stages), s"bucketed twin, config $stages")
+      assert(gotB === runPattern(df, stages), s"split, config $stages")
       // the generator must produce non-degenerate variety (reach level
       // or witness pattern — the all-optional-head config saturates
       // stage_reached but varies in ts nullability)
@@ -851,9 +767,9 @@ class FunnelSpec extends SparkSpec {
   // -------------------------------------------------------------------
 
   private def runMulti(ev: org.apache.spark.sql.DataFrame,
-      stages: Seq[String], maxMatches: Int, bucket: Option[Long] = None) =
-    Funnel.funnelMulti(ev, "user_id", "event_type", "ts", "event_id",
-        stages, maxMatches, routeOf(bucket))
+      stages: Seq[String], maxMatches: Int, split: Boolean = false) =
+    Funnel.funnelMulti(splitByTime(ev, split), "user_id", "event_type", "ts", "event_id",
+        stages, maxMatches)
       .orderBy("user_id", "match_idx").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         (3 until 3 + stages.length).map(i =>
@@ -906,7 +822,7 @@ class FunnelSpec extends SparkSpec {
     val got = runMulti(df, stages, maxMatches = 4)
     assert(got.toSeq === expected)
     assert(expected.exists(_._3 > 4L), "generator must exercise the cap")
-    val gotB = runMulti(df, stages, maxMatches = 4, bucket = Some(1L))
+    val gotB = runMulti(df, stages, maxMatches = 4, split = true)
     assert(gotB.toSeq === got.toSeq)
   }
 
@@ -1022,28 +938,6 @@ class FunnelSpec extends SparkSpec {
     }
   }
 
-  test("property: funnelSkipBucketed == funnelSkip for every strategy (1-second segments)") {
-    val rnd = new scala.util.Random(4411L)
-    val typesPool = Array("view", "click", "purchase", "error")
-    val events = (0 until 900).map { i =>
-      (rnd.nextInt(8).toLong, i.toLong, ts(rnd.nextInt(50)),
-        typesPool(rnd.nextInt(typesPool.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val quant = Seq("view" -> 1, "click" -> 2, "purchase" -> 1)
-    for (skip <- Seq[Funnel.SkipStrategy](Funnel.SkipToNext,
-        Funnel.SkipToFirst(2), Funnel.SkipToLast(2), Funnel.SkipPastLast)) {
-      val single = runSkip(df, quant, skip, 4).toSeq
-      val bucketed = Funnel.funnelSkip(df, "user_id", "event_type",
-          "ts", "event_id", quant, skip, 4, route = Funnel.Bucketed(1L))
-        .orderBy("user_id", "match_idx").collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-          (3 until 7).map(i => x.get(i).asInstanceOf[Long] - us0))).toSeq
-      assert(bucketed === single, s"strategy $skip")
-      assert(single.nonEmpty)
-    }
-  }
-
   /** In-memory reference for [[Funnel.funnelLoopConsecutive]] —
     * independent run/island formulation (NOT a machine transcription):
     * per stage, the earliest maximal same-type run of length >= minReps
@@ -1141,16 +1035,15 @@ class FunnelSpec extends SparkSpec {
     }
     assert(got.values.exists(_._1 == 2), "generator must complete some")
     assert(got.values.exists(_._1 == 0), "generator must fail some")
-    // the segment split is bit-identical at 1-second buckets (runs
-    // straddle boundaries: the entry-state table carries partial counts)
-    val bucketed = Funnel.funnelLoopConsecutive(df, "user_id",
-        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+    // the log split by event time gives the same rows
+    val byTime = Funnel.funnelLoopConsecutive(splitByTime(df), "user_id",
+        "event_type", "ts", "event_id", stages)
       .orderBy("user_id").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1),
         Seq((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long])),
           (r.getLong(4), Option(r.get(5)).map(_.asInstanceOf[Long]))))))
       .toMap
-    assert(bucketed === got)
+    assert(byTime === got)
   }
 
   test("consecutive consume modes: reluctant stops at the mandatory block, greedy absorbs the run; spine identical; bucketed == single") {
@@ -1165,9 +1058,9 @@ class FunnelSpec extends SparkSpec {
       (1L, 5L, ts(5), "click"))
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1))
-    def one(mode: Funnel.ConsumeMode, b: Option[Long] = None) = {
-      val r = Funnel.funnelLoopConsecutive(ev, "user_id",
-        "event_type", "ts", "event_id", stages, mode, routeOf(b)).collect()
+    def one(mode: Funnel.ConsumeMode, split: Boolean = false) = {
+      val r = Funnel.funnelLoopConsecutive(splitByTime(ev, split), "user_id",
+        "event_type", "ts", "event_id", stages, mode).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 2).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1177,9 +1070,9 @@ class FunnelSpec extends SparkSpec {
     assert(gR === 2 && rR === 2) // spine is mode-free
     assert(gL === Seq((3L, tsUs(3)), (2L, tsUs(5))))
     assert(rL === Seq((2L, tsUs(2)), (1L, tsUs(4))))
-    // bucketed twins bit-equal at 1-second buckets (runs straddle)
-    assert(one(Funnel.Greedy, Some(1L)) === ((gR, gL)))
-    assert(one(Funnel.Reluctant, Some(1L)) === ((rR, rL)))
+    // the log split by event time gives the same rows
+    assert(one(Funnel.Greedy, split = true) === ((gR, gL)))
+    assert(one(Funnel.Reluctant, split = true) === ((rR, rL)))
     // a mid-run break resets identically under both modes
     val broken = Seq(
       (2L, 10L, ts(1), "view"), (2L, 11L, ts(2), "error"),
@@ -1209,9 +1102,9 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 1, Some("signup")), ("click", 2, None),
       ("purchase", 1, Some("error")))
-    def run(mode: Funnel.ConsumeMode, b: Option[Long] = None) =
-      Funnel.funnelLoopUntil(ev, "user_id", "event_type", "ts",
-        "event_id", stages, mode, routeOf(b)).orderBy("user_id").collect()
+    def run(mode: Funnel.ConsumeMode, split: Boolean = false) =
+      Funnel.funnelLoopUntil(splitByTime(ev, split), "user_id", "event_type", "ts",
+        "event_id", stages, mode).orderBy("user_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), (0 until 3).map(j =>
           (r.getLong(2 + 2 * j),
             Option(r.get(3 + 2 * j)).map(_.asInstanceOf[Long]))))).toSeq
@@ -1223,8 +1116,8 @@ class FunnelSpec extends SparkSpec {
     assert(r(0) === ((1L, 3, Seq((1L, Some(tsUs(1))), (2L, Some(tsUs(5))),
       (1L, Some(tsUs(7)))))))
     assert(g(1)._2 === 0 && r(1)._2 === 0) // the stall is mode-free
-    assert(run(Funnel.Greedy, Some(1L)) === g)
-    assert(run(Funnel.Reluctant, Some(1L)) === r)
+    assert(run(Funnel.Greedy, split = true) === g)
+    assert(run(Funnel.Reluctant, split = true) === r)
   }
 
   test("funnelWhere: value-gated and subtype-style predicates; low-value events are skipped, not consumed; bucketed == single") {
@@ -1253,7 +1146,7 @@ class FunnelSpec extends SparkSpec {
       (1L, 2, Some(tsUs(2)), Some(tsUs(3))), // v=3 view skipped, v=9 picked
       (2L, 2, Some(tsUs(1)), Some(tsUs(2))), // subtype view.promo matches
       (3L, 1, Some(tsUs(1)), None)))
-    // bucketed twin bit-equal on a random corpus at 1-second buckets
+    // a random corpus, and the same corpus split by event time
     val rnd = new scala.util.Random(5316L)
     val types = Array("view", "view.promo", "click", "purchase")
     val big = (0 until 500).map { i =>
@@ -1263,10 +1156,10 @@ class FunnelSpec extends SparkSpec {
     val single = Funnel.funnelWhere(big, "user_id", "ts", "event_id",
         Seq("event_type", "v"), stages)
       .orderBy("user_id").collect().map(_.toString).toSeq
-    val bucketed = Funnel.funnelWhere(big, "user_id", "ts",
-        "event_id", Seq("event_type", "v"), stages, route = Funnel.Bucketed(1L))
+    val byTime = Funnel.funnelWhere(splitByTime(big), "user_id", "ts",
+        "event_id", Seq("event_type", "v"), stages)
       .orderBy("user_id").collect().map(_.toString).toSeq
-    assert(bucketed === single)
+    assert(byTime === single)
   }
 
   test("funnelIterative: the greedy-earliest anchor trap; AnchorPrev increasing chains; first-stage condition rejected") {
@@ -1325,9 +1218,8 @@ class FunnelSpec extends SparkSpec {
     val e1 = intercept[Throwable](Funnel.funnelIterative(withNull,
       "user_id", "event_type", "ts", "event_id", "v", stages).collect())
     assert(chainHas(e1, "NULL in value column"))
-    val e2 = intercept[Throwable](Funnel.funnelIterative(withNull,
-      "user_id", "event_type", "ts", "event_id", "v", stages,
-      route = Funnel.Bucketed()).collect())
+    val e2 = intercept[Throwable](Funnel.funnelIterative(splitByTime(withNull),
+      "user_id", "event_type", "ts", "event_id", "v", stages).collect())
     assert(chainHas(e2, "NULL in value column"))
     // string order column: same-us ties must break in the STRING order
     // on both plans ("10" < "9" lexicographically)
@@ -1336,17 +1228,16 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type", "v")
     val fold = Funnel.funnelIterative(tied, "user_id", "event_type",
       "ts", "event_id", "v", stages).collect().map(_.toString).toSeq
-    val sorted = Funnel.funnelIterative(tied, "user_id",
-      "event_type", "ts", "event_id", "v", stages,
-      route = Funnel.Bucketed()).collect().map(_.toString).toSeq
+    val sorted = Funnel.funnelIterative(splitByTime(tied), "user_id",
+      "event_type", "ts", "event_id", "v", stages).collect().map(_.toString).toSeq
     assert(sorted === fold)
     // and the string order genuinely matters: click "10" precedes view
     // "9", so the funnel must NOT complete
     assert(fold.length === 1 && fold(0).contains(",1,"))
   }
 
-  test("funnelIterative: the sorted skew route builds with no Spark job over a frame whose scan throws") {
-    import org.apache.spark.sql.Row
+  test("lazy build: every public funnel* entry point builds with no Spark job over a frame whose scan throws") {
+    import org.apache.spark.sql.{DataFrame, Row}
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_id", LongType), StructField("ts", StringType),
@@ -1355,57 +1246,94 @@ class FunnelSpec extends SparkSpec {
       spark.sparkContext.parallelize(Seq(1), 1)
         .mapPartitions[Row](_ => throw new RuntimeException("scan ran")),
       schema)
-    val stages = Seq(Funnel.IterStage("view"),
-      Funnel.IterStage("click", Some(Funnel.RelGt(1, 1))))
-    // building the plan must run nothing: no scan, no user-keyed shuffle
-    val sorted = Funnel.funnelIterative(failing, "user_id", "event_type",
-      "ts", "event_id", "v", stages, route = Funnel.Bucketed())
-    assert(sorted.columns.toSeq ===
-      Seq("user_id", "stage_reached", "ts1_us", "ts2_us"))
-    // the frame really does throw once an action runs it
-    val e = intercept[Throwable](sorted.collect())
-    var cur = e; var seen = List.empty[Throwable]; var found = false
-    while (cur != null && !seen.exists(_ eq cur)) {
-      found ||= Option(cur.getMessage).exists(_.contains("scan ran"))
-      seen ::= cur; cur = cur.getCause
-    }
-    assert(found, e.toString)
-  }
-
-  test("funnelIterative: the sorted skew route == the array fold on random corpora, both anchors, multi-partition") {
-    val rnd = new scala.util.Random(5016L)
-    val typesPool = Array("view", "click", "purchase")
-    val events = (0 until 400).map { i =>
-      (rnd.nextInt(40).toLong, i.toLong, ts(rnd.nextInt(60)),
-        typesPool(rnd.nextInt(typesPool.length)), rnd.nextInt(2000).toLong)
-    }.toDF("user_id", "event_id", "ts", "event_type", "v")
-    val stages = Seq(Funnel.IterStage("view"),
-      Funnel.IterStage("click", Some(Funnel.RelGt(3, 1))),
-      Funnel.IterStage("purchase", Some(Funnel.RelGt(2, 1))))
-    for (anchor <- Seq(Funnel.AnchorFirst, Funnel.AnchorPrev)) {
-      val fold = Funnel.funnelIterative(events, "user_id", "event_type",
-          "ts", "event_id", "v", stages, anchor)
-        .orderBy("user_id").collect().map(_.toString).toSeq
-      // AQE coalescing off: the user-keyed exchange keeps all its
-      // partitions, so users really are split across sorted passes
-      val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-      spark.conf.set(coalesce, "false")
-      val sortedDf = Funnel.funnelIterative(events, "user_id",
-        "event_type", "ts", "event_id", "v", stages, anchor,
-        route = Funnel.Bucketed())
-      val (sorted, parts) = try (
-          sortedDf.orderBy("user_id").collect().map(_.toString).toSeq,
-          sortedDf.rdd.getNumPartitions)
-        finally spark.conf.unset(coalesce)
-      assert(parts > 1, s"sorted route ran in $parts partition(s)")
-      assert(sorted === fold, s"anchor $anchor")
-      // some user must actually exercise each depth for the corpus to
-      // mean anything
-      val reached = Funnel.funnelIterative(events, "user_id",
-        "event_type", "ts", "event_id", "v", stages, anchor)
-        .collect().map(_.getInt(1)).toSet
-      assert(reached.contains(3) && reached.size >= 2,
-        s"corpus must mix depths, got $reached")
+    val (u, tp, t, o) = ("user_id", "event_type", "ts", "event_id")
+    val typed = Seq("view", "click", "purchase")
+    val pattern = Seq(Funnel.PatternStage("view"),
+      Funnel.PatternStage("click", strict = true))
+    val guarded = Seq(Funnel.PatternStage("view"),
+      Funnel.PatternStage("click", notNextAfter = Some("error")))
+    val loop = Seq("view" -> 2, "click" -> 1)
+    val W = 60000000L
+    // one row per public entry point: every shape's plan must be built
+    // without running the scan, the user-keyed exchange or any probe
+    val shapes: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "funnel" -> (df => Funnel.funnel(df, u, tp, t, o, typed)),
+      "funnelTimes" -> (df => Funnel.funnelTimes(df, u, tp, t, o, loop)),
+      "funnelLoop" -> (df => Funnel.funnelLoop(df, u, tp, t, o, loop)),
+      "funnelLoop reluctant" -> (df => Funnel.funnelLoop(df, u, tp, t, o,
+        loop, Funnel.Reluctant)),
+      "funnelTimesRange" -> (df => Funnel.funnelTimesRange(df, u, tp, t, o,
+        Seq(("view", 1, 2), ("click", 1, 1)))),
+      "funnelLoopConsecutive" -> (df => Funnel.funnelLoopConsecutive(df, u,
+        tp, t, o, loop)),
+      "funnelLoopUntil" -> (df => Funnel.funnelLoopUntil(df, u, tp, t, o,
+        Seq(("view", 1, Some("error")), ("click", 1, None)))),
+      "funnelWithin" -> (df => Funnel.funnelWithin(df, u, tp, t, o, typed,
+        W)),
+      "funnelGuarded" -> (df => Funnel.funnelGuarded(df, u, tp, t, o, typed,
+        Seq(Some("error"), None))),
+      "funnelWithinGuarded" -> (df => Funnel.funnelWithinGuarded(df, u, tp,
+        t, o, typed, W, Seq(Some("error"), None))),
+      "funnelPattern" -> (df => Funnel.funnelPattern(df, u, tp, t, o,
+        pattern)),
+      "funnelPatternWithin" -> (df => Funnel.funnelPatternWithin(df, u, tp,
+        t, o, pattern, W)),
+      "funnelGroupTimes" -> (df => Funnel.funnelGroupTimes(df, u, tp, t, o,
+        pattern, 2)),
+      "funnelGroupTimesWithin" -> (df => Funnel.funnelGroupTimesWithin(df,
+        u, tp, t, o, pattern, 2, W)),
+      "funnelGroupLoop" -> (df => Funnel.funnelGroupLoop(df, u, tp, t, o,
+        guarded)),
+      "funnelGroupTimesRange" -> (df => Funnel.funnelGroupTimesRange(df, u,
+        tp, t, o, pattern, 1, 2)),
+      "funnelGroupTimesRange guarded" -> (df => Funnel.funnelGroupTimesRange(
+        df, u, tp, t, o, guarded, 1, 2)),
+      "funnelGroupTimesOrMore" -> (df => Funnel.funnelGroupTimesOrMore(df,
+        u, tp, t, o, pattern, 2)),
+      "funnelGroupMatches" -> (df => Funnel.funnelGroupMatches(df, u, tp, t,
+        o, Seq("view", "click"), 2, 3)),
+      "funnelGroupMatchesWithin" -> (df => Funnel.funnelGroupMatchesWithin(
+        df, u, tp, t, o, Seq("view", "click"), 2, 3, W)),
+      "funnelGroupMatchesAbsence" -> (df => Funnel.funnelGroupMatchesAbsence(
+        df, u, tp, t, o, Seq("view", "click"), 2, 3, W, "error")),
+      "funnelGroupMatchesRange" -> (df => Funnel.funnelGroupMatchesRange(df,
+        u, tp, t, o, Seq("view", "click"), 1, 2, 3)),
+      "funnelGroupMatchesRangeAbsence" -> (df =>
+        Funnel.funnelGroupMatchesRangeAbsence(df, u, tp, t, o,
+          Seq("view", "click"), 1, 2, 3, W, "error")),
+      "funnelMulti" -> (df => Funnel.funnelMulti(df, u, tp, t, o, typed, 3)),
+      "funnelMatchesAbsence" -> (df => Funnel.funnelMatchesAbsence(df, u, tp,
+        t, o, typed, 3, W, "error")),
+      "funnelSkip" -> (df => Funnel.funnelSkip(df, u, tp, t, o, loop,
+        Funnel.SkipToLast(1), 3)),
+      "funnelAnyCount" -> (df => Funnel.funnelAnyCount(df, u, tp, t, o,
+        typed)),
+      "funnelCombinations" -> (df => Funnel.funnelCombinations(df, u, tp, t,
+        o, Seq("view" -> false, "click" -> true))),
+      "funnelIterative" -> (df => Funnel.funnelIterative(df, u, tp, t, o, "v",
+        Seq(Funnel.IterStage("view"),
+          Funnel.IterStage("click", Some(Funnel.RelGt(1, 1)))))),
+      "funnelAnyEnumerate" -> (df => Funnel.funnelAnyEnumerate(df, u, tp, t,
+        o, typed)),
+      "funnelWhere" -> (df => Funnel.funnelWhere(df, u, t, o,
+        Seq("event_type", "v"), Seq(e => e.getField("v") > 5L,
+          e => e.getField("event_type") === "click"))))
+    // the table covers every public funnel* entry point
+    val publicShapes = Funnel.getClass.getMethods.map(_.getName)
+      .filter(_.startsWith("funnel")).filterNot(_.contains("$")).toSet
+    assert(shapes.map(_._1.takeWhile(_ != ' ')).toSet === publicShapes)
+    for ((name, shape) <- shapes) {
+      val df = shape(failing)
+      assert(df.columns.head === "user_id", name)
+      assert(!groupsByAttr(df), s"$name plans a time-bucketed split")
+      // the frame really does throw once an action runs it
+      val e = intercept[Throwable](df.collect())
+      var cur = e; var seen = List.empty[Throwable]; var found = false
+      while (cur != null && !seen.exists(_ eq cur)) {
+        found ||= Option(cur.getMessage).exists(_.contains("scan ran"))
+        seen ::= cur; cur = cur.getCause
+      }
+      assert(found, s"$name: $e")
     }
   }
 
@@ -1419,9 +1347,9 @@ class FunnelSpec extends SparkSpec {
       (1L, 5L, ts(5), "click"), (1L, 6L, ts(6), "purchase"))
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1), ("purchase", 1))
-    def one(mode: Funnel.ConsumeMode, b: Option[Long] = None) = {
-      val r = Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
-        "event_id", stages, mode, routeOf(b)).collect()
+    def one(mode: Funnel.ConsumeMode, split: Boolean = false) = {
+      val r = Funnel.funnelLoop(splitByTime(ev, split), "user_id", "event_type", "ts",
+        "event_id", stages, mode).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 3).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1432,9 +1360,9 @@ class FunnelSpec extends SparkSpec {
     assert(gLoops === Seq((3L, tsUs(3)), (2L, tsUs(5)), (1L, tsUs(6))))
     assert(rLoops === Seq((2L, tsUs(2)), (1L, tsUs(4)), (1L, tsUs(6))))
     assert(gLoops !== rLoops) // the modes are genuinely different
-    // bucketed twins bit-equal at 1-second buckets (blocks straddle)
-    assert(one(Funnel.Greedy, Some(1L)) === ((gReached, gLoops)))
-    assert(one(Funnel.Reluctant, Some(1L)) === ((rReached, rLoops)))
+    // the log split by event time gives the same rows
+    assert(one(Funnel.Greedy, split = true) === ((gReached, gLoops)))
+    assert(one(Funnel.Reluctant, split = true) === ((rReached, rLoops)))
     // arm delegation: greedy IS funnelLoop, reluctant IS times(m, m)
     assert(Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
         "event_id", stages, Funnel.Greedy).collect().map(_.toString).toSeq
@@ -1488,13 +1416,11 @@ class FunnelSpec extends SparkSpec {
     assert(consec(1L)._1 === 1, "consecutive seams must reject the gap")
     assert(consec(2L)._1 === 1)
     assert(consec(3L)._1 === 2)
-    // bucketed twin bit-identical on both seam modes
-    assert(byUser(Funnel.funnelGroupTimes(ev, "user_id",
-      "event_type", "ts", "event_id", group, times = 2,
-      route = Funnel.Bucketed(2L))) === relaxed)
-    assert(byUser(Funnel.funnelGroupTimes(ev, "user_id",
-      "event_type", "ts", "event_id", group, times = 2,
-      route = Funnel.Bucketed(2L), consecutiveSeams = true)) === consec)
+    // the log split by event time gives the same rows, both seam modes
+    assert(byUser(Funnel.funnelGroupTimes(splitByTime(ev), "user_id",
+      "event_type", "ts", "event_id", group, times = 2)) === relaxed)
+    assert(byUser(Funnel.funnelGroupTimes(splitByTime(ev), "user_id",
+      "event_type", "ts", "event_id", group, times = 2, consecutiveSeams = true)) === consec)
     // contract: the group is a `begin` (non-strict head), no trailing
     // gap guard, times >= 1
     intercept[IllegalArgumentException] {
@@ -1735,42 +1661,6 @@ class FunnelSpec extends SparkSpec {
     }
   }
 
-  test("property: group-loop tropical segment monoid == single dominance fold on random corpora, both seam modes") {
-    val rnd = new scala.util.Random(20260816L)
-    val types = Array("view", "click", "error")
-    val ev = (1 to 30).flatMap { u =>
-      (1 to 40).map { i =>
-        (u.toLong, (u * 1000 + i).toLong, ts(rnd.nextInt(50)),
-          types(rnd.nextInt(types.length)))
-      }
-    }.toDF("user_id", "event_id", "ts", "event_type")
-    val groups = Seq(
-      Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-      Seq(Funnel.PatternStage("view"),
-        Funnel.PatternStage("click", strict = true)),
-      Seq(Funnel.PatternStage("view",
-        notNextAfter = Some("error")),
-        Funnel.PatternStage("error", optional = true),
-        Funnel.PatternStage("click")),
-      // trailing seam guard: the bl kill is max-plus linear, so the
-      // gain matrices must carry it bit-exactly (round 18)
-      Seq(Funnel.PatternStage("view"),
-        Funnel.PatternStage("click", notNextAfter = Some("error"))))
-    def collectReps(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (g <- groups; consec <- Seq(false, true)) {
-      val single = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec))
-      for (b <- Seq(1L, 7L, 3600L)) {
-        val bucketed = collectReps(Funnel.funnelGroupLoop(ev,
-          "user_id", "event_type", "ts", "event_id", g, consec,
-          route = Funnel.Bucketed(b)))
-        assert(bucketed === single,
-          s"group=$g consec=$consec bucket=$b")
-      }
-    }
-  }
-
   test("property: group-loop consume modes — reluctant == floor-capped greedy (truncation law) across single/bucketed/auto, both seam modes") {
     val rnd = new scala.util.Random(20260818L)
     val types = Array("view", "click", "error")
@@ -1800,15 +1690,11 @@ class FunnelSpec extends SparkSpec {
         minTimes = m))
       assert(rel === greedy.map { case (u, r) => u -> math.min(r, m.toLong) },
         s"group=$g consec=$consec m=$m")
-      // bucketed (greedy matrices + output cap) and auto agree
-      val relB = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
+      // the log split by event time gives the same rows
+      val relB = collectReps(Funnel.funnelGroupLoop(splitByTime(ev), "user_id",
         "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
-        minTimes = m, route = Funnel.Bucketed(7L)))
-      assert(relB === rel, s"bucketed group=$g consec=$consec m=$m")
-      val relAuto = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
-        minTimes = m, route = Funnel.Auto()))
-      assert(relAuto === rel, s"auto group=$g consec=$consec m=$m")
+        minTimes = m))
+      assert(relB === rel, s"split group=$g consec=$consec m=$m")
       // mode never moves EXISTENCE: timesOrMore matched agrees
       val gm = Funnel.funnelGroupTimesOrMore(ev, "user_id",
         "event_type", "ts", "event_id", g, m, consec)
@@ -1852,13 +1738,12 @@ class FunnelSpec extends SparkSpec {
         "event_id", g).head().getLong(1)
     assert(reps(plain) === 2L)
     assert(reps(guarded) === 1L)
-    // streaming twin agrees (same kill, same event order)
-    // (batch == stream is pinned in StreamingSpec for the machine;
-    // here we pin the guard's bucketed twin instead)
-    val bucketed = Funnel.funnelGroupLoop(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, route = Funnel.Bucketed(1L))
+    // the log split by event time gives the same kill (batch ==
+    // stream is pinned in StreamingSpec for the machine)
+    val byTime = Funnel.funnelGroupLoop(splitByTime(ev), "user_id",
+      "event_type", "ts", "event_id", guarded)
       .head().getLong(1)
-    assert(bucketed === 1L)
+    assert(byTime === 1L)
     // the BOUNDED group quantifiers reject the trailing guard with a
     // group-specific message (expansion sticky-reps would diverge
     // from the loop machines' kill semantics)
@@ -1867,18 +1752,6 @@ class FunnelSpec extends SparkSpec {
         "event_id", guarded, times = 2)
     }
     assert(e.getMessage.contains("kill semantics"))
-    // the SEGMENT-BOUNDARY kill: with 1-second buckets every event is
-    // its own segment, so the completion (click, t=1) and its killing
-    // blocker (error, t=2) fall in DIFFERENT segments - the entry bl
-    // slot must carry the chain into the blocker's segment and die
-    // there, which the 1-second run above already exercises; this
-    // variant puts the boundary EXACTLY between click and error with
-    // wider segments on each side (bucket = 2s: [0,1] and [2,3] and
-    // [4]), same answer required
-    val boundary = Funnel.funnelGroupLoop(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, route = Funnel.Bucketed(2L))
-      .head().getLong(1)
-    assert(boundary === 1L)
   }
 
   test("absence alarm (trailing notFollowedBy + within): tail blocker kills, span cuts, same-timestamp blocker spares, match_idx gaps survive the recount, bucketed == single") {
@@ -1901,15 +1774,15 @@ class FunnelSpec extends SparkSpec {
       user(4L, 0 -> "view", 1 -> "click", 2 -> "purchase", 4 -> "error",
         3 -> "view", 4 -> "click", 5 -> "purchase"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    def rows(bucket: Option[Long]) =
-      Funnel.funnelMatchesAbsence(ev, "user_id", "event_type", "ts",
+    def rows(split: Boolean) =
+      Funnel.funnelMatchesAbsence(splitByTime(ev, split), "user_id", "event_type", "ts",
           "event_id", stages, maxMatches = 4, windowMicros = winUs,
-          absentType = "error", route = routeOf(bucket))
+          absentType = "error")
         .orderBy("user_id", "match_idx").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val single = rows(None).toSeq
+    val single = rows(split = false).toSeq
     assert(single === Seq((1L, 1L, 1L), (4L, 2L, 1L)))
-    assert(rows(Some(1L)).toSeq === single)
+    assert(rows(split = true).toSeq === single)
     // k = 1 — the canonical "A not followed by B within T" alarm
     // (Flink's begin(A).notFollowedBy(B).within(T)): every A event is
     // its own skip-past-last match; the error at 5 s kills only the
@@ -1965,14 +1838,14 @@ class FunnelSpec extends SparkSpec {
         surv.map { case (idx, w) =>
           (u, idx, surv.length.toLong, w(0), w(1), w(2)) }
       }.toSet
-      def got(bucket: Option[Long]) =
-        Funnel.funnelMatchesAbsence(df, "user_id", "event_type", "ts",
+      def got(split: Boolean) =
+        Funnel.funnelMatchesAbsence(splitByTime(df, split), "user_id", "event_type", "ts",
             "event_id", stages, maxMatches = 4, windowMicros = winUs,
-            absentType = "error", route = routeOf(bucket))
+            absentType = "error")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getLong(5))).toSet
-      assert(got(None) === expected, s"round $round single")
-      assert(got(Some(2L)) === expected, s"round $round bucketed")
+      assert(got(split = false) === expected, s"round $round single")
+      assert(got(split = true) === expected, s"round $round split")
       require(us0 >= 0L)
     }
   }
@@ -2099,17 +1972,16 @@ class FunnelSpec extends SparkSpec {
           (u, idx.toLong, ms.length.toLong, reps,
             wit.map(Option(_)).padTo(bigK, None: Option[Long])) }
       }.toSet
-      def readRange(bucket: Option[Long]) =
-        Funnel.funnelGroupMatchesRange(df, "user_id",
-            "event_type", "ts", "event_id", grp, m, n, maxMatches = 12,
-            route = routeOf(bucket))
+      def readRange(split: Boolean) =
+        Funnel.funnelGroupMatchesRange(splitByTime(df, split), "user_id",
+            "event_type", "ts", "event_id", grp, m, n, maxMatches = 12)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
-      val gotRange = readRange(None)
+      val gotRange = readRange(split = false)
       assert(gotRange === expectedRange, s"round $round range")
-      assert(readRange(Some(2L)) === expectedRange,
-        s"round $round range bucketed")
+      assert(readRange(split = true) === expectedRange,
+        s"round $round range split")
       val expectedAbs = replayed.flatMap { case (u, (ms, errs)) =>
         val surv = ms.filter { case (_, _, wit) =>
           wit.last - wit.head <= winUs &&
@@ -2118,18 +1990,17 @@ class FunnelSpec extends SparkSpec {
           (u, idx.toLong, surv.length.toLong, reps,
             wit.map(Option(_)).padTo(bigK, None: Option[Long])) }
       }.toSet
-      def readAbs(bucket: Option[Long]) =
-        Funnel.funnelGroupMatchesRangeAbsence(df, "user_id",
+      def readAbs(split: Boolean) =
+        Funnel.funnelGroupMatchesRangeAbsence(splitByTime(df, split), "user_id",
             "event_type", "ts", "event_id", grp, m, n, maxMatches = 12,
-            windowMicros = winUs, absentType = "error",
-            route = routeOf(bucket))
+            windowMicros = winUs, absentType = "error")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
-      val gotAbs = readAbs(None)
+      val gotAbs = readAbs(split = false)
       assert(gotAbs === expectedAbs, s"round $round absence")
-      assert(readAbs(Some(2L)) === expectedAbs,
-        s"round $round absence bucketed")
+      assert(readAbs(split = true) === expectedAbs,
+        s"round $round absence split")
       // the generator must exercise both short and full matches
       assert(replayed.values.flatMap(_._1).map(_._2).toSet.size >= 2,
         s"degenerate round $round")
@@ -2153,7 +2024,7 @@ class FunnelSpec extends SparkSpec {
       Seq("view", "click").zipWithIndex.map { case (tp, i) =>
         (4L, i.toLong, ts(i), tp) })
       .toDF("user_id", "event_id", "ts", "event_type")
-    // the PUBLIC bounded-range surface routes (no rejection), and the
+    // the PUBLIC bounded-range surface accepts the guard, and the
     // guarded report shape is exactly (user_id, reps_completed, matched)
     val routed = Funnel.funnelGroupTimesRange(ev, "user_id",
       "event_type", "ts", "event_id", guarded, minTimes = 2, maxTimes = 3)
@@ -2163,25 +2034,14 @@ class FunnelSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSeq
     assert(got === Seq((1L, 2, true), (2L, 0, false), (3L, 3, true),
       (4L, 1, false)))
-    // bucketed and auto agree row-for-row: the bucketed route (what an
-    // above-threshold Auto resolves to) and Auto on this small log,
-    // which resolves single — structural pin via groupsByAttr
+    // the log split by event time gives the same rows
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("user_id").collect().map(_.toString).toSeq
-    val single = rows(routed)
-    val above = Funnel.funnelGroupTimesRange(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, 2, 3,
-      route = Funnel.Bucketed(1L))
-    assert(groupsByAttr(above))
-    assert(rows(above) === single)
-    val below = Funnel.funnelGroupTimesRange(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, 2, 3,
-      route = Funnel.Auto(1L))
-    assert(!groupsByAttr(below))
-    assert(rows(below) === single)
+    assert(rows(Funnel.funnelGroupTimesRange(splitByTime(ev), "user_id",
+      "event_type", "ts", "event_id", guarded, 2, 3)) === rows(routed))
     // cap placement law UNDER the guard, random corpora: the capped
-    // fold (in-fold saturation) == output-capped guarded greedy loop,
-    // single and bucketed — the truncation lemma's guard extension (a
+    // machine (in-fold saturation) == output-capped guarded greedy loop
+    // — the truncation lemma's guard extension (a
     // repetition's kill is an index property of the event stream, so
     // truncating a chain never changes the kept prefix's validity)
     val rnd = new scala.util.Random(4242L)
@@ -2201,110 +2061,9 @@ class FunnelSpec extends SparkSpec {
       assert(rows(Funnel.funnelGroupTimesRange(corpus, "user_id",
         "event_type", "ts", "event_id", guarded, m, n)) === ref,
         s"single, times($m,$n)")
-      assert(rows(Funnel.funnelGroupTimesRange(corpus, "user_id",
-        "event_type", "ts", "event_id", guarded, m, n,
-        route = Funnel.Bucketed(2L))) === ref, s"bucketed, times($m,$n)")
+      assert(rows(Funnel.funnelGroupTimesRange(splitByTime(corpus), "user_id",
+        "event_type", "ts", "event_id", guarded, m, n)) === ref, s"split, times($m,$n)")
     }
-  }
-
-  test("consume mode rides the auto-route: a Reluctant call above threshold lands on the reluctant bucketed twin") {
-    val rnd = new scala.util.Random(1714L)
-    val typesPool = Array("view", "click", "purchase", "error")
-    val events = (0 until 600).map { i =>
-      (if (i % 2 == 0) 0L else rnd.nextInt(8).toLong + 1L, i.toLong,
-        ts(rnd.nextInt(60)), typesPool(rnd.nextInt(typesPool.length)))
-    }
-    val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("user_id").collect().map(_.toString).toSeq
-    val stages = Seq("view" -> 2, "click" -> 2)
-    val relRef = rows(Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.Reluctant))
-    // above threshold: Auto resolves to the bucketed route
-    // (structurally pinned) with reluctant values — the round-16 gap
-    // was exactly a silently-greedy route here
-    val resolved = Funnel.resolve(Funnel.Auto(1L), df, "user_id",
-      threshold = 10L)
-    assert(resolved === Some(1L))
-    val above = Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.Reluctant,
-      routeOf(resolved))
-    assert(groupsByAttr(above))
-    assert(rows(above) === relRef)
-    // below threshold (the real Auto on this log): single route, same
-    // reluctant values
-    val below = Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.Reluctant,
-      Funnel.Auto())
-    assert(!groupsByAttr(below))
-    assert(rows(below) === relRef)
-    // the mode really bit on this corpus (greedy differs)
-    assert(rows(Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", stages)) !== relRef)
-    // default mode unchanged: Greedy both ways
-    assert(rows(Funnel.funnelLoopConsecutive(df, "user_id",
-      "event_type", "ts", "event_id", stages, route = Funnel.Auto()))
-      === rows(Funnel.funnelLoopConsecutive(df, "user_id", "event_type",
-        "ts", "event_id", stages)))
-    // w58's own call lands on the bucketed route with w56's
-    // single-route reluctant values
-    val w58 = Queries.w58_funnel_loop_consecutive_auto_reluctant.run(spark, sf())
-    assert(groupsByAttr(w58))
-    assert(rows(w58) ===
-      rows(Queries.w56_funnel_loop_consecutive_reluctant.run(spark, sf())))
-  }
-
-  test("auto-route probe cost: the peak probe is eager at call time, runs only under Auto, and only after validation") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // a DataFrame that THROWS if any job ever scans it — the probe's
-    // single evaluation is observable as exactly this failure
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_id", LongType), StructField("ts", StringType),
-      StructField("event_type", StringType)))
-    val failing = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(1), 1)
-        .mapPartitions[Row](_ => throw new RuntimeException("probe ran")),
-      schema)
-    def chain(e: Throwable): List[String] = {
-      var cur = e; var acc = List.empty[String]
-      var seen = List.empty[Throwable]
-      while (cur != null && !seen.exists(_ eq cur)) {
-        acc ::= Option(cur.getMessage).getOrElse(""); seen ::= cur
-        cur = cur.getCause
-      }
-      acc
-    }
-    val stages = Seq("view" -> 1, "click" -> 1)
-    def skip(route: Funnel.Route) = Funnel.funnelSkip(failing, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.SkipToLast(1), 4,
-      route)
-    // Single and Bucketed never probe: plan construction runs no job
-    skip(Funnel.Single)
-    skip(Funnel.Bucketed(1L))
-    // Auto probes EAGERLY — the count-by-key job runs at CALL time (the
-    // documented contract), hence the throw
-    val e = intercept[Throwable](skip(Funnel.Auto()))
-    assert(chain(e).exists(_.contains("probe ran")))
-    // bad arguments fail with the contract message BEFORE the probe:
-    // a probe-first shape would throw "probe ran" here instead
-    def failsFirst(msg: String)(call: => Any): Unit = {
-      val bad = intercept[IllegalArgumentException](call)
-      assert(bad.getMessage.contains(msg), bad.getMessage)
-    }
-    failsFirst("expanded length >= 2")(Funnel.funnelSkip(failing,
-      "user_id", "event_type", "ts", "event_id", Seq("view" -> 1),
-      Funnel.SkipToLast(1), 4, Funnel.Auto()))
-    failsFirst("adjacent stages must differ")(Funnel.funnelLoopConsecutive(
-      failing, "user_id", "event_type", "ts", "event_id",
-      Seq("view" -> 1, "view" -> 2), route = Funnel.Auto()))
-    failsFirst("need at least one stage")(Funnel.funnelAnyCount(failing,
-      "user_id", "event_type", "ts", "event_id", Nil, Funnel.Auto()))
-    failsFirst("optional head")(Funnel.funnelGroupLoop(failing, "user_id",
-      "event_type", "ts", "event_id",
-      Seq(Funnel.PatternStage("view", optional = true),
-        Funnel.PatternStage("click")), route = Funnel.Auto()))
-    failsFirst("need bucket seconds > 0")(skip(Funnel.Auto(0L)))
   }
 
   test("funnelCombinations: loop stage counts every non-empty subset; property vs closed form; bucketed == single") {
@@ -2346,8 +2105,8 @@ class FunnelSpec extends SparkSpec {
       assert(got(u) === expected, s"user $u")
     }
     assert(got.values.exists(_ > 100L), "generator must hit real blow-up")
-    val gotB = Funnel.funnelCombinations(df, "user_id",
-        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+    val gotB = Funnel.funnelCombinations(splitByTime(df), "user_id",
+        "event_type", "ts", "event_id", stages)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
   }
@@ -2454,8 +2213,8 @@ class FunnelSpec extends SparkSpec {
     }
     assert(got.values.exists(_._1 == 3) && got.values.exists(_._1 < 3),
       "generator must produce both full and expired chains")
-    val gotB = collectOut(Funnel.funnelPatternWithin(df, "user_id",
-      "event_type", "ts", "event_id", stages, T, route = Funnel.Bucketed(1L)))
+    val gotB = collectOut(Funnel.funnelPatternWithin(splitByTime(df), "user_id",
+      "event_type", "ts", "event_id", stages, T))
     assert(gotB === got)
   }
 
@@ -2552,9 +2311,9 @@ class FunnelSpec extends SparkSpec {
       val got = read(Funnel.funnelLoopUntil(df, "user_id", "event_type",
         "ts", "event_id", stages))
       assert(got === expected, s"single fold, config $stages")
-      val gotB = read(Funnel.funnelLoopUntil(df, "user_id",
-        "event_type", "ts", "event_id", stages, route = Funnel.Bucketed(1L)))
-      assert(gotB === got, s"bucketed twin, config $stages")
+      val gotB = read(Funnel.funnelLoopUntil(splitByTime(df), "user_id",
+        "event_type", "ts", "event_id", stages))
+      assert(gotB === got, s"split, config $stages")
       // the generator must exercise stalls AND completions
       assert(expected.values.map(_._1).toSet.size >= 2, s"degenerate $stages")
     }
@@ -2586,8 +2345,8 @@ class FunnelSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expected)
     assert(expected.values.exists(_ > 100L), "combinatorial counts exercised")
-    val gotB = Funnel.funnelAnyCount(df, "user_id", "event_type",
-        "ts", "event_id", stages, route = Funnel.Bucketed(1L))
+    val gotB = Funnel.funnelAnyCount(splitByTime(df), "user_id", "event_type",
+        "ts", "event_id", stages)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
     // sanity against literal enumeration on the same data
@@ -2621,127 +2380,4 @@ class FunnelSpec extends SparkSpec {
     }
   }
 
-  test("resolve: Auto routes bucketed only when the peak key EXCEEDS the threshold; Single and Bucketed pass through") {
-    // user 1 is the peak key with 5 events, user 2 has 3
-    val df = (Seq.fill(5)(1L) ++ Seq.fill(3)(2L)).zipWithIndex
-      .map { case (u, i) => (u, i.toLong) }.toDF("user_id", "event_id")
-    assert(Funnel.resolve(Funnel.Auto(60L), df, "user_id",
-      threshold = 5L) === None) // peak = threshold: single
-    assert(Funnel.resolve(Funnel.Auto(60L), df, "user_id",
-      threshold = 4L) === Some(60L)) // peak = threshold + 1: bucketed
-    assert(Funnel.resolve(Funnel.Single, df, "user_id", 0L) === None)
-    assert(Funnel.resolve(Funnel.Bucketed(7L), df, "user_id",
-      Long.MaxValue) === Some(7L))
-    // an empty log has peak 0
-    assert(Funnel.resolve(Funnel.Auto(), df.limit(0), "user_id",
-      threshold = 0L) === None)
-    for (bad <- Seq(Funnel.Bucketed(0L), Funnel.Auto(-1L)))
-      intercept[IllegalArgumentException](
-        Funnel.resolve(bad, df, "user_id", 0L))
-  }
-
-  test("route equivalence: every routed shape gives equal results under Single, Bucketed(1) and a resolved Auto on random logs") {
-    val rnd = new scala.util.Random(20261018L)
-    val typesPool = Array("view", "click", "purchase", "error", "signup")
-    // user 0 is the power key (half the log); 1-second buckets put
-    // every distinct second in its own segment
-    val df = (0 until 600).map { i =>
-      (if (i % 2 == 0) 0L else rnd.nextInt(8).toLong + 1L, i.toLong,
-        ts(rnd.nextInt(60)), typesPool(rnd.nextInt(typesPool.length)),
-        rnd.nextInt(100).toLong)
-    }.toDF("user_id", "event_id", "ts", "event_type", "v")
-    val peak = df.groupBy("user_id").count().agg(
-      org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    // Auto resolved against a threshold just below the log's peak
-    val resolvedAuto = routeOf(
-      Funnel.resolve(Funnel.Auto(1L), df, "user_id", peak - 1))
-    assert(resolvedAuto === Funnel.Bucketed(1L))
-    val W = 10L * 1000000L
-    val ids = Seq("user_id", "event_type", "ts", "event_id")
-    val (u, tp, t, o) = (ids(0), ids(1), ids(2), ids(3))
-    val pat = Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-      Funnel.PatternStage("click", optional = true),
-      Funnel.PatternStage("purchase", strict = true))
-    val grp = Seq(Funnel.PatternStage("view"),
-      Funnel.PatternStage("click", strict = true))
-    val guarded = Seq(Funnel.PatternStage("view"),
-      Funnel.PatternStage("click", notNextAfter = Some("error")))
-    val loop = Seq("view" -> 2, "click" -> 1, "purchase" -> 1)
-    val until = Seq(("view", 1, Some("signup")), ("click", 2, None),
-      ("purchase", 1, Some("error")))
-    val vcp = Seq("view", "click", "purchase")
-    type Run = Funnel.Route => org.apache.spark.sql.DataFrame
-    val shapes: Seq[(String, Run)] = Seq(
-      "funnel" -> (r => Funnel.funnel(df, u, tp, t, o, vcp, r)),
-      "funnelTimes" -> (r => Funnel.funnelTimes(df, u, tp, t, o,
-        Seq("view" -> 2, "click" -> 1), r)),
-      "funnelLoop greedy" -> (r => Funnel.funnelLoop(df, u, tp, t, o, loop,
-        route = r)),
-      "funnelLoop reluctant" -> (r => Funnel.funnelLoop(df, u, tp, t, o,
-        loop, Funnel.Reluctant, r)),
-      "funnelTimesRange" -> (r => Funnel.funnelTimesRange(df, u, tp, t, o,
-        Seq(("view", 1, 2), ("click", 1, 3)), r)),
-      "funnelLoopConsecutive greedy" -> (r => Funnel.funnelLoopConsecutive(
-        df, u, tp, t, o, Seq("view" -> 2, "click" -> 2), route = r)),
-      "funnelLoopConsecutive reluctant" -> (r =>
-        Funnel.funnelLoopConsecutive(df, u, tp, t, o,
-          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant, r)),
-      "funnelLoopUntil greedy" -> (r => Funnel.funnelLoopUntil(df, u, tp,
-        t, o, until, route = r)),
-      "funnelLoopUntil reluctant" -> (r => Funnel.funnelLoopUntil(df, u,
-        tp, t, o, until, Funnel.Reluctant, r)),
-      "funnelWithin" -> (r => Funnel.funnelWithin(df, u, tp, t, o, vcp, W,
-        r)),
-      "funnelGuarded" -> (r => Funnel.funnelGuarded(df, u, tp, t, o, vcp,
-        Seq(Some("error"), None), r)),
-      "funnelWithinGuarded" -> (r => Funnel.funnelWithinGuarded(df, u, tp,
-        t, o, vcp, W, Seq(Some("error"), None), r)),
-      "funnelPattern" -> (r => Funnel.funnelPattern(df, u, tp, t, o, pat,
-        r)),
-      "funnelPatternWithin" -> (r => Funnel.funnelPatternWithin(df, u, tp,
-        t, o, pat, W, r)),
-      "funnelGroupTimes" -> (r => Funnel.funnelGroupTimes(df, u, tp, t, o,
-        grp, 2, route = r)),
-      "funnelGroupLoop greedy" -> (r => Funnel.funnelGroupLoop(df, u, tp,
-        t, o, grp, route = r)),
-      "funnelGroupLoop reluctant, consecutive seams" -> (r =>
-        Funnel.funnelGroupLoop(df, u, tp, t, o, grp, consecutiveSeams = true,
-          mode = Funnel.Reluctant, minTimes = 2, route = r)),
-      "funnelGroupTimesRange" -> (r => Funnel.funnelGroupTimesRange(df, u,
-        tp, t, o, grp, 1, 2, route = r)),
-      "funnelGroupTimesRange guarded" -> (r => Funnel.funnelGroupTimesRange(
-        df, u, tp, t, o, guarded, 1, 2, route = r)),
-      "funnelGroupMatchesRange" -> (r => Funnel.funnelGroupMatchesRange(df,
-        u, tp, t, o, Seq("view", "click"), 1, 2, 3, r)),
-      "funnelGroupMatchesRangeAbsence" -> (r =>
-        Funnel.funnelGroupMatchesRangeAbsence(df, u, tp, t, o,
-          Seq("view", "click"), 1, 2, 3, 2 * W, "error", r)),
-      "funnelMulti" -> (r => Funnel.funnelMulti(df, u, tp, t, o, vcp, 4, r)),
-      "funnelMatchesAbsence" -> (r => Funnel.funnelMatchesAbsence(df, u, tp,
-        t, o, Seq("view", "click"), 4, W, "error", r)),
-      "funnelSkip" -> (r => Funnel.funnelSkip(df, u, tp, t, o,
-        Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-        Funnel.SkipToLast(2), 8, r)),
-      "funnelAnyCount" -> (r => Funnel.funnelAnyCount(df, u, tp, t, o, vcp,
-        r)),
-      "funnelCombinations" -> (r => Funnel.funnelCombinations(df, u, tp, t,
-        o, Seq("view" -> false, "click" -> true, "purchase" -> false), r)),
-      "funnelIterative" -> (r => Funnel.funnelIterative(df, u, tp, t, o,
-        "v", Seq(Funnel.IterStage("view"),
-          Funnel.IterStage("click", Some(Funnel.RelGt(1, 1)))),
-        route = r)),
-      "funnelWhere" -> (r => Funnel.funnelWhere(df, u, t, o,
-        Seq("event_type", "v"),
-        Seq(e => e.getField("event_type") === "view" &&
-            e.getField("v") >= 20L,
-          e => e.getField("event_type") === "click"), r)))
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(_.toString).sorted.toSeq
-    for ((name, run) <- shapes) {
-      val single = rows(run(Funnel.Single))
-      assert(single.nonEmpty, s"$name: empty output proves nothing")
-      assert(rows(run(Funnel.Bucketed(1L))) === single, s"$name: Bucketed(1)")
-      assert(rows(run(resolvedAuto)) === single, s"$name: resolved Auto")
-    }
-  }
 }

@@ -24,8 +24,8 @@ class ScanFanoutSpec extends SparkSpec {
     val df = freshRead() // sf0.01 lineitem ~1.0 MB
     val out = ScanFanout(df)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val expect = ((bytes + ScanFanout.DefaultTargetBytes - 1) /
-      ScanFanout.DefaultTargetBytes)
+    val expect = ((bytes + ScanFanout.TargetBytes - 1) /
+      ScanFanout.TargetBytes)
       .min(BigInt(spark.sparkContext.defaultParallelism)).max(2).toInt
     assert(shufflePartitions(out).contains(expect))
   }

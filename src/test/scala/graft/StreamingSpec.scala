@@ -606,10 +606,12 @@ class StreamingSpec extends SparkSpec {
     val probe = Retrieval
       .bm25TopKFromIndex(spark, bmTable, Seq("data", "model"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val inQuery = operators.TextAnalysis
-      .bm25TopK(docs.filter(col("doc_id") % 7 =!= 3), "doc_id", "text",
-        Seq("data", "model"), k = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val inQuery = Staging.scoped {
+      operators.TextAnalysis
+        .bm25TopK(docs.filter(col("doc_id") % 7 =!= 3), "doc_id", "text",
+          Seq("data", "model"), k = 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     assert(probe === inQuery)
   }
 
@@ -784,9 +786,11 @@ class StreamingSpec extends SparkSpec {
       Retrieval.bm25TopKFromIndex(spark, table, terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
-    val buildOracle = operators.TextAnalysis
-      .bm25TopK(buildSide, "doc_id", "text", terms, k = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val buildOracle = Staging.scoped {
+      operators.TextAnalysis
+        .bm25TopK(buildSide, "doc_id", "text", terms, k = 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     assert(baseOnly === buildOracle)
     // the LOADED probe sees both committed batches = full-corpus scorer
     val loaded = Staging.scoped {
@@ -794,9 +798,11 @@ class StreamingSpec extends SparkSpec {
           terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
-    val fullOracle = operators.TextAnalysis
-      .bm25TopK(docs, "doc_id", "text", terms, k = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val fullOracle = Staging.scoped {
+      operators.TextAnalysis
+        .bm25TopK(docs, "doc_id", "text", terms, k = 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     assert(loaded === fullOracle)
   }
 
@@ -2069,43 +2075,46 @@ class StreamingSpec extends SparkSpec {
     val (n, modulus, threshold) = (3, 37, 0.1)
     val docs = spark.read.parquet(sf() + "/documents.parquet")
       .select("doc_id", "text")
-    // static eval side, staged once and reused by every micro-batch
-    val evalSh = TextDedup.shingleSets(
-      docs.filter(col("doc_id") % modulus === 0), "doc_id", "text", n).persist()
-    // train docs arrive as a stream in two waves (split by parity —
-    // per-doc verdicts are independent, so wave layout must not matter)
-    val src = tmp("decont-src")
-    Seq(0, 1).foreach { parity =>
-      val staging = tmp(s"decont-wave$parity")
-      docs.filter(col("doc_id") % modulus =!= 0)
-        .filter(col("doc_id") % 2 === parity)
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(s"$src/wave$parity.parquet")
-      Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(1700000000000L + parity * 60000L)
-    }
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    val flagged = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-    val q = StreamingIngest.streamingDecontaminate(stream, "doc_id", "text",
-        evalSh, n, threshold) { df =>
-      flagged ++= df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-    q.awaitTermination()
+    // static eval side, staged once and reused by every micro-batch;
+    // the shingling barrier lives in this frame until the test's end
+    Staging.scoped {
+      val evalSh = TextDedup.shingleSets(
+        docs.filter(col("doc_id") % modulus === 0), "doc_id", "text", n).persist()
+      // train docs arrive as a stream in two waves (split by parity —
+      // per-doc verdicts are independent, so wave layout must not matter)
+      val src = tmp("decont-src")
+      Seq(0, 1).foreach { parity =>
+        val staging = tmp(s"decont-wave$parity")
+        docs.filter(col("doc_id") % modulus =!= 0)
+          .filter(col("doc_id") % 2 === parity)
+          .coalesce(1).write.mode("overwrite").parquet(staging)
+        val part = new java.io.File(staging).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        val dst = java.nio.file.Paths.get(s"$src/wave$parity.parquet")
+        Files.copy(part.toPath, dst)
+        dst.toFile.setLastModified(1700000000000L + parity * 60000L)
+      }
+      val stream = spark.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+      val flagged = scala.collection.mutable.Set.empty[(Long, Long, Long)]
+      val q = StreamingIngest.streamingDecontaminate(stream, "doc_id", "text",
+          evalSh, n, threshold) { df =>
+        flagged ++= df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      }
+      q.awaitTermination()
 
-    val batch = Staging.scoped {
-      val withSh = Staging.barrier(TextDedup.shingleSets(docs, "doc_id", "text", n))
-      TextDedup.decontaminate(withSh, col("id") % modulus === 0, threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val batch = Staging.scoped {
+        val withSh = Staging.barrier(TextDedup.shingleSets(docs, "doc_id", "text", n))
+        TextDedup.decontaminate(withSh, col("id") % modulus === 0, threshold)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      }
+      evalSh.unpersist()
+      assert(batch.nonEmpty, "fixture must contain contamination")
+      assert(flagged.toSet === batch)
     }
-    evalSh.unpersist()
-    assert(batch.nonEmpty, "fixture must contain contamination")
-    assert(flagged.toSet === batch)
   }
 
   test("session-window agg (stream, complete mode) equals the batch w4 query") {

@@ -76,21 +76,30 @@ echo "$WLOG" | grep -q "in-memory width measurement equals the bytes of Spark's 
   || { echo "FATAL: width-probe equality test did not run (renamed or filtered out)"; exit 1; }
 echo "$WLOG" | grep -q "All tests passed" \
   || { echo "FATAL: width-probe equality test failed"; echo "$WLOG" | tail -20; exit 1; }
-echo "=== CEP route-equivalence guard (mandatory): every route gives the single fold's rows"
-# the skew-safe routes (Bucketed, Auto) are honest only while one
-# property pins every routed shape's Single, Bucketed(1) and resolved
-# Auto outputs equal — this test is that guard and must demonstrably RUN
-RLOG=$(sbt -batch 'testOnly graft.FunnelSpec -- -z "route equivalence"' 2>&1)
-echo "$RLOG" | grep -q "route equivalence: every routed shape gives equal results under Single, Bucketed(1) and a resolved Auto on random logs" \
-  || { echo "FATAL: CEP route-equivalence test did not run (renamed or filtered out)"; exit 1; }
-echo "$RLOG" | grep -q "All tests passed" \
-  || { echo "FATAL: CEP route-equivalence test failed"; echo "$RLOG" | tail -20; exit 1; }
+echo "=== CEP lazy-build guard (mandatory): every funnel* entry point builds with no Spark job"
+# every batch CEP shape folds its machine through one lazy driver; the
+# table that pins "building a shape runs no job" over every public
+# funnel* entry point must demonstrably RUN and pass
+LLOG=$(sbt -batch 'testOnly graft.FunnelSpec -- -z "lazy build"' 2>&1)
+echo "$LLOG" | grep -q "lazy build: every public funnel\* entry point builds with no Spark job over a frame whose scan throws" \
+  || { echo "FATAL: CEP lazy-build table did not run (renamed or filtered out)"; exit 1; }
+echo "$LLOG" | grep -q "All tests passed" \
+  || { echo "FATAL: CEP lazy-build table failed"; echo "$LLOG" | tail -20; exit 1; }
+echo "=== one CEP machine per shape: no second implementation in Funnel.scala"
+# the batch shapes run the Cep machines their streaming twins run; a
+# Column-expression fold over a per-user array (collect_list +
+# aggregate), a route value or a segment-split body must not come back
+if grep -nE 'collect_list|aggregate\(|\bRoute\b|def \w*Bucketed\b' \
+    src/main/scala/graft/operators/Funnel.scala; then
+  echo "FATAL: a second CEP machine implementation is back in Funnel.scala (build a Cep machine instead)"
+  exit 1
+fi
 echo "=== one entry point per CEP shape: no public *Auto/*Bucketed/*Mode/*Sorted twin"
-# how a shape runs is its route/mode argument, not a second public name
+# a consume mode is the `mode` argument, not a second public name
 if grep -nE '^\s*def (funnel|streamingFunnel)\w*(Auto|Bucketed|Mode|Sorted)\(' \
     src/main/scala/graft/operators/Funnel.scala \
     src/main/scala/graft/streaming/StreamingIngest.scala; then
-  echo "FATAL: a routed twin is back (use route = Funnel.Bucketed/Auto or mode = ...)"
+  echo "FATAL: a second public name for one shape is back (use mode = ...)"
   exit 1
 fi
 echo "=== CEP retention guard (mandatory): every completing twin frees its state after the TTL"
