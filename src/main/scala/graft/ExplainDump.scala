@@ -21,7 +21,7 @@ object ExplainDump {
         "j5_interval_join", "t38_overlap_matrix", "q14_promo_revenue",
         "t40_ann_index_persist", "t41_winnow_dedup_apply",
         "t48_paragraph_dedup", "t49_gopher_rules",
-        "t50_ann_index_append", "t51_span_removal", "t52_hybrid_batched",
+        "t51_span_removal", "t52_hybrid_batched",
         "t53_fuzzy_paragraph_dedup", "t54_bm25_index_append",
         "t56_ann_index_delete", "t58_ann_index_compact",
         "t59_bm25_index_compact", "t60_pq_index_delete",

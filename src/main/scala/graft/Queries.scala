@@ -3432,7 +3432,7 @@ object Queries {
     },
     oracle = Some(minhashPairsOracleSql()))
 
-  /** Minhash index AS-OF read ([[TextDedup.loadMinhashIndexAsOf]]):
+  /** Minhash index AS-OF read (`TextDedup.loadMinhashIndex(asOf = …)`):
     * snapshot time travel over the append history — the index as seen
     * after batch 1 committed is base ∪ batch 1, batch 2 invisible;
     * probing that snapshot with the snapshot's own documents equals
@@ -3450,7 +3450,7 @@ object Queries {
       TextDedup.appendToMinhashIndexCommitted(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table,
         batchId = 2L)
-      val snap = TextDedup.loadMinhashIndexAsOf(spark, table, asOfBatch = 1L)
+      val snap = TextDedup.loadMinhashIndex(spark, table, asOf = Some(1L))
       TextDedup.probeMinhashLoaded(snap,
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
         .filter(col("q_id") < col("id"))
@@ -3459,7 +3459,7 @@ object Queries {
     },
     oracle = Some(minhashPairsOracleSql("doc_id % 3 <> 0")))
 
-  /** Minhash index DELETE ([[TextDedup.deleteFromMinhashIndex]]):
+  /** Minhash index DELETE ([[IndexStore.delete]]):
     * tombstones anti-join both the entry and doc sides at probe time
     * (merge-on-read), so a probe over the survivors equals a
     * from-scratch build on them. */
@@ -3470,8 +3470,7 @@ object Queries {
       TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
         k = MinhashK, bandSize = BandSize, numBands = NumBands,
         threshold = JaccardThreshold, table = table)
-      TextDedup.deleteFromMinhashIndex(
-        docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
+      IndexStore.delete(docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
       TextDedup.probeMinhashIndex(spark, table,
           docs.filter(col("doc_id") % 5 =!= 2), "doc_id", "text")
         .filter(col("q_id") < col("id"))
@@ -3481,7 +3480,7 @@ object Queries {
     oracle = Some(minhashPairsOracleSql("doc_id % 5 <> 2")))
 
   /** FULL minhash index lifecycle
-    * ([[TextDedup.compactMinhashIndex]]): build → committed append →
+    * ([[IndexStore.compact]]): build → committed append →
     * delete → compact → probe. Compaction folds the committed batch
     * into both bucketed base tables, drops tombstoned rows physically,
     * clears exactly the folded batches then the delete list — after
@@ -3498,9 +3497,8 @@ object Queries {
       TextDedup.appendToMinhashIndexCommitted(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table,
         batchId = 1L)
-      TextDedup.deleteFromMinhashIndex(
-        docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
-      TextDedup.compactMinhashIndex(spark, table)
+      IndexStore.delete(docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
+      IndexStore.compact(spark, table)
       TextDedup.probeMinhashIndex(spark, table,
           docs.filter(col("doc_id") % 5 =!= 2), "doc_id", "text")
         .filter(col("q_id") < col("id"))
@@ -4337,7 +4335,7 @@ object Queries {
       vCtesSql: String =
         "v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)")
       : String = {
-    // Frozen-quantizer variant (t50): seeds and Lloyd iterations read
+    // Frozen-quantizer variant (t62): seeds and Lloyd iterations read
     // only the TRAINING subset `tn`; assignment/coding/probing (sfin,
     // corpus, probed) always read the full corpus `n`. With no training
     // predicate the generated SQL is the historical full-corpus text.
@@ -5402,7 +5400,7 @@ object Queries {
     val subLen = 64 / PqM
     val perSub = (0 until PqM).map { si =>
       val off = si * subLen
-      // Frozen-codebook variant (t55): seeding and Lloyd read only the
+      // Frozen-codebook variant (t63): seeding and Lloyd read only the
       // training subset; coding (cd) and query LUTs (ql) read all.
       val tsub = if (trainPredSql.isDefined) s"tsub$si" else s"sub$si"
       val tsubCte = trainPredSql.map(p =>
@@ -5519,59 +5517,11 @@ object Queries {
     },
     oracle = t15_ivf_sq8_ann.oracle)
 
-  /** Deterministic build/append corpus split for the incremental-index
-    * family (t50/t54/t55): ids ≢ 0 (mod 3) are the initial build, the
-    * rest arrive as the appended batch. Mirrored verbatim in the
-    * oracles' training predicates. */
+  /** Deterministic build/append corpus split for the incremental
+    * vector-index family (t58, t61–t63, t73, t74): ids ≢ 0 (mod 3) are
+    * the initial build, the rest arrive as appended batches. Mirrored
+    * verbatim in the oracles' training predicates. */
   private val AppendTrainSql = "vec_id % 3 <> 0"
-
-  /** Incremental ANN index maintenance ([[VectorOps.appendToIndex]]):
-    * the IVF+SQ8 index is built on two thirds of the corpus, the
-    * remaining third is APPENDED against the frozen centroids/SQ8 stats
-    * (no retrain, no index rewrite — the batch is coded and routed to
-    * its cell buckets, FAISS `IndexIVF.add` semantics), and the probe
-    * runs over the combined index. The oracle retrains nothing either:
-    * its k-means/stats CTEs read only the training subset while coding
-    * and probing read the full corpus — so the gate proves
-    * probe(build(A) + append(B)) ≡ probe(build(A∪B) | quantizers(A))
-    * value-exactly, the production ingest contract. */
-  val t50_ann_index_append: Q = Q(
-    run = (spark, dir) => {
-      val table = "graft_ann_append"
-      val emb = t(spark, dir, "embeddings")
-      VectorOps.writeIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
-        "embedding", table, kClusters = IvfClusters, iters = IvfIters,
-        numBuckets = 8)
-      VectorOps.appendToIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", table, numBuckets = 8)
-      val idx = VectorOps.loadIndex(spark, table)
-      VectorOps.ivfSq8TopKFromIndex(idx, col("id") < 10, k = 5,
-          nprobe = IvfNprobe, candidates = Sq8Candidates)
-        .orderBy("query_id", "rank")
-    },
-    oracle = Some(
-      s"""${ivfSq8OracleCtes(trainPredSql = Some(AppendTrainSql))}
-         |SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank
-         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
-
-  /** Incremental PQ index maintenance ([[VectorOps.appendToPqIndex]]):
-    * same contract as t50 one memory tier down — codebooks train on the
-    * build subset and FREEZE; the appended batch is only coded. Gated
-    * on the PQ oracle with training restricted to the build subset. */
-  val t55_pq_index_append: Q = Q(
-    run = (spark, dir) => {
-      val table = "graft_pq_append"
-      val emb = t(spark, dir, "embeddings")
-      VectorOps.writePqIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
-        "embedding", table, m = PqM, ksub = PqKsub, iters = PqIters)
-      VectorOps.appendToPqIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", table)
-      val idx = VectorOps.loadPqIndex(spark, table)
-      VectorOps.pqTopKFromIndex(idx, col("id") < 10, k = 5,
-          candidates = PqCandidates)
-        .orderBy("query_id", "rank")
-    },
-    oracle = Some(pqOracleSql(Some(AppendTrainSql))))
 
   /** Deterministic delete set for the index-delete/compact family
     * (t56–t59): ids ≡ 2 (mod 5) are deleted. Chosen coprime to the
@@ -5579,7 +5529,7 @@ object Queries {
     * across BOTH the build and the appended batch. */
   private val DeleteSurvivorSql = "vec_id % 5 <> 2"
 
-  /** Index DELETE ([[VectorOps.deleteFromIndex]]): the index is built
+  /** Index DELETE ([[IndexStore.delete]]): the index is built
     * on the full corpus, then ids ≡ 2 (mod 5) are tombstoned — parquet
     * files are immutable, so the delete is merge-on-read (a tiny side
     * table every probe anti-joins, the Iceberg-v2 equality-delete
@@ -5594,8 +5544,7 @@ object Queries {
       val emb = t(spark, dir, "embeddings")
       VectorOps.writeIndex(emb, "vec_id", "embedding", table,
         kClusters = IvfClusters, iters = IvfIters, numBuckets = 8)
-      VectorOps.deleteFromIndex(emb.filter(col("vec_id") % 5 === 2),
-        "vec_id", table)
+      IndexStore.delete(emb.filter(col("vec_id") % 5 === 2), "vec_id", table)
       val idx = VectorOps.loadIndex(spark, table)
       VectorOps.ivfSq8TopKFromIndex(idx, col("id") < 10, k = 5,
           nprobe = IvfNprobe, candidates = Sq8Candidates)
@@ -5606,8 +5555,9 @@ object Queries {
          |SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank
          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
-  /** FULL index lifecycle, vector side ([[VectorOps.compactIndex]]):
-    * build on two thirds → append the rest against frozen quantizers →
+  /** FULL index lifecycle, vector side ([[IndexStore.compact]]):
+    * build on two thirds → append the rest as one committed batch
+    * against frozen quantizers →
     * delete ids ≡ 2 (mod 5) (tombstones spanning BOTH batches) →
     * COMPACT (physically rewrite survivors bucket-preserving, clear
     * tombstones) → probe. The oracle trains quantizers on the build
@@ -5624,11 +5574,10 @@ object Queries {
       VectorOps.writeIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
         "embedding", table, kClusters = IvfClusters, iters = IvfIters,
         numBuckets = 8)
-      VectorOps.appendToIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", table, numBuckets = 8)
-      VectorOps.deleteFromIndex(emb.filter(col("vec_id") % 5 === 2),
-        "vec_id", table)
-      VectorOps.compactIndex(spark, table)
+      VectorOps.appendToIndexCommitted(emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", table, batchId = 0L)
+      IndexStore.delete(emb.filter(col("vec_id") % 5 === 2), "vec_id", table)
+      IndexStore.compact(spark, table)
       val idx = VectorOps.loadIndex(spark, table)
       VectorOps.ivfSq8TopKFromIndex(idx, col("id") < 10, k = 5,
           nprobe = IvfNprobe, candidates = Sq8Candidates)
@@ -5640,16 +5589,19 @@ object Queries {
          |SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank
          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
-  /** ATOMIC (CommitLog) incremental ANN maintenance
-    * ([[VectorOps.appendToIndexCommitted]]) — t50's contract through
-    * the streaming commit protocol: the appended third arrives as TWO
-    * atomically-committed side batches (unbucketed L0 runs the probe
-    * unions with the bucketed base) instead of a direct bucketed
-    * append. Gated on t50's frozen-training oracle VERBATIM, so the
-    * whole protocol — staging write, rename commit, side-run union —
-    * must be value-invisible next to the one-shot append. A replayed
-    * batch id inside the run doubles nothing (the oracle would see
-    * duplicated candidates and fail). */
+  /** Incremental ANN index maintenance
+    * ([[VectorOps.appendToIndexCommitted]]): the IVF+SQ8 index is built
+    * on two thirds of the corpus, and the remaining third arrives as
+    * TWO atomically-committed batches coded against the frozen
+    * centroids/SQ8 stats (no retrain, no index rewrite — FAISS
+    * `IndexIVF.add` semantics); the probe runs over the bucketed base ∪
+    * the side runs. The oracle retrains nothing either: its
+    * k-means/stats CTEs read only the training subset while coding and
+    * probing read the full corpus — so the gate proves
+    * probe(build(A) + append(B)) ≡ probe(build(A∪B) | quantizers(A))
+    * value-exactly, the production ingest contract. A replayed batch id
+    * inside the run doubles nothing (the oracle would see duplicated
+    * candidates and fail). */
   val t62_ann_append_committed: Q = Q(
     run = (spark, dir) => {
       val table = "graft_ann_commitlog"
@@ -5670,14 +5622,16 @@ object Queries {
           nprobe = IvfNprobe, candidates = Sq8Candidates)
         .orderBy("query_id", "rank")
     },
-    oracle = t50_ann_index_append.oracle)
+    oracle = Some(
+      s"""${ivfSq8OracleCtes(trainPredSql = Some(AppendTrainSql))}
+         |SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank
+         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
   /** [[t62_ann_append_committed]] one memory tier down
-    * ([[VectorOps.appendToPqIndexCommitted]]): the PQ append through
-    * the atomic commit protocol, gated on t55's frozen-codebook oracle
-    * verbatim — all three streamed-maintenance modalities end
-    * oracle-gated (ANN t62, PQ here, BM25 t54 whose ledgered append
-    * writes the same tables as the batch path). */
+    * ([[VectorOps.appendToPqIndexCommitted]]): codebooks train on the
+    * build subset and FREEZE; the appended third arrives as two
+    * committed batches (one replayed) and is only coded. Gated on the
+    * PQ oracle with training restricted to the build subset. */
   val t63_pq_append_committed: Q = Q(
     run = (spark, dir) => {
       val table = "graft_pq_commitlog"
@@ -5696,10 +5650,10 @@ object Queries {
           candidates = PqCandidates)
         .orderBy("query_id", "rank")
     },
-    oracle = t55_pq_index_append.oracle)
+    oracle = Some(pqOracleSql(Some(AppendTrainSql))))
 
   /** Snapshot time travel on the persisted ANN index
-    * ([[VectorOps.loadIndexAsOf]]): base build + two committed append
+    * (`VectorOps.loadIndex(asOf = …)`): base build + two committed append
     * batches, probed AS OF batch 0 — batch 1's rows must be invisible.
     * The oracle replays the frozen-quantizer probe with the corpus
     * restricted to base ∪ batch 0 (train = base, data = base ∪ even
@@ -5719,7 +5673,7 @@ object Queries {
         "vec_id", "embedding", table, batchId = 0L)
       VectorOps.appendToIndexCommitted(batch.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", table, batchId = 1L)
-      val idx = VectorOps.loadIndexAsOf(spark, table, asOfBatch = 0L)
+      val idx = VectorOps.loadIndex(spark, table, asOf = Some(0L))
       VectorOps.ivfSq8TopKFromIndex(idx, col("id") < 10, k = 5,
           nprobe = IvfNprobe, candidates = Sq8Candidates)
         .orderBy("query_id", "rank")
@@ -5731,7 +5685,7 @@ object Queries {
          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
   /** [[t73_ann_index_asof]] one memory tier down
-    * ([[VectorOps.loadPqIndexAsOf]]): snapshot time travel on the PQ
+    * (`VectorOps.loadPqIndex(asOf = …)`): snapshot time travel on the PQ
     * index, gated on the frozen-codebook oracle with the corpus
     * restricted to base ∪ batch 0. */
   val t74_pq_index_asof: Q = Q(
@@ -5745,7 +5699,7 @@ object Queries {
         "vec_id", "embedding", table, batchId = 0L)
       VectorOps.appendToPqIndexCommitted(batch.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", table, batchId = 1L)
-      val idx = VectorOps.loadPqIndexAsOf(spark, table, asOfBatch = 0L)
+      val idx = VectorOps.loadPqIndex(spark, table, asOf = Some(0L))
       VectorOps.pqTopKFromIndex(idx, col("id") < 10, k = 5,
           candidates = PqCandidates)
         .orderBy("query_id", "rank")
@@ -5798,7 +5752,7 @@ object Queries {
          |FROM g ORDER BY bucket""".stripMargin
     })
 
-  /** PQ index DELETE ([[VectorOps.deleteFromPqIndex]]) — t56 one memory
+  /** PQ index DELETE ([[IndexStore.delete]]) — t56 one memory
     * tier down, restoring three-modality symmetry (ANN t56, BM25 t57,
     * PQ here): the PQ index is built on the full corpus, ids ≡ 2
     * (mod 5) are tombstoned merge-on-read, codebooks stay FROZEN (FAISS
@@ -5813,8 +5767,7 @@ object Queries {
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb, "vec_id", "embedding", table,
         m = PqM, ksub = PqKsub, iters = PqIters)
-      VectorOps.deleteFromPqIndex(emb.filter(col("vec_id") % 5 === 2),
-        "vec_id", table)
+      IndexStore.delete(emb.filter(col("vec_id") % 5 === 2), "vec_id", table)
       val idx = VectorOps.loadPqIndex(spark, table)
       VectorOps.pqTopKFromIndex(idx, col("id") < 10, k = 5,
           candidates = PqCandidates)
@@ -5822,9 +5775,9 @@ object Queries {
     },
     oracle = Some(pqOracleSql(dataPredSql = Some(DeleteSurvivorSql))))
 
-  /** FULL PQ index lifecycle ([[VectorOps.compactPqIndex]]) — t58 one
+  /** FULL PQ index lifecycle ([[IndexStore.compact]]) — t58 one
     * memory tier down: build codebooks on two thirds → append the rest
-    * against FROZEN codebooks → delete ids ≡ 2 (mod 5) across both
+    * as one committed batch against FROZEN codebooks → delete ids ≡ 2 (mod 5) across both
     * batches → COMPACT (rewrite survivors, clear tombstones) → probe.
     * The oracle trains on the build subset only and codes/probes
     * survivors only — the whole maintenance chain must be invisible
@@ -5838,11 +5791,10 @@ object Queries {
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
         "embedding", table, m = PqM, ksub = PqKsub, iters = PqIters)
-      VectorOps.appendToPqIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", table)
-      VectorOps.deleteFromPqIndex(emb.filter(col("vec_id") % 5 === 2),
-        "vec_id", table)
-      VectorOps.compactPqIndex(spark, table)
+      VectorOps.appendToPqIndexCommitted(emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", table, batchId = 0L)
+      IndexStore.delete(emb.filter(col("vec_id") % 5 === 2), "vec_id", table)
+      IndexStore.compact(spark, table)
       val idx = VectorOps.loadPqIndex(spark, table)
       VectorOps.pqTopKFromIndex(idx, col("id") < 10, k = 5,
           candidates = PqCandidates)
@@ -9222,8 +9174,9 @@ object Queries {
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K)))
 
   /** Persisted inverted index ([[Retrieval.writeBm25Index]] →
-    * [[Retrieval.bm25TopKFromIndex]]): term-bucketed postings +
-    * persisted corpus stats, probed for the t42 terms — the keyword
+    * [[Retrieval.loadBm25Index]] → [[Retrieval.bm25TopKFromIndex]]):
+    * term-bucketed postings + per-document lengths, probed for the t42
+    * terms — the keyword
     * side of the build-once/probe-many family (t40 IVF+SQ8, t45 PQ).
     * Probe cost is the query terms' bucket-pruned postings, never a
     * corpus scan; the gate is t42's oracle hash-exact because the
@@ -9234,16 +9187,19 @@ object Queries {
       val table = "graft_bm25_index"
       Retrieval.writeBm25Index(t(spark, dir, "documents"), "doc_id",
         "text", table)
-      Retrieval.bm25TopKFromIndex(spark, table, Bm25Terms, Bm25K)
+      Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
+          Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id")
     },
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K)))
 
-  /** Incremental BM25 index maintenance ([[Retrieval.appendToBm25Index]]):
-    * the inverted index is built on two thirds of the corpus, the rest
-    * is APPENDED — new postings land in their term buckets, (n_docs,
-    * avgdl) are refreshed, per-term df is counted from postings at probe
-    * time so it is exact by construction. BM25 has no trained state, so
+  /** Incremental BM25 index maintenance
+    * ([[Retrieval.appendToBm25IndexCommitted]]): the inverted index is
+    * built on two thirds of the corpus, the rest is APPENDED as one
+    * committed batch — its postings and document lengths commit under
+    * one rename, (n_docs, avgdl) are recomputed at load and per-term df
+    * is counted from the visible postings at probe time, so both are
+    * exact by construction. BM25 has no trained state, so
     * append loses NOTHING: the gate is the full-corpus t42 oracle
     * VERBATIM — a probe after append must be indistinguishable from a
     * probe over a from-scratch build on the union. */
@@ -9253,28 +9209,30 @@ object Queries {
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", table)
-      Retrieval.appendToBm25Index(docs.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text", table)
-      Retrieval.bm25TopKFromIndex(spark, table, Bm25Terms, Bm25K)
+      Retrieval.appendToBm25IndexCommitted(
+        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table,
+        batchId = 0L)
+      Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
+          Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id")
     },
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K)))
 
-  /** BM25 index DELETE ([[Retrieval.deleteFromBm25Index]]): tombstone
-    * the ids AND refresh the stats row — BM25's statistics are live
-    * corpus aggregates, and all three refresh exactly ((n_docs, avgdl)
-    * from surviving `_docs` rows, df from surviving postings at probe
-    * time), so a probe after delete equals a probe over a from-scratch
-    * build on the survivors. Gated on the survivor-restricted t42
+  /** BM25 index DELETE ([[IndexStore.delete]]): tombstone the ids —
+    * BM25's statistics are live corpus aggregates, and all three are
+    * recomputed exactly from the survivors ((n_docs, avgdl) from the
+    * surviving `_docs` rows at load, df from the surviving postings at
+    * probe time), so a probe after delete equals a probe over a
+    * from-scratch build on the survivors. Gated on the survivor-restricted t42
     * oracle. */
   val t57_bm25_index_delete: Q = Q(
     run = (spark, dir) => {
       val table = "graft_bm25_delete"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs, "doc_id", "text", table)
-      Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") % 5 === 2),
-        "doc_id", table)
-      Retrieval.bm25TopKFromIndex(spark, table, Bm25Terms, Bm25K)
+      IndexStore.delete(docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
+      Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
+          Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id")
     },
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K,
@@ -9304,9 +9262,9 @@ object Queries {
         k = MinhashK, bandSize = BandSize, numBands = NumBands,
         threshold = JaccardThreshold, table = mhT)
       Forget.forgetEverywhere(emb.filter(col("vec_id") % 5 === 2),
-        "vec_id", Forget.CorpusIndexes(ann = Some(annT), pq = Some(pqT)))
+        "vec_id", Seq(annT, pqT))
       Forget.forgetEverywhere(docs.filter(col("doc_id") % 5 === 2),
-        "doc_id", Forget.CorpusIndexes(bm25 = Some(bmT), minhash = Some(mhT)))
+        "doc_id", Seq(bmT, mhT))
       val none = lit(-1L)
       val ann = VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, annT),
           col("id") < 10, k = 5, nprobe = IvfNprobe,
@@ -9319,7 +9277,8 @@ object Queries {
         .select(lit("pq").as("modality"), col("query_id").as("k1"),
           col("neighbor_id").as("k2"), col("rank").cast("long").as("rank"),
           col("cos").cast("double").as("metric"))
-      val bm = Retrieval.bm25TopKFromIndex(spark, bmT, Bm25Terms, Bm25K)
+      val bm = Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, bmT),
+          Bm25Terms, Bm25K)
         .select(lit("bm25").as("modality"), col("id").as("k1"),
           none.as("k2"), none.as("rank"),
           col("score_micro").cast("double").as("metric"))
@@ -9358,33 +9317,35 @@ object Queries {
     })
 
 
-  /** FULL index lifecycle, keyword side ([[Retrieval.compactBm25Index]]):
-    * build → append → delete → compact → probe, gated on the
-    * survivor-restricted t42 oracle. Compaction rewrites both the
-    * term-bucketed postings and the `_docs` sibling (they share the
-    * index's tombstones) and clears the delete list; stats were already
-    * exact from the delete-time refresh. Compaction must both EXCLUDE
-    * the tombstoned rows and clear the delete list; forgetting either
-    * fails this oracle or the RetrievalSpec pins. */
+  /** FULL index lifecycle, keyword side ([[IndexStore.compact]]):
+    * build → committed append → delete → compact → probe, gated on the
+    * survivor-restricted t42 oracle. Compaction folds the committed
+    * batch into both the term-bucketed postings and the `_docs` sibling
+    * (they share the index's tombstones), then clears the batch and the
+    * delete list. Compaction must fold the batch, EXCLUDE the
+    * tombstoned rows and clear the delete list; missing any of the
+    * three loses the appended documents or resurrects deleted ones, and
+    * this oracle fails. */
   val t59_bm25_index_compact: Q = Q(
     run = (spark, dir) => {
       val table = "graft_bm25_compact"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", table)
-      Retrieval.appendToBm25Index(docs.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text", table)
-      Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") % 5 === 2),
-        "doc_id", table)
-      Retrieval.compactBm25Index(spark, table)
-      Retrieval.bm25TopKFromIndex(spark, table, Bm25Terms, Bm25K)
+      Retrieval.appendToBm25IndexCommitted(
+        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table,
+        batchId = 0L)
+      IndexStore.delete(docs.filter(col("doc_id") % 5 === 2), "doc_id", table)
+      IndexStore.compact(spark, table)
+      Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
+          Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id")
     },
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K,
       survivorPredSql = Some("doc_id % 5 <> 2"))))
 
   /** Snapshot time travel on the persisted BM25 index
-    * ([[Retrieval.loadBm25IndexAsOf]]) — the keyword third of the
+    * (`Retrieval.loadBm25Index(asOf = …)`) — the keyword third of the
     * as-of family (ANN t73, PQ t74): base build on two thirds of the
     * corpus, two ATOMIC committed append batches
     * ([[Retrieval.appendToBm25IndexCommitted]] — postings and docs
@@ -9409,8 +9370,8 @@ object Queries {
       Retrieval.appendToBm25IndexCommitted(
         batch.filter(col("doc_id") % 2 === 1), "doc_id", "text", table,
         batchId = 1L)
-      val idx = Retrieval.loadBm25IndexAsOf(spark, table, asOfBatch = 0L)
-      Retrieval.bm25TopKFromLoaded(idx, Bm25Terms, Bm25K)
+      val idx = Retrieval.loadBm25Index(spark, table, asOf = Some(0L))
+      Retrieval.bm25TopKFromIndex(idx, Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id")
     },
     oracle = Some(bm25OracleSql(Bm25Terms, Bm25K,
@@ -9484,7 +9445,8 @@ object Queries {
         "embedding", annTable, kClusters = IvfClusters, iters = IvfIters,
         numBuckets = 8)
       val kw = Retrieval
-        .bm25TopKFromIndex(spark, bmTable, Bm25Terms, HybridN + 1)
+        .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, bmTable),
+          Bm25Terms, HybridN + 1)
         .filter(col("id") =!= HybridQueryVec)
         .withColumn("rank", row_number().over(
           org.apache.spark.sql.expressions.Window
@@ -9555,7 +9517,8 @@ object Queries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("query_id")
         .orderBy(col("score_micro").desc, col("id").asc)
-      val kw = Retrieval.bm25ScoreBatchedFromIndex(spark, bmTable, qt)
+      val kw = Retrieval.bm25ScoreBatchedFromIndex(
+          Retrieval.loadBm25Index(spark, bmTable), qt)
         .filter(col("id") =!= col("query_id"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= HybridN)
@@ -10200,9 +10163,7 @@ object Queries {
     "t44_hybrid_rrf" -> t44_hybrid_rrf,
     "t45_pq_index_persist" -> t45_pq_index_persist,
     "t46_bm25_index_persist" -> t46_bm25_index_persist,
-    "t50_ann_index_append" -> t50_ann_index_append,
     "t54_bm25_index_append" -> t54_bm25_index_append,
-    "t55_pq_index_append" -> t55_pq_index_append,
     "t56_ann_index_delete" -> t56_ann_index_delete,
     "t57_bm25_index_delete" -> t57_bm25_index_delete,
     "t58_ann_index_compact" -> t58_ann_index_compact,

@@ -30,14 +30,16 @@ import org.apache.spark.sql.types.StructType
  *      its directory exists. Replay check = directory existence; there
  *      is no second write to race with.
  *
- * Readers ([[VectorOps.loadIndex]], [[VectorOps.loadPqIndex]]) union
- * the committed side directories with the base table; a compaction
- * folds them into the (bucketed) base and [[clear]]s the log — the
- * LSM shape: streamed batches are immutable L0 runs, compaction is
- * the merge that restores the base layout (and, for the ANN index,
- * full bucket-pruned exchange-free probes over everything again;
- * until then the side fraction is scanned unpruned, bounded by
- * compaction cadence).
+ * Readers: [[IndexStore.visible]] unions the committed batches of
+ * every index relation with its base table, and
+ * [[TokenizerStore]] reads one committed version. A compaction
+ * ([[IndexStore.compact]]) snapshots [[committedBatches]] once, folds
+ * exactly those batches into the (bucketed) base and
+ * [[deleteBatches]] only them — the LSM shape: streamed batches are
+ * immutable L0 runs, compaction is the merge that restores the base
+ * layout (and, for the ANN index, full bucket-pruned exchange-free
+ * probes over everything again; until then the side fraction is
+ * scanned unpruned, bounded by compaction cadence).
  *
  * The log lives at `<warehouse>/<table>_commits` — next to the managed
  * table, deliberately NOT a catalog table: the protocol's whole point
@@ -93,22 +95,10 @@ object CommitLog {
       .map(_.getPath.getName.drop(1).toLong).sorted
   }
 
-  /** All committed side rows as one relation (explicit schema — empty
-    * batches commit a directory with no data files), or None when no
-    * batch has ever committed, so base-only readers keep their exact
-    * base-table plan (bucket pruning included). */
-  def sideRows(spark: SparkSession, table: String,
-      schema: StructType): Option[DataFrame] = {
-    sideRowsFor(spark, table, schema, committedBatches(spark, table))
-  }
-
-  /** Side rows of EXACTLY the given batch ids — the compaction-safe
-    * variant: a compaction snapshots [[committedBatches]] ONCE, folds
-    * precisely those directories, and [[deleteBatches]] only them, so a
-    * batch committed concurrently (between the snapshot and the
-    * post-swap delete) is neither folded nor deleted — it simply stays
-    * in the log for the next compaction. The old clear-the-whole-log
-    * finish silently DROPPED such a batch. */
+  /** Rows of EXACTLY the given batch ids (explicit schema — an empty
+    * batch commits a directory with no data files), or None for no
+    * ids. A reader that snapshots [[committedBatches]] once and reads
+    * those ids never sees a batch committed after its snapshot. */
   def sideRowsFor(spark: SparkSession, table: String, schema: StructType,
       batchIds: Seq[Long]): Option[DataFrame] = {
     val root = rootPath(spark, table)
@@ -122,7 +112,7 @@ object CommitLog {
     *
     * Crash contract: each delete is independent, so a crash mid-way
     * leaves some folded batches still in the log — the next
-    * [[sideRows]] union then DUPLICATES those rows against the folded
+    * [[IndexStore.visible]] union then DUPLICATES those rows against the folded
     * base until a re-run compacts again (which removes the debris: its
     * rewrite deduplicates nothing, but its delete clears the dirs).
     * Closing that last window needs an atomic multi-file metadata swap
@@ -139,10 +129,11 @@ object CommitLog {
     }
   }
 
-  /** Drop the whole log — ONLY for a fresh index build (a rebuild
-    * starts with zero streamed batches). Compactions must use the
-    * snapshot-scoped [[deleteBatches]] instead: clearing the whole log
-    * would drop a batch committed after the compaction's snapshot. */
+  /** Drop the whole log — ONLY for a fresh build
+    * ([[IndexStore.reset]]: a rebuild starts with zero streamed
+    * batches). Compactions use the snapshot-scoped [[deleteBatches]]
+    * instead: clearing the whole log would drop a batch committed after
+    * the compaction's snapshot. */
   def clear(spark: SparkSession, table: String): Unit = {
     val root = rootPath(spark, table)
     val fs = fsOf(spark, root)

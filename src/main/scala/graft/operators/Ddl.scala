@@ -186,18 +186,16 @@ object Ddl {
    * Exchange on either side (asserted in DdlSpec). Spark bucketing
    * requires the session catalog, hence `saveAsTable` rather than a bare
    * path write.
+   *
+   * Layout gate: rows are clustered onto their bucket before the write
+   * (one file per bucket) only while the estimated bytes per bucket stay
+   * at or below [[ClusterMaxBucketBytesConf]]; above it the write keeps
+   * its input parallelism. The estimate is the optimizer's
+   * `sizeInBytes`, except when that is the unknown-stats sentinel
+   * (`spark.sql.defaultSizeInBytes`, what an RDD-backed frame reports):
+   * then the frame is persisted, materialized, and the gate reads its
+   * materialized size, so unknown stats never pick a layout by accident.
    */
-  /** [[writeBucketedTable]] clusters rows onto their bucket before the
-    * write ONLY while the estimated per-bucket bytes stay at or below
-    * this conf (default 512 MB, the guide-§6 target file size): the
-    * clustered write emits exactly ONE file per bucket and caps write
-    * parallelism at numBuckets, which is the small-files win at
-    * index/metadata scale but a straggler-and-spill machine when a
-    * bucket is hundreds of GB (one task would sort and write all of
-    * it — r21 verdict item 4). Byte-suffixed values ("512m") accepted. */
-  val ClusterMaxBucketBytesConf = "spark.graft.write.bucket.clusterMaxBytes"
-  val DefaultClusterMaxBucketBytes: Long = 512L << 20
-
   def writeBucketedTable(df: DataFrame, table: String, key: String,
       numBuckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit = {
     if (mode == SaveMode.Overwrite) dropTableAndLocation(df.sparkSession, table)
@@ -215,28 +213,49 @@ object Ddl {
     //
     // THRESHOLD-GATED (r22): clustering caps write parallelism at
     // numBuckets and makes each bucket ONE file, so it only applies
-    // while the optimizer's size estimate says a bucket fits the
-    // target file size; above that the splintered-but-parallel default
-    // write is the right trade (many tasks, several files per bucket,
-    // no single-task sort of a corpus-scale bucket).
+    // while a bucket fits the target file size; above that the
+    // splintered-but-parallel default write is the right trade (many
+    // tasks, several files per bucket, no single-task sort of a
+    // corpus-scale bucket).
     val spark = df.sparkSession
     val maxBucketBytes = spark.conf.getOption(ClusterMaxBucketBytesConf)
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
       .getOrElse(DefaultClusterMaxBucketBytes)
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val clustered =
-      if (estBytes / numBuckets <= BigInt(maxBucketBytes))
-        df.repartition(numBuckets, org.apache.spark.sql.functions.col(key))
-      else df
-    clustered
-      .write
-      .mode(mode)
-      .option("compression", ParquetCompression)
-      .bucketBy(numBuckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val unknown = est >= spark.sessionState.conf.defaultSizeInBytes
+    val src = if (unknown) df.persist() else df
+    try {
+      val estBytes = if (!unknown) est else {
+        src.count()
+        // a fresh plan of the persisted frame reads the cache's real size
+        spark.sessionState.executePlan(src.queryExecution.logical)
+          .optimizedPlan.stats.sizeInBytes
+      }
+      val clustered =
+        if (estBytes / numBuckets <= BigInt(maxBucketBytes))
+          src.repartition(numBuckets, col(key))
+        else src
+      clustered
+        .write
+        .mode(mode)
+        .option("compression", ParquetCompression)
+        .bucketBy(numBuckets, key)
+        .sortBy(key)
+        .format("parquet")
+        .saveAsTable(table)
+    } finally if (unknown) src.unpersist(blocking = false)
   }
+
+  /** [[writeBucketedTable]] clusters rows onto their bucket before the
+    * write ONLY while the estimated per-bucket bytes stay at or below
+    * this conf (default 512 MB, the guide-§6 target file size): the
+    * clustered write emits exactly ONE file per bucket and caps write
+    * parallelism at numBuckets, which is the small-files win at
+    * index/metadata scale but a straggler-and-spill machine when a
+    * bucket is hundreds of GB (one task would sort and write all of
+    * it — r21 verdict item 4). Byte-suffixed values ("512m") accepted. */
+  val ClusterMaxBucketBytesConf = "spark.graft.write.bucket.clusterMaxBytes"
+  val DefaultClusterMaxBucketBytes: Long = 512L << 20
 
   /** Make an Overwrite `saveAsTable` idempotent ACROSS sessions: the
     * session catalog is per-JVM, so a warehouse directory left by a
@@ -284,7 +303,8 @@ object Ddl {
   def tombstoneTable(table: String): String = s"${table}_deleted"
 
   /** Record `ids` (one column, renamed `id`) as deleted from `table`.
-    * Append-mode: repeated deletes accumulate; [[compactTable]] clears.
+    * Append-mode: repeated deletes accumulate; [[IndexStore.compact]]
+    * clears them.
     * Caller contract (the Iceberg sequence-number rule, which a side
     * table cannot express): a deleted id must not be RE-appended until
     * a compaction has cleared the tombstones — the anti-join cannot
@@ -323,41 +343,26 @@ object Ddl {
       table: String): Unit =
     dropTableAndLocation(spark, tombstoneTable(table))
 
-  /** Physically rewrite `table` without its tombstoned rows, preserving
-    * the catalog bucketing spec (read from the table's own metadata, so
-    * a build/compact bucket-count mismatch cannot happen), then clear
-    * the tombstones. This is merge-on-read → copy-on-write: it also
-    * merges the small files accumulated by append batches (each append
-    * adds ≤ numBuckets files; compaction rewrites the table in one
-    * pass), bounding both the probe-time anti-join and the file count —
-    * Iceberg's rewrite_data_files on the session catalog. Unbucketed
-    * tables compact the same way minus the bucket spec. `tombstonesOf`
-    * names the index whose delete list applies when it differs from the
-    * compacted table (a BM25 index's `_docs` sibling shares the index's
-    * tombstones). Tombstones are NOT cleared here — a multi-table index
-    * compacts every sibling first, then drops them once. `sideRows`
-    * are streamed CommitLog batches to FOLD into the rewrite (the
-    * LSM merge: L0 runs join the base layout here and the caller
-    * clears the log after). */
+  /** Rewrite `table` to hold exactly `rows`, preserving the catalog
+    * bucketing spec (read from the table's own metadata, so a
+    * build/compact bucket-count mismatch cannot happen) — Iceberg's
+    * rewrite_data_files on the session catalog. `rows` may read `table`
+    * itself: it is written to a side table first, then swapped in.
+    * [[IndexStore.compact]] passes base ∪ side batches minus
+    * tombstones, which also merges append-accumulated small files. */
   def compactTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, idCol: String,
-      tombstonesOf: Option[String] = None,
-      sideRows: Option[DataFrame] = None): Unit = {
+      table: String, rows: DataFrame): Unit = {
     val cat = spark.sessionState.catalog
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
     val bucketSpec = cat.getTableMetadata(ident).bucketSpec
-    val base = spark.table(table)
-    val withSide = sideRows.map(base.unionByName(_)).getOrElse(base)
-    val survivors = withoutDeleted(spark, tombstonesOf.getOrElse(table),
-      withSide, idCol)
     val tmp = s"${table}_compacting"
     bucketSpec match {
       case Some(bs) =>
-        writeBucketedTable(survivors, tmp, bs.bucketColumnNames.head,
+        writeBucketedTable(rows, tmp, bs.bucketColumnNames.head,
           bs.numBuckets)
       case None =>
         dropTableAndLocation(spark, tmp)
-        survivors.write.mode(SaveMode.Overwrite)
+        rows.write.mode(SaveMode.Overwrite)
           .option("compression", ParquetCompression)
           .format("parquet").saveAsTable(tmp)
     }

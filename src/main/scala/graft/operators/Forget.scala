@@ -12,33 +12,25 @@ import org.apache.spark.sql.DataFrame
  * index until each is updated — the propagation has to be one
  * operation, or some index is forgotten.
  *
- * Semantics per modality are the indexes' own merge-on-read deletes
- * (tombstones anti-joined at probe time; each index's `compact*` makes
- * them physical later): the set bits land in each index's OWN
- * tombstone list, so per-index lifecycles (append, as-of, compact)
- * stay independent. All listed indexes must share the id space of
+ * Semantics per index are the [[IndexStore]] merge-on-read delete
+ * (tombstones anti-joined by every load; [[IndexStore.compact]] makes
+ * them physical later): the ids land in each index's OWN tombstone
+ * list, so per-index lifecycles (append, as-of, compact) stay
+ * independent. All listed indexes must share the id space of
  * `ids(idCol)` — pass one call per id space when corpora differ (the
  * t95 gate does: vector ids for ann/pq, document ids for bm25/minhash).
  *
- * Scale shape: four metadata appends of the id list (each tombstone
- * write is id-list-sized, never index-sized) plus one BM25 stats
- * refresh — the whole operation is O(|ids|) regardless of corpus size.
+ * Scale shape: one metadata append of the id list per index (each
+ * tombstone write is id-list-sized, never index-sized) — the whole
+ * operation is O(|ids|) regardless of corpus size.
  */
 object Forget {
 
-  /** The per-modality index tables a corpus maintains (None = modality
-    * not indexed). */
-  final case class CorpusIndexes(ann: Option[String] = None,
-      pq: Option[String] = None, bm25: Option[String] = None,
-      minhash: Option[String] = None)
-
+  /** Tombstone `ids(idCol)` in every index of `tables`. */
   def forgetEverywhere(ids: DataFrame, idCol: String,
-      ix: CorpusIndexes): Unit = {
-    require(ix.productIterator.exists(_ != None),
+      tables: Seq[String]): Unit = {
+    require(tables.nonEmpty,
       "forgetEverywhere with no indexes is a no-op — pass at least one")
-    ix.ann.foreach(VectorOps.deleteFromIndex(ids, idCol, _))
-    ix.pq.foreach(VectorOps.deleteFromPqIndex(ids, idCol, _))
-    ix.bm25.foreach(Retrieval.deleteFromBm25Index(ids, idCol, _))
-    ix.minhash.foreach(TextDedup.deleteFromMinhashIndex(ids, idCol, _))
+    tables.foreach(IndexStore.delete(ids, idCol, _))
   }
 }

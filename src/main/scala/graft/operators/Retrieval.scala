@@ -77,147 +77,101 @@ object Retrieval {
 
   /** Persist an INVERTED INDEX for BM25 — the keyword side of the
     * build-once/probe-many family (t40 IVF+SQ8, t45 PQ, this):
-    *   - `table`: postings (term, id, tf), BUCKETED by term
+    *   - `table`: postings (term, id, tf, dl), BUCKETED by term
     *     ([[Ddl.writeBucketedTable]]) so a probe for a handful of query
     *     terms prunes to their buckets instead of scanning the corpus;
     *   - `table_docs`: (id, dl) for EVERY document (zero-token docs
     *     included — they shape n_docs/avgdl exactly as the in-query
-    *     scorer's);
-    *   - `table_stats`: the single (n_docs, avgdl) row, so a probe
-    *     touches no corpus-sized relation for statistics.
-    * Per-term document frequencies are NOT persisted: df(t) = the
-    * term's postings count, computed at probe time from the already
-    * bucket-pruned postings — always correct, never stale relative to
-    * the postings. Rerunnable: existing tables are dropped first. */
+    *     scorer's).
+    * Both are [[IndexStore]] relations (`main`, `docs`). No statistic is
+    * persisted: (n_docs, avgdl) are recomputed at load from the visible
+    * `docs` rows, and per-term df is counted at probe time from the
+    * bucket-pruned postings — always exact, never stale. Rerunnable:
+    * existing tables are dropped first. */
   def writeBm25Index(docs: DataFrame, idCol: String, textCol: String,
       table: String, numBuckets: Int = 8): Unit = {
     val spark = docs.sparkSession
-    val toks = Staging.barrier(docs.select(col(idCol).as("id"),
-      TextDedup.tokens(col(textCol)).as("t"))
-      .select(col("id"), col("t"), size(col("t")).as("dl")))
+    val toks = tokenized(docs, idCol, textCol)
     Ddl.dropTableAndLocation(spark, s"${table}_docs")
     toks.select(col("id"), col("dl"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_docs")
-    Ddl.dropTableAndLocation(spark, s"${table}_stats")
-    toks.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(s"${table}_stats")
-    val postings = toks
-      .select(col("id"), col("dl"), explode(col("t")).as("term"))
+    Ddl.writeBucketedTable(postingsOf(toks), table, "term", numBuckets)
+    IndexStore.reset(spark, table, Bm25Relations)
+  }
+
+  private val Bm25Relations = Seq(IndexStore.Main, "docs")
+
+  /** (id, t, dl): each document's tokens, staged once for both
+    * relations. */
+  private def tokenized(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    Staging.barrier(docs.select(col(idCol).as("id"),
+      TextDedup.tokens(col(textCol)).as("t"))
+      .select(col("id"), col("t"), size(col("t")).as("dl")))
+
+  /** (term, id, tf, dl) postings of [[tokenized]] rows. */
+  private def postingsOf(toks: DataFrame): DataFrame =
+    toks.select(col("id"), col("dl"), explode(col("t")).as("term"))
       .groupBy(col("term"), col("id"))
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-    Ddl.writeBucketedTable(postings, table, "term", numBuckets)
-    // a fresh build has zero deletes and zero streamed side batches
-    Ddl.dropTombstones(spark, table)
-    CommitLog.clear(spark, table)
-  }
 
-  /** [[appendToBm25Index]] with an ATOMIC per-batch commit — the
-    * [[graft.operators.VectorOps.appendToIndexCommitted]] shape for the
-    * keyword index. A BM25 append spans TWO relations (postings and
-    * `_docs`); both land as SUBDIRECTORIES of one [[CommitLog]] staging
-    * directory, so the single rename commits them TOGETHER — closing,
-    * for this path, the multi-table atomicity window the direct append
-    * documents (the third table, `_stats`, disappears entirely: a
-    * loaded probe recomputes (n_docs, avgdl) exactly for the batches it
-    * reads, see [[loadBm25Index]]). A crash anywhere leaves either
-    * nothing or the whole batch; replaying a committed id is a no-op
-    * (returns false). Probes see a committed batch via
-    * [[loadBm25Index]]/[[loadBm25IndexAsOf]]; the base-table-only
-    * [[bm25TopKFromIndex]] keeps its exact pre-existing plan.
+  /** INCREMENTAL maintenance of a persisted [[writeBm25Index]] index,
+    * as one atomic [[IndexStore.append]] batch: only the new documents
+    * are tokenized, and their postings and `docs` rows commit under ONE
+    * rename — a crash leaves nothing or the whole batch, and a replayed
+    * id is a no-op (returns false). BM25 has no trained state, so
+    * nothing is lost: a probe of the loaded index equals a probe over a
+    * from-scratch build on the union (t54 gates it on t42's oracle).
     * Postings side runs are term-clustered (`sortWithinPartitions`) for
-    * tight row-group stats under term predicates. */
+    * tight row-group stats under term predicates. Caller contract: doc
+    * ids are new. */
   def appendToBm25IndexCommitted(docs: DataFrame, idCol: String,
-      textCol: String, table: String, batchId: Long): Boolean = {
-    val spark = docs.sparkSession
-    CommitLog.commit(spark, table, batchId) { dir =>
-      val toks = Staging.barrier(docs.select(col(idCol).as("id"),
-        TextDedup.tokens(col(textCol)).as("t"))
-        .select(col("id"), col("t"), size(col("t")).as("dl")))
-      toks.select(col("id"), col("dl"))
-        .write.option("compression", Ddl.ParquetCompression)
-        .parquet(s"$dir/docs")
-      toks.select(col("id"), col("dl"), explode(col("t")).as("term"))
-        .groupBy(col("term"), col("id"))
-        .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-        .sortWithinPartitions("term")
-        .write.option("compression", Ddl.ParquetCompression)
-        .parquet(s"$dir/postings")
+      textCol: String, table: String, batchId: Long): Boolean =
+    IndexStore.append(docs.sparkSession, table, batchId) {
+      val toks = tokenized(docs, idCol, textCol)
+      Seq(IndexStore.Main -> postingsOf(toks).sortWithinPartitions("term"),
+        "docs" -> toks.select(col("id"), col("dl")))
     }
-  }
 
-  /** A loaded BM25 index snapshot: the postings relation (base table ∪
-    * the selected committed side batches, tombstones applied) plus the
-    * corpus statistics recomputed EXACTLY for that selection — the
-    * keyword twin of [[graft.operators.VectorOps.AnnIndex]]. Unlike the
-    * vector indexes there is no frozen trained state: every statistic
-    * is an exact aggregate of the visible corpus, which is what makes
-    * the as-of read exact (a snapshot probe scores with the snapshot's
-    * own n_docs/avgdl/df, not the live ones). */
+  /** A loaded BM25 index snapshot: the visible postings (base ∪
+    * committed batches, minus deletes) plus the corpus statistics
+    * recomputed EXACTLY for the visible documents — the keyword twin of
+    * [[graft.operators.VectorOps.AnnIndex]]. There is no frozen trained
+    * state: every statistic is an exact aggregate of the visible
+    * corpus, so appends, deletes and as-of reads all score exactly as a
+    * from-scratch build on the visible corpus would. */
   final case class Bm25Index(posts: DataFrame, nDocs: Long, avgdl: Double)
 
-  /** Load the LIVE index: base build plus every committed side batch. */
+  /** Load a [[writeBm25Index]] index; `asOf` reads it as it stood after
+    * that committed batch, with that prefix's own (n_docs, avgdl) and,
+    * at probe time, df (t77 gates it). */
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession,
-      table: String): Bm25Index =
-    loadBm25Batches(spark, table, _ => true)
-
-  /** [[loadBm25Index]] AS OF a committed batch id — snapshot time
-    * travel over the append history ([[graft.operators.VectorOps
-    * .loadIndexAsOf]]'s CommitLog semantics, keyword side): the index
-    * as the reader saw it after batch N committed is the base tables
-    * unioned with side batches `id ≤ N`, with (n_docs, avgdl) — and,
-    * at probe time, per-term df — recomputed exactly for that prefix.
-    * Same history bounds as the vector indexes: compaction is
-    * `expire_snapshots` (time travel reaches back to the last fold),
-    * and tombstone deletes are unversioned (they apply to every
-    * snapshot — per-batch delete files are the documented Iceberg v2
-    * seam). */
-  def loadBm25IndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      table: String, asOfBatch: Long): Bm25Index =
-    loadBm25Batches(spark, table, _ <= asOfBatch)
-
-  private def loadBm25Batches(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: Long => Boolean): Bm25Index = {
-    val root = CommitLog.rootPath(spark, table)
-    val ids = CommitLog.committedBatches(spark, table).filter(keep)
-    def side(sub: String,
-        schema: org.apache.spark.sql.types.StructType) = {
-      val dirs = ids.map(id =>
-        new org.apache.hadoop.fs.Path(root, s"b$id/$sub").toString)
-      if (dirs.isEmpty) None
-      else Some(spark.read.schema(schema).parquet(dirs: _*))
-    }
-    val baseP = spark.table(table)
-    val posts = side("postings", baseP.schema)
-      .map(baseP.unionByName(_)).getOrElse(baseP)
-    val baseD = spark.table(s"${table}_docs")
-    val docsAll = side("docs", baseD.schema)
-      .map(baseD.unionByName(_)).getOrElse(baseD)
-    // stats recomputed for EXACTLY the visible documents — integer
-    // token counts sum exactly in double, so this equals a from-scratch
-    // build's stats row bit-for-bit (the refreshBm25Stats argument)
-    val st = Ddl.withoutDeleted(spark, table, docsAll, "id")
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
+      table: String, asOf: Option[Long] = None): Bm25Index = {
+    val Seq(posts, docs) = IndexStore.visible(spark, table, Bm25Relations, asOf)
+    // integer token counts sum exactly in double, so this equals a
+    // from-scratch build's statistics bit-for-bit
+    val st = docs.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
       .collect().head
     // an empty visible snapshot (all docs deleted, or an as-of prefix
     // before any append) has NULL avg(dl) — return an empty index, not
     // an NPE
-    Bm25Index(Ddl.withoutDeleted(spark, table, posts, "id"),
-      st.getLong(0), if (st.isNullAt(1)) 0.0 else st.getDouble(1))
+    Bm25Index(posts, st.getLong(0), if (st.isNullAt(1)) 0.0 else st.getDouble(1))
   }
 
-  /** [[bm25TopKFromIndex]] over a LOADED snapshot ([[loadBm25Index]] /
-    * [[loadBm25IndexAsOf]]): identical probe plan — bucket-pruned base
-    * postings (side runs term-clustered), broadcast per-term df counted
-    * from the VISIBLE postings, the shared [[TextAnalysis.bm25Contrib]]
-    * float tree with the snapshot's stats as literals — so a snapshot
-    * probe is bit-identical to probing a from-scratch build on the
-    * snapshot's corpus (t77 gates it against the prefix-restricted
-    * oracle). */
-  def bm25TopKFromLoaded(idx: Bm25Index, terms: Seq[String], k: Int,
+  /** BM25 top-k over a LOADED index, for ARBITRARY query terms — the
+    * production probe shape: cost is proportional to the query terms'
+    * postings (bucket-pruned equi-filter on the bucketed term column,
+    * side runs term-clustered), never the corpus. Scores are
+    * bit-identical to [[TextAnalysis.bm25TopK]] on the visible corpus:
+    * the per-term contribution is the SAME shared float tree
+    * ([[TextAnalysis.bm25Contrib]]) with the snapshot's stats as
+    * literals, df is counted from the visible postings, absent terms
+    * contribute exactly 0L in both forms, and the k cut is the same
+    * total (score desc, id) order. */
+  def bm25TopKFromIndex(idx: Bm25Index, terms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopKFromLoaded needs at least one term")
+    require(terms.nonEmpty, "bm25TopKFromIndex needs at least one term")
     val posts = idx.posts.filter(col("term").isin(terms: _*))
     val dfs = posts.groupBy("term").agg(count(lit(1)).as("df"))
     posts
@@ -235,29 +189,26 @@ object Retrieval {
     * score in ONE plan, no per-query job loop. The postings relation is
     * term-bucketed, so the semi-join term restriction, the per-term df
     * count and the per-(query, doc) contribution sum all run without
-    * re-shuffling postings; the query side (terms, dfs, stats) is
-    * broadcast. Per-posting contributions are the SAME shared float
-    * tree as the single-query probe ([[TextAnalysis.bm25Contrib]],
-    * integer micro-units), so batched scores equal N single probes
-    * exactly. Returns (query_id, id, score_micro) — docs with no hit
-    * on a query's terms are absent (they contribute exactly 0);
+    * re-shuffling postings; the query side (terms, dfs) is broadcast.
+    * Per-posting contributions are the SAME shared float tree as the
+    * single-query probe ([[TextAnalysis.bm25Contrib]], integer
+    * micro-units), so batched scores equal N single probes exactly.
+    * Returns (query_id, id, score_micro) — docs with no hit on a
+    * query's terms are absent (they contribute exactly 0);
     * ranking/cutting is the caller's (a per-query rank window — the
     * t28 shape — never a global sort). */
-  def bm25ScoreBatchedFromIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, queryTerms: DataFrame, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+  def bm25ScoreBatchedFromIndex(idx: Bm25Index, queryTerms: DataFrame,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qt = queryTerms.select(col("query_id"), col("term"))
-    val posts = Ddl.withoutDeleted(spark, table, spark.table(table), "id")
+    val posts = idx.posts
       .join(broadcast(qt.select("term").distinct()), Seq("term"), "left_semi")
     val dfs = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = spark.table(s"${table}_stats")
     posts
       .join(broadcast(dfs), Seq("term"))
       .join(broadcast(qt), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col("query_id"), col("id"),
-        TextAnalysis.bm25Contrib(col("tf"), col("df"), col("n_docs"),
-          col("avgdl"), col("dl"), k1, b).as("c"))
+        TextAnalysis.bm25Contrib(col("tf"), col("df"), lit(idx.nDocs),
+          lit(idx.avgdl), col("dl"), k1, b).as("c"))
       .groupBy(col("query_id"), col("id"))
       .agg(sum(col("c")).as("score_micro"))
   }
@@ -288,119 +239,5 @@ object Retrieval {
         round(lit(1e9) * score).cast("long").as("rrf_nano"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-  }
-
-  /** INCREMENTAL maintenance of a persisted [[writeBm25Index]] index:
-    * tokenize ONLY the new documents, append their (id, dl) rows and
-    * term-bucketed postings, and refresh the single-row stats table —
-    * no rebuild touches the existing postings. Unlike the vector
-    * indexes' frozen quantizers, BM25 has no trained state: its
-    * statistics (n_docs, avgdl, per-term df) are exact corpus
-    * aggregates, and all three stay exact under append — df is counted
-    * from the postings at probe time (never persisted, so never stale),
-    * and (n_docs, avgdl) are recomputed from the appended `_docs` table
-    * (integer token counts sum exactly in double, so the refreshed
-    * avgdl is bit-identical to a from-scratch build's). A probe after
-    * append is therefore equal to a probe over a full rebuild on the
-    * union corpus — t54 gates that value-level on the t42 oracle
-    * verbatim. Cost: one tokenize+bucket pass over the BATCH plus a
-    * `_docs`-sized (two tiny columns) stats aggregate. Caller
-    * contract: doc ids are new; `numBuckets` must equal the build's. */
-  def appendToBm25Index(docs: DataFrame, idCol: String, textCol: String,
-      table: String, numBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    val toks = Staging.barrier(docs.select(col(idCol).as("id"),
-      TextDedup.tokens(col(textCol)).as("t"))
-      .select(col("id"), col("t"), size(col("t")).as("dl")))
-    toks.select(col("id"), col("dl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .format("parquet").saveAsTable(s"${table}_docs")
-    val postings = toks
-      .select(col("id"), col("dl"), explode(col("t")).as("term"))
-      .groupBy(col("term"), col("id"))
-      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-    Ddl.writeBucketedTable(postings, table, "term", numBuckets,
-      org.apache.spark.sql.SaveMode.Append)
-    refreshBm25Stats(spark, table)
-  }
-
-  /** Recompute the single (n_docs, avgdl) stats row from the LIVE
-    * document set — `_docs` minus any tombstoned ids. Exact under both
-    * append and delete: integer token counts sum exactly in double, so
-    * the refreshed avgdl is bit-identical to a from-scratch build over
-    * the surviving corpus. */
-  private def refreshBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val live = Ddl.withoutDeleted(spark, table,
-      spark.table(s"${table}_docs"), "id")
-    val stats = live
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .collect().head
-    Ddl.dropTableAndLocation(spark, s"${table}_stats")
-    spark.createDataFrame(Seq((stats.getLong(0), stats.getDouble(1))))
-      .toDF("n_docs", "avgdl")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(s"${table}_stats")
-  }
-
-  /** DELETE documents from a persisted [[writeBm25Index]] index:
-    * tombstone the ids ([[Ddl.appendTombstones]] — probes anti-join the
-    * broadcast delete list until [[compactBm25Index]] rewrites) and
-    * refresh the stats row over the SURVIVING documents. Unlike the
-    * vector indexes, BM25's statistics are live corpus aggregates, so a
-    * delete must refresh them — and all three refresh EXACTLY:
-    * (n_docs, avgdl) recompute from the surviving `_docs` rows, df is
-    * counted from the surviving postings at probe time. A probe after
-    * delete therefore equals a probe over a from-scratch build on the
-    * survivors — t57 gates that value-level against the survivor-
-    * restricted oracle. */
-  def deleteFromBm25Index(ids: DataFrame, idCol: String,
-      table: String): Unit = {
-    val spark = ids.sparkSession
-    Ddl.appendTombstones(spark, table, ids, idCol)
-    refreshBm25Stats(spark, table)
-  }
-
-  /** COMPACT a persisted BM25 index: rewrite the term-bucketed postings
-    * and the `_docs` sibling without their tombstoned rows (both share
-    * the index's delete list), then clear the tombstones. Stats are
-    * already exact (refreshed at delete time). Bounds the probe-time
-    * anti-join and merges append-accumulated files; after compaction a
-    * previously deleted id may be re-appended. t59 gates the full
-    * build → append → delete → compact lifecycle. */
-  def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    Ddl.compactTable(spark, s"${table}_docs", "id",
-      tombstonesOf = Some(table))
-    Ddl.compactTable(spark, table, "id")
-    Ddl.dropTombstones(spark, table)
-  }
-
-  /** BM25 top-k over a LOADED [[writeBm25Index]] index, for ARBITRARY
-    * query terms — the production probe shape: cost is proportional to
-    * the query terms' postings (bucket-pruned equi-filter on the
-    * bucketed term column), never the corpus. Scores are bit-identical
-    * to [[TextAnalysis.bm25TopK]] on the same corpus/terms/k: the
-    * per-term contribution is the SAME shared float tree
-    * ([[TextAnalysis.bm25Contrib]]), absent terms contribute exactly
-    * 0L in both forms, and the k cut is the same total
-    * (score desc, id) order. */
-  def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, terms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopKFromIndex needs at least one term")
-    val posts = Ddl.withoutDeleted(spark, table, spark.table(table), "id")
-      .filter(col("term").isin(terms: _*))
-    val dfs = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = spark.table(s"${table}_stats")
-    posts
-      .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("id"), TextAnalysis.bm25Contrib(col("tf"), col("df"),
-        col("n_docs"), col("avgdl"), col("dl"), k1, b).as("c"))
-      .groupBy(col("id"))
-      .agg(sum(col("c")).as("score_micro"))
-      .orderBy(col("score_micro").desc, col("id").asc)
-      .limit(k)
   }
 }

@@ -479,10 +479,10 @@ object TextDedup {
         lit(threshold).as("threshold"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_meta")
-    // a fresh build has zero deletes and zero streamed side batches
-    Ddl.dropTombstones(spark, table)
-    CommitLog.clear(spark, table)
+    IndexStore.reset(spark, table, MinhashRelations)
   }
+
+  private val MinhashRelations = Seq(IndexStore.Main, "docs")
 
   /** (bkey, id) band entries of a staged [[shingleLshFrame]] — the
     * build's and every append's shared relation shape. */
@@ -492,16 +492,13 @@ object TextDedup {
       .select(concat_ws("#", col("band_idx"), col("bh")).as("bkey"), col("id"))
 
   /** A loaded minhash-index snapshot: band entries and hashed-shingle
-    * docs (base tables ∪ the selected committed side batches,
-    * tombstones applied) plus the build's LSH parameters — the
+    * docs (base ∪ committed batches, minus deletes — the [[IndexStore]]
+    * relations `main` and `docs`) plus the build's LSH parameters — the
     * near-dup twin of [[Retrieval.Bm25Index]] / [[VectorOps.AnnIndex]].
-    * No trained state beyond the parameters, so every snapshot is
-    * exact by construction. NOTE on as-of loads
-    * ([[loadMinhashIndexAsOf]]): tombstone deletes are UNVERSIONED —
-    * they apply to every snapshot, so an as-of read taken after a
-    * delete is the historical append set minus the CURRENT delete set,
-    * not a byte-exact replay of the index as it existed at that batch
-    * (the documented Iceberg v2 seam). */
+    * No trained state beyond the parameters, so every snapshot is exact
+    * by construction. Tombstones are unversioned: an as-of read taken
+    * after a delete is the historical append set minus the CURRENT
+    * delete set. */
   final case class MinhashIndex(entries: DataFrame, docs: DataFrame,
       n: Int, k: Int, bandSize: Int, numBands: Int, threshold: Double)
 
@@ -514,113 +511,41 @@ object TextDedup {
   final case class IngestStepResult(matches: DataFrame, committed: Boolean)
 
   /** Append a document batch to a persisted [[writeMinhashIndex]]
-    * corpus with an ATOMIC per-batch commit (the
-    * [[VectorOps.appendToIndexCommitted]] /
-    * [[Retrieval.appendToBm25IndexCommitted]] shape): band entries and
-    * hashed-shingle rows land as SUBDIRECTORIES of one [[CommitLog]]
-    * staging directory, so the single rename commits them together —
-    * a crash leaves either nothing or the whole batch, and replaying
-    * a committed batch id is a no-op (returns false). The batch is
-    * shingled/banded with the BUILD's persisted parameters; entry-side
-    * runs are bkey-clustered for tight row-group stats. */
+    * corpus as one atomic [[IndexStore.append]] batch: band entries and
+    * hashed-shingle rows commit under one rename — a crash leaves
+    * either nothing or the whole batch, and replaying a committed batch
+    * id is a no-op (returns false). The batch is shingled/banded with
+    * the BUILD's persisted parameters; entry-side runs are
+    * bkey-clustered for tight row-group stats. */
   def appendToMinhashIndexCommitted(docs: DataFrame, idCol: String,
       textCol: String, table: String, batchId: Long): Boolean = {
-    val (n, k, bandSize, numBands, _) = minhashParams(docs.sparkSession, table)
-    appendMinhashBatch(docs, idCol, textCol, table, batchId,
-      n, k, bandSize, numBands)
-  }
-
-  private def appendMinhashBatch(docs: DataFrame, idCol: String,
-      textCol: String, table: String, batchId: Long,
-      n: Int, k: Int, bandSize: Int, numBands: Int): Boolean = {
     val spark = docs.sparkSession
-    CommitLog.commit(spark, table, batchId) { dir =>
-      val staged = Staging.barrier(
-        shingleLshFrame(docs, idCol, textCol, n, k, bandSize, numBands))
-      minhashEntriesOf(staged).sortWithinPartitions("bkey")
-        .write.option("compression", Ddl.ParquetCompression)
-        .parquet(s"$dir/entries")
-      staged.select("id", "s")
-        .write.option("compression", Ddl.ParquetCompression)
-        .parquet(s"$dir/docs")
-    }
+    IndexStore.append(spark, table, batchId)(
+      minhashBatch(docs, idCol, textCol, loadMinhashIndex(spark, table)))
   }
 
-  /** DELETE documents from a persisted minhash index: tombstones only
-    * (merge-on-read, the [[VectorOps.deleteFromIndex]] contract) —
-    * probes anti-join the delete list on both the entry and doc sides;
-    * [[compactMinhashIndex]] makes it physical. */
-  def deleteFromMinhashIndex(ids: DataFrame, idCol: String,
-      table: String): Unit =
-    Ddl.appendTombstones(ids.sparkSession, table, ids, idCol)
-
-  /** COMPACT a persisted minhash index: fold every committed append
-    * batch into the bucketed base tables, drop tombstoned rows
-    * physically, clear exactly the folded batches then the tombstones
-    * (the [[VectorOps.compactIndex]] snapshot discipline — a batch
-    * committed mid-compaction survives for the next one). After
-    * compaction the probe plan is the fresh-build plan again: one
-    * bucketed scan per side, no side unions, no anti-joins. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val folded = CommitLog.committedBatches(spark, table)
-    val root = CommitLog.rootPath(spark, table)
-    def side(sub: String, base: DataFrame) = {
-      val dirs = folded.map(id => new org.apache.hadoop.fs.Path(
-        root, s"b$id/$sub").toString)
-      if (dirs.isEmpty) None
-      else Some(spark.read.schema(base.schema).parquet(dirs: _*))
-    }
-    Ddl.compactTable(spark, s"${table}_docs", "id",
-      tombstonesOf = Some(table),
-      sideRows = side("docs", spark.table(s"${table}_docs")))
-    Ddl.compactTable(spark, table, "id",
-      sideRows = side("entries", spark.table(table)))
-    CommitLog.deleteBatches(spark, table, folded)
-    Ddl.dropTombstones(spark, table)
+  /** A batch's relations, shingled and banded with `idx`'s parameters. */
+  private def minhashBatch(docs: DataFrame, idCol: String, textCol: String,
+      idx: MinhashIndex): Seq[(String, DataFrame)] = {
+    val staged = Staging.barrier(shingleLshFrame(docs, idCol, textCol,
+      idx.n, idx.k, idx.bandSize, idx.numBands))
+    Seq(IndexStore.Main -> minhashEntriesOf(staged).sortWithinPartitions("bkey"),
+      "docs" -> staged.select("id", "s"))
   }
 
-  private def minhashParams(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Int, Int, Int, Int, Double) = {
-    val meta = spark.table(s"${table}_meta").collect().head
-    (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3),
-      meta.getDouble(4))
-  }
-
-  private def loadMinhashBatches(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: Long => Boolean): MinhashIndex = {
-    val (n, k, bandSize, numBands, threshold) = minhashParams(spark, table)
-    val root = CommitLog.rootPath(spark, table)
-    val ids = CommitLog.committedBatches(spark, table).filter(keep)
-    def side(sub: String, base: DataFrame) = {
-      val dirs = ids.map(id => new org.apache.hadoop.fs.Path(
-        root, s"b$id/$sub").toString)
-      if (dirs.isEmpty) base
-      else base.unionByName(spark.read.schema(base.schema).parquet(dirs: _*))
-    }
-    MinhashIndex(
-      Ddl.withoutDeleted(spark, table, side("entries", spark.table(table)), "id"),
-      Ddl.withoutDeleted(spark, table,
-        side("docs", spark.table(s"${table}_docs")), "id"),
-      n, k, bandSize, numBands, threshold)
-  }
-
-  /** Load the LIVE index: base build plus every committed side batch,
-    * minus tombstoned documents. With an empty log and no tombstones
+  /** Load a [[writeMinhashIndex]] index: the build's parameters plus
+    * the visible entry and doc relations; `asOf` reads it as it stood
+    * after that committed batch. With an empty log and no tombstones
     * this is exactly the base bucketed tables — the fresh-build probe
     * plan is unchanged. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): MinhashIndex =
-    loadMinhashBatches(spark, table, _ => true)
-
-  /** [[loadMinhashIndex]] AS OF a committed batch id — snapshot time
-    * travel over the append history (base ∪ batches `id ≤ N`), the
-    * [[Retrieval.loadBm25IndexAsOf]] semantics on the near-dup side.
-    * Tombstone deletes are unversioned (they apply to every snapshot —
-    * the documented Iceberg v2 seam); compaction is expire_snapshots. */
-  def loadMinhashIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      table: String, asOfBatch: Long): MinhashIndex =
-    loadMinhashBatches(spark, table, _ <= asOfBatch)
+      table: String, asOf: Option[Long] = None): MinhashIndex = {
+    val meta = spark.table(s"${table}_meta").collect().head
+    val Seq(entries, docs) =
+      IndexStore.visible(spark, table, MinhashRelations, asOf)
+    MinhashIndex(entries, docs, meta.getInt(0), meta.getInt(1),
+      meta.getInt(2), meta.getInt(3), meta.getDouble(4))
+  }
 
   /** Probe a LOADED minhash snapshot with a batch of documents:
     * identical shingle → signature → band pipeline (the snapshot's
@@ -700,8 +625,8 @@ object TextDedup {
     val pairs = minhashLshPairs(fresh, idCol, textCol, idx.n, idx.k,
       idx.bandSize, idx.numBands, idx.threshold).select("id_a", "id_b")
     val survivors = keepSurvivors(fresh, idCol, connectedComponents(pairs))
-    val committed = appendMinhashBatch(survivors, idCol, textCol, table,
-      batchId, idx.n, idx.k, idx.bandSize, idx.numBands)
+    val committed = IndexStore.append(spark, table, batchId)(
+      minhashBatch(survivors, idCol, textCol, idx))
     IngestStepResult(matches, committed)
   }
 

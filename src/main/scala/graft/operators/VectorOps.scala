@@ -848,54 +848,23 @@ object VectorOps {
       assignCell(col("v"), col("nrm"), cent).as("cell"),
       sq8Code(col("v"), lo, hi).as("code"))
     Ddl.writeBucketedTable(indexed, table, "cell", numBuckets)
-    // a fresh build has zero deletes and zero streamed side batches —
-    // clear whatever a previous build's maintenance left behind
-    Ddl.dropTombstones(spark, table)
-    CommitLog.clear(spark, table)
+    IndexStore.reset(spark, table, Seq(IndexStore.Main))
   }
 
   /** Load a [[writeIndex]] index: metadata is collected (the same k·dim
     * doubles every IVF implementation broadcasts); the coded corpus
-    * stays a lazy bucketed relation. */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, table: String): AnnIndex =
-    loadIndexBatches(spark, table, _ => true)
-
-  /**
-   * [[loadIndex]] AS OF a committed batch id — snapshot time travel
-   * over the append history, the Iceberg-snapshot read re-expressed on
-   * the CommitLog stand-in: because every streamed append is an
-   * immutable, atomically-renamed `b<id>` directory, "the index as the
-   * reader saw it after batch N committed" is simply the base table
-   * unioned with the side directories `id ≤ N` — no snapshot manifest
-   * needed, the filesystem state IS the version history. Probing the
-   * asOf index equals probing an index whose appends stopped at N
-   * (same frozen quantizers — they never change after the build), and
-   * that is exactly what the t73 oracle gates.
-   *
-   * History bounds, stated honestly: COMPACTION folds side batches
-   * into the base and deletes their directories — it is
-   * `expire_snapshots`, so time travel reaches back only to the last
-   * compaction. Tombstone deletes are NOT versioned (the delete list
-   * is a flat id table) and apply to every snapshot; rewinding deletes
-   * needs per-batch delete files — the documented Iceberg v2 seam.
-   */
-  def loadIndexAsOf(spark: org.apache.spark.sql.SparkSession, table: String,
-      asOfBatch: Long): AnnIndex =
-    loadIndexBatches(spark, table, _ <= asOfBatch)
-
-  private def loadIndexBatches(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: Long => Boolean): AnnIndex = {
+    * stays a lazy relation — the bucketed base ∪ committed appends,
+    * minus deletes ([[IndexStore.visible]]). `asOf` reads the index as
+    * it stood after that committed batch: probing it equals probing an
+    * index whose appends stopped there (same frozen quantizers — they
+    * never change after the build), which t73 gates. */
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, table: String,
+      asOf: Option[Long] = None): AnnIndex = {
     val cent = spark.table(s"${table}_centroids").orderBy("label").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
     val st = spark.table(s"${table}_stats").orderBy("pos").collect()
-    // streamed side batches (atomic CommitLog appends) union with the
-    // bucketed base; absent commits keep the exact base-table plan
-    val base = spark.table(table)
-    val ids = CommitLog.committedBatches(spark, table).filter(keep)
-    val all = CommitLog.sideRowsFor(spark, table, base.schema, ids)
-      .map(base.unionByName(_)).getOrElse(base)
-    AnnIndex(cent, st.map(_.getDouble(1)), st.map(_.getDouble(2)),
-      Ddl.withoutDeleted(spark, table, all, "id"))
+    val Seq(coded) = IndexStore.visible(spark, table, Seq(IndexStore.Main), asOf)
+    AnnIndex(cent, st.map(_.getDouble(1)), st.map(_.getDouble(2)), coded)
   }
 
   /** [[ivfSq8TopK]] over a LOADED index — no training, no stats pass, no
@@ -907,108 +876,36 @@ object VectorOps {
     ivfSq8Probe(idx.coded, idx.cent, idx.lo, idx.hi, queryPred, k,
       nprobe, candidates)
 
-  /** INCREMENTAL maintenance of a persisted [[writeIndex]] index: code
-    * `df`'s vectors against the FROZEN quantizers (the stored centroids
-    * and SQ8 stats — neither is retrained) and append them to the
-    * cell-bucketed coded relation. This is the production ingest shape:
-    * a 100 TB pipeline receives new vectors continuously, and a full
-    * retrain+rewrite per batch would be quadratic in corpus size; the
-    * standard answer (FAISS `IndexIVF.add`, Jégou et al. 2011 §V) is
-    * exactly this — quantizers train once on a sample, additions only
-    * code and route. The append is CELL-LOCAL: one coding pass over the
-    * batch plus the bucketing shuffle of the BATCH only — the existing
-    * index files are untouched, no full-index rewrite (t50's plan gate).
-    * Out-of-range values clamp into [lo,hi] by [[sq8Code]]'s saturation,
-    * so frozen stats stay valid for any batch. Caller contract: ids are
-    * new (appending an existing id duplicates it, as in any
-    * append-mode sink); `numBuckets` must equal the build's.
-    * Probe-equivalence — a probe over build(A)+append(B) equals a probe
-    * over build(A∪B) with quantizers trained on A — is gated
-    * value-level by t50 against the frozen-training DuckDB oracle. */
-  def appendToIndex(df: DataFrame, idCol: String, vecCol: String,
-      table: String, numBuckets: Int = 8): Unit = {
-    val idx = loadIndex(df.sparkSession, table)
-    Ddl.writeBucketedTable(codedForIndex(df, idCol, vecCol, idx), table,
-      "cell", numBuckets, org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** The append's coding pass alone: `df` coded against the FROZEN
-    * quantizers of an already-loaded index (shared by the direct
-    * [[appendToIndex]] and the atomic [[appendToIndexCommitted]]). */
-  private def codedForIndex(df: DataFrame, idCol: String, vecCol: String,
-      idx: AnnIndex): DataFrame =
-    prepared(df, idCol, vecCol).select(col("id"), col("v"), col("nrm"),
-      assignCell(col("v"), col("nrm"), idx.cent).as("cell"),
-      sq8Code(col("v"), idx.lo, idx.hi).as("code"))
-
-  /** [[appendToIndex]] with an ATOMIC per-batch commit — the streaming
-    * maintenance shape ([[graft.streaming.StreamingIngest]]): the coded
-    * batch lands in a [[CommitLog]] side directory whose rename IS the
-    * commit point, so a crash anywhere leaves either nothing (replay
-    * rewrites) or the whole batch (replay is a no-op) — never a
-    * duplicate. Side batches are unbucketed L0 runs that
-    * [[loadIndex]] unions with the bucketed base; [[compactIndex]]
-    * folds them in and restores the pure bucketed layout. Returns false
-    * on a replayed batch id. */
+  /** INCREMENTAL maintenance of a persisted [[writeIndex]] index, as
+    * one atomic [[IndexStore.append]] batch: `df`'s vectors are coded
+    * against the FROZEN quantizers (the stored centroids and SQ8 stats
+    * — neither is retrained) and committed as a side run. This is the
+    * production ingest shape: quantizers train once on a sample,
+    * additions only code and route (FAISS `IndexIVF.add`, Jégou et al.
+    * 2011 §V); no existing index file is rewritten. Out-of-range values
+    * clamp into [lo,hi] by [[sq8Code]]'s saturation, so frozen stats
+    * stay valid for any batch. Caller contract: ids are new. Returns
+    * false on a replayed batch id. Probe-equivalence — a probe over
+    * build(A)+append(B) equals a probe over build(A∪B) with quantizers
+    * trained on A — is gated value-level by t62. */
   def appendToIndexCommitted(df: DataFrame, idCol: String, vecCol: String,
       table: String, batchId: Long): Boolean = {
     val spark = df.sparkSession
-    CommitLog.commit(spark, table, batchId) { dir =>
+    IndexStore.append(spark, table, batchId) {
       val idx = loadIndex(spark, table)
       // side runs cannot carry the catalog bucket spec; sorting each
       // task's rows by cell (free — within the batch's existing
       // partitions) keeps every run cell-clustered: tight row-group
-      // min/max stats for any STATIC cell predicate (per-cell
-      // maintenance scans) and cell-contiguous input for compaction's
-      // bucketed rewrite. The probe itself restricts cells through the
-      // same broadcast join the bucketed base uses, so probe cost over
-      // side runs is bounded by the runs' size — i.e. by compaction
-      // cadence, as documented in CommitLog
-      codedForIndex(df, idCol, vecCol, idx).sortWithinPartitions("cell")
-        .write.option("compression", Ddl.ParquetCompression).parquet(dir)
+      // min/max stats for any STATIC cell predicate and cell-contiguous
+      // input for compaction's bucketed rewrite. The probe restricts
+      // cells through the same broadcast join the bucketed base uses,
+      // so probe cost over side runs is bounded by compaction cadence
+      Seq(IndexStore.Main -> prepared(df, idCol, vecCol)
+        .select(col("id"), col("v"), col("nrm"),
+          assignCell(col("v"), col("nrm"), idx.cent).as("cell"),
+          sq8Code(col("v"), idx.lo, idx.hi).as("code"))
+        .sortWithinPartitions("cell"))
     }
-  }
-
-  /** DELETE from a persisted [[writeIndex]] index — the third leg of the
-    * index lifecycle (build → append → delete → compact). Parquet data
-    * files are immutable, so the delete is merge-on-read
-    * ([[Ddl.appendTombstones]]): the doomed ids land in a tiny side
-    * table and [[loadIndex]] anti-joins it (broadcast — partitioning of
-    * the bucketed probe side is preserved, probes stay exchange-free).
-    * Quantizers are untouched: centroids and SQ8 stats are FROZEN build
-    * artifacts, not corpus statistics a delete must refresh (FAISS
-    * `remove_ids` semantics — the reconstruction grid does not move
-    * when vectors leave). O(batch) cost, zero index-file writes;
-    * [[compactIndex]] is the pressure valve that physically removes
-    * tombstoned rows. t56 gates probe-equivalence: probe(build(X) −
-    * delete(D)) ≡ probe(X∖D | quantizers(X)) value-exactly. */
-  def deleteFromIndex(ids: DataFrame, idCol: String, table: String): Unit =
-    Ddl.appendTombstones(ids.sparkSession, table, ids, idCol)
-
-  /** COMPACT a persisted [[writeIndex]] index: rewrite the coded
-    * relation without its tombstoned rows (bucket spec preserved — read
-    * from the catalog, so it cannot drift from the build's), clear the
-    * tombstones. Merge-on-read → copy-on-write: bounds the probe-time
-    * anti-join AND merges append-accumulated small files. Quantizer
-    * tables are untouched. After compaction, re-appending a previously
-    * deleted id is legal again. t58 gates the full lifecycle.
-    *
-    * Concurrency-safe vs streaming appends: the folded batch ids are
-    * snapshotted ONCE, exactly those directories feed the rewrite, and
-    * only those are deleted afterwards ([[CommitLog.deleteBatches]]) —
-    * a batch committed mid-compaction survives in the log for the next
-    * compaction instead of being silently dropped by a whole-log clear.
-    * Crash between the table swap and the batch delete still leaves the
-    * folded batches visible twice (see deleteBatches' crash contract —
-    * rerun compaction to clear). */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val folded = CommitLog.committedBatches(spark, table)
-    Ddl.compactTable(spark, table, "id",
-      sideRows = CommitLog.sideRowsFor(spark, table,
-        spark.table(table).schema, folded))
-    CommitLog.deleteBatches(spark, table, folded)
-    Ddl.dropTombstones(spark, table)
   }
 
   // ---------- Product quantization (PQ / ADC) ----------
@@ -1052,7 +949,7 @@ object VectorOps {
     * pattern under the L2 metric: same seed order, same
     * `dotSelf(c) − 2·dot(s,c)` adjusted score with
     * `java.lang.Double.compare` tie order, same exact-decimal means —
-    * bit-identical to the distributed jobs (the t43/t45/t55 oracles
+    * bit-identical to the distributed jobs (the t43/t45/t63 oracles
     * gate it). */
   private def pqCodebooksLocal(rows: Array[(Long, Array[Double])],
       m: Int, ksub: Int, iters: Int,
@@ -1309,25 +1206,14 @@ object VectorOps {
     p.withColumn("code", pqCode(col("v"), books, sub))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(table)
-    Ddl.dropTombstones(spark, table)
-    CommitLog.clear(spark, table)
+    IndexStore.reset(spark, table, Seq(IndexStore.Main))
   }
 
   /** Load a [[writePqIndex]] index: codebooks are collected (broadcast-
-    * sized metadata); the coded corpus stays a lazy relation. */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): PqIndex =
-    loadPqIndexBatches(spark, table, _ => true)
-
-  /** [[loadIndexAsOf]] one memory tier down: the PQ index as of
-    * committed batch `asOfBatch` — same CommitLog snapshot semantics,
-    * same history bounds (compaction expires, deletes unversioned). */
-  def loadPqIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      table: String, asOfBatch: Long): PqIndex =
-    loadPqIndexBatches(spark, table, _ <= asOfBatch)
-
-  private def loadPqIndexBatches(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: Long => Boolean): PqIndex = {
+    * sized metadata); the coded corpus stays a lazy relation (base ∪
+    * committed appends, minus deletes — `asOf` as in [[loadIndex]]). */
+  def loadPqIndex(spark: org.apache.spark.sql.SparkSession, table: String,
+      asOf: Option[Long] = None): PqIndex = {
     val rows = spark.table(s"${table}_codebooks")
       .orderBy("si", "code").collect()
     val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
@@ -1335,11 +1221,8 @@ object VectorOps {
         rs.sortBy(_.getInt(1))
           .map(r => (r.getInt(1), r.getSeq[Double](2).toArray)).toSeq
     }
-    val base = spark.table(table)
-    val ids = CommitLog.committedBatches(spark, table).filter(keep)
-    val all = CommitLog.sideRowsFor(spark, table, base.schema, ids)
-      .map(base.unionByName(_)).getOrElse(base)
-    PqIndex(books, Ddl.withoutDeleted(spark, table, all, "id"))
+    val Seq(coded) = IndexStore.visible(spark, table, Seq(IndexStore.Main), asOf)
+    PqIndex(books, coded)
   }
 
   /** [[pqTopK]] over a LOADED index — no training, no coding pass:
@@ -1349,61 +1232,20 @@ object VectorOps {
       candidates: Int = 20): DataFrame =
     pqProbe(idx.coded, idx.books, queryPred, k, candidates)
 
-  /** INCREMENTAL maintenance of a persisted [[writePqIndex]] index:
-    * code `df`'s vectors against the FROZEN codebooks (no retraining —
-    * the [[appendToIndex]] contract one memory tier down) and append to
-    * the coded relation; codebook tables are untouched. One map-side
-    * coding pass over the batch, no index rewrite. t55 gates
-    * probe-equivalence against the frozen-training PQ oracle. */
-  def appendToPqIndex(df: DataFrame, idCol: String, vecCol: String,
-      table: String): Unit =
-    codedForPqIndex(df, idCol, vecCol,
-      loadPqIndex(df.sparkSession, table))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .format("parquet").saveAsTable(table)
-
-  /** The PQ append's coding pass alone (frozen codebooks). */
-  private def codedForPqIndex(df: DataFrame, idCol: String, vecCol: String,
-      idx: PqIndex): DataFrame = {
-    val sub = idx.books.head.head._2.length
-    prepared(df, idCol, vecCol)
-      .withColumn("code", pqCode(col("v"), idx.books, sub))
-  }
-
-  /** [[appendToPqIndex]] with the ATOMIC per-batch commit
-    * ([[appendToIndexCommitted]] one memory tier down): the coded batch
-    * commits by directory rename, replay is a no-op, no
-    * partial-visibility window. Returns false on a replayed id. */
+  /** INCREMENTAL maintenance of a persisted [[writePqIndex]] index, as
+    * one atomic [[IndexStore.append]] batch: `df`'s vectors are coded
+    * against the FROZEN codebooks (no retraining — the
+    * [[appendToIndexCommitted]] contract one memory tier down). Returns
+    * false on a replayed batch id. t63 gates probe-equivalence against
+    * the frozen-training PQ oracle. */
   def appendToPqIndexCommitted(df: DataFrame, idCol: String, vecCol: String,
       table: String, batchId: Long): Boolean = {
     val spark = df.sparkSession
-    CommitLog.commit(spark, table, batchId) { dir =>
-      codedForPqIndex(df, idCol, vecCol, loadPqIndex(spark, table)).write
-        .option("compression", Ddl.ParquetCompression).parquet(dir)
+    IndexStore.append(spark, table, batchId) {
+      val books = loadPqIndex(spark, table).books
+      Seq(IndexStore.Main -> prepared(df, idCol, vecCol)
+        .withColumn("code", pqCode(col("v"), books, books.head.head._2.length)))
     }
-  }
-
-  /** [[deleteFromIndex]] one memory tier down: tombstone the ids;
-    * codebooks are frozen build artifacts and never refresh. t60 gates
-    * probe-equivalence value-exactly (probe(build(X) − delete(D)) ≡
-    * probe(X∖D | codebooks(X))); RetrievalSpec additionally pins the
-    * merge-on-read mechanics. */
-  def deleteFromPqIndex(ids: DataFrame, idCol: String, table: String): Unit =
-    Ddl.appendTombstones(ids.sparkSession, table, ids, idCol)
-
-  /** [[compactIndex]] for a PQ index (the coded relation is unbucketed;
-    * the rewrite drops tombstoned rows and merges append files). t61
-    * gates the full build→append→delete→compact lifecycle. Folds a
-    * ONE-TIME snapshot of committed batches and deletes exactly those
-    * (see [[compactIndex]] — same concurrency/crash contract). */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val folded = CommitLog.committedBatches(spark, table)
-    Ddl.compactTable(spark, table, "id",
-      sideRows = CommitLog.sideRowsFor(spark, table,
-        spark.table(table).schema, folded))
-    CommitLog.deleteBatches(spark, table, folded)
-    Ddl.dropTombstones(spark, table)
   }
 
   /** Sign-LSH signature over dims [offset+1, offset+bits]: bit i = sign

@@ -220,69 +220,20 @@ object StreamingIngest extends Serializable {
       .select(col("window.start").as("window_start"), col(keyCol),
         col("sketch"))
 
-  /** One idempotent micro-batch of BM25-index maintenance
-    * ([[graft.operators.Retrieval.appendToBm25Index]] under a
-    * `<table>_appends` ledger) — a [[streamingIndexSink]] writer. The
-    * BM25 append spans THREE tables (postings, docs, stats overwrite),
-    * which a single-directory rename cannot cover — this path keeps the
-    * ledger recipe and its one-batch crash window; the honest remedy is
-    * a multi-table transactional format (the documented Iceberg seam,
-    * DESIGN.md). [[graft.operators.Retrieval.appendToBm25IndexCommitted]]
-    * is the writer WITHOUT the crash window: the batch's postings and
-    * docs land under ONE CommitLog rename, and probes read the committed
-    * batches via `loadBm25Index[AsOf]` (the base-table-only
-    * [[graft.operators.Retrieval.bm25TopKFromIndex]] does not see them
-    * until a compaction folds them). */
-  def appendDocBatch(batch: DataFrame, batchId: Long, idCol: String,
-      textCol: String, table: String, numBuckets: Int = 8): Unit =
-    ledgered(batch, batchId, s"${table}_appends")(
-      graft.operators.Retrieval.appendToBm25Index(_, idCol, textCol,
-        table, numBuckets))
-
-  /** One idempotent micro-batch of tombstones against a persisted ANN
-    * index ([[graft.operators.VectorOps.deleteFromIndex]] under a
-    * SEPARATE `<table>_deletes` ledger — append and delete streams have
-    * independent batch-id sequences). Replaying a committed batch id is
-    * a no-op; within a fresh batch the tombstone write itself is
-    * idempotent anyway (anti-join semantics are insensitive to
-    * duplicate tombstones), so the ledger's real job is keeping the
-    * delete list metadata-sized under retries. Ordering between a
-    * concurrent append stream and this delete stream is the CALLER's
-    * contract (the [[graft.operators.Ddl.appendTombstones]] rule: a
-    * deleted id must not be re-appended before a compaction). */
-  def deleteVectorBatch(batch: DataFrame, batchId: Long, idCol: String,
-      table: String): Unit =
-    ledgered(batch, batchId, s"${table}_deletes")(
-      graft.operators.VectorOps.deleteFromIndex(_, idCol, table))
-
-  /** [[deleteVectorBatch]]'s PQ twin: idempotent micro-batch tombstones
-    * against a persisted PQ index
-    * ([[graft.operators.VectorOps.deleteFromPqIndex]] under the same
-    * separate `<table>_deletes` ledger; duplicate tombstones are
-    * harmless, the ledger keeps the list metadata-sized). */
-  def deletePqBatch(batch: DataFrame, batchId: Long, idCol: String,
-      table: String): Unit =
-    ledgered(batch, batchId, s"${table}_deletes")(
-      graft.operators.VectorOps.deleteFromPqIndex(_, idCol, table))
-
-  /** [[deleteVectorBatch]]'s keyword twin: tombstone the documents AND
-    * refresh the BM25 stats row over the survivors
-    * ([[graft.operators.Retrieval.deleteFromBm25Index]]) — per-batch
-    * cost is the tombstone write plus the `_docs`-sized (two tiny
-    * columns) stats aggregate, never the postings. */
-  def deleteDocBatch(batch: DataFrame, batchId: Long, idCol: String,
-      table: String): Unit =
-    ledgered(batch, batchId, s"${table}_deletes")(
-      graft.operators.Retrieval.deleteFromBm25Index(_, idCol, table))
-
-  /** Shared batch-id ledger guard: run `append` once per (ledger,
-    * batchId); replays are no-ops. Used where the write is either
-    * idempotent anyway (tombstones) or multi-table (BM25 — see
-    * [[appendDocBatch]]'s atomicity note); the single-relation vector
-    * appends use the atomic [[graft.operators.CommitLog]] instead. */
-  private def ledgered(batch: DataFrame, batchId: Long,
-      ledger: String)(append: DataFrame => Unit): Unit = {
+  /** One idempotent micro-batch of deletes against a persisted index
+    * of any family ([[graft.operators.IndexStore.delete]] under a
+    * `<table>_deletes` ledger of batch ids) — a [[streamingIndexSink]]
+    * writer. Replaying a committed batch id is a no-op; within a fresh
+    * batch the tombstone write is idempotent anyway (anti-join
+    * semantics are insensitive to duplicate tombstones), so the
+    * ledger's job is keeping the delete list metadata-sized under
+    * retries. Ordering between a concurrent append stream and this
+    * delete stream is the CALLER's contract (a deleted id must not be
+    * re-appended before a compaction). */
+  def deleteBatch(batch: DataFrame, batchId: Long, idCol: String,
+      table: String): Unit = {
     val spark = batch.sparkSession
+    val ledger = s"${table}_deletes"
     val exists = spark.catalog.tableExists(ledger)
     // a ledger DIRECTORY invisible to the catalog is stale by
     // definition (this session's index build dropped ITS tables the
@@ -294,22 +245,14 @@ object StreamingIngest extends Serializable {
     val replay = exists &&
       !spark.table(ledger).filter(col("batch_id") === batchId).isEmpty
     if (!replay) {
-      if (!batch.isEmpty) append(batch)
+      if (!batch.isEmpty)
+        graft.operators.IndexStore.delete(batch, idCol, table)
       import spark.implicits._
       Seq(batchId).toDF("batch_id").write
         .mode(org.apache.spark.sql.SaveMode.Append)
         .format("parquet").saveAsTable(ledger)
     }
   }
-
-  /** [[deleteVectorBatch]]'s minhash twin: idempotent micro-batch
-    * tombstones against a persisted near-dup index
-    * ([[graft.operators.TextDedup.deleteFromMinhashIndex]] under the
-    * same separate `<table>_deletes` ledger). */
-  def deleteMinhashBatch(batch: DataFrame, batchId: Long, idCol: String,
-      table: String): Unit =
-    ledgered(batch, batchId, s"${table}_deletes")(
-      graft.operators.TextDedup.deleteFromMinhashIndex(_, idCol, table))
 
   /** CONTINUOUS index maintenance — the one streaming sink for every
     * index writer: each micro-batch runs `perBatch(batch, batchId)` in
@@ -321,18 +264,18 @@ object StreamingIngest extends Serializable {
     * the index. The writers:
     *   - appends, exactly-once by one atomic CommitLog rename per batch
     *     (a replayed id is refused, a crash mid-batch leaves NOTHING
-    *     visible): [[graft.operators.VectorOps.appendToIndexCommitted]]
-    *     and [[graft.operators.VectorOps.appendToPqIndexCommitted]]
-    *     (coded against the frozen quantizers/codebooks; the committed
-    *     side runs are unbucketed L0 runs the probes union in until
-    *     [[graft.operators.VectorOps.compactIndex]] /
-    *     `compactPqIndex` folds them into the bucketed base) and
-    *     [[graft.operators.Retrieval.appendToBm25IndexCommitted]];
-    *   - appends and deletes idempotent per batch id by a ledger:
-    *     [[appendDocBatch]], [[deleteVectorBatch]], [[deletePqBatch]],
-    *     [[deleteDocBatch]] (a periodic compaction — maintenance
-    *     cadence, not per batch — physically removes tombstoned rows
-    *     and keeps the probe-time anti-join metadata-sized).
+    *     visible, and a multi-relation batch — BM25 postings and docs,
+    *     MinHash entries and docs — commits all its relations at once):
+    *     [[graft.operators.VectorOps.appendToIndexCommitted]],
+    *     [[graft.operators.VectorOps.appendToPqIndexCommitted]],
+    *     [[graft.operators.Retrieval.appendToBm25IndexCommitted]] and
+    *     [[graft.operators.TextDedup.appendToMinhashIndexCommitted]];
+    *     the committed side runs are read by every load until
+    *     [[graft.operators.IndexStore.compact]] folds them into the base;
+    *   - deletes, idempotent per batch id by a ledger: [[deleteBatch]]
+    *     (a periodic compaction — maintenance cadence, not per batch —
+    *     physically removes tombstoned rows and keeps the probe-time
+    *     anti-join metadata-sized).
     * StreamingSpec proves each stream-fed index answers probes exactly
     * as its one-shot batch twin, that replayed batch ids are no-ops,
     * and that a crash before the commit leaves nothing. */
@@ -349,25 +292,21 @@ object StreamingIngest extends Serializable {
     * ([[graft.operators.Forget.forgetEverywhere]]) as a streaming sink,
     * because takedown requests arrive as a stream in production (a
     * GDPR erasure feed, a trust-and-safety queue): each micro-batch of
-    * ids is tombstoned across EVERY configured index of the corpus
-    * under one [[streamingIndexSink]] batch, each modality guarded by
-    * its own per-table batch-id ledger — so a replayed batch is a no-op
-    * per modality, and a crash between modality writes completes
-    * exactly the missing ones on replay (per-modality exactly-once; the
-    * composition is idempotent because tombstone writes are). Per-batch
-    * cost stays O(|ids|) × modalities, never index-sized. All
-    * configured indexes must share the stream's id space — run one
-    * sink per id space when corpora differ (the t95 rule). */
+    * ids is tombstoned in EVERY listed index of the corpus under one
+    * [[streamingIndexSink]] batch, each index guarded by its own
+    * [[deleteBatch]] ledger — so a replayed batch is a no-op per
+    * index, and a crash between index writes completes exactly the
+    * missing ones on replay (per-index exactly-once; the composition is
+    * idempotent because tombstone writes are). Per-batch cost stays
+    * O(|ids|) × indexes, never index-sized. All listed indexes must
+    * share the stream's id space — run one sink per id space when
+    * corpora differ (the t95 rule). */
   def streamingForget(stream: DataFrame, idCol: String,
-      ix: graft.operators.Forget.CorpusIndexes,
-      checkpoint: String): StreamingQuery = {
-    require(ix.productIterator.exists(_ != None),
+      tables: Seq[String], checkpoint: String): StreamingQuery = {
+    require(tables.nonEmpty,
       "streamingForget with no indexes is a no-op — pass at least one")
     streamingIndexSink(stream, checkpoint) { (batch, batchId) =>
-      ix.ann.foreach(deleteVectorBatch(batch, batchId, idCol, _))
-      ix.pq.foreach(deletePqBatch(batch, batchId, idCol, _))
-      ix.bm25.foreach(deleteDocBatch(batch, batchId, idCol, _))
-      ix.minhash.foreach(deleteMinhashBatch(batch, batchId, idCol, _))
+      tables.foreach(deleteBatch(batch, batchId, idCol, _))
     }
   }
 

@@ -12,6 +12,12 @@ class CommitLogSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Every committed batch's rows (None when nothing is committed). */
+  private def sideRows(table: String,
+      schema: org.apache.spark.sql.types.StructType) =
+    CommitLog.sideRowsFor(spark, table, schema,
+      CommitLog.committedBatches(spark, table))
+
   test("commit is exactly-once per id, numeric-ordered, and clears cleanly") {
     val table = "graft_commitlog_unit"
     CommitLog.clear(spark, table)
@@ -32,10 +38,10 @@ class CommitLogSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("x",
         org.apache.spark.sql.types.IntegerType)))
-    assert(CommitLog.sideRows(spark, table, schema).get.count() === 6L)
+    assert(sideRows(table, schema).get.count() === 6L)
     CommitLog.clear(spark, table)
     assert(CommitLog.committedBatches(spark, table).isEmpty)
-    assert(CommitLog.sideRows(spark, table, schema).isEmpty)
+    assert(sideRows(table, schema).isEmpty)
   }
 
   test("a crashed attempt leaves nothing visible; the retry rewrites its debris") {
@@ -59,13 +65,13 @@ class CommitLogSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("x",
         org.apache.spark.sql.types.IntegerType)))
-    assert(CommitLog.sideRows(spark, table, schema).get.count() === 5L)
+    assert(sideRows(table, schema).get.count() === 5L)
     // empty batches commit a visible (empty) batch directory
     assert(CommitLog.commit(spark, table, 1L) { dir =>
       spark.emptyDataset[Int].toDF("x").write.parquet(dir)
     })
     assert(CommitLog.committedBatches(spark, table) === Seq(0L, 1L))
-    assert(CommitLog.sideRows(spark, table, schema).get.count() === 5L)
+    assert(sideRows(table, schema).get.count() === 5L)
     CommitLog.clear(spark, table)
   }
 
@@ -94,15 +100,15 @@ class CommitLogSpec extends SparkSpec {
     // folded batches are gone; the concurrent batch is intact and is
     // exactly what the next load/compaction sees
     assert(CommitLog.committedBatches(spark, table) === Seq(3L))
-    assert(CommitLog.sideRows(spark, table, schema).get.count() === 4L)
+    assert(sideRows(table, schema).get.count() === 4L)
     // deleting an already-deleted (or never-committed) id is a no-op
     CommitLog.deleteBatches(spark, table, Seq(1L, 99L))
     assert(CommitLog.committedBatches(spark, table) === Seq(3L))
     CommitLog.clear(spark, table)
   }
 
-  test("loadIndexAsOf: snapshot sees appends <= N; full load sees all; compaction expires history") {
-    import graft.operators.{Staging, VectorOps}
+  test("loadIndex asOf: snapshot sees appends <= N; full load sees all; compaction expires history") {
+    import graft.operators.{IndexStore, Staging, VectorOps}
     val table = "graft_ann_asof_spec"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     Staging.scoped {
@@ -122,12 +128,12 @@ class CommitLogSpec extends SparkSpec {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val b1 = batch.filter(col("vec_id") % 2 === 1)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(ids(VectorOps.loadIndexAsOf(spark, table, -1L)) === baseIds)
-    assert(ids(VectorOps.loadIndexAsOf(spark, table, 0L)) === baseIds ++ b0)
-    assert(ids(VectorOps.loadIndexAsOf(spark, table, 1L)) === baseIds ++ b0 ++ b1)
+    assert(ids(VectorOps.loadIndex(spark, table, Some(-1L))) === baseIds)
+    assert(ids(VectorOps.loadIndex(spark, table, Some(0L))) === baseIds ++ b0)
+    assert(ids(VectorOps.loadIndex(spark, table, Some(1L))) === baseIds ++ b0 ++ b1)
     assert(ids(VectorOps.loadIndex(spark, table)) === baseIds ++ b0 ++ b1)
     // compaction = expire_snapshots: history collapses into the base
-    VectorOps.compactIndex(spark, table)
-    assert(ids(VectorOps.loadIndexAsOf(spark, table, -1L)) === baseIds ++ b0 ++ b1)
+    IndexStore.compact(spark, table)
+    assert(ids(VectorOps.loadIndex(spark, table, Some(-1L))) === baseIds ++ b0 ++ b1)
   }
 }

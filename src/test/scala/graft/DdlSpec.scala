@@ -179,6 +179,27 @@ class DdlSpec extends SparkSpec {
     }
   }
 
+  test("bucket-clustering gate with unknown stats: an RDD-backed frame is sized by materializing it, so a small one still gets one file per bucket") {
+    val orders = spark.read.parquet(sf() + "/orders.parquet").repartition(6)
+    val fromRdd = spark.createDataFrame(orders.rdd, orders.schema)
+    // the optimizer cannot size an RDD: it reports the sentinel
+    assert(fromRdd.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      spark.sessionState.conf.defaultSizeInBytes)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    try {
+      Ddl.writeBucketedTable(fromRdd, "graft_gate_rdd", "o_orderkey", 4)
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("graft_gate_rdd"))
+        .location
+      assert(new java.io.File(loc).listFiles()
+        .count(_.getName.startsWith("part-")) === 4,
+        "a small frame with unknown stats should get the clustered layout")
+      assert(spark.table("graft_gate_rdd").count() === orders.count())
+      // the sizing barrier is released after the write
+      assert(spark.sparkContext.getPersistentRDDs.size === persistedBefore)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_gate_rdd")
+  }
+
   test("uppercase tech-column mode (MIS naming, MIS:89–90)") {
     val li = spark.read.parquet(sf() + "/region.parquet")
     val metas = ColumnMeta.fromSchema(li.schema)

@@ -932,9 +932,9 @@ class DedupSpec extends SparkSpec {
         n = 3, k = 16, bandSize = 4, numBands = 4, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(beforeCompact === oneShot)
-    TextDedup.deleteFromMinhashIndex(docs.filter(col("doc_id") % 5 === 2),
+    graft.operators.IndexStore.delete(docs.filter(col("doc_id") % 5 === 2),
       "doc_id", table)
-    TextDedup.compactMinhashIndex(spark, table)
+    graft.operators.IndexStore.compact(spark, table)
     // compact folded the batch and cleared log + tombstones
     assert(graft.operators.CommitLog.committedBatches(spark, table).isEmpty)
     assert(!spark.catalog.tableExists(

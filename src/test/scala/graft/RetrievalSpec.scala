@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Retrieval
+import graft.operators.{IndexStore, Retrieval}
 
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
@@ -72,19 +72,19 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
       "doc_id", "text", table)
     val before = tableFiles(table)
-    Retrieval.appendToBm25Index(docs.filter(col("doc_id") % 3 === 0),
-      "doc_id", "text", table)
-    val after = tableFiles(table)
-    // no rewrite: every pre-append postings file survives byte-identical
-    // (same name, same mtime); the append only ADDED files
-    assert(before.forall { case (n, m) => after.get(n).contains(m) })
-    assert(after.size > before.size)
+    val docsBefore = tableFiles(s"${table}_docs")
+    assert(Retrieval.appendToBm25IndexCommitted(
+      docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table, 0L))
+    // no rewrite: every base file survives byte-identical (same name,
+    // same mtime); the batch lives in the commit log
+    assert(tableFiles(table) === before)
+    assert(tableFiles(s"${table}_docs") === docsBefore)
     // probe-equivalence on terms the t54 gate never sees: the appended
     // index must answer ANY query exactly as the independent in-query
     // scorer does over the full corpus
     for (terms <- Seq(Seq("data", "model"), Seq("join", "window", "the"))) {
       val probe = Retrieval
-        .bm25TopKFromIndex(spark, table, terms, k = 20)
+        .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table), terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val inQuery = operators.TextAnalysis
         .bm25TopK(docs, "doc_id", "text", terms, k = 20)
@@ -104,9 +104,10 @@ class RetrievalSpec extends SparkSpec {
     assert(Retrieval.appendToBm25IndexCommitted(b1, "doc_id", "text", table, 1L))
     // replaying a committed batch id runs nothing and changes nothing
     assert(!Retrieval.appendToBm25IndexCommitted(b1, "doc_id", "text", table, 1L))
-    // base tables untouched by committed appends: the base-only probe
-    // still answers exactly for the BUILD corpus
-    val baseProbe = Retrieval.bm25TopKFromIndex(spark, table,
+    // base tables untouched by committed appends: the base-only snapshot
+    // (as of before batch 0) still answers exactly for the BUILD corpus
+    val baseProbe = Retrieval.bm25TopKFromIndex(
+      Retrieval.loadBm25Index(spark, table, asOf = Some(-1L)),
       Seq("data", "model"), k = 15).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val baseOracle = operators.TextAnalysis.bm25TopK(
       docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text",
@@ -117,15 +118,15 @@ class RetrievalSpec extends SparkSpec {
     val prefix = docs.filter(col("doc_id") % 3 =!= 0 ||
       col("doc_id") % 2 === 0)
     for (terms <- Seq(Seq("data", "model"), Seq("join", "window", "the"))) {
-      val asOf = Retrieval.bm25TopKFromLoaded(
-        Retrieval.loadBm25IndexAsOf(spark, table, 0L), terms, k = 20)
+      val asOf = Retrieval.bm25TopKFromIndex(
+        Retrieval.loadBm25Index(spark, table, asOf = Some(0L)), terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val rebuilt = operators.TextAnalysis.bm25TopK(prefix, "doc_id",
         "text", terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(asOf === rebuilt, s"asOf(0) terms=$terms")
       // and the LIVE load sees every batch = the full-corpus scorer
-      val live = Retrieval.bm25TopKFromLoaded(
+      val live = Retrieval.bm25TopKFromIndex(
         Retrieval.loadBm25Index(spark, table), terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val full = operators.TextAnalysis.bm25TopK(docs, "doc_id", "text",
@@ -146,12 +147,11 @@ class RetrievalSpec extends SparkSpec {
       .filter(col("doc_id") < 20)
     val table = "graft_bm25_empty_spec"
     Retrieval.writeBm25Index(docs, "doc_id", "text", table)
-    operators.Ddl.appendTombstones(spark, table,
-      docs.select("doc_id"), "doc_id")
+    IndexStore.delete(docs, "doc_id", table)
     val idx = Retrieval.loadBm25Index(spark, table)
     assert(idx.nDocs === 0L)
     assert(idx.avgdl === 0.0)
-    assert(Retrieval.bm25TopKFromLoaded(idx, Seq("data", "model"), k = 5)
+    assert(Retrieval.bm25TopKFromIndex(idx, Seq("data", "model"), k = 5)
       .count() === 0L)
   }
 
@@ -163,11 +163,9 @@ class RetrievalSpec extends SparkSpec {
       "embedding", table, kClusters = 8, iters = 2, numBuckets = 8)
     val idxBefore = VectorOps.loadIndex(spark, table)
     val before = tableFiles(table)
-    VectorOps.appendToIndex(emb.filter(col("vec_id") % 3 === 0), "vec_id",
-      "embedding", table, numBuckets = 8)
-    val after = tableFiles(table)
-    assert(before.forall { case (n, m) => after.get(n).contains(m) })
-    assert(after.size > before.size)
+    assert(VectorOps.appendToIndexCommitted(emb.filter(col("vec_id") % 3 === 0),
+      "vec_id", "embedding", table, 0L))
+    assert(tableFiles(table) === before)
     val idxAfter = VectorOps.loadIndex(spark, table)
     // quantizers are FROZEN: centroids and SQ8 stats byte-identical
     assert(idxAfter.cent.map(_._1) === idxBefore.cent.map(_._1))
@@ -199,8 +197,7 @@ class RetrievalSpec extends SparkSpec {
     VectorOps.writeIndex(emb, "vec_id", "embedding", table,
       kClusters = 8, iters = 2, numBuckets = 8)
     val before = tableFiles(table)
-    VectorOps.deleteFromIndex(emb.filter(col("vec_id") % 7 === 3),
-      "vec_id", table)
+    IndexStore.delete(emb.filter(col("vec_id") % 7 === 3), "vec_id", table)
     // merge-on-read: the delete wrote NO index files — every data file
     // survives name+mtime identical
     assert(tableFiles(table) === before)
@@ -218,7 +215,7 @@ class RetrievalSpec extends SparkSpec {
     assert(probe === expect)
     // compact: physically removes the tombstoned rows, keeps the bucket
     // spec, clears the delete list
-    VectorOps.compactIndex(spark, table)
+    IndexStore.compact(spark, table)
     assert(!spark.catalog.tableExists(Ddl.tombstoneTable(table)))
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
@@ -233,8 +230,8 @@ class RetrievalSpec extends SparkSpec {
     assert(after === probe)
     // post-compaction, a previously deleted id may be re-appended and
     // becomes visible again
-    VectorOps.appendToIndex(emb.filter(col("vec_id") === 3), "vec_id",
-      "embedding", table, numBuckets = 8)
+    VectorOps.appendToIndexCommitted(emb.filter(col("vec_id") === 3),
+      "vec_id", "embedding", table, 0L)
     val back = VectorOps.loadIndex(spark, table).coded
       .filter(col("id") === 3).count()
     assert(back === 1L)
@@ -246,8 +243,7 @@ class RetrievalSpec extends SparkSpec {
     val table = "graft_pq_delete_spec"
     VectorOps.writePqIndex(emb, "vec_id", "embedding", table,
       m = 4, ksub = 8, iters = 1)
-    VectorOps.deleteFromPqIndex(emb.filter(col("vec_id") % 7 === 3),
-      "vec_id", table)
+    IndexStore.delete(emb.filter(col("vec_id") % 7 === 3), "vec_id", table)
     val idx = VectorOps.loadPqIndex(spark, table)
     val probe = VectorOps.pqTopKFromIndex(idx, col("id") < 20, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
@@ -258,7 +254,7 @@ class RetrievalSpec extends SparkSpec {
     val expect = VectorOps.pqTopKFromIndex(manual, col("id") < 20, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
     assert(probe === expect)
-    VectorOps.compactPqIndex(spark, table)
+    IndexStore.compact(spark, table)
     assert(!spark.catalog.tableExists(
       graft.operators.Ddl.tombstoneTable(table)))
     val after = VectorOps.pqTopKFromIndex(
@@ -271,15 +267,14 @@ class RetrievalSpec extends SparkSpec {
     val docs = spark.read.parquet(sf("sf0.01") + "/documents.parquet")
     val table = "graft_bm25_delete_spec"
     Retrieval.writeBm25Index(docs, "doc_id", "text", table)
-    Retrieval.deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3),
-      "doc_id", table)
+    IndexStore.delete(docs.filter(col("doc_id") % 7 === 3), "doc_id", table)
     val survivors = docs.filter(col("doc_id") % 7 =!= 3)
     // terms the t57 gate never sees: the deleted index must answer ANY
     // query exactly as a from-scratch build over the survivors would —
     // this fails if (n_docs, avgdl, df) are stale by even one document
     for (terms <- Seq(Seq("data", "model"), Seq("join", "window", "the"))) {
       val probe = Retrieval
-        .bm25TopKFromIndex(spark, table, terms, k = 20)
+        .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table), terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val inQuery = operators.TextAnalysis
         .bm25TopK(survivors, "doc_id", "text", terms, k = 20)
@@ -287,13 +282,14 @@ class RetrievalSpec extends SparkSpec {
       assert(probe === inQuery, s"terms=$terms")
     }
     // compact then re-check: physically removed, same answers
-    Retrieval.compactBm25Index(spark, table)
+    IndexStore.compact(spark, table)
     assert(!spark.catalog.tableExists(
       graft.operators.Ddl.tombstoneTable(table)))
     assert(spark.table(s"${table}_docs").filter(col("id") % 7 === 3)
       .count() === 0L)
     val probe2 = Retrieval
-      .bm25TopKFromIndex(spark, table, Seq("data", "model"), k = 20)
+      .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
+        Seq("data", "model"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val inQuery2 = operators.TextAnalysis
       .bm25TopK(survivors, "doc_id", "text", Seq("data", "model"), k = 20)
@@ -312,7 +308,8 @@ class RetrievalSpec extends SparkSpec {
     val qt = querySets
       .flatMap { case (q, ts) => ts.map(q -> _) }
       .toDF("query_id", "term")
-    val batched = Retrieval.bm25ScoreBatchedFromIndex(spark, table, qt)
+    val batched = Retrieval.bm25ScoreBatchedFromIndex(
+        Retrieval.loadBm25Index(spark, table), qt)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // per-query singles through the INDEPENDENT in-query scorer: every
     // batched (query, doc, score) must be what that query scores alone
@@ -341,7 +338,8 @@ class RetrievalSpec extends SparkSpec {
     // that any probe works without a corpus scan
     for (terms <- Seq(Seq("data", "model"), Seq("join", "window", "the"))) {
       val probe = Retrieval
-        .bm25TopKFromIndex(spark, "graft_bm25_spec", terms, k = 20)
+        .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, "graft_bm25_spec"),
+          terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val inQuery = operators.TextAnalysis
         .bm25TopK(docs, "doc_id", "text", terms, k = 20)

@@ -323,16 +323,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming index append equals one-shot batch append; replayed batches are no-ops") {
-    import graft.operators.{Staging, VectorOps}
+    import graft.operators.{IndexStore, Staging, VectorOps}
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val buildSide = emb.filter(col("vec_id") % 3 =!= 0)
     val appendSide = emb.filter(col("vec_id") % 3 === 0)
-    // reference: one-shot batch append (the t50 path)
+    // reference: the whole append as one batch (the t62 path)
     val batchTable = "graft_stream_ann_ref"
     val probeRef = Staging.scoped {
       VectorOps.writeIndex(buildSide, "vec_id", "embedding", batchTable,
         kClusters = 8, iters = 2, numBuckets = 8)
-      VectorOps.appendToIndex(appendSide, "vec_id", "embedding", batchTable)
+      VectorOps.appendToIndexCommitted(appendSide, "vec_id", "embedding",
+        batchTable, batchId = 0L)
       VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, batchTable),
         col("id") < 10, k = 5, nprobe = 2, candidates = 20).collect().toSet
     }
@@ -381,7 +382,7 @@ class StreamingSpec extends SparkSpec {
     assert(CommitLog.committedBatches(spark, streamTable) === Seq(0L, 1L, 99L))
     // COMPACTION folds the committed side runs into the bucketed base
     // (the LSM merge) and clears the log; probes are unchanged
-    Staging.scoped { VectorOps.compactIndex(spark, streamTable) }
+    Staging.scoped { IndexStore.compact(spark, streamTable) }
     assert(CommitLog.committedBatches(spark, streamTable).isEmpty)
     // every formerly-side row now lives in the bucketed base itself
     assert(spark.table(streamTable).count() === before)
@@ -431,7 +432,8 @@ class StreamingSpec extends SparkSpec {
     val probeRef = Staging.scoped {
       VectorOps.writeIndex(buildSide, "vec_id", "embedding", refTable,
         kClusters = 8, iters = 2, numBuckets = 8)
-      VectorOps.appendToIndex(appendSide, "vec_id", "embedding", refTable)
+      VectorOps.appendToIndexCommitted(appendSide, "vec_id", "embedding",
+        refTable, batchId = 0L)
       VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, refTable),
         col("id") < 10, k = 5, nprobe = 2, candidates = 20).collect().toSet
     }
@@ -445,16 +447,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming PQ append/delete equal their one-shot batch twins; replays are no-ops") {
-    import graft.operators.{CommitLog, Ddl, Staging, VectorOps}
+    import graft.operators.{CommitLog, Ddl, IndexStore, Staging, VectorOps}
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val buildSide = emb.filter(col("vec_id") % 3 =!= 0)
     val appendSide = emb.filter(col("vec_id") % 3 === 0)
-    // reference: one-shot batch append (the t55 path)
+    // reference: the whole append as one batch (the t63 path)
     val refTable = "graft_stream_pq_ref"
     val probeRef = Staging.scoped {
       VectorOps.writePqIndex(buildSide, "vec_id", "embedding", refTable,
         m = 4, ksub = 8, iters = 2)
-      VectorOps.appendToPqIndex(appendSide, "vec_id", "embedding", refTable)
+      VectorOps.appendToPqIndexCommitted(appendSide, "vec_id", "embedding",
+        refTable, batchId = 0L)
       VectorOps.pqTopKFromIndex(VectorOps.loadPqIndex(spark, refTable),
         col("id") < 10, k = 5, candidates = 20).collect().toSet
     }
@@ -509,11 +512,11 @@ class StreamingSpec extends SparkSpec {
     val delStream = spark.readStream
       .schema(doomed.select("vec_id").schema).parquet(delSrc)
     val dq = StreamingIngest.streamingIndexSink(delStream,
-      tmp("pq-del-ckpt"))(StreamingIngest.deletePqBatch(_, _, "vec_id",
+      tmp("pq-del-ckpt"))(StreamingIngest.deleteBatch(_, _, "vec_id",
       streamTable))
     dq.processAllAvailable(); dq.stop()
     val refDel = Staging.scoped {
-      VectorOps.deleteFromPqIndex(doomed, "vec_id", refTable)
+      IndexStore.delete(doomed, "vec_id", refTable)
       VectorOps.pqTopKFromIndex(VectorOps.loadPqIndex(spark, refTable),
         col("id") < 10, k = 5, candidates = 20).collect().toSet
     }
@@ -521,18 +524,18 @@ class StreamingSpec extends SparkSpec {
     // replayed delete batch leaves the tombstone list untouched
     val tsTable = Ddl.tombstoneTable(streamTable)
     val tsBefore = spark.table(tsTable).count()
-    StreamingIngest.deletePqBatch(doomed, batchId = 0L, "vec_id",
+    StreamingIngest.deleteBatch(doomed, batchId = 0L, "vec_id",
       streamTable)
     assert(spark.table(tsTable).count() === tsBefore)
     // COMPACTION folds side runs, drops tombstoned rows, clears both
-    Staging.scoped { VectorOps.compactPqIndex(spark, streamTable) }
+    Staging.scoped { IndexStore.compact(spark, streamTable) }
     assert(CommitLog.committedBatches(spark, streamTable).isEmpty)
     assert(!spark.catalog.tableExists(tsTable))
     assert(probePq() === refDel)
   }
 
   test("streaming index deletes equal a one-shot delete; replayed delete batches are no-ops") {
-    import graft.operators.{Ddl, Retrieval, Staging, VectorOps}
+    import graft.operators.{Ddl, IndexStore, Retrieval, Staging, VectorOps}
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val doomed = emb.filter(col("vec_id") % 7 === 3)
     // reference: one-shot batch delete (the t56 path)
@@ -540,7 +543,7 @@ class StreamingSpec extends SparkSpec {
     val probeRef = Staging.scoped {
       VectorOps.writeIndex(emb, "vec_id", "embedding", refTable,
         kClusters = 8, iters = 2, numBuckets = 8)
-      VectorOps.deleteFromIndex(doomed, "vec_id", refTable)
+      IndexStore.delete(doomed, "vec_id", refTable)
       VectorOps.ivfSq8TopKFromIndex(VectorOps.loadIndex(spark, refTable),
         col("id") < 20, k = 5, nprobe = 2, candidates = 20).collect().toSet
     }
@@ -566,7 +569,7 @@ class StreamingSpec extends SparkSpec {
       .schema(doomed.select("vec_id").schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     val q = StreamingIngest.streamingIndexSink(stream,
-      tmp("idx-del-ckpt"))(StreamingIngest.deleteVectorBatch(_, _,
+      tmp("idx-del-ckpt"))(StreamingIngest.deleteBatch(_, _,
       "vec_id", streamTable))
     q.processAllAvailable(); q.stop()
     val probeStream = Staging.scoped {
@@ -579,11 +582,11 @@ class StreamingSpec extends SparkSpec {
     // untouched (the ledger's job — unbounded retries must not grow it)
     val tsTable = Ddl.tombstoneTable(streamTable)
     val before = spark.table(tsTable).count()
-    StreamingIngest.deleteVectorBatch(doomed, batchId = 0L, "vec_id",
+    StreamingIngest.deleteBatch(doomed, batchId = 0L, "vec_id",
       streamTable)
     assert(spark.table(tsTable).count() === before)
     // BM25 twin: stream-fed deletes answer probes exactly like the
-    // one-shot t57 path (stats refresh included per batch)
+    // one-shot t57 path (the loaded stats count only the survivors)
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val bmTable = "graft_stream_bm25del"
     Staging.scoped {
@@ -600,11 +603,12 @@ class StreamingSpec extends SparkSpec {
     val bmStream = spark.readStream.schema(bmDoomed.schema)
       .parquet(bmSrc)
     val bq = StreamingIngest.streamingIndexSink(bmStream,
-      tmp("bm25-del-ckpt"))(StreamingIngest.deleteDocBatch(_, _, "doc_id",
+      tmp("bm25-del-ckpt"))(StreamingIngest.deleteBatch(_, _, "doc_id",
       bmTable))
     bq.processAllAvailable(); bq.stop()
     val probe = Retrieval
-      .bm25TopKFromIndex(spark, bmTable, Seq("data", "model"), k = 20)
+      .bm25TopKFromIndex(Retrieval.loadBm25Index(spark, bmTable),
+        Seq("data", "model"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val inQuery = Staging.scoped {
       operators.TextAnalysis
@@ -638,10 +642,8 @@ class StreamingSpec extends SparkSpec {
     }
     // reference: the t95 one-shot path
     val (rAnn, rPq, rBm, rMh) = buildAll("_ref")
-    Forget.forgetEverywhere(doomedVec, "vec_id",
-      Forget.CorpusIndexes(ann = Some(rAnn), pq = Some(rPq)))
-    Forget.forgetEverywhere(doomedDoc, "doc_id",
-      Forget.CorpusIndexes(bm25 = Some(rBm), minhash = Some(rMh)))
+    Forget.forgetEverywhere(doomedVec, "vec_id", Seq(rAnn, rPq))
+    Forget.forgetEverywhere(doomedDoc, "doc_id", Seq(rBm, rMh))
     // stream: one sink per id space, ids split across two waves
     val (sAnn, sPq, sBm, sMh) = buildAll("_str")
     def waves(ids: org.apache.spark.sql.DataFrame, keyCol: String,
@@ -664,14 +666,14 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(doomedVec.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(waves(doomedVec, "vec_id", "sforget-vec-src")),
-      "vec_id", Forget.CorpusIndexes(ann = Some(sAnn), pq = Some(sPq)),
+      "vec_id", Seq(sAnn, sPq),
       tmp("sforget-vec-ckpt"))
     q1.processAllAvailable(); q1.stop()
     val q2 = StreamingIngest.streamingForget(
       spark.readStream.schema(doomedDoc.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(waves(doomedDoc, "doc_id", "sforget-doc-src")),
-      "doc_id", Forget.CorpusIndexes(bm25 = Some(sBm), minhash = Some(sMh)),
+      "doc_id", Seq(sBm, sMh),
       tmp("sforget-doc-ckpt"))
     q2.processAllAvailable(); q2.stop()
     // every modality's tombstone set equals the one-shot reference's
@@ -695,61 +697,18 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.toString).toSet
     }
     assert(probeStr === probeRef && probeStr.nonEmpty)
-    val bmRef = Retrieval.bm25TopKFromIndex(spark, rBm,
+    val bmRef = Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, rBm),
       Seq("data", "model"), k = 20).collect().map(_.toString).toSeq
-    val bmStr = Retrieval.bm25TopKFromIndex(spark, sBm,
+    val bmStr = Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, sBm),
       Seq("data", "model"), k = 20).collect().map(_.toString).toSeq
     assert(bmStr === bmRef && bmStr.nonEmpty)
     // replay: re-running wave 0's batch id across the composed sink
     // leaves every tombstone list untouched (per-modality ledgers)
     val before = Seq(sAnn, sPq).map(t => spark.table(Ddl.tombstoneTable(t)).count())
-    StreamingIngest.deleteVectorBatch(doomedVec, batchId = 0L, "vec_id", sAnn)
-    StreamingIngest.deletePqBatch(doomedVec, batchId = 0L, "vec_id", sPq)
+    StreamingIngest.deleteBatch(doomedVec, batchId = 0L, "vec_id", sAnn)
+    StreamingIngest.deleteBatch(doomedVec, batchId = 0L, "vec_id", sPq)
     val after = Seq(sAnn, sPq).map(t => spark.table(Ddl.tombstoneTable(t)).count())
     assert(after === before)
-  }
-
-  test("streaming BM25 append equals one-shot batch append on arbitrary probes") {
-    import graft.operators.{Retrieval, Staging}
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val buildSide = docs.filter(col("doc_id") % 3 =!= 0)
-    val appendSide = docs.filter(col("doc_id") % 3 === 0)
-    val terms = Seq("data", "model", "the")
-    val refTable = "graft_stream_bm25_ref"
-    val probeRef = Staging.scoped {
-      Retrieval.writeBm25Index(buildSide, "doc_id", "text", refTable)
-      Retrieval.appendToBm25Index(appendSide, "doc_id", "text", refTable)
-      Retrieval.bm25TopKFromIndex(spark, refTable, terms, k = 20)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    val streamTable = "graft_stream_bm25"
-    Staging.scoped {
-      Retrieval.writeBm25Index(buildSide, "doc_id", "text", streamTable)
-    }
-    val src = tmp("bm25-append-src")
-    Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 === 1)
-      .zipWithIndex.foreach { case (pred, i) =>
-        val staging = tmp(s"bm25-append-wave$i")
-        appendSide.filter(pred).coalesce(1)
-          .write.mode("overwrite").parquet(staging)
-        val part = new java.io.File(staging).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(s"$src/wave$i.parquet")
-        Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + i * 60000L)
-      }
-    val stream = spark.readStream.schema(appendSide.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIngest.streamingIndexSink(stream,
-      tmp("bm25-append-ckpt"))(StreamingIngest.appendDocBatch(_, _,
-      "doc_id", "text", streamTable))
-    q.processAllAvailable(); q.stop()
-    val probeStream = Staging.scoped {
-      Retrieval.bm25TopKFromIndex(spark, streamTable, terms, k = 20)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    assert(probeStream === probeRef)
-    assert(probeStream.nonEmpty)
   }
 
   test("streaming committed BM25 append: atomic batches, loaded probe equals the full-corpus scorer") {
@@ -783,7 +742,8 @@ class StreamingSpec extends SparkSpec {
     // one atomic commit per micro-batch; the base tables are untouched
     assert(CommitLog.committedBatches(spark, table).size === 2)
     val baseOnly = Staging.scoped {
-      Retrieval.bm25TopKFromIndex(spark, table, terms, k = 20)
+      Retrieval.bm25TopKFromIndex(
+          Retrieval.loadBm25Index(spark, table, asOf = Some(-1L)), terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val buildOracle = Staging.scoped {
@@ -794,7 +754,7 @@ class StreamingSpec extends SparkSpec {
     assert(baseOnly === buildOracle)
     // the LOADED probe sees both committed batches = full-corpus scorer
     val loaded = Staging.scoped {
-      Retrieval.bm25TopKFromLoaded(Retrieval.loadBm25Index(spark, table),
+      Retrieval.bm25TopKFromIndex(Retrieval.loadBm25Index(spark, table),
           terms, k = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }

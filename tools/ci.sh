@@ -126,6 +126,36 @@ if ! awk '
   echo "FATAL: event-time timeout handling outside the CEP driver (write a Cep machine instead)"
   exit 1
 fi
+echo "=== index lifecycle guard (mandatory): every family's compaction folds a committed batch with a delete"
+# the four persisted-index families share one store (IndexStore); the
+# table that runs build -> committed append -> delete -> compact -> load
+# for every family must demonstrably RUN and pass
+ILOG=$(sbt -batch 'testOnly graft.IndexStoreSpec -- -z "lifecycle table"' 2>&1)
+echo "$ILOG" | grep -q "lifecycle table: in every index family, ids deleted from a committed batch are gone after compaction, the log and tombstones are empty, and the probe equals a fresh build on the survivors" \
+  || { echo "FATAL: index lifecycle table did not run (renamed or filtered out)"; exit 1; }
+echo "$ILOG" | grep -q "All tests passed" \
+  || { echo "FATAL: index lifecycle table failed"; echo "$ILOG" | tail -20; exit 1; }
+echo "=== one persisted-index store: side batches and tombstones are read and written only by IndexStore"
+# a second copy of "base ∪ side batches minus tombstones" must not come
+# back; TokenizerStore reads whole model versions from the log and keeps
+# its own reader
+if grep -rnE 'CommitLog\.sideRowsFor|committedBatches|Ddl\.appendTombstones' src/main \
+    | grep -vE '^src/main/scala/graft/operators/(IndexStore|TokenizerStore|CommitLog)\.scala:'; then
+  echo "FATAL: commit-log or tombstone access outside IndexStore (use IndexStore.visible/append/delete/compact)"
+  exit 1
+fi
+echo "=== no non-atomic index append: every public appendTo*Index* commits through IndexStore.append"
+for f in $(grep -rlE '^  def appendTo[A-Za-z0-9_]*Index' src/main); do
+  awk '
+    function check() { if (fn != "" && !ok) { print FILENAME ":" at ": " fn; bad = 1 } }
+    /^  ((private|final|override) )*def / {
+      check(); fn = ""
+      if ($0 ~ /^  def appendTo[A-Za-z0-9_]*Index/) { fn = $0; at = FNR; ok = 0 }
+    }
+    fn != "" && /IndexStore\.append\(/ { ok = 1 }
+    END { check(); exit bad }' "$f" \
+    || { echo "FATAL: an index append that does not commit through IndexStore.append"; exit 1; }
+done
 OUT=$(mktemp -d)
 echo "=== Verify sf0.01 -> $OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" 2>&1 \
