@@ -6628,7 +6628,7 @@ object Queries {
 
   private val FunnelStages = Seq("view", "click", "purchase")
 
-  /** CEP ordered-funnel matching ([[Funnel.funnel]]): per-user greedy
+  /** CEP ordered-funnel matching ([[Pattern.times]]): per-user greedy
     * stage progression view → click → purchase in the total
     * (event-time, event_id) order. One user-keyed exchange, a sort and
     * a per-user machine fold — no per-stage self-join, no window; the oracle
@@ -6636,8 +6636,8 @@ object Queries {
     * picks each strictly after the previous. */
   val w6_funnel: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnel(t(spark, dir, "events"), "user_id", "event_type",
-          "ts", "event_id", FunnelStages)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.times(FunnelStages.map(_ -> 1)))
         .orderBy("user_id"),
     oracle = Some {
       def pick(k: Int, tp: String, prev: String): String =
@@ -6670,7 +6670,7 @@ object Queries {
   private val FunnelWithinMicros = 7200000000L // CEP within(2 hours)
 
   /** WINDOWED funnel — Flink CEP's signature `within(T)` constraint
-    * ([[Funnel.funnelWithin]]): a match counts only if it completes
+    * ([[Pattern.within]]): a match counts only if it completes
     * within 2 h of its own stage-1 event. Greedy-earliest is WRONG
     * here (an early view's window can expire while a later restart
     * converts — FunnelSpec pins the trap), so the operator runs the
@@ -6682,9 +6682,8 @@ object Queries {
     * gates (stage_reached, win_start_us) hash-exactly. */
   val w8_funnel_within: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWithin(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          FunnelWithinMicros)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.within(FunnelStages, FunnelWithinMicros))
         .orderBy("user_id"),
     oracle = Some {
       def hop(k: Int, tp: String, prev: String): String =
@@ -6717,7 +6716,7 @@ object Queries {
     bench = true)
 
   /** COMBINED windowed + guarded funnel
-    * ([[Funnel.funnelWithinGuarded]]): convert within 2 h of your own
+    * ([[Pattern.within]]): convert within 2 h of your own
     * first view AND with no `error` between consecutive matched
     * stages — the full production CEP constraint product. The DP
     * layers guard kills onto the max-start vector (dominance survives
@@ -6727,9 +6726,9 @@ object Queries {
     * pruned by the same max-start dominance. */
   val w14_funnel_within_guarded: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWithinGuarded(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          FunnelWithinMicros, Seq(Some("error"), Some("error")))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.within(FunnelStages, FunnelWithinMicros,
+            Seq(Some("error"), Some("error"))))
         .orderBy("user_id"),
     oracle = Some {
       def hop(j: Int, tp: String, prev: String): String =
@@ -6765,7 +6764,7 @@ object Queries {
     })
 
   /** QUANTIFIED funnel — Flink CEP's `times(n)`
-    * ([[Funnel.funnelTimes]]): two views, then two clicks, then a
+    * ([[Pattern.times]]): two views, then two clicks, then a
     * purchase. The operator reduces the quantifiers to stage-list
     * EXPANSION (n ordered occurrences ≡ n consecutive same-type
     * stages) and reuses the plain fold; the oracle chains the
@@ -6774,9 +6773,9 @@ object Queries {
     * time per completed stage. */
   val w12_funnel_times: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelTimes(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.times(Seq(("view", 2), ("click", 2), ("purchase", 1))))
         .orderBy("user_id"),
     oracle = Some {
       def pick(k: Int, tp: String, prev: String): String =
@@ -6809,7 +6808,7 @@ object Queries {
 
   /** LOOPING-quantifier funnel — Flink CEP's `oneOrMore` /
     * `timesOrMore(n)` with GREEDY repetition
-    * ([[Funnel.funnelLoop]]): two-or-more views, then two-or-more
+    * ([[Pattern.loop]]): two-or-more views, then two-or-more
     * clicks, then one-or-more purchases. The spine is w12's expanded
     * chained-pick chain (existence is count-only), and each stage's
     * loop absorbs every own-type event from its first pick up to the
@@ -6820,9 +6819,9 @@ object Queries {
     * COUNT/MAX per stage. */
   val w16_funnel_loop: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.loop(Seq(("view", 2), ("click", 2), ("purchase", 1))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -6875,7 +6874,7 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** BOUNDED quantifier times(m, n) ([[Funnel.funnelTimesRange]]) —
+  /** BOUNDED quantifier times(m, n) ([[Pattern.timesRange]]) —
     * the last Flink quantifier shape after times(n) (w12) and
     * oneOrMore/timesOrMore (w16): view×(2..3) → click×(1..2) →
     * purchase×(1..1). The oracle is w16's pick-chain + loop-interval
@@ -6886,9 +6885,9 @@ object Queries {
     * uncapped w16 values on the same mandatory counts). */
   val w18_funnel_times_range: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelTimesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2, 3), ("click", 1, 2), ("purchase", 1, 1)))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.timesRange(Seq(("view", 2, 3), ("click", 1, 2), ("purchase", 1, 1))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -6942,8 +6941,9 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** RELUCTANT consume mode ([[Funnel.funnelLoop]] with
-    * [[Funnel.Reluctant]]) on w16's loop pattern — Flink's DEFAULT
+  /** RELUCTANT consume mode on w16's loop pattern — the bounded
+    * quantifier at its floor ([[Pattern.timesRange]] with maxReps =
+    * minReps), Flink's DEFAULT
     * loop mode, where each stage consumes EXACTLY its mandatory
     * occurrences (`greedy()` being the opt-in w16 measures): same
     * spine and stage_reached as w16 (the adjacent-types contract
@@ -6955,10 +6955,9 @@ object Queries {
     * on a crafted corpus. */
   val w49_funnel_loop_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 2), ("click", 2), ("purchase", 1)),
-          Funnel.Reluctant)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.timesRange(
+            Seq(("view", 2, 2), ("click", 2, 2), ("purchase", 1, 1))))
         .orderBy("user_id"),
     oracle = Some {
       def pick(k: Int, tp: String, prev: String): String =
@@ -7025,7 +7024,7 @@ object Queries {
     Funnel.IterStage("purchase", Some(Funnel.RelGt(6, 5))))
 
   /** ITERATIVE conditions, first-anchored
-    * ([[Funnel.funnelIterative]] with [[Funnel.AnchorFirst]]) —
+    * ([[Pattern.iterative]] with [[Funnel.AnchorFirst]]) —
     * Flink CEP's `IterativeCondition`, the canonical relative
     * threshold: view → click whose value exceeds 1.1× the FIRST
     * view's → purchase exceeding 1.2× that first view. Greedy is
@@ -7037,9 +7036,9 @@ object Queries {
     * takes min time per stage. */
   val w50_funnel_iterative_first: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelIterative(eventsWithCents(spark, dir), "user_id",
-          "event_type", "ts", "event_id", "v_cents", iterStagesFirst,
-          Funnel.AnchorFirst)
+      Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
+          "event_id", Pattern.iterative("v_cents", iterStagesFirst,
+            Funnel.AnchorFirst))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7080,12 +7079,12 @@ object Queries {
     * carry the hop event's OWN value forward. */
   val w51_funnel_iterative_prev: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelIterative(eventsWithCents(spark, dir), "user_id",
-          "event_type", "ts", "event_id", "v_cents",
-          Seq(Funnel.IterStage("view"),
+      Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
+          "event_id", Pattern.iterative("v_cents",
+            Seq(Funnel.IterStage("view"),
             Funnel.IterStage("click", Some(Funnel.RelGt(11, 10))),
             Funnel.IterStage("purchase", Some(Funnel.RelGt(11, 10)))),
-          Funnel.AnchorPrev)
+            Funnel.AnchorPrev))
         .orderBy("user_id"),
     oracle = Some {
       s"""WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
@@ -7115,7 +7114,7 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** Per-stage SIMPLE conditions ([[Funnel.funnelWhere]]) — Flink
+  /** Per-stage SIMPLE conditions ([[Pattern.where]]) — Flink
     * CEP's `where(SimpleCondition)`: view worth ≥ $5 → click worth
     * ≥ $8 → any purchase, each stage an arbitrary event-local
     * predicate (type AND value here) rather than bare type equality.
@@ -7124,14 +7123,13 @@ object Queries {
     * hop's WHERE spelling the same predicate. */
   val w53_funnel_where: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWhere(eventsWithCents(spark, dir), "user_id", "ts",
-          "event_id", Seq("event_type", "v_cents"),
-          Seq(
+      Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
+          "event_id", Pattern.where(Seq("event_type", "v_cents"), Seq(
             e => e.getField("event_type") === "view" &&
               e.getField("v_cents") >= 500L,
             e => e.getField("event_type") === "click" &&
               e.getField("v_cents") >= 800L,
-            e => e.getField("event_type") === "purchase"))
+            e => e.getField("event_type") === "purchase")))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7164,7 +7162,7 @@ object Queries {
     })
 
   /** Flink's `where(...).or(...)` — DISJUNCTIVE stage conditions,
-    * pinned explicitly: [[Funnel.funnelWhere]]'s stages are arbitrary
+    * pinned explicitly: [[Pattern.where]]'s stages are arbitrary
     * `Column => Column` predicates, so the OR combinator is plain
     * predicate composition (`p1(e) || p2(e)`), not a new machine.
     * Stage 1 accepts a HIGH-VALUE view OR any error event; stage 2 a
@@ -7172,14 +7170,13 @@ object Queries {
     * SQL over the same greedy-pick chain. */
   val w66_funnel_where_or: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelWhere(eventsWithCents(spark, dir), "user_id", "ts",
-          "event_id", Seq("event_type", "v_cents"),
-          Seq(
+      Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
+          "event_id", Pattern.where(Seq("event_type", "v_cents"), Seq(
             e => (e.getField("event_type") === "view" &&
               e.getField("v_cents") >= 500L) ||
               e.getField("event_type") === "error",
             e => e.getField("event_type") === "click" ||
-              e.getField("event_type") === "purchase"))
+              e.getField("event_type") === "purchase")))
         .orderBy("user_id"),
     oracle = Some {
       def pick(j: Int, cond: String, prev: Option[String]): String = {
@@ -7252,7 +7249,7 @@ object Queries {
        |u AS (SELECT DISTINCT user_id FROM e),""".stripMargin
 
   /** STRICT-contiguity funnel — Flink CEP's `next`
-    * ([[Funnel.funnelPattern]] with strict hops): view → click →
+    * ([[Pattern.pattern]] with strict hops): view → click →
     * purchase where each later stage must be the IMMEDIATE successor
     * of the previous stage's event in the user's total order. Greedy
     * is wrong (the first view's successor slot can be dead while a
@@ -7262,11 +7259,10 @@ object Queries {
     * nothing-strictly-between probe. */
   val w20_funnel_strict: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.pattern(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true),
-            Funnel.PatternStage("purchase", strict = true)))
+            Funnel.PatternStage("purchase", strict = true))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7295,11 +7291,10 @@ object Queries {
     * that. */
   val w22_funnel_optional: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("signup"),
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.pattern(Seq(Funnel.PatternStage("signup"),
             Funnel.PatternStage("error", optional = true),
-            Funnel.PatternStage("purchase")))
+            Funnel.PatternStage("purchase"))))
         .orderBy("user_id"),
     oracle = Some {
       s"""$sqlEventsPrefix
@@ -7328,10 +7323,10 @@ object Queries {
     * consumer. */
   val w23_funnel_not_next: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
-            Funnel.PatternStage("purchase")))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.pattern(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
+            Funnel.PatternStage("purchase"))))
         .orderBy("user_id"),
     oracle = Some {
       s"""$sqlEventsPrefix
@@ -7356,11 +7351,11 @@ object Queries {
     * slot). */
   val w24_funnel_pattern_product: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPattern(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.pattern(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)))
+            Funnel.PatternStage("purchase", strict = true))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7382,7 +7377,7 @@ object Queries {
     })
 
   /** The CONTIGUITY × WITHIN product
-    * ([[Funnel.funnelPatternWithin]]): w24's full combinator pattern —
+    * ([[Pattern.patternWithin]]): w24's full combinator pattern —
     * view (notNext `error`) → click (optional) → purchase (strict) —
     * under a 2-hour `within` window, Flink's `Pattern.within(T)` on a
     * next/notNext/optional pattern. The machine lifts the l/o NFA's
@@ -7393,12 +7388,11 @@ object Queries {
     * winner the stage-1 max). */
   val w42_funnel_pattern_within: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelPatternWithin(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.patternWithin(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
             Funnel.PatternStage("click", optional = true),
-            Funnel.PatternStage("purchase", strict = true)),
-          windowMicros = 7200L * 1000000L)
+            Funnel.PatternStage("purchase", strict = true)), 7200L * 1000000L))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7437,7 +7431,7 @@ object Queries {
     })
 
   /** Loop boundary condition — Flink CEP's `until`
-    * ([[Funnel.funnelLoopUntil]]): view(1+, until `signup`) →
+    * ([[Pattern.loopUntil]]): view(1+, until `signup`) →
     * click(2+) → purchase(1+, until `error`). A close during a
     * stage's mandatory block stalls the pattern (u's with a signup
     * before their first view report 0); a close while the loop is
@@ -7448,7 +7442,7 @@ object Queries {
     * is current in stage 1 before its first pick), and the whole row
     * zeroed when stage 1 closed unstarted. */
   /** Loop-internal CONTIGUITY — Flink CEP's `oneOrMore.consecutive()`
-    * ([[Funnel.funnelLoopConsecutive]]): view{2+ consecutive} →
+    * ([[Pattern.loopConsecutive]]): view{2+ consecutive} →
     * click{2+ consecutive}, each repetition block a run of IMMEDIATELY
     * adjacent same-type events (any intervening event resets a partial
     * block, permanently closes a completed one); between stages
@@ -7459,9 +7453,8 @@ object Queries {
     * containing the user's last event for the trailing partial run. */
   val w38_funnel_loop_consecutive: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.loopConsecutive(Seq("view" -> 2, "click" -> 2)))
         .orderBy("user_id"),
     bench = true,
     oracle = Some(
@@ -7512,7 +7505,7 @@ object Queries {
         |ORDER BY user_id""".stripMargin))
 
   /** RELUCTANT consume mode × loop-internal contiguity
-    * ([[Funnel.funnelLoopConsecutive]] with [[Funnel.Reluctant]])
+    * ([[Pattern.loopConsecutive]] with [[Funnel.Reluctant]])
     * on w38's pattern — the consume-mode axis completed on the
     * consecutive machine: the spine and stage_reached are
     * mode-independent (the run's remainder is same-type, so
@@ -7525,9 +7518,9 @@ object Queries {
     * a partial run consumes identically under both modes. */
   val w56_funnel_loop_consecutive_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopConsecutive(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view" -> 2, "click" -> 2), Funnel.Reluctant)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.loopConsecutive(Seq("view" -> 2, "click" -> 2),
+            Funnel.Reluctant))
         .orderBy("user_id"),
     oracle = Some(
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
@@ -7581,7 +7574,7 @@ object Queries {
         |  LEFT JOIN tr USING (user_id)
         |ORDER BY user_id""".stripMargin))
 
-  /** GROUP pattern under `times(n)` ([[Funnel.funnelGroupTimes]]) —
+  /** GROUP pattern under `times(n)` ([[Pattern.groupTimes]]) —
     * Flink CEP's GroupPattern: the quantifier applied to a SEQUENCE
     * (`begin(begin("view").next("click")).times(2)`). The reduction is
     * stage-list expansion (w12's rule) composed with the contiguity
@@ -7592,10 +7585,9 @@ object Queries {
     * seam — projected to repetitions. */
   val w59_funnel_group_times: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimes(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)), times = 2)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupTimes(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), 2))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -7627,11 +7619,9 @@ object Queries {
     * seam-contiguity axis cross-engine. */
   val w60_funnel_group_times_consecutive: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimes(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)), times = 2,
-          consecutiveSeams = true)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupTimes(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), 2, true))
         .orderBy("user_id"),
     oracle = Some {
       s"""$sqlEventsPrefix
@@ -7654,7 +7644,7 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** GROUP pattern × WITHIN ([[Funnel.funnelGroupTimesWithin]]) —
+  /** GROUP pattern × WITHIN ([[Pattern.groupTimesWithin]]) —
     * Flink's `within(T)` on a group-quantified pattern: BOTH
     * repetitions must land inside one window from the first matched
     * event. The oracle is the w42 recipe over the expanded hop list:
@@ -7664,11 +7654,9 @@ object Queries {
     * observable (the w8 dominance). */
   val w61_funnel_group_times_within: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesWithin(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)), times = 2,
-          windowMicros = 7200L * 1000000L)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupTimesWithin(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), 2, 7200L * 1000000L))
         .orderBy("user_id"),
     oracle = Some {
       val T = 7200L * 1000000L
@@ -7787,10 +7775,9 @@ object Queries {
     * property (see [[duckGroupLoopGreedyGuarded]]). */
   val w71_funnel_group_loop_seam_guard: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", notNextAfter = Some("error"))))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", notNextAfter = Some("error")))))
         .orderBy("user_id"),
     oracle = Some(
       s"""$sqlEventsPrefix
@@ -7807,18 +7794,16 @@ object Queries {
     * guarded fold's completion step (truncation lemma — a kept
     * prefix's guard outcomes are index properties of the event
     * stream, unchanged by dropping the suffix), `matched = reps >=
-    * minTimes`. The gate calls the PUBLIC [[Funnel
-    * .funnelGroupTimesRange]] so the routing itself is gated; output
+    * minTimes`. The gate calls the PUBLIC [[Pattern.groupTimesRange]]
+    * so the routing itself is gated; output
     * is the guarded report shape `(user_id, reps_completed,
     * matched)`. Oracle: the guarded greedy-earliest chain (w71's)
     * with `LEAST(·, 3)` and the `>= 2` threshold. */
   val w72_funnel_group_times_range_guarded: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", notNextAfter = Some("error"))),
-          minTimes = 2, maxTimes = 3)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupTimesRange(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", notNextAfter = Some("error"))), 2, 3))
         .orderBy("user_id"),
     oracle = Some(
       s"""$sqlEventsPrefix
@@ -7829,7 +7814,7 @@ object Queries {
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
 
-  /** GROUP pattern under `oneOrMore` ([[Funnel.funnelGroupLoop]]) —
+  /** GROUP pattern under `oneOrMore` ([[Pattern.groupLoop]]) —
     * the UNBOUNDED quantifier over a sequence, which stage-list
     * expansion cannot reach: view→click traversals repeated
     * sequentially, reps = the longest chain any branch achieves. The
@@ -7841,9 +7826,9 @@ object Queries {
     * sf0.1). */
   val w62_funnel_group_loop: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.groupLoop(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click"))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some(
@@ -7864,11 +7849,9 @@ object Queries {
     * corpus ceilings of 7 (sf0.01) and 10 (sf0.1). */
   val w63_funnel_group_loop_consecutive: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)),
-          consecutiveSeams = true)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), true))
         .orderBy("user_id"),
     oracle = Some {
       val rounds = 16
@@ -7895,7 +7878,7 @@ object Queries {
     })
 
   /** GROUP `oneOrMore` under RELUCTANT consumption
-    * ([[Funnel.funnelGroupLoop]], round 18 — closing the r17
+    * ([[Pattern.groupLoop]], round 18 — closing the r17
     * verdict's consume-mode asymmetry): the match stops at the floor
     * (here `timesOrMore(2)`'s floor of 2), so `reps` is the greedy
     * machine's chain depth CAPPED at 2 — exact by the truncation
@@ -7906,10 +7889,10 @@ object Queries {
     * makes every intermediate depth realizable. */
   val w68_funnel_group_loop_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          mode = Funnel.Reluctant, minTimes = 2)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.groupLoop(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
+            mode = Funnel.Reluctant, minTimes = 2))
         .orderBy("user_id"),
     bench = true,
     oracle = Some(
@@ -7928,11 +7911,10 @@ object Queries {
     * keeps. */
   val w69_funnel_group_loop_reluctant_consecutive: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupLoop(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)),
-          consecutiveSeams = true, mode = Funnel.Reluctant, minTimes = 2)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), true,
+            Funnel.Reluctant, 2))
         .orderBy("user_id"),
     oracle = Some {
       val rounds = 16
@@ -7960,18 +7942,16 @@ object Queries {
     })
 
   /** GROUP pattern under the BOUNDED range `times(2, 3)`
-    * ([[Funnel.funnelGroupTimesRange]]) — the last group-quantifier
+    * ([[Pattern.groupTimesRange]]) — the last group-quantifier
     * shape: the existence machine over three expanded copies plus the
     * threshold report `matched = reps_completed >= 2`. The oracle is
     * w59's chained-join replay extended to the third copy (strict
     * in-copy hops, relaxed seams) with the same threshold column. */
   val w64_funnel_group_times_range: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"),
-            Funnel.PatternStage("click", strict = true)),
-          minTimes = 2, maxTimes = 3)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupTimesRange(Seq(Funnel.PatternStage("view"),
+            Funnel.PatternStage("click", strict = true)), 2, 3))
         .orderBy("user_id"),
     oracle = Some {
       s"""$sqlEventsPrefix
@@ -7999,15 +7979,15 @@ object Queries {
     })
 
   /** GROUP pattern under `timesOrMore(3)`
-    * ([[Funnel.funnelGroupTimesOrMore]]): the unbounded dominance
+    * ([[Pattern.groupTimesOrMore]]): the unbounded dominance
     * machine (w62) plus the threshold report. Oracle: w62's
     * greedy-earliest chain with `matched = reps >= 3`. */
   val w65_funnel_group_times_or_more: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupTimesOrMore(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
-          minTimes = 3)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.groupTimesOrMore(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
+            3))
         .orderBy("user_id"),
     oracle = Some(
       s"""$sqlEventsPrefix
@@ -8017,7 +7997,7 @@ object Queries {
          |FROM u LEFT JOIN lv USING (user_id)
          |GROUP BY u.user_id ORDER BY u.user_id""".stripMargin))
 
-  /** Match ENUMERATION on a GROUP ([[Funnel.funnelGroupMatches]]) —
+  /** Match ENUMERATION on a GROUP ([[Pattern.groupMatches]]) —
     * `begin(view→click).times(2)` with every skip-past-last match
     * EMITTED: the w26 cyclic witness machine over the expansion, each
     * match carrying its two repetitions' per-stage times. The oracle
@@ -8062,9 +8042,9 @@ object Queries {
 
   lazy val w67_funnel_group_matches: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupMatches(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click"), times = 2, maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupMatches(Seq("view", "click"), 2,
+            MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val (ctes, rows) = duckGroupMatchParts
@@ -8078,7 +8058,7 @@ object Queries {
     })
 
   /** Group repetition under a match-SPAN time bound
-    * ([[Funnel.funnelGroupMatchesWithin]], round 18) — the
+    * ([[Pattern.groupMatchesWithin]], round 18) — the
     * answer-size-bounded `within(T)` the unbounded group loop cannot
     * have as a fold (the documented Pareto obstruction): every
     * canonical skip-past-last match of two view→click repetitions
@@ -8088,10 +8068,9 @@ object Queries {
     * chained-pick replay with the same span predicate and recount. */
   lazy val w70_funnel_group_matches_within: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupMatchesWithin(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click"), times = 2, maxMatches = MultiMatchCap,
-          windowMicros = 432000L * 1000000L)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupMatchesWithin(Seq("view", "click"), 2,
+            MultiMatchCap, 432000L * 1000000L))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val (ctes, rows) = duckGroupMatchParts
@@ -8106,7 +8085,7 @@ object Queries {
     })
 
   /** Group repetition with the TRAILING absence tail
-    * ([[Funnel.funnelGroupMatchesAbsence]], round 19) — Flink's
+    * ([[Pattern.groupMatches]], round 19) — Flink's
     * `begin(view→click).times(2).notFollowedBy(error).within(5 days)`:
     * w70's span-fit matches additionally survive only if no error
     * event falls in (completion, start + 5 d]. Oracle: w67's
@@ -8114,10 +8093,9 @@ object Queries {
     * EXISTS. */
   lazy val w74_funnel_group_matches_absence: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupMatchesAbsence(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click"), times = 2, maxMatches = MultiMatchCap,
-          windowMicros = 432000L * 1000000L, absentType = "error")
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupMatches(Seq("view", "click"), 2,
+            MultiMatchCap, Some((432000L * 1000000L, "error"))))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val (ctes, rows) = duckGroupMatchParts
@@ -8188,9 +8166,9 @@ object Queries {
   }
 
   /** RANGE-quantified group enumeration
-    * ([[Funnel.funnelGroupMatchesRange]], round 20 — the last
+    * ([[Pattern.groupMatchesRange]], round 20 — the last
     * enumeration shape): `begin(view→click).times(2, 3)` under greedy
-    * skip-past-last, read off [[Funnel.funnelMulti]]'s witness stream
+    * skip-past-last, read off [[Pattern.matches]]'s witness stream
     * over the ceiling expansion — full matches from the exact advance
     * counter, the one possible trailing SHORT match (every non-final
     * match is full: a failed extension kills every later match too)
@@ -8200,10 +8178,9 @@ object Queries {
     * `reps >= 2` floor. */
   lazy val w75_funnel_group_matches_range: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupMatchesRange(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click"), minTimes = 2, maxTimes = 3,
-          maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupMatchesRange(Seq("view", "click"), 2, 3,
+            MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val (ctes, rows) = duckGroupMatchRangeParts
@@ -8220,7 +8197,7 @@ object Queries {
 
   /** The LAST combinator cell — range-quantified group repetition
     * with the trailing absence tail
-    * ([[Funnel.funnelGroupMatchesRangeAbsence]]): Flink's
+    * ([[Pattern.groupMatchesRange]]): Flink's
     * `begin(view→click).times(2, 3).notFollowedBy(error)
     * .within(5 days)`. All three predicates ride the w75 enumeration:
     * `reps ∈ [2, 3]` (the floor, from the replay), span fit and tail
@@ -8230,11 +8207,9 @@ object Queries {
     * `n_matches` recounted over survivors. */
   lazy val w75b_funnel_group_matches_range_absence: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGroupMatchesRangeAbsence(t(spark, dir, "events"),
-          "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click"), minTimes = 2, maxTimes = 3,
-          maxMatches = MultiMatchCap,
-          windowMicros = 432000L * 1000000L, absentType = "error")
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.groupMatchesRange(Seq("view", "click"), 2, 3,
+            MultiMatchCap, Some((432000L * 1000000L, "error"))))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val (ctes, rows) = duckGroupMatchRangeParts
@@ -8257,10 +8232,10 @@ object Queries {
 
   val w31_funnel_loop_until: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 1, Some("signup")), ("click", 2, None),
-            ("purchase", 1, Some("error"))))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
+            ("purchase", 1, Some("error")))))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -8330,7 +8305,7 @@ object Queries {
     })
 
   /** RELUCTANT consume mode × `until` boundary
-    * ([[Funnel.funnelLoopUntil]] with [[Funnel.Reluctant]]) on
+    * ([[Pattern.loopUntil]] with [[Funnel.Reluctant]]) on
     * w31's pattern — the consume-mode product completed across all
     * three loop machines: the until machinery (mid-block close
     * STALLS, open close stops absorption) reads only the pointer and
@@ -8341,11 +8316,10 @@ object Queries {
     * stage's minReps (the w18 cap recipe inside w31's truncation). */
   val w57_funnel_loop_until_reluctant: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelLoopUntil(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq(("view", 1, Some("signup")), ("click", 2, None),
-            ("purchase", 1, Some("error"))),
-          Funnel.Reluctant)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
+            ("purchase", 1, Some("error"))), Funnel.Reluctant))
         .orderBy("user_id"),
     oracle = Some {
       def pick(tag: String, tp: String, prev: String): String =
@@ -8419,7 +8393,7 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** `followedByAny` MULTIPLICITY ([[Funnel.funnelAnyCount]]): the
+  /** `followedByAny` MULTIPLICITY ([[Pattern.anyCount]]): the
     * number of ALL ordered view → click → purchase combinations per
     * user (overlapping included — w6 is one witness, w26 the
     * non-overlapping set, this the full non-deterministic count).
@@ -8428,8 +8402,8 @@ object Queries {
     * ordered join. */
   val w28_funnel_any_count: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelAnyCount(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", Seq("view", "click", "purchase"))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.anyCount(Seq("view", "click", "purchase")))
         .orderBy("user_id"),
     bench = true,
     oracle = Some {
@@ -8447,7 +8421,7 @@ object Queries {
          |ORDER BY user_id""".stripMargin
     })
 
-  /** `followedByAny` ENUMERATION ([[Funnel.funnelAnyEnumerate]]): one
+  /** `followedByAny` ENUMERATION ([[Pattern.anyEnumerate]]): one
     * row per ordered combination. Answer-size-bound by construction
     * (the t79 rationale) — the chained user-keyed range join IS the
     * right distributed plan when the output is the combination set;
@@ -8456,13 +8430,13 @@ object Queries {
     * drops it. */
   val w30_funnel_any: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelAnyEnumerate(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", Seq("view", "click", "purchase"))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.anyEnumerate(Seq("view", "click", "purchase")))
         .orderBy("user_id", "ts1_us", "ts2_us", "ts3_us"),
     bench = true,
     benchRun = Some((spark, dir) =>
-      Funnel.funnelAnyEnumerate(t(spark, dir, "events"), "user_id",
-        "event_type", "ts", "event_id", Seq("view", "click", "purchase"))),
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.anyEnumerate(Seq("view", "click", "purchase")))),
     oracle = Some {
       s"""$sqlEventsPrefix
          |dummy AS (SELECT 1)
@@ -8479,7 +8453,7 @@ object Queries {
   private def MultiMatchCap = 12 // > the data's max (7 at sf0.01), with headroom
 
   /** Match ENUMERATION — Flink CEP's AFTER MATCH SKIP PAST LAST EVENT
-    * ([[Funnel.funnelMulti]]): every non-overlapping view → click →
+    * ([[Pattern.matches]]): every non-overlapping view → click →
     * purchase match per user, not just the first ([[w6_funnel]]'s
     * contract). The operator is ONE fold via the witness-stream
     * reduction (pointer = advances mod k); the oracle replays the
@@ -8492,9 +8466,9 @@ object Queries {
     * truncated counts. */
   val w26_funnel_matches: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelMulti(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase"), maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.matches(Seq("view", "click", "purchase"),
+            MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     bench = true,
     oracle = Some {
@@ -8540,7 +8514,7 @@ object Queries {
 
   /** TRAILING `notFollowedBy(error).within(5 days)` — Flink's absence
     * alarm, the one place Flink ADMITS a pattern ending in a negation
-    * ([[Funnel.funnelMatchesAbsence]], round 19): every canonical
+    * ([[Pattern.matches]], round 19): every canonical
     * skip-past-last view→click→purchase match that fits the window
     * AND has no error event in its absence tail (completion,
     * start + 5 d]. `match_idx` keeps its enumeration index (gaps mark
@@ -8549,10 +8523,9 @@ object Queries {
     * same two predicates, the tail as NOT EXISTS. */
   val w73_funnel_matches_absence: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelMatchesAbsence(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase"), maxMatches = MultiMatchCap,
-          windowMicros = AbsenceWindowUs, absentType = "error")
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.matches(Seq("view", "click", "purchase"),
+            MultiMatchCap, Some((AbsenceWindowUs, "error"))))
         .orderBy("user_id", "match_idx"),
     oracle = Some {
       val stages = Seq("view", "click", "purchase")
@@ -8597,7 +8570,7 @@ object Queries {
          |ORDER BY user_id, match_idx""".stripMargin
     })
 
-  /** Oracle for the after-match-skip family ([[Funnel.funnelSkip]]):
+  /** Oracle for the after-match-skip family ([[Pattern.skip]]):
     * per-start greedy chains as k-1 chained first-after picks (one
     * row_number-1 hop per expanded stage, each strictly after the
     * previous bound event in the (us, event_id) total order), then the
@@ -8672,7 +8645,7 @@ object Queries {
   }
 
   /** Loop-stage COMBINATIONS multiplicity — Flink CEP's
-    * `oneOrMore().allowCombinations()` ([[Funnel.funnelCombinations]]):
+    * `oneOrMore().allowCombinations()` ([[Pattern.combinations]]):
     * view → click+(combinations) → purchase counts every (view, click
     * subset, purchase) match — the loop stage may pick ANY non-empty
     * ordered subset of clicks between the anchors. The fold is linear
@@ -8681,9 +8654,9 @@ object Queries {
     * `2^{clicks between} − 1`, exact in BIGINT via a shift. */
   val w39_funnel_combinations: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelCombinations(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> false, "click" -> true, "purchase" -> false))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.combinations(Seq("view" -> false, "click" -> true, "purchase" -> false)))
         .orderBy("user_id"),
     bench = true,
     oracle = Some(
@@ -8707,7 +8680,7 @@ object Queries {
         |FROM u LEFT JOIN pairs USING (user_id)
         |GROUP BY u.user_id ORDER BY user_id""".stripMargin))
 
-  /** After-match skip SKIP_TO_LAST ([[Funnel.funnelSkip]] with
+  /** After-match skip SKIP_TO_LAST ([[Pattern.skip]] with
     * [[Funnel.SkipToLast]]): view → click×2 → purchase, an emitted
     * match discards partial matches started strictly before its LAST
     * click — the quantified middle stage is what makes FIRST and LAST
@@ -8720,10 +8693,10 @@ object Queries {
     * threshold. */
   val w33_funnel_skip_to_last: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-          Funnel.SkipToLast(2), maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.skip(Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
+            Funnel.SkipToLast(2), MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     bench = true,
     oracle = Some(sqlSkipOracle(
@@ -8737,10 +8710,10 @@ object Queries {
     * first/last anchors are genuinely different machines). */
   val w34_funnel_skip_to_first: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
-          Funnel.SkipToFirst(2), maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.skip(Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
+            Funnel.SkipToFirst(2), MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     oracle = Some(sqlSkipOracle(
       Seq("view", "click", "click", "purchase"),
@@ -8755,17 +8728,17 @@ object Queries {
     * `maxMatches` rows). */
   val w35_funnel_skip_to_next: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelSkip(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id",
-          Seq("view" -> 1, "click" -> 1, "purchase" -> 1),
-          Funnel.SkipToNext, maxMatches = MultiMatchCap)
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id",
+          Pattern.skip(Seq("view" -> 1, "click" -> 1, "purchase" -> 1),
+            Funnel.SkipToNext, MultiMatchCap))
         .orderBy("user_id", "match_idx"),
     oracle = Some(sqlSkipOracle(
       Seq("view", "click", "purchase"),
       anchor = None, inclusive = true, cap = MultiMatchCap)))
 
   /** GUARDED funnel — Flink CEP's `notFollowedBy` INSIDE a pattern
-    * ([[Funnel.funnelGuarded]]): view → click → purchase counts only
+    * ([[Pattern.guarded]]): view → click → purchase counts only
     * via chains with NO `error` event strictly between consecutive
     * matched stages. Greedy is wrong here too (the earliest start can
     * be poisoned by a blocker while a later restart stays clean), so
@@ -8774,9 +8747,9 @@ object Queries {
     * total-order joins with a NOT EXISTS blocker probe on every hop. */
   val w10_funnel_guarded: Q = Q(
     run = (spark, dir) =>
-      Funnel.funnelGuarded(t(spark, dir, "events"), "user_id",
-          "event_type", "ts", "event_id", FunnelStages,
-          Seq(Some("error"), Some("error")))
+      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
+          "event_id", Pattern.guarded(FunnelStages,
+            Seq(Some("error"), Some("error"))))
         .orderBy("user_id"),
     oracle = Some {
       def hop(j: Int, tp: String, prev: String): String =

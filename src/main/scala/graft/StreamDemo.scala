@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.operators.Pattern
 import graft.streaming.StreamingIngest
 
 /** Runnable streaming demo: exactly-once ingest of the events stream, a
@@ -75,35 +76,33 @@ object StreamDemo {
     val survivors = StreamingIngest.nearDupSurvivors(spark.table("neardup"), "doc_id").count()
     println(s"[stream-demo] near-dup survivors: $survivors")
 
-    // contiguity NFA twin (next/notNext/optional) over the events stream
-    val cq = StreamingIngest.streamingFunnelPattern(spark,
-        StreamingIngest.readEvents(spark, dir),
-        Seq(graft.operators.Funnel.PatternStage("view", notNextAfter = Some("error")),
+    // contiguity NFA pattern (next/notNext/optional) over the events stream
+    val cq = StreamingIngest.streamingCep(StreamingIngest.readEvents(spark, dir),
+        Pattern.pattern(Seq(
+          graft.operators.Funnel.PatternStage("view", notNextAfter = Some("error")),
           graft.operators.Funnel.PatternStage("click", optional = true),
-          graft.operators.Funnel.PatternStage("purchase", strict = true)),
+          graft.operators.Funnel.PatternStage("purchase", strict = true))),
         watermark = "2 hours")
-      .toDF().writeStream.outputMode("update").format("memory")
+      .writeStream.outputMode("update").format("memory")
       .queryName("pattern_funnel").start()
     cq.processAllAvailable(); cq.stop()
     println(s"[stream-demo] contiguity-funnel updates: ${spark.table("pattern_funnel").count()}")
 
-    // match enumeration twin (AFTER MATCH SKIP PAST LAST EVENT)
-    val mmq = StreamingIngest.streamingFunnelMulti(spark,
-        StreamingIngest.readEvents(spark, dir),
-        Seq("view", "click", "purchase"), maxMatches = 12,
+    // match enumeration (AFTER MATCH SKIP PAST LAST EVENT)
+    val mmq = StreamingIngest.streamingCep(StreamingIngest.readEvents(spark, dir),
+        Pattern.matches(Seq("view", "click", "purchase"), maxMatches = 12),
         watermark = "2 hours")
-      .toDF().writeStream.outputMode("update").format("memory")
+      .writeStream.outputMode("update").format("memory")
       .queryName("multi_matches").start()
     mmq.processAllAvailable(); mmq.stop()
     println(s"[stream-demo] enumerated matches: ${spark.table("multi_matches").count()}")
 
-    // loop-until twin (greedy repetition with a boundary condition)
-    val luq = StreamingIngest.streamingFunnelLoopUntil(spark,
-        StreamingIngest.readEvents(spark, dir),
-        Seq(("view", 1, Some("signup")), ("click", 2, None),
-          ("purchase", 1, Some("error"))),
+    // loop-until pattern (greedy repetition with a boundary condition)
+    val luq = StreamingIngest.streamingCep(StreamingIngest.readEvents(spark, dir),
+        Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
+          ("purchase", 1, Some("error")))),
         watermark = "2 hours")
-      .toDF().writeStream.outputMode("update").format("memory")
+      .writeStream.outputMode("update").format("memory")
       .queryName("loop_until").start()
     luq.processAllAvailable(); luq.stop()
     println(s"[stream-demo] loop-until updates: ${spark.table("loop_until").count()}")

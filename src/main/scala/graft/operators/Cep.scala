@@ -11,16 +11,18 @@ import graft.operators.Funnel.{IterStage, PatternStage, RelGt, SkipStrategy}
  * completion and buffering rules), and the batch driver that folds
  * them. Flink runs keyed CEP as one state machine per key over the
  * key's events in time order, whether the input is bounded or not; so
- * does this port. Two drivers run the same machines:
+ * does this port. A [[Pattern]] value carries a machine, and two
+ * drivers run it:
  *
- *   - [[runSorted]], the batch driver behind every `Funnel.funnel*`
- *     shape: one hash exchange on the user, a sort on (user, event
- *     time, order column), and a per-user fold. Nothing per user is
- *     collected, so a power key's log streams from the sorter's spill
- *     files with O(state) memory, whatever its event count;
- *   - `StreamingIngest.cepUpdate`, the event-time buffer behind every
- *     `streamingFunnel*` twin, which folds the events the watermark
- *     has passed, in the same (event time, event_id) order.
+ *   - [[runSorted]], behind the batch runner `Funnel.run`: one hash
+ *     exchange on the user, a sort on (user, event time, order
+ *     column), and a per-user fold. Nothing per user is collected, so
+ *     a power key's log streams from the sorter's spill files with
+ *     O(state) memory, whatever its event count;
+ *   - `StreamingIngest.cepUpdate`, the event-time buffer behind the
+ *     streaming runner `StreamingIngest.streamingCep`, which folds the
+ *     events the watermark has passed, in the same (event time,
+ *     event_id) order.
  *
  * A machine's `step` is its only transition function: no shape keeps a
  * second implementation of it for another driver or another key size.
@@ -139,7 +141,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Greedy pointer: funnel, funnelWhere
+  // Greedy pointer: Pattern.times, Pattern.where
   // -------------------------------------------------------------------
 
   /** The greedy stage pointer and its witnesses. */
@@ -168,7 +170,7 @@ private[graft] object Cep extends Serializable {
     where(stages.map(t => (tp: String, _: Long) => tp == t).toIndexedSeq)
 
   // -------------------------------------------------------------------
-  // Max-start DP: funnelWithin, funnelWithinGuarded
+  // Max-start DP: Pattern.within
   // -------------------------------------------------------------------
 
   /** The max-start DP vector: b[j] = the latest stage-1 time among
@@ -238,7 +240,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Boolean NFA: funnelGuarded
+  // Boolean NFA: Pattern.guarded
   // -------------------------------------------------------------------
 
   /** The NFA's open-clean and sticky ever-reached bit vectors. */
@@ -272,7 +274,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Contiguity NFA: funnelPattern, funnelPatternWithin, group patterns
+  // Contiguity NFA: Pattern.pattern, Pattern.patternWithin, group patterns
   // -------------------------------------------------------------------
 
   /** The l/o NFA (chains ending at the immediately previous event vs
@@ -476,8 +478,8 @@ private[graft] object Cep extends Serializable {
     math.max(math.max(s.bo, s.bl), 0L)
 
   // -------------------------------------------------------------------
-  // Loop quantifiers: funnelLoop, funnelTimesRange, funnelLoopConsecutive,
-  // funnelLoopUntil
+  // Loop quantifiers: Pattern.loop, timesRange, loopConsecutive,
+  // loopUntil
   // -------------------------------------------------------------------
 
   /** The expanded-list spine pointer plus the per-stage (count,
@@ -638,7 +640,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Iterative conditions: funnelIterative
+  // Iterative conditions: Pattern.iterative
   // -------------------------------------------------------------------
 
   /** The min-anchor dominance vector: `d` is valid exactly where `ts`
@@ -683,7 +685,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Path counting: funnelAnyCount, funnelCombinations
+  // Path counting: Pattern.anyCount, Pattern.combinations
   // -------------------------------------------------------------------
 
   /** The k-slot path-counting vector. */
@@ -715,7 +717,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Match enumeration: funnelMulti and the group-match shapes
+  // Match enumeration: Pattern.matches and the group-match shapes
   // -------------------------------------------------------------------
 
   /** The skip-past-last pointer machine: `n` advances, `partial` the
@@ -769,7 +771,7 @@ private[graft] object Cep extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // After-match skip strategies: funnelSkip
+  // After-match skip strategies: Pattern.skip
   // -------------------------------------------------------------------
 
   /** Chains are flat `Seq[Long]` of interleaved (us, position) pairs;
@@ -791,9 +793,9 @@ private[graft] object Cep extends Serializable {
     * threshold — they can never survive (output-invariant). */
   def skip(stages: Seq[(String, Int)], strategy: SkipStrategy,
       maxMatches: Int): Machine[FunnelSkipState] = {
-    val types = Funnel.expandStages(stages)
+    val types = Pattern.expandStages(stages)
     val k = types.length
-    val (anchor, inclusive) = Funnel.skipAnchor(stages, strategy)
+    val (anchor, inclusive) = Pattern.skipAnchor(stages, strategy)
     def survives(c: Seq[Long], mu: Long, mo: Long): Boolean = {
       val (su, so) = (c(0), c(1))
       if (inclusive) su > mu || (su == mu && so >= mo)

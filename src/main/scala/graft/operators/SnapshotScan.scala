@@ -50,8 +50,12 @@ object SnapshotScan {
    * `tieBreakers`.
    *
    * Implementation: `offset` ∘ `orderBy` uses Spark's native GlobalLimit/
-   * Offset operators (Spark ≥3.4) — a single range-partition sort, no
-   * row_number window (which would funnel all rows through one partition).
+   * Offset operators (Spark ≥3.4) instead of a row_number window. This
+   * does NOT keep the rows off one partition: on Spark 4.1.2 the sort
+   * range-partitions, but the offset then runs as a final 1-task stage
+   * (`GlobalLimit`) above enrich and write, so a resume enriches,
+   * hashes and writes its whole suffix in one task. ROADMAP item 8
+   * replaces the offset with a filter past the n-th row's key tuple.
    */
   def resumableScan(
       df: DataFrame,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.ColumnMeta
-import graft.operators.{Cep, Enrich}
+import graft.operators.{Cep, Enrich, Pattern}
 
 /**
  * Structured-Streaming surface (SURVEY §2 "Streaming semantics" + north-
@@ -25,12 +25,13 @@ import graft.operators.{Cep, Enrich}
  * On top (capabilities the reference lacks, driver north-star):
  * watermarked tumbling-window aggregation and arbitrary-stateful
  * sessionization via `flatMapGroupsWithState` — the Flink
- * keyed-state/timer analogue. Every `streamingFunnel*` CEP twin runs
- * its batch shape's machine ([[graft.operators.Cep]]) through one
- * event-time buffer, [[cepUpdate]].
+ * keyed-state/timer analogue. [[streamingCep]] runs any CEP
+ * [[graft.operators.Pattern]] — the batch runner's own machine
+ * ([[graft.operators.Cep]]) — through one event-time buffer,
+ * [[cepUpdate]].
  *
- * Serializable because the CEP twins' output closures are closures
- * over this object's helpers that ship to the executors; a Scala 2.13
+ * Serializable because the CEP buffer's closures are closures over
+ * this object's helpers that ship to the executors; a Scala 2.13
  * module serializes as a proxy naming its class, never its fields.
  */
 object StreamingIngest extends Serializable {
@@ -728,7 +729,7 @@ object StreamingIngest extends Serializable {
   }
 
   // -------------------------------------------------------------------
-  // Streaming CEP: one event-time buffer driving one machine per shape
+  // Streaming CEP: one event-time buffer driving a Pattern's machine
   // -------------------------------------------------------------------
 
   /** One CEP input row: event time, event_id, type and the stage
@@ -743,31 +744,17 @@ object StreamingIngest extends Serializable {
   final case class CepBuffer[S](machine: S,
       pending: Seq[(Long, Long, String, Long)], doneUs: Long)
 
-  /** What a streaming twin emits: the observable `row` of a key's
-    * state (emitted on first sight of a retained entry and whenever it
-    * changes), or — for the enumeration twins — one `emit` row per
-    * drained match. */
-  private final case class CepOut[S, O](row: Option[(Long, S) => O],
-      emit: (Long, Cep.Match) => O)
-
-  private def rowOut[S, O](row: (Long, S) => O): CepOut[S, O] =
-    CepOut[S, O](Some(row), (_, _) =>
-      throw new IllegalStateException("a row twin drains no matches"))
-
-  private def matchOut[S]: CepOut[S, FunnelMatchEmit] =
-    CepOut[S, FunnelMatchEmit](None, (u, x) => FunnelMatchEmit(u, x._1, x._2))
-
   /**
-   * The one event-time buffer behind every streaming CEP twin — Flink
-   * CEP's keyed buffer flushed at the watermark, on Spark primitives.
-   * The machine is the batch operator's own ([[Cep]]). Pattern folds
-   * are ORDER-SENSITIVE (an early `view` arriving after a later
-   * `click` changes the verdict), so events are never folded in
-   * arrival order: the key's `pending` buffer holds the events the
-   * watermark has not passed, and each invocation folds only the
-   * mature prefix, in (event time, event_id) order. Late events
-   * (behind the watermark on arrival) are dropped by the stream's
-   * watermark filter — standard CEP best-effort lateness.
+   * The one event-time buffer behind [[streamingCep]] — Flink CEP's
+   * keyed buffer flushed at the watermark, on Spark primitives. The
+   * machine is the batch runner's own ([[Cep]]). Pattern folds are
+   * ORDER-SENSITIVE (an early `view` arriving after a later `click`
+   * changes the verdict), so events are never folded in arrival order:
+   * the key's `pending` buffer holds the events the watermark has not
+   * passed, and each invocation folds only the mature prefix, in (event
+   * time, event_id) order. Late events (behind the watermark on
+   * arrival) are dropped by the stream's watermark filter — standard
+   * CEP best-effort lateness.
    *
    * One invocation:
    *   - a timeout on a done entry with nothing buffered is its
@@ -789,14 +776,16 @@ object StreamingIngest extends Serializable {
    *     past the watermark, which the timer must not sit behind.
    *     GroupState clears a timeout that an invocation does not re-set,
    *     so no stale flush timer can fire on a done entry;
-   *   - the output is the drained matches, plus the observable row
-   *     when it changed or on first sight of a retained entry (an entry
-   *     removed at once emits no first-sight row: it would repeat on
-   *     every touching batch, breaking emit-once).
+   *   - the output is one row per drained match for a `perMatch`
+   *     pattern; otherwise the state's row when it changed, or on first
+   *     sight of a retained entry (an entry removed at once emits no
+   *     first-sight row: it would repeat on every touching batch,
+   *     breaking emit-once).
    */
-  private def cepUpdate[S, O](m: Cep.Machine[S], retentionMs: Long,
-      out: CepOut[S, O])(key: Long, rows: Iterator[FunnelValueEvent],
-      state: GroupState[CepBuffer[S]]): Iterator[O] = {
+  private def cepUpdate[S](m: Cep.Machine[S], retentionMs: Long,
+      perMatch: Boolean, rows: (S, Seq[Cep.Match]) => Seq[Seq[Any]])(
+      key: Long, in: Iterator[FunnelValueEvent],
+      state: GroupState[CepBuffer[S]]): Iterator[Row] = {
     val first = !state.exists
     val prev = state.getOption.getOrElse(CepBuffer(m.init, Nil, Cep.NoStart))
     if (state.hasTimedOut && prev.pending.isEmpty && m.done(prev.machine)) {
@@ -805,7 +794,7 @@ object StreamingIngest extends Serializable {
     }
     val wmMs = state.getCurrentWatermarkMs()
     val (mature, immature) = (prev.pending ++
-      rows.map(e => (e.usMicros, e.eventId, e.tp, e.v)))
+      in.map(e => (e.usMicros, e.eventId, e.tp, e.v)))
       .partition(_._1 <= wmMs * 1000L)
     var s = prev.machine
     var doneUs = prev.doneUs
@@ -830,19 +819,25 @@ object StreamingIngest extends Serializable {
         (rest.map(_._1) ++ m.wakeUps(s)).map(_ / 1000L + 1L) ++ retention
       if (timers.nonEmpty) state.setTimeoutTimestamp(timers.min)
     }
-    val changed = out.row.map(r => r(key, s)).filter(o =>
-      (first && !removable) || o != out.row.get(key, prev.machine))
-    (matches.map(out.emit(key, _)) ++ changed).iterator
+    val out =
+      if (perMatch) rows(s, matches)
+      else {
+        val now = rows(s, Nil)
+        if ((first && !removable) || now != rows(prev.machine, Nil)) now
+        else Nil
+      }
+    out.iterator.map(vs => Row.fromSeq(key +: vs))
   }
 
-  /** The streaming plumbing every CEP twin shares: watermark the
-    * stream, project the [[FunnelValueEvent]] (`v` is the value the
-    * stage conditions read), key by user and run the machine through
-    * [[cepUpdate]]. */
-  private def runCep[S <: Product : TypeTag, O <: Product : TypeTag](
-      events: DataFrame, watermark: String, m: Cep.Machine[S],
-      out: CepOut[S, O], retentionMs: Long = Long.MaxValue,
-      v: Column = lit(0L)): Dataset[O] = {
+  /** The streaming plumbing: watermark the stream, project the
+    * [[FunnelValueEvent]] (`tp` and `v` are the columns the machine reads
+    * as the event type and value), key by user and run the machine
+    * through [[cepUpdate]], emitting `(user_id, fields..)` rows. */
+  private def runCep[S <: Product](events: DataFrame, watermark: String,
+      m: Cep.Machine[S], tp: Column, v: Column, fields: Seq[StructField],
+      perMatch: Boolean, retentionMs: Long)(
+      rows: (S, Seq[Cep.Match]) => Seq[Seq[Any]])(
+      implicit tag: TypeTag[S]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -851,724 +846,55 @@ object StreamingIngest extends Serializable {
       // unsupported-operation checker requires a watermark-tagged
       // event-time column in the stateful operator's child
       .select(col("user_id"), unix_micros(col("ts")).as("usMicros"),
-        col("event_id").as("eventId"), col("event_type").as("tp"),
-        v.as("v"), col("ts"))
+        col("event_id").as("eventId"), tp.as("tp"), v.as("v"), col("ts"))
       .as[FunnelValueEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(cepUpdate(m, retentionMs, out))
-  }
-
-  /** A slot vector as an output row's optional values. */
-  private def present(xs: Seq[Long]): Seq[Option[Long]] =
-    xs.map(x => if (x == Cep.NoStart) None else Some(x))
-
-  final case class FunnelUpdate(user_id: Long, stage_reached: Int,
-      witness_us: Seq[Long])
-
-  /**
-   * Streaming CEP funnel — the [[graft.operators.Funnel.funnel]] batch
-   * operator's twin: [[streamingFunnelWhere]] with one type test per
-   * stage, through the [[cepUpdate]] buffer. `watermark` is the allowed
-   * lateness — and therefore the event-time reordering window the
-   * buffer absorbs.
-   *
-   * Contract (spec-asserted): with any on-time arrival order, the last
-   * Update-mode emission per user equals the batch funnel over the same
-   * rows. Emission is delta-style: a row when the stage advances, plus
-   * a first-sight stage-0 row for users whose entry is RETAINED (a
-   * pending buffer) — users with only non-matching mature events emit
-   * nothing. State per active user is the O(k) pointer + witnesses plus
-   * the events inside the watermark lag; a COMPLETED funnel drops its
-   * buffer and stops emitting, and keeps a k-sized tombstone so
-   * stragglers don't restart the pattern — for the stream's life with
-   * the default infinite `matchRetentionMs`, else until the watermark
-   * passes `completion + retention`, after which a new event starts a
-   * NEW instance (spec-asserted).
-   */
-  def streamingFunnel(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] =
-    runCep(events, watermark, Cep.typed(stages),
-      rowOut((u: Long, s: Cep.FunnelWhereState) =>
-        FunnelUpdate(u, s.stage, s.witnessUs)),
-      matchRetentionMs)
-
-  final case class FunnelWinUpdate(user_id: Long, stage_reached: Int,
-      win_start_us: Option[Long])
-
-  private val winRow = rowOut((u: Long, s: Cep.FunnelWinState) =>
-    FunnelWinUpdate(u, Cep.slotsSet(s.b), Cep.deepestStart(s.b)))
-
-  /**
-   * Streaming WINDOWED funnel — [[graft.operators.Funnel.funnelWithin]]'s
-   * twin. The DP is order-sensitive too (a late-but-on-time stage-1
-   * event can RAISE the max feasible start retroactively), so it runs
-   * behind the [[cepUpdate]] buffer; the state is k longs however many
-   * restarts the user's history holds. Emission is delta-style on the
-   * OBSERVABLE pair (stage_reached, win_start_us) — the window start
-   * can move to a later restart without the stage changing, and the
-   * last emission must equal the batch operator (spec contract).
-   */
-  def streamingFunnelWithin(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], windowMicros: Long, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] =
-    runCep(events, watermark, Cep.within(stages.toIndexedSeq, windowMicros),
-      winRow, matchRetentionMs)
-
-  final case class FunnelGuardUpdate(user_id: Long, stage_reached: Int)
-
-  /**
-   * Streaming GUARDED funnel — [[graft.operators.Funnel.funnelGuarded]]'s
-   * twin (CEP `notFollowedBy` inside the pattern): the NFA's bit
-   * vectors behind the [[cepUpdate]] buffer (blocker kills are
-   * order-sensitive). Emission on stage_reached change (sticky — it
-   * only grows).
-   */
-  def streamingFunnelGuarded(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], notBetween: Seq[Option[String]],
-      watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelGuardUpdate] = {
-    require(notBetween.length == stages.length - 1,
-      "need one (optional) blocker per gap")
-    runCep(events, watermark,
-      Cep.guarded(stages.toIndexedSeq, notBetween.toIndexedSeq),
-      rowOut((u: Long, s: Cep.FunnelGuardState) =>
-        FunnelGuardUpdate(u, s.e.count(identity))),
-      matchRetentionMs)
-  }
-
-  /**
-   * Streaming CONTIGUITY × WITHIN product funnel —
-   * [[graft.operators.Funnel.funnelPatternWithin]]'s twin: per-user
-   * state is the max-start product NFA's three vectors (`l[j]` —
-   * latest start among chains whose prefix-j match ends at the
-   * immediately previous event; `o[j]` — latest start among chains
-   * matched strictly before it; `m[j]` — the STICKY latest start ever
-   * to actually match stage j, the observable) behind the
-   * [[cepUpdate]] buffer (strict hops, notNext kills and window expiry
-   * are all order-sensitive). Emission is delta-style on
-   * (stage_reached, win_start_us).
-   */
-  def streamingFunnelPatternWithin(spark: SparkSession,
-      events: DataFrame,
-      stages: Seq[graft.operators.Funnel.PatternStage],
-      windowMicros: Long, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
-    graft.operators.Funnel.patternRequire(stages)
-    require(windowMicros > 0, "need windowMicros > 0")
-    val st = stages.toIndexedSeq
-    runCep(events, watermark, Cep.patternWithin(st, windowMicros),
-      rowOut { (u: Long, s: Cep.FunnelPatternWinState) =>
-        val (r, win) = Cep.patternWindow(st, s.m)
-        FunnelWinUpdate(u, r, win)
-      },
-      matchRetentionMs)
-  }
-
-  /** Streaming GROUP pattern under `within(T)` —
-    * [[graft.operators.Funnel.funnelGroupTimesWithin]]'s twin: the
-    * stage-list expansion composes with
-    * [[streamingFunnelPatternWithin]] unchanged; the flat observables
-    * project to repetitions. */
-  def streamingFunnelGroupTimesWithin(spark: SparkSession,
-      events: DataFrame,
-      group: Seq[graft.operators.Funnel.PatternStage], times: Int,
-      windowMicros: Long, watermark: String,
-      consecutiveSeams: Boolean = false,
-      matchRetentionMs: Long = Long.MaxValue): DataFrame = {
-    graft.operators.Funnel.groupRequire(group, times)
-    val k = group.length
-    streamingFunnelPatternWithin(spark, events,
-        graft.operators.Funnel.groupExpand(group, times, consecutiveSeams),
-        windowMicros, watermark, matchRetentionMs)
+        GroupStateTimeout.EventTimeTimeout)(
+        cepUpdate(m, retentionMs, perMatch, rows))(
+        implicitly[Encoder[CepBuffer[S]]],
+        Encoders.row(StructType(StructField("user_id", LongType) +: fields)))
       .toDF()
-      .select(col("user_id"),
-        expr(s"stage_reached div $k").cast("int").as("reps_completed"),
-        col("win_start_us"))
   }
 
   /**
-   * Streaming COMBINED windowed+guarded funnel —
-   * [[graft.operators.Funnel.funnelWithinGuarded]]'s twin: the alive
-   * max-start vector (killable by gap blockers) and the sticky
-   * ever-reached one (the observable) behind the [[cepUpdate]] buffer
-   * (window expiry and blocker kills are both order-sensitive).
-   * Emission on (stage_reached, win_start_us) change.
-   */
-  def streamingFunnelWithinGuarded(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], windowMicros: Long,
-      notBetween: Seq[Option[String]], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelWinUpdate] = {
-    require(notBetween.length == stages.length - 1,
-      "need one (optional) blocker per gap")
-    runCep(events, watermark, Cep.withinGuarded(stages.toIndexedSeq,
-        windowMicros, notBetween.toIndexedSeq),
-      rowOut((u: Long, s: Cep.FunnelWinGuardState) =>
-        FunnelWinUpdate(u, Cep.slotsSet(s.m), Cep.deepestStart(s.m))),
-      matchRetentionMs)
-  }
-
-  /** Streaming QUANTIFIED funnel — CEP `times(n)` over a stream. The
-    * batch reduction (quantifiers ≡ stage-list expansion,
-    * [[graft.operators.Funnel.funnelTimes]]) composes with
-    * [[streamingFunnel]] unchanged: run the stream over the EXPANDED
-    * stages and project sub-stage results back to full stages. */
-  def streamingFunnelTimes(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): DataFrame = {
-    require(stages.nonEmpty && stages.forall(_._2 >= 1),
-      "need stages with counts >= 1")
-    val expanded = stages.flatMap { case (t, n) => Seq.fill(n)(t) }
-    val bounds = stages.map(_._2).scanLeft(0)(_ + _).tail
-    val raw = streamingFunnel(spark, events, expanded, watermark,
-      matchRetentionMs).toDF()
-    val full = bounds.map(b => when(col("stage_reached") >= b, 1)
-      .otherwise(0)).reduce(_ + _)
-    raw.select(col("user_id") +: full.as("stage_reached") +:
-      stages.indices.map(j =>
-        when(size(col("witness_us")) >= bounds(j),
-          element_at(col("witness_us"), bounds(j))).as(s"ts${j + 1}_us")): _*)
-  }
-
-  final case class FunnelLoopUpdate(user_id: Long, stage_reached: Int,
-      reps: Seq[Long], last_us: Seq[Long])
-
-  /** The loop family's observable row: slot counts and the set
-    * last-times. */
-  private def loopRow(u: Long, stage: Int, c: Seq[Long],
-      l: Seq[Long]): FunnelLoopUpdate =
-    FunnelLoopUpdate(u, stage, c, l.filter(_ != Cep.NoStart))
-
-  private def loopRows(stages: Seq[(String, Int)]) =
-    rowOut((u: Long, st: Cep.FunnelLoopState) =>
-      loopRow(u, Cep.loopStage(stages, st.s), st.c, st.l))
-
-  /**
-   * Streaming LOOPING-quantifier funnel — [[graft.operators.Funnel
-   * .funnelLoop]]'s twin (CEP `oneOrMore`/`timesOrMore` with greedy
-   * repetition), `mode` included: the batch operator's loop machine
-   * (the expanded-list spine pointer plus the per-stage (count,
-   * last-time) loop slots) behind the [[cepUpdate]] buffer.
+   * Run `pattern` over an event stream (`user_id`, `event_id`, `ts`,
+   * `event_type` and any column the pattern reads) — the streaming
+   * runner of every [[graft.operators.Pattern]], the batch runner's
+   * ([[graft.operators.Funnel.run]]) twin. `watermark` is the allowed
+   * lateness, and therefore the event-time reordering window the buffer
+   * absorbs. Rows come in the batch layout minus the pattern's
+   * drain-time columns (`n_matches`, final only once the input ends), in
+   * Update mode: a state pattern emits its row whenever it changes, a
+   * match pattern one row per match once the match is final.
    *
-   * The LAST stage's loop never closes (batch absorbs to end of log),
-   * so a "completed" funnel keeps absorbing its type's mature events
-   * instead of freezing — the buffer keeps only last-stage-type events
-   * once the spine is complete, and with the default infinite
-   * retention the final emission equals the batch operator over the
-   * same rows (spec contract). A finite `matchRetentionMs` frees the
-   * entry at completion + retention — trailing absorptions after that
-   * are dropped with the tombstone (the documented TTL trade).
-   * Emission: delta-style on (stage, counts, last-times).
+   * Contract (StreamingSpec's stream≡batch table): with any on-time
+   * arrival order, the last emission per user (every emission, for a
+   * match pattern) equals the batch runner's rows over the same events.
+   * A COMPLETED match keeps a tombstone so stragglers don't restart the
+   * pattern — for the stream's life with the default infinite
+   * `matchRetentionMs`, else until the watermark passes `completion +
+   * retention`, after which a new event starts a NEW instance; patterns
+   * that never complete keep their state for the stream's life.
    *
-   * Reluctant reuses the batch reduction verbatim: the minimal loop is
-   * the bounded quantifier at its floor (`times(m, m)`), so the
-   * reluctant stream IS [[streamingFunnelTimesRange]] with cap =
-   * minReps.
+   * A pattern whose answer exists only once the input ends (the
+   * `followedByAny` enumeration join and the range enumerations'
+   * trailing short match) is refused.
    */
-  def streamingFunnelLoop(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue,
-      mode: graft.operators.Funnel.ConsumeMode =
-        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    graft.operators.Funnel.loopRequire(stages)
-    if (mode == graft.operators.Funnel.Reluctant)
-      streamingFunnelTimesRange(spark, events,
-        stages.map { case (t, m) => (t, m, m) }, watermark,
-        matchRetentionMs)
-    else runCep(events, watermark, Cep.loop(stages.toIndexedSeq, None),
-      loopRows(stages), matchRetentionMs)
-  }
-
-  /**
-   * Streaming CONSECUTIVE-loop funnel —
-   * [[graft.operators.Funnel.funnelLoopConsecutive]]'s twin (CEP
-   * `oneOrMore.consecutive()`), `mode` included: the run machine
-   * (stage pointer, open-loop bit, per-stage count/last-time) behind
-   * the [[cepUpdate]] buffer. Folding mature events in watermark order
-   * preserves run ADJACENCY across flushes for the same reason the
-   * contiguity NFA's does — maturity is a prefix of the event-time
-   * total order, so "immediately consecutive" means the same thing
-   * batch and streamed. A late event inside a run would break it
-   * retroactively; it is dropped (best-effort lateness). An open LAST
-   * loop keeps the full buffer (the next event either absorbs or
-   * permanently closes). Reluctant is one dead absorb branch in the
-   * open phase. No retention: the machine never completes. Emission:
-   * delta-style on (stage_reached, counts, last-times).
-   */
-  def streamingFunnelConsecutive(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)], watermark: String,
-      mode: graft.operators.Funnel.ConsumeMode =
-        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    graft.operators.Funnel.loopRequire(stages)
-    runCep(events, watermark, Cep.consecutive(stages.toIndexedSeq,
-        reluctant = mode == graft.operators.Funnel.Reluctant),
-      rowOut((u: Long, st: Cep.FunnelConsecState) =>
-        loopRow(u, st.j - 1 + (if (st.open) 1 else 0), st.c, st.l)))
-  }
-
-  /**
-   * Streaming loop funnel WITH Flink's `until` boundary —
-   * [[graft.operators.Funnel.funnelLoopUntil]]'s twin, `mode`
-   * included. State adds one boolean to the loop machine: the CURRENT
-   * stage's repetition is closed (set by the stage's until event,
-   * cleared on crossing into a new stage). Three terminal shapes:
-   *   - complete spine, last loop open — keeps absorbing last-stage
-   *     events AND watching for the last stage's until type (closing
-   *     the loop changes FUTURE observables, so both stay buffered);
-   *   - complete spine, last loop closed — fully final, buffer drops;
-   *   - STALLED (closed during a mandatory block) — frozen forever,
-   *     buffer drops, and the entry is a tombstone even at stage 0.
-   * Retention TTL applies to completed funnels only; stalled
-   * tombstones live for the stream's life. Reluctant: absorption is
-   * the one dead branch, the until close/stall machinery (pointer +
-   * bit) is mode-independent.
-   */
-  def streamingFunnelLoopUntil(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int, Option[String])], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue,
-      mode: graft.operators.Funnel.ConsumeMode =
-        graft.operators.Funnel.Greedy): Dataset[FunnelLoopUpdate] = {
-    graft.operators.Funnel.untilRequire(stages)
-    val mst = stages.map { case (t, m, _) => (t, m) }
-    runCep(events, watermark, Cep.loopUntil(stages.toIndexedSeq,
-        reluctant = mode == graft.operators.Funnel.Reluctant),
-      rowOut((u: Long, st: Cep.FunnelLoopUntilState) =>
-        loopRow(u, Cep.loopStage(mst, st.s), st.c, st.l)),
-      matchRetentionMs)
-  }
-
-  /** The streaming BOUNDED quantifier times(m, n) — the loop machine
-    * with the absorb cap (one extra comparison; pointer and spine
-    * untouched, the [[graft.operators.Funnel.funnelTimesRange]]
-    * contract). */
-  def streamingFunnelTimesRange(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int, Int)], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelLoopUpdate] = {
-    graft.operators.Funnel.rangeRequire(stages)
-    val mst = stages.map { case (t, m, _) => (t, m) }
-    runCep(events, watermark,
-      Cep.loop(mst.toIndexedSeq, Some(stages.map(_._3).toIndexedSeq)),
-      loopRows(mst), matchRetentionMs)
-  }
-
-  // -------------------------------------------------------------------
-  // Streaming contiguity NFA (funnelPattern's twin) + match enumeration
-  // (funnelMulti's twin)
-  // -------------------------------------------------------------------
-
-  final case class FunnelPatternUpdate(user_id: Long, stage_reached: Int,
-      ts_us: Seq[Option[Long]])
-
-  /**
-   * Streaming contiguity funnel —
-   * [[graft.operators.Funnel.funnelPattern]]'s twin (CEP `next` /
-   * `notNext` / `optional`): the l/o NFA behind the [[cepUpdate]]
-   * buffer. Folding mature events in watermark order preserves
-   * IMMEDIATE-successor adjacency across flushes (the fold's `l` bits
-   * always refer to the last FOLDED event, and maturity is a prefix of
-   * the event-time order). Emission on any (stage_reached, ts vector)
-   * change — unlike the plain funnel, a pattern with an optional stage
-   * can stamp that stage's first actual match AFTER the prefix is
-   * already satisfied, so completion here means every ts slot set;
-   * only then does the buffer drop and the retention tombstone start.
-   * A late event between two folded events would change batch
-   * adjacency; it is dropped (best-effort lateness, here extended to
-   * contiguity).
-   */
-  def streamingFunnelPattern(spark: SparkSession, events: DataFrame,
-      stages: Seq[graft.operators.Funnel.PatternStage], watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelPatternUpdate] = {
-    graft.operators.Funnel.patternRequire(stages)
-    val st = stages.toIndexedSeq
-    runCep(events, watermark, Cep.pattern(st),
-      rowOut((u: Long, s: Cep.FunnelPatternState) => FunnelPatternUpdate(u,
-        Cep.patternReached(st, s.ts), present(s.ts))),
-      matchRetentionMs)
-  }
-
-  /** Streaming GROUP pattern — [[graft.operators.Funnel
-    * .funnelGroupTimes]]'s twin: the batch reduction (group
-    * quantifier ≡ [[graft.operators.Funnel.groupExpand]]'s stage-list
-    * expansion with relaxed-or-consecutive seams) composes with
-    * [[streamingFunnelPattern]] unchanged — run the stream over the
-    * EXPANDED stages and project the flat observables back to
-    * repetitions (`reps_completed` = satisfiable prefix in whole
-    * copies; per-copy first-match times `ts_r<r>_s<i>_us`). */
-  def streamingFunnelGroupTimes(spark: SparkSession, events: DataFrame,
-      group: Seq[graft.operators.Funnel.PatternStage], times: Int,
-      watermark: String, consecutiveSeams: Boolean = false,
+  def streamingCep(events: DataFrame, pattern: Pattern, watermark: String,
       matchRetentionMs: Long = Long.MaxValue): DataFrame = {
-    graft.operators.Funnel.groupRequire(group, times)
-    val k = group.length
-    val raw = streamingFunnelPattern(spark, events,
-      graft.operators.Funnel.groupExpand(group, times, consecutiveSeams),
-      watermark, matchRetentionMs).toDF()
-    raw.select(col("user_id") +:
-      expr(s"stage_reached div $k").cast("int").as("reps_completed") +:
-      (for (r <- 1 to times; i <- 1 to k) yield
-        element_at(col("ts_us"), (r - 1) * k + i)
-          .as(s"ts_r${r}_s${i}_us")): _*)
-  }
-
-  final case class FunnelGroupLoopUpdate(user_id: Long, reps: Long)
-
-  /**
-   * Streaming GROUP oneOrMore — [[graft.operators.Funnel
-   * .funnelGroupLoop]]'s twin, `mode` included. The unbounded
-   * quantifier has no finite stage-list expansion, so unlike
-   * [[streamingFunnelGroupTimes]] this is its own state machine: the
-   * dominance fold (max-completed-reps per (stage, l/o) slot, idle
-   * chains in `bl`/`bo`) behind the [[cepUpdate]] buffer, which
-   * preserves the immediate-successor adjacency `bl` and the strict
-   * in-group hops rely on. There is NO final state — a loop can always
-   * extend — so there is no completion tombstone and no retention; the
-   * entry keeps 2k+2 longs (the batch machine's unbounded-operator
-   * contract, where `reps` likewise never stops growing). Reluctant
-   * caps the completion step at `minTimes` (the SAME policy point as
-   * the batch operator), so `reps` saturates at the floor while partial
-   * progress below it stays observable. Emission: delta-style on `reps`.
-   */
-  def streamingFunnelGroupLoop(spark: SparkSession, events: DataFrame,
-      group: Seq[graft.operators.Funnel.PatternStage], watermark: String,
-      consecutiveSeams: Boolean = false,
-      mode: graft.operators.Funnel.ConsumeMode =
-        graft.operators.Funnel.Greedy, minTimes: Int = 1)
-      : Dataset[FunnelGroupLoopUpdate] = {
-    graft.operators.Funnel.groupLoopRequire(group)
-    require(minTimes >= 1, "need minTimes >= 1")
-    val cap = mode match {
-      case graft.operators.Funnel.Greedy => None
-      case graft.operators.Funnel.Reluctant => Some(minTimes.toLong)
+    require(pattern.streamEndOnly.isEmpty,
+      s"${pattern.name} does not stream: " +
+        pattern.streamEndOnly.getOrElse(""))
+    val in = Pattern.Input(events, "user_id", "event_type", "ts", "event_id")
+    def folded[S <: Product](f: Pattern.Fold[S]): DataFrame =
+      runCep(events, watermark, f.machine, f.tp(in), f.v, f.fields,
+        f.perMatch, matchRetentionMs)(f.rows)(f.tag)
+    val out = pattern.plan match {
+      case f: Pattern.Fold[_] => folded(f)
+      case _: Pattern.Join => throw new IllegalStateException(pattern.name)
     }
-    runCep(events, watermark,
-      Cep.groupLoop(group.toIndexedSeq, consecutiveSeams, cap),
-      rowOut((u: Long, s: Cep.FunnelGroupLoopState) =>
-        FunnelGroupLoopUpdate(u, Cep.groupLoopReps(s))))
-  }
-
-  /** Streaming `times(m, n)` on a GROUP — [[graft.operators.Funnel
-    * .funnelGroupTimesRange]]'s twin: the batch reduction is pure
-    * reporting over the expansion machine, so the stream is
-    * [[streamingFunnelGroupTimes]] at the ceiling plus the threshold
-    * column. A TRAILING seam guard routes through
-    * [[streamingFunnelGroupTimesRangeGuarded]] — the batch routing
-    * mirrored, same guarded report shape (counts, no per-copy
-    * timestamps). `matchRetentionMs` applies ONLY to the expansion
-    * route: the guarded dominance machine holds a rep COUNT, never
-    * materialized matches, so there is nothing to retain and the
-    * setting is inapplicable (ignored, not an error — the guard is a
-    * property of the pattern, and failing on an orthogonal tuning
-    * knob would make routing observable as a crash). */
-  def streamingFunnelGroupTimesRange(spark: SparkSession,
-      events: DataFrame, group: Seq[graft.operators.Funnel.PatternStage],
-      minTimes: Int, maxTimes: Int, watermark: String,
-      consecutiveSeams: Boolean = false,
-      matchRetentionMs: Long = Long.MaxValue): DataFrame = {
-    require(minTimes >= 1 && maxTimes >= minTimes,
-      "need 1 <= minTimes <= maxTimes")
-    if (group.nonEmpty && group.last.notNextAfter.nonEmpty)
-      streamingFunnelGroupTimesRangeGuarded(spark, events, group,
-        minTimes, maxTimes, watermark, consecutiveSeams)
-    else streamingFunnelGroupTimes(spark, events, group, maxTimes,
-        watermark, consecutiveSeams, matchRetentionMs)
-      .withColumn("matched", col("reps_completed") >= minTimes)
-      .select(Seq(col("user_id"), col("reps_completed"),
-        col("matched")) ++
-        (for (r <- 1 to maxTimes; i <- 1 to group.length)
-          yield col(s"ts_r${r}_s${i}_us")): _*)
-  }
-
-  /** Streaming twin of the GUARDED bounded range ([[graft.operators
-    * .Funnel.funnelGroupTimesRange]] with a trailing seam guard) — the
-    * batch composition
-    * verbatim: the CAPPED streaming dominance machine at cap =
-    * `maxTimes` (the loop state machine carries the trailing seam
-    * kill and the completion-step saturation) plus the threshold
-    * report. Output `(user_id, reps_completed, matched)` — stream ≡
-    * batch across out-of-order waves, StreamingSpec-pinned. */
-  def streamingFunnelGroupTimesRangeGuarded(spark: SparkSession,
-      events: DataFrame, group: Seq[graft.operators.Funnel.PatternStage],
-      minTimes: Int, maxTimes: Int, watermark: String,
-      consecutiveSeams: Boolean = false): DataFrame = {
-    require(minTimes >= 1 && maxTimes >= minTimes,
-      "need 1 <= minTimes <= maxTimes")
-    streamingFunnelGroupLoop(spark, events, group, watermark,
-        consecutiveSeams, graft.operators.Funnel.Reluctant,
-        minTimes = maxTimes)
-      .select(col("user_id"),
-        col("reps").cast("int").as("reps_completed"),
-        (col("reps") >= lit(minTimes.toLong)).as("matched"))
-  }
-
-  /** Streaming `timesOrMore(n)` on a GROUP — [[graft.operators.Funnel
-    * .funnelGroupTimesOrMore]]'s twin: the dominance machine plus the
-    * threshold column; `mode = Reluctant` caps `reps` at the floor
-    * exactly as the batch side. */
-  def streamingFunnelGroupTimesOrMore(spark: SparkSession,
-      events: DataFrame, group: Seq[graft.operators.Funnel.PatternStage],
-      minTimes: Int, watermark: String,
-      consecutiveSeams: Boolean = false,
-      mode: graft.operators.Funnel.ConsumeMode =
-        graft.operators.Funnel.Greedy): DataFrame = {
-    require(minTimes >= 1, "need minTimes >= 1")
-    streamingFunnelGroupLoop(spark, events, group, watermark,
-        consecutiveSeams, mode, minTimes)
-      .withColumn("matched", col("reps") >= minTimes)
-  }
-
-  final case class FunnelIterUpdate(user_id: Long, stage_reached: Int,
-      ts_us: Seq[Option[Long]])
-
-  /**
-   * Streaming ITERATIVE-condition funnel —
-   * [[graft.operators.Funnel.funnelIterative]]'s twin: the min-anchor
-   * dominance vector (`d[j]` = minimal anchor among chains completing
-   * stage j, lossless under the `num >= 0` monotonicity contract)
-   * behind the [[cepUpdate]] buffer. Emission on any ts-slot change
-   * (stage progress; `d`-only improvements move no observable). The
-   * ts slots fill strictly in stage order, so completion is
-   * `reached == k`. `valCol` must already be integer fixed-point (the
-   * batch operator's contract); a NULL fails LOUDLY
-   * ([[graft.operators.Funnel.iterVal]]) — the typed encoder would
-   * otherwise fail opaquely and the batch twins would diverge.
-   */
-  def streamingFunnelIterative(spark: SparkSession, events: DataFrame,
-      valCol: String, stages: Seq[graft.operators.Funnel.IterStage],
-      anchor: graft.operators.Funnel.IterAnchor, watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelIterUpdate] = {
-    graft.operators.Funnel.iterRequire(stages)
-    runCep(events, watermark, Cep.iterative(stages.toIndexedSeq,
-        anchor == graft.operators.Funnel.AnchorFirst),
-      rowOut((u: Long, s: Cep.FunnelIterState) => FunnelIterUpdate(u,
-        Cep.slotsSet(s.ts), present(s.ts))),
-      matchRetentionMs, graft.operators.Funnel.iterVal(valCol))
-  }
-
-  /**
-   * Streaming PREDICATE funnel —
-   * [[graft.operators.Funnel.funnelWhere]]'s twin for per-stage
-   * SIMPLE conditions (Flink `where(SimpleCondition)` / `subtype`):
-   * stage j advances on the first mature event satisfying an arbitrary
-   * SERIALIZABLE predicate over (event type, value) — the streaming
-   * surface trades the batch side's Column predicates for Scala
-   * functions, since a closure must ship to the state store where a
-   * Column cannot. Same machine and contract as [[streamingFunnel]].
-   * `valCol` is the one carried value column (integer domain, the
-   * batch contract). NULL (or unparseable) values fail LOUDLY via the
-   * family's shared non-null guard ([[graft.operators.Funnel.iterVal]])
-   * — the typed state encoder cannot represent a NULL long, and a
-   * silent per-surface default would diverge from the batch
-   * predicate's NULL-is-false Column semantics with no signal; filter
-   * or default NULLs first.
-   */
-  def streamingFunnelWhere(spark: SparkSession, events: DataFrame,
-      valCol: String, stages: Seq[(String, Long) => Boolean],
-      watermark: String,
-      matchRetentionMs: Long = Long.MaxValue): Dataset[FunnelUpdate] = {
-    require(stages.nonEmpty, "need at least one stage")
-    runCep(events, watermark, Cep.where(stages.toIndexedSeq),
-      rowOut((u: Long, s: Cep.FunnelWhereState) =>
-        FunnelUpdate(u, s.stage, s.witnessUs)),
-      matchRetentionMs,
-      graft.operators.Funnel.iterVal(valCol, "streamingFunnelWhere"))
-  }
-
-  final case class FunnelAnyUpdate(user_id: Long, n_any: Long)
-
-  /**
-   * Streaming `allowCombinations()` loop-stage multiplicity —
-   * [[graft.operators.Funnel.funnelCombinations]]'s twin: the k-slot
-   * path-counting vector behind the [[cepUpdate]] buffer, with the
-   * pre-state rule (an event never extends the combinations it just
-   * created) and the loop rule (a loop-stage event also re-adds the
-   * stage's own pre-count — every existing combination may absorb
-   * it). Emission on count change (monotone — it only grows). The
-   * count never "completes": an active user's state is k longs
-   * forever, an all-zero one drops losslessly.
-   */
-  def streamingFunnelCombinations(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Boolean)],
-      watermark: String): Dataset[FunnelAnyUpdate] = {
-    require(stages.nonEmpty, "need at least one stage")
-    runCep(events, watermark, Cep.combinations(stages.toIndexedSeq),
-      rowOut((u: Long, s: Cep.FunnelAnyState) => FunnelAnyUpdate(u, s.c.last)))
-  }
-
-  /** Streaming `followedByAny` combination COUNT —
-    * [[graft.operators.Funnel.funnelAnyCount]]'s twin: the
-    * combinations counter with no loop stage. */
-  def streamingFunnelAnyCount(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], watermark: String): Dataset[FunnelAnyUpdate] =
-    streamingFunnelCombinations(spark, events, stages.map(_ -> false),
-      watermark)
-
-  final case class FunnelMatchEmit(user_id: Long, match_idx: Long,
-      ts_us: Seq[Long])
-
-  /**
-   * Streaming match ENUMERATION —
-   * [[graft.operators.Funnel.funnelMulti]]'s twin (AFTER MATCH SKIP
-   * PAST LAST EVENT): each completed non-overlapping match emits
-   * exactly ONE `(user_id, match_idx, witnesses)` row at the moment its
-   * last stage matures behind the [[cepUpdate]] buffer, up to
-   * `maxMatches` per user (later matches still advance the counter
-   * silently, the batch cap contract; the batch `n_matches` total is
-   * the stream's running high-water mark and is not re-emitted per
-   * row). State is O(k) forever for an active user — the pointer must
-   * persist because skip-past-last matching never "completes"; a user
-   * whose counter is 0 with nothing buffered is dropped losslessly.
-   */
-  def streamingFunnelMulti(spark: SparkSession, events: DataFrame,
-      stages: Seq[String], maxMatches: Int,
-      watermark: String): Dataset[FunnelMatchEmit] = {
-    require(stages.nonEmpty && maxMatches >= 1,
-      "need stages and maxMatches >= 1")
-    runCep(events, watermark,
-      Cep.matches(stages.toIndexedSeq, maxMatches, None), matchOut)
-  }
-
-  /**
-   * Streaming ABSENCE alarm — [[graft.operators.Funnel
-   * .funnelMatchesAbsence]]'s twin (Flink's trailing
-   * `notFollowedBy(B).within(T)`, the one pattern shape whose match
-   * can only emit on TIME — the moment the window closes without the
-   * blocker — which is exactly Flink's timed-out-partial-match
-   * emission). The [[streamingFunnelMulti]] pointer machine enumerates
-   * skip-past-last matches over the mature (watermark-ordered) event
-   * stream; a completed match whose span fits the window enters the
-   * holding pen instead of emitting; a mature `absentType` event at
-   * time t kills every held match with completion < t ≤ start + T
-   * (time comparisons, the batch contract — a blocker sharing the
-   * completion's exact timestamp does not kill); once the watermark
-   * passes start + T the tail is fully observed and the match emits.
-   * The held deadlines are the machine's wake-ups, so matches mature
-   * even when the user's stream goes quiet — the ALARM fires without
-   * a further event, the absence semantics' whole point. Held state is
-   * bounded by `maxMatches`; `match_idx` gaps mark window-cut or
-   * blocker-killed matches (batch contract; the batch `n_matches`
-   * recount is deliberately absent mid-stream — StreamingSpec pins the
-   * drain-time recount law instead).
-   */
-  def streamingFunnelMatchesAbsence(spark: SparkSession,
-      events: DataFrame, stages: Seq[String], maxMatches: Int,
-      windowMicros: Long, absentType: String,
-      watermark: String): Dataset[FunnelMatchEmit] = {
-    require(stages.nonEmpty && maxMatches >= 1 && windowMicros > 0,
-      "need stages, maxMatches >= 1 and windowMicros > 0")
-    runCep(events, watermark, Cep.matches(stages.toIndexedSeq,
-      maxMatches, Some((windowMicros, absentType))), matchOut)
-  }
-
-  /** Streaming GROUP match enumeration — [[graft.operators.Funnel
-    * .funnelGroupMatches]]'s twin: the batch reduction is pure
-    * composition (the cyclic witness machine over the `times`-fold
-    * type expansion), so the stream is [[streamingFunnelMulti]] over
-    * the same expansion with the flat witnesses relabeled to
-    * `ts_r<rep>_s<stage>_us`. */
-  def streamingFunnelGroupMatches(spark: SparkSession, events: DataFrame,
-      groupTypes: Seq[String], times: Int, maxMatches: Int,
-      watermark: String): DataFrame = {
-    require(groupTypes.nonEmpty && times >= 1 && maxMatches >= 1,
-      "need groupTypes, times >= 1 and maxMatches >= 1")
-    val k = groupTypes.length
-    streamingFunnelMulti(spark, events,
-        Seq.fill(times)(groupTypes).flatten, maxMatches, watermark)
-      .toDF()
-      .select(col("user_id") +: col("match_idx") +:
-        (for (r <- 1 to times; i <- 1 to k) yield
-          element_at(col("ts_us"), (r - 1) * k + i)
-            .as(s"ts_r${r}_s${i}_us")): _*)
-  }
-
-  /** Streaming span-bounded group-match enumeration —
-    * [[graft.operators.Funnel.funnelGroupMatchesWithin]]'s twin: the
-    * canonical skip-past-last matches stream out as they mature, and
-    * the whole-match span bound filters them row-by-row (the span is
-    * known the moment a match completes — no extra state).
-    * `match_idx` keeps its enumeration index, so a cut match leaves a
-    * visible gap, exactly the batch contract; the batch side's
-    * `n_matches` recount has no streaming analogue (the count is not
-    * final until the stream ends) and is deliberately absent. */
-  def streamingFunnelGroupMatchesWithin(spark: SparkSession,
-      events: DataFrame, groupTypes: Seq[String], times: Int,
-      maxMatches: Int, windowMicros: Long,
-      watermark: String): DataFrame = {
-    require(windowMicros > 0, "need windowMicros > 0")
-    val k = groupTypes.length
-    streamingFunnelGroupMatches(spark, events, groupTypes, times,
-        maxMatches, watermark)
-      .filter(col(s"ts_r${times}_s${k}_us") - col("ts_r1_s1_us") <=
-        windowMicros)
-  }
-
-  /**
-   * Streaming RANGE-quantified group absence —
-   * [[graft.operators.Funnel.funnelGroupMatchesRangeAbsence]]'s twin
-   * (`begin(group).times(m, n).notFollowedBy(B).within(T)`). FULL
-   * (`maxTimes`-repetition) matches stream exactly like the fixed
-   * form's: [[streamingFunnelMatchesAbsence]]'s holding pen over the
-   * `maxTimes`-fold expansion — span-fit at completion, killed by a
-   * mature tail blocker, emitted on the event-time timer when the
-   * watermark closes the tail — with the flat witnesses relabeled
-   * `ts_r<rep>_s<stage>_us` and `reps = maxTimes`.
-   *
-   * THE TRAILING SHORT MATCH IS DELIBERATELY NOT STREAMED: under the
-   * batch contract a short match (m ≤ reps < n repetitions) exists
-   * iff the greedy chain NEVER extends to its next repetition — a
-   * property of the whole remaining stream that no finite watermark
-   * can certify (the extension's events may carry any future
-   * timestamp; the match window bounds the span FILTER, not
-   * consumption). It is a STREAM-END object, like the batch
-   * `n_matches` recount the family already keeps off the stream
-   * (w70's convention) — a bounded stream recovers it by running the
-   * batch operator over the drained corpus, and StreamingSpec pins
-   * exactly that composition law: streamed rows ≡ the batch output's
-   * `reps = maxTimes` rows, and the batch remainder is only short
-   * matches.
-   */
-  def streamingFunnelGroupMatchesRangeAbsence(spark: SparkSession,
-      events: DataFrame, groupTypes: Seq[String], minTimes: Int,
-      maxTimes: Int, maxMatches: Int, windowMicros: Long,
-      absentType: String, watermark: String): DataFrame = {
-    require(groupTypes.nonEmpty && minTimes >= 1 && maxTimes >= minTimes,
-      "need groupTypes and 1 <= minTimes <= maxTimes")
-    val k = groupTypes.length
-    streamingFunnelMatchesAbsence(spark, events,
-        Seq.fill(maxTimes)(groupTypes).flatten, maxMatches,
-        windowMicros, absentType, watermark)
-      .toDF()
-      .select(col("user_id") +: col("match_idx") +:
-        lit(maxTimes).as("reps") +:
-        (for (r <- 1 to maxTimes; i <- 1 to k) yield
-          element_at(col("ts_us"), (r - 1) * k + i)
-            .as(s"ts_r${r}_s${i}_us")): _*)
-  }
-
-  /**
-   * Streaming after-match-skip enumeration —
-   * [[graft.operators.Funnel.funnelSkip]]'s twin: per-user state is
-   * the per-start branch NFA's buckets (all branches in a bucket
-   * advance together) plus the running anchor threshold, so the
-   * pruning scan happens ONLINE — each completion is checked against
-   * the threshold the moment its last stage matures, which is exactly
-   * the batch completion-order scan because the [[cepUpdate]] buffer
-   * folds mature events in watermark order. Each surviving match emits
-   * exactly ONE `(user_id, match_idx, witnesses)` row, up to
-   * `maxMatches` (later survivors advance the counter silently, the
-   * batch cap contract). Branches whose start falls behind the
-   * threshold can never emit and are garbage-collected at each flush —
-   * under an anchored strategy the live state is bounded by the
-   * branches started since the last emitted match's anchor
-   * (SkipToNext keeps every live branch, the batch contract). A user
-   * with no branches, no count and nothing buffered drops losslessly.
-   */
-  def streamingFunnelSkip(spark: SparkSession, events: DataFrame,
-      stages: Seq[(String, Int)],
-      skip: graft.operators.Funnel.SkipStrategy, maxMatches: Int,
-      watermark: String): Dataset[FunnelMatchEmit] = {
-    graft.operators.Funnel.skipRequire(stages, skip, maxMatches)
-    runCep(events, watermark, Cep.skip(stages, skip, maxMatches), matchOut)
+    pattern.post(out).drop(pattern.drainCols: _*)
   }
 
   // -------------------------------------------------------------------

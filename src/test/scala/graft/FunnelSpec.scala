@@ -2,11 +2,19 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.Funnel
+import graft.operators.{Funnel, Pattern}
 
 class FunnelSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** A loop pattern in either consume mode: reluctant is the bounded
+    * quantifier at its floor. */
+  private def loopMode(stages: Seq[(String, Int)],
+      mode: Funnel.ConsumeMode): Pattern =
+    if (mode == Funnel.Reluctant)
+      Pattern.timesRange(stages.map { case (t, m) => (t, m, m) })
+    else Pattern.loop(stages)
 
   private def ts(s: Int) = Timestamp.valueOf(f"2026-01-01 00:00:$s%02d")
   private val us0 = ts(0).getTime * 1000L
@@ -84,8 +92,8 @@ class FunnelSpec extends SparkSpec {
       // user 7: greedy earliest witness — the SECOND view is never needed
       (7L, 15L, ts(10), "view"), (7L, 16L, ts(15), "view"), (7L, 17L, ts(20), "click")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val r = Funnel.funnel(ev, "user_id", "event_type", "ts", "event_id",
-        Seq("view", "click", "purchase"))
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.times(Seq("view", "click", "purchase").map(_ -> 1)))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         Option(x.get(2)).map(_.asInstanceOf[Long] - us0),
@@ -122,8 +130,9 @@ class FunnelSpec extends SparkSpec {
       }
       (stage, wit.toSeq)
     }.toMap
-    val got = Funnel.funnel(events.toDF("user_id", "event_id", "ts", "event_type"),
-        "user_id", "event_type", "ts", "event_id", stages)
+    val got = Funnel.run(events.toDF("user_id", "event_id", "ts", "event_type"),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.times(stages.map(_ -> 1)))
       .collect().map { x =>
         x.getLong(0) -> ((x.getInt(1),
           (2 to 4).map(x.get).filter(_ != null).map(_.asInstanceOf[Long]).toSeq))
@@ -156,8 +165,8 @@ class FunnelSpec extends SparkSpec {
       // when the pattern repeats its type (view,view needs TWO events)
       (5L, 14L, ts(10), "view")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val r = Funnel.funnelWithin(ev, "user_id", "event_type", "ts",
-        "event_id", Seq("view", "click", "purchase"), W)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.within(Seq("view", "click", "purchase"), W))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         Option(x.get(2)).map(_.asInstanceOf[Long] - us0)))
@@ -167,8 +176,9 @@ class FunnelSpec extends SparkSpec {
       (3L, 1, Some(2 * s)),
       (4L, 3, Some(10 * s)),
       (5L, 1, Some(10 * s))))
-    val rep = Funnel.funnelWithin(ev.filter("user_id = 5"),
-        "user_id", "event_type", "ts", "event_id", Seq("view", "view"), W)
+    val rep = Funnel.run(ev.filter("user_id = 5"),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.within(Seq("view", "view"), W))
       .collect().map(x => (x.getLong(0), x.getInt(1)))
     assert(rep === Array((5L, 1)))
   }
@@ -200,19 +210,19 @@ class FunnelSpec extends SparkSpec {
       (sr, if (sr > 0) b(sr - 1) else None)
     }.toMap
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelWithin(df, "user_id", "event_type", "ts",
-        "event_id", stages, W)
+    val got = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.within(stages, W))
       .collect().map(x => x.getLong(0) ->
         ((x.getInt(1), Option(x.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(got === expected)
     assert(expected.values.exists(_._1 == 3)) // completions exercised
     // with a window wider than the log, stage_reached == plain funnel
-    val wide = Funnel.funnelWithin(df, "user_id", "event_type", "ts",
-        "event_id", stages, 86400000000L)
+    val wide = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.within(stages, 86400000000L))
       .collect().map(x => x.getLong(0) ->
         ((x.getInt(1), Option(x.get(2)).map(_.asInstanceOf[Long])))).toMap
-    val plain = Funnel.funnel(df, "user_id", "event_type", "ts",
-        "event_id", stages)
+    val plain = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.times(stages.map(_ -> 1)))
       .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(wide.view.mapValues(_._1).toMap === plain)
     // and the 8 s window actually bit somewhere: some user's verdict
@@ -239,23 +249,23 @@ class FunnelSpec extends SparkSpec {
       (4L, 13L, ts(0), "view"), (4L, 14L, ts(5), "error"),
       (4L, 15L, ts(5), "click")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val r = Funnel.funnelGuarded(ev, "user_id", "event_type", "ts",
-        "event_id", stages, nb)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(stages, nb))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1)))
     assert(r === Array((1L, 2), (2L, 2), (3L, 3), (4L, 1)))
     // a blocker type can BE a stage type: as the matched endpoint it is
     // not "between" — view then error converts under stages(view,error)
     // even though error also guards the gap
-    val r2 = Funnel.funnelGuarded(ev.filter("user_id = 1"), "user_id",
-        "event_type", "ts", "event_id", Seq("view", "error"),
-        Seq(Some("error")))
+    val r2 = Funnel.run(ev.filter("user_id = 1"),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(Seq("view", "error"), Seq(Some("error"))))
       .collect().map(x => (x.getLong(0), x.getInt(1)))
     assert(r2 === Array((1L, 2)))
     // None = unguarded gap: user 2 completes when only gap 1 is guarded
-    val r3 = Funnel.funnelGuarded(ev.filter("user_id = 2"), "user_id",
-        "event_type", "ts", "event_id", stages,
-        Seq(Some("error"), None))
+    val r3 = Funnel.run(ev.filter("user_id = 2"),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(stages, Seq(Some("error"), None)))
       .collect().map(x => (x.getLong(0), x.getInt(1)))
     assert(r3 === Array((2L, 3)))
   }
@@ -288,15 +298,15 @@ class FunnelSpec extends SparkSpec {
       ever.count(identity)
     }.toMap
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelGuarded(df, "user_id", "event_type", "ts",
-        "event_id", stages, nb)
+    val got = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(stages, nb))
       .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(got === expected)
     assert(expected.values.exists(_ == 3))
-    val single = Funnel.funnelGuarded(df, "user_id", "event_type", "ts",
-      "event_id", stages, nb).orderBy("user_id").collect()
-    val byTime = Funnel.funnelGuarded(splitByTime(df), "user_id",
-      "event_type", "ts", "event_id", stages, nb)
+    val single = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(stages, nb)).orderBy("user_id").collect()
+    val byTime = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.guarded(stages, nb))
       .orderBy("user_id").collect()
     assert(byTime === single)
   }
@@ -317,8 +327,8 @@ class FunnelSpec extends SparkSpec {
       (3L, 12L, ts(4), "click"), (3L, 13L, ts(6), "purchase")
     ).toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 2), ("purchase", 1))
-    val r = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
-        "event_id", stages)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.times(stages))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         Option(x.get(2)).map(_.asInstanceOf[Long] - us0),
@@ -330,10 +340,10 @@ class FunnelSpec extends SparkSpec {
       (2L, 0, None, None, None),
       (3L, 1, Some(2 * s), None, None)))
     // the log split by event time gives the same rows
-    val single = Funnel.funnelTimes(ev, "user_id", "event_type", "ts",
-      "event_id", stages).orderBy("user_id").collect()
-    val byTime = Funnel.funnelTimes(splitByTime(ev), "user_id", "event_type", "ts",
-      "event_id", stages)
+    val single = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.times(stages)).orderBy("user_id").collect()
+    val byTime = Funnel.run(splitByTime(ev), "user_id", "event_type", "ts", "event_id",
+        Pattern.times(stages))
       .orderBy("user_id").collect()
     assert(byTime === single)
   }
@@ -382,8 +392,8 @@ class FunnelSpec extends SparkSpec {
       (4L, 12L, ts(1), "error")
     ).toDF("user_id", "event_id", "ts", "event_type")
     val s = 1000000L
-    val r = Funnel.funnelLoop(ev, "user_id", "event_type", "ts", "event_id",
-        stages)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.loop(stages))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         (2 to 6 by 2).map(x.getLong).toSeq,
@@ -406,8 +416,8 @@ class FunnelSpec extends SparkSpec {
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
     val expected = events.groupBy(_._1).view
       .mapValues(loopRef(_, stages)).toMap
-    val single = Funnel.funnelLoop(df, "user_id", "event_type", "ts",
-      "event_id", stages)
+    val single = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.loop(stages))
     val got = single.collect().map { x =>
       x.getLong(0) -> ((x.getInt(1), (2 to 6 by 2).map(x.getLong).toSeq,
         (3 to 7 by 2).map(i =>
@@ -417,8 +427,8 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(_._1 == 3)) // generator reaches completion
     assert(expected.values.exists(v => v._2.head > 1)) // loops really absorb
     val singleRows = single.orderBy("user_id").collect()
-    val byTime = Funnel.funnelLoop(splitByTime(df), "user_id", "event_type",
-      "ts", "event_id", stages)
+    val byTime = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.loop(stages))
       .orderBy("user_id").collect()
     assert(byTime === singleRows)
   }
@@ -461,8 +471,8 @@ class FunnelSpec extends SparkSpec {
       (2L, 12L, ts(3), "click"), (2L, 13L, ts(4), "purchase")
     ).toDF("user_id", "event_id", "ts", "event_type")
     val s = 1000000L
-    val r = Funnel.funnelTimesRange(ev, "user_id", "event_type", "ts",
-        "event_id", stages)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.timesRange(stages))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         (2 to 6 by 2).map(x.getLong).toSeq,
@@ -483,8 +493,8 @@ class FunnelSpec extends SparkSpec {
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
     val expected = events.groupBy(_._1).view
       .mapValues(rangeRef(_, stages)).toMap
-    val single = Funnel.funnelTimesRange(df, "user_id", "event_type", "ts",
-      "event_id", stages)
+    val single = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.timesRange(stages))
     val got = single.collect().map { x =>
       x.getLong(0) -> ((x.getInt(1), (2 to 6 by 2).map(x.getLong).toSeq,
         (3 to 7 by 2).map(i =>
@@ -496,8 +506,8 @@ class FunnelSpec extends SparkSpec {
     assert(expected.values.exists(v => v._2(0) == 2L || v._2(1) == 3L))
     val singleRows = single.orderBy("user_id").collect()
     // the log split by event time gives the same rows
-    val byTime = Funnel.funnelTimesRange(splitByTime(df), "user_id",
-      "event_type", "ts", "event_id", stages)
+    val byTime = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.timesRange(stages))
       .orderBy("user_id").collect()
     assert(byTime === singleRows)
   }
@@ -521,8 +531,8 @@ class FunnelSpec extends SparkSpec {
       (4L, 10L, ts(0), "view"), (4L, 11L, ts(4), "click"),
       (4L, 12L, ts(6), "error"), (4L, 13L, ts(9), "purchase")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val r = Funnel.funnelWithinGuarded(ev, "user_id", "event_type", "ts",
-        "event_id", stages, W, nb)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.within(stages, W, nb))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         Option(x.get(2)).map(_.asInstanceOf[Long] - us0)))
@@ -557,9 +567,9 @@ class FunnelSpec extends SparkSpec {
       val sr = m.count(_.isDefined)
       (sr, if (sr > 0) m(sr - 1) else None)
     }.toMap
-    val got = Funnel.funnelWithinGuarded(
-        events.toDF("user_id", "event_id", "ts", "event_type"),
-        "user_id", "event_type", "ts", "event_id", stages, W, nb)
+    val got = Funnel.run(events.toDF("user_id", "event_id", "ts", "event_type"),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.within(stages, W, nb))
       .collect().map(x => x.getLong(0) ->
         ((x.getInt(1), Option(x.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(got === expected)
@@ -568,8 +578,8 @@ class FunnelSpec extends SparkSpec {
 
   test("plan gate: the funnel is ONE user-keyed shuffle, no window, no join") {
     val ev = spark.read.parquet(sf("sf0.001") + "/events.parquet")
-    val plan = Funnel.funnel(ev, "user_id", "event_type", "ts", "event_id",
-      Seq("view", "click", "purchase")).queryExecution.executedPlan.toString
+    val plan = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.times(Seq("view", "click", "purchase").map(_ -> 1))).queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size == 1,
       s"expected exactly one shuffle (partial+final agg):\n$plan")
     assert(!plan.contains("Window") && !plan.contains("Join"),
@@ -578,8 +588,8 @@ class FunnelSpec extends SparkSpec {
 
   test("plan gate: the windowed funnel keeps the one-shuffle shape; the DP adds state, not plan") {
     val ev = spark.read.parquet(sf("sf0.001") + "/events.parquet")
-    val plan = Funnel.funnelWithin(ev, "user_id", "event_type", "ts",
-      "event_id", Seq("view", "click", "purchase"), 7200000000L)
+    val plan = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.within(Seq("view", "click", "purchase"), 7200000000L))
       .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size == 1,
       s"expected exactly one shuffle (partial+final agg):\n$plan")
@@ -595,8 +605,7 @@ class FunnelSpec extends SparkSpec {
 
   private def runPattern(ev: org.apache.spark.sql.DataFrame,
       stages: Seq[PatternStage]) =
-    Funnel.funnelPattern(ev, "user_id", "event_type", "ts", "event_id",
-        stages)
+    Funnel.run(ev, "user_id", "event_type", "ts", "event_id", Pattern.pattern(stages))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         (2 until 2 + stages.length).map(i =>
@@ -748,8 +757,8 @@ class FunnelSpec extends SparkSpec {
       val got = runPattern(df, stages).map(x =>
         x._1 -> ((x._2, x._3.map(_.map(_ + us0))))).toMap
       assert(got === expected, s"single fold, config $stages")
-      val gotB = Funnel.funnelPattern(splitByTime(df), "user_id", "event_type",
-          "ts", "event_id", stages)
+      val gotB = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+          Pattern.pattern(stages))
         .orderBy("user_id").collect()
         .map(x => (x.getLong(0), x.getInt(1),
           (2 until 2 + stages.length).map(i =>
@@ -768,8 +777,8 @@ class FunnelSpec extends SparkSpec {
 
   private def runMulti(ev: org.apache.spark.sql.DataFrame,
       stages: Seq[String], maxMatches: Int, split: Boolean = false) =
-    Funnel.funnelMulti(splitByTime(ev, split), "user_id", "event_type", "ts", "event_id",
-        stages, maxMatches)
+    Funnel.run(splitByTime(ev, split), "user_id", "event_type", "ts", "event_id",
+        Pattern.matches(stages, maxMatches))
       .orderBy("user_id", "match_idx").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         (3 until 3 + stages.length).map(i =>
@@ -829,8 +838,8 @@ class FunnelSpec extends SparkSpec {
   private def runSkip(ev: org.apache.spark.sql.DataFrame,
       stages: Seq[(String, Int)], skip: Funnel.SkipStrategy,
       maxMatches: Int) =
-    Funnel.funnelSkip(ev, "user_id", "event_type", "ts", "event_id",
-        stages, skip, maxMatches)
+    Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.skip(stages, skip, maxMatches))
       .orderBy("user_id", "match_idx").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         (3 until 3 + stages.map(_._2).sum).map(i =>
@@ -996,8 +1005,8 @@ class FunnelSpec extends SparkSpec {
       (3L, 20L, ts(1), "view"), (3L, 21L, ts(2), "error"),
       (3L, 22L, ts(3), "view")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelLoopConsecutive(ev, "user_id", "event_type",
-        "ts", "event_id", Seq("view" -> 2, "click" -> 2))
+    val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.loopConsecutive(Seq("view" -> 2, "click" -> 2)))
       .orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         Option(r.get(3)).map(_.asInstanceOf[Long] - us0),
@@ -1020,8 +1029,8 @@ class FunnelSpec extends SparkSpec {
       (99L, 1000L, ts(1), "view"), (99L, 1001L, ts(2), "error"),
       (99L, 1002L, ts(3), "view"), (99L, 1003L, ts(4), "error"))
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelLoopConsecutive(df, "user_id", "event_type",
-        "ts", "event_id", stages)
+    val got = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.loopConsecutive(stages))
       .orderBy("user_id").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1),
         Seq((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long])),
@@ -1036,8 +1045,8 @@ class FunnelSpec extends SparkSpec {
     assert(got.values.exists(_._1 == 2), "generator must complete some")
     assert(got.values.exists(_._1 == 0), "generator must fail some")
     // the log split by event time gives the same rows
-    val byTime = Funnel.funnelLoopConsecutive(splitByTime(df), "user_id",
-        "event_type", "ts", "event_id", stages)
+    val byTime = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.loopConsecutive(stages))
       .orderBy("user_id").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1),
         Seq((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long])),
@@ -1059,8 +1068,9 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1))
     def one(mode: Funnel.ConsumeMode, split: Boolean = false) = {
-      val r = Funnel.funnelLoopConsecutive(splitByTime(ev, split), "user_id",
-        "event_type", "ts", "event_id", stages, mode).collect()
+      val r = Funnel.run(splitByTime(ev, split),
+          "user_id", "event_type", "ts", "event_id",
+          Pattern.loopConsecutive(stages, mode)).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 2).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1079,10 +1089,10 @@ class FunnelSpec extends SparkSpec {
       (2L, 12L, ts(3), "view"), (2L, 13L, ts(4), "view"),
       (2L, 14L, ts(5), "click"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val gB = Funnel.funnelLoopConsecutive(broken, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.Greedy).collect()(0)
-    val rB = Funnel.funnelLoopConsecutive(broken, "user_id",
-      "event_type", "ts", "event_id", stages, Funnel.Reluctant).collect()(0)
+    val gB = Funnel.run(broken, "user_id", "event_type", "ts", "event_id",
+        Pattern.loopConsecutive(stages, Funnel.Greedy)).collect()(0)
+    val rB = Funnel.run(broken, "user_id", "event_type", "ts", "event_id",
+        Pattern.loopConsecutive(stages, Funnel.Reluctant)).collect()(0)
     assert(gB.getInt(1) === 2 && rB.getInt(1) === 2)
     assert(gB.getLong(3) === tsUs(4) && rB.getLong(3) === tsUs(4))
   }
@@ -1103,8 +1113,8 @@ class FunnelSpec extends SparkSpec {
     val stages = Seq(("view", 1, Some("signup")), ("click", 2, None),
       ("purchase", 1, Some("error")))
     def run(mode: Funnel.ConsumeMode, split: Boolean = false) =
-      Funnel.funnelLoopUntil(splitByTime(ev, split), "user_id", "event_type", "ts",
-        "event_id", stages, mode).orderBy("user_id").collect()
+      Funnel.run(splitByTime(ev, split), "user_id", "event_type", "ts", "event_id",
+          Pattern.loopUntil(stages, mode)).orderBy("user_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), (0 until 3).map(j =>
           (r.getLong(2 + 2 * j),
             Option(r.get(3 + 2 * j)).map(_.asInstanceOf[Long]))))).toSeq
@@ -1136,8 +1146,8 @@ class FunnelSpec extends SparkSpec {
         e => e.getField("event_type").startsWith("view") &&
           e.getField("v") >= 5L,
         e => e.getField("event_type") === "click")
-    val got = Funnel.funnelWhere(ev, "user_id", "ts", "event_id",
-        Seq("event_type", "v"), stages)
+    val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.where(Seq("event_type", "v"), stages))
       .orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
@@ -1153,11 +1163,11 @@ class FunnelSpec extends SparkSpec {
       (rnd.nextInt(10).toLong, i.toLong, ts(rnd.nextInt(60)),
         types(rnd.nextInt(types.length)), rnd.nextInt(12).toLong)
     }.toDF("user_id", "event_id", "ts", "event_type", "v")
-    val single = Funnel.funnelWhere(big, "user_id", "ts", "event_id",
-        Seq("event_type", "v"), stages)
+    val single = Funnel.run(big, "user_id", "event_type", "ts", "event_id",
+        Pattern.where(Seq("event_type", "v"), stages))
       .orderBy("user_id").collect().map(_.toString).toSeq
-    val byTime = Funnel.funnelWhere(splitByTime(big), "user_id", "ts",
-        "event_id", Seq("event_type", "v"), stages)
+    val byTime = Funnel.run(splitByTime(big), "user_id", "event_type", "ts", "event_id",
+        Pattern.where(Seq("event_type", "v"), stages))
       .orderBy("user_id").collect().map(_.toString).toSeq
     assert(byTime === single)
   }
@@ -1172,8 +1182,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type", "v")
     val stages2 = Seq(Funnel.IterStage("view"),
       Funnel.IterStage("click", Some(Funnel.RelGt(1, 1))))
-    val r1 = Funnel.funnelIterative(trap, "user_id", "event_type", "ts",
-      "event_id", "v", stages2, Funnel.AnchorFirst).collect()
+    val r1 = Funnel.run(trap, "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages2, Funnel.AnchorFirst)).collect()
     assert(r1.length === 1 && r1(0).getInt(1) === 2)
     assert(r1(0).getLong(2) === tsUs(1)) // first view MATCH is still @1
     assert(r1(0).getLong(3) === tsUs(3)) // the click that greedy loses
@@ -1186,15 +1196,14 @@ class FunnelSpec extends SparkSpec {
     val stages3 = Seq(Funnel.IterStage("x"),
       Funnel.IterStage("x", Some(Funnel.RelGt(1, 1))),
       Funnel.IterStage("x", Some(Funnel.RelGt(1, 1))))
-    val r2 = Funnel.funnelIterative(inc, "user_id", "event_type", "ts",
-      "event_id", "v", stages3, Funnel.AnchorPrev).collect()
+    val r2 = Funnel.run(inc, "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages3, Funnel.AnchorPrev)).collect()
     assert(r2.length === 1 && r2(0).getInt(1) === 3)
     assert((2 to 4).map(r2(0).getLong) === Seq(tsUs(1), tsUs(3), tsUs(4)))
     // the first stage cannot carry a condition
     val e = intercept[IllegalArgumentException](
-      Funnel.funnelIterative(inc, "user_id", "event_type", "ts",
-        "event_id", "v",
-        Seq(Funnel.IterStage("x", Some(Funnel.RelGt(1, 1))))))
+      Funnel.run(inc, "user_id", "event_type", "ts", "event_id",
+          Pattern.iterative("v", Seq(Funnel.IterStage("x", Some(Funnel.RelGt(1, 1)))))))
     assert(e.getMessage.contains("first stage"))
   }
 
@@ -1215,29 +1224,31 @@ class FunnelSpec extends SparkSpec {
       }
       false
     }
-    val e1 = intercept[Throwable](Funnel.funnelIterative(withNull,
-      "user_id", "event_type", "ts", "event_id", "v", stages).collect())
+    val e1 = intercept[Throwable](Funnel.run(withNull,
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages)).collect())
     assert(chainHas(e1, "NULL in value column"))
-    val e2 = intercept[Throwable](Funnel.funnelIterative(splitByTime(withNull),
-      "user_id", "event_type", "ts", "event_id", "v", stages).collect())
+    val e2 = intercept[Throwable](Funnel.run(splitByTime(withNull),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages)).collect())
     assert(chainHas(e2, "NULL in value column"))
     // string order column: same-us ties must break in the STRING order
     // on both plans ("10" < "9" lexicographically)
     val tied = Seq(
       (1L, "9", ts(1), "view", 5L), (1L, "10", ts(1), "click", 50L))
       .toDF("user_id", "event_id", "ts", "event_type", "v")
-    val fold = Funnel.funnelIterative(tied, "user_id", "event_type",
-      "ts", "event_id", "v", stages).collect().map(_.toString).toSeq
-    val sorted = Funnel.funnelIterative(splitByTime(tied), "user_id",
-      "event_type", "ts", "event_id", "v", stages).collect().map(_.toString).toSeq
+    val fold = Funnel.run(tied, "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages)).collect().map(_.toString).toSeq
+    val sorted = Funnel.run(splitByTime(tied), "user_id", "event_type", "ts", "event_id",
+        Pattern.iterative("v", stages)).collect().map(_.toString).toSeq
     assert(sorted === fold)
     // and the string order genuinely matters: click "10" precedes view
     // "9", so the funnel must NOT complete
     assert(fold.length === 1 && fold(0).contains(",1,"))
   }
 
-  test("lazy build: every public funnel* entry point builds with no Spark job over a frame whose scan throws") {
-    import org.apache.spark.sql.{DataFrame, Row}
+  test("lazy build: every Pattern constructor builds with no Spark job on Funnel.run over a frame whose scan throws") {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_id", LongType), StructField("ts", StringType),
@@ -1246,7 +1257,6 @@ class FunnelSpec extends SparkSpec {
       spark.sparkContext.parallelize(Seq(1), 1)
         .mapPartitions[Row](_ => throw new RuntimeException("scan ran")),
       schema)
-    val (u, tp, t, o) = ("user_id", "event_type", "ts", "event_id")
     val typed = Seq("view", "click", "purchase")
     val pattern = Seq(Funnel.PatternStage("view"),
       Funnel.PatternStage("click", strict = true))
@@ -1254,76 +1264,58 @@ class FunnelSpec extends SparkSpec {
       Funnel.PatternStage("click", notNextAfter = Some("error")))
     val loop = Seq("view" -> 2, "click" -> 1)
     val W = 60000000L
-    // one row per public entry point: every shape's plan must be built
-    // without running the scan, the user-keyed exchange or any probe
-    val shapes: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "funnel" -> (df => Funnel.funnel(df, u, tp, t, o, typed)),
-      "funnelTimes" -> (df => Funnel.funnelTimes(df, u, tp, t, o, loop)),
-      "funnelLoop" -> (df => Funnel.funnelLoop(df, u, tp, t, o, loop)),
-      "funnelLoop reluctant" -> (df => Funnel.funnelLoop(df, u, tp, t, o,
-        loop, Funnel.Reluctant)),
-      "funnelTimesRange" -> (df => Funnel.funnelTimesRange(df, u, tp, t, o,
-        Seq(("view", 1, 2), ("click", 1, 1)))),
-      "funnelLoopConsecutive" -> (df => Funnel.funnelLoopConsecutive(df, u,
-        tp, t, o, loop)),
-      "funnelLoopUntil" -> (df => Funnel.funnelLoopUntil(df, u, tp, t, o,
-        Seq(("view", 1, Some("error")), ("click", 1, None)))),
-      "funnelWithin" -> (df => Funnel.funnelWithin(df, u, tp, t, o, typed,
-        W)),
-      "funnelGuarded" -> (df => Funnel.funnelGuarded(df, u, tp, t, o, typed,
-        Seq(Some("error"), None))),
-      "funnelWithinGuarded" -> (df => Funnel.funnelWithinGuarded(df, u, tp,
-        t, o, typed, W, Seq(Some("error"), None))),
-      "funnelPattern" -> (df => Funnel.funnelPattern(df, u, tp, t, o,
-        pattern)),
-      "funnelPatternWithin" -> (df => Funnel.funnelPatternWithin(df, u, tp,
-        t, o, pattern, W)),
-      "funnelGroupTimes" -> (df => Funnel.funnelGroupTimes(df, u, tp, t, o,
-        pattern, 2)),
-      "funnelGroupTimesWithin" -> (df => Funnel.funnelGroupTimesWithin(df,
-        u, tp, t, o, pattern, 2, W)),
-      "funnelGroupLoop" -> (df => Funnel.funnelGroupLoop(df, u, tp, t, o,
-        guarded)),
-      "funnelGroupTimesRange" -> (df => Funnel.funnelGroupTimesRange(df, u,
-        tp, t, o, pattern, 1, 2)),
-      "funnelGroupTimesRange guarded" -> (df => Funnel.funnelGroupTimesRange(
-        df, u, tp, t, o, guarded, 1, 2)),
-      "funnelGroupTimesOrMore" -> (df => Funnel.funnelGroupTimesOrMore(df,
-        u, tp, t, o, pattern, 2)),
-      "funnelGroupMatches" -> (df => Funnel.funnelGroupMatches(df, u, tp, t,
-        o, Seq("view", "click"), 2, 3)),
-      "funnelGroupMatchesWithin" -> (df => Funnel.funnelGroupMatchesWithin(
-        df, u, tp, t, o, Seq("view", "click"), 2, 3, W)),
-      "funnelGroupMatchesAbsence" -> (df => Funnel.funnelGroupMatchesAbsence(
-        df, u, tp, t, o, Seq("view", "click"), 2, 3, W, "error")),
-      "funnelGroupMatchesRange" -> (df => Funnel.funnelGroupMatchesRange(df,
-        u, tp, t, o, Seq("view", "click"), 1, 2, 3)),
-      "funnelGroupMatchesRangeAbsence" -> (df =>
-        Funnel.funnelGroupMatchesRangeAbsence(df, u, tp, t, o,
-          Seq("view", "click"), 1, 2, 3, W, "error")),
-      "funnelMulti" -> (df => Funnel.funnelMulti(df, u, tp, t, o, typed, 3)),
-      "funnelMatchesAbsence" -> (df => Funnel.funnelMatchesAbsence(df, u, tp,
-        t, o, typed, 3, W, "error")),
-      "funnelSkip" -> (df => Funnel.funnelSkip(df, u, tp, t, o, loop,
-        Funnel.SkipToLast(1), 3)),
-      "funnelAnyCount" -> (df => Funnel.funnelAnyCount(df, u, tp, t, o,
-        typed)),
-      "funnelCombinations" -> (df => Funnel.funnelCombinations(df, u, tp, t,
-        o, Seq("view" -> false, "click" -> true))),
-      "funnelIterative" -> (df => Funnel.funnelIterative(df, u, tp, t, o, "v",
-        Seq(Funnel.IterStage("view"),
-          Funnel.IterStage("click", Some(Funnel.RelGt(1, 1)))))),
-      "funnelAnyEnumerate" -> (df => Funnel.funnelAnyEnumerate(df, u, tp, t,
-        o, typed)),
-      "funnelWhere" -> (df => Funnel.funnelWhere(df, u, t, o,
-        Seq("event_type", "v"), Seq(e => e.getField("v") > 5L,
-          e => e.getField("event_type") === "click"))))
-    // the table covers every public funnel* entry point
-    val publicShapes = Funnel.getClass.getMethods.map(_.getName)
-      .filter(_.startsWith("funnel")).filterNot(_.contains("$")).toSet
-    assert(shapes.map(_._1.takeWhile(_ != ' ')).toSet === publicShapes)
-    for ((name, shape) <- shapes) {
-      val df = shape(failing)
+    // one row per constructor and routed variant: every shape's plan
+    // must be built without running the scan, the user-keyed exchange
+    // or any probe
+    val shapes: Seq[(String, Pattern)] = Seq(
+      "times" -> Pattern.times(typed.map(_ -> 1)),
+      "times quantified" -> Pattern.times(loop),
+      "loop" -> Pattern.loop(loop),
+      "timesRange" -> Pattern.timesRange(Seq(("view", 1, 2), ("click", 1, 1))),
+      "timesRange floor" -> loopMode(loop, Funnel.Reluctant),
+      "loopConsecutive" -> Pattern.loopConsecutive(loop),
+      "loopUntil" -> Pattern.loopUntil(
+        Seq(("view", 1, Some("error")), ("click", 1, None))),
+      "within" -> Pattern.within(typed, W),
+      "within guarded" -> Pattern.within(typed, W, Seq(Some("error"), None)),
+      "guarded" -> Pattern.guarded(typed, Seq(Some("error"), None)),
+      "pattern" -> Pattern.pattern(pattern),
+      "patternWithin" -> Pattern.patternWithin(pattern, W),
+      "groupTimes" -> Pattern.groupTimes(pattern, 2),
+      "groupTimesWithin" -> Pattern.groupTimesWithin(pattern, 2, W),
+      "groupLoop" -> Pattern.groupLoop(guarded),
+      "groupTimesRange" -> Pattern.groupTimesRange(pattern, 1, 2),
+      "groupTimesRange guarded" -> Pattern.groupTimesRange(guarded, 1, 2),
+      "groupTimesOrMore" -> Pattern.groupTimesOrMore(pattern, 2),
+      "groupMatches" -> Pattern.groupMatches(Seq("view", "click"), 2, 3),
+      "groupMatchesWithin" -> Pattern.groupMatchesWithin(
+        Seq("view", "click"), 2, 3, W),
+      "groupMatches absence" -> Pattern.groupMatches(Seq("view", "click"), 2,
+        3, Some((W, "error"))),
+      "groupMatchesRange" -> Pattern.groupMatchesRange(Seq("view", "click"),
+        1, 2, 3),
+      "groupMatchesRange absence" -> Pattern.groupMatchesRange(
+        Seq("view", "click"), 1, 2, 3, Some((W, "error"))),
+      "matches" -> Pattern.matches(typed, 3),
+      "matches absence" -> Pattern.matches(typed, 3, Some((W, "error"))),
+      "skip" -> Pattern.skip(loop, Funnel.SkipToLast(1), 3),
+      "anyCount" -> Pattern.anyCount(typed),
+      "combinations" -> Pattern.combinations(
+        Seq("view" -> false, "click" -> true)),
+      "iterative" -> Pattern.iterative("v", Seq(Funnel.IterStage("view"),
+        Funnel.IterStage("click", Some(Funnel.RelGt(1, 1))))),
+      "anyEnumerate" -> Pattern.anyEnumerate(typed),
+      "where" -> Pattern.where(Seq("event_type", "v"),
+        Seq(e => e.getField("v") > 5L,
+          e => e.getField("event_type") === "click")))
+    // the table covers every public Pattern constructor
+    val constructors = Pattern.getClass.getMethods
+      .filter(m => m.getReturnType == classOf[Pattern] &&
+        !m.getName.contains("$"))
+      .map(_.getName).toSet
+    assert(shapes.map(_._1.takeWhile(_ != ' ')).toSet === constructors)
+    for ((name, p) <- shapes) {
+      val df = Funnel.run(failing, "user_id", "event_type", "ts", "event_id", p)
       assert(df.columns.head === "user_id", name)
       assert(!groupsByAttr(df), s"$name plans a time-bucketed split")
       // the frame really does throw once an action runs it
@@ -1348,8 +1340,9 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 2), ("click", 1), ("purchase", 1))
     def one(mode: Funnel.ConsumeMode, split: Boolean = false) = {
-      val r = Funnel.funnelLoop(splitByTime(ev, split), "user_id", "event_type", "ts",
-        "event_id", stages, mode).collect()
+      val r = Funnel.run(splitByTime(ev, split),
+          "user_id", "event_type", "ts", "event_id",
+          loopMode(stages, mode)).collect()
       assert(r.length === 1)
       (r(0).getInt(1), (0 until 3).map(j =>
         (r(0).getLong(2 + 2 * j), r(0).getLong(3 + 2 * j))))
@@ -1363,16 +1356,6 @@ class FunnelSpec extends SparkSpec {
     // the log split by event time gives the same rows
     assert(one(Funnel.Greedy, split = true) === ((gReached, gLoops)))
     assert(one(Funnel.Reluctant, split = true) === ((rReached, rLoops)))
-    // arm delegation: greedy IS funnelLoop, reluctant IS times(m, m)
-    assert(Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
-        "event_id", stages, Funnel.Greedy).collect().map(_.toString).toSeq
-      === Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
-        "event_id", stages).collect().map(_.toString).toSeq)
-    assert(Funnel.funnelLoop(ev, "user_id", "event_type", "ts",
-        "event_id", stages, Funnel.Reluctant).collect().map(_.toString).toSeq
-      === Funnel.funnelTimesRange(ev, "user_id", "event_type", "ts",
-        "event_id", stages.map { case (t, m) => (t, m, m) })
-        .collect().map(_.toString).toSeq)
   }
 
   test("group pattern: strict INSIDE copies, relaxed BETWEEN — the seam never inherits the group's internal strictness") {
@@ -1400,8 +1383,8 @@ class FunnelSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> ((r.getInt(1),
         (2 to 5).map(i => Option(r.get(i))
           .map(_.asInstanceOf[Long])).toSeq))).toMap
-    val relaxed = byUser(Funnel.funnelGroupTimes(ev, "user_id",
-      "event_type", "ts", "event_id", group, times = 2))
+    val relaxed = byUser(Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimes(group, 2)))
     assert(relaxed(1L) === ((2, Seq(Some(tsUs(10)), Some(tsUs(11)),
       Some(tsUs(13)), Some(tsUs(14))))))
     assert(relaxed(2L)._1 === 1)
@@ -1410,31 +1393,30 @@ class FunnelSpec extends SparkSpec {
     assert(relaxed(2L)._2 === Seq(Some(tsUs(10)), Some(tsUs(11)),
       Some(tsUs(12)), None))
     assert(relaxed(3L)._1 === 2)
-    val consec = byUser(Funnel.funnelGroupTimes(ev, "user_id",
-      "event_type", "ts", "event_id", group, times = 2,
-      consecutiveSeams = true))
+    val consec = byUser(Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimes(group, 2, true)))
     assert(consec(1L)._1 === 1, "consecutive seams must reject the gap")
     assert(consec(2L)._1 === 1)
     assert(consec(3L)._1 === 2)
     // the log split by event time gives the same rows, both seam modes
-    assert(byUser(Funnel.funnelGroupTimes(splitByTime(ev), "user_id",
-      "event_type", "ts", "event_id", group, times = 2)) === relaxed)
-    assert(byUser(Funnel.funnelGroupTimes(splitByTime(ev), "user_id",
-      "event_type", "ts", "event_id", group, times = 2, consecutiveSeams = true)) === consec)
+    assert(byUser(Funnel.run(splitByTime(ev), "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimes(group, 2))) === relaxed)
+    assert(byUser(Funnel.run(splitByTime(ev), "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimes(group, 2, true))) === consec)
     // contract: the group is a `begin` (non-strict head), no trailing
     // gap guard, times >= 1
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupTimes(ev, "user_id", "event_type", "ts",
-        "event_id", Seq(Funnel.PatternStage("view", strict = true)), 2)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimes(Seq(Funnel.PatternStage("view", strict = true)), 2))
     }
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupTimes(ev, "user_id", "event_type", "ts",
-        "event_id", Seq(Funnel.PatternStage("view",
-          notNextAfter = Some("error"))), 2)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimes(Seq(Funnel.PatternStage("view",
+          notNextAfter = Some("error"))), 2))
     }
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupTimes(ev, "user_id", "event_type", "ts",
-        "event_id", group, 0)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimes(group, 0))
     }
   }
 
@@ -1452,9 +1434,8 @@ class FunnelSpec extends SparkSpec {
       (2L, 7L, ts(0), "view"), (2L, 8L, ts(1), "click"),
       (2L, 9L, ts(30), "view"), (2L, 10L, ts(31), "click"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val out = Funnel.funnelGroupTimesWithin(ev, "user_id", "event_type",
-        "ts", "event_id", group, times = 2,
-        windowMicros = 20L * 1000000L)
+    val out = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimesWithin(group, 2, 20L * 1000000L))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(out(1L) === ((2, Some(tsUs(10)))))
@@ -1464,8 +1445,8 @@ class FunnelSpec extends SparkSpec {
   test("group oneOrMore: sequential reps, the consecutive-seam greedy trap, strict/optional/notNext inside the group") {
     def reps(ev: org.apache.spark.sql.DataFrame,
         group: Seq[Funnel.PatternStage], consec: Boolean = false) =
-      Funnel.funnelGroupLoop(ev, "user_id", "event_type", "ts",
-          "event_id", group, consec)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(group, consec))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vc = Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click"))
     val ev1 = Seq(
@@ -1530,37 +1511,37 @@ class FunnelSpec extends SparkSpec {
 
     // the threshold wrappers: timesOrMore(2) flags u1 only; the
     // bounded range times(2, 3) reports matched on the same relation
-    val tom = Funnel.funnelGroupTimesOrMore(ev1, "user_id",
-        "event_type", "ts", "event_id", vc, minTimes = 2)
+    val tom = Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimesOrMore(vc, 2))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1),
         r.getBoolean(2)))).toMap
     assert(tom === Map(1L -> ((2L, true)), 2L -> ((1L, false)),
       3L -> ((0L, false))))
-    val rng = Funnel.funnelGroupTimesRange(ev1, "user_id",
-        "event_type", "ts", "event_id", vc, minTimes = 2, maxTimes = 3)
+    val rng = Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimesRange(vc, 2, 3))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         r.getBoolean(2)))).toMap
     assert(rng(1L) === ((2, true)) && rng(2L) === ((1, false)))
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupTimesRange(ev1, "user_id", "event_type", "ts",
-        "event_id", vc, minTimes = 3, maxTimes = 2)
+      Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimesRange(vc, 3, 2))
     }
 
     // contract: head and tail must be mandatory; the flat pattern
     // contract (non-strict head, no trailing gap guard) is lifted
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupLoop(ev1, "user_id", "event_type", "ts",
-        "event_id", Seq(Funnel.PatternStage("view", optional = true),
-          Funnel.PatternStage("click")))
+      Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(Seq(Funnel.PatternStage("view", optional = true),
+          Funnel.PatternStage("click"))))
     }
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupLoop(ev1, "user_id", "event_type", "ts",
-        "event_id", Seq(Funnel.PatternStage("view"),
-          Funnel.PatternStage("click", optional = true)))
+      Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
+          Funnel.PatternStage("click", optional = true))))
     }
     intercept[IllegalArgumentException] {
-      Funnel.funnelGroupLoop(ev1, "user_id", "event_type", "ts",
-        "event_id", Seq(Funnel.PatternStage("view", strict = true)))
+      Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(Seq(Funnel.PatternStage("view", strict = true))))
     }
   }
 
@@ -1651,8 +1632,8 @@ class FunnelSpec extends SparkSpec {
         tps.zipWithIndex.map { case (tp, i) =>
           (u, u * 1000 + i, ts(i), tp) }
       }.toDF("user_id", "event_id", "ts", "event_type")
-      val got = Funnel.funnelGroupLoop(ev, "user_id", "event_type",
-          "ts", "event_id", g, consec)
+      val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(g, consec))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       corpora.foreach { case (u, tps) =>
         assert(got(u) === bruteReps(tps, g, consec),
@@ -1681,27 +1662,25 @@ class FunnelSpec extends SparkSpec {
     def collectReps(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (g <- groups; consec <- Seq(false, true); m <- Seq(1, 2, 3)) {
-      val greedy = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec))
+      val greedy = collectReps(Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(g, consec)))
       // the in-fold completion cap (a DIFFERENT machine from the
       // greedy fold) must equal min(greedy, m) — the truncation law
-      val rel = collectReps(Funnel.funnelGroupLoop(ev, "user_id",
-        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
-        minTimes = m))
+      val rel = collectReps(Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(g, consec, Funnel.Reluctant, m)))
       assert(rel === greedy.map { case (u, r) => u -> math.min(r, m.toLong) },
         s"group=$g consec=$consec m=$m")
       // the log split by event time gives the same rows
-      val relB = collectReps(Funnel.funnelGroupLoop(splitByTime(ev), "user_id",
-        "event_type", "ts", "event_id", g, consec, Funnel.Reluctant,
-        minTimes = m))
+      val relB = collectReps(Funnel.run(splitByTime(ev),
+          "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(g, consec, Funnel.Reluctant, m)))
       assert(relB === rel, s"split group=$g consec=$consec m=$m")
       // mode never moves EXISTENCE: timesOrMore matched agrees
-      val gm = Funnel.funnelGroupTimesOrMore(ev, "user_id",
-        "event_type", "ts", "event_id", g, m, consec)
+      val gm = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimesOrMore(g, m, consec))
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-      val rm = Funnel.funnelGroupTimesOrMore(ev, "user_id",
-        "event_type", "ts", "event_id", g, m, consec,
-        mode = Funnel.Reluctant)
+      val rm = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimesOrMore(g, m, consec, Funnel.Reluctant))
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
       assert(gm === rm, s"matched group=$g consec=$consec m=$m")
     }
@@ -1714,8 +1693,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val g = Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click"))
     def reps(mode: Funnel.ConsumeMode, m: Int) =
-      Funnel.funnelGroupLoop(ev, "user_id", "event_type", "ts",
-        "event_id", g, mode = mode, minTimes = m).head().getLong(1)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(g, mode = mode, minTimes = m)).head().getLong(1)
     assert(reps(Funnel.Greedy, 1) === 3L)   // maximal consumption
     assert(reps(Funnel.Reluctant, 1) === 1L) // oneOrMore stops at 1
     assert(reps(Funnel.Reluctant, 2) === 2L) // timesOrMore(2) floor
@@ -1734,22 +1713,21 @@ class FunnelSpec extends SparkSpec {
     val plain = Seq(Funnel.PatternStage("view"),
       Funnel.PatternStage("click"))
     def reps(g: Seq[Funnel.PatternStage]) =
-      Funnel.funnelGroupLoop(ev, "user_id", "event_type", "ts",
-        "event_id", g).head().getLong(1)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id", Pattern.groupLoop(g)).head().getLong(1)
     assert(reps(plain) === 2L)
     assert(reps(guarded) === 1L)
     // the log split by event time gives the same kill (batch ==
     // stream is pinned in StreamingSpec for the machine)
-    val byTime = Funnel.funnelGroupLoop(splitByTime(ev), "user_id",
-      "event_type", "ts", "event_id", guarded)
+    val byTime = Funnel.run(splitByTime(ev), "user_id", "event_type", "ts", "event_id",
+        Pattern.groupLoop(guarded))
       .head().getLong(1)
     assert(byTime === 1L)
     // the BOUNDED group quantifiers reject the trailing guard with a
     // group-specific message (expansion sticky-reps would diverge
     // from the loop machines' kill semantics)
     val e = intercept[IllegalArgumentException] {
-      Funnel.funnelGroupTimes(ev, "user_id", "event_type", "ts",
-        "event_id", guarded, times = 2)
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimes(guarded, 2))
     }
     assert(e.getMessage.contains("kill semantics"))
   }
@@ -1775,9 +1753,8 @@ class FunnelSpec extends SparkSpec {
         3 -> "view", 4 -> "click", 5 -> "purchase"))
       .toDF("user_id", "event_id", "ts", "event_type")
     def rows(split: Boolean) =
-      Funnel.funnelMatchesAbsence(splitByTime(ev, split), "user_id", "event_type", "ts",
-          "event_id", stages, maxMatches = 4, windowMicros = winUs,
-          absentType = "error")
+      Funnel.run(splitByTime(ev, split), "user_id", "event_type", "ts", "event_id",
+          Pattern.matches(stages, 4, Some((winUs, "error"))))
         .orderBy("user_id", "match_idx").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val single = rows(split = false).toSeq
@@ -1789,12 +1766,80 @@ class FunnelSpec extends SparkSpec {
     // first view's tail (0, 10], the later two survive
     val ev1 = user(5L, 0 -> "view", 5 -> "error", 20 -> "view",
       25 -> "view").toDF("user_id", "event_id", "ts", "event_type")
-    val got1 = Funnel.funnelMatchesAbsence(ev1, "user_id", "event_type",
-        "ts", "event_id", Seq("view"), maxMatches = 4,
-        windowMicros = winUs, absentType = "error")
+    val got1 = Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+        Pattern.matches(Seq("view"), 4, Some((winUs, "error"))))
       .orderBy("match_idx").collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     assert(got1.toSeq === Seq((2L, 2L), (3L, 2L)))
+  }
+
+  test("absence pen equals the answer-sized anti-join it replaced, byte for byte: blocker at the completion's timestamp, blocker at exactly start + window, blocker type that is also a stage type") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lit, unix_micros}
+    val winUs = 10L * 1000000L
+    def user(u: Long, evs: (Int, String)*): Seq[(Long, Long, java.sql.Timestamp, String)] =
+      evs.zipWithIndex.map { case ((s, tp), i) => (u, i.toLong, ts(s), tp) }
+    // the replaced batch form: enumerate without absence, cut the span,
+    // LEFT ANTI join the blockers in (end, start + window], recount
+    def antiJoin(ev: DataFrame, fits: DataFrame, absent: String,
+        endCol: String, startCol: String): DataFrame = {
+      val blockers = ev.filter(col("event_type") === lit(absent))
+        .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("b_us"))
+      fits.filter(col(endCol) - col(startCol) <= winUs)
+        .join(blockers, fits("user_id") === blockers("user_id") &&
+          col("b_us") > fits(endCol) &&
+          col("b_us") <= fits(startCol) + lit(winUs), "left_anti")
+        .withColumn("n_matches",
+          count(lit(1)).over(Window.partitionBy("user_id")))
+    }
+    def run(ev: DataFrame, p: Pattern): Seq[String] =
+      Funnel.run(ev, "user_id", "event_type", "ts", "event_id", p)
+        .collect().map(_.toString).toSeq.sorted
+    val cases: Seq[(String, String, Seq[(Long, Long, java.sql.Timestamp, String)])] = Seq(
+      // spared: the blocker shares the completion's timestamp
+      ("completion tie", "error",
+        user(1L, 0 -> "view", 1 -> "click", 2 -> "purchase", 2 -> "error") ++
+        user(2L, 0 -> "view", 1 -> "click", 2 -> "purchase", 2 -> "error",
+          3 -> "view", 4 -> "click", 5 -> "purchase")),
+      // killed: the blocker sits at exactly start + window
+      ("window edge", "error",
+        user(3L, 0 -> "view", 1 -> "click", 2 -> "purchase", 10 -> "error") ++
+        user(4L, 0 -> "view", 1 -> "click", 2 -> "purchase", 11 -> "error")),
+      // the blocker type opens the next match: a view inside match 1's
+      // tail kills it and starts match 2; a view at a completion's own
+      // timestamp spares it
+      ("blocker is a stage type", "view",
+        user(5L, 0 -> "view", 1 -> "click", 2 -> "purchase", 3 -> "view",
+          4 -> "click", 5 -> "purchase") ++
+        user(6L, 0 -> "view", 1 -> "click", 2 -> "purchase", 2 -> "view",
+          13 -> "click", 14 -> "purchase", 30 -> "view")))
+    for ((name, absent, evs) <- cases) {
+      val ev = evs.toDF("user_id", "event_id", "ts", "event_type")
+      val stages = Seq("view", "click", "purchase")
+      val flatOld = antiJoin(ev, Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+          Pattern.matches(stages, 4)), absent, "ts3_us",
+        "ts1_us").collect().map(_.toString).toSeq.sorted
+      assert(run(ev, Pattern.matches(stages, 4, Some((winUs, absent)))) ===
+        flatOld, name)
+      val grp = Seq("view", "click")
+      val groupOld = antiJoin(ev, Funnel.run(ev,
+          "user_id", "event_type", "ts", "event_id",
+          Pattern.groupMatches(grp, 1, 4)), absent,
+        "ts_r1_s2_us", "ts_r1_s1_us").collect().map(_.toString).toSeq.sorted
+      assert(run(ev, Pattern.groupMatches(grp, 1, 4, Some((winUs, absent)))) ===
+        groupOld, s"$name (group)")
+    }
+    // the fixtures bite: the window edge kills, a stage-type blocker
+    // kills one match and opens the next
+    def flat(c: Int) = run(cases(c)._3.toDF("user_id", "event_id", "ts",
+      "event_type"), Pattern.matches(Seq("view", "click", "purchase"), 4,
+      Some((winUs, cases(c)._2))))
+    val edge = flat(1)
+    assert(edge === Seq("[4,1,1,%d,%d,%d]".format(tsUs(0), tsUs(1), tsUs(2))))
+    assert(flat(2) === Seq(
+      "[5,2,1,%d,%d,%d]".format(tsUs(3), tsUs(4), tsUs(5)),
+      "[6,1,1,%d,%d,%d]".format(tsUs(0), tsUs(1), tsUs(2))))
   }
 
   test("property: absence alarm equals a driver replay of the greedy skip-past-last machine with span + tail filters on random corpora; bucketed == single") {
@@ -1839,9 +1884,8 @@ class FunnelSpec extends SparkSpec {
           (u, idx, surv.length.toLong, w(0), w(1), w(2)) }
       }.toSet
       def got(split: Boolean) =
-        Funnel.funnelMatchesAbsence(splitByTime(df, split), "user_id", "event_type", "ts",
-            "event_id", stages, maxMatches = 4, windowMicros = winUs,
-            absentType = "error")
+        Funnel.run(splitByTime(df, split), "user_id", "event_type", "ts", "event_id",
+            Pattern.matches(stages, 4, Some((winUs, "error"))))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getLong(5))).toSet
       assert(got(split = false) === expected, s"round $round single")
@@ -1871,9 +1915,8 @@ class FunnelSpec extends SparkSpec {
       //     is not part of any match
       user(5L, Seq.fill(5)(vc).flatten :+ "view"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelGroupMatchesRange(ev, "user_id", "event_type",
-        "ts", "event_id", grp, minTimes = 2, maxTimes = 3,
-        maxMatches = 12)
+    val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupMatchesRange(grp, 2, 3, 12))
       .orderBy("user_id", "match_idx").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
         (4 until 10).map(j => Option(r.get(j)).map(_.asInstanceOf[Long]))))
@@ -1885,14 +1928,13 @@ class FunnelSpec extends SparkSpec {
       (5L, 1L, 2L, 3, w(0, 1, 2, 3, 4, 5)),
       (5L, 2L, 2L, 2, w(6, 7, 8, 9) ++ Seq(None, None))))
     // m = n degenerates to the fixed enumeration plus the reps column
-    val fixed = Funnel.funnelGroupMatches(ev, "user_id", "event_type",
-        "ts", "event_id", grp, times = 3, maxMatches = 12)
+    val fixed = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupMatches(grp, 3, 12))
       .orderBy("user_id", "match_idx").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         (3 until 9).map(j => r.getLong(j))))
-    val degen = Funnel.funnelGroupMatchesRange(ev, "user_id",
-        "event_type", "ts", "event_id", grp, minTimes = 3, maxTimes = 3,
-        maxMatches = 12)
+    val degen = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupMatchesRange(grp, 3, 3, 12))
       .orderBy("user_id", "match_idx").collect()
     assert(degen.forall(_.getInt(3) === 3))
     assert(degen.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1924,9 +1966,8 @@ class FunnelSpec extends SparkSpec {
         4 -> "view", 5 -> "click", 6 -> "error", 7 -> "view",
         8 -> "click", 9 -> "view", 9 -> "click"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelGroupMatchesRangeAbsence(ev, "user_id",
-        "event_type", "ts", "event_id", grp, minTimes = 2, maxTimes = 3,
-        maxMatches = 12, windowMicros = winUs, absentType = "error")
+    val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupMatchesRange(grp, 2, 3, 12, Some((winUs, "error"))))
       .orderBy("user_id", "match_idx").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     assert(got.toSeq === Seq((2L, 1L, 1L, 2), (4L, 2L, 1L, 2)))
@@ -1973,8 +2014,8 @@ class FunnelSpec extends SparkSpec {
             wit.map(Option(_)).padTo(bigK, None: Option[Long])) }
       }.toSet
       def readRange(split: Boolean) =
-        Funnel.funnelGroupMatchesRange(splitByTime(df, split), "user_id",
-            "event_type", "ts", "event_id", grp, m, n, maxMatches = 12)
+        Funnel.run(splitByTime(df, split), "user_id", "event_type", "ts", "event_id",
+            Pattern.groupMatchesRange(grp, m, n, 12))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
@@ -1991,9 +2032,8 @@ class FunnelSpec extends SparkSpec {
             wit.map(Option(_)).padTo(bigK, None: Option[Long])) }
       }.toSet
       def readAbs(split: Boolean) =
-        Funnel.funnelGroupMatchesRangeAbsence(splitByTime(df, split), "user_id",
-            "event_type", "ts", "event_id", grp, m, n, maxMatches = 12,
-            windowMicros = winUs, absentType = "error")
+        Funnel.run(splitByTime(df, split), "user_id", "event_type", "ts", "event_id",
+            Pattern.groupMatchesRange(grp, m, n, 12, Some((winUs, "error"))))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getInt(3), (4 until 4 + bigK).map(j =>
               Option(r.get(j)).map(_.asInstanceOf[Long])))).toSet
@@ -2026,8 +2066,8 @@ class FunnelSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     // the PUBLIC bounded-range surface accepts the guard, and the
     // guarded report shape is exactly (user_id, reps_completed, matched)
-    val routed = Funnel.funnelGroupTimesRange(ev, "user_id",
-      "event_type", "ts", "event_id", guarded, minTimes = 2, maxTimes = 3)
+    val routed = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimesRange(guarded, 2, 3))
     assert(routed.columns.toSeq ===
       Seq("user_id", "reps_completed", "matched"))
     val got = routed.orderBy("user_id").collect()
@@ -2037,8 +2077,8 @@ class FunnelSpec extends SparkSpec {
     // the log split by event time gives the same rows
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("user_id").collect().map(_.toString).toSeq
-    assert(rows(Funnel.funnelGroupTimesRange(splitByTime(ev), "user_id",
-      "event_type", "ts", "event_id", guarded, 2, 3)) === rows(routed))
+    assert(rows(Funnel.run(splitByTime(ev), "user_id", "event_type", "ts", "event_id",
+        Pattern.groupTimesRange(guarded, 2, 3))) === rows(routed))
     // cap placement law UNDER the guard, random corpora: the capped
     // machine (in-fold saturation) == output-capped guarded greedy loop
     // — the truncation lemma's guard extension (a
@@ -2052,17 +2092,18 @@ class FunnelSpec extends SparkSpec {
     }.toDF("user_id", "event_id", "ts", "event_type")
     import org.apache.spark.sql.functions.{col, least, lit}
     for ((m, n) <- Seq((1, 2), (2, 3), (3, 3))) {
-      val ref = rows(Funnel.funnelGroupLoop(corpus, "user_id",
-          "event_type", "ts", "event_id", guarded)
+      val ref = rows(Funnel.run(corpus, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupLoop(guarded))
         .select(col("user_id"),
           least(col("reps"), lit(n.toLong)).cast("int")
             .as("reps_completed"),
           (col("reps") >= lit(m.toLong)).as("matched")))
-      assert(rows(Funnel.funnelGroupTimesRange(corpus, "user_id",
-        "event_type", "ts", "event_id", guarded, m, n)) === ref,
+      assert(rows(Funnel.run(corpus, "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimesRange(guarded, m, n))) === ref,
         s"single, times($m,$n)")
-      assert(rows(Funnel.funnelGroupTimesRange(splitByTime(corpus), "user_id",
-        "event_type", "ts", "event_id", guarded, m, n)) === ref, s"split, times($m,$n)")
+      assert(rows(Funnel.run(splitByTime(corpus),
+          "user_id", "event_type", "ts", "event_id",
+          Pattern.groupTimesRange(guarded, m, n))) === ref, s"split, times($m,$n)")
     }
   }
 
@@ -2077,8 +2118,8 @@ class FunnelSpec extends SparkSpec {
       (2L, 12L, ts(3), "purchase"), (2L, 13L, ts(4), "click"),
       (2L, 14L, ts(5), "purchase")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val got1 = Funnel.funnelCombinations(ev1, "user_id", "event_type",
-        "ts", "event_id", stages)
+    val got1 = Funnel.run(ev1, "user_id", "event_type", "ts", "event_id",
+        Pattern.combinations(stages))
       .orderBy("user_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got1 === Array((1L, 3L), (2L, 4L)))
     // property: random logs vs the closed form sum over (view,
@@ -2090,8 +2131,8 @@ class FunnelSpec extends SparkSpec {
         typesPool(rnd.nextInt(typesPool.length)))
     }
     val df = events.toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelCombinations(df, "user_id", "event_type",
-        "ts", "event_id", stages)
+    val got = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.combinations(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     events.groupBy(_._1).foreach { case (u, es) =>
       val seq = es.sortBy(e => (e._3.getTime, e._2))
@@ -2105,8 +2146,8 @@ class FunnelSpec extends SparkSpec {
       assert(got(u) === expected, s"user $u")
     }
     assert(got.values.exists(_ > 100L), "generator must hit real blow-up")
-    val gotB = Funnel.funnelCombinations(splitByTime(df), "user_id",
-        "event_type", "ts", "event_id", stages)
+    val gotB = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.combinations(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
   }
@@ -2176,8 +2217,8 @@ class FunnelSpec extends SparkSpec {
       // late (strict hop holds, deadline does not)
       (2L, 10L, ts(1), "view"), (2L, 11L, ts(10), "purchase")
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val got = Funnel.funnelPatternWithin(ev, "user_id", "event_type",
-        "ts", "event_id", stages, T)
+    val got = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.patternWithin(stages, T))
       .orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long] - us0)))
@@ -2204,8 +2245,8 @@ class FunnelSpec extends SparkSpec {
       .orderBy("user_id").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
-    val got = collectOut(Funnel.funnelPatternWithin(df, "user_id",
-      "event_type", "ts", "event_id", stages, T))
+    val got = collectOut(Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.patternWithin(stages, T)))
     events.groupBy(_._1).foreach { case (u, es) =>
       val seq = es.sortBy(e => (e._3.getTime, e._2))
         .map(e => (e._3.getTime * 1000L, e._4))
@@ -2213,8 +2254,9 @@ class FunnelSpec extends SparkSpec {
     }
     assert(got.values.exists(_._1 == 3) && got.values.exists(_._1 < 3),
       "generator must produce both full and expired chains")
-    val gotB = collectOut(Funnel.funnelPatternWithin(splitByTime(df), "user_id",
-      "event_type", "ts", "event_id", stages, T))
+    val gotB = collectOut(Funnel.run(splitByTime(df),
+        "user_id", "event_type", "ts", "event_id",
+        Pattern.patternWithin(stages, T)))
     assert(gotB === got)
   }
 
@@ -2268,8 +2310,8 @@ class FunnelSpec extends SparkSpec {
     ).toDF("user_id", "event_id", "ts", "event_type")
     val stages = Seq(("view", 1, Some("signup")), ("click", 2, None),
       ("purchase", 1, Some("error")))
-    val r = Funnel.funnelLoopUntil(ev, "user_id", "event_type", "ts",
-        "event_id", stages)
+    val r = Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+        Pattern.loopUntil(stages))
       .orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getInt(1),
         (0 until 3).map(j => (x.getLong(2 + 2 * j),
@@ -2308,11 +2350,12 @@ class FunnelSpec extends SparkSpec {
             (x.getLong(2 + 2 * j),
               Option(x.get(3 + 2 * j)).map(_.asInstanceOf[Long])))))
         }.toMap
-      val got = read(Funnel.funnelLoopUntil(df, "user_id", "event_type",
-        "ts", "event_id", stages))
+      val got = read(Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+          Pattern.loopUntil(stages)))
       assert(got === expected, s"single fold, config $stages")
-      val gotB = read(Funnel.funnelLoopUntil(splitByTime(df), "user_id",
-        "event_type", "ts", "event_id", stages))
+      val gotB = read(Funnel.run(splitByTime(df),
+          "user_id", "event_type", "ts", "event_id",
+          Pattern.loopUntil(stages)))
       assert(gotB === got, s"split, config $stages")
       // the generator must exercise stalls AND completions
       assert(expected.values.map(_._1).toSet.size >= 2, s"degenerate $stages")
@@ -2340,18 +2383,18 @@ class FunnelSpec extends SparkSpec {
       }
       c.last
     }.toMap
-    val got = Funnel.funnelAnyCount(df, "user_id", "event_type", "ts",
-        "event_id", stages)
+    val got = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.anyCount(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expected)
     assert(expected.values.exists(_ > 100L), "combinatorial counts exercised")
-    val gotB = Funnel.funnelAnyCount(splitByTime(df), "user_id", "event_type",
-        "ts", "event_id", stages)
+    val gotB = Funnel.run(splitByTime(df), "user_id", "event_type", "ts", "event_id",
+        Pattern.anyCount(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotB === got)
     // sanity against literal enumeration on the same data
-    val enumerated = Funnel.funnelAnyEnumerate(df, "user_id", "event_type",
-        "ts", "event_id", stages)
+    val enumerated = Funnel.run(df, "user_id", "event_type", "ts", "event_id",
+        Pattern.anyEnumerate(stages))
       .groupBy("user_id").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     expected.filter(_._2 > 0).foreach { case (u, n) =>
@@ -2362,16 +2405,16 @@ class FunnelSpec extends SparkSpec {
   test("plan gate: funnelPattern and funnelMulti keep the one-shuffle no-join shape") {
     val ev = spark.read.parquet(sf("sf0.001") + "/events.parquet")
     for (df <- Seq(
-        Funnel.funnelPattern(ev, "user_id", "event_type", "ts", "event_id",
-          Seq(PatternStage("view"), PatternStage("click", strict = true),
-            PatternStage("purchase", strict = true))),
-        Funnel.funnelMulti(ev, "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase"), maxMatches = 12),
-        Funnel.funnelAnyCount(ev, "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click", "purchase")),
-        Funnel.funnelLoopUntil(ev, "user_id", "event_type", "ts", "event_id",
-          Seq(("view", 1, Some("signup")), ("click", 2, None),
-            ("purchase", 1, Some("error")))))) {
+        Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+            Pattern.pattern(Seq(PatternStage("view"), PatternStage("click", strict = true),
+            PatternStage("purchase", strict = true)))),
+        Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+            Pattern.matches(Seq("view", "click", "purchase"), 12)),
+        Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+            Pattern.anyCount(Seq("view", "click", "purchase"))),
+        Funnel.run(ev, "user_id", "event_type", "ts", "event_id",
+            Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
+            ("purchase", 1, Some("error"))))))) {
       val plan = df.queryExecution.executedPlan.toString
       assert("Exchange".r.findAllIn(plan).size == 1,
         s"expected exactly one shuffle:\n$plan")

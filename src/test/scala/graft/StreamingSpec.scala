@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Funnel, Pattern}
 import graft.streaming.StreamingIngest
 
 /** Structured-Streaming execution: exactly-once ingest, windowed agg, and
@@ -12,6 +13,29 @@ import graft.streaming.StreamingIngest
 class StreamingSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** A loop pattern in either consume mode: reluctant is the bounded
+    * quantifier at its floor. */
+  private def loopMode(stages: Seq[(String, Int)],
+      mode: Funnel.ConsumeMode): Pattern =
+    if (mode == Funnel.Reluctant)
+      Pattern.timesRange(stages.map { case (t, m) => (t, m, m) })
+    else Pattern.loop(stages)
+
+  /** The set longs of a CEP row from position `i` on: its witnesses. */
+  private def longsFrom(r: org.apache.spark.sql.Row, i: Int): Seq[Long] =
+    (i until r.length).map(r.get).filter(_ != null).map(_.asInstanceOf[Long])
+
+  /** The longs of a CEP row from position `i` on, NULL as None. */
+  private def optsFrom(r: org.apache.spark.sql.Row,
+      i: Int): Seq[Option[Long]] =
+    (i until r.length).map(j => Option(r.get(j)).map(_.asInstanceOf[Long]))
+
+  /** A loop row's per-stage reps and its set last-times. */
+  private def loopFrom(r: org.apache.spark.sql.Row): (Seq[Long], Seq[Long]) =
+    ((2 until r.length by 2).map(r.getLong),
+      (3 until r.length by 2).map(r.get).filter(_ != null)
+        .map(_.asInstanceOf[Long]))
 
   test("streaming ingest: exactly-once parquet sink matches batch count; restart is idempotent") {
     val sink = tmp("stream-sink")
@@ -801,21 +825,22 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq("view", "click", "purchase")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val updates = StreamingIngest.streamingFunnel(spark, stream, stages, "2 hours")
+    val updates = StreamingIngest.streamingCep(stream,
+        Pattern.times(stages.map(_ -> 1)), "2 hours")
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long])]
     val q = updates.toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((id, r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
+          emitted += ((id, r.getLong(0), r.getInt(1), longsFrom(r, 2)))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     // final emission per user == the batch funnel over the same rows
-    val batch = graft.operators.Funnel.funnel(
-        spark.createDataFrame(spark.sparkContext.parallelize(waves.flatten), schema),
-        "user_id", "event_type", "ts", "event_id", stages)
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(spark.sparkContext.parallelize(waves.flatten), schema),
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.times(stages.map(_ -> 1)))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), (2 to 4).map(r.get).filter(_ != null).map(_.asInstanceOf[Long]))))
       .toMap
@@ -866,21 +891,22 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq("view", "click", "purchase")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val updates = StreamingIngest.streamingFunnel(spark, stream, stages, "2 days")
+    val updates = StreamingIngest.streamingCep(stream,
+        Pattern.times(stages.map(_ -> 1)), "2 days")
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long])]
     val q = updates.toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((id, r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
+          emitted += ((id, r.getLong(0), r.getInt(1), longsFrom(r, 2)))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
-    val batch = graft.operators.Funnel.funnel(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), schema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.times(stages.map(_ -> 1)))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), (2 to 4).map(r.get).filter(_ != null)
           .map(_.asInstanceOf[Long]))))
@@ -929,24 +955,22 @@ class StreamingSpec extends SparkSpec {
         graft.operators.Funnel.AnchorPrev)) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
-      val updates = StreamingIngest.streamingFunnelIterative(spark,
-        stream, "v", stages, anchor, "2 days")
+      val updates = StreamingIngest.streamingCep(stream,
+          Pattern.iterative("v", stages, anchor), "2 days")
       val emitted = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Int, Seq[Option[Long]])]
       val q = updates.toDF().writeStream.outputMode("update")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
           df.collect().foreach(r => emitted.synchronized {
-            emitted += ((id, r.getLong(0), r.getInt(1),
-              r.getSeq[Any](2).map(x =>
-                Option(x).map(_.asInstanceOf[Long]))))
+            emitted += ((id, r.getLong(0), r.getInt(1), optsFrom(r, 2)))
           })
           ()
         }.start()
       q.processAllAvailable(); q.stop()
-      val batch = graft.operators.Funnel.funnelIterative(
-          spark.createDataFrame(
+      val batch = graft.operators.Funnel.run(spark.createDataFrame(
             spark.sparkContext.parallelize(waves.flatten), schema),
-          "user_id", "event_type", "ts", "event_id", "v", stages, anchor)
+          "user_id", "event_type", "ts", "event_id",
+          graft.operators.Pattern.iterative("v", stages, anchor))
         .collect().map(r => r.getLong(0) ->
           ((r.getInt(1), (2 to 4).map(r.get)
             .map(Option(_).map(_.asInstanceOf[Long])))))
@@ -987,33 +1011,31 @@ class StreamingSpec extends SparkSpec {
       Files.copy(part.toPath, dst)
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
-    // subtype + value gate, then a plain click — the w53 shape
-    val scalaStages: Seq[(String, Long) => Boolean] = Seq(
-      (tp, v) => tp.startsWith("view") && v >= 5L,
-      (tp, v) => tp == "click")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val updates = StreamingIngest.streamingFunnelWhere(spark, stream,
-      "v", scalaStages, "2 days")
-    val emitted = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Seq[Long])]
-    val q = updates.toDF().writeStream.outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        df.collect().foreach(r => emitted.synchronized {
-          emitted += ((id, r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
-        })
-        ()
-      }.start()
-    q.processAllAvailable(); q.stop()
+    // subtype + value gate, then a plain click — the w53 shape; the
+    // stream reads the same Column predicates as the batch runner
     val colStages: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
       Seq(
         e => e.getField("event_type").startsWith("view") &&
           e.getField("v") >= 5L,
         e => e.getField("event_type") === "click")
-    val batch = graft.operators.Funnel.funnelWhere(
-        spark.createDataFrame(
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val updates = StreamingIngest.streamingCep(stream,
+        Pattern.where(Seq("event_type", "v"), colStages), "2 days")
+    val emitted = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, Int, Seq[Long])]
+    val q = updates.writeStream.outputMode("update")
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        df.collect().foreach(r => emitted.synchronized {
+          emitted += ((id, r.getLong(0), r.getInt(1), longsFrom(r, 2)))
+        })
+        ()
+      }.start()
+    q.processAllAvailable(); q.stop()
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), schema),
-        "user_id", "ts", "event_id", Seq("event_type", "v"), colStages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.where(Seq("event_type", "v"), colStages))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), (2 to 3).map(r.get).filter(_ != null)
           .map(_.asInstanceOf[Long]))))
@@ -1062,14 +1084,14 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq("view", "click", "purchase")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val updates = StreamingIngest.streamingFunnel(spark, stream, stages,
-      "2 hours", matchRetentionMs = 30L * 60 * 1000)
+    val updates = StreamingIngest.streamingCep(stream,
+        Pattern.times(stages.map(_ -> 1)), "2 hours", 30L * 60 * 1000)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long])]
     val q = updates.toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((id, r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
+          emitted += ((id, r.getLong(0), r.getInt(1), longsFrom(r, 2)))
         })
         ()
       }.start()
@@ -1084,7 +1106,7 @@ class StreamingSpec extends SparkSpec {
     assert(last._4 === Seq(t("2024-01-01 14:00:00").getTime * 1000L))
   }
 
-  test("retention property: every completing CEP twin frees its completed state once the watermark passes completion + retention, and a later event starts a new instance") {
+  test("retention property: every completing CEP pattern frees its completed state once the watermark passes completion + retention, and a later event starts a new instance") {
     import org.apache.spark.sql.{DataFrame, Row}
     import graft.operators.Funnel.{IterStage, PatternStage}
     def t(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1115,36 +1137,27 @@ class StreamingSpec extends SparkSpec {
     val ret = 30L * 60 * 1000
     val hour = 3600L * 1000 * 1000
     val abc = Seq("view", "click", "purchase")
-    val twins: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "Within" -> (s => StreamingIngest.streamingFunnelWithin(spark, s,
-        abc, hour, "2 hours", ret).toDF()),
-      "Guarded" -> (s => StreamingIngest.streamingFunnelGuarded(spark, s,
-        abc, Seq(Some("error"), Some("error")), "2 hours", ret).toDF()),
-      "PatternWithin" -> (s => StreamingIngest.streamingFunnelPatternWithin(
-        spark, s, abc.map(PatternStage(_)), hour, "2 hours", ret).toDF()),
-      "WithinGuarded" -> (s => StreamingIngest.streamingFunnelWithinGuarded(
-        spark, s, abc, hour, Seq(None, Some("error")), "2 hours",
-        ret).toDF()),
-      "Loop" -> (s => StreamingIngest.streamingFunnelLoop(spark, s,
-        abc.map(_ -> 1), "2 hours", ret).toDF()),
-      "LoopUntil" -> (s => StreamingIngest.streamingFunnelLoopUntil(spark,
-        s, abc.map(tp => (tp, 1, None)), "2 hours", ret).toDF()),
-      "Pattern" -> (s => StreamingIngest.streamingFunnelPattern(spark, s,
-        abc.map(PatternStage(_)), "2 hours", ret).toDF()),
-      "Iterative" -> (s => StreamingIngest.streamingFunnelIterative(spark,
-        s, "v", abc.map(IterStage(_)),
-        graft.operators.Funnel.AnchorFirst, "2 hours", ret).toDF()),
-      "Where" -> (s => StreamingIngest.streamingFunnelWhere(spark, s, "v",
-        abc.map(want => (tp: String, _: Long) => tp == want), "2 hours",
-        ret).toDF()),
-      "Times" -> (s => StreamingIngest.streamingFunnelTimes(spark, s,
-        abc.map(_ -> 1), "2 hours", ret)))
-    for ((name, run) <- twins) {
+    // every completing pattern: its machine has a `done` state
+    val patterns: Seq[(String, Pattern)] = Seq(
+      "Within" -> Pattern.within(abc, hour),
+      "Guarded" -> Pattern.guarded(abc, Seq(Some("error"), Some("error"))),
+      "PatternWithin" -> Pattern.patternWithin(abc.map(PatternStage(_)), hour),
+      "WithinGuarded" -> Pattern.within(abc, hour, Seq(None, Some("error"))),
+      "Loop" -> Pattern.loop(abc.map(_ -> 1)),
+      "LoopUntil" -> Pattern.loopUntil(abc.map(tp => (tp, 1, None))),
+      "Pattern" -> Pattern.pattern(abc.map(PatternStage(_))),
+      "Iterative" -> Pattern.iterative("v", abc.map(IterStage(_))),
+      "Where" -> Pattern.where(Seq("event_type"),
+        abc.map(want => (e: org.apache.spark.sql.Column) =>
+          e.getField("event_type") === want)),
+      "Times" -> Pattern.times(abc.map(_ -> 1)))
+    for ((name, p) <- patterns) {
       val emitted = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Int)]
-      val q = run(spark.readStream.schema(funnelWaveSchema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .withColumn("v", lit(1L)))
+      val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .withColumn("v", lit(1L)),
+          p, "2 hours", ret)
         .writeStream.outputMode("update")
         .foreachBatch { (df: DataFrame, id: Long) =>
           df.collect().foreach(r => emitted.synchronized {
@@ -1202,12 +1215,13 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = StreamingIngest.streamingFunnel(spark, stream, stages, "2 hours")
+      val q = StreamingIngest.streamingCep(stream,
+          Pattern.times(stages.map(_ -> 1)), "2 hours")
         .toDF().writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => emitted.synchronized {
-            emitted += ((r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
+            emitted += ((r.getLong(0), r.getInt(1), longsFrom(r, 2)))
           })
           ()
         }.start()
@@ -1219,8 +1233,8 @@ class StreamingSpec extends SparkSpec {
     runOnce() // second life resumes the SAME state store
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize((preWaves ++ postWaves).flatten), schema)
-    val batch = graft.operators.Funnel.funnel(all, "user_id", "event_type",
-        "ts", "event_id", stages)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.times(stages.map(_ -> 1)))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), (2 to 4).map(r.get).filter(_ != null)
           .map(_.asInstanceOf[Long]))))
@@ -1285,8 +1299,7 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = StreamingIngest.streamingFunnelWithin(spark, stream, stages,
-          W, "2 hours")
+      val q = StreamingIngest.streamingCep(stream, Pattern.within(stages, W), "2 hours")
         .toDF().writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -1303,10 +1316,10 @@ class StreamingSpec extends SparkSpec {
     runOnce()
     writeWaves(postWaves, preWaves.length)
     runOnce() // resumes the same state store
-    val batch = graft.operators.Funnel.funnelWithin(
-        spark.createDataFrame(spark.sparkContext.parallelize(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(spark.sparkContext.parallelize(
           (preWaves ++ postWaves).flatten), schema),
-        "user_id", "event_type", "ts", "event_id", stages, W)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.within(stages, W))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     val lastByUser = emitted.zipWithIndex.groupBy(_._1._2).view
@@ -1366,9 +1379,9 @@ class StreamingSpec extends SparkSpec {
     // guarded twin
     val gEmitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int)]
-    val gq = StreamingIngest.streamingFunnelGuarded(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), stages, nb, "2 hours")
+    val gq = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.guarded(stages, nb), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => gEmitted.synchronized {
@@ -1379,8 +1392,9 @@ class StreamingSpec extends SparkSpec {
     gq.processAllAvailable(); gq.stop()
     val gLast = gEmitted.groupBy(_._2).view
       .mapValues(_.maxBy(_._1)._3).toMap
-    val gBatch = graft.operators.Funnel.funnelGuarded(all, "user_id",
-        "event_type", "ts", "event_id", stages, nb)
+    val gBatch = graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.guarded(stages, nb))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(gLast === gBatch)
     assert(gLast(1L) === 2) // the restart chain, not the poisoned one
@@ -1388,9 +1402,9 @@ class StreamingSpec extends SparkSpec {
     val qstages = Seq(("view", 2), ("click", 2), ("purchase", 1))
     val qEmitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Option[Long]])]
-    val qq = StreamingIngest.streamingFunnelTimes(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), qstages, "2 hours")
+    val qq = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.times(qstages), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => qEmitted.synchronized {
@@ -1402,8 +1416,9 @@ class StreamingSpec extends SparkSpec {
     qq.processAllAvailable(); qq.stop()
     val qLast = qEmitted.groupBy(_._2).view
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
-    val qBatch = graft.operators.Funnel.funnelTimes(all, "user_id",
-        "event_type", "ts", "event_id", qstages)
+    val qBatch = graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.times(qstages))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1),
           (2 to 4).map(i => Option(r.get(i)).map(_.asInstanceOf[Long])))))
@@ -1452,14 +1467,14 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq(("view", 1), ("click", 2), ("purchase", 1))
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
-    val q = StreamingIngest.streamingFunnelLoop(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), stages, "2 hours")
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.loop(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
@@ -1468,8 +1483,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4, e._5) }).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), schema)
-    val batch = graft.operators.Funnel.funnelLoop(all, "user_id",
-        "event_type", "ts", "event_id", stages)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loop(stages))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         (2 to 6 by 2).map(r.getLong).toSeq,
         (3 to 7 by 2).flatMap(i =>
@@ -1523,14 +1538,14 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq(("view", 1, 2), ("click", 1, 2), ("purchase", 1, 1))
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
-    val q = StreamingIngest.streamingFunnelTimesRange(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), stages, "2 hours")
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.timesRange(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
@@ -1539,8 +1554,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4, e._5) }).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), schema)
-    val batch = graft.operators.Funnel.funnelTimesRange(all, "user_id",
-        "event_type", "ts", "event_id", stages)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.timesRange(stages))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         (2 to 6 by 2).map(r.getLong).toSeq,
         (3 to 7 by 2).flatMap(i =>
@@ -1594,14 +1609,14 @@ class StreamingSpec extends SparkSpec {
     val stages = Seq(("view", 1), ("click", 1), ("purchase", 1))
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
-    val q = StreamingIngest.streamingFunnelLoop(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), stages, "2 hours")
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.loop(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
@@ -1614,8 +1629,8 @@ class StreamingSpec extends SparkSpec {
     assert(u1._5.last === us("2024-01-01 12:00:00"))
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), schema)
-    val batch = graft.operators.Funnel.funnelLoop(all, "user_id",
-        "event_type", "ts", "event_id", stages)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loop(stages))
       .filter(col("user_id") === 1L).collect().head
     // flattened (user_id, stage, c1, l1, c2, l2, c3, l3): purchase
     // count at 6, last purchase time at 7 — batch agrees with stream
@@ -1660,9 +1675,9 @@ class StreamingSpec extends SparkSpec {
     val nb = Seq(Some("error"), Some("error"))
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Option[Long])]
-    val q = StreamingIngest.streamingFunnelWithinGuarded(spark,
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), stages, W, nb, "2 hours")
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(src),
+        Pattern.within(stages, W, nb), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -1674,10 +1689,10 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
-    val batch = graft.operators.Funnel.funnelWithinGuarded(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), schema),
-        "user_id", "event_type", "ts", "event_id", stages, W, nb)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.within(stages, W, nb))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(last.keySet === batch.keySet)
@@ -2174,6 +2189,138 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
 
+  test("stream equals batch table: for every Pattern with a streaming form, the last Update-mode emission per user (every emission, for a match pattern) equals Funnel.run over the same out-of-order waves, minus the drain-time columns") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.operators.Funnel.{IterStage, PatternStage, RelGt}
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    // 160 events of 8 users over one hour, SHUFFLED into waves: with a
+    // 2-day watermark nothing is late, so the buffer must reorder all
+    // of it. User 77's one event matches no pattern: its batch row is
+    // the idle row, which a user the stream never emitted for must have.
+    // The far-future pusher (user 99) stays buffered.
+    val rnd = new scala.util.Random(4242L)
+    val types = Array("view", "click", "purchase", "error", "signup")
+    val events = (0 until 160).map { i =>
+      Row(rnd.nextInt(8).toLong, i.toLong,
+        t(f"2024-01-01 10:${rnd.nextInt(60)}%02d:${rnd.nextInt(60)}%02d"),
+        types(rnd.nextInt(types.length)))
+    } :+ Row(77L, 500L, t("2024-01-01 10:00:00"), "other")
+    val waves = rnd.shuffle(events).grouped(25).toSeq :+
+      Seq(Row(99L, 9999L, t("2024-01-05 10:00:00"), "error"))
+    val src = tmp("stream-batch-table-src")
+    writeWaves(src, waves)
+    def withV(df: DataFrame): DataFrame =
+      df.withColumn("v", (col("event_id") * 37L) % 1000L)
+    val all = withV(spark.createDataFrame(
+      spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema))
+    val win = 20L * 60 * 1000000L
+    val abc = Seq("view", "click", "purchase")
+    val grp = Seq(PatternStage("view"), PatternStage("click", strict = true))
+    val seamGuard = Seq(PatternStage("view"),
+      PatternStage("click", notNextAfter = Some("error")))
+    val table: Seq[(String, Pattern)] = Seq(
+      "times" -> Pattern.times(abc.map(_ -> 1)),
+      "times quantified" -> Pattern.times(Seq("view" -> 2, "click" -> 1)),
+      "loop" -> Pattern.loop(Seq("view" -> 2, "click" -> 1, "purchase" -> 1)),
+      "timesRange" -> Pattern.timesRange(
+        Seq(("view", 1, 2), ("click", 1, 3), ("purchase", 1, 1))),
+      "loopConsecutive" -> Pattern.loopConsecutive(Seq("view" -> 1, "click" -> 1)),
+      "loopConsecutive reluctant" -> Pattern.loopConsecutive(
+        Seq("view" -> 1, "click" -> 1), Funnel.Reluctant),
+      "loopUntil" -> Pattern.loopUntil(
+        Seq(("view", 1, Some("signup")), ("click", 1, Some("error")))),
+      "within" -> Pattern.within(abc, win),
+      "within guarded" -> Pattern.within(abc, win, Seq(Some("error"), None)),
+      "guarded" -> Pattern.guarded(abc, Seq(Some("error"), Some("signup"))),
+      "pattern" -> Pattern.pattern(Seq(
+        PatternStage("view", notNextAfter = Some("error")),
+        PatternStage("click", optional = true),
+        PatternStage("purchase"))),
+      "patternWithin" -> Pattern.patternWithin(Seq(PatternStage("view"),
+        PatternStage("click", optional = true), PatternStage("purchase")), win),
+      "groupTimes" -> Pattern.groupTimes(grp, 2),
+      "groupTimesWithin" -> Pattern.groupTimesWithin(grp, 2, win),
+      "groupLoop" -> Pattern.groupLoop(Seq(PatternStage("view"),
+        PatternStage("click"))),
+      "groupLoop consecutive reluctant" -> Pattern.groupLoop(grp,
+        consecutiveSeams = true, mode = Funnel.Reluctant, minTimes = 2),
+      "groupTimesRange" -> Pattern.groupTimesRange(grp, 1, 2),
+      "groupTimesRange guarded" -> Pattern.groupTimesRange(seamGuard, 1, 3),
+      "groupTimesOrMore" -> Pattern.groupTimesOrMore(
+        Seq(PatternStage("view"), PatternStage("click")), 2),
+      "matches" -> Pattern.matches(abc, 3),
+      "matches absence" -> Pattern.matches(Seq("view", "click"), 4,
+        Some((win, "error"))),
+      "groupMatches" -> Pattern.groupMatches(Seq("view", "click"), 2, 3),
+      "groupMatches absence" -> Pattern.groupMatches(Seq("view", "click"), 1,
+        4, Some((win, "error"))),
+      "groupMatchesWithin" -> Pattern.groupMatchesWithin(
+        Seq("view", "click"), 1, 4, win),
+      "skip" -> Pattern.skip(Seq("view" -> 1, "click" -> 2), Funnel.SkipToLast(2), 4),
+      "anyCount" -> Pattern.anyCount(abc),
+      "combinations" -> Pattern.combinations(
+        Seq("view" -> false, "click" -> true, "purchase" -> false)),
+      "iterative" -> Pattern.iterative("v", Seq(IterStage("view"),
+        IterStage("click", Some(RelGt(1, 1)))), Funnel.AnchorPrev),
+      "where" -> Pattern.where(Seq("event_type", "v"), Seq(
+        e => e.getField("event_type").startsWith("vi") && e.getField("v") >= 300L,
+        e => e.getField("event_type") === "click")))
+    // the table covers every constructor with a streaming form; the two
+    // whose answer exists only at stream end are refused
+    val refused = Seq(Pattern.anyEnumerate(abc),
+      Pattern.groupMatchesRange(Seq("view", "click"), 1, 2, 3))
+    refused.foreach { p =>
+      intercept[IllegalArgumentException](
+        StreamingIngest.streamingCep(all, p, "2 days"))
+    }
+    val constructors = Pattern.getClass.getMethods
+      .filter(m => m.getReturnType == classOf[Pattern] &&
+        !m.getName.contains("$"))
+      .map(_.getName).toSet
+    assert(table.map(_._1.takeWhile(_ != ' ')).toSet ===
+      constructors -- refused.map(_.name))
+    for ((name, p) <- table) {
+      val perMatch = p.plan match {
+        case f: Pattern.Fold[_] => f.perMatch
+        case _ => false
+      }
+      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Any])]
+      val streamed = StreamingIngest.streamingCep(withV(spark.readStream
+        .schema(funnelWaveSchema).option("maxFilesPerTrigger", "1")
+        .parquet(src)),
+          p, "2 days")
+      val q = streamed.writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          df.collect().foreach(r => emitted.synchronized {
+            emitted += ((id, r.toSeq))
+          })
+          ()
+        }.start()
+      q.processAllAvailable(); q.stop()
+      val batchDf = Funnel.run(all, "user_id", "event_type", "ts", "event_id", p)
+        .drop(p.drainCols: _*)
+      assert(streamed.columns.toSeq === batchDf.columns.toSeq, name)
+      val batch = batchDf.collect().map(_.toSeq).toSeq
+      if (perMatch) {
+        val rows = emitted.map(_._2)
+        assert(rows.size === rows.toSet.size, s"$name: exactly once")
+        assert(rows.toSet === batch.toSet, name)
+        assert(batch.nonEmpty, s"$name: the corpus must match somewhere")
+      } else {
+        val last = emitted.groupBy(_._2.head).view
+          .mapValues(_.maxBy(_._1)._2).toMap
+        val byUser = batch.map(r => r.head -> r).toMap
+        val idle = byUser(77L)
+        assert(last.keySet.subsetOf(byUser.keySet), name)
+        byUser.foreach { case (u, r) =>
+          assert(last.getOrElse(u, idle.updated(0, u)) === r, s"$name user $u")
+        }
+        assert(byUser.values.exists(_.tail != idle.tail),
+          s"$name: the corpus must advance somewhere")
+      }
+    }
+  }
+
   test("streaming contiguity funnel equals batch funnelPattern, including the post-satisfaction optional stamp") {
     import org.apache.spark.sql.Row
     import graft.operators.Funnel.PatternStage
@@ -2207,27 +2354,23 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Option[Long]])]
-    val q = StreamingIngest.streamingFunnelPattern(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, "2 hours")
+        Pattern.pattern(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          // the Option elements encode as a nullable-element array
-          emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Any](2).map(v =>
-              Option(v).map(_.asInstanceOf[Long])).toSeq))
+          emitted += ((id, r.getLong(0), r.getInt(1), optsFrom(r, 2)))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
-    val batch = graft.operators.Funnel.funnelPattern(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.pattern(stages))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1),
           (2 to 4).map(i => Option(r.get(i)).map(_.asInstanceOf[Long])).toSeq)))
@@ -2274,14 +2417,13 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Seq[Long])]
-    val q = StreamingIngest.streamingFunnelMatchesAbsence(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, maxMatches = 4, winUs, "error", "2 hours")
+        Pattern.matches(stages, 4, Some((winUs, "error"))), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+          emitted += ((r.getLong(0), r.getLong(1), longsFrom(r, 2)))
         })
         ()
       }.start()
@@ -2293,9 +2435,8 @@ class StreamingSpec extends SparkSpec {
     // batch equality after drain (witnesses included)
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelMatchesAbsence(all,
-        "user_id", "event_type", "ts", "event_id", stages,
-        maxMatches = 4, windowMicros = winUs, absentType = "error")
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.matches(stages, 4, Some((winUs, "error"))))
       .collect()
     assert(emitted.toSet === batch.map(r => (r.getLong(0), r.getLong(1),
       (3 to 5).map(i => r.getLong(i)).toSeq)).toSet)
@@ -2359,35 +2500,39 @@ class StreamingSpec extends SparkSpec {
       Seq(Row(9L, 91L, t("2024-01-01 20:00:00"), "error")))
     val src = tmp("funnel-range-absence-src")
     writeWaves(src, waves)
+    // the range pattern itself does not stream: its short match is a
+    // stream-end object
+    val range = Pattern.groupMatchesRange(grp, 2, 3, 12, Some((winUs, "error")))
+    val refused = intercept[IllegalArgumentException](
+      StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
+        .parquet(src),
+          range, "2 hours"))
+    assert(refused.getMessage.contains("short match"))
+    // the full matches stream as the fixed form at maxTimes
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Option[Long]])]
-    val q = StreamingIngest.streamingFunnelGroupMatchesRangeAbsence(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        grp, minTimes = 2, maxTimes = 3, maxMatches = 12, winUs,
-        "error", "2 hours")
+        Pattern.groupMatches(grp, 3, 12, Some((winUs, "error"))), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((r.getLong(0), r.getLong(1), r.getInt(2),
-            (3 until 9).map(j => Option(r.get(j)).map(_.asInstanceOf[Long]))))
+          emitted += ((r.getLong(0), r.getLong(1), 3, optsFrom(r, 2)))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     assert(emitted.size === emitted.toSet.size) // exactly-once
     // the stream carries exactly the FULL (maxTimes-rep) survivors
-    assert(emitted.forall(_._3 === 3))
+    assert(emitted.forall(_._4.length === 6))
     assert(emitted.map(_._1).toSet === Set(1L, 4L))
     // batch composition law: streamed rows == the batch output's
     // reps = maxTimes rows (witnesses included), and the batch
     // remainder is ONLY short matches — the drain-time objects
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupMatchesRangeAbsence(
-        all, "user_id", "event_type", "ts", "event_id", grp,
-        minTimes = 2, maxTimes = 3, maxMatches = 12,
-        windowMicros = winUs, absentType = "error")
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        range)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3),
         (4 until 10).map(j => Option(r.get(j)).map(_.asInstanceOf[Long]))))
     assert(emitted.toSet === batch.filter(_._3 === 3).toSet)
@@ -2422,24 +2567,23 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Seq[Long])]
-    val q = StreamingIngest.streamingFunnelMulti(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, maxMatches = 2, "2 hours")
+        Pattern.matches(stages, 2), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted.synchronized {
-          emitted += ((r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+          emitted += ((r.getLong(0), r.getLong(1), longsFrom(r, 2)))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     // exactly-once per match
     assert(emitted.size === emitted.toSet.size)
-    val batch = graft.operators.Funnel.funnelMulti(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages, maxMatches = 2)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.matches(stages, 2))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         (3 to 5).map(i => r.getLong(i)).toSeq)).toSet
     assert(emitted.toSet === batch)
@@ -2450,10 +2594,9 @@ class StreamingSpec extends SparkSpec {
     // over the SAME source files
     val emittedG = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Seq[Long])]
-    val qg = StreamingIngest.streamingFunnelGroupMatches(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val qg = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        Seq("view", "click"), times = 2, maxMatches = 2, "2 hours")
+        Pattern.groupMatches(Seq("view", "click"), 2, 2), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emittedG.synchronized {
@@ -2463,11 +2606,10 @@ class StreamingSpec extends SparkSpec {
         ()
       }.start()
     qg.processAllAvailable(); qg.stop()
-    val batchG = graft.operators.Funnel.funnelGroupMatches(
-        spark.createDataFrame(
+    val batchG = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", Seq("view", "click"),
-        times = 2, maxMatches = 2)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupMatches(Seq("view", "click"), 2, 2))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         (3 to 6).map(i => r.getLong(i)).toSeq)).toSet
     assert(emittedG.toSet === batchG)
@@ -2479,11 +2621,9 @@ class StreamingSpec extends SparkSpec {
     def runWithin(winUs: Long): Set[(Long, Long, Seq[Long])] = {
       val emittedW = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Seq[Long])]
-      val qw = StreamingIngest.streamingFunnelGroupMatchesWithin(spark,
-          spark.readStream.schema(funnelWaveSchema)
+      val qw = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          Seq("view", "click"), times = 2, maxMatches = 2,
-          windowMicros = winUs, "2 hours")
+          Pattern.groupMatchesWithin(Seq("view", "click"), 2, 2, winUs), "2 hours")
         .writeStream.outputMode("update")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => emittedW.synchronized {
@@ -2496,12 +2636,10 @@ class StreamingSpec extends SparkSpec {
       emittedW.toSet
     }
     def batchWithin(winUs: Long): Set[(Long, Long, Seq[Long])] =
-      graft.operators.Funnel.funnelGroupMatchesWithin(
-          spark.createDataFrame(spark.sparkContext
+      graft.operators.Funnel.run(spark.createDataFrame(spark.sparkContext
             .parallelize(waves.flatten), funnelWaveSchema),
           "user_id", "event_type", "ts", "event_id",
-          Seq("view", "click"), times = 2, maxMatches = 2,
-          windowMicros = winUs)
+          graft.operators.Pattern.groupMatchesWithin(Seq("view", "click"), 2, 2, winUs))
         .collect().map(r => (r.getLong(0), r.getLong(1),
           (3 to 6).map(i => r.getLong(i)).toSeq)).toSet
     val wide = 600L * 1000000L
@@ -2517,12 +2655,10 @@ class StreamingSpec extends SparkSpec {
     // analogue for match enumeration)
     val streamCounts = runWithin(wide).groupBy(_._1).view
       .mapValues(_.size.toLong).toMap
-    val batchNm = graft.operators.Funnel.funnelGroupMatchesWithin(
-        spark.createDataFrame(spark.sparkContext
+    val batchNm = graft.operators.Funnel.run(spark.createDataFrame(spark.sparkContext
           .parallelize(waves.flatten), funnelWaveSchema),
         "user_id", "event_type", "ts", "event_id",
-        Seq("view", "click"), times = 2, maxMatches = 2,
-        windowMicros = wide)
+        graft.operators.Pattern.groupMatchesWithin(Seq("view", "click"), 2, 2, wide))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(streamCounts.keySet === batchNm.keySet)
     streamCounts.foreach { case (u, c) =>
@@ -2561,24 +2697,22 @@ class StreamingSpec extends SparkSpec {
         graft.operators.Funnel.SkipToNext)) {
       val emitted = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Seq[Long])]
-      val q = StreamingIngest.streamingFunnelSkip(spark,
-          spark.readStream.schema(funnelWaveSchema)
+      val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          stages, skip, maxMatches = 8, "2 hours")
+          Pattern.skip(stages, skip, 8), "2 hours")
         .toDF().writeStream.outputMode("update")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => emitted.synchronized {
-            emitted += ((r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+            emitted += ((r.getLong(0), r.getLong(1), longsFrom(r, 2)))
           })
           ()
         }.start()
       q.processAllAvailable(); q.stop()
       assert(emitted.size === emitted.toSet.size, s"$skip exactly-once")
-      val batch = graft.operators.Funnel.funnelSkip(
-          spark.createDataFrame(
+      val batch = graft.operators.Funnel.run(spark.createDataFrame(
             spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-          "user_id", "event_type", "ts", "event_id", stages, skip,
-          maxMatches = 8)
+          "user_id", "event_type", "ts", "event_id",
+          graft.operators.Pattern.skip(stages, skip, 8))
         .collect().map(r => (r.getLong(0), r.getLong(1),
           (3 to 6).map(i => r.getLong(i)).toSeq)).toSet
       assert(emitted.toSet === batch, s"$skip")
@@ -2606,10 +2740,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)]
-    val q = StreamingIngest.streamingFunnelAnyCount(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, "2 hours")
+        Pattern.anyCount(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -2620,10 +2753,10 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(_.maxBy(_._1)._3).toMap
-    val batch = graft.operators.Funnel.funnelAnyCount(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.anyCount(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (u <- Seq(1L, 2L)) assert(last.get(u).contains(batch(u)), s"user $u")
     // the out-of-order click really counted: 2 views × 2 clicks × 1
@@ -2651,10 +2784,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)]
-    val q = StreamingIngest.streamingFunnelCombinations(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, "2 hours")
+        Pattern.combinations(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -2665,10 +2797,10 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(_.maxBy(_._1)._3).toMap
-    val batch = graft.operators.Funnel.funnelCombinations(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.combinations(stages))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (u <- Seq(1L, 2L)) assert(last.get(u).contains(batch(u)), s"user $u")
     assert(last(1L) === 3L) // {c1},{c2},{c1,c2}
@@ -2708,25 +2840,24 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
-    val q = StreamingIngest.streamingFunnelLoopUntil(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, "2 hours")
+        Pattern.loopUntil(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4, e._5) }).toMap
-    val batch = graft.operators.Funnel.funnelLoopUntil(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopUntil(stages))
       .collect().map { r =>
         r.getLong(0) -> ((r.getInt(1),
           (0 until 3).map(j => r.getLong(2 + 2 * j)).toSeq,
@@ -2770,25 +2901,24 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
-    val q = StreamingIngest.streamingFunnelConsecutive(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, "2 hours")
+        Pattern.loopConsecutive(stages), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
     q.processAllAvailable(); q.stop()
     val last = emitted.groupBy(_._2).view
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4, e._5) }).toMap
-    val batch = graft.operators.Funnel.funnelLoopConsecutive(
-        spark.createDataFrame(
+    val batch = graft.operators.Funnel.run(spark.createDataFrame(
           spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema),
-        "user_id", "event_type", "ts", "event_id", stages)
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopConsecutive(stages))
       .collect().map { r =>
         r.getLong(0) -> ((r.getInt(1),
           (0 until 2).map(j => r.getLong(2 + 2 * j)).toSeq,
@@ -2830,10 +2960,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int)]
-    val q = StreamingIngest.streamingFunnel(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        Seq("view", "click", "purchase"), "2 hours")
+        Pattern.times(Seq("view", "click", "purchase").map(_ -> 1)), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -2855,8 +2984,7 @@ class StreamingSpec extends SparkSpec {
     * out-of-order waves, return the LAST emission per user as
     * (stage, reps, last-times). */
   private def runLoopStream(src: String,
-      mk: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.Dataset[StreamingIngest.FunnelLoopUpdate])
+      mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : Map[Long, (Int, Seq[Long], Seq[Long])] = {
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Long], Seq[Long])]
@@ -2866,7 +2994,7 @@ class StreamingSpec extends SparkSpec {
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
           emitted += ((id, r.getLong(0), r.getInt(1),
-            r.getSeq[Long](2), r.getSeq[Long](3)))
+            loopFrom(r)._1, loopFrom(r)._2))
         })
         ()
       }.start()
@@ -2907,13 +3035,13 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-loop-src")
     writeWaves(src, waves)
     val last = runLoopStream(src, st =>
-      StreamingIngest.streamingFunnelLoop(spark, st, stages, "2 hours",
-        mode = graft.operators.Funnel.Reluctant))
+      StreamingIngest.streamingCep(st,
+          loopMode(stages, graft.operators.Funnel.Reluctant), "2 hours"))
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoop(all,
-      "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Reluctant), 3)
+    val batch = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        loopMode(stages, graft.operators.Funnel.Reluctant)), 3)
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
     // reluctant really bit: exactly the mandatory picks, none of the
@@ -2921,9 +3049,9 @@ class StreamingSpec extends SparkSpec {
     assert(last(1L) === ((3, Seq(1L, 2L, 1L),
       Seq(us("2024-01-01 10:00:00"), us("2024-01-01 10:03:00"),
         us("2024-01-01 10:06:00")))))
-    val greedy = loopObs(graft.operators.Funnel.funnelLoop(all,
-      "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Greedy), 3)
+    val greedy = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        loopMode(stages, graft.operators.Funnel.Greedy)), 3)
     assert(greedy(1L) !== last(1L))
   }
 
@@ -2951,13 +3079,13 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-consec-src")
     writeWaves(src, waves)
     val last = runLoopStream(src, st =>
-      StreamingIngest.streamingFunnelConsecutive(spark, st, stages,
-        "2 hours", graft.operators.Funnel.Reluctant))
+      StreamingIngest.streamingCep(st,
+          Pattern.loopConsecutive(stages, graft.operators.Funnel.Reluctant), "2 hours"))
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoopConsecutive(
-      all, "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Reluctant), 2)
+    val batch = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopConsecutive(stages, graft.operators.Funnel.Reluctant)), 2)
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
     // the mandatory blocks, not the absorbed runs
@@ -2965,9 +3093,9 @@ class StreamingSpec extends SparkSpec {
       Seq(us("2024-01-01 10:01:00"), us("2024-01-01 10:04:00")))))
     // the breaker reset is mode-independent: u2's trailing partial
     assert(last(2L) === ((0, Seq(1L, 0L), Seq(us("2024-01-01 10:02:00")))))
-    val greedy = loopObs(graft.operators.Funnel.funnelLoopConsecutive(
-      all, "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Greedy), 2)
+    val greedy = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopConsecutive(stages, graft.operators.Funnel.Greedy)), 2)
     assert(greedy(1L) === ((2, Seq(3L, 3L),
       Seq(us("2024-01-01 10:02:00"), us("2024-01-01 10:05:00")))))
     assert(greedy(1L) !== last(1L))
@@ -3015,16 +3143,15 @@ class StreamingSpec extends SparkSpec {
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Seq[Long], Seq[Long])]
     def runOnce(): Unit = {
-      val q = StreamingIngest.streamingFunnelLoopUntil(spark,
-          spark.readStream.schema(funnelWaveSchema)
+      val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          stages, "2 hours", mode = graft.operators.Funnel.Reluctant)
+          Pattern.loopUntil(stages, graft.operators.Funnel.Reluctant), "2 hours")
         .toDF().writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => emitted.synchronized {
             emitted += ((r.getLong(0), r.getInt(1),
-              r.getSeq[Long](2), r.getSeq[Long](3)))
+              loopFrom(r)._1, loopFrom(r)._2))
           })
           ()
         }.start()
@@ -3039,9 +3166,9 @@ class StreamingSpec extends SparkSpec {
       .toMap
     val all = spark.createDataFrame(spark.sparkContext.parallelize(
       (preWaves ++ postWaves).flatten), funnelWaveSchema)
-    val batch = loopObs(graft.operators.Funnel.funnelLoopUntil(all,
-      "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Reluctant), 2)
+    val batch = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopUntil(stages, graft.operators.Funnel.Reluctant)), 2)
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
     // cross-restart reluctant block: the pre-restart purchase is the
@@ -3052,9 +3179,9 @@ class StreamingSpec extends SparkSpec {
     // the stall is mode-independent (u2 frozen at 0 by the late signup)
     assert(last(2L)._1 === 0)
     // greedy absorbs u1's trailing purchases up to the error
-    val greedy = loopObs(graft.operators.Funnel.funnelLoopUntil(all,
-      "user_id", "event_type", "ts", "event_id", stages,
-      graft.operators.Funnel.Greedy), 2)
+    val greedy = loopObs(graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.loopUntil(stages, graft.operators.Funnel.Greedy)), 2)
     assert(greedy(1L) === ((2, Seq(1L, 4L),
       Seq(us("2024-01-01 10:00:00"), us("2024-01-01 14:32:00")))))
     assert(greedy(1L) !== last(1L))
@@ -3083,11 +3210,9 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-rel-group-loop-src")
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = StreamingIngest.streamingFunnelGroupLoop(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, "2 hours", mode = graft.operators.Funnel.Reluctant,
-        minTimes = 2)
+        Pattern.groupLoop(group, mode = graft.operators.Funnel.Reluctant, minTimes = 2), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -3100,17 +3225,18 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => es.maxBy(_._2)._1._2).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupLoop(all,
-        "user_id", "event_type", "ts", "event_id", group,
-        mode = graft.operators.Funnel.Reluctant, minTimes = 2)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupLoop(group,
+                      mode = graft.operators.Funnel.Reluctant, minTimes = 2))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
     // the floor bit: saturated at 2, not greedy's 3
     assert(last(1L) === 2L)
     assert(last(2L) === 1L) // below the floor: partial progress
-    val greedy = graft.operators.Funnel.funnelGroupLoop(all, "user_id",
-        "event_type", "ts", "event_id", group)
+    val greedy = graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupLoop(group))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(greedy(1L) === 3L)
     assert(greedy(1L) !== last(1L))
@@ -3140,10 +3266,9 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("funnel-seam-guard-src")
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = StreamingIngest.streamingFunnelGroupLoop(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, "2 hours")
+        Pattern.groupLoop(group), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -3156,8 +3281,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => es.maxBy(_._2)._1._2).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupLoop(all, "user_id",
-        "event_type", "ts", "event_id", group)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupLoop(group))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
@@ -3170,10 +3295,9 @@ class StreamingSpec extends SparkSpec {
     for ((m, n) <- Seq((1, 2), (2, 3))) {
       val emittedR = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Int, Boolean)]
-      val qr = StreamingIngest.streamingFunnelGroupTimesRange(spark,
-          spark.readStream.schema(funnelWaveSchema)
+      val qr = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          group, minTimes = m, maxTimes = n, "2 hours")
+          Pattern.groupTimesRange(group, m, n), "2 hours")
         .writeStream.outputMode("update")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach(r => emittedR.synchronized {
@@ -3184,8 +3308,9 @@ class StreamingSpec extends SparkSpec {
       qr.processAllAvailable(); qr.stop()
       val lastR = emittedR.zipWithIndex.groupBy(_._1._1).view
         .mapValues(es => es.maxBy(_._2)._1).toMap
-      val batchR = graft.operators.Funnel.funnelGroupTimesRange(all,
-          "user_id", "event_type", "ts", "event_id", group, m, n)
+      val batchR = graft.operators.Funnel.run(all,
+          "user_id", "event_type", "ts", "event_id",
+          graft.operators.Pattern.groupTimesRange(group, m, n))
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(0), r.getInt(1),
           r.getBoolean(2)))).toMap
@@ -3230,10 +3355,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Option[Long])]
-    val q = StreamingIngest.streamingFunnelPatternWithin(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        stages, win, "2 hours")
+        Pattern.patternWithin(stages, win), "2 hours")
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -3247,8 +3371,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelPatternWithin(all,
-        "user_id", "event_type", "ts", "event_id", stages, win)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.patternWithin(stages, win))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(last.keySet === batch.keySet)
@@ -3288,10 +3412,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Option[Long])]
-    val q = StreamingIngest.streamingFunnelGroupTimesWithin(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, times = 2, windowMicros = win, watermark = "2 hours")
+        Pattern.groupTimesWithin(group, 2, win), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -3305,9 +3428,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupTimesWithin(all,
-        "user_id", "event_type", "ts", "event_id", group, times = 2,
-        windowMicros = win)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupTimesWithin(group, 2, win))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(last.keySet === batch.keySet)
@@ -3350,10 +3472,9 @@ class StreamingSpec extends SparkSpec {
     writeWaves(src, waves)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int, Seq[Option[Long]])]
-    val q = StreamingIngest.streamingFunnelGroupTimes(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, times = 2, watermark = "2 hours")
+        Pattern.groupTimes(group, 2), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         df.collect().foreach(r => emitted.synchronized {
@@ -3368,8 +3489,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => { val e = es.maxBy(_._1); (e._3, e._4) }).toMap
     val all = spark.createDataFrame(
       spark.sparkContext.parallelize(waves.flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupTimes(all, "user_id",
-        "event_type", "ts", "event_id", group, times = 2)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupTimes(group, 2))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1),
         (2 to 5).map(i => Option(r.get(i))
           .map(_.asInstanceOf[Long])).toSeq))).toMap
@@ -3431,10 +3552,9 @@ class StreamingSpec extends SparkSpec {
       }
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     def runOnce(): Unit = {
-      val q = StreamingIngest.streamingFunnelGroupLoop(spark,
-          spark.readStream.schema(funnelWaveSchema)
+      val q = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
             .option("maxFilesPerTrigger", "1").parquet(src),
-          group, "2 hours", consecutiveSeams = true)
+          Pattern.groupLoop(group, true), "2 hours")
         .toDF().writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -3453,8 +3573,8 @@ class StreamingSpec extends SparkSpec {
       .mapValues(es => es.maxBy(_._2)._1._2).toMap
     val all = spark.createDataFrame(spark.sparkContext.parallelize(
       (preWaves ++ postWaves).flatten), funnelWaveSchema)
-    val batch = graft.operators.Funnel.funnelGroupLoop(all, "user_id",
-        "event_type", "ts", "event_id", group, consecutiveSeams = true)
+    val batch = graft.operators.Funnel.run(all, "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupLoop(group, true))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(last.keySet === batch.keySet)
     last.foreach { case (u, got) => assert(got === batch(u), s"user $u") }
@@ -3465,8 +3585,9 @@ class StreamingSpec extends SparkSpec {
     assert(last(3L) === 1L)
     // relaxed seams on the same corpus: all of u1's three traversals
     // chain sequentially
-    val relaxed = graft.operators.Funnel.funnelGroupLoop(all, "user_id",
-        "event_type", "ts", "event_id", group)
+    val relaxed = graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupLoop(group))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(relaxed(1L) === 3L)
     // the threshold twin is a reporting projection over the same
@@ -3474,10 +3595,9 @@ class StreamingSpec extends SparkSpec {
     // wrapper flags
     val emitted2 = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Boolean)]
-    val q2 = StreamingIngest.streamingFunnelGroupTimesOrMore(spark,
-        spark.readStream.schema(funnelWaveSchema)
+    val q2 = StreamingIngest.streamingCep(spark.readStream.schema(funnelWaveSchema)
           .option("maxFilesPerTrigger", "1").parquet(src),
-        group, minTimes = 2, "2 hours", consecutiveSeams = true)
+        Pattern.groupTimesOrMore(group, 2, true), "2 hours")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.collect().foreach(r => emitted2.synchronized {
@@ -3488,9 +3608,9 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable(); q2.stop()
     val last2 = emitted2.zipWithIndex.groupBy(_._1._1).view
       .mapValues(es => { val e = es.maxBy(_._2)._1; (e._2, e._3) }).toMap
-    val batch2 = graft.operators.Funnel.funnelGroupTimesOrMore(all,
-        "user_id", "event_type", "ts", "event_id", group, minTimes = 2,
-        consecutiveSeams = true)
+    val batch2 = graft.operators.Funnel.run(all,
+        "user_id", "event_type", "ts", "event_id",
+        graft.operators.Pattern.groupTimesOrMore(group, 2, true))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1),
         r.getBoolean(2)))).toMap
     assert(last2 === batch2)

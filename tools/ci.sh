@@ -76,15 +76,24 @@ echo "$WLOG" | grep -q "in-memory width measurement equals the bytes of Spark's 
   || { echo "FATAL: width-probe equality test did not run (renamed or filtered out)"; exit 1; }
 echo "$WLOG" | grep -q "All tests passed" \
   || { echo "FATAL: width-probe equality test failed"; echo "$WLOG" | tail -20; exit 1; }
-echo "=== CEP lazy-build guard (mandatory): every funnel* entry point builds with no Spark job"
+echo "=== CEP lazy-build guard (mandatory): every Pattern constructor builds with no Spark job"
 # every batch CEP shape folds its machine through one lazy driver; the
 # table that pins "building a shape runs no job" over every public
-# funnel* entry point must demonstrably RUN and pass
+# Pattern constructor must demonstrably RUN and pass
 LLOG=$(sbt -batch 'testOnly graft.FunnelSpec -- -z "lazy build"' 2>&1)
-echo "$LLOG" | grep -q "lazy build: every public funnel\* entry point builds with no Spark job over a frame whose scan throws" \
+echo "$LLOG" | grep -q "lazy build: every Pattern constructor builds with no Spark job on Funnel.run over a frame whose scan throws" \
   || { echo "FATAL: CEP lazy-build table did not run (renamed or filtered out)"; exit 1; }
 echo "$LLOG" | grep -q "All tests passed" \
   || { echo "FATAL: CEP lazy-build table failed"; echo "$LLOG" | tail -20; exit 1; }
+echo "=== CEP stream≡batch guard (mandatory): every streaming Pattern equals Funnel.run"
+# the streaming runner emits the batch layout; the table that runs every
+# Pattern with a streaming form over the same out-of-order waves and
+# compares it with the batch runner must demonstrably RUN and pass
+SBLOG=$(sbt -batch 'testOnly graft.StreamingSpec -- -z "stream equals batch table"' 2>&1)
+echo "$SBLOG" | grep -q "stream equals batch table: for every Pattern with a streaming form" \
+  || { echo "FATAL: CEP stream-batch table did not run (renamed or filtered out)"; exit 1; }
+echo "$SBLOG" | grep -q "All tests passed" \
+  || { echo "FATAL: CEP stream-batch table failed"; echo "$SBLOG" | tail -20; exit 1; }
 echo "=== one CEP machine per shape: no second implementation in Funnel.scala"
 # the batch shapes run the Cep machines their streaming twins run; a
 # Column-expression fold over a per-user array (collect_list +
@@ -102,20 +111,43 @@ if grep -nE '^\s*def (funnel|streamingFunnel)\w*(Auto|Bucketed|Mode|Sorted)\(' \
   echo "FATAL: a second public name for one shape is back (use mode = ...)"
   exit 1
 fi
-echo "=== CEP retention guard (mandatory): every completing twin frees its state after the TTL"
-# the streaming CEP twins share one buffer whose retention rule is
-# honest only while one property pins it for every completing twin:
-# freed once the watermark passes completion + retention, not before
+echo "=== one CEP pattern value: no per-driver funnel*/streamingFunnel* entry point"
+# a shape is a Pattern constructor run by Funnel.run or
+# StreamingIngest.streamingCep, not a pair of per-driver defs
+if grep -nE 'def (funnel|streamingFunnel)\w*\(' \
+    src/main/scala/graft/operators/Funnel.scala \
+    src/main/scala/graft/streaming/StreamingIngest.scala; then
+  echo "FATAL: a per-driver CEP entry point is back (add a Pattern constructor instead)"
+  exit 1
+fi
+echo "=== two CEP runners: Cep.runSorted and runCep are called only by Funnel.run and streamingCep"
+if ! awk '
+  /^  ((private|final) )*def / {
+    match($0, /def [A-Za-z0-9_]+/); fn = substr($0, RSTART + 4, RLENGTH - 4) }
+  /Cep\.runSorted\(/ && !(FILENAME ~ /Funnel\.scala$/ && fn == "run") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /[^A-Za-z0-9_]runCep\(/ && !/def runCep\(/ &&
+    !(FILENAME ~ /StreamingIngest\.scala$/ && fn == "streamingCep") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' $(find src/main -name '*.scala'); then
+  echo "FATAL: a CEP driver is called outside its runner (build a Pattern and use Funnel.run / streamingCep)"
+  exit 1
+fi
+echo "=== CEP retention guard (mandatory): every completing pattern frees its state after the TTL"
+# every streaming CEP pattern runs through one buffer whose retention
+# rule is honest only while one property pins it for every completing
+# pattern: freed once the watermark passes completion + retention, not before
 RTLOG=$(sbt -batch 'testOnly graft.StreamingSpec -- -z "retention property"' 2>&1)
-echo "$RTLOG" | grep -q "retention property: every completing CEP twin frees its completed state once the watermark passes completion + retention, and a later event starts a new instance" \
+echo "$RTLOG" | grep -q "retention property: every completing CEP pattern frees its completed state once the watermark passes completion + retention, and a later event starts a new instance" \
   || { echo "FATAL: CEP retention property did not run (renamed or filtered out)"; exit 1; }
 echo "$RTLOG" | grep -q "All tests passed" \
   || { echo "FATAL: CEP retention property failed"; echo "$RTLOG" | tail -20; exit 1; }
 echo "=== one CEP event-time buffer: timeouts handled only by the driver"
-# every streaming CEP twin is a machine value run by cepUpdate (the one
-# timeout check) through runCep (the one event-time-timeout operator);
-# a twin with its own buffer must not come back. The j6 absence
-# detector (streamingNotFollowedBy) is not a CEP twin and keeps its own.
+# every streaming CEP pattern is a machine value run by cepUpdate (the
+# one timeout check) through runCep (the one event-time-timeout
+# operator); a shape with its own buffer must not come back. The j6
+# absence detector (streamingNotFollowedBy) is not a CEP pattern and
+# keeps its own.
 if ! awk '
   /^  ((private|final) )*def / {
     match($0, /def [A-Za-z0-9_]+/); fn = substr($0, RSTART + 4, RLENGTH - 4) }
