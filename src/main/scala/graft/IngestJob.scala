@@ -3,15 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.operators._
+import graft.sources.JdbcSource
 
 /**
  * Orchestration (SURVEY §2 O1–O9, §3 E1): the reference's `main`
- * (FB:98–417) re-expressed over Spark actions. Per table: access probe →
+ * (FB:98–417) re-expressed over Spark actions, as ONE table-load
+ * pipeline, [[IngestJob.load]], for both sources — parquet standing in
+ * for the database ([[IngestJob.IngestConfig]]) and a live JDBC database
+ * ([[graft.sources.JdbcIngest.JdbcConfig]]). Per table: access probe →
  * schema discovery → order-by resolution → watermark freeze → frozen
- * source COUNT → DDL (append/replace) → watermark-bounded (resumable)
- * scan → 11-column lineage enrichment with canonical hashes →
- * month-partitioned zstd parquet write → count + dual-hash consistency
- * check with drill-down.
+ * source COUNT → watermark-bounded (resumable) scan → 11-column lineage
+ * enrichment with canonical hashes → month-partitioned zstd parquet
+ * write (append/replace) → count + dual-hash consistency check with
+ * drill-down. The source value ([[IngestJob.Source]]) answers only the
+ * questions on which the two sources differ.
  *
  * The reference batches ≤N tables per Flink job graph and rebuilds the
  * whole environment between batches (FB:177–413) purely to bound DAG size
@@ -63,6 +68,21 @@ object IngestJob {
       else parse(spec)
   }
 
+  /** The settings of a load that do not depend on its source: what
+    * [[IngestConfig]] (parquet) and [[graft.sources.JdbcIngest.JdbcConfig]]
+    * (live JDBC) have in common, plus the table as each reads it. */
+  private[graft] trait LoadConfig {
+    def warehouseDir: String
+    def tables: Seq[TableMapping]
+    def orderByOverride: Map[String, String]
+    def replace: Boolean
+    def failOnConsistencyError: Boolean
+    def offsetRows: Map[String, Long]
+    def lineage: Enrich.Lineage
+    /** Source table `m` as this config reads it. */
+    def source(spark: SparkSession, m: TableMapping): Source
+  }
+
   final case class IngestConfig(
       sourceDir: String,                       // parquet dir standing in for the JDBC source
       warehouseDir: String,                    // sink root
@@ -71,7 +91,10 @@ object IngestJob {
       replace: Boolean = false,                // O4 append/replace
       failOnConsistencyError: Boolean = true,  // FB:112–114
       offsetRows: Map[String, Long] = Map.empty, // S2 resume offsets
-      lineage: Enrich.Lineage = Enrich.Lineage())
+      lineage: Enrich.Lineage = Enrich.Lineage()) extends LoadConfig {
+    def source(spark: SparkSession, m: TableMapping): Source =
+      new Source.Parquet(spark, sourcePath(this, m))
+  }
 
   final case class TableResult(
       mapping: TableMapping,
@@ -83,14 +106,109 @@ object IngestJob {
       // 100 TB ingest can't hide a 1-connection fallback in its report
       warnings: Seq[String] = Nil)
 
+  /**
+   * One source table, answering only the questions on which the parquet
+   * stand-in and a live database differ. Everything else about a load —
+   * the phase order, the order-key chain, the resume rule, enrich, write
+   * and check — is [[load]]'s.
+   */
+  sealed trait Source {
+    /** S3: can the table be read (FB:494–525). */
+    def readable: Boolean
+    /** S4: its columns, in source order (FB:530–586). */
+    def columns: Seq[ColumnMeta]
+    /** S5: its primary-key column, if it declares one (FB:598–626). */
+    def primaryKey: Option[String]
+    /** A3 + A1: the frozen `MAX(k)` watermark (FB:628–643), then the
+      * row count bounded by it (FB:1359–1380). */
+    def freeze(orderBy: String): (Option[Any], Long)
+    /** S1/S2: the bounded scan from row `offset` of the total order
+      * (`orderBy`, then `tieBreakers`), with the warnings it raises. */
+    def scan(orderBy: String, watermark: Option[Any], offset: Long,
+        tieBreakers: Seq[String]): (DataFrame, Seq[String])
+  }
+
+  object Source {
+    /** A parquet file standing in for the database. Parquet carries no
+      * PK metadata, so the conventional `<prefix>key` column stands in
+      * for PK detection. The scan is ordered only when resuming: no
+      * resume, no sort. */
+    final class Parquet(spark: SparkSession, path: String) extends Source {
+      def readable: Boolean = SnapshotScan.probeAccess(spark.read.parquet(path))
+      private lazy val df = spark.read.parquet(path)
+      def columns: Seq[ColumnMeta] = ColumnMeta.fromSchema(df.schema)
+      def primaryKey: Option[String] = parquetKey(df.columns.toSeq)
+      def freeze(orderBy: String): (Option[Any], Long) = {
+        val wm = SnapshotScan.freezeWatermark(df, orderBy)
+        (wm, ConsistencyCheck.sourceCount(SnapshotScan.bounded(df, orderBy, wm)))
+      }
+      def scan(orderBy: String, watermark: Option[Any], offset: Long,
+          tieBreakers: Seq[String]): (DataFrame, Seq[String]) =
+        (if (offset > 0) SnapshotScan.resumableScan(df, orderBy, watermark, offset, tieBreakers)
+         else SnapshotScan.bounded(df, orderBy, watermark), Nil)
+    }
+
+    /** A table over a live JDBC connection: metadata, watermark and count
+      * are scalar queries pushed down to the database. With `partitions`
+      * > 1 the scan reads key ranges over that many connections
+      * ([[JdbcSource.scanPartitioned]]); where it cannot, it falls back
+      * to one stream and says why in a warning. */
+    final class Jdbc(spark: SparkSession, url: String, table: String,
+        partitions: Int) extends Source {
+      def readable: Boolean = JdbcSource.checkTableAccess(url, table)
+      lazy val columns: Seq[ColumnMeta] = JdbcSource.readTableMetadata(url, table)
+      def primaryKey: Option[String] = JdbcSource.detectPrimaryKeyColumn(url, table)
+      def freeze(orderBy: String): (Option[Any], Long) = {
+        val wm = JdbcSource.readWatermarkValue(url, table, orderBy)
+        (wm, JdbcSource.readBoundedCount(url, table, orderBy, wm))
+      }
+
+      def scan(orderBy: String, watermark: Option[Any], offset: Long,
+          tieBreakers: Seq[String]): (DataFrame, Seq[String]) = {
+        def single = JdbcSource.scan(spark, url, table, columns, orderBy,
+          watermark, offset, tieBreakers = tieBreakers)
+        if (partitions <= 1) (single, Nil)
+        else parallel(orderBy, watermark, offset) match {
+          case Right(df) => (df, Nil)
+          case Left(why) => (single, Seq(s"table $table: requested $partitions " +
+            s"scan partitions but falling back to a single-stream scan — $why"))
+        }
+      }
+
+      /** The range-parallel scan, or the reason it cannot run. */
+      private def parallel(orderBy: String, watermark: Option[Any],
+          offset: Long): Either[String, DataFrame] = {
+        def integral(bound: String, v: Option[Any]): Either[String, Long] = v match {
+          case Some(n: java.lang.Number) => Right(n.longValue())
+          case other => Left(s"order key '$orderBy' has no integral $bound " +
+            s"(${other.getOrElse("NULL")}): range strides need a numeric key")
+        }
+        for {
+          _ <- Either.cond(offset == 0L, (), s"row-offset resume ($offset) is " +
+            "single-stream by design (a per-stride offset would skip rows per partition)")
+          _ <- watermark.toRight("NULL watermark (empty source): nothing to range-split")
+          ub <- integral("watermark", watermark)
+          lb <- integral("MIN", JdbcSource.readMinValue(url, table, orderBy))
+        } yield JdbcSource.scanPartitioned(spark, url, table, columns, orderBy,
+          watermark, partitions, lb, ub)
+      }
+    }
+  }
+
+  /** Parquet's stand-in for a primary key: the first `<prefix>key` column. */
+  private def parquetKey(columns: Seq[String]): Option[String] =
+    columns.find(_.toLowerCase.endsWith("key"))
+
   /** S5 order-by resolution chain (FB:224–235): explicit `--order-by` →
-    * primary key → first column. Parquet sources carry no PK metadata, so
-    * the conventional `<prefix>key` column stands in for PK detection. */
+    * primary key → first column. */
+  private[graft] def orderKey(overrides: Map[String, String], m: TableMapping,
+      primaryKey: => Option[String], columns: Seq[String]): String =
+    overrides.get(m.source).orElse(primaryKey).getOrElse(columns.head)
+
+  /** [[orderKey]] over a parquet schema. */
   def resolveOrderBy(mapping: TableMapping, schema: Seq[String],
       overrides: Map[String, String]): String =
-    overrides.get(mapping.source)
-      .orElse(schema.find(_.toLowerCase.endsWith("key")))
-      .getOrElse(schema.head)
+    orderKey(overrides, mapping, parquetKey(schema), schema)
 
   def sourcePath(cfg: IngestConfig, m: TableMapping): String =
     s"${cfg.sourceDir}/${m.source}.parquet"
@@ -98,36 +216,34 @@ object IngestJob {
   def sinkPath(cfg: IngestConfig, m: TableMapping): String =
     s"${cfg.warehouseDir}/${m.sink}"
 
-  /** Ingest + verify one table; returns a structured result instead of
-    * failing the whole run (per-table failure isolation, FB:302–352). */
-  def ingestTable(spark: SparkSession, cfg: IngestConfig, m: TableMapping): TableResult = {
+  /**
+   * The table load, whatever the source (FB:98–417): access probe →
+   * columns → order key → frozen watermark → frozen count → bounded scan
+   * (resumable) → lineage envelope → partitioned write → isolated count +
+   * dual-hash check. Returns a structured result instead of failing the
+   * whole run (per-table failure isolation, FB:302–352); only a failed
+   * check under `failOnConsistencyError` escapes.
+   */
+  private[graft] def load(spark: SparkSession, cfg: LoadConfig,
+      m: TableMapping): TableResult = {
     try {
-      // S3: access probe — skip gracefully (FB:494–525)
-      if (!SnapshotScan.probeAccess(spark.read.parquet(sourcePath(cfg, m))))
-        return TableResult(m, skipped = true, None, None)
+      val source = cfg.source(spark, m)
+      if (!source.readable) return TableResult(m, skipped = true, None, None)
 
-      val src = spark.read.parquet(sourcePath(cfg, m))
-      val metas = ColumnMeta.fromSchema(src.schema)
-      val orderBy = resolveOrderBy(m, src.columns.toSeq, cfg.orderByOverride)
+      val metas = source.columns
+      val names = metas.map(_.name)
+      val orderBy = orderKey(cfg.orderByOverride, m, source.primaryKey, names)
 
-      // F2/A3: freeze the snapshot bound before anything else (FB:237–246)
-      val wm = SnapshotScan.freezeWatermark(src, orderBy)
-      val bounded = SnapshotScan.bounded(src, orderBy, wm)
+      // F2/A3 + A1: the snapshot bound and its baseline count (FB:237–246)
+      val (wm, srcCount) = source.freeze(orderBy)
 
-      // A1: frozen source baseline count (FB:244–246)
-      val srcCount = ConsistencyCheck.sourceCount(bounded)
-
-      // S1/S2/K1/K2: resumable scan (ordered only when resuming). The
-      // remaining columns serve as tie-breakers, making the resume order
-      // TOTAL even when the order key has duplicates — the reference
-      // leaves this nondeterministic (FB:1084, its documented latent
-      // flaw); sorting by the full row costs nothing extra on the happy
-      // path (no resume → no sort at all).
+      // S1/S2/K1/K2: the other columns break ties on the order key, so a
+      // resume order is TOTAL on either source even when the key repeats
+      // (the reference's latent flaw, FB:1084)
       val offset = cfg.offsetRows.getOrElse(m.source, 0L)
-      val scanned: DataFrame =
-        if (offset > 0) SnapshotScan.resumableScan(src, orderBy, wm, offset,
-          tieBreakers = src.columns.toSeq.filterNot(_ == orderBy))
-        else bounded
+      val (scanned, warnings) = source.scan(orderBy, wm, offset,
+        tieBreakers = names.filterNot(_ == orderBy))
+      warnings.foreach(w => System.err.println(s"[ingest] WARN $w"))
 
       // F1 + F5–F13: lineage envelope + canonical hashes
       val enriched = Enrich.enrich(scanned, metas, cfg.lineage)
@@ -138,17 +254,16 @@ object IngestJob {
       // appends the suffix, FB:1220–1258).
       val mode =
         if (offset > 0 || !cfg.replace) SaveMode.Append else SaveMode.Overwrite
-      Ddl.writePartitioned(enriched, sinkPath(cfg, m), mode)
+      val sink = s"${cfg.warehouseDir}/${m.sink}"
+      Ddl.writePartitioned(enriched, sink, mode)
 
-      // A2 + O7: read back, count + dual-hash check (FB:1261–1328).
-      // The expectation is always the FULL frozen source count: on resume
-      // the sink holds prefix + suffix = srcCount (reference's SKIP-n +
-      // full-count verification). The verify read runs ISOLATED —
-      // vectorization off, parallelism 1 (FB:1330–1341).
-      val metrics = ConsistencyCheck.isolatedSinkMetrics(spark, sinkPath(cfg, m))
+      // A2 + O7: isolated read-back (FB:1330–1341), count + dual-hash
+      // check against the FULL frozen count: on resume the sink holds
+      // prefix + suffix (FB:1261–1328)
+      val metrics = ConsistencyCheck.isolatedSinkMetrics(spark, sink)
       val report = ConsistencyCheck.check(m.sink, srcCount, metrics,
         cfg.failOnConsistencyError)
-      TableResult(m, skipped = false, Some(report), None)
+      TableResult(m, skipped = false, Some(report), None, warnings)
     } catch {
       case e: ConsistencyCheck.ConsistencyCheckException => throw e
       case e: Exception =>
@@ -156,7 +271,11 @@ object IngestJob {
     }
   }
 
-  /** O5: the multi-table loop. */
-  def run(spark: SparkSession, cfg: IngestConfig): Seq[TableResult] =
-    cfg.tables.map(ingestTable(spark, cfg, _))
+  /** Ingest + verify one parquet table ([[load]]). */
+  def ingestTable(spark: SparkSession, cfg: IngestConfig, m: TableMapping): TableResult =
+    load(spark, cfg, m)
+
+  /** O5: the multi-table loop, for either source. */
+  def run(spark: SparkSession, cfg: LoadConfig): Seq[TableResult] =
+    cfg.tables.map(load(spark, cfg, _))
 }

@@ -18,9 +18,13 @@ import graft.operators.Enrich
  * connections (the at-scale ingest path the reference's single-reader
  * source lacks — see [[graft.sources.JdbcSource.scanPartitioned]]).
  *
- * Prints a per-table report plus the aggregate batch counters
- * (rows_read / rows_written / delta, FB:1283–1327) and exits non-zero on
- * failure when --fail-on-consistency-error is set.
+ * Both sources run the same load ([[graft.IngestJob.load]]). Prints a
+ * per-table report plus the aggregate batch counters (rows_read /
+ * rows_written / delta, FB:1283–1327) and exits non-zero on failure when
+ * --fail-on-consistency-error is set. Arguments it would otherwise
+ * misread — a `--mode` other than `append` or `replace`, or
+ * `--scan-partitions` without `--jdbc-url` — exit with status 2 before
+ * any work.
  */
 object IngestMain {
 
@@ -30,63 +34,64 @@ object IngestMain {
     if (i >= 0 && i + 1 < args.length) args(i + 1) else default
   }
 
-  /** `--order-by table=col,table2=col2` → map. */
+  /** `table=value,table2=value2` (`--order-by`, `--offset`,
+    * `--scan-partitions`) → map. */
   def parseOverrides(spec: String): Map[String, String] =
     if (spec == null || spec.isEmpty) Map.empty
     else spec.split(",").map { kv =>
       kv.split("=") match {
         case Array(t, c) => t.trim -> c.trim
-        case _ => throw new IllegalArgumentException(s"bad --order-by entry: $kv")
+        case _ => throw new IllegalArgumentException(s"bad table=value entry: $kv")
       }
     }.toMap
 
-  def main(args: Array[String]): Unit = {
+  /** The run the arguments ask for: a parquet load, or with `--jdbc-url`
+    * a live JDBC load; `Left` with the reason for arguments that would
+    * otherwise be misread (`--mode replce` is not an append, and
+    * `--scan-partitions` needs a JDBC source). */
+  def config(args: Array[String]): Either[String, IngestJob.LoadConfig] = {
     val sourceDir = getArg(args, "source-dir", "/root/testdata/sf0.001")
-    val warehouse = getArg(args, "warehouse",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    val tables = getArg(args, "tables", "region,nation")
     val mode = getArg(args, "mode", "append")
-    // --naming fb: FB-variant identifier normalization (uppercase source,
-    // lowercase + $-sanitized sink); default preserves case (MIS)
-    val naming = getArg(args, "naming", "mis")
-    val failOnErr = getArg(args, "fail-on-consistency-error", "true").toBoolean
-    val orderBy = parseOverrides(getArg(args, "order-by", ""))
+    val jdbcUrl = Option(getArg(args, "jdbc-url"))
+    val scanSpec = getArg(args, "scan-partitions", "")
+    if (mode != "append" && mode != "replace")
+      Left(s"--mode must be append or replace, not '$mode'")
+    else if (scanSpec.nonEmpty && jdbcUrl.isEmpty)
+      Left("--scan-partitions needs --jdbc-url: a parquet source has no range-parallel scan")
+    else scala.util.Try {
+      val warehouse = Option(getArg(args, "warehouse"))
+        .getOrElse(java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      // --naming fb: FB-variant identifier normalization (uppercase source,
+      // lowercase + $-sanitized sink); default preserves case (MIS)
+      val mappings = IngestJob.TableMapping.parse(
+        getArg(args, "tables", "region,nation"), getArg(args, "naming", "mis"))
+      val orderBy = parseOverrides(getArg(args, "order-by", ""))
+      val replace = mode == "replace"
+      val failOnErr = getArg(args, "fail-on-consistency-error", "true").toBoolean
+      val offsets = parseOverrides(getArg(args, "offset", ""))
+        .map { case (t, n) => t -> n.toLong }
+      val lineage = Enrich.Lineage(
+        loadDttm = new java.sql.Timestamp(System.currentTimeMillis()))
+      jdbcUrl match {
+        case Some(url) =>
+          val scanParts = parseOverrides(scanSpec).map { case (t, n) => t -> n.toInt }
+          sources.JdbcIngest.JdbcConfig(url, warehouse, mappings, orderBy, replace,
+            failOnErr, offsets, lineage, scanParts)
+        case None =>
+          IngestJob.IngestConfig(sourceDir, warehouse, mappings, orderBy, replace,
+            failOnErr, offsets, lineage)
+      }
+    }.toEither.left.map(_.getMessage)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cfg = config(args).fold(
+      why => { System.err.println(s"[ingest] $why"); sys.exit(2) }, identity)
     val spark = GraftSession()
-
-    val jdbcUrl = getArg(args, "jdbc-url", null)
-    val offsets = parseOverrides(getArg(args, "offset", ""))
-      .map { case (t, n) => t -> n.toLong }
-    val scanParts = parseOverrides(getArg(args, "scan-partitions", ""))
-      .map { case (t, n) => t -> n.toInt }
-    val mappings = IngestJob.TableMapping.parse(tables, naming)
-    val lineage = Enrich.Lineage(
-      loadDttm = new java.sql.Timestamp(System.currentTimeMillis()))
-
     val t0 = System.nanoTime()
     val results =
-      try {
-        if (jdbcUrl != null)
-          sources.JdbcIngest.run(spark, sources.JdbcIngest.JdbcConfig(
-            url = jdbcUrl,
-            warehouseDir = warehouse,
-            tables = mappings,
-            orderByOverride = orderBy,
-            replace = mode == "replace",
-            failOnConsistencyError = failOnErr,
-            offsetRows = offsets,
-            lineage = lineage,
-            scanPartitions = scanParts))
-        else
-          IngestJob.run(spark, IngestJob.IngestConfig(
-            sourceDir = sourceDir,
-            warehouseDir = warehouse,
-            tables = mappings,
-            orderByOverride = orderBy,
-            replace = mode == "replace",
-            failOnConsistencyError = failOnErr,
-            offsetRows = offsets,
-            lineage = lineage))
-      } catch {
+      try IngestJob.run(spark, cfg)
+      catch {
         case e: graft.operators.ConsistencyCheck.ConsistencyCheckException =>
           System.err.println(s"[ingest] ABORT: ${e.getMessage}")
           spark.stop(); sys.exit(2)
@@ -107,8 +112,8 @@ object IngestMain {
     val written = reps.map(_.sinkCount).sum
     println(f"[ingest] batch total: tables=${results.size} " +
       f"rows_read=$read rows_written=$written delta=${written - read} " +
-      f"elapsed=${(System.nanoTime() - t0) / 1e9}%.1fs warehouse=$warehouse")
+      f"elapsed=${(System.nanoTime() - t0) / 1e9}%.1fs warehouse=${cfg.warehouseDir}")
     spark.stop()
-    if (failOnErr && (results.exists(_.error.nonEmpty) || reps.exists(!_.ok))) sys.exit(1)
+    if (cfg.failOnConsistencyError && (results.exists(_.error.nonEmpty) || reps.exists(!_.ok))) sys.exit(1)
   }
 }

@@ -2728,11 +2728,8 @@ object Queries {
     * the t96 3-key Morton configuration's locality upgrade): Skilling's
     * transpose algorithm — per-level undo rotations, Gray encode,
     * last-axis parity smear, MSB-first round-robin interleave. The
-    * oracle replays the identical integer recurrence as chained
-    * DuckDB CTEs (one per (level, axis) sequential step — the C
-    * loop's in-place updates become simultaneous two-column CASEs
-    * reading the previous CTE), every bit op fully parenthesized.
-    * All-integer, hash-exact by construction. */
+    * oracle is [[duckHilbertNSql]] at n = 3. All-integer, hash-exact by
+    * construction. */
   val t99_hilbert_key_3d: Q = Q(
     run = (spark, dir) =>
       t(spark, dir, "lineitem")
@@ -2752,66 +2749,14 @@ object Queries {
             pmod(col("l_partkey").cast("long"), lit(1L << 16)),
             pmod(col("l_suppkey").cast("long"), lit(1L << 16))),
             bits = 16).as("h_key"))),
-    oracle = Some {
-      val bits = 16
-      val m = 1L << bits
-      val xs = Seq("x0", "x1", "x2")
-      var ctes = Seq(
-        s"""h0 AS (SELECT l_orderkey, l_linenumber,
-           |    CAST((l_orderkey % $m) AS BIGINT) AS x0,
-           |    CAST((l_partkey % $m) AS BIGINT) AS x1,
-           |    CAST((l_suppkey % $m) AS BIGINT) AS x2
-           |  FROM lineitem)""".stripMargin)
-      var idx = 0
-      // undo-excess-work rotations: q = 2^(bits-1) .. 2, axes 0..2
-      for (sh <- (bits - 1) to 1 by -1; i <- 0 to 2) {
-        val (q, p) = (1L << sh, (1L << sh) - 1L)
-        val prev = s"h$idx"; idx += 1
-        val cols = xs.map { c =>
-          val xi = xs(i)
-          if (i == 0) {
-            if (c == "x0")
-              s"CASE WHEN ((x0 & $q)) <> 0 THEN xor(x0, $p) ELSE x0 END AS x0"
-            else s"$c"
-          } else if (c == "x0")
-            s"CASE WHEN (($xi & $q)) <> 0 THEN xor(x0, $p) " +
-              s"ELSE xor(x0, ((xor(x0, $xi)) & $p)) END AS x0"
-          else if (c == xi)
-            s"CASE WHEN (($xi & $q)) <> 0 THEN $xi " +
-              s"ELSE xor($xi, ((xor(x0, $xi)) & $p)) END AS $xi"
-          else s"$c"
-        }
-        ctes :+= s"""h$idx AS (SELECT l_orderkey, l_linenumber,
-           |    ${cols.mkString(",\n    ")} FROM $prev)""".stripMargin
-      }
-      // gray encode (sequential X[i] ^= X[i-1], spelled simultaneous)
-      val prevG = s"h$idx"; idx += 1
-      ctes :+= s"""h$idx AS (SELECT l_orderkey, l_linenumber, x0,
-         |    xor(x1, x0) AS x1, xor(x2, xor(x1, x0)) AS x2
-         |  FROM $prevG)""".stripMargin
-      // parity smear from the last axis
-      val tExpr = ((bits - 1) to 1 by -1).map { sh =>
-        s"(CASE WHEN ((x2 & ${1L << sh})) <> 0 THEN ${(1L << sh) - 1L} ELSE 0 END)"
-      }.reduce((a, b) => s"xor($a, $b)")
-      val prevT = s"h$idx"; idx += 1
-      ctes :+= s"""h$idx AS (SELECT l_orderkey, l_linenumber,
-         |    xor(x0, t) AS x0, xor(x1, t) AS x1, xor(x2, t) AS x2
-         |  FROM (SELECT *, $tExpr AS t FROM $prevT))""".stripMargin
-      // MSB-first round-robin interleave
-      val d = (for (sh <- (bits - 1) to 0 by -1; i <- 0 to 2) yield {
-        val pos = 3 * bits - 1 - ((bits - 1 - sh) * 3 + i)
-        s"((((${xs(i)} >> $sh)) & 1) << $pos)"
-      }).mkString(" | ")
-      s"""WITH ${ctes.mkString(",\n")}
-         |SELECT l_orderkey, l_linenumber, CAST($d AS BIGINT) AS h_key
-         |FROM h$idx
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin
-    })
+    oracle = Some(duckHilbertNSql(Seq("l_orderkey", "l_partkey", "l_suppkey"), 16,
+      Seq("l_orderkey", "l_linenumber"), "lineitem")))
 
   /** Dimension-generic DuckDB replay of the Skilling transpose walk
-    * ([[graft.functions.HilbertIndexN]]) — t99's CTE chain with the
-    * axis list parameterized: one CTE per (level, axis)
-    * undo-excess-work rotation, a cumulative-xor Gray encode, the
+    * ([[graft.functions.HilbertIndexN]]) as chained DuckDB CTEs: one
+    * CTE per (level, axis) undo-excess-work rotation (the C loop's
+    * in-place updates become simultaneous two-column CASEs reading the
+    * previous CTE), a cumulative-xor Gray encode, the
     * parity smear from the last axis, then the MSB-first round-robin
     * interleave. `keys` are raw column expressions (bounded here by
     * `% 2^bits`); every bit-op term fully parenthesized (DuckDB's
@@ -9944,7 +9889,7 @@ object Queries {
         val wh = java.nio.file.Files.createTempDirectory("graft-jdbc-e2e").toString
         val cfg = sources.JdbcIngest.JdbcConfig(url, wh,
           IngestJob.TableMapping.parseFb("REGION,NATION"), replace = true)
-        sources.JdbcIngest.run(spark, cfg)
+        IngestJob.run(spark, cfg)
           .flatMap { r => r.report.map { rep =>
             val mm = spark.read.parquet(s"$wh/${r.mapping.sink}")
               .agg(min(col("row_hash")), max(col("row_hash"))).head()

@@ -1,22 +1,23 @@
 package graft.sources
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
+import graft.IngestJob
 import graft.IngestJob.{TableMapping, TableResult}
-import graft.operators.{ConsistencyCheck, Ddl, Enrich}
+import graft.operators.Enrich
 
 /**
- * The ingest orchestration ([[graft.IngestJob]]) over a LIVE JDBC source —
- * the reference's actual deployment shape (Firebird → warehouse,
- * FB:98–417), where [[graft.IngestJob]] runs the same pipeline with
- * parquet standing in for the database. Per table: access probe
- * (FB:494–525) → `DatabaseMetaData` schema discovery with LOBs skipped
- * (FB:530–586) → order-key resolution `--order-by` → primary key → first
- * column (FB:224–235) → frozen `MAX(k)` watermark (FB:628–643) → frozen
- * source COUNT pushed down to the database (FB:1359–1380) →
- * watermark-bounded resumable scan SQL pushed down whole (FB:1072–1084) →
- * lineage envelope + canonical hashes → month-partitioned zstd parquet →
- * count + dual-hash consistency check.
+ * The table load over a LIVE JDBC source — the reference's actual
+ * deployment shape (Firebird → warehouse, FB:98–417). The load itself is
+ * [[graft.IngestJob.load]], the same phase sequence the parquet stand-in
+ * runs; this config picks the source ([[graft.IngestJob.Source.Jdbc]]),
+ * which answers the source's questions with pushed-down SQL: a `SELECT 1`
+ * access probe (FB:494–525), `DatabaseMetaData` columns with LOBs skipped
+ * (FB:530–586), `getPrimaryKeys` for the order key (FB:598–626), the
+ * frozen `MAX(k)` watermark (FB:628–643) and its bounded COUNT
+ * (FB:1359–1380), and the watermark-bounded scan SQL (FB:1072–1084). A
+ * resume orders that scan by the key and then every other column, as the
+ * parquet path does, so a key with duplicates still resumes exactly.
  *
  * Scale: by default the scan arrives as ONE JDBC partition per table
  * (the reference's single-reader semantics, FB:262–275); `--scan-
@@ -28,8 +29,8 @@ import graft.operators.{ConsistencyCheck, Ddl, Enrich}
  * consistency check verifies the parallel read against the same
  * frozen baseline as the single-stream one. Non-numeric order keys
  * and offset resumes fall back to the single-stream scan (an offset
- * inside a stride is per-partition, not global). Everything after the
- * scan — enrich, write, verify — is ordinary distributed Spark.
+ * inside a stride is per-partition, not global), with a warning in the
+ * table's result.
  */
 object JdbcIngest {
 
@@ -42,96 +43,19 @@ object JdbcIngest {
       failOnConsistencyError: Boolean = true,
       offsetRows: Map[String, Long] = Map.empty,
       lineage: Enrich.Lineage = Enrich.Lineage(),
-      scanPartitions: Map[String, Int] = Map.empty)
-
-  /** Range bounds must be integral; anything else → single-stream. */
-  private def longBound(v: Any): Option[Long] = v match {
-    case n: java.lang.Number => Some(n.longValue())
-    case _ => None
+      scanPartitions: Map[String, Int] = Map.empty) extends IngestJob.LoadConfig {
+    def source(spark: SparkSession, m: TableMapping): IngestJob.Source =
+      new IngestJob.Source.Jdbc(spark, url, m.source, scanPartitions.getOrElse(m.source, 1))
   }
 
   /** S5 resolution chain against live metadata: explicit override →
     * `getPrimaryKeys` → first discovered column (FB:224–235). */
   def resolveOrderBy(cfg: JdbcConfig, m: TableMapping,
       columnNames: Seq[String]): String =
-    cfg.orderByOverride.get(m.source)
-      .orElse(JdbcSource.detectPrimaryKeyColumn(cfg.url, m.source))
-      .getOrElse(columnNames.head)
+    IngestJob.orderKey(cfg.orderByOverride, m,
+      JdbcSource.detectPrimaryKeyColumn(cfg.url, m.source), columnNames)
 
-  /** Ingest + verify one table over JDBC; structured result, per-table
-    * failure isolation (FB:302–352). */
-  def ingestTable(spark: SparkSession, cfg: JdbcConfig, m: TableMapping): TableResult = {
-    try {
-      if (!JdbcSource.checkTableAccess(cfg.url, m.source))
-        return TableResult(m, skipped = true, None, None)
-
-      val metas = JdbcSource.readTableMetadata(cfg.url, m.source)
-      val orderBy = resolveOrderBy(cfg, m, metas.map(_.name))
-      val wm = JdbcSource.readWatermarkValue(cfg.url, m.source, orderBy)
-
-      // A1 at the source: the frozen baseline COUNT runs IN the database
-      // over the same watermark predicate as the scan — one scalar over
-      // the wire, not a Spark count over a second full read
-      val srcCount = JdbcSource.readBoundedCount(cfg.url, m.source, orderBy, wm)
-
-      val offset = cfg.offsetRows.getOrElse(m.source, 0L)
-      val parts = cfg.scanPartitions.getOrElse(m.source, 1)
-      // Either the parallel scan, or the REASON it can't run — a
-      // requested n>1 silently degrading to 1 JDBC connection is a
-      // many-hour surprise at the scale the flag targets, so the
-      // fallback is loud: logged here and carried in the result
-      val parallelOrReason: Either[String, org.apache.spark.sql.DataFrame] =
-        if (parts <= 1) Left("")
-        else if (offset != 0L)
-          Left(s"row-offset resume ($offset) is single-stream by design " +
-            "(a per-stride offset would skip rows per partition)")
-        else wm match {
-          case None => Left("NULL watermark (empty source): nothing to range-split")
-          case Some(w) => longBound(w) match {
-            case None => Left(s"order key '$orderBy' has non-integral " +
-              s"watermark ${w} (${w.getClass.getSimpleName}); range " +
-              "strides need a numeric key")
-            case Some(ub) =>
-              JdbcSource.readMinValue(cfg.url, m.source, orderBy)
-                .flatMap(longBound) match {
-                case None => Left(s"order key '$orderBy' has no integral " +
-                  "MIN: range strides need a numeric lower bound")
-                case Some(lb) => Right(JdbcSource.scanPartitioned(spark,
-                  cfg.url, m.source, metas, orderBy, wm, parts, lb, ub))
-              }
-          }
-        }
-      val fallbackWarning = parallelOrReason.left.toOption
-        .filter(_.nonEmpty)
-        .map { why =>
-          val msg = s"table ${m.source}: requested $parts scan partitions " +
-            s"but falling back to a single-stream scan — $why"
-          System.err.println(s"[jdbc] WARN $msg")
-          msg
-        }
-      val scanned = parallelOrReason.getOrElse(
-        JdbcSource.scan(spark, cfg.url, m.source, metas, orderBy, wm, offset))
-      val enriched = Enrich.enrich(scanned, metas, cfg.lineage)
-
-      // resume ALWAYS appends (the prefix is already in the sink)
-      val mode =
-        if (offset > 0 || !cfg.replace) SaveMode.Append else SaveMode.Overwrite
-      val sinkPath = s"${cfg.warehouseDir}/${m.sink}"
-      Ddl.writePartitioned(enriched, sinkPath, mode)
-
-      val metrics = ConsistencyCheck.isolatedSinkMetrics(spark, sinkPath)
-      val report = ConsistencyCheck.check(m.sink, srcCount, metrics,
-        cfg.failOnConsistencyError)
-      TableResult(m, skipped = false, Some(report), None,
-        warnings = fallbackWarning.toSeq)
-    } catch {
-      case e: ConsistencyCheck.ConsistencyCheckException => throw e
-      case e: Exception =>
-        TableResult(m, skipped = false, None, Some(e.getMessage))
-    }
-  }
-
-  /** O5: the multi-table loop. */
-  def run(spark: SparkSession, cfg: JdbcConfig): Seq[TableResult] =
-    cfg.tables.map(ingestTable(spark, cfg, _))
+  /** Ingest + verify one table over JDBC ([[graft.IngestJob.load]]). */
+  def ingestTable(spark: SparkSession, cfg: JdbcConfig, m: TableMapping): TableResult =
+    IngestJob.load(spark, cfg, m)
 }

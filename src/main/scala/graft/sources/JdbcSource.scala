@@ -92,73 +92,74 @@ object JdbcSource {
       }
     }).isSuccess
 
+  /** One scalar query over a fresh connection. */
+  private def scalar[A](url: String, sql: String)(read: java.sql.ResultSet => A): A =
+    withConnection(url) { conn =>
+      Using.resource(conn.createStatement()) { st =>
+        val rs = st.executeQuery(sql)
+        rs.next(); read(rs)
+      }
+    }
+
+  /** `SELECT agg(k) FROM t`, NULL as None. */
+  private def readAggregate(url: String, table: String, orderBy: String,
+      agg: String): Option[Any] = {
+    val q = SqlLiteral.escapeSourceIdentifier _
+    scalar(url, s"SELECT $agg(${q(orderBy)}) FROM ${q(table)}")(rs => Option(rs.getObject(1)))
+  }
+
   /** Lower bound of the order key — `SELECT MIN(k)`, the opening scalar
     * of the range-parallel scan (the watermark is its upper twin). */
   def readMinValue(url: String, table: String, orderBy: String): Option[Any] =
-    withConnection(url) { conn =>
-      Using.resource(conn.createStatement()) { st =>
-        val rs = st.executeQuery(
-          s"SELECT MIN(${SqlLiteral.escapeSourceIdentifier(orderBy)}) " +
-          s"FROM ${SqlLiteral.escapeSourceIdentifier(table)}")
-        if (rs.next()) Option(rs.getObject(1)) else None
-      }
-    }
+    readAggregate(url, table, orderBy, "MIN")
 
   /** A3: frozen watermark — `SELECT MAX(k) FROM t` (FB:628–643). */
   def readWatermarkValue(url: String, table: String, orderBy: String): Option[Any] =
-    withConnection(url) { conn =>
-      Using.resource(conn.createStatement()) { st =>
-        val rs = st.executeQuery(
-          s"SELECT MAX(${SqlLiteral.escapeSourceIdentifier(orderBy)}) " +
-          s"FROM ${SqlLiteral.escapeSourceIdentifier(table)}")
-        if (rs.next()) Option(rs.getObject(1)) else None
-      }
-    }
+    readAggregate(url, table, orderBy, "MAX")
+
+  /** F2: the frozen bounded-snapshot predicate `k <= wm`, the one text
+    * every pushed-down query carries; NULL watermark → the empty-set
+    * predicate `1 = 0` (FB:648). */
+  private def watermarkWhere(orderBy: String, watermark: Option[Any]): String =
+    watermark
+      .map(w => s"${SqlLiteral.escapeSourceIdentifier(orderBy)} <= ${SqlLiteral.toSqlLiteral(w)}")
+      .getOrElse("1 = 0")
 
   /** A1 at the source: the frozen baseline COUNT over the same watermark
     * predicate as the scan, pushed down whole (FB:1359–1380: `SELECT
-    * COUNT(1) FROM t WHERE k <= wm`). NULL watermark → 0 (empty-set
-    * predicate, FB:648). */
+    * COUNT(1) FROM t WHERE k <= wm`). NULL watermark → 0. */
   def readBoundedCount(url: String, table: String, orderBy: String,
       watermark: Option[Any]): Long =
-    withConnection(url) { conn =>
-      val q = SqlLiteral.escapeSourceIdentifier _
-      val where = watermark
-        .map(w => s"${q(orderBy)} <= ${SqlLiteral.toSqlLiteral(w)}")
-        .getOrElse("1 = 0")
-      Using.resource(conn.createStatement()) { st =>
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM ${q(table)} WHERE $where")
-        rs.next(); rs.getLong(1)
-      }
-    }
+    scalar(url, s"SELECT COUNT(*) FROM ${SqlLiteral.escapeSourceIdentifier(table)} " +
+      s"WHERE ${watermarkWhere(orderBy, watermark)}")(_.getLong(1))
 
   /** S1: the bounded ordered (resumable) scan SQL, pushed down whole —
     * the reference's Firebird query (FB:1072–1084: `SELECT [FIRST n]
     * [SKIP m] cols FROM t WHERE k <= wm ORDER BY k`), rendered per
     * [[ScanDialect]]: Standard emits ANSI `OFFSET m ROWS` / `FETCH
     * FIRST n ROWS ONLY` (Derby-verified live); Firebird emits the
-    * verbatim `FIRST`/`SKIP` form. NULL watermark → empty-set
-    * predicate `1 = 0` (FB:648). */
+    * verbatim `FIRST`/`SKIP` form. A resume (`offsetRows > 0`) orders by
+    * the key and then `tieBreakers`, so a key with duplicates still has
+    * one order and the skipped prefix is the rows already loaded (the
+    * reference orders by the key alone, FB:1084). */
   def buildScanSql(table: String, metas: Seq[ColumnMeta], orderBy: String,
       watermark: Option[Any], offsetRows: Long = 0,
       dialect: ScanDialect = ScanDialect.Standard,
-      limitRows: Option[Long] = None): String = {
-    val cols = metas.map(m => SqlLiteral.escapeSourceIdentifier(m.name)).mkString(", ")
+      limitRows: Option[Long] = None,
+      tieBreakers: Seq[String] = Nil): String = {
     val q = SqlLiteral.escapeSourceIdentifier _
-    val where = watermark
-      .map(w => s"${q(orderBy)} <= ${SqlLiteral.toSqlLiteral(w)}")
-      .getOrElse("1 = 0")
+    val cols = metas.map(m => q(m.name)).mkString(", ")
+    val keys = (orderBy +: (if (offsetRows > 0) tieBreakers else Nil)).map(q).mkString(", ")
+    val from = s"FROM ${q(table)} WHERE ${watermarkWhere(orderBy, watermark)} ORDER BY $keys"
     dialect match {
       case ScanDialect.Standard =>
         val offset = if (offsetRows > 0) s" OFFSET $offsetRows ROWS" else ""
         val limit = limitRows.map(n => s" FETCH FIRST $n ROWS ONLY").getOrElse("")
-        s"SELECT $cols FROM ${q(table)} WHERE $where " +
-          s"ORDER BY ${q(orderBy)}$offset$limit"
+        s"SELECT $cols $from$offset$limit"
       case ScanDialect.Firebird =>
         val first = limitRows.map(n => s"FIRST $n ").getOrElse("")
         val skip = if (offsetRows > 0) s"SKIP $offsetRows " else ""
-        s"SELECT $first$skip$cols FROM ${q(table)} WHERE $where " +
-          s"ORDER BY ${q(orderBy)}"
+        s"SELECT $first$skip$cols $from"
     }
   }
 
@@ -166,12 +167,13 @@ object JdbcSource {
   def scan(spark: SparkSession, url: String, table: String,
       metas: Seq[ColumnMeta], orderBy: String, watermark: Option[Any],
       offsetRows: Long = 0,
-      dialect: ScanDialect = ScanDialect.Standard): DataFrame =
+      dialect: ScanDialect = ScanDialect.Standard,
+      tieBreakers: Seq[String] = Nil): DataFrame =
     spark.read
       .format("jdbc")
       .option("url", url)
-      .option("dbtable",
-        s"(${buildScanSql(table, metas, orderBy, watermark, offsetRows, dialect)}) s")
+      .option("dbtable", s"(${buildScanSql(table, metas, orderBy, watermark,
+        offsetRows, dialect, tieBreakers = tieBreakers)}) s")
       .load()
 
   /** S1 AT SCALE: the same bounded snapshot scan as [[scan]], split into
@@ -205,11 +207,8 @@ object JdbcSource {
   def scanPartitioned(spark: SparkSession, url: String, table: String,
       metas: Seq[ColumnMeta], orderBy: String, watermark: Option[Any],
       numPartitions: Int, lowerBound: Long, upperBound: Long): DataFrame = {
-    val cols = metas.map(m => SqlLiteral.escapeSourceIdentifier(m.name)).mkString(", ")
     val q = SqlLiteral.escapeSourceIdentifier _
-    val where = watermark
-      .map(w => s"${q(orderBy)} <= ${SqlLiteral.toSqlLiteral(w)}")
-      .getOrElse("1 = 0")
+    val cols = metas.map(m => q(m.name)).mkString(", ")
     // the escaped key is re-projected under the plain alias — UNQUOTED,
     // so the database applies its own case normalization and the stride
     // predicates (quoted by Spark's dialect or not at all) bind the
@@ -218,7 +217,7 @@ object JdbcSource {
       .format("jdbc")
       .option("url", url)
       .option("dbtable", s"(SELECT $cols, ${q(orderBy)} AS " +
-        s"$PartitionKeyAlias FROM ${q(table)} WHERE $where) s")
+        s"$PartitionKeyAlias FROM ${q(table)} WHERE ${watermarkWhere(orderBy, watermark)}) s")
       .option("partitionColumn", PartitionKeyAlias)
       .option("lowerBound", lowerBound)
       .option("upperBound", upperBound)

@@ -90,7 +90,7 @@ class JdbcSourceSpec extends SparkSpec {
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("TEST:test,NO_SUCH_TABLE:nope"),
       replace = true)
-    val results = graft.sources.JdbcIngest.run(spark, cfg)
+    val results = graft.IngestJob.run(spark, cfg)
     val ok = results.find(_.mapping.source == "TEST").get
     assert(!ok.skipped && ok.report.get.ok)
     assert(ok.report.get.sourceCount === 3)
@@ -115,7 +115,7 @@ class JdbcSourceSpec extends SparkSpec {
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("TEST:test"),
       offsetRows = Map("TEST" -> 2L), replace = true) // resume forces append
-    val res = graft.sources.JdbcIngest.run(spark, cfg).head
+    val res = graft.IngestJob.run(spark, cfg).head
     assert(res.report.get.ok)
     assert(res.report.get.sinkCount === 3)
     val ids = spark.read.parquet(s"$wh/test")
@@ -187,7 +187,7 @@ class JdbcSourceSpec extends SparkSpec {
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("WIDE:wide"),
       replace = true, scanPartitions = Map("WIDE" -> 4))
-    val res = graft.sources.JdbcIngest.run(spark, cfg).head
+    val res = graft.IngestJob.run(spark, cfg).head
     assert(!res.skipped && res.report.get.ok)
     assert(res.report.get.sourceCount === 1000)
     assert(res.report.get.sinkCount === 1000)
@@ -219,6 +219,55 @@ class JdbcSourceSpec extends SparkSpec {
     assert(JdbcSource.buildScanSql("TEST", metas, "ID", None,
       dialect = ScanDialect.Firebird) ===
       """SELECT "ID", "NAME" FROM "TEST" WHERE 1 = 0 ORDER BY "ID"""")
+  }
+
+  test("golden: a resume orders the scan SQL by the key, then the tie-breakers, in both dialects") {
+    import JdbcSource.ScanDialect
+    val metas = Seq(
+      ColumnMeta("ID", Types.INTEGER, "INTEGER", 10, 0, nullable = false),
+      ColumnMeta("NAME", Types.VARCHAR, "VARCHAR", 100, 0, nullable = true))
+    assert(JdbcSource.buildScanSql("TEST", metas, "ID", Some(3),
+      offsetRows = 2, tieBreakers = Seq("NAME")) ===
+      """SELECT "ID", "NAME" FROM "TEST" WHERE "ID" <= 3 ORDER BY "ID", "NAME" OFFSET 2 ROWS""")
+    assert(JdbcSource.buildScanSql("TEST", metas, "ID", Some(3),
+      offsetRows = 2, dialect = ScanDialect.Firebird, tieBreakers = Seq("NAME")) ===
+      """SELECT SKIP 2 "ID", "NAME" FROM "TEST" WHERE "ID" <= 3 ORDER BY "ID", "NAME"""")
+    // no resume, no tie-breakers: the offset-0 scan orders by the key alone
+    assert(JdbcSource.buildScanSql("TEST", metas, "ID", Some(3),
+      tieBreakers = Seq("NAME")) ===
+      """SELECT "ID", "NAME" FROM "TEST" WHERE "ID" <= 3 ORDER BY "ID"""")
+  }
+
+  test("JdbcIngest: a resume on a key with duplicates appends exactly the rows after the first n") {
+    seeded
+    val conn = DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    // no primary key: the order key falls back to the first column, K,
+    // which repeats; within each K the rows go in out of V order
+    try {
+      st.execute("CREATE TABLE DUPK (K INT, V VARCHAR(10))")
+      st.execute("INSERT INTO DUPK VALUES (1, 'c'), (1, 'a'), (2, 'b'), (1, 'b'), (2, 'a'), (3, 'a')")
+    } catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
+    st.close(); conn.close()
+    val full = Seq((1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (3, "a"))
+    val metas = JdbcSource.readTableMetadata(url, "DUPK")
+    val wm = JdbcSource.readWatermarkValue(url, "DUPK", "K")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Int, String)] =
+      df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    for (n <- 1 to full.length)
+      assert(rows(JdbcSource.scan(spark, url, "DUPK", metas, "K", wm,
+        offsetRows = n, tieBreakers = Seq("V"))) === full.drop(n), s"offset $n")
+    // a first attempt that died after two rows of the total order, inside
+    // the K = 1 run; the resume appends the other four, each once
+    val wh = java.nio.file.Files.createTempDirectory("jdbc-dup-resume").toString
+    val prefix = JdbcSource.scan(spark, url, "DUPK", metas, "K", wm)
+      .filter("K = 1 AND V < 'c'")
+    graft.operators.Ddl.writePartitioned(Enrich.enrich(prefix, metas),
+      s"$wh/dupk", org.apache.spark.sql.SaveMode.Overwrite)
+    val res = graft.IngestJob.run(spark, graft.sources.JdbcIngest.JdbcConfig(url, wh,
+      graft.IngestJob.TableMapping.parse("DUPK:dupk"), offsetRows = Map("DUPK" -> 2L))).head
+    assert(res.report.get.ok, res)
+    assert(rows(spark.read.parquet(s"$wh/dupk").select("K", "V")).sorted === full)
   }
 
   test("parallel scan strides bind an aliased key: reserved-word order keys work") {
@@ -275,7 +324,7 @@ class JdbcSourceSpec extends SparkSpec {
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("SKEY:skey"),
       replace = true, scanPartitions = Map("SKEY" -> 4))
-    val res = graft.sources.JdbcIngest.run(spark, cfg).head
+    val res = graft.IngestJob.run(spark, cfg).head
     assert(!res.skipped && res.report.get.ok) // the ingest itself succeeds
     assert(res.warnings.exists(w => w.contains("falling back") &&
       w.contains("SKEY") && w.contains("4")),
@@ -284,7 +333,7 @@ class JdbcSourceSpec extends SparkSpec {
     val okCfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("TEST:test2"),
       replace = true, scanPartitions = Map("TEST" -> 2))
-    assert(graft.sources.JdbcIngest.run(spark, okCfg).head.warnings.isEmpty)
+    assert(graft.IngestJob.run(spark, okCfg).head.warnings.isEmpty)
   }
 
   test("typed row over JDBC: canonical tokens honor DECIMAL/CHAR/TIMESTAMP metadata") {
