@@ -151,18 +151,16 @@ object GraftExtensions {
     // gated configuration; the Column API exposes bits and the N-key
     // form) and the REAL container-header parsers. The SQL surface
     // bounds both keys into [0, 2^21) with pmod — the same fold the
-    // zOrderWrite caller path applies — so out-of-domain or negative
+    // zOrderWriteN caller path applies — so out-of-domain or negative
     // inputs wrap order-preservingly-when-in-domain instead of
     // aliasing on raw low bits / two's-complement garbage; callers
     // needing a loud contract use Layout.requireBounded.
     "graft_zvalue" -> { children =>
       require(children.length == 2, "graft_zvalue expects exactly 2 arguments")
       val bound = org.apache.spark.sql.functions.lit(1L << 21)
-      bridge.expressionEager(operators.Layout.zValue(
+      bridge.expressionEager(operators.Layout.zValueN(children.map(c =>
         org.apache.spark.sql.functions.pmod(
-          bridge.column(children.head).cast("long"), bound),
-        org.apache.spark.sql.functions.pmod(
-          bridge.column(children(1)).cast("long"), bound), 21))
+          bridge.column(c).cast("long"), bound)), 21))
     },
     // round 16: the HILBERT clustering key at the same gated 21-bit
     // configuration and pmod bounding as graft_zvalue — the native

@@ -17,20 +17,32 @@ import graft.operators._
  *
  * Every multi-row result carries an explicit total ORDER BY on both sides
  * so the comparison is insensitive to the driver's row-ordering policy.
+ *
+ * Each query is declared once, as a public `val` of type [[Q]]: its name
+ * is the member name ([[all]] is derived from the declarations), and its
+ * body is one `frame`. Where the gate needs a step the bench should not
+ * time (an ORDER BY for row stability, a projection into the oracle's
+ * columns), that step is the query's `compareAs`, applied after the
+ * frame by `run` and skipped by `runForBench`.
  */
 object Queries {
 
   final case class Q(
-      run: (SparkSession, String) => DataFrame,
+      frame: (SparkSession, String) => DataFrame,
       oracle: Option[String],
       bench: Boolean = false,
-      // bench-time variant WITHOUT comparison-only plumbing (e.g. the
-      // final ORDER BY added purely for oracle row-stability); defaults
-      // to `run`. Operator semantics must be identical.
-      benchRun: Option[(SparkSession, String) => DataFrame] = None,
+      // the comparison-only step the gate adds after the frame: a total
+      // ORDER BY for row stability, or the projection into the oracle's
+      // columns; the bench times the frame without it
+      compareAs: DataFrame => DataFrame = identity,
       // session conf this query's action runs under; see [[withConf]]
       conf: Map[String, String] = Map.empty) {
-    def runForBench: (SparkSession, String) => DataFrame = benchRun.getOrElse(run)
+    /** The frame the bench times. */
+    def runForBench: (SparkSession, String) => DataFrame = frame
+
+    /** The gated result: the frame, then [[compareAs]]. */
+    def run: (SparkSession, String) => DataFrame =
+      (spark, dir) => compareAs(frame(spark, dir))
 
     /** Run `body` under this query's conf — the default AQE floor
       * unless [[conf]] declares another, plus the rest of [[conf]] —
@@ -50,8 +62,8 @@ object Queries {
       }
     }
 
-    /** The one query runner every main uses: build the frame (the bench
-      * variant if `forBench`), then run `action` on it under
+    /** The one query runner every main uses: build the frame (without
+      * [[compareAs]] if `forBench`), then run `action` on it under
       * [[withConf]], all inside one [[Staging.scoped]] frame, so the
       * query's barriers are released after its action and touch no
       * other query's. */
@@ -149,7 +161,7 @@ object Queries {
     "(SELECT CAST(FLOOR(MAX(l_orderkey) * 0.8) AS BIGINT) FROM lineitem)"
 
   val s1_resumable_scan: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem")
       val wm = SnapshotScan.freezeWatermark(li, "l_orderkey")
         .map(m => math.floor(m.asInstanceOf[Long] * 0.8).toLong)
@@ -164,12 +176,12 @@ object Queries {
 
   // S3/K4: access probe (`SELECT FIRST 1`)
   val s3_access_probe: Q = Q(
-    run = (spark, dir) => t(spark, dir, "lineitem").limit(1).select(lit(1).as("ok")),
+    frame = (spark, dir) => t(spark, dir, "lineitem").limit(1).select(lit(1).as("ok")),
     oracle = Some("SELECT 1 AS ok FROM lineitem LIMIT 1"))
 
   // S4/D: dynamic schema inference through the type-mapping system
   val s4_schema_inference: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       ColumnMeta.fromSchema(t(spark, dir, "lineitem").schema)
         .map(m => (m.name, TypeMapping.ddlType(m.dataType)))
@@ -185,7 +197,7 @@ object Queries {
 
   // S5: order-key resolution chain (PK convention → first column)
   val s5_order_key_detection: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       val tables = Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings")
@@ -211,7 +223,7 @@ object Queries {
     * oracle never sees the JSONL: equality against the source table IS
     * the round-trip law. */
   val s6_jsonl_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
       val path = "spark-warehouse/graft_jsonl_docs"
@@ -233,7 +245,7 @@ object Queries {
     * CSV seam is spec-pinned on a crafted frame (this corpus has
     * neither). */
   val s7_csv_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
       val path = "spark-warehouse/graft_csv_docs"
@@ -249,17 +261,13 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val f1_enrich_lineitem: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = tf(spark, dir, "lineitem")
       Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
-        .orderBy("l_orderkey", "l_linenumber")
     },
-    benchRun = Some((spark, dir) => {
-      // production ingest writes unordered (the ORDER BY above exists
-      // only for oracle row-stability) — bench the operator, not the sort
-      val li = tf(spark, dir, "lineitem")
-      Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
-    }),
+    // production ingest writes unordered: the ORDER BY exists only for
+    // oracle row-stability, so the bench times the operator, not the sort
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = {
       val h = OracleSql.rowHash(LineitemMetas)
       Some(
@@ -305,7 +313,7 @@ object Queries {
     ColumnMeta("dec", Types.DECIMAL, "DECIMAL", 12, 3, nullable = true))
 
   val f_canonical_tokens: Q = Q(
-    run = (spark, _) => {
+    frame = (spark, _) => {
       val df = spark.sql(
         s"SELECT * FROM VALUES ${tokenValues("TIMESTAMP_NTZ")} " +
         "AS t(id, d, tm, ch, s, ts, bin, dec)")
@@ -334,7 +342,7 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val a1_count_bounded: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem")
       val wm = SnapshotScan.freezeWatermark(li, "l_orderkey")
         .map(m => math.floor(m.asInstanceOf[Long] * 0.8).toLong)
@@ -343,7 +351,7 @@ object Queries {
     oracle = Some(s"SELECT COUNT(*) AS cnt FROM lineitem WHERE l_orderkey <= $scanWmSql"))
 
   val a3_max_watermark: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem").agg(max(col("l_orderkey")).as("wm")),
     oracle = Some("SELECT MAX(l_orderkey) AS wm FROM lineitem"))
 
@@ -370,7 +378,7 @@ object Queries {
 
   /** A2: single-pass count + dual-hash mismatch count (FB:1382–1408). */
   val a2_consistency_metrics: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val o = t(spark, dir, "orders")
       val metas = ColumnMeta.fromSchema(o.schema)
       val h1 = CanonicalHash.rowHashExpr(metas)
@@ -393,7 +401,7 @@ object Queries {
 
   /** K3/O8: top-10 mismatch sample ordered by key (FB:1410–1458). */
   val k3_mismatch_topk: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val o = t(spark, dir, "orders")
       val metas = ColumnMeta.fromSchema(o.schema)
       val withHashes = o.select(
@@ -415,7 +423,7 @@ object Queries {
 
   /** K4: deterministic first-row lookup. */
   val k4_first_row: Q = Q(
-    run = (spark, dir) => t(spark, dir, "orders")
+    frame = (spark, dir) => t(spark, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus")
       .orderBy("o_orderkey").limit(1),
     oracle = Some(
@@ -424,7 +432,7 @@ object Queries {
   /** O9: first-differing-column drill-down over canonical tokens
     * (FB:1460–1565) against a doubly-perturbed copy. */
   val o9_first_column_diff: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val o = t(spark, dir, "orders")
       val metas = ColumnMeta.fromSchema(o.schema)
       val dst = o
@@ -453,7 +461,7 @@ object Queries {
   /** Join/set-op family (SURVEY §2 "Joins"): which rows differ — keyed
     * hash EXCEPT between source and a perturbed sink. */
   val j1_hash_diff: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem")
       val metas = ColumnMeta.fromSchema(li.schema)
       val h = CanonicalHash.rowHashExpr(metas)
@@ -488,7 +496,7 @@ object Queries {
     * runtime schema inference + enrichment produce exactly the declared
     * layout. */
   val o3_create_table_ddl: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       val li = t(spark, dir, "lineitem")
       val enriched = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
@@ -511,7 +519,7 @@ object Queries {
     * (FB:427–429, FB:438–466). Explicit `src:dst` sinks lowercase WITHOUT
     * sanitization, mirroring the reference exactly. */
   val o10_fb_table_mapping: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       IngestJob.TableMapping
         .parseFb("MIS$DOC, ref$pat:Patients ,Orders,SYS$AUDIT:audit$log")
@@ -541,7 +549,7 @@ object Queries {
     * version without contributing a row. The temporal-table answer to
     * "what did this order look like at seq s". */
   val c3_scd2_history: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       val baseI = ord.withColumn("op", lit("I")).withColumn("seq", lit(0L))
       val updates = ord.filter(col("o_orderkey") % 5 === 0)
@@ -579,7 +587,7 @@ object Queries {
     * replay. (At seq 2 the updates are visible and the seq-3 deletes
     * are not.) */
   val c4_scd2_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       val baseI = ord.withColumn("op", lit("I")).withColumn("seq", lit(0L))
       val updates = ord.filter(col("o_orderkey") % 5 === 0)
@@ -610,7 +618,7 @@ object Queries {
     * touched keys' history; untouched keys pass through one
     * anti-join. */
   val c5_scd2_incremental: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       val baseI = ord.withColumn("op", lit("I")).withColumn("seq", lit(0L))
       val updates = ord.filter(col("o_orderkey") % 5 === 0)
@@ -628,7 +636,7 @@ object Queries {
     oracle = c3_scd2_history.oracle)
 
   val c1_cdc_merge: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       val base = ord.filter(col("o_orderkey") % 7 =!= 0)
       val inserts = ord.filter(col("o_orderkey") % 7 === 0)
@@ -672,7 +680,7 @@ object Queries {
     * reverse — capture is the inverse of apply (round-trip law in
     * CdcSpec). */
   val c2_snapshot_diff: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       val oldSnap = ord.filter(col("o_orderkey") % 7 =!= 0)
       val newSnap = ord.filter(col("o_orderkey") % 11 =!= 0)
@@ -716,7 +724,7 @@ object Queries {
     * its EXACT form (the gate); the HLL `exact = false` twin is the
     * 100 TB default, error-bounded in QualitySpec. */
   val p3_profile: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.profile(t(spark, dir, "orders"),
           Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))
         .orderBy("col_name"),
@@ -747,7 +755,7 @@ object Queries {
     * real violations (status domain without 'P'; price floor), proving
     * the counting path, not just the zero path. */
   val p4_quality_checks: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ord = t(spark, dir, "orders")
       Quality.uniqueKey(ord, Seq("o_orderkey"), "pk_orders_unique")
         .unionByName(Quality.notNull(ord, "o_orderkey", "notnull_o_orderkey"))
@@ -787,7 +795,7 @@ object Queries {
   /** Equal-width price histogram — [[Quality.histogram]] (the profile's
     * distribution view; both engines bin with identical IEEE steps). */
   val p5_histogram: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.histogram(t(spark, dir, "orders"), "o_totalprice", bins = 10)
         .orderBy("bin"),
     oracle = Some(
@@ -806,7 +814,7 @@ object Queries {
   /** Top-k frequent values — [[Quality.topValues]] over order
     * priorities (rank window over the aggregated value table only). */
   val p6_heavy_hitters: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.topValues(t(spark, dir, "orders"), "o_orderpriority", k = 3)
         .orderBy("rank"),
     oracle = Some(
@@ -827,7 +835,7 @@ object Queries {
     * capacity property; the over-capacity guarantees (survival, lower
     * bounds) are the QualitySpec + ci.sh mandatory guard. */
   val p7_heavy_hitters_sketch: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.topValuesApprox(t(spark, dir, "orders"), "o_orderpriority",
           k = 3, numCounters = 8)
         .withColumnRenamed("count_lb", "cnt")
@@ -851,7 +859,7 @@ object Queries {
     * per group); over-capacity grouped guarantees are QualitySpec's
     * grouped mergeable-summaries test. */
   val p8_heavy_hitters_grouped: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.topValuesApproxByKey(t(spark, dir, "documents"),
           key = "source", c = "lang", k = 2, numCounters = 8)
         .withColumnRenamed("count_lb", "cnt")
@@ -882,7 +890,7 @@ object Queries {
     * ≥-true-count and merge-order-independence guarantees are
     * CountMinSpec's. */
   val p10_count_min: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.frequencyEstimates(t(spark, dir, "events"), "event_type",
           P10Depth, P10Width, P10Probes)
         .orderBy("value"),
@@ -918,7 +926,7 @@ object Queries {
     * delegated to an engine percentile flavor; over-capacity rank-error
     * and weight-invariant guarantees are QuantileSketchSpec's. */
   val p9_quantile_sketch: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.quantilesApproxByKey(t(spark, dir, "documents"),
           key = "source", c = "n_chars", P9Probs, capacity = 8192)
         .orderBy("source", "p"),
@@ -965,7 +973,7 @@ object Queries {
     * it to an exact-digits STRING on BOTH sides — harness-proof
     * regardless of how the comparison layer materializes decimals. */
   val p11_hll_distinct: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Quality.distinctSketchByKey(t(spark, dir, "events"),
           key = "event_type", c = "user_id", p = P11P)
         .drop("est")
@@ -1061,7 +1069,7 @@ object Queries {
     * `kth_hash` plus the integer estimate — deterministic at any
     * partitioning, any merge order. */
   val p12_kmv_distinct: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val sh = kmvShingles(spark, dir, col("source"))
       CorpusStats.kmvDistinct(
           CorpusStats.kmvSketch(sh, "g", "shingle", KmvK), KmvK)
@@ -1083,7 +1091,7 @@ object Queries {
     * prefix hash, same bottom-k set semantics), so it gates against
     * p12's oracle VERBATIM — the strongest possible twin check. */
   val p12a_kmv_distinct_agg: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val sh = kmvShingles(spark, dir, col("source"))
       sh.groupBy(col("g").as("source"))
         .agg(graft.functions.KmvAgg(col("shingle"), KmvK).as("kmv"))
@@ -1101,7 +1109,7 @@ object Queries {
     * At 100 TB each shard sketches locally (one pass, k rows out); the
     * overlap math here runs on 2k rows of metadata. */
   val p13_kmv_overlap: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val even = substring(col("source"), 4, 10).cast(IntegerType) % 2 === 0
       val sh = kmvShingles(spark, dir, when(even, "A").otherwise("B"))
       val sk = Staging.barrier(
@@ -1140,7 +1148,7 @@ object Queries {
     * retry-stable, and hash-exact across engines. Map-only: the 100 TB
     * plan is a filter inside the scan, zero shuffles. */
   val t64_weighted_sample: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       CorpusStats.weightedSample(
           t(spark, dir, "documents").select("doc_id", "n_chars"),
           "doc_id", "n_chars", SampleCap, SampleRateNum, SampleRateDen)
@@ -1163,7 +1171,7 @@ object Queries {
     * whole decision in BIGINT arithmetic (no percentile floats cross
     * the engine boundary). */
   val t65_perplexity_buckets: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       CorpusStats.perplexityBuckets(tf(spark, dir, "documents"),
           "doc_id", "text", vocab = LmVocab)
         .withColumnRenamed("id", "doc_id")
@@ -1355,7 +1363,7 @@ object Queries {
     * rule (max count, lexicographically smallest pair) is
     * integer/binary-string deterministic cross-engine. */
   val t66_bpe_merges: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       val (merges, _) = BpeTrain.train(t(spark, dir, "documents"), "text",
         rounds = BpeRounds)
@@ -1381,7 +1389,7 @@ object Queries {
     * training chain and joins the final word table back to the corpus —
     * all-integer gate, hash-exact. */
   val t67_bpe_encode: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       val (_, words) = BpeTrain.train(docs, "text", rounds = BpeRounds)
       BpeTrain.encodeStats(docs, "doc_id", "text", words)
@@ -1412,7 +1420,7 @@ object Queries {
     * rounds (same island-parity machinery, rule from the training
     * winner) over the full corpus's distinct words. */
   val t78_bpe_encode_unseen: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, _) = BpeTrain.train(docs.filter(col("doc_id") % 3 =!= 0),
         "text", rounds = BpeRounds)
@@ -1584,7 +1592,7 @@ object Queries {
     * unrolls every round: symbol totals + pair counts + the score
     * argmax + the island-parity merge. */
   val t104_wordpiece_merges: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       val (merges, _) = WordPiece.train(t(spark, dir, "documents"), "text",
         rounds = WpRounds)
@@ -1611,7 +1619,7 @@ object Queries {
     * builds the same vocab, and walks the greedy matcher [[WpWalk]]
     * unrolled steps. All-integer gate, hash-exact. */
   val t105_wordpiece_encode: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       val (merges, words) = WordPiece.train(docs, "text", rounds = WpRounds)
       // encoding the TRAINING corpus: the trained word table's
@@ -1635,7 +1643,7 @@ object Queries {
     * alphabet would take the whole-word UNK branch (spec-pinned on a
     * crafted corpus; this synthetic vocabulary covers all letters). */
   val t106_wordpiece_encode_unseen: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, words) = WordPiece.train(
         docs.filter(col("doc_id") % 3 =!= 0), "text", rounds = WpRounds)
@@ -1661,7 +1669,7 @@ object Queries {
     * t106's oracle verbatim (the subset-trained encode); a load that
     * leaked version 2 would reproduce t105 instead and hash-mismatch. */
   val t107_wordpiece_store_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_wp_store_asof"
       CommitLog.clear(spark, table)
       val docs = t(spark, dir, "documents")
@@ -1684,7 +1692,7 @@ object Queries {
     * full-corpus model), t105's oracle verbatim. The (t107, t108)
     * pair pins version resolution from both sides. */
   val t108_wordpiece_store_latest: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_wp_store_latest"
       CommitLog.clear(spark, table)
       val docs = t(spark, dir, "documents")
@@ -1709,7 +1717,7 @@ object Queries {
     * only exist after rules < k), so the store must return merges in
     * training order. */
   val t109_bpe_store_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bpe_store"
       CommitLog.clear(spark, table)
       val docs = t(spark, dir, "documents")
@@ -1728,7 +1736,7 @@ object Queries {
     * encodes — t102's oracle verbatim. Scores survive bit-exactly or
     * the Viterbi walk diverges and the hash catches it. */
   lazy val t110_unigram_store_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_unigram_store"
       CommitLog.clear(spark, table)
       val docs = t(spark, dir, "documents")
@@ -1750,12 +1758,11 @@ object Queries {
     * only state the format carries, and rank-order replay is
     * count-free by construction). */
   val t113_bpe_interchange: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, _) = BpeTrain.train(docs.filter(col("doc_id") % 3 =!= 0),
         "text", rounds = BpeRounds)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-interchange-bpe").toString
+      val out = "spark-warehouse/graft_interchange_bpe"
       graft.operators.TokenizerInterchange.exportBpeMerges(
         s"$out/merges.txt", merges)
       graft.operators.TokenizerInterchange.exportVocabJson(
@@ -1775,10 +1782,9 @@ object Queries {
     * (exact round-trip, no float parsing), encode under the imported
     * table — t102's oracle verbatim. */
   lazy val t114_unigram_interchange: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-interchange-uni").toString
+      val out = "spark-warehouse/graft_interchange_uni"
       graft.operators.TokenizerInterchange.exportUnigramTsv(
         s"$out/unigram.tsv",
         graft.operators.UnigramLm.train(docs, "text"))
@@ -1795,11 +1801,10 @@ object Queries {
     * piece set, so the text file IS the whole model — t105's oracle
     * verbatim. */
   val t115_wordpiece_interchange: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, words) = WordPiece.train(docs, "text", rounds = WpRounds)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-interchange-wp").toString
+      val out = "spark-warehouse/graft_interchange_wp"
       graft.operators.TokenizerInterchange.exportWordPieceVocab(
         s"$out/vocab.txt", WordPiece.vocab(words, merges))
       WordPiece.encodeStats(docs, "doc_id", "text",
@@ -1823,7 +1828,7 @@ object Queries {
     * in-vocab replay-equality law, as t67). Output per doc:
     * `(n_words, n_syms, n_bytes)`. */
   val t116_bytelevel_bpe: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = plantedDocs(t(spark, dir, "documents"))
       val (merges, _) = BpeTrain.trainByteLevel(docs, "text",
         rounds = BpeRounds)
@@ -1856,7 +1861,7 @@ object Queries {
     * join (encode stats back to the corpus' lang) into a
     * lang-cardinality hash-agg. */
   val t117_bpe_compression_by_lang: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       val (_, words) = BpeTrain.train(docs, "text", rounds = BpeRounds)
       graft.operators.TokenizerEval.compressionByGroup(
@@ -1890,7 +1895,7 @@ object Queries {
     * (exactly one UNK word per document, diluted by per-source word
     * counts). Same scale shape as t117. */
   val t118_wordpiece_coverage_by_source: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, words) = WordPiece.train(docs, "text", rounds = WpRounds)
       graft.operators.TokenizerEval.coverageByGroup(
@@ -1925,7 +1930,7 @@ object Queries {
     * corpus so the UNK bucket is non-empty (t118's construction). Two
     * vocab-sized aggregations + one bounded occurrence probe. */
   val t119_wordpiece_fertility: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (merges, words) = WordPiece.train(docs, "text", rounds = WpRounds)
       val planted = plantedDocs(docs)
@@ -1959,7 +1964,7 @@ object Queries {
     * one corpus. Routing rides t102's `trainAndCount` contract (no
     * probe job). */
   val t123_unigram_compression_by_lang: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (vocab, nWords) =
         graft.operators.UnigramLm.trainAndCount(docs, "text")
@@ -2002,7 +2007,7 @@ object Queries {
     * Together with t117 the compression table covers TWO model
     * families, per the round-19 metrics contract. */
   val t120_bytelevel_bytes_per_token: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val planted = plantedDocs(docs)
       val (merges, _) = BpeTrain.trainByteLevel(planted, "text",
@@ -2040,7 +2045,7 @@ object Queries {
     * oracle replays all-occurrence semantics with a per-position
     * substring probe per keyword. */
   val t111_blocklist_tag: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       DictionaryMatch.tag(t(spark, dir, "documents"), "doc_id", "text",
           Seq("scan", "can", "join", "batch batch", "merge", "zebra",
             "slow", "row"))
@@ -2064,7 +2069,7 @@ object Queries {
     * version 1 — the oracle replays the FOUR-keyword scan, so a load
     * that leaked version 2 hash-mismatches. */
   val t112_blocklist_store_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_dict_store"
       CommitLog.clear(spark, table)
       TokenizerStore.saveDictionary(spark, table, 1L,
@@ -2103,23 +2108,7 @@ object Queries {
     * property no blocking can beat (FuzzyJoinSpec proves d = 2
     * completeness on diverse strings). */
   val t79_fuzzy_join: Q = Q(
-    run = (spark, dir) => {
-      val parts = t(spark, dir, "part")
-        .select(col("p_partkey"), col("p_name"))
-      val probes = parts.filter(col("p_partkey") % 3 === 1)
-        .select(col("p_partkey").as("qid"),
-          concat(substring(col("p_name"), 1, 2),
-            expr("substring(p_name, 4)")).as("q"))
-      FuzzyJoin.fuzzyJoin(probes, "qid", "q",
-          parts.select(col("p_partkey").as("sid"), col("p_name").as("s")),
-          "sid", "s", maxDist = 1)
-        .orderBy("left_id", "right_id")
-    },
-    benchRun = Some { (spark, dir) =>
-      // comparison-only ORDER BY dropped: the answer on this corpus is
-      // inherently quadratic (64 distinct names in every part table →
-      // ~2.1M id pairs at sf0.1), so the bench measures the join, not
-      // a giant output sort the operator never requires
+    frame = (spark, dir) => {
       val parts = t(spark, dir, "part")
         .select(col("p_partkey"), col("p_name"))
       val probes = parts.filter(col("p_partkey") % 3 === 1)
@@ -2130,6 +2119,11 @@ object Queries {
           parts.select(col("p_partkey").as("sid"), col("p_name").as("s")),
           "sid", "s", maxDist = 1)
     },
+    // the answer on this corpus is inherently quadratic (64 distinct
+    // names in every part table → ~2.1M id pairs at sf0.1), so the
+    // bench measures the join, not a giant output sort the operator
+    // never requires
+    compareAs = _.orderBy("left_id", "right_id"),
     oracle = Some(
       """WITH probes AS (
         |  SELECT p_partkey AS qid,
@@ -2151,7 +2145,7 @@ object Queries {
     * measured 207 s at 10× purely generating its 209M-row answer,
     * while this core stays sub-second). */
   val t80_fuzzy_join_strings: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val parts = t(spark, dir, "part")
       val probes = parts.filter(col("p_partkey") % 3 === 1)
         .select(concat(substring(col("p_name"), 1, 2),
@@ -2179,7 +2173,7 @@ object Queries {
     * dropped), so matches genuinely sit at distance 2, not 1;
     * levenshtein-exact against the length-filtered oracle. */
   val t81_fuzzy_join_d2: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val parts = t(spark, dir, "part")
       val probes = parts.filter(col("p_partkey") % 3 === 1)
         .select(concat(substring(col("p_name"), 1, 2),
@@ -2210,7 +2204,7 @@ object Queries {
     * max_dist, and the answer is the in-query t80 result VERBATIM —
     * gated on t80's oracle. */
   val t82_fuzzy_segment_index_persist: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_fuzzy_seg_index"
       val parts = t(spark, dir, "part")
       FuzzyJoin.writeSegmentIndex(parts.select(col("p_name").as("s")),
@@ -2232,7 +2226,7 @@ object Queries {
     * enters the gate), keep flag and three-way band. Map-only at any
     * scale; the hash-derived weights are the documented model seam. */
   val t68_quality_classifier: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.classifyQuality(t(spark, dir, "documents"),
           "doc_id", "text", bandHiMicro = ClassifierBandHiMicro)
         .withColumnRenamed("id", "doc_id")
@@ -2265,7 +2259,7 @@ object Queries {
     * on gram strings — identical modulo the documented ~2⁻⁶⁴ birthday
     * collision. */
   val t69_dup_ngram_fraction: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.dupGramFractions(tf(spark, dir, "documents"),
           "doc_id", "text", n = DupGramN)
         .withColumnRenamed("id", "doc_id")
@@ -2299,7 +2293,7 @@ object Queries {
     * (pmi desc, left, right) so the LIMIT cut is deterministic
     * cross-engine. */
   val t70_collocations: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       CorpusStats.collocations(tf(spark, dir, "documents"), "text",
         minCount = CollocMinCount, k = CollocTopK),
     oracle = Some(
@@ -2331,7 +2325,7 @@ object Queries {
     * float discipline: one assembly order, one ln, round before the
     * gate). */
   val p15_drift_psi: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       CorpusStats.driftPsi(t(spark, dir, "documents"), col("n_chars"),
           col("doc_id") % 2 === 1, PsiBoundaries)
         .orderBy("bucket"),
@@ -2367,7 +2361,7 @@ object Queries {
     * prefix-sum rank; the cumulative sum runs over 10 metadata rows).
     * All-integer gate. */
   val p14_vocab_growth: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       CorpusStats.vocabGrowth(t(spark, dir, "documents"), "doc_id", "text")
         .orderBy("decile"),
     oracle = Some(
@@ -2391,7 +2385,7 @@ object Queries {
     * oracle replays counts → smoothed score table → per-doc integer
     * sum with the identical single-division float spelling. */
   val t76_bigram_lm: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.bigramLmQuality(tf(spark, dir, "documents"),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
@@ -2428,7 +2422,7 @@ object Queries {
     * counts, type count B), then one division + log10 rounded to
     * BIGINT micro per bigram before the per-doc integer sum. */
   val t92_kneser_ney_lm: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.kneserNeyLmQuality(tf(spark, dir, "documents"),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
@@ -2469,7 +2463,7 @@ object Queries {
     * arithmetic), rounded to BIGINT micro per trigram before the
     * per-doc integer sum. */
   val t93_kneser_ney_trigram: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.kneserNeyTrigramQuality(tf(spark, dir, "documents"),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
@@ -2523,7 +2517,7 @@ object Queries {
     * (the t93 contract — the oracle recomputes the same count-of-
     * counts and spells the same division/multiply parenthesization). */
   val t97_kneser_ney_modified_4gram: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.kneserNeyModified4gramQuality(tf(spark, dir, "documents"),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
@@ -2603,7 +2597,7 @@ object Queries {
          |ORDER BY doc_id""".stripMargin
     })
 
-  /** Z-ORDER clustering key ([[Layout.zValue]]): Morton interleave of
+  /** Z-ORDER clustering key ([[Layout.zValueN]] at n = 2): Morton interleave of
     * (l_orderkey, l_partkey), the layout-maintenance primitive a
     * 100 TB table uses so a TWO-dimensional box predicate prunes from
     * parquet footer stats (measured at sf0.1 over 64 files: a
@@ -2612,22 +2606,14 @@ object Queries {
     * — pure shift/and/or, whole-stage codegen — against a DuckDB
     * bit-op replay). */
   val t94_zorder_key: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.zValue(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 21)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 21)),
-            bits = 21).as("z_key"))
-        .orderBy("l_orderkey", "l_linenumber"),
+          graft.operators.Layout.zValueN(Seq("l_orderkey", "l_partkey").map(c =>
+              pmod(col(c).cast("long"), lit(1L << 21))),
+            bits = 21).as("z_key")),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.zValue(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 21)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 21)),
-            bits = 21).as("z_key"))),
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = Some {
       val m = 1L << 21
       def side(expr: String, off: Int): Seq[String] =
@@ -2646,22 +2632,15 @@ object Queries {
     * .zOrderWriteN]] sorts by. Oracle spells the identical shift/and/
     * or tree in DuckDB integer bit ops. */
   val t96_zorder_key_3d: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           graft.operators.Layout.zValueN(
             Seq("l_orderkey", "l_partkey", "l_suppkey").map(c =>
               pmod(col(c).cast("long"), lit(1L << 20))),
-            bits = 20).as("z_key"))
-        .orderBy("l_orderkey", "l_linenumber"),
+            bits = 20).as("z_key")),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.zValueN(
-            Seq("l_orderkey", "l_partkey", "l_suppkey").map(c =>
-              pmod(col(c).cast("long"), lit(1L << 20))),
-            bits = 20).as("z_key"))),
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = Some {
       val m = 1L << 20
       val keys = Seq("l_orderkey", "l_partkey", "l_suppkey")
@@ -2683,22 +2662,15 @@ object Queries {
     * level), xor via the function form. All-integer arithmetic, so
     * the gate is hash-exact by construction. */
   val t98_hilbert_key: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           graft.operators.Layout.hilbertValue(
             pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
             pmod(col("l_partkey").cast("long"), lit(1L << 16)),
-            bits = 16).as("h_key"))
-        .orderBy("l_orderkey", "l_linenumber"),
+            bits = 16).as("h_key")),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.hilbertValue(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 16)),
-            bits = 16).as("h_key"))),
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = Some {
       val bits = 16
       val m = 1L << bits
@@ -2731,24 +2703,16 @@ object Queries {
     * oracle is [[duckHilbertNSql]] at n = 3. All-integer, hash-exact by
     * construction. */
   val t99_hilbert_key_3d: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           graft.operators.Layout.hilbertValueN(Seq(
             pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
             pmod(col("l_partkey").cast("long"), lit(1L << 16)),
             pmod(col("l_suppkey").cast("long"), lit(1L << 16))),
-            bits = 16).as("h_key"))
-        .orderBy("l_orderkey", "l_linenumber"),
+            bits = 16).as("h_key")),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.hilbertValueN(Seq(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 16)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 16)),
-            pmod(col("l_suppkey").cast("long"), lit(1L << 16))),
-            bits = 16).as("h_key"))),
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = Some(duckHilbertNSql(Seq("l_orderkey", "l_partkey", "l_suppkey"), 16,
       Seq("l_orderkey", "l_linenumber"), "lineitem")))
 
@@ -2828,7 +2792,7 @@ object Queries {
     * over 64 files: 4 vs 8 on a square box, 1 vs 4 on a corner, 38 vs
     * 64 on a plane. */
   val t100_hilbert_key_4d: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           graft.operators.Layout.hilbertValueN(Seq(
@@ -2836,18 +2800,9 @@ object Queries {
             pmod(col("l_partkey").cast("long"), lit(1L << 15)),
             pmod(col("l_suppkey").cast("long"), lit(1L << 15)),
             pmod(col("l_linenumber").cast("long"), lit(1L << 15))),
-            bits = 15).as("h_key"))
-        .orderBy("l_orderkey", "l_linenumber"),
+            bits = 15).as("h_key")),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          graft.operators.Layout.hilbertValueN(Seq(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 15)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 15)),
-            pmod(col("l_suppkey").cast("long"), lit(1L << 15)),
-            pmod(col("l_linenumber").cast("long"), lit(1L << 15))),
-            bits = 15).as("h_key"))),
+    compareAs = _.orderBy("l_orderkey", "l_linenumber"),
     oracle = Some(duckHilbertNSql(
       Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"),
       bits = 15, idCols = Seq("l_orderkey", "l_linenumber"),
@@ -2974,7 +2929,7 @@ object Queries {
     * ([[duckUnigramChain]]) — integer micro-log10 scores and integer
     * usage counts only. */
   val t101_unigram_vocab: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       graft.operators.UnigramLm.train(t(spark, dir, "documents"), "text")
         .map(v => (v.piece, v.usage, v.scoreMicro))
@@ -2994,7 +2949,7 @@ object Queries {
     * full training chain, runs ONE more Viterbi walk under the final
     * vocabulary scores, and joins path lengths back to the corpus. */
   val t102_unigram_encode: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       // trainAndCount: the distinct-word count training already
       // measures routes the encode probe with no extra job (r19)
@@ -3033,7 +2988,7 @@ object Queries {
     * optimum) and scores longer words per character with the UNK
     * floor (one decade below the vocabulary minimum). */
   val t103_unigram_doc_score: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val (vocab, nWords) =
         graft.operators.UnigramLm.trainAndCount(docs, "text")
@@ -3109,7 +3064,7 @@ object Queries {
   }
 
   val t71_linear_probe: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       LinearProbe.trainedWeights(spark, t(spark, dir, "embeddings"),
           "embedding", col("label") % 2, iters = ProbeIters, lr = ProbeLr)
         .orderBy("dim"),
@@ -3128,7 +3083,7 @@ object Queries {
     * train-on-seed → score-corpus → select curation workflow as one
     * operator, with the scoring pass map-only at any corpus size. */
   val t72_probe_select: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       LinearProbe.selectTop(tf(spark, dir, "embeddings"), "vec_id",
         "embedding", col("label") % 2, iters = ProbeIters, lr = ProbeLr,
         k = ProbeSelectK),
@@ -3158,7 +3113,7 @@ object Queries {
       |)""".stripMargin
 
   val t1_exact_dedup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.exactDedup(t(spark, dir, "documents"), "doc_id", "text")
         .orderBy("keep_id"),
     oracle = Some(
@@ -3170,7 +3125,7 @@ object Queries {
   private val JaccardThreshold = 0.5
 
   val t2_ngram_jaccard_pairs: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       // staged+persisted: see TextDedup.shingleSets (quadratic-lambda and
       // self-join-recompute hazards). 64-bit currency: the staged frame
       // holds xxhash64 shingle ids, never strings (TextDedup
@@ -3237,7 +3192,7 @@ object Queries {
   }
 
   val t3_minhash_lsh_pairs: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.minhashLshPairs(tf(spark, dir, "documents"), "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
           threshold = JaccardThreshold)
@@ -3258,7 +3213,7 @@ object Queries {
     * rows (id_a < id_b guarantees exactly two). Shuffle carries only
     * (id_a, id_b, source) for matched pairs. */
   val t38_overlap_matrix: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
@@ -3298,7 +3253,7 @@ object Queries {
     * restricted to `q_id < id`, must reproduce the in-query t3
     * self-join — gated on t3's oracle verbatim (the t82 pattern). */
   val t83_minhash_index_persist: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_minhash_index"
       val docs = tf(spark, dir, "documents")
       TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
@@ -3306,53 +3261,43 @@ object Queries {
         threshold = JaccardThreshold, table = table)
       TextDedup.probeMinhashIndex(spark, table, docs, "doc_id", "text")
         .filter(col("q_id") < col("id"))
-        .select(col("q_id").as("id_a"), col("id").as("id_b"), col("jaccard"))
-        .orderBy("id_a", "id_b")
     },
     oracle = t3_minhash_lsh_pairs.oracle,
     bench = true,
     // bench the build+probe, not the gate's row-stability sort
-    benchRun = Some((spark, dir) => {
-      val table = "graft_minhash_index"
-      val docs = tf(spark, dir, "documents")
-      TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
-        k = MinhashK, bandSize = BandSize, numBands = NumBands,
-        threshold = JaccardThreshold, table = table)
-      TextDedup.probeMinhashIndex(spark, table, docs, "doc_id", "text")
-        .filter(col("q_id") < col("id"))
-    }))
+    compareAs = pairsAsT3)
+
+  /** The minhash-index probes' comparison step: t3's pair columns in
+    * t3's total order, so their gate is t3's oracle verbatim. */
+  private def pairsAsT3(probe: DataFrame): DataFrame =
+    probe.select(col("q_id").as("id_a"), col("id").as("id_b"), col("jaccard"))
+      .orderBy("id_a", "id_b")
 
   /** PROBE-ONLY form of t83 — the build-once/probe-many payoff made
     * measurable: the index is built once per JVM (dir-keyed table
     * name; bench rep 1 builds, every later rep hits the catalog and
     * ONLY probes), so min-of-reps isolates the probe — batch band
     * entries shuffled against an exchange-free bucketed index scan.
-    * Value-gated identically to t83 (t3's oracle verbatim). */
-  /** ONE shared build-if-missing + probe body for t90's gate and bench
-    * paths (no drift surface). The table is keyed by the md5 of the sf
-    * dir — collision-proof and always a valid identifier (hashCode
-    * collides across strings and abs(Int.MinValue) stays negative). */
-  private def t90Probe(spark: SparkSession, dir: String): DataFrame = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val table = s"graft_minhash_probe_$key"
-    val docs = tf(spark, dir, "documents")
-    if (!spark.catalog.tableExists(table))
-      TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
-        k = MinhashK, bandSize = BandSize, numBands = NumBands,
-        threshold = JaccardThreshold, table = table)
-    TextDedup.probeMinhashIndex(spark, table, docs, "doc_id", "text")
-      .filter(col("q_id") < col("id"))
-  }
-
+    * Value-gated identically to t83 (t3's oracle verbatim). The table
+    * is keyed by the md5 of the sf dir — collision-proof and always a
+    * valid identifier (hashCode collides across strings and
+    * abs(Int.MinValue) stays negative). */
   val t90_minhash_index_probe: Q = Q(
-    run = (spark, dir) =>
-      t90Probe(spark, dir)
-        .select(col("q_id").as("id_a"), col("id").as("id_b"), col("jaccard"))
-        .orderBy("id_a", "id_b"),
+    frame = (spark, dir) => {
+      val key = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val table = s"graft_minhash_probe_$key"
+      val docs = tf(spark, dir, "documents")
+      if (!spark.catalog.tableExists(table))
+        TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
+          k = MinhashK, bandSize = BandSize, numBands = NumBands,
+          threshold = JaccardThreshold, table = table)
+      TextDedup.probeMinhashIndex(spark, table, docs, "doc_id", "text")
+        .filter(col("q_id") < col("id"))
+    },
     oracle = t3_minhash_lsh_pairs.oracle,
     bench = true,
-    benchRun = Some((spark, dir) => t90Probe(spark, dir)))
+    compareAs = pairsAsT3)
 
   /** Minhash index COMMITTED APPEND
     * ([[TextDedup.appendToMinhashIndexCommitted]]): band entries and
@@ -3361,7 +3306,7 @@ object Queries {
     * committed batch must equal the from-scratch self-join on the full
     * corpus — t3's oracle verbatim. */
   val t86_minhash_index_append: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_minhash_append"
       val docs = t(spark, dir, "documents")
       TextDedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0),
@@ -3383,7 +3328,7 @@ object Queries {
     * probing that snapshot with the snapshot's own documents equals
     * the self-join on the prefix corpus (doc_id % 3 ≠ 0). */
   val t87_minhash_index_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_minhash_asof"
       val docs = t(spark, dir, "documents")
       TextDedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 === 1),
@@ -3409,7 +3354,7 @@ object Queries {
     * (merge-on-read), so a probe over the survivors equals a
     * from-scratch build on them. */
   val t88_minhash_index_delete: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_minhash_delete"
       val docs = t(spark, dir, "documents")
       TextDedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
@@ -3433,7 +3378,7 @@ object Queries {
     * anti-joins), and the result equals a from-scratch build on the
     * survivors. */
   val t89_minhash_index_compact: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_minhash_compact"
       val docs = t(spark, dir, "documents")
       TextDedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0),
@@ -3455,7 +3400,7 @@ object Queries {
   private val SimhashBits = 32
 
   val t4_simhash: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       // stage the 60-bit token-hash array: the 32 per-bit aggregates each
       // reference it, and without a barrier every one re-runs the
@@ -3483,7 +3428,7 @@ object Queries {
     * is deliberately the EXHAUSTIVE quadratic join — hash equality
     * proves the banded plan loses no pair at the distance bound. */
   val t26_simhash_pairs: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val withHs = Staging.barrier(docs.select(col("doc_id"),
         transform(TextDedup.tokens(col("text")), TextDedup.tokenHash60(_)).as("hs")))
@@ -3518,7 +3463,7 @@ object Queries {
     * [[TextDedup.spanDuplication]] for the scale argument (gram-digest
     * aggregation, no pairwise join, no global sort). */
   val t27_span_dedup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.spanDuplication(tf(spark, dir, "documents"), "doc_id", "text",
           gram = SpanGram)
         .orderBy("doc_id"),
@@ -3567,7 +3512,7 @@ object Queries {
     * keep-first window and the positional removal, and the gate is
     * hash-exact on the rebuilt strings. */
   val t51_span_removal: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.spanDedup(tf(spark, dir, "documents"), "doc_id", "text",
           gram = SpanGram)
         .orderBy("doc_id"),
@@ -3635,7 +3580,7 @@ object Queries {
     * ([[VectorOps.cosineNearDupPairs]]) is the test-only recall baseline
     * (DedupSpec). */
   val t5_cosine_neardup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.bucketedNearDupPairs(
           t(spark, dir, "embeddings"), "vec_id", "embedding", CosineThreshold,
           bits = NearDupBits, bands = NearDupBands)
@@ -3669,7 +3614,7 @@ object Queries {
     * per transitive cluster — this is that resolution step. Oracle:
     * DuckDB `WITH RECURSIVE` min-label closure over the same pairs. */
   val t16_dedup_clusters: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val pairs = TextDedup.minhashLshPairs(t(spark, dir, "documents"),
           "doc_id", "text", n = 3, k = MinhashK, bandSize = BandSize,
           numBands = NumBands, threshold = JaccardThreshold)
@@ -3701,7 +3646,7 @@ object Queries {
     * bucket of the cluster id; oracle = the recursive-CTE closure plus
     * the same bucket arithmetic. */
   val t75_leakage_safe_split: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
@@ -3739,7 +3684,7 @@ object Queries {
     * t3/t16 prove the stages, this proves the composition. Output is the
     * kept doc ids with token counts (a downstream-visible projection). */
   val t19_dedup_apply: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
@@ -3771,7 +3716,7 @@ object Queries {
     * keep_prob_micro)`; the oracle replays closure + sizes + the same
     * HUGEINT predicate. */
   val t121_soft_dedup_sample: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
@@ -3814,7 +3759,7 @@ object Queries {
     * oracle replays closure + both predicates in one conditional
     * aggregation. */
   val t122_soft_dedup_report: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
           n = 3, k = MinhashK, bandSize = BandSize, numBands = NumBands,
@@ -3866,7 +3811,7 @@ object Queries {
     * training. Bipartite hashed-shingle equi-join; see
     * [[TextDedup.decontaminate]]. */
   val t17_decontaminate: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val withSh = Staging.barrier(TextDedup.hashedShingles(
         t(spark, dir, "documents"), "doc_id", "text", 3))
       TextDedup.decontaminate(withSh, col("id") % EvalModulus === 0, DecontThreshold)
@@ -3891,7 +3836,7 @@ object Queries {
     * modality-agnostic (any (id_a, id_b) edge list), so text (t16) and
     * embedding corpora share one code path. */
   val t20_embedding_clusters: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val pairs = VectorOps.bucketedNearDupPairs(
           t(spark, dir, "embeddings"), "vec_id", "embedding", CosineThreshold,
           bits = NearDupBits, bands = NearDupBands)
@@ -3923,7 +3868,7 @@ object Queries {
     * kept vec_ids with the vector dimension (a downstream-visible
     * projection that proves the corpus row survived intact). */
   val p2_embedding_prep: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val emb = t(spark, dir, "embeddings")
       val pairs = VectorOps.bucketedNearDupPairs(emb, "vec_id", "embedding",
           CosineThreshold, bits = NearDupBits, bands = NearDupBands)
@@ -3961,7 +3906,7 @@ object Queries {
     * query's `label` ([[VectorOps.filteredTopK]] — predicate inside the
     * join, non-matching vectors never scored). */
   val t25_filtered_ann: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val emb = t(spark, dir, "embeddings")
       VectorOps.filteredTopK(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", Seq("label"), k = 5)
@@ -3981,7 +3926,7 @@ object Queries {
         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
   val t6_ann_topk: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val emb = tf(spark, dir, "embeddings")
       VectorOps.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", k = 5)
@@ -4006,7 +3951,7 @@ object Queries {
   /** Contrastive pairs: top-5 positives + 5 hash-sampled hard negatives
     * from ranks (5, 50] per query — [[VectorOps.hardNegatives]]. */
   val t28_hard_negatives: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val emb = t(spark, dir, "embeddings")
       VectorOps.hardNegatives(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", k = 5, m = NegBandTop, nNeg = NegPerQuery)
@@ -4035,7 +3980,7 @@ object Queries {
 
   /** Per-source document quota — [[TextAnalysis.capPerGroup]]. */
   val t29_source_caps: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.capPerGroup(t(spark, dir, "documents"), "source", "doc_id",
           cap = 10)
         .select("doc_id", "source")
@@ -4050,7 +3995,7 @@ object Queries {
     * [[TextAnalysis.shuffleShards]] (distributed rank, no global-order
     * window; the oracle IS the single global row_number). */
   val t31_corpus_shuffle: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.shuffleShards(t(spark, dir, "documents"), "doc_id",
           seed = "s1", nShards = 8)
         .orderBy("doc_id"),
@@ -4069,7 +4014,7 @@ object Queries {
   /** Overlapping token-window chunking — [[TextAnalysis.chunkDocuments]]
     * (embedding/retrieval prep; chunks march by chunk−overlap). */
   val t30_chunk_documents: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.chunkDocuments(tf(spark, dir, "documents"), "doc_id", "text",
           chunkTokens = ChunkTokens, overlap = ChunkOverlap)
         .orderBy("doc_id", "chunk_idx"),
@@ -4096,7 +4041,7 @@ object Queries {
     * (row_number over md5 groups ≡ Spark's min-struct), and ordered
     * string_agg reassembly. */
   val t48_paragraph_dedup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.paragraphDedup(tf(spark, dir, "documents"), "doc_id", "text",
           chunkTokens = ChunkTokens)
         .orderBy("doc_id"),
@@ -4129,7 +4074,7 @@ object Queries {
     * recursive-CTE min-label closure and ordered reassembly; the gate
     * is hash-exact on the rebuilt strings. */
   val t53_fuzzy_paragraph_dedup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.fuzzyParagraphDedup(tf(spark, dir, "documents"), "doc_id",
           "text", chunkTokens = ChunkTokens, n = 3, k = MinhashK,
           bandSize = BandSize, numBands = NumBands,
@@ -4200,7 +4145,7 @@ object Queries {
     * All-rational comparisons; the oracle replays every rule on DuckDB's
     * list primitives. */
   val t49_gopher_rules: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.gopherRules(tf(spark, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
     oracle = Some(
@@ -4231,7 +4176,7 @@ object Queries {
     * and lives on only as a small-corpus benchmark; the scale answers
     * are t12/t15). */
   val t7_ann_bucketed: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.bucketedTopK(t(spark, dir, "embeddings"),
           "vec_id", "embedding", col("vec_id") < BucketedQueryBound,
           k = 5, bits = 8)
@@ -4346,7 +4291,7 @@ object Queries {
     * unsupervised index (the label-quantizer variant remains as
     * [[VectorOps.ivfTopK]], exercised by DedupSpec). */
   val t12_ivf_ann: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.kmeansIvfTopK(tf(spark, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, kClusters = IvfClusters, iters = IvfIters,
           nprobe = IvfNprobe)
@@ -4376,7 +4321,7 @@ object Queries {
     * oracle is the SAME unrolled k-means SQL with its vector prep
     * swapped to the projection chain (the vCtesSql seam). */
   val t91_rp_ivf_ann: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val proj = VectorOps.randomProjection(tf(spark, dir, "embeddings"),
         "vec_id", "embedding", RpInDim, RpOutDim)
       VectorOps.kmeansIvfTopK(proj, "id", "proj", col("id") < 10,
@@ -4391,7 +4336,7 @@ object Queries {
     * brute-force truth, per query. Production ANN pipelines run exactly
     * this as a canary; here it also quantifies the nprobe=1 trade-off. */
   val t13_ann_recall: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val truth = t6_ann_topk.run(spark, dir)
         .select(col("query_id"), col("neighbor_id"))
       val ivf = t12_ivf_ann.run(spark, dir)
@@ -4440,18 +4385,15 @@ object Queries {
     * ≡ DuckDB `list_dot_product`, rounded per ROW to micro BIGINT
     * (the t32/t70 fixed-point discipline). */
   val t84_random_projection: Q = Q(
-    run = (spark, dir) => {
-      val emb = t(spark, dir, "embeddings")
-      VectorOps.randomProjection(emb, "vec_id", "embedding", RpInDim, RpOutDim)
-        .select(col("id").as("vec_id"), posexplode(col("proj")).as(Seq("j", "pr")))
-        .select(col("vec_id"), col("j"),
-          round(col("pr") * lit(1000000)).cast("bigint").as("p_micro"))
-        .orderBy("vec_id", "j")
-    },
-    // bench the map-only projection kernel, not the gate's sort
-    benchRun = Some((spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.randomProjection(t(spark, dir, "embeddings"),
-        "vec_id", "embedding", RpInDim, RpOutDim)),
+        "vec_id", "embedding", RpInDim, RpOutDim),
+    // bench the map-only projection kernel, not the gate's explode and sort
+    compareAs = _.select(col("id").as("vec_id"),
+        posexplode(col("proj")).as(Seq("j", "pr")))
+      .select(col("vec_id"), col("j"),
+        round(col("pr") * lit(1000000)).cast("bigint").as("p_micro"))
+      .orderBy("vec_id", "j"),
     oracle = Some(
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
          |$duckProjSigns,
@@ -4476,7 +4418,7 @@ object Queries {
     * collection, not float aggregation), so ranks compare bit-for-bit
     * and recall is an exact small-integer division. */
   val t85_rp_rerank_recall: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val emb = t(spark, dir, "embeddings")
       val truth = t6_ann_topk.run(spark, dir)
         .select(col("query_id"), col("neighbor_id"))
@@ -4537,7 +4479,7 @@ object Queries {
       markers.map(m => s"'$m'").mkString(", ") + s"))) * 1.0 / len(t) ELSE 0.0 END"
 
   val t8_langid: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val toks = TextDedup.tokens(col("text"))
       val scores = TextAnalysis.langScores(toks)
@@ -4563,7 +4505,7 @@ object Queries {
     })
 
   val t9_quality_score: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       // stage the token array ONCE: five component columns plus the
       // composite each embed the tokenizer inside interpreted lambda
       // bodies (no subexpression elimination there — the langId lesson),
@@ -4597,7 +4539,7 @@ object Queries {
     bench = true)
 
   val t10_token_counts: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "documents").select(
           col("doc_id"),
           length(col("text")).cast("bigint").as("n_chars"),
@@ -4611,23 +4553,11 @@ object Queries {
          |  CAST(len(regexp_extract_all(lower(text), '${TextAnalysis.BpeishPattern}')) AS BIGINT) AS bpeish_tokens
          |FROM documents ORDER BY doc_id""".stripMargin))
 
-  /** The normalized text is STAGED behind a barrier before the gram
-    * transform (the shingleSets pattern): feeding `lower(trim(text))`
-    * straight into [[TextAnalysis.fingerprintFromNorm]]'s lambda makes
-    * Catalyst re-evaluate the normalization per character 5-gram —
-    * O(L²) per document (see the fingerprintFromNorm scaladoc). */
-  private def fingerprintFrame(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Staging.barrier(tf(spark, dir, "documents")
-      .select(col("doc_id"), lower(trim(col("text"))).as("norm")))
-    staged.select(col("doc_id"),
-      TextAnalysis.fingerprintFromNorm(col("norm")).as("fingerprint"))
-  }
-
   /** Gopher-style repetition filters over the corpus (top-bigram
     * fraction + duplicate-trigram fraction; see
     * [[TextAnalysis.repetitionScores]]). */
   val t21_repetition: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.repetitionScores(t(spark, dir, "documents"), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
@@ -4660,7 +4590,7 @@ object Queries {
     * md5 of the fully redacted text — the cross-engine contract a
     * production redaction pass relies on. */
   val t22_redact_pii: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val injected = concat(lower(col("text")),
         lit(" contact user"), col("doc_id").cast("string"),
         lit("@example.com or call 555-"),
@@ -4694,7 +4624,7 @@ object Queries {
     * starting sequence id ([[TextAnalysis.packSequences]] — distributed
     * prefix-sum, no global window). */
   val t23_pack_sequences: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.packSequences(t(spark, dir, "documents"), "doc_id", "text",
           capacity = 512)
         .withColumnRenamed("id", "doc_id")
@@ -4717,7 +4647,7 @@ object Queries {
     * ([[TextAnalysis.topTermsByRarity]]; exact-rational score so the
     * differential can hash it). */
   val t24_top_terms: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.topTermsByRarity(t(spark, dir, "documents"), "doc_id", "text",
           k = 5)
         .withColumnRenamed("id", "doc_id")
@@ -4743,7 +4673,7 @@ object Queries {
     * fixed-pointing — so the comparison is hash-exact despite the
     * transcendental scoring. */
   val t32_lm_quality: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.lmQuality(tf(spark, dir, "documents"), "doc_id", "text",
           vocab = LmVocab)
         .withColumnRenamed("id", "doc_id")
@@ -4768,9 +4698,19 @@ object Queries {
          |ORDER BY d.doc_id""".stripMargin),
     bench = true)
 
+  /** The normalized text is STAGED behind a barrier before the gram
+    * transform (the shingleSets pattern): feeding `lower(trim(text))`
+    * straight into [[TextAnalysis.fingerprintFromNorm]]'s lambda makes
+    * Catalyst re-evaluate the normalization per character 5-gram —
+    * O(L²) per document (see the fingerprintFromNorm scaladoc). */
   val t11_fingerprint: Q = Q(
-    run = (spark, dir) => fingerprintFrame(spark, dir).orderBy("doc_id"),
-    benchRun = Some((spark, dir) => fingerprintFrame(spark, dir)),
+    frame = (spark, dir) => {
+      val staged = Staging.barrier(tf(spark, dir, "documents")
+        .select(col("doc_id"), lower(trim(col("text"))).as("norm")))
+      staged.select(col("doc_id"),
+        TextAnalysis.fingerprintFromNorm(col("norm")).as("fingerprint"))
+    },
+    compareAs = _.orderBy("doc_id"),
     bench = true,
     oracle = Some(
       """SELECT doc_id,
@@ -4796,7 +4736,7 @@ object Queries {
    * across engines, runs, AND retries — the property `sample()` lacks.
    */
   val t18_stratified_sample: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       // one row per doc with its stratum keys; staged because it feeds
       // the rank window, the threshold lookup, and the final sample
@@ -4873,10 +4813,8 @@ object Queries {
    * against the full corpus (thresholds are corpus-wide, then filters
    * intersect), so stage order cannot change the result.
    */
-  /** The composed corpus-prep pipeline (exact-dedup ∩ near-dup-cluster
-    * survivors ∩ not-contaminated ∩ stratified keeps) — shared by the
-    * gated query (+ oracle-stability ORDER BY) and the bench (without). */
-  private def p1Frame(spark: SparkSession, dir: String): DataFrame = {
+  val p1_corpus_prep: Q = Q(
+    frame = (spark, dir) => {
       val docs = tf(spark, dir, "documents")
       // ONE corpus shingle pass, shared by near-dup LSH and
       // decontamination (both are 3-gram consumers); the staged frame
@@ -4919,11 +4857,8 @@ object Queries {
           col("doc_id") === col("nd_drop"), "left_anti")
         .join(contaminated, col("doc_id") === col("train_id"), "left_anti")
         .select("doc_id", "lang", "quality", "bucket")
-  }
-
-  val p1_corpus_prep: Q = Q(
-    run = (spark, dir) => p1Frame(spark, dir).orderBy("doc_id"),
-    benchRun = Some((spark, dir) => p1Frame(spark, dir)),
+    },
+    compareAs = _.orderBy("doc_id"),
     conf = SmallShuffleFloor,
     bench = true,
     oracle = {
@@ -4996,7 +4931,7 @@ object Queries {
     })
 
   val m1_multimodal_features: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Multimodal.features(spark, t(spark, dir, "documents")).orderBy("asset_id"),
     oracle = {
       val fs = (0 until 4).map(k =>
@@ -5022,7 +4957,7 @@ object Queries {
     * [[Multimodal.frameSample]] cut stays spec-covered as the RAW
     * payload path. */
   val m2_frame_sample: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Multimodal.mp4FrameIndex(
           t(spark, dir, "documents")
             .select(col("doc_id").as("asset_id"),
@@ -5048,7 +4983,7 @@ object Queries {
     * stub" seam for every format; only PIXEL decode remains
     * environment-blocked (no codec libraries in the sandbox). */
   val m3_container_headers: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val w = lit(64) + (col("doc_id") % 8).cast("int") * 16
       val h = lit(48) + (col("doc_id") % 6).cast("int") * 16
@@ -5167,7 +5102,7 @@ object Queries {
        |FROM f ORDER BY asset_id, frame_idx""".stripMargin
 
   val m4_mp4_frame_index: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Multimodal.mp4FrameIndex(
           t(spark, dir, "documents")
             .select(col("doc_id").as("asset_id"),
@@ -5182,7 +5117,7 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val w1_windowed_agg: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
       ev.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
@@ -5203,7 +5138,7 @@ object Queries {
     bench = true)
 
   val w2_sessionization: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
         .withColumn("us", unix_micros(col("ts").cast(TimestampType)))
       val w = org.apache.spark.sql.expressions.Window
@@ -5225,7 +5160,7 @@ object Queries {
          |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin))
 
   val w4_session_window: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       graft.streaming.StreamingIngest
         .sessionWindowAgg(eventsWithTs(spark, dir), "30 minutes")
         .orderBy("user_id", "session_start"),
@@ -5259,7 +5194,7 @@ object Queries {
         count(lit(1)).as("n"))
 
   val w3_distinct_users: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       eventsWithTs(spark, dir)
         .groupBy("event_type")
         .agg(countDistinct("user_id").as("distinct_users"), count(lit(1)).as("n"))
@@ -5313,7 +5248,7 @@ object Queries {
        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM rescored)""".stripMargin
 
   val t15_ivf_sq8_ann: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.ivfSq8TopK(tf(spark, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, kClusters = IvfClusters, iters = IvfIters,
           nprobe = IvfNprobe, candidates = Sq8Candidates)
@@ -5415,7 +5350,7 @@ object Queries {
     * and re-rank in SQL, so the gate is hash-exact end-to-end — the PQ
     * approximation is pinned, not sampled. */
   val t43_pq_ann: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.pqTopK(tf(spark, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, m = PqM, ksub = PqKsub,
           iters = PqIters, candidates = PqCandidates)
@@ -5430,7 +5365,7 @@ object Queries {
     * and the probe shares [[VectorOps.pqTopK]]'s code path, so the gate
     * (t43's oracle, hash-exact) proves persistence loses nothing. */
   val t45_pq_index_persist: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_pq_index"
       VectorOps.writePqIndex(t(spark, dir, "embeddings"), "vec_id",
         "embedding", table, m = PqM, ksub = PqKsub, iters = PqIters)
@@ -5451,7 +5386,7 @@ object Queries {
     * rationale: t12/t15 retrain inside every query; a pipeline amortizes
     * one build (and its one bucketing shuffle) across every probe. */
   val t40_ann_index_persist: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_ann_index"
       VectorOps.writeIndex(t(spark, dir, "embeddings"), "vec_id", "embedding",
         table, kClusters = IvfClusters, iters = IvfIters, numBuckets = 8)
@@ -5484,7 +5419,7 @@ object Queries {
     * so the gate proves probe(build(X) − delete(D)) ≡
     * probe(X∖D | quantizers(X)) value-exactly. */
   val t56_ann_index_delete: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_ann_delete"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writeIndex(emb, "vec_id", "embedding", table,
@@ -5513,7 +5448,7 @@ object Queries {
     * and clear the delete list; forgetting either fails the oracle
     * (resurrected rows) or the RetrievalSpec file/catalog pins. */
   val t58_ann_index_compact: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_ann_compact"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writeIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5548,7 +5483,7 @@ object Queries {
     * inside the run doubles nothing (the oracle would see duplicated
     * candidates and fail). */
   val t62_ann_append_committed: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_ann_commitlog"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writeIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5578,7 +5513,7 @@ object Queries {
     * committed batches (one replayed) and is only coded. Gated on the
     * PQ oracle with training restricted to the build subset. */
   val t63_pq_append_committed: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_pq_commitlog"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5607,7 +5542,7 @@ object Queries {
     * to the last compaction (= expire_snapshots); delete rewind is the
     * documented Iceberg v2 delete-file seam. */
   val t73_ann_index_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_ann_asof"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writeIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5634,7 +5569,7 @@ object Queries {
     * index, gated on the frozen-codebook oracle with the corpus
     * restricted to base ∪ batch 0. */
   val t74_pq_index_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_pq_asof"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5662,7 +5597,7 @@ object Queries {
     * machines (trained k-means + the p15 ledger); the oracle chains
     * the Lloyd replay into the PSI arithmetic. */
   val p16_embedding_drift: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val p = Staging.barrier(VectorOps.prepared(
         t(spark, dir, "embeddings"), "vec_id", "embedding"))
       val cent = VectorOps.kmeansCentroidsPrepared(
@@ -5707,7 +5642,7 @@ object Queries {
     * probe(build(X) − delete(D)) ≡ probe(X∖D | codebooks(X))
     * value-exactly. Deleted queries vanish from the output (8×5 rows). */
   val t60_pq_index_delete: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_pq_delete"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb, "vec_id", "embedding", table,
@@ -5731,7 +5666,7 @@ object Queries {
     * the delete list; forgetting either resurrects rows or drops
     * survivors, and the oracle catches both. */
   val t61_pq_index_compact: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_pq_compact"
       val emb = t(spark, dir, "embeddings")
       VectorOps.writePqIndex(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
@@ -5796,7 +5731,7 @@ object Queries {
     * tiny result" scan; every sum is exact decimal, averages are pinned
     * `CAST(sum AS DOUBLE)/n` on both sides. */
   val q1_pricing_summary: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val cutoff = java.sql.Timestamp.valueOf("1998-09-02 00:00:00")
       val charge = dec6(discPrice * (lit(1).cast(Dec6) + dec6(col("l_tax"))))
       tf(spark, dir, "lineitem")
@@ -5835,7 +5770,7 @@ object Queries {
     * shuffles on the order key, final top-10 is TakeOrdered (no global
     * sort). */
   val q3_shipping_priority: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val cut = lit(java.sql.Timestamp.valueOf("1998-03-15 00:00:00"))
         .cast(TimestampNTZType)
       val cust = t(spark, dir, "customer")
@@ -5869,7 +5804,7 @@ object Queries {
     * broadcasts end-to-end, the fact table shuffles once on the order
     * key; at scale AQE re-plans the orders⋈lineitem side to SMJ. */
   val q5_local_supplier_volume: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val lo = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")).cast(TimestampNTZType)
       val hi = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")).cast(TimestampNTZType)
       val nat = t(spark, dir, "region").filter(col("r_name") === "ASIA")
@@ -5909,7 +5844,7 @@ object Queries {
     * hash aggregate, NOT one scan per grouping set. NULL-first ordering
     * pinned on both sides (DuckDB defaults NULLS LAST). */
   val q6_rollup_orders: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"),
@@ -5926,7 +5861,7 @@ object Queries {
     * BroadcastHashJoin LeftAnti over the filtered (pushed-down) orders
     * projection: the probe side carries only the join key. */
   val q8_inactive_customers: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val cut = lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))
         .cast(TimestampNTZType)
       val recent = t(spark, dir, "orders")
@@ -5948,7 +5883,7 @@ object Queries {
     * shrinks to the rare qualifying keys; the joins then touch only
     * those. */
   val q18_large_orders: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val big = t(spark, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sum(dec6(col("l_quantity"))).as("qty_dec"))
@@ -5977,7 +5912,7 @@ object Queries {
     * Frame sums in exact decimal so every prefix is cross-engine
     * comparable. */
   val q7_running_total: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -6001,7 +5936,7 @@ object Queries {
     * distinct-values pre-pass) column list; each cell is a conditional
     * count, one scan, map-side combine. */
   val q9_pivot_events: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       eventsWithTs(spark, dir)
         .groupBy("user_id")
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
@@ -6024,7 +5959,7 @@ object Queries {
     * regression baseline). Final arithmetic pinned to double on both
     * sides. */
   val q10_value_moments: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       eventsWithTs(spark, dir)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -6058,7 +5993,7 @@ object Queries {
     * condition so unmatched lineitems die at the join, not in a
     * post-filter. */
   val q4_priority_exists: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem").select("l_orderkey", "l_shipdate")
       t(spark, dir, "orders")
         .join(li, col("o_orderkey") === col("l_orderkey") &&
@@ -6086,7 +6021,7 @@ object Queries {
     * compare against bit-identical bounds; revenue totals in exact
     * decimal. */
   val q17_small_quantity: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem")
       val thresh = li.groupBy("l_partkey")
         .agg((lit(0.2) * sum(col("l_quantity")) / count(lit(1))).as("thresh"))
@@ -6111,7 +6046,7 @@ object Queries {
     * integer multiply on exact decimals instead of a lossy
     * `rev/total > 0.04` double division. */
   val q11_revenue_share: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       // barrier: the per-nation aggregate feeds BOTH the output rows and
       // the scalar total — without it each branch re-scans the fact
       // table (verified in the physical plan; the staged form reads the
@@ -6145,7 +6080,7 @@ object Queries {
     * in the exact form, tie-broken by customer key so the ranking is
     * deterministic. Per-decile stats are exact decimal. */
   val q13_spend_deciles: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("spend_dec"), col("o_custkey"))
       t(spark, dir, "orders")
@@ -6178,7 +6113,7 @@ object Queries {
     * pushable scan predicate (PushedFilters on the parquet min/max), the
     * priority split is a map-side CASE fold: one shuffle, two counters. */
   val q12_priority_lines: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val isHigh = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       t(spark, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast(TimestampNTZType) &&
@@ -6205,7 +6140,7 @@ object Queries {
     * one IEEE op, so the quotient is engine-exact without a rational
     * workaround. Part side is a broadcast dimension. */
   val q14_promo_revenue: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "lineitem")
         .join(broadcast(t(spark, dir, "part")), col("l_partkey") === col("p_partkey"))
         .agg(
@@ -6227,7 +6162,7 @@ object Queries {
     * a broadcast LEFT ANTI (never a shuffled NOT IN), the distinct-agg
     * shuffles (brand, type, suppkey) once, partial-deduped map-side. */
   val q16_supplier_count: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val bad = t(spark, dir, "supplier").filter(col("s_acctbal") < 0)
         .select(col("s_suppkey"))
       t(spark, dir, "lineitem")
@@ -6252,7 +6187,7 @@ object Queries {
     * disjunction (hash join, not BNL) and pushes each arm's local
     * conjuncts to its side's scan. */
   val q19_disjunctive: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val arm = (brand: String, szLo: Int, szHi: Int, qLo: Int, qHi: Int) =>
         col("p_brand") === brand &&
           col("p_size").between(szLo, szHi) &&
@@ -6277,7 +6212,7 @@ object Queries {
     * EXISTS is a broadcast LEFT ANTI against the (small) urgent-customer
     * key list. */
   val q22_idle_balance: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val cust = t(spark, dir, "customer")
       val stats = cust.filter(col("c_acctbal") > 0)
         .agg(count(lit(1)).as("n"), sum(dec6(col("c_acctbal"))).as("total_dec"))
@@ -6312,7 +6247,7 @@ object Queries {
     * implies); dimensions are broadcast. The oracle keeps the window
     * spelling, so the gate also checks the reformulation. */
   val q2_min_cost_supplier: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = t(spark, dir, "lineitem")
       val best = li
         .join(broadcast(t(spark, dir, "part").filter(col("p_size") === 15)
@@ -6353,7 +6288,7 @@ object Queries {
     * decimals, so ties — which Q15 explicitly allows — are engine-exact,
     * never a double-epsilon accident. */
   val q15_top_supplier: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val rev = Staging.barrier(t(spark, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast(TimestampNTZType) &&
           col("l_shipdate") < lit("1997-07-01 00:00:00").cast(TimestampNTZType))
@@ -6390,7 +6325,7 @@ object Queries {
     * the supplier table. Quantities are integer-valued doubles, so
     * `qty97 * 2 > qty_all` is exact in both engines (no epsilon). */
   val q20_promotion_supplier: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val in97 =
         col("l_shipdate") >= lit("1997-01-01 00:00:00").cast(TimestampNTZType) &&
           col("l_shipdate") < lit("1998-01-01 00:00:00").cast(TimestampNTZType)
@@ -6442,7 +6377,7 @@ object Queries {
     * reformulation. Exploding the kept late-list restores per-LINE
     * multiplicity (numwait counts late lines, not late orders). */
   val q21_waiting_supplier: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS")
       t(spark, dir, "lineitem")
         .join(t(spark, dir, "orders").filter(col("o_orderstatus") === "F")
@@ -6481,7 +6416,7 @@ object Queries {
     * (op/ts_ms, FB:82–85) without implementing compaction; this is that
     * missing half. */
   val w5_latest_state: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       eventsWithTs(spark, dir)
         .groupBy("user_id")
         .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
@@ -6508,7 +6443,7 @@ object Queries {
     * per-event max-hit dedup). The `followed = false` rows are the
     * alert stream. */
   val j6_not_followed_by: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = t(spark, dir, "events")
       TemporalJoin.notFollowedBy(
           ev.filter(col("event_type") === "view"),
@@ -6538,7 +6473,7 @@ object Queries {
     * join result (exact under capacity, so the rank-percentile oracle
     * gates it). */
   val j7_conversion_latency: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = t(spark, dir, "events")
       val lags = TemporalJoin.followLag(
           ev.filter(col("event_type") === "view"),
@@ -6580,7 +6515,7 @@ object Queries {
     * replays the greedy-earliest witness as a chain of row_number=1
     * picks each strictly after the previous. */
   val w6_funnel: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.times(FunnelStages.map(_ -> 1)))
         .orderBy("user_id"),
@@ -6626,7 +6561,7 @@ object Queries {
     * max-start dominance (`max(start_us)` per reached event), and
     * gates (stage_reached, win_start_us) hash-exactly. */
   val w8_funnel_within: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.within(FunnelStages, FunnelWithinMicros))
         .orderBy("user_id"),
@@ -6670,7 +6605,7 @@ object Queries {
     * window predicate and a NOT EXISTS blocker probe on every hop,
     * pruned by the same max-start dominance. */
   val w14_funnel_within_guarded: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.within(FunnelStages, FunnelWithinMicros,
             Seq(Some("error"), Some("error"))))
@@ -6717,7 +6652,7 @@ object Queries {
     * full-stage boundaries. `ts<j>_us` gates the n_j-th occurrence
     * time per completed stage. */
   val w12_funnel_times: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.times(Seq(("view", 2), ("click", 2), ("purchase", 1))))
@@ -6763,7 +6698,7 @@ object Queries {
     * the spine with w12's five chained picks and adds one interval
     * COUNT/MAX per stage. */
   val w16_funnel_loop: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.loop(Seq(("view", 2), ("click", 2), ("purchase", 1))))
@@ -6829,7 +6764,7 @@ object Queries {
     * cap'th occurrence while the spine and stage_reached are the
     * uncapped w16 values on the same mandatory counts). */
   val w18_funnel_times_range: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.timesRange(Seq(("view", 2, 3), ("click", 1, 2), ("purchase", 1, 1))))
@@ -6899,7 +6834,7 @@ object Queries {
     * floor m = n). FunnelSpec proves the two modes genuinely differ
     * on a crafted corpus. */
   val w49_funnel_loop_reluctant: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.timesRange(
             Seq(("view", 2, 2), ("click", 2, 2), ("purchase", 1, 1))))
@@ -6980,7 +6915,7 @@ object Queries {
     * joins with the identical integer predicate on every hop, then
     * takes min time per stage. */
   val w50_funnel_iterative_first: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
           "event_id", Pattern.iterative("v_cents", iterStagesFirst,
             Funnel.AnchorFirst))
@@ -7023,7 +6958,7 @@ object Queries {
     * min is the running min of joining events). Oracle: the hop joins
     * carry the hop event's OWN value forward. */
   val w51_funnel_iterative_prev: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
           "event_id", Pattern.iterative("v_cents",
             Seq(Funnel.IterStage("view"),
@@ -7067,7 +7002,7 @@ object Queries {
     * event); the oracle replays the chained greedy picks with each
     * hop's WHERE spelling the same predicate. */
   val w53_funnel_where: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
           "event_id", Pattern.where(Seq("event_type", "v_cents"), Seq(
             e => e.getField("event_type") === "view" &&
@@ -7114,7 +7049,7 @@ object Queries {
     * click OR a purchase. The oracle spells the same disjunctions in
     * SQL over the same greedy-pick chain. */
   val w66_funnel_where_or: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(eventsWithCents(spark, dir), "user_id", "event_type", "ts",
           "event_id", Pattern.where(Seq("event_type", "v_cents"), Seq(
             e => (e.getField("event_type") === "view" &&
@@ -7203,7 +7138,7 @@ object Queries {
     * The oracle replays each hop as a join with a NOT EXISTS
     * nothing-strictly-between probe. */
   val w20_funnel_strict: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.pattern(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true),
@@ -7235,7 +7170,7 @@ object Queries {
     * prefix 1 is, so `stage_reached` is never 1 — both engines encode
     * that. */
   val w22_funnel_optional: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.pattern(Seq(Funnel.PatternStage("signup"),
             Funnel.PatternStage("error", optional = true),
@@ -7267,7 +7202,7 @@ object Queries {
     * a blocker after the view with nothing between them, before the
     * consumer. */
   val w23_funnel_not_next: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.pattern(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
@@ -7295,7 +7230,7 @@ object Queries {
     * guard can never bite, since the purchase occupies the immediate
     * slot). */
   val w24_funnel_pattern_product: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.pattern(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
@@ -7332,7 +7267,7 @@ object Queries {
     * max-start per stage (the skip-realizer rule makes reached-2's
     * winner the stage-1 max). */
   val w42_funnel_pattern_within: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.patternWithin(Seq(Funnel.PatternStage("view", notNextAfter = Some("error")),
@@ -7397,7 +7332,7 @@ object Queries {
     * the previous stage's completion index per stage, and the island
     * containing the user's last event for the trailing partial run. */
   val w38_funnel_loop_consecutive: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.loopConsecutive(Seq("view" -> 2, "click" -> 2)))
         .orderBy("user_id"),
@@ -7462,7 +7397,7 @@ object Queries {
     * event (one idx join); trailing-partial branches are unchanged —
     * a partial run consumes identically under both modes. */
   val w56_funnel_loop_consecutive_reluctant: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.loopConsecutive(Seq("view" -> 2, "click" -> 2),
             Funnel.Reluctant))
@@ -7529,7 +7464,7 @@ object Queries {
     * immediate-successor guards on the in-copy hops, none at the
     * seam — projected to repetitions. */
   val w59_funnel_group_times: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupTimes(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), 2))
@@ -7563,7 +7498,7 @@ object Queries {
     * oracle with the seam guard ADDED — the pair (w59, w60) pins the
     * seam-contiguity axis cross-engine. */
   val w60_funnel_group_times_consecutive: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupTimes(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), 2, true))
@@ -7598,7 +7533,7 @@ object Queries {
     * relaxed; max-start per deepest reached flat stage is the window
     * observable (the w8 dominance). */
   val w61_funnel_group_times_within: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupTimesWithin(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), 2, 7200L * 1000000L))
@@ -7719,7 +7654,7 @@ object Queries {
     * exchange-optimal because completion validity is an index
     * property (see [[duckGroupLoopGreedyGuarded]]). */
   val w71_funnel_group_loop_seam_guard: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", notNextAfter = Some("error")))))
@@ -7745,7 +7680,7 @@ object Queries {
     * matched)`. Oracle: the guarded greedy-earliest chain (w71's)
     * with `LEAST(·, 3)` and the `>= 2` threshold. */
   val w72_funnel_group_times_range_guarded: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupTimesRange(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", notNextAfter = Some("error"))), 2, 3))
@@ -7770,7 +7705,7 @@ object Queries {
     * these seams are RELAXED; per-user ceilings: 19 at sf0.01, 21 at
     * sf0.1). */
   val w62_funnel_group_loop: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.groupLoop(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click"))))
@@ -7793,7 +7728,7 @@ object Queries {
     * the seam relation `next.start = prev.end + 1` — depth 16 against
     * corpus ceilings of 7 (sf0.01) and 10 (sf0.1). */
   val w63_funnel_group_loop_consecutive: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), true))
@@ -7833,7 +7768,7 @@ object Queries {
     * chain with `LEAST(·, 2)` — valid precisely because truncation
     * makes every intermediate depth realizable. */
   val w68_funnel_group_loop_reluctant: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.groupLoop(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
@@ -7855,7 +7790,7 @@ object Queries {
     * repetition chain never disturbs the adjacency of the prefix it
     * keeps. */
   val w69_funnel_group_loop_reluctant_consecutive: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupLoop(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), true,
@@ -7893,7 +7828,7 @@ object Queries {
     * w59's chained-join replay extended to the third copy (strict
     * in-copy hops, relaxed seams) with the same threshold column. */
   val w64_funnel_group_times_range: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupTimesRange(Seq(Funnel.PatternStage("view"),
             Funnel.PatternStage("click", strict = true)), 2, 3))
@@ -7928,7 +7863,7 @@ object Queries {
     * machine (w62) plus the threshold report. Oracle: w62's
     * greedy-earliest chain with `matched = reps >= 3`. */
   val w65_funnel_group_times_or_more: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.groupTimesOrMore(Seq(Funnel.PatternStage("view"), Funnel.PatternStage("click")),
@@ -7986,7 +7921,7 @@ object Queries {
   }
 
   lazy val w67_funnel_group_matches: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupMatches(Seq("view", "click"), 2,
             MultiMatchCap))
@@ -8012,7 +7947,7 @@ object Queries {
     * `n_matches` recounted over the fitting ones. Oracle: w67's
     * chained-pick replay with the same span predicate and recount. */
   lazy val w70_funnel_group_matches_within: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupMatchesWithin(Seq("view", "click"), 2,
             MultiMatchCap, 432000L * 1000000L))
@@ -8037,7 +7972,7 @@ object Queries {
     * chained-pick replay with both predicates, the tail as NOT
     * EXISTS. */
   lazy val w74_funnel_group_matches_absence: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupMatches(Seq("view", "click"), 2,
             MultiMatchCap, Some((432000L * 1000000L, "error"))))
@@ -8122,7 +8057,7 @@ object Queries {
     * replay over the 6-hop expansion with LEFT-join emission and the
     * `reps >= 2` floor. */
   lazy val w75_funnel_group_matches_range: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupMatchesRange(Seq("view", "click"), 2, 3,
             MultiMatchCap))
@@ -8151,7 +8086,7 @@ object Queries {
     * rep-descending coalesce — with the tail as NOT EXISTS and
     * `n_matches` recounted over survivors. */
   lazy val w75b_funnel_group_matches_range_absence: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.groupMatchesRange(Seq("view", "click"), 2, 3,
             MultiMatchCap, Some((432000L * 1000000L, "error"))))
@@ -8176,7 +8111,7 @@ object Queries {
     })
 
   val w31_funnel_loop_until: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
@@ -8260,7 +8195,7 @@ object Queries {
     * until-truncated repetition intervals with a rank cut at each
     * stage's minReps (the w18 cap recipe inside w31's truncation). */
   val w57_funnel_loop_until_reluctant: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.loopUntil(Seq(("view", 1, Some("signup")), ("click", 2, None),
@@ -8346,7 +8281,7 @@ object Queries {
     * O(k) state, no enumeration. The oracle counts the literal 3-way
     * ordered join. */
   val w28_funnel_any_count: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.anyCount(Seq("view", "click", "purchase")))
         .orderBy("user_id"),
@@ -8374,14 +8309,11 @@ object Queries {
     * form adds a total ORDER BY for row stability; the bench form
     * drops it. */
   val w30_funnel_any: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
-          "event_id", Pattern.anyEnumerate(Seq("view", "click", "purchase")))
-        .orderBy("user_id", "ts1_us", "ts2_us", "ts3_us"),
+          "event_id", Pattern.anyEnumerate(Seq("view", "click", "purchase"))),
     bench = true,
-    benchRun = Some((spark, dir) =>
-      Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
-          "event_id", Pattern.anyEnumerate(Seq("view", "click", "purchase")))),
+    compareAs = _.orderBy("user_id", "ts1_us", "ts2_us", "ts3_us"),
     oracle = Some {
       s"""$sqlEventsPrefix
          |dummy AS (SELECT 1)
@@ -8410,7 +8342,7 @@ object Queries {
     * crosses the cap this gate fails LOUDLY rather than comparing
     * truncated counts. */
   val w26_funnel_matches: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.matches(Seq("view", "click", "purchase"),
             MultiMatchCap))
@@ -8467,7 +8399,7 @@ object Queries {
     * survivors. Oracle: w26's chained greedy-pick replay with the
     * same two predicates, the tail as NOT EXISTS. */
   val w73_funnel_matches_absence: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.matches(Seq("view", "click", "purchase"),
             MultiMatchCap, Some((AbsenceWindowUs, "error"))))
@@ -8598,7 +8530,7 @@ object Queries {
     * the closed form Σ over (view, purchase) pairs of
     * `2^{clicks between} − 1`, exact in BIGINT via a shift. */
   val w39_funnel_combinations: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.combinations(Seq("view" -> false, "click" -> true, "purchase" -> false)))
@@ -8637,7 +8569,7 @@ object Queries {
     * pruning as a recursive CTE carrying the running anchor
     * threshold. */
   val w33_funnel_skip_to_last: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.skip(Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
@@ -8654,7 +8586,7 @@ object Queries {
     * matches (both gated independently; the pair is what proves the
     * first/last anchors are genuinely different machines). */
   val w34_funnel_skip_to_first: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.skip(Seq("view" -> 1, "click" -> 2, "purchase" -> 1),
@@ -8672,7 +8604,7 @@ object Queries {
     * `maxMatches` report the true n_matches with the first
     * `maxMatches` rows). */
   val w35_funnel_skip_to_next: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id",
           Pattern.skip(Seq("view" -> 1, "click" -> 1, "purchase" -> 1),
@@ -8691,7 +8623,7 @@ object Queries {
     * one user-keyed shuffle. The oracle replays it as chained
     * total-order joins with a NOT EXISTS blocker probe on every hop. */
   val w10_funnel_guarded: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Funnel.run(t(spark, dir, "events"), "user_id", "event_type", "ts",
           "event_id", Pattern.guarded(FunnelStages,
             Seq(Some("error"), Some("error"))))
@@ -8731,7 +8663,7 @@ object Queries {
     * schema inference pass; at 100 TB the JSON never leaves the scan
     * projection). */
   val j2_json_extract: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       t(spark, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast(LongType).as("k"))
@@ -8755,7 +8687,7 @@ object Queries {
     * The oracle is the honest NOT EXISTS over the same split: the Bloom
     * must be semantically invisible. */
   val t33_bloom_dedup: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val li = tf(spark, dir, "lineitem")
       val metas = ColumnMeta.fromSchema(li.schema)
       // barrier: the canonical row hash is the expensive part and FOUR
@@ -8812,7 +8744,7 @@ object Queries {
     * The oracle reuses the t12 Lloyd CTEs so both engines derive the
     * SAME cells, then replays the pair rule in SQL. */
   val t34_semdedup: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.semDedup(tf(spark, dir, "embeddings"), "vec_id", "embedding",
           kClusters = IvfClusters, iters = IvfIters,
           threshold = SemDedupThreshold)
@@ -8847,7 +8779,7 @@ object Queries {
     * engines train the same derived seed count (7 at the sf0.01 verify
     * corpus's N=500, iters=5) through bit-identical iterations. */
   val t34a_semdedup_auto: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.semDedupAuto(tf(spark, dir, "embeddings"), "vec_id", "embedding",
           threshold = SemDedupThreshold, iters = IvfIters)
         .withColumnRenamed("id", "vec_id")
@@ -8868,7 +8800,7 @@ object Queries {
     * (α = 1/2 source reweighting toward a document budget; integer-scaled
     * weights so both engines agree bit-for-bit). */
   val t35_mixture_weights: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.mixtureWeights(t(spark, dir, "documents"), "source",
           "doc_id", budget = MixtureBudget)
         .select("doc_id", "source", "n_docs", "ppm", "quota", "keep")
@@ -8902,7 +8834,7 @@ object Queries {
     * shorter than gram+w−1 codepoints emit nothing. Map-only after the
     * scan; the oracle replays the same windows relationally. */
   val t37_winnowing: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       tf(spark, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.WinnowFingerprints(
@@ -8938,7 +8870,7 @@ object Queries {
     * the self-join). Composes the t37 fingerprints into the dedup
     * family's pair-finding stage. */
   val t39_winnow_pairs: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextDedup.winnowPairs(t(spark, dir, "documents"), "doc_id", "text",
           gram = WinnowGram, w = WinnowWindow, maxDf = WinnowMaxDf,
           minShared = WinnowMinShared)
@@ -8966,7 +8898,7 @@ object Queries {
     * catches long shared SPANS that whole-doc Jaccard dilutes away).
     * Output mirrors t19: surviving doc ids with token counts. */
   val t41_winnow_dedup_apply: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val pairs = TextDedup.winnowPairs(docs, "doc_id", "text",
           gram = WinnowGram, w = WinnowWindow, maxDf = WinnowMaxDf,
@@ -9000,7 +8932,7 @@ object Queries {
     * target-vs-raw log-ratio, integer micro-logprobs, TakeOrdered
     * cutoff). Target domain = source 'src0'. */
   val t36_dsir_weights: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.dsirWeights(t(spark, dir, "documents"), "doc_id", "text",
           targetPred = col("source") === "src0", vocab = LmVocab,
           budget = DsirBudget)
@@ -9085,7 +9017,7 @@ object Queries {
     * compares the integer micro-unit scores hash-exactly (the t32
     * fixed-pointing rule). */
   val t42_bm25_topk: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       TextAnalysis.bm25TopK(t(spark, dir, "documents"), "doc_id", "text",
           Bm25Terms, Bm25K)
         .withColumnRenamed("id", "doc_id"),
@@ -9101,7 +9033,7 @@ object Queries {
     * per-term contribution is the same shared float tree and absent
     * terms contribute exactly 0. */
   val t46_bm25_index_persist: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bm25_index"
       Retrieval.writeBm25Index(t(spark, dir, "documents"), "doc_id",
         "text", table)
@@ -9122,7 +9054,7 @@ object Queries {
     * VERBATIM — a probe after append must be indistinguishable from a
     * probe over a from-scratch build on the union. */
   val t54_bm25_index_append: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bm25_append"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
@@ -9144,7 +9076,7 @@ object Queries {
     * from-scratch build on the survivors. Gated on the survivor-restricted t42
     * oracle. */
   val t57_bm25_index_delete: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bm25_delete"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs, "doc_id", "text", table)
@@ -9164,7 +9096,7 @@ object Queries {
     * gate individually). Placeholder −1 instead of NULL in the k2/rank
     * slots keeps cross-engine row ordering deterministic. */
   val t95_forget_everywhere: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val docs = t(spark, dir, "documents")
       val emb = t(spark, dir, "embeddings")
       val annT = "graft_forget_ann"
@@ -9245,7 +9177,7 @@ object Queries {
     * three loses the appended documents or resurrects deleted ones, and
     * this oracle fails. */
   val t59_bm25_index_compact: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bm25_compact"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
@@ -9276,7 +9208,7 @@ object Queries {
     * base ∪ batch 0, so the gate proves probe(asOf N) ≡
     * probe(appends-stopped-at-N) hash-exactly. */
   val t77_bm25_index_asof: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val table = "graft_bm25_asof"
       val docs = t(spark, dir, "documents")
       Retrieval.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
@@ -9307,7 +9239,7 @@ object Queries {
     * list-sized; scores emitted in integer nano-units so the gate
     * compares longs (the t42 rule). */
   val t44_hybrid_rrf: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       Retrieval.hybridTopK(tf(spark, dir, "documents"),
           tf(spark, dir, "embeddings"), "doc_id", "text", "vec_id",
           "embedding", Bm25Terms, HybridQueryVec, n = HybridN, k = HybridK)
@@ -9354,7 +9286,7 @@ object Queries {
     * quantize/decode, exact re-rank, fusion — and the gate is
     * hash-exact. */
   val t47_hybrid_index_stack: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val bmTable = "graft_hybrid_bm25"
       val annTable = "graft_hybrid_ann"
       Retrieval.writeBm25Index(t(spark, dir, "documents"), "doc_id",
@@ -9423,7 +9355,7 @@ object Queries {
     * tf/df over a VALUES term relation), the k-means/SQ8 probe and the
     * per-query fusion; the gate is hash-exact. */
   val t52_hybrid_batched: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val bmTable = "graft_batched_bm25"
       val annTable = "graft_batched_ann"
       Retrieval.writeBm25Index(t(spark, dir, "documents"), "doc_id",
@@ -9513,7 +9445,7 @@ object Queries {
     * staleness check on the as-of winner ≡ restricting the lateral's
     * candidates, which is exactly how the oracle spells it. */
   val j8_asof_tolerance: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select("event_id", "user_id", "ts")
@@ -9557,7 +9489,7 @@ object Queries {
     * long→timestamp cast (which would read micros as seconds) ever
     * happens. Oracle does the same micros arithmetic. */
   val j9_asof_tolerance_us: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
         .withColumn("us", unix_micros(col("ts").cast(TimestampType)))
       val clicks = ev.filter(col("event_type") === "click")
@@ -9597,26 +9529,24 @@ object Queries {
         |WHERE c.event_type = 'click'
         |ORDER BY c.event_id""".stripMargin))
 
-  private def asOfFrame(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsWithTs(spark, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"),
-        col("event_id").as("last_purchase_id"),
-        col("ts").as("last_purchase_ts"),
-        col("value").as("last_purchase_value"))
-    TemporalJoin.asOf(clicks, purchases,
-      leftKey = "user_id", rightKey = "user_id",
-      leftTs = "ts", rightTs = "ts",
-      rightPayload = Seq("last_purchase_id", "last_purchase_ts",
-        "last_purchase_value"),
-      tieBreak = Seq("last_purchase_id"))
-  }
-
   val j3_asof_join: Q = Q(
-    run = (spark, dir) => asOfFrame(spark, dir).orderBy("event_id"),
-    benchRun = Some((spark, dir) => asOfFrame(spark, dir)),
+    frame = (spark, dir) => {
+      val ev = eventsWithTs(spark, dir)
+      val clicks = ev.filter(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"),
+          col("event_id").as("last_purchase_id"),
+          col("ts").as("last_purchase_ts"),
+          col("value").as("last_purchase_value"))
+      TemporalJoin.asOf(clicks, purchases,
+        leftKey = "user_id", rightKey = "user_id",
+        leftTs = "ts", rightTs = "ts",
+        rightPayload = Seq("last_purchase_id", "last_purchase_ts",
+          "last_purchase_value"),
+        tieBreak = Seq("last_purchase_id"))
+    },
+    compareAs = _.orderBy("event_id"),
     oracle = Some(
       """SELECT c.event_id, c.user_id, CAST(c.ts AS TIMESTAMP) AS ts,
         |  p.last_purchase_id, p.last_purchase_ts, p.last_purchase_value
@@ -9652,7 +9582,7 @@ object Queries {
     * the overlap-start's bucket — an ordinary equi-join, never |A|×|B|,
     * no post-join DISTINCT. */
   val j5_interval_join: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
       val incidents = ev.filter(col("event_type") === "error" && col("value") > 150)
         .select(col("event_id").as("incident_id"), col("ts").as("i_start"),
@@ -9700,7 +9630,7 @@ object Queries {
     * TemporalJoinSpec gates auto ≡ naive), so the oracle is j5's
     * verbatim: same pairs, same exact overlap microseconds. */
   val j5a_interval_join_auto: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
       // NTZ-epoch micros: NTZ subtraction → day-time interval → exact
       // decimal seconds → micros; offsets from 2024-01-01 stay far
@@ -9736,7 +9666,7 @@ object Queries {
     bench = true)
 
   val j4_range_join: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       val ev = eventsWithTs(spark, dir)
       val wins = ev.filter(col("event_type") === "error" && col("value") > 180)
         .select(col("event_id").as("window_id"),
@@ -9776,7 +9706,7 @@ object Queries {
     * (integer dot product — exactly portable), exact cosine re-rank of
     * the top candidates. */
   val t14_sq8_ann: Q = Q(
-    run = (spark, dir) =>
+    frame = (spark, dir) =>
       VectorOps.sq8TopK(t(spark, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, candidates = Sq8Candidates)
         .orderBy("query_id", "rank"),
@@ -9817,9 +9747,9 @@ object Queries {
     * the oracle asserts the pipeline invariant itself: rows_written =
     * rows_read and zero hash mismatches, per table. */
   val e2e_ingest_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
-      val wh = java.nio.file.Files.createTempDirectory("graft-e2e").toString
+      val wh = "spark-warehouse/graft_e2e"
       val cfg = IngestJob.IngestConfig(dir, wh,
         IngestJob.TableMapping.parse("region,nation,supplier"), replace = true)
       IngestJob.run(spark, cfg)
@@ -9880,13 +9810,13 @@ object Queries {
     * sink hashes match only if the JDBC scan delivered every row
     * byte-identically to the parquet path. */
   val e2e_jdbc_roundtrip: Q = Q(
-    run = (spark, dir) => {
+    frame = (spark, dir) => {
       import spark.implicits._
       val db = "graftjdbc" + java.util.UUID.randomUUID().toString.replace("-", "")
       val url = s"jdbc:derby:memory:$db;create=true"
       try {
         seedDerbyFromParquet(spark, dir, url)
-        val wh = java.nio.file.Files.createTempDirectory("graft-jdbc-e2e").toString
+        val wh = "spark-warehouse/graft_jdbc_e2e"
         val cfg = sources.JdbcIngest.JdbcConfig(url, wh,
           IngestJob.TableMapping.parseFb("REGION,NATION"), replace = true)
         IngestJob.run(spark, cfg)
@@ -9932,267 +9862,14 @@ object Queries {
            |) ORDER BY table_name""".stripMargin)
     })
 
-  /** The reference-surface inventory. */
-  def referenceQueries: Map[String, Q] = Map(
-    "s1_resumable_scan" -> s1_resumable_scan,
-    "s3_access_probe" -> s3_access_probe,
-    "s4_schema_inference" -> s4_schema_inference,
-    "s5_order_key_detection" -> s5_order_key_detection,
-    "s6_jsonl_roundtrip" -> s6_jsonl_roundtrip,
-    "s7_csv_roundtrip" -> s7_csv_roundtrip,
-    "f1_enrich_lineitem" -> f1_enrich_lineitem,
-    "f_canonical_tokens" -> f_canonical_tokens,
-    "a1_count_bounded" -> a1_count_bounded,
-    "a2_consistency_metrics" -> a2_consistency_metrics,
-    "a3_max_watermark" -> a3_max_watermark,
-    "k3_mismatch_topk" -> k3_mismatch_topk,
-    "k4_first_row" -> k4_first_row,
-    "o9_first_column_diff" -> o9_first_column_diff,
-    "j1_hash_diff" -> j1_hash_diff,
-    "o3_create_table_ddl" -> o3_create_table_ddl,
-    "o10_fb_table_mapping" -> o10_fb_table_mapping,
-    "e2e_ingest_roundtrip" -> e2e_ingest_roundtrip,
-    "e2e_jdbc_roundtrip" -> e2e_jdbc_roundtrip,
-    "c1_cdc_merge" -> c1_cdc_merge,
-    "c2_snapshot_diff" -> c2_snapshot_diff,
-    "c3_scd2_history" -> c3_scd2_history,
-    "c4_scd2_asof" -> c4_scd2_asof,
-    "c5_scd2_incremental" -> c5_scd2_incremental,
-    "p3_profile" -> p3_profile,
-    "p4_quality_checks" -> p4_quality_checks,
-    "p5_histogram" -> p5_histogram,
-    "p6_heavy_hitters" -> p6_heavy_hitters,
-    "p7_heavy_hitters_sketch" -> p7_heavy_hitters_sketch,
-    "p8_heavy_hitters_grouped" -> p8_heavy_hitters_grouped,
-    "p9_quantile_sketch" -> p9_quantile_sketch,
-    "p10_count_min" -> p10_count_min,
-    "p11_hll_distinct" -> p11_hll_distinct,
-    "p12_kmv_distinct" -> p12_kmv_distinct,
-    "p12a_kmv_distinct_agg" -> p12a_kmv_distinct_agg,
-    "p13_kmv_overlap" -> p13_kmv_overlap,
-    "t64_weighted_sample" -> t64_weighted_sample,
-    "t65_perplexity_buckets" -> t65_perplexity_buckets,
-    "t66_bpe_merges" -> t66_bpe_merges,
-    "t67_bpe_encode" -> t67_bpe_encode,
-    "t78_bpe_encode_unseen" -> t78_bpe_encode_unseen,
-    "t79_fuzzy_join" -> t79_fuzzy_join,
-    "t80_fuzzy_join_strings" -> t80_fuzzy_join_strings,
-    "t81_fuzzy_join_d2" -> t81_fuzzy_join_d2,
-    "t82_fuzzy_segment_index_persist" -> t82_fuzzy_segment_index_persist,
-    "t83_minhash_index_persist" -> t83_minhash_index_persist,
-    "t86_minhash_index_append" -> t86_minhash_index_append,
-    "t90_minhash_index_probe" -> t90_minhash_index_probe,
-    "t91_rp_ivf_ann" -> t91_rp_ivf_ann,
-    "w18_funnel_times_range" -> w18_funnel_times_range,
-    "t87_minhash_index_asof" -> t87_minhash_index_asof,
-    "t88_minhash_index_delete" -> t88_minhash_index_delete,
-    "t89_minhash_index_compact" -> t89_minhash_index_compact,
-    "t84_random_projection" -> t84_random_projection,
-    "t85_rp_rerank_recall" -> t85_rp_rerank_recall,
-    "t68_quality_classifier" -> t68_quality_classifier,
-    "t69_dup_ngram_fraction" -> t69_dup_ngram_fraction,
-    "t70_collocations" -> t70_collocations,
-    "t71_linear_probe" -> t71_linear_probe,
-    "t72_probe_select" -> t72_probe_select,
-    "t73_ann_index_asof" -> t73_ann_index_asof,
-    "t74_pq_index_asof" -> t74_pq_index_asof,
-    "t77_bm25_index_asof" -> t77_bm25_index_asof,
-    "t75_leakage_safe_split" -> t75_leakage_safe_split,
-    "t76_bigram_lm" -> t76_bigram_lm,
-    "t92_kneser_ney_lm" -> t92_kneser_ney_lm,
-    "t93_kneser_ney_trigram" -> t93_kneser_ney_trigram,
-    "t97_kneser_ney_modified_4gram" -> t97_kneser_ney_modified_4gram,
-    "t94_zorder_key" -> t94_zorder_key,
-    "t96_zorder_key_3d" -> t96_zorder_key_3d,
-    "t98_hilbert_key" -> t98_hilbert_key,
-    "t99_hilbert_key_3d" -> t99_hilbert_key_3d,
-    "t100_hilbert_key_4d" -> t100_hilbert_key_4d,
-    "t101_unigram_vocab" -> t101_unigram_vocab,
-    "t102_unigram_encode" -> t102_unigram_encode,
-    "t104_wordpiece_merges" -> t104_wordpiece_merges,
-    "t105_wordpiece_encode" -> t105_wordpiece_encode,
-    "t106_wordpiece_encode_unseen" -> t106_wordpiece_encode_unseen,
-    "t107_wordpiece_store_asof" -> t107_wordpiece_store_asof,
-    "t108_wordpiece_store_latest" -> t108_wordpiece_store_latest,
-    "t109_bpe_store_roundtrip" -> t109_bpe_store_roundtrip,
-    "t110_unigram_store_roundtrip" -> t110_unigram_store_roundtrip,
-    "t113_bpe_interchange" -> t113_bpe_interchange,
-    "t114_unigram_interchange" -> t114_unigram_interchange,
-    "t115_wordpiece_interchange" -> t115_wordpiece_interchange,
-    "t116_bytelevel_bpe" -> t116_bytelevel_bpe,
-    "t117_bpe_compression_by_lang" -> t117_bpe_compression_by_lang,
-    "t118_wordpiece_coverage_by_source" ->
-      t118_wordpiece_coverage_by_source,
-    "t119_wordpiece_fertility" -> t119_wordpiece_fertility,
-    "t120_bytelevel_bytes_per_token" -> t120_bytelevel_bytes_per_token,
-    "t123_unigram_compression_by_lang" ->
-      t123_unigram_compression_by_lang,
-    "t111_blocklist_tag" -> t111_blocklist_tag,
-    "t112_blocklist_store_asof" -> t112_blocklist_store_asof,
-    "t103_unigram_doc_score" -> t103_unigram_doc_score,
-    "t95_forget_everywhere" -> t95_forget_everywhere,
-    "p14_vocab_growth" -> p14_vocab_growth,
-    "p15_drift_psi" -> p15_drift_psi,
-    "p16_embedding_drift" -> p16_embedding_drift)
-
-  /** Training-data pipeline extensions. */
-  def pipelineQueries: Map[String, Q] = Map(
-    "t1_exact_dedup" -> t1_exact_dedup,
-    "t2_ngram_jaccard_pairs" -> t2_ngram_jaccard_pairs,
-    "t3_minhash_lsh_pairs" -> t3_minhash_lsh_pairs,
-    "t4_simhash" -> t4_simhash,
-    "t26_simhash_pairs" -> t26_simhash_pairs,
-    "t27_span_dedup" -> t27_span_dedup,
-    "t51_span_removal" -> t51_span_removal,
-    "t5_cosine_neardup" -> t5_cosine_neardup,
-    "t16_dedup_clusters" -> t16_dedup_clusters,
-    "t121_soft_dedup_sample" -> t121_soft_dedup_sample,
-    "t122_soft_dedup_report" -> t122_soft_dedup_report,
-    "t17_decontaminate" -> t17_decontaminate,
-    "t19_dedup_apply" -> t19_dedup_apply,
-    "p1_corpus_prep" -> p1_corpus_prep,
-    "p2_embedding_prep" -> p2_embedding_prep,
-    "t20_embedding_clusters" -> t20_embedding_clusters,
-    "t18_stratified_sample" -> t18_stratified_sample,
-    "t6_ann_topk" -> t6_ann_topk,
-    "t25_filtered_ann" -> t25_filtered_ann,
-    "t28_hard_negatives" -> t28_hard_negatives,
-    "t29_source_caps" -> t29_source_caps,
-    "t30_chunk_documents" -> t30_chunk_documents,
-    "t31_corpus_shuffle" -> t31_corpus_shuffle,
-    "t7_ann_bucketed" -> t7_ann_bucketed,
-    "t12_ivf_ann" -> t12_ivf_ann,
-    "t13_ann_recall" -> t13_ann_recall,
-    "t8_langid" -> t8_langid,
-    "t9_quality_score" -> t9_quality_score,
-    "t10_token_counts" -> t10_token_counts,
-    "t11_fingerprint" -> t11_fingerprint,
-    "t21_repetition" -> t21_repetition,
-    "t22_redact_pii" -> t22_redact_pii,
-    "t23_pack_sequences" -> t23_pack_sequences,
-    "t24_top_terms" -> t24_top_terms,
-    "t32_lm_quality" -> t32_lm_quality,
-    "t33_bloom_dedup" -> t33_bloom_dedup,
-    "t34_semdedup" -> t34_semdedup,
-    "t34a_semdedup_auto" -> t34a_semdedup_auto,
-    "t35_mixture_weights" -> t35_mixture_weights,
-    "t36_dsir_weights" -> t36_dsir_weights,
-    "t42_bm25_topk" -> t42_bm25_topk,
-    "t44_hybrid_rrf" -> t44_hybrid_rrf,
-    "t45_pq_index_persist" -> t45_pq_index_persist,
-    "t46_bm25_index_persist" -> t46_bm25_index_persist,
-    "t54_bm25_index_append" -> t54_bm25_index_append,
-    "t56_ann_index_delete" -> t56_ann_index_delete,
-    "t57_bm25_index_delete" -> t57_bm25_index_delete,
-    "t58_ann_index_compact" -> t58_ann_index_compact,
-    "t59_bm25_index_compact" -> t59_bm25_index_compact,
-    "t60_pq_index_delete" -> t60_pq_index_delete,
-    "t61_pq_index_compact" -> t61_pq_index_compact,
-    "t62_ann_append_committed" -> t62_ann_append_committed,
-    "t63_pq_append_committed" -> t63_pq_append_committed,
-    "t47_hybrid_index_stack" -> t47_hybrid_index_stack,
-    "t52_hybrid_batched" -> t52_hybrid_batched,
-    "t37_winnowing" -> t37_winnowing,
-    "t38_overlap_matrix" -> t38_overlap_matrix,
-    "t39_winnow_pairs" -> t39_winnow_pairs,
-    "t41_winnow_dedup_apply" -> t41_winnow_dedup_apply,
-    "t48_paragraph_dedup" -> t48_paragraph_dedup,
-    "t53_fuzzy_paragraph_dedup" -> t53_fuzzy_paragraph_dedup,
-    "t49_gopher_rules" -> t49_gopher_rules,
-    "m1_multimodal_features" -> m1_multimodal_features,
-    "m2_frame_sample" -> m2_frame_sample,
-    "m3_container_headers" -> m3_container_headers,
-    "m4_mp4_frame_index" -> m4_mp4_frame_index,
-    "w1_windowed_agg" -> w1_windowed_agg,
-    "w2_sessionization" -> w2_sessionization,
-    "w3_distinct_users" -> w3_distinct_users,
-    "w4_session_window" -> w4_session_window,
-    "w5_latest_state" -> w5_latest_state,
-    "j6_not_followed_by" -> j6_not_followed_by,
-    "j7_conversion_latency" -> j7_conversion_latency,
-    "w6_funnel" -> w6_funnel,
-    "w8_funnel_within" -> w8_funnel_within,
-    "w10_funnel_guarded" -> w10_funnel_guarded,
-    "w12_funnel_times" -> w12_funnel_times,
-    "w14_funnel_within_guarded" -> w14_funnel_within_guarded,
-    "w16_funnel_loop" -> w16_funnel_loop,
-    "w20_funnel_strict" -> w20_funnel_strict,
-    "w22_funnel_optional" -> w22_funnel_optional,
-    "w23_funnel_not_next" -> w23_funnel_not_next,
-    "w24_funnel_pattern_product" -> w24_funnel_pattern_product,
-    "w26_funnel_matches" -> w26_funnel_matches,
-    "w73_funnel_matches_absence" -> w73_funnel_matches_absence,
-    "w33_funnel_skip_to_last" -> w33_funnel_skip_to_last,
-    "w34_funnel_skip_to_first" -> w34_funnel_skip_to_first,
-    "w35_funnel_skip_to_next" -> w35_funnel_skip_to_next,
-    "w31_funnel_loop_until" -> w31_funnel_loop_until,
-    "w38_funnel_loop_consecutive" -> w38_funnel_loop_consecutive,
-    "w42_funnel_pattern_within" -> w42_funnel_pattern_within,
-    "w39_funnel_combinations" -> w39_funnel_combinations,
-    "w28_funnel_any_count" -> w28_funnel_any_count,
-    "w49_funnel_loop_reluctant" -> w49_funnel_loop_reluctant,
-    "w50_funnel_iterative_first" -> w50_funnel_iterative_first,
-    "w51_funnel_iterative_prev" -> w51_funnel_iterative_prev,
-    "w53_funnel_where" -> w53_funnel_where,
-    "w56_funnel_loop_consecutive_reluctant" -> w56_funnel_loop_consecutive_reluctant,
-    "w59_funnel_group_times" -> w59_funnel_group_times,
-    "w60_funnel_group_times_consecutive" -> w60_funnel_group_times_consecutive,
-    "w61_funnel_group_times_within" -> w61_funnel_group_times_within,
-    "w62_funnel_group_loop" -> w62_funnel_group_loop,
-    "w63_funnel_group_loop_consecutive" -> w63_funnel_group_loop_consecutive,
-    "w68_funnel_group_loop_reluctant" -> w68_funnel_group_loop_reluctant,
-    "w69_funnel_group_loop_reluctant_consecutive" ->
-      w69_funnel_group_loop_reluctant_consecutive,
-    "w64_funnel_group_times_range" -> w64_funnel_group_times_range,
-    "w65_funnel_group_times_or_more" -> w65_funnel_group_times_or_more,
-    "w66_funnel_where_or" -> w66_funnel_where_or,
-    "w67_funnel_group_matches" -> w67_funnel_group_matches,
-    "w70_funnel_group_matches_within" -> w70_funnel_group_matches_within,
-    "w74_funnel_group_matches_absence" ->
-      w74_funnel_group_matches_absence,
-    "w75_funnel_group_matches_range" ->
-      w75_funnel_group_matches_range,
-    "w75b_funnel_group_matches_range_absence" ->
-      w75b_funnel_group_matches_range_absence,
-    "w71_funnel_group_loop_seam_guard" ->
-      w71_funnel_group_loop_seam_guard,
-    "w72_funnel_group_times_range_guarded" ->
-      w72_funnel_group_times_range_guarded,
-    "w57_funnel_loop_until_reluctant" -> w57_funnel_loop_until_reluctant,
-    "w30_funnel_any" -> w30_funnel_any,
-    "t14_sq8_ann" -> t14_sq8_ann,
-    "j2_json_extract" -> j2_json_extract,
-    "j3_asof_join" -> j3_asof_join,
-    "j8_asof_tolerance" -> j8_asof_tolerance,
-    "j9_asof_tolerance_us" -> j9_asof_tolerance_us,
-    "j4_range_join" -> j4_range_join,
-    "j5_interval_join" -> j5_interval_join,
-    "j5a_interval_join_auto" -> j5a_interval_join_auto,
-    "q1_pricing_summary" -> q1_pricing_summary,
-    "q3_shipping_priority" -> q3_shipping_priority,
-    "q5_local_supplier_volume" -> q5_local_supplier_volume,
-    "q6_rollup_orders" -> q6_rollup_orders,
-    "q7_running_total" -> q7_running_total,
-    "q8_inactive_customers" -> q8_inactive_customers,
-    "q18_large_orders" -> q18_large_orders,
-    "t15_ivf_sq8_ann" -> t15_ivf_sq8_ann,
-    "t40_ann_index_persist" -> t40_ann_index_persist,
-    "t43_pq_ann" -> t43_pq_ann,
-    "q9_pivot_events" -> q9_pivot_events,
-    "q10_value_moments" -> q10_value_moments,
-    "q4_priority_exists" -> q4_priority_exists,
-    "q17_small_quantity" -> q17_small_quantity,
-    "q11_revenue_share" -> q11_revenue_share,
-    "q13_spend_deciles" -> q13_spend_deciles,
-    "q12_priority_lines" -> q12_priority_lines,
-    "q14_promo_revenue" -> q14_promo_revenue,
-    "q16_supplier_count" -> q16_supplier_count,
-    "q19_disjunctive" -> q19_disjunctive,
-    "q22_idle_balance" -> q22_idle_balance,
-    "q2_min_cost_supplier" -> q2_min_cost_supplier,
-    "q15_top_supplier" -> q15_top_supplier,
-    "q20_promotion_supplier" -> q20_promotion_supplier,
-    "q21_waiting_supplier" -> q21_waiting_supplier)
-
-  def all: Map[String, Q] = referenceQueries ++ pipelineQueries
+  /** Every query, keyed by the name it is declared under: the public
+    * zero-argument members of this object whose type is [[Q]], found
+    * once by reflection, so a declared query cannot go unregistered.
+    * Declared last, so every query `val` it reads is already set. */
+  val all: Map[String, Q] =
+    getClass.getMethods.iterator
+      .filter(m => m.getParameterCount == 0 && m.getReturnType == classOf[Q] &&
+        !m.getName.contains('$'))
+      .map(m => m.getName -> m.invoke(this).asInstanceOf[Q])
+      .toMap
 }

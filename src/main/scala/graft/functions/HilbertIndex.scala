@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
  * `s = 2^i` the quadrant bits contribute `s²·((3·rx) xor ry)` to the
  * index and the frame reflects/transposes for the next level.
  *
- * Caller contract mirrors [[graft.operators.Layout.zValue]]: inputs
+ * Caller contract mirrors [[graft.operators.Layout.zValueN]]: inputs
  * already in `[0, 2^bits)` (only low bits are read, out-of-domain
  * keys fold the space); bits ≤ 31 keeps the index in the positive
  * Long range; NULL in → NULL out.

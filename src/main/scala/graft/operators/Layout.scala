@@ -22,29 +22,19 @@ import org.apache.spark.sql.functions._
  */
 object Layout {
 
-  /** Morton/Z interleave of two non-negative keys, `bits` low bits
-    * each (bit i of `a` → bit 2i, bit i of `b` → bit 2i+1): one long
-    * whose sort order is the Z space-filling curve over (a, b).
-    * Caller contract: inputs must already lie in `[0, 2^bits)` —
-    * bound them with `pmod`, `div`-bucketing or a monotonic cast;
-    * out-of-domain bits are silently ignored (only the low `bits`
-    * bits of each key are read), which FOLDS the key space and
-    * degrades clustering quality without affecting pruning
-    * correctness. [[requireBounded]] is the loud runtime audit of
-    * that contract; [[zOrderWrite]] runs it when `audit = true`.
-    * bits ≤ 31 keeps the result in the positive Long range
-    * (2·31 = 62 bits). */
-  def zValue(a: Column, b: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 31, "need 1 <= bits <= 31")
-    (0 until bits).map { i =>
-      shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(
-          shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** [[zValue]] generalized to N keys (round-robin bit interleave,
-    * key j's bit i lands at position i·n + j). n·bits must stay ≤ 62. */
+  /** Morton/Z interleave of N ≥ 2 non-negative keys, `bits` low bits
+    * each (round-robin: key j's bit i lands at position i·n + j, so
+    * at n = 2 bit i of the first key → bit 2i, of the second → bit
+    * 2i+1): one long whose sort order is the Z space-filling curve
+    * over the keys. Caller contract: inputs must already lie in
+    * `[0, 2^bits)` — bound them with `pmod`, `div`-bucketing or a
+    * monotonic cast; out-of-domain bits are silently ignored (only the
+    * low `bits` bits of each key are read), which FOLDS the key space
+    * and degrades clustering quality without affecting pruning
+    * correctness. [[requireBounded]] is the loud runtime audit of that
+    * contract; [[zOrderWriteN]] runs it when `audit = true`. n·bits
+    * ≤ 62 keeps the result in the positive Long range (bits ≤ 31 at
+    * n = 2). */
   def zValueN(cols: Seq[Column], bits: Int): Column = {
     val n = cols.length
     require(n >= 2, "interleave needs at least two keys")
@@ -54,14 +44,14 @@ object Layout {
       .reduce(_ bitwiseOR _)
   }
 
-  /** Loud runtime audit of the [[zValue]]/[[zValueN]] domain contract:
+  /** Loud runtime audit of the [[zValueN]] domain contract:
     * ONE aggregate over the key columns asserting every value lies in
     * `[0, 2^bits)` AND actually reaches the interleave as a number.
     * Throws `IllegalArgumentException` naming the first offending
     * column with its observed (min, max) — or, ahead of the range
     * check, any NULL the interleave would see: a key value whose
     * cast-to-long yields NULL (unparseable string key) and a key that
-    * is NULL outright both produce a NULL z-key that `zOrderWrite`
+    * is NULL outright both produce a NULL z-key that `zOrderWriteN`
     * would write with no signal, which is exactly the malformed-key
     * case this audit exists to catch (a min/max-only check would
     * quietly pass it — every cast failing leaves min = max = NULL).
@@ -92,17 +82,17 @@ object Layout {
     keys.zipWithIndex.foreach { case (k, i) =>
       val (nz, nc) = (row.getLong(4 * i + 3), row.getLong(4 * i + 4))
       if (nc < nz) throw new IllegalArgumentException(
-        s"zValue domain violation: column '$k' has ${nz - nc} value(s) " +
+        s"key domain violation: column '$k' has ${nz - nc} value(s) " +
           "whose cast to long is NULL (unparseable key) — the interleave " +
           "would emit a NULL z-key for them with no signal")
       if (nz < n) throw new IllegalArgumentException(
-        s"zValue domain violation: column '$k' is NULL on ${n - nz} " +
+        s"key domain violation: column '$k' is NULL on ${n - nz} " +
           s"of $n row(s) — NULL keys produce a NULL z-key and fall out " +
           "of the clustered layout; filter or default them first")
       if (!row.isNullAt(4 * i + 1) && !row.isNullAt(4 * i + 2)) {
         val (lo, hi) = (row.getLong(4 * i + 1), row.getLong(4 * i + 2))
         if (lo < 0 || hi >= bound) throw new IllegalArgumentException(
-          s"zValue domain violation: column '$k' has range [$lo, $hi], " +
+          s"key domain violation: column '$k' has range [$lo, $hi], " +
             s"outside [0, $bound) for bits=$bits — bucket with div/pmod " +
             "first or raise bits; folding it silently would destroy " +
             "clustering quality")
@@ -111,36 +101,21 @@ object Layout {
   }
 
   /**
-   * Write `df` Z-ORDER-CLUSTERED on two key columns: range-partition on
-   * the z-value into `numFiles` output files, sort within each by the
-   * z-value, drop the helper column, write parquet. After this, every
-   * file's footer min/max on BOTH keys is a tight box (the Z curve
-   * visits space in nested quadrants), so a conjunctive range predicate
-   * on the two keys prunes files/row-groups that a single-key layout
-   * must scan — the 100 TB effect, measured at sf0.1 over 64 files: a
-   * full-range-a, narrow-b box read 37 Z-ordered files vs all 64 linear.
-   * Keys are bounded into the bit domain by `pmod` (order-preserving
-   * whenever the caller's domain already fits — pass `bits` large
-   * enough for the real range; for skewed/huge domains bucket with
-   * `div` first). `audit = true` runs [[requireBounded]] first: one
-   * extra scan, loud failure instead of a silently folded layout.
+   * Write `df` Z-ORDER-CLUSTERED on N ≥ 2 key columns
+   * ([[zValueN]], n·bits ≤ 62): range-partition on the z-value into
+   * `numFiles` output files, sort within each by the z-value, drop the
+   * helper column, write parquet. After this, every file's footer
+   * min/max on EVERY key is a tight box (the Z curve visits space in
+   * nested quadrants), so a conjunctive range predicate on the keys
+   * prunes files/row-groups that a single-key layout must scan — the
+   * 100 TB effect, measured at sf0.1 over 64 files: a full-range-a,
+   * narrow-b box read 37 Z-ordered files vs all 64 linear. Keys are
+   * bounded into the bit domain by `pmod` (order-preserving whenever
+   * the caller's domain already fits — pass `bits` large enough for
+   * the real range; for skewed/huge domains bucket with `div` first).
+   * `audit = true` runs [[requireBounded]] first: one extra scan, loud
+   * failure instead of a silently folded layout.
    */
-  def zOrderWrite(df: DataFrame, colA: String, colB: String, bits: Int,
-      path: String, numFiles: Int, audit: Boolean = false): Unit = {
-    if (audit) requireBounded(df, Seq(colA, colB), bits)
-    val z = zValue(pmod(col(colA).cast("long"), lit(1L << bits)),
-      pmod(col(colB).cast("long"), lit(1L << bits)), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.option("compression", Ddl.ParquetCompression)
-      .mode("overwrite").parquet(path)
-  }
-
-  /** [[zOrderWrite]] generalized to N keys via [[zValueN]] (n·bits ≤
-    * 62); same pmod bounding, same range-partition + sort-within
-    * layout, same optional [[requireBounded]] audit. */
   def zOrderWriteN(df: DataFrame, cols: Seq[String], bits: Int,
       path: String, numFiles: Int, audit: Boolean = false): Unit = {
     if (audit) requireBounded(df, cols, bits)
@@ -168,7 +143,7 @@ object Layout {
     * (measured: the staged-projection alternative, [[hilbertKeyed]],
     * costs ~16× and the nested-lambda tree ~60× — a 21-bit key scan
     * over 64 files took 0.47 s native vs 6.08 s staged). Same caller
-    * contract as [[zValue]]: inputs already in
+    * contract as [[zValueN]]: inputs already in
     * `[0, 2^bits)` ([[requireBounded]] audits it); bits ≤ 31 keeps
     * the index in the positive Long range. */
   def hilbertValue(x: Column, y: Column, bits: Int): Column = {
@@ -261,7 +236,7 @@ object Layout {
     }
   }
 
-  /** [[zOrderWrite]] with the HILBERT key — range-partition + sort on
+  /** [[zOrderWriteN]]'s 2-key form with the HILBERT key — range-partition + sort on
     * [[hilbertValue]]; same pmod bounding, same optional
     * [[requireBounded]] audit. On equal 2-d boxes over 64 files it
     * read fewer files than Morton (square 11 vs 14, narrow-b 20 vs 28,
@@ -296,29 +271,13 @@ object Layout {
       .write.option("compression", Ddl.ParquetCompression)
       .mode("overwrite").parquet(path)
 
-  /** Stats-pruning effectiveness of a layout for a 2-key box
-    * predicate, measured the way parquet pruning actually works: per
-    * FILE, the (min, max) envelope of each key; a file is PRUNABLE iff
-    * its envelope misses the box in at least one dimension. Returns
-    * (files total, files that must be read). Driver-side per-file
-    * aggregation over file-sized stats only. */
-  def boxScanFiles(spark: org.apache.spark.sql.SparkSession, path: String,
-      colA: String, loA: Long, hiA: Long,
-      colB: String, loB: Long, hiB: Long): (Long, Long) = {
-    val stats = spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(colA)).as("minA"), max(col(colA)).as("maxA"),
-        min(col(colB)).as("minB"), max(col(colB)).as("maxB"))
-    val total = stats.count()
-    val mustRead = stats.filter(
-      col("maxA") >= loA && col("minA") <= hiA &&
-        col("maxB") >= loB && col("minB") <= hiB).count()
-    (total, mustRead)
-  }
-
-  /** [[boxScanFiles]] generalized to an N-dimensional box: per-file
-    * (min, max) envelope on every key; a file is prunable iff its
-    * envelope misses the box in at least one dimension. */
+  /** Stats-pruning effectiveness of a layout for an N-dimensional box
+    * predicate (`box` = (key, lo, hi) per dimension), measured the way
+    * parquet pruning actually works: per FILE, the (min, max) envelope
+    * of each key; a file is PRUNABLE iff its envelope misses the box in
+    * at least one dimension. Returns (files total, files that must be
+    * read). Driver-side per-file aggregation over file-sized stats
+    * only. */
   def boxScanFilesN(spark: org.apache.spark.sql.SparkSession, path: String,
       box: Seq[(String, Long, Long)]): (Long, Long) = {
     val aggs = box.zipWithIndex.flatMap { case ((c, _, _), i) => Seq(

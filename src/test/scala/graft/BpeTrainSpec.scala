@@ -154,8 +154,7 @@ class BpeTrainSpec extends SparkSpec {
     assert(st.getLong(3) === 4L + 4L + 3L) // bytes: éé=4, éé=4, xé=3
     // byte-level merges ride the public interchange format untouched:
     // every ByteChars spelling is non-whitespace by construction
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-bytelevel-merges").toString
+    val out = tmp("graft-bytelevel-merges")
     graft.operators.TokenizerInterchange.exportBpeMerges(
       s"$out/merges.txt", merges)
     val back2 = graft.operators.TokenizerInterchange.importBpeMerges(

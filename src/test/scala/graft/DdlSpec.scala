@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ddl, Enrich}
@@ -11,7 +9,7 @@ class DdlSpec extends SparkSpec {
   test("generated CREATE TABLE executes in Spark SQL and round-trips the schema") {
     val li = spark.read.parquet(sf() + "/lineitem.parquet")
     val enriched = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
-    val loc = Files.createTempDirectory("ddl-exec").toString
+    val loc = tmp("ddl-exec")
     val ddl = Ddl.buildCreateTableSql("graft_ddl_exec", enriched.schema)
       // external location so the managed-table warehouse isn't involved
       .replace("TBLPROPERTIES", s"LOCATION '$loc'\nTBLPROPERTIES")
@@ -31,7 +29,7 @@ class DdlSpec extends SparkSpec {
   test("month partitioning: reads with a load_month filter prune partitions") {
     val li = spark.read.parquet(sf() + "/lineitem.parquet").limit(100)
     val metas = ColumnMeta.fromSchema(li.schema)
-    val path = Files.createTempDirectory("ddl-prune").toString
+    val path = tmp("ddl-prune")
     // two distinct load months
     Ddl.writePartitioned(Enrich.enrich(li, metas,
       Enrich.Lineage(loadDttm = java.sql.Timestamp.valueOf("2026-01-15 00:00:00"))), path)
@@ -52,14 +50,14 @@ class DdlSpec extends SparkSpec {
     val li = spark.read.parquet(sf() + "/lineitem.parquet")
     val metas = ColumnMeta.fromSchema(li.schema)
     val enriched = Enrich.enrich(li, metas)
-    val probeDest = Files.createTempDirectory("ddl-probe").toString
+    val probeDest = tmp("ddl-probe")
 
     // the probe measures real compressed bytes/row on a sample
     val est = Ddl.estimateRecordsPerFile(enriched, probeDest, target = 20 * 1024).get
     assert(est > 0 && est < 6000, s"estimate $est should force splits on 6000 rows")
 
     // a tiny target forces the writer to split within the partition
-    val path = Files.createTempDirectory("ddl-size").toString
+    val path = tmp("ddl-size")
     Ddl.writePartitioned(enriched, path, targetFileSizeBytes = Some(20 * 1024))
     val dataFiles = new java.io.File(path).listFiles()
       .filter(_.isDirectory).flatMap(_.listFiles())
@@ -75,7 +73,7 @@ class DdlSpec extends SparkSpec {
 
     // empty input → no estimate (and NOT cached as a permanent disable:
     // the same schema still measures on the next non-empty call)
-    val emptyDest = Files.createTempDirectory("ddl-empty").toString
+    val emptyDest = tmp("ddl-empty")
     assert(Ddl.estimateRecordsPerFile(enriched.limit(0), emptyDest).isEmpty)
     assert(Ddl.estimateRecordsPerFile(enriched, emptyDest).isDefined)
   }
@@ -84,7 +82,7 @@ class DdlSpec extends SparkSpec {
     Ddl.clearProbeCache()
     val li = spark.read.parquet(sf() + "/lineitem.parquet").limit(200)
     val enriched = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema))
-    val path = Files.createTempDirectory("ddl-cache").toString
+    val path = tmp("ddl-cache")
 
     // the probe measures in memory: nothing appears under `dest`
     assert(Ddl.estimateRecordsPerFile(enriched, path).isDefined)
@@ -109,7 +107,7 @@ class DdlSpec extends SparkSpec {
     val li = spark.read.parquet(sf("sf0.01") + "/lineitem.parquet")
     val sample = Enrich.enrich(li, ColumnMeta.fromSchema(li.schema)).limit(10000)
     val (rows, bytes) = Ddl.encodedSize(sample)
-    val path = Files.createTempDirectory("ddl-width").toString + "/sample"
+    val path = tmp("ddl-width") + "/sample"
     sample.write.option("compression", Ddl.ParquetCompression).parquet(path)
     val written = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum

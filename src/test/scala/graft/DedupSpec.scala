@@ -969,11 +969,10 @@ class DedupSpec extends SparkSpec {
     val probeRows = docs.filter(col("doc_id") % 9 === 1)
       .select(col("doc_id") + 100000L, col("text")).as[(Long, String)]
       .collect().toSeq :+ ((999999L, "zz qq xx yy ww vv uu"))
-    val dir = Files.createTempDirectory("mh-stream").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmp("mh-stream"))
     probeRows.grouped((probeRows.size + 1) / 2).zipWithIndex.foreach {
       case (rows, i) =>
-        val staging = Files.createTempDirectory(s"mh-wave$i").toString
+        val staging = tmp(s"mh-wave$i")
         rows.toDF("doc_id", "text").coalesce(1)
           .write.mode("overwrite").parquet(staging)
         val part = new java.io.File(staging).listFiles()
@@ -1073,10 +1072,9 @@ class DedupSpec extends SparkSpec {
         .select("doc_id", "text"),
       docs.filter(col("doc_id") % 8 === 0).limit(10)
         .select((col("doc_id") + 600000L).as("doc_id"), col("text")))
-    val dir = Files.createTempDirectory("mh-ingest-stream").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmp("mh-ingest-stream"))
     waves.zipWithIndex.foreach { case (w, i) =>
-      val staging = Files.createTempDirectory(s"mh-ingest-wave$i").toString
+      val staging = tmp(s"mh-ingest-wave$i")
       w.coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -1118,11 +1116,10 @@ class DedupSpec extends SparkSpec {
     val seed = docs.filter(col("doc_id") % 4 === 0)
     TextDedup.writeMinhashIndex(seed, "doc_id", "text", n = 3, k = 16,
       bandSize = 4, numBands = 4, threshold = 0.5, table = table)
-    val dir = Files.createTempDirectory("mh-restart-src").toFile
-    dir.deleteOnExit()
-    val ckpt = Files.createTempDirectory("mh-restart-ckpt").toString
+    val dir = new java.io.File(tmp("mh-restart-src"))
+    val ckpt = tmp("mh-restart-ckpt")
     def writeWave(w: org.apache.spark.sql.DataFrame, i: Int): Unit = {
-      val staging = Files.createTempDirectory(s"mh-restart-wave$i").toString
+      val staging = tmp(s"mh-restart-wave$i")
       w.coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
         .find(_.getName.endsWith(".parquet")).get

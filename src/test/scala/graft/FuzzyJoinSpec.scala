@@ -88,10 +88,9 @@ class FuzzyJoinSpec extends SparkSpec {
     val probes = Seq((10L, "chocolte"), (11L, "lavendor"),
       (12L, "goldenros"), (13L, "nomatch"))
     val baseDf = base.toDF("sid", "s")
-    val dir = Files.createTempDirectory("fuzzy-stream").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmp("fuzzy-stream"))
     probes.grouped(2).zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"fuzzy-wave$i").toString
+      val staging = tmp(s"fuzzy-wave$i")
       rows.toDF("qid", "q").coalesce(1)
         .write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.IngestJob._
 import graft.operators._
 
@@ -11,7 +9,7 @@ class IngestJobSpec extends SparkSpec {
 
   private def cfg(tables: String, replace: Boolean = true) = IngestConfig(
     sourceDir = sf(),
-    warehouseDir = Files.createTempDirectory("graft-wh").toString,
+    warehouseDir = tmp("graft-wh"),
     tables = TableMapping.parse(tables),
     replace = replace)
 

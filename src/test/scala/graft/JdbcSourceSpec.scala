@@ -86,7 +86,7 @@ class JdbcSourceSpec extends SparkSpec {
 
   test("JdbcIngest: live-connection roundtrip verifies counts and hashes; bad table isolated") {
     seeded
-    val wh = java.nio.file.Files.createTempDirectory("jdbc-ingest").toString
+    val wh = tmp("jdbc-ingest")
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("TEST:test,NO_SUCH_TABLE:nope"),
       replace = true)
@@ -103,7 +103,7 @@ class JdbcSourceSpec extends SparkSpec {
 
   test("JdbcIngest: offset resume appends exactly the suffix") {
     seeded
-    val wh = java.nio.file.Files.createTempDirectory("jdbc-resume").toString
+    val wh = tmp("jdbc-resume")
     // first (interrupted) attempt: rows 1..2 of TEST via a bounded scan
     val metas = JdbcSource.readTableMetadata(url, "TEST")
     val wm = JdbcSource.readWatermarkValue(url, "TEST", "ID")
@@ -183,7 +183,7 @@ class JdbcSourceSpec extends SparkSpec {
     // the full orchestration over the parallel path: bounds discovered
     // from the database (MIN + frozen MAX), count/hash verify green
     // against the same frozen baseline as a single-stream ingest
-    val wh = java.nio.file.Files.createTempDirectory("jdbc-parallel").toString
+    val wh = tmp("jdbc-parallel")
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("WIDE:wide"),
       replace = true, scanPartitions = Map("WIDE" -> 4))
@@ -259,7 +259,7 @@ class JdbcSourceSpec extends SparkSpec {
         offsetRows = n, tieBreakers = Seq("V"))) === full.drop(n), s"offset $n")
     // a first attempt that died after two rows of the total order, inside
     // the K = 1 run; the resume appends the other four, each once
-    val wh = java.nio.file.Files.createTempDirectory("jdbc-dup-resume").toString
+    val wh = tmp("jdbc-dup-resume")
     val prefix = JdbcSource.scan(spark, url, "DUPK", metas, "K", wm)
       .filter("K = 1 AND V < 'c'")
     graft.operators.Ddl.writePartitioned(Enrich.enrich(prefix, metas),
@@ -320,7 +320,7 @@ class JdbcSourceSpec extends SparkSpec {
     try st.execute("INSERT INTO SKEY VALUES ('a', 1), ('b', 2)")
     catch { case e: java.sql.SQLException if e.getSQLState == "23505" => () }
     st.close(); conn.close()
-    val wh = java.nio.file.Files.createTempDirectory("jdbc-fallback").toString
+    val wh = tmp("jdbc-fallback")
     val cfg = graft.sources.JdbcIngest.JdbcConfig(url, wh,
       graft.IngestJob.TableMapping.parse("SKEY:skey"),
       replace = true, scanPartitions = Map("SKEY" -> 4))

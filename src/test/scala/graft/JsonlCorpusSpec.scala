@@ -12,7 +12,7 @@ class JsonlCorpusSpec extends SparkSpec {
 
   test("gzip-compressed shards round-trip identically (the shipping format)") {
     val docs = spark.read.parquet(sf("sf0.01") + "/documents.parquet")
-    val path = Files.createTempDirectory("jsonl-gz").toString + "/docs"
+    val path = tmp("jsonl-gz") + "/docs"
     docs.select(to_json(struct(cols.map(col): _*)).as("value"))
       .write.option("compression", "gzip")
       .mode(org.apache.spark.sql.SaveMode.Overwrite).text(path)
@@ -24,7 +24,7 @@ class JsonlCorpusSpec extends SparkSpec {
   }
 
   test("FAILFAST surfaces a malformed line instead of a null row") {
-    val path = Files.createTempDirectory("jsonl-bad").toString
+    val path = tmp("jsonl-bad")
     Files.write(java.nio.file.Paths.get(s"$path/part.jsonl"),
       "{\"doc_id\": 1, \"text\": \"ok\"}\nnot json at all\n".getBytes("UTF-8"))
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -46,7 +46,7 @@ class JsonlCorpusSpec extends SparkSpec {
       (2L, "tabs\tand \"quotes\" and \\ backslashes", "en", "s", 35L),
       (3L, "unicode: café 中文 😀", "und", "s", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val path = Files.createTempDirectory("jsonl-nl").toString + "/docs"
+    val path = tmp("jsonl-nl") + "/docs"
     JsonlCorpus.writeJsonl(tricky, cols, path)
     // one JSON object per document, however many newlines the text had
     val lines = spark.read.text(path).count()
@@ -67,7 +67,7 @@ class JsonlCorpusSpec extends SparkSpec {
       (5L, null.asInstanceOf[String], "en", "s", 0L),
       (6L, "", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val path = Files.createTempDirectory("csv-rt").toString + "/docs"
+    val path = tmp("csv-rt") + "/docs"
     JsonlCorpus.writeCsv(tricky, cols, path)
     val back = JsonlCorpus.readCsv(spark, path, tricky.schema)
       .orderBy("doc_id").collect()

@@ -18,7 +18,7 @@ class LayoutSpec extends SparkSpec {
     val rows = (0 until 500).map(_ =>
       (rnd.nextInt(1 << 21).toLong, rnd.nextInt(1 << 21).toLong))
     val got = rows.toDF("a", "b")
-      .select(col("a"), col("b"), Layout.zValue(col("a"), col("b"), 21).as("z"))
+      .select(col("a"), col("b"), Layout.zValueN(Seq(col("a"), col("b")), 21).as("z"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     rows.foreach { case (a, b) =>
       assert(got((a, b)) === jvmZ(a, b, 21), s"($a, $b)")
@@ -60,11 +60,11 @@ class LayoutSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](
       Layout.requireBounded(neg, Seq("a", "b"), bits = 10))
     assert(e2.getMessage.contains("'a'"))
-    // the behavior the guard exists to catch: without it, zValue reads
+    // the behavior the guard exists to catch: without it, zValueN reads
     // only the low bits — an out-of-domain key ALIASES onto an
     // in-domain one (pruning stays correct, clustering quality dies)
     val aliased = Seq((5L, 7L), (5L + (1L << 10), 7L)).toDF("a", "b")
-      .select(Layout.zValue(col("a"), col("b"), 10).as("z"))
+      .select(Layout.zValueN(Seq(col("a"), col("b")), 10).as("z"))
       .collect().map(_.getLong(0))
     assert(aliased(0) === aliased(1))
   }
@@ -102,7 +102,7 @@ class LayoutSpec extends SparkSpec {
     val li = (0 until 40000).map(_ => (rnd.nextInt(128).toLong,
         rnd.nextInt(128).toLong, rnd.nextInt(128).toLong, rnd.nextInt(100)))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("zorder3").toString
+    val dir = tmp("zorder3")
     Layout.zOrderWriteN(li, Seq("l_orderkey", "l_partkey", "l_suppkey"),
       bits = 7, s"$dir/z3", numFiles = 16, audit = true)
     Layout.linearWrite(li, "l_orderkey", s"$dir/lin", numFiles = 16)
@@ -126,8 +126,8 @@ class LayoutSpec extends SparkSpec {
   test("z-ordered layout prunes a 2-dim box from file stats where the linear layout cannot") {
     val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    Layout.zOrderWrite(li, "l_orderkey", "l_partkey", bits = 21,
+    val dir = tmp("zorder")
+    Layout.zOrderWriteN(li, Seq("l_orderkey", "l_partkey"), bits = 21,
       s"$dir/z", numFiles = 16)
     Layout.linearWrite(li, "l_orderkey", s"$dir/lin", numFiles = 16)
     // the second-dimension stress: any orderkey, a NARROW partkey
@@ -136,10 +136,9 @@ class LayoutSpec extends SparkSpec {
     // the stripe out
     val (loA, hiA) = (0L, 1500L)
     val (loB, hiB) = (40L, 60L)
-    val (zTotal, zRead) = Layout.boxScanFiles(spark, s"$dir/z",
-      "l_orderkey", loA, hiA, "l_partkey", loB, hiB)
-    val (lTotal, lRead) = Layout.boxScanFiles(spark, s"$dir/lin",
-      "l_orderkey", loA, hiA, "l_partkey", loB, hiB)
+    val box = Seq(("l_orderkey", loA, hiA), ("l_partkey", loB, hiB))
+    val (zTotal, zRead) = Layout.boxScanFilesN(spark, s"$dir/z", box)
+    val (lTotal, lRead) = Layout.boxScanFilesN(spark, s"$dir/lin", box)
     assert(zTotal === 16L && lTotal === 16L)
     assert(zRead < lRead,
       s"z-order must read fewer files ($zRead) than linear ($lRead)")
@@ -256,7 +255,7 @@ class LayoutSpec extends SparkSpec {
     val li = (0 until 40000).map(_ => (rnd.nextInt(128).toLong,
         rnd.nextInt(128).toLong, rnd.nextInt(128).toLong, rnd.nextInt(100)))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("hilbert3").toString
+    val dir = tmp("hilbert3")
     Layout.hilbertOrderWriteN(li,
       Seq("l_orderkey", "l_partkey", "l_suppkey"), bits = 7,
       s"$dir/h3", numFiles = 16, audit = true)
@@ -314,7 +313,7 @@ class LayoutSpec extends SparkSpec {
         rnd.nextInt(64).toLong, rnd.nextInt(64).toLong,
         rnd.nextInt(64).toLong))
       .toDF("k1", "k2", "k3", "k4")
-    val dir = java.nio.file.Files.createTempDirectory("hilbert4").toString
+    val dir = tmp("hilbert4")
     Layout.hilbertOrderWriteN(li, Seq("k1", "k2", "k3", "k4"), bits = 6,
       s"$dir/h4", numFiles = 16, audit = true)
     Layout.zOrderWriteN(li, Seq("k1", "k2", "k3", "k4"), bits = 6,
@@ -359,7 +358,7 @@ class LayoutSpec extends SparkSpec {
     val n = 5000
     val df = (0 until n).map(i => (i.toLong % 128L, (i * 7).toLong % 128L))
       .toDF("a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("stagedw").toString
+    val dir = tmp("stagedw")
     val key = tap(Layout.hilbertValue(col("a"), col("b"), 7))
     Layout.stagedClusteredWrite(df, key, s"$dir/out", numFiles = 8)
     assert(counter.value === n.toLong,
@@ -379,16 +378,16 @@ class LayoutSpec extends SparkSpec {
   test("hilbert layout prunes the 2-dim box at least as well as z-order; contents identical across all three layouts") {
     val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val dir = tmp("hilbert")
     Layout.hilbertOrderWrite(li, "l_orderkey", "l_partkey", bits = 21,
       s"$dir/h", numFiles = 16)
-    Layout.zOrderWrite(li, "l_orderkey", "l_partkey", bits = 21,
+    Layout.zOrderWriteN(li, Seq("l_orderkey", "l_partkey"), bits = 21,
       s"$dir/z", numFiles = 16)
     Layout.linearWrite(li, "l_orderkey", s"$dir/lin", numFiles = 16)
     val (loA, hiA) = (0L, 1500L)
     val (loB, hiB) = (40L, 60L)
-    def read(p: String) = Layout.boxScanFiles(spark, p,
-      "l_orderkey", loA, hiA, "l_partkey", loB, hiB)
+    def read(p: String) = Layout.boxScanFilesN(spark, p,
+      Seq(("l_orderkey", loA, hiA), ("l_partkey", loB, hiB)))
     val (hTotal, hRead) = read(s"$dir/h")
     val (_, zRead) = read(s"$dir/z")
     val (_, lRead) = read(s"$dir/lin")

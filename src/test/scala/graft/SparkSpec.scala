@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.util.Using
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites grab
@@ -15,12 +20,34 @@ object SparkSpec {
     .getOrCreate()
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Every directory [[tmp]] made in this suite. */
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A new temporary directory, deleted with its contents after the
+    * suite. */
+  def tmp(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    made.add(dir)
+    dir.toString
+  }
+
+  /** Deletes what [[tmp]] made. */
+  override def afterAll(): Unit =
+    try made.forEach { dir =>
+      if (Files.exists(dir))
+        Using.resource(Files.walk(dir)) { paths =>
+          paths.sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(p => Files.delete(p))
+        }
+    } finally super.afterAll()
+
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
   /** Spark/DuckDB `round` semantics — HALF_UP away from zero — for JVM

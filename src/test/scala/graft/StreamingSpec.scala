@@ -2,10 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.util.Using
-
-import org.scalatest.BeforeAndAfterAll
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Funnel, Pattern}
@@ -14,30 +10,13 @@ import graft.streaming.StreamingIngest
 /** Structured-Streaming execution: exactly-once ingest, windowed agg, and
   * stateful sessionization — each validated against its batch
   * equivalent. */
-class StreamingSpec extends SparkSpec with BeforeAndAfterAll {
+class StreamingSpec extends SparkSpec {
 
-  /** Every directory [[tmp]] made: sources, staging waves, sinks and
-    * checkpoints, removed after the suite. */
-  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-
-  private def tmp(prefix: String) = {
-    val dir = Files.createTempDirectory(prefix)
-    made.add(dir)
-    dir.toString
-  }
-
-  /** Stops every query still running, then deletes what [[tmp]] made. */
+  /** Stops every query still running before [[tmp]]'s directories
+    * (sources, staging waves, sinks, checkpoints) are deleted. */
   override def afterAll(): Unit =
-    try {
-      spark.streams.active.foreach(_.stop())
-      made.forEach { dir =>
-        if (Files.exists(dir))
-          Using.resource(Files.walk(dir)) { paths =>
-            paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(p => Files.delete(p))
-          }
-      }
-    } finally super.afterAll()
+    try spark.streams.active.foreach(_.stop())
+    finally super.afterAll()
 
   /** A loop pattern in either consume mode: reluctant is the bounded
     * quantifier at its floor. */

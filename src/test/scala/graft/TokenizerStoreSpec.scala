@@ -56,8 +56,7 @@ class TokenizerStoreSpec extends SparkSpec {
     import graft.operators.{BpeTrain, TokenizerInterchange, UnigramLm, WordPiece}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-foreign-models").toString
+    val dir = tmp("graft-foreign-models")
     def write(name: String, lines: Seq[String]): String = {
       val pth = java.nio.file.Paths.get(dir, name)
       java.nio.file.Files.write(pth,

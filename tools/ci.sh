@@ -100,6 +100,21 @@ if ! awk '
   echo "FATAL: a table load outside IngestJob.load (add a Source case instead)"
   exit 1
 fi
+echo "=== one frame per query: no benchRun in src/main"
+# the bench times the frame the gate checks; the gate's extra step is the
+# query's compareAs, not a second hand-written frame
+if grep -rn "benchRun" src/main; then
+  echo "FATAL: benchRun is back (declare the gate-only step as compareAs)"
+  exit 1
+fi
+echo "=== one name per query: no string-keyed registry in Queries.scala"
+# Queries.all is derived from the val declarations; a "name" -> name
+# entry is a second copy of the name
+if tr '\n' ' ' < src/main/scala/graft/Queries.scala \
+    | grep -oE '"([A-Za-z0-9_]+)"[[:space:]]*->[[:space:]]*\1\b'; then
+  echo "FATAL: a string-keyed query registry is back in Queries.scala (Queries.all reflects over the declarations)"
+  exit 1
+fi
 echo "=== one CEP machine per shape: no second implementation in Funnel.scala"
 # the batch shapes run the Cep machines their streaming twins run; a
 # Column-expression fold over a per-user array (collect_list +
@@ -180,6 +195,15 @@ OUT=$(mktemp -d)
 echo "=== Verify sf0.01 -> $OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" 2>&1 \
   | grep -E "\[verify\].*failed" || true
+echo "=== every declared query is registered: one Verify result per Q declaration"
+# a query made private drops out of Queries.all, and so out of the gate
+# and the bench; count the declarations against what Verify wrote
+DECLARED=$(grep -cE '\bval [A-Za-z0-9_]+: Q = Q\(' src/main/scala/graft/Queries.scala)
+WRITTEN=$(find "$OUT" -mindepth 1 -maxdepth 1 -type d | wc -l)
+if [ "$DECLARED" -ne "$WRITTEN" ]; then
+  echo "FATAL: $DECLARED queries declared but Verify wrote $WRITTEN (a query is private or failed)"
+  exit 1
+fi
 echo "=== DuckDB differential"
 python3 tools/check_oracle.py /root/testdata/sf0.01 "$OUT"
 echo "=== Bench sf0.1"
